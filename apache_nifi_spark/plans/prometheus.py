@@ -18,11 +18,12 @@ end to end against the engine's own aggregates.
 
 from __future__ import annotations
 
-import http.server
 import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from apache_nifi_spark import net
 
 __all__ = ["escape_label", "render_exposition", "MetricsEndpoint"]
 
@@ -91,14 +92,10 @@ class MetricsEndpoint:
         self._lock = threading.Lock()
         endpoint = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py); the bodyless 404
-            # needs an explicit zero Content-Length under HTTP/1.1 (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(net.HttpHandler):
             def do_GET(self):  # noqa: N802 (stdlib API name)
                 if self.path != "/metrics":
+                    # bodyless under keep-alive: an explicit zero length
                     self.send_response(404)
                     self.send_header("Content-Length", "0")
                     self.end_headers()
@@ -111,16 +108,11 @@ class MetricsEndpoint:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def log_message(self, *args):  # silence per-request stderr
-                pass
-
-        self._srv = http.server.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(Handler, host, port).start()
 
     @property
     def url(self) -> str:
-        host, port = self._srv.server_address[:2]
+        host, port = self._srv.address
         return f"http://{host}:{port}/metrics"
 
     def publish(self, exposition: DataFrame) -> None:
@@ -132,5 +124,4 @@ class MetricsEndpoint:
             self._body = body
 
     def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        self._srv.stop()

@@ -102,7 +102,6 @@ from __future__ import annotations
 import functools
 import hmac
 import http.client
-import http.server
 import json
 import os
 import re
@@ -113,6 +112,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark import net
 from apache_nifi_spark.plans.flow_import import FlowImportError, run_flow
 from apache_nifi_spark.plans.flow_registry import FlowRegistry
 
@@ -236,12 +236,7 @@ class NiFiApiServer:
 
         api = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            protocol_version = "HTTP/1.1"
-
-            def log_message(self, *a):  # quiet
-                pass
-
+        class Handler(net.HttpHandler):
             def _body(self) -> dict:
                 n = int(self.headers.get("Content-Length") or 0)
                 raw = self.rfile.read(n) if n else b""
@@ -313,9 +308,7 @@ class NiFiApiServer:
             def do_DELETE(self):
                 self._route("DELETE")
 
-        self._server = http.server.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
+        self._server = net.Server(Handler, host, port).start()
 
     # ------------------------------------------------------------ control --
 
@@ -338,7 +331,7 @@ class NiFiApiServer:
 
     @property
     def url(self) -> str:
-        host, port = self._server.server_address[:2]
+        host, port = self._server.address
         return f"http://{host}:{port}"
 
     def outputs(self, group_id: str = "root") -> dict[str, DataFrame]:
@@ -349,8 +342,7 @@ class NiFiApiServer:
             return dict(self._outputs[group_id])
 
     def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.stop()
 
     # ---------------------------------------------------------- revisions --
 

@@ -300,7 +300,12 @@ def _basket_pair_counts(items, directed: bool):
     ``directed`` emits both orders of every combination (the item-CF
     ``!=`` self-join multiset); undirected emits item_a < item_b once
     (the association-rules multiset).  Callers filter on ``n``.
+
+    ``item`` is cast to bigint first: on an int column ``shiftleft``
+    takes the distance mod 32, so ``shiftleft(a, 32) + b`` would be
+    ``a + b`` and distinct pairs would share a key.
     """
+    items = items.withColumn("item", F.col("item").cast("bigint"))
     baskets = items.groupBy("basket").agg(
         F.sort_array(F.collect_list("item")).alias("its")
     )

@@ -5144,16 +5144,11 @@ def _staged_echo_server() -> int:
     staging pattern as the rolling-log/bucketed fixtures."""
     if _ECHO_PORT:
         return _ECHO_PORT[0]
-    import http.server
-    import threading
     import urllib.parse
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        # keep-alive (see streaming/listen.py): the one response path
-        # sends Content-Length (r17)
-        protocol_version = "HTTP/1.1"
-        disable_nagle_algorithm = True
+    from apache_nifi_spark import net
 
+    class Handler(net.HttpHandler):
         def do_GET(self):  # noqa: N802
             q = urllib.parse.urlsplit(self.path).query
             x = urllib.parse.parse_qs(q).get("x", [""])[0]
@@ -5163,12 +5158,7 @@ def _staged_echo_server() -> int:
             self.end_headers()
             self.wfile.write(body)
 
-        def log_message(self, *args):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    _ECHO_PORT.append(srv.server_address[1])
+    _ECHO_PORT.append(net.Server(Handler).start().port)
     return _ECHO_PORT[0]
 
 

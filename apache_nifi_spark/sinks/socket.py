@@ -48,8 +48,9 @@ def put_tcp(
     cluster distribute the PEM via ``spark.files``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket
         import ssl
+
+        from apache_nifi_spark import net
 
         ctx = None
         if tls_cert is not None:
@@ -57,8 +58,7 @@ def put_tcp(
             ctx.load_verify_locations(tls_cert)
         for pdf in batches:
             try:
-                s = socket.create_connection((host, port), timeout=timeout)
-                s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)  # r17
+                s = net.connect(host, port, timeout)
                 try:
                     if ctx is not None:
                         # wrap_socket DETACHES the raw socket — the
@@ -134,14 +134,11 @@ def put_tcp_octet_counted(
     non-transparent (newline) framing cannot."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket
+        from apache_nifi_spark import net
 
         for pdf in batches:
             try:
-                with socket.create_connection((host, port), timeout=timeout) as s:
-                    s.setsockopt(
-                        socket.IPPROTO_TCP, socket.TCP_NODELAY, 1
-                    )  # r17
+                with net.connect(host, port, timeout) as s:
                     frames = []
                     sent = []
                     for v in pdf[content_col]:

@@ -17,8 +17,8 @@ that split exactly:
 
 The environment has no FTP daemon, so ``MiniFtpServer`` implements the
 protocol subset a transfer needs (RFC 959: USER/PASS, TYPE, PWD/CWD,
-PASV, LIST/NLST, SIZE, RETR, STOR, DELE, QUIT) over stdlib
-``socketserver`` with passive-mode data channels — the CLIENT side is
+PASV, LIST/NLST, SIZE, RETR, STOR, DELE, QUIT) as a stdlib
+``StreamRequestHandler`` with passive-mode data channels — the CLIENT side is
 stdlib ``ftplib``, i.e. the same wire bytes a real deployment sees.
 Tests drive a full store→list→fetch differential; the registry query
 oracles a fetch-parse-aggregate pipeline against the staged fixture.
@@ -30,9 +30,10 @@ import io as _io
 import os
 import socket
 import socketserver
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from apache_nifi_spark import net
 
 __all__ = ["MiniFtpServer", "list_ftp", "fetch_ftp", "put_ftp"]
 
@@ -42,9 +43,7 @@ __all__ = ["MiniFtpServer", "list_ftp", "fetch_ftp", "put_ftp"]
 class _FtpHandler(socketserver.StreamRequestHandler):
     """One FTP control connection (RFC 959 subset, passive mode only)."""
 
-    # control channel is chatty small writes; never let Nagle queue a
-    # reply behind an unACKed one (see streaming/listen.py; r17)
-    disable_nagle_algorithm = True
+    root: str  # set per server by MiniFtpServer
 
     def _reply(self, code: int, text: str) -> None:
         self.wfile.write(f"{code} {text}\r\n".encode())
@@ -57,7 +56,7 @@ class _FtpHandler(socketserver.StreamRequestHandler):
         return lsock
 
     def _safe(self, name: str) -> str:
-        root = self.server.root  # type: ignore[attr-defined]
+        root = self.root
         path = os.path.normpath(os.path.join(root, self.cwd.lstrip("/"), name))
         if not path.startswith(os.path.abspath(root)):
             raise PermissionError(name)
@@ -158,17 +157,18 @@ class MiniFtpServer:
     def __init__(self, root: str):
         self.root = os.path.abspath(root)
         os.makedirs(self.root, exist_ok=True)
-        self._srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _FtpHandler)
-        self._srv.daemon_threads = True
-        self._srv.root = self.root  # type: ignore[attr-defined]
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
+
+        class Handler(_FtpHandler):
+            root = self.root
+
+        self._srv = net.Server(Handler).start()
 
     @property
     def port(self) -> int:
-        return self._srv.server_address[1]
+        return self._srv.port
 
     def close(self) -> None:
-        self._srv.shutdown()
+        self._srv.stop()
 
 
 # ----------------------------------------------------------- operators -----

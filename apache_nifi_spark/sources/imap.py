@@ -32,6 +32,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark import net
+
 __all__ = ["MiniImapServer", "append_imap", "list_imap_ids", "consume_imap",
            "MiniPop3Server", "consume_pop3"]
 
@@ -44,33 +46,15 @@ class MiniImapServer:
         self.user, self.password = user, password
         self._mailbox: list[bytes] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def message_count(self) -> int:
         with self._lock:
             return len(self._mailbox)
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     # -- protocol ----------------------------------------------------------
 
@@ -156,9 +140,7 @@ class MiniImapServer:
             conn.close()
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 def _connect(host: str, port: int, user: str, password: str):
@@ -167,7 +149,7 @@ def _connect(host: str, port: int, user: str, password: str):
     client = imaplib.IMAP4(host, port)
     # imaplib never sets NODELAY; per-message round-trips would
     # otherwise stall ~40 ms each under Nagle + delayed ACK.
-    client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+    net.nodelay(client.sock)
     client.login(user, password)
     client.select("INBOX")
     return client
@@ -188,7 +170,7 @@ def append_imap(
         import imaplib
 
         client = imaplib.IMAP4(host, port)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        net.nodelay(client.sock)
         client.login(user, password)
         try:
             for pdf in batches:
@@ -271,18 +253,11 @@ class MiniPop3Server:
         self._store = messages  # share an IMAP server's mailbox if given
         self._local: list[bytes] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def load(self, message: bytes) -> None:
         with self._lock:
@@ -292,17 +267,6 @@ class MiniPop3Server:
         if self._store is not None:
             return self._store._mailbox
         return self._local
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -381,9 +345,7 @@ class MiniPop3Server:
             conn.close()
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 def consume_pop3(
@@ -400,7 +362,7 @@ def consume_pop3(
         import poplib
 
         client = poplib.POP3(host, port, timeout=10)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        net.nodelay(client.sock)
         client.user(user)
         client.pass_(password)
         try:

@@ -29,7 +29,6 @@ from __future__ import annotations
 import http.client
 import io as _io
 import json
-import socket
 import struct
 import threading
 from collections.abc import Iterator
@@ -37,6 +36,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
 from apache_nifi_spark.sources.avro_codec import (
     _compile_encoder,
     _pdf_rows,
@@ -59,24 +59,18 @@ _MAGIC = 0
 
 class MiniSchemaRegistry:
     """In-process schema registry speaking the public REST subset over
-    real HTTP (ThreadingHTTPServer) — swap the URL for a real Confluent
+    real HTTP — swap the URL for a real Confluent
     deployment; the protocol seam is this module."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        import http.server
-
         self._lock = threading.Lock()
         self._by_canonical: dict[str, int] = {}
         self._by_id: dict[int, str] = {}
         self._subjects: dict[str, list[int]] = {}
         reg = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py): every response goes
-            # through _json, which always sends Content-Length (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(net.HttpHandler):
+            # every response goes through _json, which sends Content-Length
             def _json(self, code: int, obj: Any) -> None:
                 body = json.dumps(obj).encode()
                 self.send_response(code)
@@ -129,16 +123,7 @@ class MiniSchemaRegistry:
                         return
                 self._json(404, {"error_code": 40401, "message": "not found"})
 
-            def log_message(self, *a: Any) -> None:
-                pass
-
-        import http.server as _hs
-
-        self._httpd = _hs.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
+        self._httpd = net.Server(Handler, host, port).start()
 
     def _register(self, subject: str, schema: Any) -> int:
         canon = canonical_form(schema)
@@ -155,12 +140,11 @@ class MiniSchemaRegistry:
 
     @property
     def url(self) -> str:
-        host, port = self._httpd.server_address[:2]
+        host, port = self._httpd.address
         return f"http://{host}:{port}"
 
     def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
+        self._httpd.stop()
 
 
 def _http_json(url: str, path: str, payload: Any | None = None) -> Any:

@@ -35,8 +35,8 @@ import hmac as _hmac
 import os
 import socket
 import struct
-import threading
 
+from apache_nifi_spark import net
 from apache_nifi_spark.sources.ssh_crypto import (
     AesCtr,
     X25519_BASE,
@@ -295,34 +295,14 @@ class SshServer:
         self.host_pub = ed25519_publickey(host_key_seed)
         self.users = users
         self.subsystems = subsystems
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(64)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv.stop()
 
     def _serve(self, conn: socket.socket) -> None:
         t = _Transport(conn)
@@ -513,8 +493,7 @@ class SshClientConnection:
         subsystem: str,
         timeout: float = 30.0,
     ):
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        sock = net.connect(host, port, timeout)
         self.t = _Transport(sock)
         t = self.t
         v_s = t.exchange_versions()

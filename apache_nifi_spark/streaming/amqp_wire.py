@@ -35,6 +35,8 @@ import struct
 import threading
 import uuid
 
+from apache_nifi_spark import net
+
 __all__ = ["MiniAmqpBroker", "publish_amqp"]
 
 _PROTO_HEADER = b"AMQP\x00\x00\x09\x01"
@@ -93,29 +95,11 @@ class MiniAmqpBroker:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        return self._srv.port
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -230,15 +214,12 @@ class MiniAmqpBroker:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 class _AmqpClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = net.connect(host, port, timeout)
         self._f = self._sock.makefile("rwb")
         self._tag = 0
         self._f.write(_PROTO_HEADER)

@@ -28,7 +28,8 @@ import json
 import os
 import threading
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from apache_nifi_spark import net
 
 __all__ = ["MiniElasticServer"]
 
@@ -43,13 +44,7 @@ class MiniElasticServer:
         self._lock = threading.Lock()
         store = self
 
-        class Handler(BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py): every _reply carries
-            # Content-Length, so HTTP/1.1 is safe and saves one TCP
-            # connect + one server thread per request (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(net.HttpHandler):
             def _reply(self, code: int, obj: dict) -> None:
                 body = json.dumps(obj).encode()
                 self.send_response(code)
@@ -77,17 +72,7 @@ class MiniElasticServer:
                 else:
                     self._reply(404, {"error": "unsupported endpoint"})
 
-            def log_message(self, *args):
-                pass
-
-        class _Server(ThreadingHTTPServer):
-            request_queue_size = 128  # burst-safe accept backlog
-
-        self._server = _Server((host, port), Handler)
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
+        self._server = net.Server(Handler, host, port).start()
 
     # ------------------------------------------------------- protocol ---
 
@@ -166,9 +151,8 @@ class MiniElasticServer:
 
     @property
     def url(self) -> str:
-        host, port = self._server.server_address[:2]
+        host, port = self._server.address
         return f"http://{host}:{port}"
 
     def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.stop()

@@ -49,6 +49,8 @@ import struct
 import threading
 import zlib
 
+from apache_nifi_spark import net
+
 __all__ = ["MiniKafkaBroker", "publish_kafka_wire", "consume_kafka_wire"]
 
 _API_PRODUCE, _API_FETCH, _API_METADATA = 0, 1, 3
@@ -325,33 +327,15 @@ class MiniKafkaBroker:
         # produce is re-served as one batch per codec run)
         self._codec_log: dict[tuple[str, int], list[int]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def log_end_offset(self, topic: str, partition: int) -> int:
         with self._lock:
             return len(self._log.get((topic, partition), []))
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb", buffering=1 << 16)
@@ -398,7 +382,7 @@ class MiniKafkaBroker:
         if not topics:
             with self._lock:
                 topics = sorted({t for (t, _p) in self._log})
-        host, port = self._srv.getsockname()[:2]
+        host, port = self._srv.address
         out = bytearray()
         out += struct.pack(">i", 1)  # one broker
         out += struct.pack(">i", 0) + _kstr(host) + struct.pack(">i", port)
@@ -571,9 +555,7 @@ class MiniKafkaBroker:
         return bytes(out)
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 # --------------------------------------------------------------- client ---
@@ -581,8 +563,7 @@ class MiniKafkaBroker:
 
 class _KafkaClient:
     def __init__(self, host: str, port: int, client_id: str, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = net.connect(host, port, timeout)
         self._f = self._sock.makefile("rwb", buffering=1 << 16)
         self._client_id = client_id
         self._corr = 0

@@ -24,12 +24,13 @@ freely, the landing-dir contract is the interface.
 
 from __future__ import annotations
 
-import http.server
 import os
 import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from apache_nifi_spark import net
 
 __all__ = [
     "HttpLandingListener",
@@ -66,22 +67,7 @@ class HttpLandingListener:
         os.makedirs(landing_dir, exist_ok=True)
         listener = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # HTTP/1.1 keep-alive: the stdlib default (HTTP/1.0) closes
-            # the socket after every response, so each "pooled" client
-            # request actually paid a fresh TCP connect plus a new
-            # server thread (ThreadingHTTPServer threads per
-            # CONNECTION).  Real webhook endpoints are keep-alive; with
-            # 1.1 every response must carry Content-Length, and the
-            # server socket needs TCP_NODELAY — headers and body go out
-            # as two small segments, and on a persistent connection
-            # Nagle holds the second until the first is ACKed while the
-            # client's delayed ACK waits on more data: the classic
-            # ~40 ms/request stall (measured 44 ms/req without, 0.3 ms
-            # with; HTTP/1.0-close hid it by flushing on close).  (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(net.HttpHandler):
             def do_POST(self):  # noqa: N802 (stdlib API name)
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length)
@@ -91,17 +77,7 @@ class HttpLandingListener:
                 self.end_headers()
                 self.wfile.write(b"ok")
 
-            def log_message(self, *args):  # silence per-request stderr
-                pass
-
-        class _Server(http.server.ThreadingHTTPServer):
-            # landing tier: executor partitions connect in bursts (one
-            # per partition, simultaneously) — the default accept
-            # backlog of 5 refuses part of a 32-way burst under load
-            request_queue_size = 128
-
-        self._server = _Server((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        self._server = net.Server(Handler, host, port)
         self._seq = 0
         self._lock = threading.Lock()
 
@@ -117,16 +93,15 @@ class HttpLandingListener:
 
     @property
     def url(self) -> str:
-        host, port = self._server.server_address[:2]
+        host, port = self._server.address
         return f"http://{host}:{port}/"
 
     def __enter__(self) -> "HttpLandingListener":
-        self._thread.start()
+        self._server.start()
         return self
 
     def __exit__(self, *exc) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.stop()
 
 
 def stream_json_landing(
@@ -164,58 +139,49 @@ class TcpLandingListener:
         port: int = 0,
         framing: str = "newline",
     ):
-        import socketserver
-
         if framing not in ("newline", "octet"):
             raise ValueError(f"unknown framing {framing!r}")
         self.landing_dir = landing_dir
         os.makedirs(landing_dir, exist_ok=True)
-        listener = self
 
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self):
-                data = self.rfile.read()
-                if framing == "octet":
-                    # Frames parsed before a malformed tail still land —
-                    # a garbage length prefix must not discard valid frames.
-                    msgs, pos = [], 0
-                    while pos < len(data):
-                        try:
-                            sp = data.index(b" ", pos)
-                            n = int(data[pos:sp])
-                            if n < 0:
-                                break
-                        except ValueError:
+        def handle(conn) -> None:
+            with conn.makefile("rb") as f:
+                data = f.read()
+            if framing == "octet":
+                # Frames parsed before a malformed tail still land —
+                # a garbage length prefix must not discard valid frames.
+                msgs, pos = [], 0
+                while pos < len(data):
+                    try:
+                        sp = data.index(b" ", pos)
+                        n = int(data[pos:sp])
+                        if n < 0:
                             break
-                        if sp + 1 + n > len(data):
-                            # truncated final frame: the declared length
-                            # runs past the received bytes — never land a
-                            # silently-partial message
-                            break
-                        msgs.append(data[sp + 1 : sp + 1 + n])
-                        pos = sp + 1 + n
-                    # Injective landing encoding: escape the escape char
-                    # first so payloads containing literal "\n" sequences
-                    # remain losslessly recoverable.
-                    data = b"\n".join(
-                        m.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
-                        for m in msgs
-                    )
-                if data.strip():
-                    listener._land(data)
+                    except ValueError:
+                        break
+                    if sp + 1 + n > len(data):
+                        # truncated final frame: the declared length
+                        # runs past the received bytes — never land a
+                        # silently-partial message
+                        break
+                    msgs.append(data[sp + 1 : sp + 1 + n])
+                    pos = sp + 1 + n
+                # Injective landing encoding: escape the escape char
+                # first so payloads containing literal "\n" sequences
+                # remain losslessly recoverable.
+                data = b"\n".join(
+                    m.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
+                    for m in msgs
+                )
+            if data.strip():
+                self._land(data)
 
-        class _Server(socketserver.ThreadingTCPServer):
-            request_queue_size = 128  # burst-safe accept backlog
-
-        self._srv = _Server((host, port), Handler)
-        self._srv.daemon_threads = True
         self._seq = 0
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(handle, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.server_address[1]
+        return self._srv.port
 
     def _land(self, body: bytes) -> None:
         self._seq += 1
@@ -226,8 +192,7 @@ class TcpLandingListener:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        self._srv.stop()
 
 
 class UdpLandingListener:

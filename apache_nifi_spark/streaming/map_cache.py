@@ -37,6 +37,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
+
 __all__ = ["MapCacheServer", "MapCacheClient", "put_map_cache", "fetch_map_cache"]
 
 _PROTOCOL_VERSION = 1
@@ -77,35 +79,15 @@ class MapCacheServer:
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self._data: dict[bytes, bytes] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(64)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def snapshot(self) -> dict[bytes, bytes]:
         with self._lock:
             return dict(self._data)
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            # Small request/response frames: without NODELAY, Nagle +
-            # delayed ACK serialize every op into a ~40 ms stall.
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         try:
@@ -157,17 +139,14 @@ class MapCacheServer:
             conn.close()
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 class MapCacheClient:
     """One connection, many operations (the per-partition client)."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = net.connect(host, port, timeout)
         self._sock.sendall(struct.pack(">I", _PROTOCOL_VERSION))
         (ok,) = struct.unpack(">b", _read_exact(self._sock, 1))
         if ok != 1:

@@ -29,6 +29,8 @@ import struct
 import threading
 import uuid
 
+from apache_nifi_spark import net
+
 __all__ = ["MiniMqttBroker", "publish_mqtt"]
 
 _CONNECT, _CONNACK = 1, 2
@@ -85,29 +87,11 @@ class MiniMqttBroker:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        return self._srv.port
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -174,15 +158,12 @@ class MiniMqttBroker:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 class _MqttClient:
     def __init__(self, host: str, port: int, client_id: str, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = net.connect(host, port, timeout)
         self._f = self._sock.makefile("rwb")
         self._pid = 0
         body = (

@@ -33,6 +33,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
+
 __all__ = [
     "MiniRedisServer",
     "RedisClient",
@@ -109,33 +111,15 @@ class MiniRedisServer:
         self._data: dict[bytes, bytes] = {}
         self._hashes: dict[bytes, dict[bytes, bytes]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(64)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     def snapshot(self) -> dict[bytes, bytes]:
         with self._lock:
             return dict(self._data)
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         rd = _Reader(conn)
@@ -211,17 +195,14 @@ class MiniRedisServer:
         return b"-ERR unknown command '%s'\r\n" % verb
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 class RedisClient:
     """Minimal RESP2 client with request pipelining."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = net.connect(host, port, timeout)
         self._rd = _Reader(self._sock)
 
     def command(self, *parts: bytes):

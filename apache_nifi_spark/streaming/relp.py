@@ -32,6 +32,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
+
 __all__ = ["RelpLandingListener", "put_relp"]
 
 
@@ -82,29 +84,11 @@ class RelpLandingListener:
         self.batch_size = max(1, batch_size)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        return self._srv.port
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -155,9 +139,7 @@ class RelpLandingListener:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 def put_relp(
@@ -172,8 +154,7 @@ def put_relp(
     ``sent`` reflects the server's 200 response."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        sock = net.connect(host, port, timeout)
         f = sock.makefile("rwb")
         txnr = 1
         ok = True

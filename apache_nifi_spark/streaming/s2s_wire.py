@@ -35,12 +35,13 @@ from __future__ import annotations
 
 import json
 import os
-import socket
 import ssl
 import struct
 import threading
 import uuid
 import zlib
+
+from apache_nifi_spark import net
 
 __all__ = ["SiteToSiteServer", "s2s_peers", "s2s_send", "PROTOCOL_VERSION"]
 
@@ -135,23 +136,17 @@ class SiteToSiteServer:
 
         self.landing_dir = landing_dir
         os.makedirs(landing_dir, exist_ok=True)
-        self._ctx = server_context(cert_path, key_path)
         self._extra_peers = list(peers or [])
         self._committed = 0
         self._aborted = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port)
+        self._srv.tls = server_context(cert_path, key_path)
+        self._srv.start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
     @property
     def stats(self) -> tuple[int, int]:
@@ -159,26 +154,7 @@ class SiteToSiteServer:
         with self._lock:
             return self._committed, self._aborted
 
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
-
-    def _serve(self, raw: socket.socket) -> None:
-        # two-phase transactions are small alternating writes; Nagle +
-        # delayed ACK would stall each phase (see streaming/listen.py;
-        # r17)
-        raw.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-        try:
-            conn = self._ctx.wrap_socket(raw, server_side=True)
-        except (ssl.SSLError, OSError):
-            raw.close()
-            return
+    def _serve(self, conn: ssl.SSLSocket) -> None:
         f = conn.makefile("rwb")
         try:
             if _read_exact(f, 4) != _MAGIC:
@@ -208,7 +184,7 @@ class SiteToSiteServer:
     def _answer_peer_list(self, f) -> None:
         """Self + configured peers, each with its queued-FlowFile count
         (clients send to the least-loaded peer — NiFi's S2S balancing)."""
-        host, port = self._srv.getsockname()[:2]
+        host, port = self._srv.address
         own_count = len(os.listdir(self.landing_dir))
         peers = [(host, port, own_count)] + [
             (h, p, 0) for (h, p) in self._extra_peers
@@ -282,9 +258,7 @@ class SiteToSiteServer:
         os.rename(tmp, os.path.join(self.landing_dir, name))  # atomic commit
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 # --------------------------------------------------------------- client ---
@@ -294,8 +268,7 @@ def _open(host: str, port: int, cert_path: str, timeout: float):
     from apache_nifi_spark.streaming.tls import client_context
 
     ctx = client_context(cert_path)
-    raw = socket.create_connection((host, port), timeout=timeout)
-    raw.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)  # r17
+    raw = net.connect(host, port, timeout)
     conn = ctx.wrap_socket(raw, server_hostname="localhost")
     f = conn.makefile("rwb")
     f.write(_MAGIC)

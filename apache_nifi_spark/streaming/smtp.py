@@ -28,6 +28,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
+
 __all__ = ["MiniSmtpServer", "put_smtp"]
 
 
@@ -39,29 +41,11 @@ class MiniSmtpServer:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        return self._srv.port
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -144,9 +128,7 @@ class MiniSmtpServer:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 def put_smtp(
@@ -164,7 +146,7 @@ def put_smtp(
         import smtplib
 
         client = smtplib.SMTP(host, port, timeout=10)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        net.nodelay(client.sock)
         try:
             for pdf in batches:
                 ok = []

@@ -102,20 +102,24 @@ def run_to_memory(
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to the
-    drain: after the last data batch, Spark normally runs one more
-    EMPTY micro-batch so watermark-gated operators can emit/evict —
-    a full extra round of planning + one commit per state-store
-    instance (measured: the 8-partition stream-stream join pays 4
-    stores × 8 partitions = 32 commits plus ~0.8 s wall for it).
-    ONLY pass False when the sink's rows provably don't depend on
-    watermark-triggered emission — an append-mode INNER stream-stream
-    join (matches emit during data batches; the final batch only
-    evicts state) or arrival-time dedup (dropDuplicatesWithinWatermark
-    emits first occurrences on arrival).  Watermark-FINALIZED outputs —
-    append-mode window aggregates, left-outer/expiry joins — need that
-    batch to emit at all, so they keep the default.  Semantics-neutral
-    at any scale for the eligible shapes: the conf changes when state
-    is reclaimed on a drain-and-stop run, never what is emitted.
+    drain, which turns off EVERY no-data micro-batch of the drain, not
+    only the trailing one.  Spark runs an EMPTY micro-batch whenever the
+    watermark advances without new data — between data batches of a
+    multi-batch availableNow run as well as after the last one — so
+    watermark-gated operators can emit/evict; each is a full extra
+    round of planning + one commit per state-store instance (measured:
+    the 8-partition stream-stream join pays 4 stores × 8 partitions =
+    32 commits plus ~0.8 s wall for the trailing one).  ONLY pass False
+    when the sink's rows provably don't depend on watermark-triggered
+    emission in ANY batch, intermediate ones included — an append-mode
+    INNER stream-stream join (matches emit during data batches; no-data
+    batches only evict state) or arrival-time dedup
+    (dropDuplicatesWithinWatermark emits first occurrences on arrival).
+    Watermark-FINALIZED outputs — append-mode window aggregates,
+    left-outer/expiry joins — need those batches to emit at all, so
+    they keep the default.  Semantics-neutral at any scale for the
+    eligible shapes: the conf changes when state is reclaimed on a
+    drain-and-stop run, never what is emitted.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
     cp = tempfile.mkdtemp(prefix="anspark_cp_")

@@ -14,10 +14,12 @@ secured.  This module is the Spark-side analog of that keystore mount:
   ``ssl`` contexts; the client context TRUSTS ONLY the given CA/cert
   (no system-store fallback) and verifies hostname, mirroring the
   truststore semantics.
-- ``wrap_listener(listener, ctx)`` — retrofit any socketserver-based
-  landing listener (TCP/RELP/HTTP) with TLS by wrapping its accept
-  socket; the landing-file contract is unchanged, so every downstream
-  drain works identically over the secured transport.
+- ``wrap_listener(listener, ctx)`` — retrofit any listener that runs on
+  the transport kernel (``apache_nifi_spark.net``: TCP/RELP/HTTP and
+  the protocol brokers) with TLS; the kernel wraps each accepted
+  connection before its handler runs.  The landing-file contract is
+  unchanged, so every downstream drain works identically over the
+  secured transport.
 
 Scale note: TLS terminates at the listener tier (exactly as in the
 reference, where the pod's server keystore terminates it) — nothing in
@@ -30,6 +32,8 @@ import os
 import ssl
 import subprocess
 import tempfile
+
+from apache_nifi_spark import net
 
 __all__ = [
     "client_context",
@@ -82,32 +86,16 @@ def client_context(cert_path: str) -> ssl.SSLContext:
 
 
 def wrap_listener(listener, ctx: ssl.SSLContext) -> None:
-    """Retrofit a landing listener with TLS.
+    """Retrofit a listener with TLS.
 
-    Works for any listener built on ``socketserver``/``http.server``
-    exposing the server instance as ``_srv`` or ``_server``
-    (TcpLandingListener, HttpLandingListener): the accept path is
-    replaced by an SSL-wrapping one, so every accepted connection
-    completes a real handshake before the handler runs.  Plaintext
-    clients fail the handshake and never land data.  (RELP's listener
-    owns a raw accept loop and keeps app-level per-txnr ACK
-    reliability; it is out of this helper's scope.)
+    Works for any listener that runs on a ``net.Server``
+    (TcpLandingListener, HttpLandingListener, ...): from the next
+    accepted connection on, the kernel wraps the socket server-side, so
+    every connection completes a real handshake before its handler
+    reads a byte.  Plaintext clients fail the handshake and never land
+    data.
     """
-    srv = getattr(listener, "_srv", None) or getattr(listener, "_server", None)
-    if srv is None or not hasattr(srv, "get_request"):
-        raise ValueError(
-            f"{type(listener).__name__} has no socketserver to wrap"
-        )
-    plain_get_request = srv.get_request
-
-    def get_request():
-        sock, addr = plain_get_request()
-        # handshake deferred to the HANDLER thread (first read), not the
-        # single accept thread — N concurrent executor connections would
-        # otherwise serialize their handshakes behind accept()
-        return (
-            ctx.wrap_socket(sock, server_side=True, do_handshake_on_connect=False),
-            addr,
-        )
-
-    srv.get_request = get_request
+    srv = next((v for v in vars(listener).values() if isinstance(v, net.Server)), None)
+    if srv is None:
+        raise ValueError(f"{type(listener).__name__} does not run on net.Server")
+    srv.tls = ctx

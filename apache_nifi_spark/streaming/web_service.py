@@ -40,7 +40,6 @@ pipeline fans it out).  Bulk paths stay on the landing-zone half.
 from __future__ import annotations
 
 import concurrent.futures
-import http.server
 import json
 import threading
 import time
@@ -48,6 +47,8 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from apache_nifi_spark import net
 
 __all__ = ["HttpContextMap", "HttpRequestResponseService", "REQUEST_ATTRS"]
 
@@ -120,12 +121,7 @@ class HttpRequestResponseService:
         self._pool = concurrent.futures.ThreadPoolExecutor(max_workers=max_concurrent)
         service = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py): the single response
-            # path always sends Content-Length (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(net.HttpHandler):
             def do_POST(self):  # noqa: N802 (stdlib API name)
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length)
@@ -159,11 +155,7 @@ class HttpRequestResponseService:
                 self.end_headers()
                 self.wfile.write(payload)
 
-            def log_message(self, *args):  # silence per-request stderr
-                pass
-
-        self._server = http.server.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        self._server = net.Server(Handler, host, port)
 
     def _run_pipeline(
         self, body: bytes, method: str, path: str, remote: str, ctx: str
@@ -194,14 +186,13 @@ class HttpRequestResponseService:
 
     @property
     def url(self) -> str:
-        host, port = self._server.server_address[:2]
+        host, port = self._server.address
         return f"http://{host}:{port}/"
 
     def __enter__(self) -> "HttpRequestResponseService":
-        self._thread.start()
+        self._server.start()
         return self
 
     def __exit__(self, *exc) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.stop()
         self._pool.shutdown(wait=False, cancel_futures=True)

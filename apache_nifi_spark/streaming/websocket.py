@@ -41,6 +41,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark import net
+
 __all__ = [
     "ws_accept_key",
     "encode_frame",
@@ -121,35 +123,13 @@ class WebSocketLandingServer:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        self._srv = net.Server(self._serve, host, port).start()
 
     @property
     def port(self) -> int:
-        return self._srv.getsockname()[1]
+        return self._srv.port
 
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            threading.Thread(
-                target=self._serve_conn, args=(conn,), daemon=True
-            ).start()
-
-    def _serve_conn(self, conn: socket.socket) -> None:
-        # frame-per-record echo: handshake reply + per-frame writes are
-        # small back-to-back segments (see streaming/listen.py; r17)
-        conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+    def _serve(self, conn: socket.socket) -> None:
         try:
             self._handshake(conn)
             parts: list[bytes] = []
@@ -210,9 +190,7 @@ class WebSocketLandingServer:
         os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        self._srv.stop()
 
 
 def _client_handshake(sock: socket.socket, host: str, port: int) -> None:
@@ -249,8 +227,7 @@ def put_websocket(
     partition, close handshake on drain; appends ``sent``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)  # r17
+        sock = net.connect(host, port, timeout)
         ok = True
         try:
             _client_handshake(sock, host, port)

@@ -209,6 +209,7 @@ if __name__ == "__main__":
         "stream_site_to_site",
         "put_ftp_roundtrip", "listen_smtp_deliver",
         "put_elasticsearch_live",
+        "put_slack_webhook_post", "invoke_http_enrich",
         "stats_correlation_matrix", "stats_spearman_rank",
         "graph_pagerank_links", "events_attribution_models",
     )

@@ -78,6 +78,16 @@ def test_high_half_range_ids_decode_exactly(spark):
     assert got == {(lo, hi): 2}
 
 
+def test_int_item_column_packs_without_collisions(spark):
+    # an IntegerType item column: shiftleft on int wraps its distance
+    # mod 32, so without the bigint cast (1, 4) and (2, 3) both pack to 5
+    rows = [(1, 1), (1, 4), (2, 2), (2, 3), (3, 1), (3, 4)]
+    items = spark.createDataFrame(rows, "basket long, item int")
+    for directed in (False, True):
+        got = _collect(_basket_pair_counts(items, directed))
+        assert got == _expected(rows, directed)
+
+
 def test_negative_ids_use_exact_fallback(spark):
     rows = [(1, -7), (1, 4), (2, -7), (2, 4)]
     got = _collect(_basket_pair_counts(_items(spark, rows), False))

@@ -8,6 +8,7 @@ import glob
 import socket
 import tempfile
 import time
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -124,7 +125,7 @@ def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs):
     landing = tempfile.mkdtemp(prefix="tls_http_")
     with HttpLandingListener(landing) as lst:
         wrap_listener(lst, server_context(cert, key))
-        port = lst._server.server_address[1]
+        port = urllib.parse.urlsplit(lst.url).port
         url = f"https://localhost:{port}/ingest"
 
         # trusted client: real HTTPS POST lands
