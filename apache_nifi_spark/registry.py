@@ -1739,21 +1739,13 @@ def stream_stateful_q(spark, sf_dir):
     running count + running value-in-cents, oracle-checked against the
     SQL window cumsum.
 
-    State partitions are sized to 16 for THIS query (restored after the
-    drain): each partition runs one Python state loop, so partitions =
-    usable Python parallelism for ~1 k keys — measured 1.8× over the
-    4-partition default; the stream-stream join keeps 4 (its cost is
-    per-partition state-store commits, which more partitions make
-    WORSE)."""
+    The drain runs at ``run_to_memory``'s default of 8 shuffle
+    partitions, so 8 state stores and 8 Python state loops per
+    micro-batch."""
     from apache_nifi_spark.streaming import run_to_memory, running_totals_per_key, stream_events
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        sdf = stream_events(spark, sf_dir)
-        return run_to_memory(running_totals_per_key(sdf), output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    sdf = stream_events(spark, sf_dir)
+    return run_to_memory(running_totals_per_key(sdf), output_mode="append")
 
 
 # =====================================================================

@@ -19,6 +19,9 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
 
+# The directory that holds the ``apache_nifi_spark`` package.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "apache-nifi-spark",
@@ -57,6 +60,16 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for every pandas UDF / mapInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from the engine's daemon (pyworker.py), which
+        # stops Python < 3.12 from re-parsing pyspark.zip at the start of
+        # every task.  Measured on Python 3.11, 4-core host: one task's
+        # invalidate_caches() over 16 zip importers 115-155 ms -> 0.1 ms;
+        # Python-worker CPU per stream_stateful_running_totals drain
+        # (sf0.01, median of 8 interleaved drains) 2.6 -> 0.9 CPU-s.
+        .config("spark.python.daemon.module", "apache_nifi_spark.pyworker")
+        # The daemon and the workers import the engine whatever the JVM's
+        # working directory; Spark merges this into the worker's PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
         # PySpark's per-API-call error-context capture walks the Python
         # stack and makes two extra py4j round-trips on EVERY DataFrame
         # method (pyspark/errors/utils.py _with_origin) — measured

@@ -206,7 +206,9 @@ if __name__ == "__main__":
         "compress_content_snappy_lz4", "bpe_encode_corpus",
         "stream_stateful_running_totals", "stream_wait_notify_join",
         "stream_delta_upsert_merge", "stream_tail_file",
-        "stream_site_to_site",
+        "stream_site_to_site", "stream_wait_notify_expiry",
+        "stream_backpressure_monitor", "stream_dedup_watermark",
+        "flow_compile_amortized",
         "put_ftp_roundtrip", "listen_smtp_deliver",
         "put_elasticsearch_live",
         "put_slack_webhook_post", "invoke_http_enrich",
