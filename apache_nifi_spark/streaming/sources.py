@@ -12,8 +12,8 @@ format string) a Kafka topic; nothing here is test-only except
 
 from __future__ import annotations
 
-import contextlib
 import os
+import pathlib
 import tempfile
 import threading
 import uuid
@@ -21,11 +21,24 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: serializes every drain that scopes spark.sql.shuffle.partitions — the
-#: session conf is process-global, so the save/set/restore must not
-#: interleave across threads (round-10 advice)
-_SHUFFLE_OVERRIDE_LOCK = threading.Lock()
-_NO_LOCK = contextlib.nullcontext()
+#: serializes every drain's scoped session confs — the session conf is
+#: process-global, so the save/set/restore must not interleave across
+#: threads (round-10 advice)
+_DRAIN_CONF_LOCK = threading.Lock()
+
+#: The drain's checkpoint manager.  Spark's default,
+#: FileContextBasedCheckpointFileManager, publishes every checkpoint file
+#: (offsets, commits, metadata, source log, each state-store .delta and
+#: each .crc) with FileContext.rename, which on file: runs Hadoop's
+#: AbstractFileSystem.renameInternal: getFileLinkStatus twice per side,
+#: and without libhadoop each call forks a ``readlink``.  Counted with
+#: logging ``chmod``/``readlink`` wrappers on the JVM's PATH, per
+#: stream_stateful_running_totals drain at sf0.01: 176 readlink + 60
+#: chmod forks with the default, 0 readlink + 60 chmod with this one.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 #: file path → (landing dir, schema); see stream_events staging note.
@@ -90,13 +103,32 @@ def run_to_memory(
     The checkpoint directory plays the FlowFile-repository role
     (SURVEY.md §1.1); a fresh one per run keeps invocations independent.
 
+    Every drain scopes its session confs to the drain: they are set
+    under one lock, read at query START, and restored (or unset, if
+    they were unset) after the synchronous drain, even when ``start()``
+    raises, so batch plans in the same session keep the session
+    defaults.  The scoped confs are the checkpoint manager and the two
+    knobs below.
+
+    The checkpoint is written through Spark's
+    ``FileSystemBasedCheckpointFileManager`` instead of the default
+    FileContext one, whose renames fork ``readlink`` processes on a
+    host without libhadoop (see ``_FS_CHECKPOINT_MANAGER``).  On a
+    ``file:`` checkpoint it keeps the default's guarantees: each file is
+    written to a temp file and published with ``rename(2)``, Hadoop's
+    ``.crc`` sidecars and Spark's state-file checksums are still
+    written, and a no-overwrite rename checks that the destination does
+    not exist first.  What FileContext adds elsewhere, an atomic
+    no-overwrite rename on HDFS, guards against a second writer; the
+    drain's checkpoint is a fresh private ``mkdtemp`` directory passed
+    as a ``file:`` URI, so it has one writer by construction.
+    Caller-owned checkpoints keep the session's manager.
+
     ``shuffle_partitions`` scopes the state-store count to the drain:
     every stateful operator instantiates one store PER shuffle
     partition PER micro-batch, and at fixture scale the per-store
     commit overhead dominates (measured: the stream-stream joins drop
-    5.5 s → 2.2 s going 32 → 8 stores).  The conf is read at query
-    START and restored after the synchronous drain, so batch plans in
-    the same session keep the session default.  At real scale pass
+    5.5 s → 2.2 s going 32 → 8 stores).  At real scale pass
     ``None`` (keep the session setting) or size to state volume —
     Spark's own guidance for streaming state.
 
@@ -122,27 +154,27 @@ def run_to_memory(
     drain-and-stop run, never what is emitted.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    cp = tempfile.mkdtemp(prefix="anspark_cp_")
+    # an explicit file: URI keeps the checkpoint local whatever
+    # fs.defaultFS says; the manager's guarantees above are those of file:
+    cp = pathlib.Path(tempfile.mkdtemp(prefix="anspark_cp_")).as_uri()
     sess = sdf.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    confs = {"spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER}
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if not final_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     # The save/set/restore of the session conf is a read-modify-write on
     # PROCESS-GLOBAL state: two concurrent drains (e.g. REST schedules)
-    # interleaving it could permanently leak the temporary value as the
-    # session default (round-10 advice).  The conf is read at stream
+    # interleaving it could permanently leak a temporary value as the
+    # session default (round-10 advice).  The confs are read at stream
     # START, so the critical section must span the whole synchronous
     # drain; concurrent drains serialize here, which at availableNow
     # fixture scale is the same wall as the state-store contention they
     # would otherwise create.
-    scoped = shuffle_partitions is not None or not final_no_data_batch
-    guard = _SHUFFLE_OVERRIDE_LOCK if scoped else _NO_LOCK
-    with guard:
-        old = sess.conf.get(key)
-        old_nodata = sess.conf.get(nodata_key, "true")
-        if shuffle_partitions is not None:
-            sess.conf.set(key, str(shuffle_partitions))
-        if not final_no_data_batch:
-            sess.conf.set(nodata_key, "false")
+    with _DRAIN_CONF_LOCK:
+        saved = {k: sess.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            sess.conf.set(k, v)
         try:
             q = (
                 sdf.writeStream.format("memory")
@@ -154,10 +186,11 @@ def run_to_memory(
             )
             q.awaitTermination()
         finally:
-            if shuffle_partitions is not None:
-                sess.conf.set(key, old)
-            if not final_no_data_batch:
-                sess.conf.set(nodata_key, old_nodata)
+            for k, v in saved.items():
+                if v is None:
+                    sess.conf.unset(k)
+                else:
+                    sess.conf.set(k, v)
     out = sdf.sparkSession.table(name)
     # Oracle parity: DuckDB TIMESTAMP is tz-naive; with a UTC session tz the
     # instants match, only the Spark-side type differs — normalize it.

@@ -208,6 +208,10 @@ if __name__ == "__main__":
         "stream_delta_upsert_merge", "stream_tail_file",
         "stream_site_to_site", "stream_wait_notify_expiry",
         "stream_backpressure_monitor", "stream_dedup_watermark",
+        "stream_tumbling_window", "stream_hypertable_rollup",
+        "stream_sliding_window", "stream_session_window",
+        "publish_consume_kafka_bus", "stream_quality_gate",
+        "stream_static_enrich",
         "flow_compile_amortized",
         "put_ftp_roundtrip", "listen_smtp_deliver",
         "put_elasticsearch_live",

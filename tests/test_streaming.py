@@ -8,6 +8,7 @@ import os
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
@@ -567,3 +568,105 @@ def test_skip_final_no_data_batch_is_output_neutral(spark, sf_dir):
 
     assert dedup_rows(skip=True) == dedup_rows(skip=False)
     assert spark.conf.get(key, "true") == before
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_DRAIN_KEYS = (
+    _MANAGER_KEY,
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def _files_under(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch):
+    """run_to_memory starts its query with the FileSystem-based checkpoint
+    manager, and its private checkpoint holds the same files as the same
+    stream started by hand with Spark's default (FileContext) manager."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from apache_nifi_spark.streaming import running_totals_per_key, sources
+
+    made, managers = [], []
+    mkdtemp, start = sources.tempfile.mkdtemp, DataStreamWriter.start
+
+    def recording_mkdtemp(*a, **kw):
+        made.append(mkdtemp(*a, **kw))
+        return made[-1]
+
+    def recording_start(self, *a, **kw):
+        managers.append(spark.conf.get(_MANAGER_KEY, None))
+        return start(self, *a, **kw)
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with monkeypatch.context() as m:
+        m.setattr(sources.tempfile, "mkdtemp", recording_mkdtemp)
+        m.setattr(DataStreamWriter, "start", recording_start)
+        run_to_memory(
+            running_totals_per_key(stream_events(spark, sf_dir)),
+            shuffle_partitions=parts,
+        )
+    assert managers == [sources._FS_CHECKPOINT_MANAGER]
+    (drained,) = [d for d in made if os.path.basename(d).startswith("anspark_cp_")]
+
+    assert spark.conf.get(_MANAGER_KEY, None) is None  # Spark's default
+    by_hand = tempfile.mkdtemp(prefix="t_cp_default_")
+    q = (
+        running_totals_per_key(stream_events(spark, sf_dir))
+        .writeStream.format("memory")
+        .queryName("t_cp_default_manager")
+        .outputMode("append")
+        .option("checkpointLocation", by_hand)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    files = _files_under(drained)
+    assert files == _files_under(by_hand)
+    for f in ("offsets/0", "commits/0", "metadata", "sources/0/0"):
+        assert f in files
+    for p in range(parts):
+        for f in ("1.delta", ".1.delta.crc", "1.delta.crc"):
+            assert f"state/0/{p}/{f}" in files
+
+
+def test_drain_restores_session_confs(spark, sf_dir):
+    """Every conf a drain scopes holds its pre-drain value afterwards —
+    unset stays unset, a caller-set manager is kept — also when the
+    drain raises at start()."""
+    from pyspark.errors import AnalysisException
+
+    def confs():
+        return {k: spark.conf.get(k, None) for k in _DRAIN_KEYS}
+
+    def drains():
+        ids = stream_events(spark, sf_dir).select("event_id")
+        run_to_memory(ids, shuffle_partitions=3, final_no_data_batch=False)
+        with pytest.raises(AnalysisException):  # complete mode, no aggregation
+            run_to_memory(
+                ids, output_mode="complete", shuffle_partitions=3, final_no_data_batch=False
+            )
+
+    before = confs()
+    assert before[_MANAGER_KEY] is None
+    drains()
+    assert confs() == before
+
+    caller_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    spark.conf.set(_MANAGER_KEY, caller_manager)
+    try:
+        drains()
+        assert confs() == {**before, _MANAGER_KEY: caller_manager}
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
