@@ -2783,18 +2783,15 @@ def stream_multi_route_q(spark, sf_dir):
     from apache_nifi_spark.streaming import route_stream_to_files, stream_events
 
     base = tempfile.mkdtemp(prefix="anspark_routes_")
-    cp = tempfile.mkdtemp(prefix="anspark_routes_cp_")
     sdf = stream_events(spark, sf_dir)
-    q = route_stream_to_files(
+    route_stream_to_files(
         sdf,
         {
             "errors": F.col("event_type") == "error",
             "big_purchases": (F.col("event_type") == "purchase") & (F.col("value") >= 50),
         },
         base,
-        cp,
     )
-    q.awaitTermination()
     import os
 
     parts = []

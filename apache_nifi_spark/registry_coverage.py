@@ -868,7 +868,7 @@ def stream_site_to_site_q(spark, sf_dir):
     import urllib.parse
 
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
-    from apache_nifi_spark.streaming import run_to_memory, stream_events
+    from apache_nifi_spark.streaming import drain, run_to_memory, stream_events
     from apache_nifi_spark.streaming.s2s_wire import (
         SiteToSiteServer,
         s2s_peers,
@@ -917,7 +917,6 @@ def stream_site_to_site_q(spark, sf_dir):
                 ).alias("content"),
             )
         )
-        cp = tempfile.mkdtemp(prefix="anspark_s2s_cp_")
 
         def push(bdf, _bid):
             # one transaction per partition; summary=True keeps the
@@ -930,13 +929,7 @@ def stream_site_to_site_q(spark, sf_dir):
             if failed:  # foreachBatch retry = transaction redelivery
                 raise RuntimeError(f"{failed} partitions failed S2S delivery")
 
-        q = (
-            producer.writeStream.foreachBatch(push)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(producer.writeStream.foreachBatch(push))
         consumer = spark.readStream.schema(
             "attributes map<string,string>, content string"
         ).json(landing)

@@ -5573,8 +5573,7 @@ def stream_put_database_q(spark, sf_dir):
     sdf = stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "event_type")
-    cp = tempfile.mkdtemp(prefix="anspark_derby_sink_cp_")
-    stream_to_jdbc(sdf, url, "purchases_db", cp, options=_DERBY_DRIVER)
+    stream_to_jdbc(sdf, url, "purchases_db", options=_DERBY_DRIVER)
     back = jdbc_read(
         spark,
         url,

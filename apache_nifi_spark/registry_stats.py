@@ -605,7 +605,7 @@ def stream_delta_append_commits_q(spark, sf_dir):
         read_delta_snapshot,
         write_commit,
     )
-    from apache_nifi_spark.streaming import stream_events
+    from apache_nifi_spark.streaming import drain, stream_events
 
     root = tempfile.mkdtemp(prefix="anspark_stream_delta_")
     sdf = (
@@ -636,14 +636,7 @@ def stream_delta_append_commits_q(spark, sf_dir):
         ]
         write_commit(root, version, actions)
 
-    cp = tempfile.mkdtemp(prefix="anspark_stream_delta_cp_")
-    (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(sdf.writeStream.foreachBatch(write_batch))
     return read_delta_snapshot(spark, root).select(
         "event_id", "user_id", "cents"
     )
@@ -1114,7 +1107,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         read_delta_snapshot,
         write_commit,
     )
-    from apache_nifi_spark.streaming import stream_events
+    from apache_nifi_spark.streaming import drain, stream_events
 
     # stage the purchase stream as 3 files so the drain is genuinely
     # multi-batch (one file per trigger)
@@ -1206,15 +1199,8 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         )
         write_commit(root, version, actions)
 
-    cp = tempfile.mkdtemp(prefix="anspark_updelta_cp_")
     sdf = stream_events(spark, sf_dir, path=staged, max_files_per_trigger=1)
-    (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(sdf.writeStream.foreachBatch(write_batch))
     return read_delta_snapshot(spark, root).select(
         "user_id", "cents_total", "n_purchases"
     )

@@ -10,10 +10,10 @@ Mapping recap:
 - MergeContent max-bin-age   → tumbling/session windows
 - DetectDuplicate + age-off  → ``dropDuplicatesWithinWatermark``
 - Wait/Notify correlation    → ``applyInPandasWithState`` keyed buffers
-- WAL repos / exactly-once   → checkpointLocation
+- WAL repos / exactly-once   → the drain's checkpoint (``sources.drain``)
 """
 
-from apache_nifi_spark.streaming.sources import stream_events, run_to_memory  # noqa: F401
+from apache_nifi_spark.streaming.sources import drain, stream_events, run_to_memory  # noqa: F401
 from apache_nifi_spark.streaming.windows import (  # noqa: F401
     tumbling_agg,
     sliding_agg,

@@ -5,9 +5,9 @@ Structured Streaming's foreachBatch gives at-least-once delivery on
 retry; the standard cure is per-batch idempotency — every row carries
 its ``__batch_id``, and a (re)delivered batch first deletes its own
 rows (delete-then-insert), so a replay after a mid-batch failure can
-never double-count.  Checkpoint (offset log) + idempotent sink =
-exactly-once, the same contract the file sinks get from their commit
-logs.
+never double-count.  The drain's checkpoint (offset log) + idempotent
+sink = exactly-once, the same contract the file sinks get from their
+commit logs.
 
 The DELETE runs driver-side over one JDBC connection (bounded
 control-plane work: one statement per micro-batch); the INSERT is the
@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.streaming.sources import drain
+
 __all__ = ["stream_to_jdbc"]
 
 
@@ -26,7 +28,6 @@ def stream_to_jdbc(
     sdf: DataFrame,
     url: str,
     table: str,
-    checkpoint_dir: str,
     options: dict[str, str] | None = None,
 ) -> None:
     """Drain a streaming DataFrame into a JDBC table (availableNow) with
@@ -59,10 +60,4 @@ def stream_to_jdbc(
             options=options,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(write_batch))

@@ -45,6 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.streaming.sources import drain
+
 __all__ = ["FileKafkaBus", "KAFKA_SOURCE_SCHEMA"]
 
 #: The public schema of Spark's Kafka source (headers omitted — they are
@@ -181,8 +183,8 @@ class FileKafkaBus:
     ) -> DataFrame:
         """ConsumeKafka(Record): the topic as a stream in the EXACT Kafka
         source schema.  Exactly-once is the file source's seen-files log
-        under the consumer-group's checkpoint (pass a stable
-        ``checkpointLocation`` to the sink — that IS the group id)."""
+        under the consumer-group's checkpoint (a stable checkpoint
+        directory for the drain IS the group id)."""
         reader = spark.readStream.schema(KAFKA_SOURCE_SCHEMA).format("parquet")
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -209,7 +211,8 @@ class FileKafkaBus:
         its batchId and skipped, so the log never double-appends —
         exactly-once from the stream into the topic.  The ledger is one
         tiny JSON per producer (control plane, like the broker's
-        producer-epoch state).
+        producer-epoch state).  Drains the stream on the caller's
+        ``checkpoint_dir`` and returns the terminated query.
         """
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -227,12 +230,7 @@ class FileKafkaBus:
                 json.dump({"last_batch": batch_id}, fh)
             os.replace(tmp, led)
 
-        return (
-            sdf.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return drain(sdf.writeStream.foreachBatch(sink), checkpoint=checkpoint_dir)
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
         """The batch twin (``spark.read.format("kafka")`` analog) for

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from apache_nifi_spark.streaming.sources import drain
+
 __all__ = ["route_stream_to_files", "UNMATCHED"]
 
 UNMATCHED = "unmatched"
@@ -27,16 +29,14 @@ def route_stream_to_files(
     sdf: DataFrame,
     routes: Mapping[str, Column],
     base_dir: str,
-    checkpoint_dir: str,
-    fmt: str = "parquet",
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Start a streaming query writing each route's rows under
-    ``base_dir/<route>/`` (plus ``base_dir/unmatched/``).
+    """Drain ``sdf``, appending each route's rows as parquet under
+    ``base_dir/<route>/`` (plus ``base_dir/unmatched/``), and return the
+    terminated query.
 
     Routing strategy is NiFi's "all matching" — a row lands in every
     route whose predicate it satisfies; ``unmatched`` = no predicate
-    matched.  Exactly-once per route comes from the shared checkpoint +
+    matched.  Exactly-once per route comes from the drain's checkpoint +
     idempotent parquet append.
     """
     names = list(routes)
@@ -47,19 +47,11 @@ def route_stream_to_files(
             matched = None
             for name in names:
                 pred = routes[name]
-                batch.filter(pred).write.mode("append").format(fmt).save(
-                    os.path.join(base_dir, name)
-                )
+                batch.filter(pred).write.mode("append").parquet(os.path.join(base_dir, name))
                 matched = pred if matched is None else (matched | pred)
             rest = batch if matched is None else batch.filter(~F.coalesce(matched, F.lit(False)))
-            rest.write.mode("append").format(fmt).save(os.path.join(base_dir, UNMATCHED))
+            rest.write.mode("append").parquet(os.path.join(base_dir, UNMATCHED))
         finally:
             batch.unpersist()
 
-    trigger = {"availableNow": True} if available_now else {"processingTime": "10 seconds"}
-    return (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trigger)
-        .start()
-    )
+    return drain(sdf.writeStream.foreachBatch(write_batch))

@@ -3,10 +3,10 @@
 NiFi moves FlowFiles between clusters with the site-to-site protocol
 (remote process group → peer's input port over TLS port 10000, evidenced
 at reference ``scripts.sh:72-98``).  The Spark-native equivalent is a
-shared bus: the producer pipeline streams to a durable directory (or
-Kafka topic) with its own checkpoint, the consumer pipeline tails that
-bus with a second independent checkpoint — exactly-once on both sides
-replaces the S2S two-phase commit.
+shared bus: the producer pipeline drains to a durable directory (or
+Kafka topic), the consumer pipeline tails that bus as its own stream —
+two independent drains, each exactly-once, replace the S2S two-phase
+commit.
 
 At scale the bus is an object-store prefix (or Kafka); partitioned
 parquet keeps the hand-off splittable so the consumer cluster scans in
@@ -19,28 +19,22 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.streaming.sources import drain
+
 __all__ = ["s2s_push", "s2s_pull"]
 
 
-def s2s_push(sdf: DataFrame, bus_dir: str | None = None) -> str:
+def s2s_push(sdf: DataFrame) -> str:
     """Producer half (remote process group → peer input port): drain the
-    stream to the bus directory, exactly-once via the producer-side
+    stream to a fresh bus directory, exactly-once via the drain's
     checkpoint.  Returns the bus path for the consumer."""
-    bus = bus_dir or tempfile.mkdtemp(prefix="anspark_s2s_bus_")
-    cp = tempfile.mkdtemp(prefix="anspark_s2s_cp_")
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", bus)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    bus = tempfile.mkdtemp(prefix="anspark_s2s_bus_")
+    drain(sdf.writeStream.format("parquet").option("path", bus))
     return bus
 
 
 def s2s_pull(spark: SparkSession, bus: str) -> DataFrame:
     """Consumer half (peer's input port): tail the bus as a file stream
-    with an independent checkpoint — the receiving flow's own source."""
+    — the receiving flow's own source, drained independently."""
     schema = spark.read.parquet(bus).schema  # footer-only read
     return spark.readStream.schema(schema).format("parquet").load(bus)

@@ -1,4 +1,4 @@
-"""Streaming sources & the drain-to-memory test/verify harness.
+"""Streaming sources and the drain kernel.
 
 ``stream_events`` is the ListFile/FetchFile + TailFile analog: the file
 stream source keeps seen-file state exactly where NiFi's ListFile keeps
@@ -6,8 +6,13 @@ its cluster state (SURVEY.md §2.1 row 1).  ``max_files_per_trigger``
 is the back-pressure/ControlRate knob.
 
 At scale the same code reads a landing-zone directory or (swapping the
-format string) a Kafka topic; nothing here is test-only except
-``run_to_memory``.
+format string) a Kafka topic.
+
+``drain`` is the one place that starts an availableNow query: it sets
+the trigger, the checkpoint and the drain-scoped session confs, and
+blocks until the query terminates.  Sinks configure a
+``DataStreamWriter`` and hand it over; ``run_to_memory`` is the
+memory-sink caller the registry and the tests use.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 #: serializes every drain's scoped session confs — the session conf is
 #: process-global, so the save/set/restore must not interleave across
@@ -90,27 +96,37 @@ def stream_events(
     return sdf
 
 
-def run_to_memory(
-    sdf: DataFrame,
-    output_mode: str = "append",
-    query_name: str | None = None,
-    shuffle_partitions: int | None = 8,
+def drain(
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    shuffle_partitions: int | None = None,
     final_no_data_batch: bool = True,
-) -> DataFrame:
-    """Drain a streaming DataFrame synchronously: availableNow trigger →
-    memory sink → return the materialized table.
+) -> StreamingQuery:
+    """Run a configured streaming writer as one synchronous availableNow
+    drain and return the terminated query.
+
+    The caller sets the sink on ``writer`` (memory + ``queryName`` +
+    ``outputMode``, ``foreachBatch(fn)``, or ``format("parquet")`` +
+    ``path``); this function owns the rest of the drain: the
+    ``availableNow`` trigger, the checkpoint, the scoped session confs,
+    and the blocking wait.  Every availableNow query in the engine starts
+    here.
 
     The checkpoint directory plays the FlowFile-repository role
-    (SURVEY.md §1.1); a fresh one per run keeps invocations independent.
+    (SURVEY.md §1.1).  With ``checkpoint=None`` the drain gets a fresh
+    private ``mkdtemp`` directory, so invocations stay independent.  A
+    caller that replays batches against a checkpoint it keeps passes it
+    in.
 
     Every drain scopes its session confs to the drain: they are set
-    under one lock, read at query START, and restored (or unset, if
-    they were unset) after the synchronous drain, even when ``start()``
-    raises, so batch plans in the same session keep the session
-    defaults.  The scoped confs are the checkpoint manager and the two
-    knobs below.
+    under ``_DRAIN_CONF_LOCK``, read at query START, and restored (or
+    unset, if they were unset) after the synchronous drain, even when
+    ``start()`` raises, so batch plans in the same session keep the
+    session defaults.  The lock is not re-entrant and is held for the
+    whole drain, so a ``foreachBatch`` callback must never start another
+    drain: it would wait forever on the lock this drain holds.
 
-    The checkpoint is written through Spark's
+    A private checkpoint is written through Spark's
     ``FileSystemBasedCheckpointFileManager`` instead of the default
     FileContext one, whose renames fork ``readlink`` processes on a
     host without libhadoop (see ``_FS_CHECKPOINT_MANAGER``).  On a
@@ -120,17 +136,12 @@ def run_to_memory(
     written, and a no-overwrite rename checks that the destination does
     not exist first.  What FileContext adds elsewhere, an atomic
     no-overwrite rename on HDFS, guards against a second writer; the
-    drain's checkpoint is a fresh private ``mkdtemp`` directory passed
-    as a ``file:`` URI, so it has one writer by construction.
-    Caller-owned checkpoints keep the session's manager.
+    private checkpoint is passed as a ``file:`` URI and has one writer
+    by construction.  Caller-owned checkpoints keep the session's
+    manager.
 
-    ``shuffle_partitions`` scopes the state-store count to the drain:
-    every stateful operator instantiates one store PER shuffle
-    partition PER micro-batch, and at fixture scale the per-store
-    commit overhead dominates (measured: the stream-stream joins drop
-    5.5 s → 2.2 s going 32 → 8 stores).  At real scale pass
-    ``None`` (keep the session setting) or size to state volume —
-    Spark's own guidance for streaming state.
+    ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
+    the drain; ``None`` keeps the session setting.
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to the
@@ -153,16 +164,17 @@ def run_to_memory(
     eligible shapes: the conf changes when state is reclaimed on a
     drain-and-stop run, never what is emitted.
     """
-    name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    # an explicit file: URI keeps the checkpoint local whatever
-    # fs.defaultFS says; the manager's guarantees above are those of file:
-    cp = pathlib.Path(tempfile.mkdtemp(prefix="anspark_cp_")).as_uri()
-    sess = sdf.sparkSession
-    confs = {"spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER}
+    confs = {}
+    if checkpoint is None:
+        # an explicit file: URI keeps the checkpoint local whatever
+        # fs.defaultFS says; the manager's guarantees above are those of file:
+        checkpoint = pathlib.Path(tempfile.mkdtemp(prefix="anspark_cp_")).as_uri()
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    sess = writer._spark
     # The save/set/restore of the session conf is a read-modify-write on
     # PROCESS-GLOBAL state: two concurrent drains (e.g. REST schedules)
     # interleaving it could permanently leak a temporary value as the
@@ -177,10 +189,7 @@ def run_to_memory(
             sess.conf.set(k, v)
         try:
             q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", cp)
+                writer.option("checkpointLocation", checkpoint)
                 .trigger(availableNow=True)
                 .start()
             )
@@ -191,6 +200,33 @@ def run_to_memory(
                     sess.conf.unset(k)
                 else:
                     sess.conf.set(k, v)
+    return q
+
+
+def run_to_memory(
+    sdf: DataFrame,
+    output_mode: str = "append",
+    query_name: str | None = None,
+    shuffle_partitions: int | None = 8,
+    final_no_data_batch: bool = True,
+) -> DataFrame:
+    """Drain a streaming DataFrame into a memory-sink table (see
+    ``drain``) and return the materialized table.
+
+    ``shuffle_partitions`` defaults to 8 here because it sets the
+    state-store count: every stateful operator instantiates one store
+    PER shuffle partition PER micro-batch, and at fixture scale the
+    per-store commit overhead dominates (measured: the stream-stream
+    joins drop 5.5 s → 2.2 s going 32 → 8 stores).  At real scale pass
+    ``None`` (keep the session setting) or size to state volume —
+    Spark's own guidance for streaming state.
+    """
+    name = query_name or f"q_{uuid.uuid4().hex[:12]}"
+    drain(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        shuffle_partitions=shuffle_partitions,
+        final_no_data_batch=final_no_data_batch,
+    )
     out = sdf.sparkSession.table(name)
     # Oracle parity: DuckDB TIMESTAMP is tz-naive; with a UTC session tz the
     # instants match, only the Spark-side type differs — normalize it.

@@ -211,7 +211,8 @@ if __name__ == "__main__":
         "stream_tumbling_window", "stream_hypertable_rollup",
         "stream_sliding_window", "stream_session_window",
         "publish_consume_kafka_bus", "stream_quality_gate",
-        "stream_static_enrich",
+        "stream_static_enrich", "stream_multi_route",
+        "stream_delta_append_commits", "stream_put_database",
         "flow_compile_amortized",
         "put_ftp_roundtrip", "listen_smtp_deliver",
         "put_elasticsearch_live",

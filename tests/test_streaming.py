@@ -586,29 +586,37 @@ def _files_under(root):
     )
 
 
-def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch):
-    """run_to_memory starts its query with the FileSystem-based checkpoint
-    manager, and its private checkpoint holds the same files as the same
-    stream started by hand with Spark's default (FileContext) manager."""
+def _record_start_managers(spark, monkeypatch):
+    """Patch ``DataStreamWriter.start`` to record the session's checkpoint
+    manager at every query start; returns the list it appends to."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    from apache_nifi_spark.streaming import running_totals_per_key, sources
-
-    made, managers = [], []
-    mkdtemp, start = sources.tempfile.mkdtemp, DataStreamWriter.start
-
-    def recording_mkdtemp(*a, **kw):
-        made.append(mkdtemp(*a, **kw))
-        return made[-1]
+    managers, start = [], DataStreamWriter.start
 
     def recording_start(self, *a, **kw):
         managers.append(spark.conf.get(_MANAGER_KEY, None))
         return start(self, *a, **kw)
 
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return managers
+
+
+def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch):
+    """run_to_memory starts its query with the FileSystem-based checkpoint
+    manager, and its private checkpoint holds the same files as the same
+    stream started by hand with Spark's default (FileContext) manager."""
+    from apache_nifi_spark.streaming import running_totals_per_key, sources
+
+    made, mkdtemp = [], sources.tempfile.mkdtemp
+
+    def recording_mkdtemp(*a, **kw):
+        made.append(mkdtemp(*a, **kw))
+        return made[-1]
+
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    managers = _record_start_managers(spark, monkeypatch)
     with monkeypatch.context() as m:
         m.setattr(sources.tempfile, "mkdtemp", recording_mkdtemp)
-        m.setattr(DataStreamWriter, "start", recording_start)
         run_to_memory(
             running_totals_per_key(stream_events(spark, sf_dir)),
             shuffle_partitions=parts,
@@ -670,3 +678,72 @@ def test_drain_restores_session_confs(spark, sf_dir):
         assert confs() == {**before, _MANAGER_KEY: caller_manager}
     finally:
         spark.conf.unset(_MANAGER_KEY)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_multi_route",
+        "stream_site_to_site",
+        "stream_delta_append_commits",
+        "stream_delta_upsert_merge",
+        "stream_put_database",
+    ],
+)
+def test_sink_drains_run_on_the_drain_kernel(spark, sf_dir, monkeypatch, name):
+    """The foreachBatch / file-sink registry queries start every query
+    through ``sources.drain``: on its private checkpoint with the
+    FileSystem-based manager, and with the drain confs restored after."""
+    from apache_nifi_spark.registry import QUERIES
+    from apache_nifi_spark.streaming import sources
+
+    before = {k: spark.conf.get(k, None) for k in _DRAIN_KEYS}
+    managers = _record_start_managers(spark, monkeypatch)
+    QUERIES[name](spark, sf_dir)
+    assert managers and set(managers) == {sources._FS_CHECKPOINT_MANAGER}
+    assert {k: spark.conf.get(k, None) for k in _DRAIN_KEYS} == before
+
+
+def test_publish_stream_keeps_session_manager(spark, monkeypatch, tmp_path):
+    """A caller-owned checkpoint (the producer's replay log) starts with
+    the session's manager, and the publish has drained when it returns."""
+    from apache_nifi_spark.streaming.kafka_bus import FileKafkaBus
+
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("CAST(id AS STRING) AS value").write.parquet(src)
+    sdf = spark.readStream.schema("value string").parquet(src)
+    bus = FileKafkaBus(str(tmp_path / "bus"))
+    session_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    managers = _record_start_managers(spark, monkeypatch)
+    spark.conf.set(_MANAGER_KEY, session_manager)
+    try:
+        q = bus.publish_stream(sdf, "t", "p1", str(tmp_path / "cp"))
+        assert spark.conf.get(_MANAGER_KEY) == session_manager
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
+    assert managers == [session_manager]
+    assert not q.isActive
+    assert bus.read_batch(spark, "t").count() == 40
+
+
+def test_drain_is_the_only_query_start():
+    """No module under the package other than ``streaming/sources.py``
+    sets a trigger or a checkpoint location or waits on a query: every
+    availableNow query goes through ``sources.drain``."""
+    import pathlib
+
+    import apache_nifi_spark
+
+    root = pathlib.Path(apache_nifi_spark.__file__).parent
+    kernel = root / "streaming" / "sources.py"
+    offenders = [
+        f"{path.relative_to(root)}: {token}"
+        for path in sorted(root.rglob("*.py"))
+        if path != kernel
+        for token in (".trigger(", "checkpointLocation", "awaitTermination")
+        if token in path.read_text()
+    ]
+    assert not offenders, offenders
