@@ -12,6 +12,7 @@ capability mapping.
 Layout
 ------
 - ``session``    SparkSession builder (UTC, AQE, Arrow).
+- ``cds``        the JVM's cached class-data-sharing archive.
 - ``io``         fixture loading / format bridge (ConvertRecord analog).
 - ``functions``  NiFi Expression-Language & RecordPath scalar surface as
                  thin wrappers over ``pyspark.sql.functions``.

@@ -9,6 +9,16 @@ second (AQE on, skew-join handling on, broadcast threshold tuned).
 At 100 TB the same builder runs unchanged on a real cluster: everything
 below is standard Spark SQL conf, nothing local-mode specific except the
 ``master`` argument which callers override via ``SPARK_GRAFT_CPUS``.
+
+The JVM starts from a dynamic class-data-sharing archive of the classes a
+Spark session loads (``cds.py``).  It is cached per user in
+``$XDG_CACHE_HOME/spark-graft/cds`` (``~/.cache/spark-graft/cds`` when
+unset), about 145 MB per Java home and Spark jar set, and saves about 4 s
+of launch and 3 s of warm-up in every later process.  The first process on
+a host pays once: before its own launch, ``get_spark`` runs a one-query
+session in a child process whose JVM writes the archive as it exits
+(35-45 s).  Delete the directory to reset it; put ``-Xshare:off`` in
+``$SPARK_GRAFT_JAVA_OPTS`` to turn it off.
 """
 
 from __future__ import annotations
@@ -16,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from apache_nifi_spark import cds
 
 __all__ = ["get_spark", "stop_spark"]
 
@@ -46,6 +58,8 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    extra_conf = extra_conf or {}
+    memory = extra_conf.get("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -89,7 +103,7 @@ def get_spark(
         # broadcast builds + 32 concurrent tasks need real heap (1g OOMs
         # broadcast construction at sf≥1).  Honored only at JVM launch —
         # a getOrCreate against a live session keeps its existing heap.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", memory)
         # Keep driver result transfers bounded — no huge collects by design.
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", "false")
@@ -99,34 +113,32 @@ def get_spark(
         # executor-side state and slows tail queries.  1 min keeps the
         # steady state flat; on a real cluster this conf is standard.
         .config("spark.cleaner.periodicGC.interval", "1min")
-        # Whole-stage codegen compiles one or more Janino classes per
-        # unique plan; a long session over hundreds of distinct queries
-        # fills Java 17's default 240 MB reserved code cache, after which
-        # the JIT stops compiling and tail queries run interpreter-tier
-        # (diffuse 20-40 % slowdowns late in a suite).  512 MB keeps the
-        # full registry hot; extra flags (profiling, GC logs) pass through
-        # $SPARK_GRAFT_JAVA_OPTS.  Standard long-running-engine JVM conf.
-        # r16 added -XX:+ExplicitGCInvokesConcurrent on the unverified
-        # theory that explicit/periodic GCs caused mid-query STW spikes;
-        # the r17 full-suite A/B (2 runs per side, interleaved, same
-        # tree) measured a WASH (per-query geomean ON/OFF 0.996 over
-        # 477 rows, streaming tail not flag-dependent) and the one
-        # pathological outlier of the four runs (kmeans 8.6 s) landed
-        # on an ON run — concurrent cycles started by between-query
-        # System.gc() hygiene bleed INTO the next timed queries.
-        # Dropped: STW collections between queries are unbilled and
-        # deterministic.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (
-                "-XX:ReservedCodeCacheSize=512m "
-                + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
-            ).strip(),
-        )
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    # Whole-stage codegen compiles one or more Janino classes per
+    # unique plan; a long session over hundreds of distinct queries
+    # fills Java 17's default 240 MB reserved code cache, after which
+    # the JIT stops compiling and tail queries run interpreter-tier
+    # (diffuse 20-40 % slowdowns late in a suite).  512 MB keeps the
+    # full registry hot; extra flags (profiling, GC logs) pass through
+    # $SPARK_GRAFT_JAVA_OPTS.  Standard long-running-engine JVM conf.
+    # r16 added -XX:+ExplicitGCInvokesConcurrent on the unverified
+    # theory that explicit/periodic GCs caused mid-query STW spikes;
+    # the r17 full-suite A/B (2 runs per side, interleaved, same
+    # tree) measured a WASH (per-query geomean ON/OFF 0.996 over
+    # 477 rows, streaming tail not flag-dependent) and the one
+    # pathological outlier of the four runs (kmeans 8.6 s) landed
+    # on an ON run — concurrent cycles started by between-query
+    # System.gc() hygiene bleed INTO the next timed queries.
+    # Dropped: STW collections between queries are unbilled and
+    # deterministic.
+    java_options = (
+        "-XX:ReservedCodeCacheSize=512m " + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
+    ).strip()
+    with cds.launch(java_options, memory, extra_conf) as java_options:
+        builder = builder.config("spark.driver.extraJavaOptions", java_options)
+        for k, v in extra_conf.items():
+            builder = builder.config(k, v)
+        return builder.getOrCreate()
 
 
 def stop_spark() -> None:
