@@ -28,6 +28,9 @@ one place that knows the transport policy:
   ``stop()`` is refused at once.  Live connections finish on their own
   threads (or on the idle timeout).
 
+Fixed-length reads off a connection (a frame header, a length-prefixed
+body) go through :func:`read_exact`, whatever the protocol.
+
 A handler is either a callable taking the accepted socket (a raw
 protocol loop) or a ``socketserver.BaseRequestHandler`` subclass (the
 stdlib ``BaseHTTPRequestHandler``/``StreamRequestHandler`` families).
@@ -46,7 +49,9 @@ import threading
 from collections.abc import Callable
 from typing import Any
 
-__all__ = ["BACKLOG", "IDLE_TIMEOUT", "HttpHandler", "Server", "connect", "nodelay"]
+__all__ = [
+    "BACKLOG", "IDLE_TIMEOUT", "HttpHandler", "Server", "connect", "nodelay", "read_exact"
+]
 
 BACKLOG = 128
 IDLE_TIMEOUT = 60.0  # seconds a connection may sit without traffic
@@ -62,6 +67,19 @@ def nodelay(sock: socket.socket) -> socket.socket:
 def connect(host: str, port: int, timeout: float) -> socket.socket:
     """A connected client socket with NODELAY set."""
     return nodelay(socket.create_connection((host, port), timeout=timeout))
+
+
+def read_exact(read: Callable[[int], bytes], n: int) -> bytes:
+    """Exactly ``n`` bytes from ``read`` (a socket's ``recv`` or a
+    file's ``read``), looping over short reads; ``ConnectionError`` when
+    the peer closes first."""
+    buf = b""
+    while len(buf) < n:
+        chunk = read(n - len(buf))
+        if not chunk:
+            raise ConnectionError(f"peer closed after {len(buf)} of {n} bytes")
+        buf += chunk
+    return buf
 
 
 class HttpHandler(http.server.BaseHTTPRequestHandler):

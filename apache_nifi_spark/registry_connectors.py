@@ -90,9 +90,7 @@ def publish_amqp_wire_q(spark, sf_dir):
     drains the landing dir and applies the ``region.*.u1`` TOPIC BINDING
     exactly as the exchange routes (streaming/amqp_bus.binding_matches),
     aggregating value-exact."""
-    import glob as _glob
     import tempfile
-    import time as _time
 
     from apache_nifi_spark.streaming.amqp_bus import binding_matches
     from apache_nifi_spark.streaming.amqp_wire import MiniAmqpBroker, publish_amqp
@@ -117,17 +115,7 @@ def publish_amqp_wire_q(spark, sf_dir):
         sent = publish_amqp(msgs, "127.0.0.1", broker.port, "events", "rkey", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            landed = sum(
-                sum(1 for ln in open(p, "rb") if ln.strip())
-                for p in _glob.glob(f"{landing}/*")
-            )
-            if landed >= n_sent:
-                break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(f"broker landed {landed} of {n_sent}")
+        broker.landing.wait(n_sent)
     finally:
         broker.stop()
     back = spark.read.text(landing).select(
@@ -161,9 +149,7 @@ def publish_mqtt_wire_q(spark, sf_dir):
     landing dir and applies the ``sensors/+/u1`` topic FILTER exactly as
     ConsumeMQTT's subscription does (functions/selectors), aggregating
     value-exact — frame encode → wire → land → filter is lossless."""
-    import glob as _glob
     import tempfile
-    import time as _time
 
     from apache_nifi_spark.functions.selectors import mqtt_topic_matches
     from apache_nifi_spark.streaming.mqtt import MiniMqttBroker, publish_mqtt
@@ -188,17 +174,7 @@ def publish_mqtt_wire_q(spark, sf_dir):
         sent = publish_mqtt(msgs, "127.0.0.1", broker.port, "topic", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            landed = sum(
-                sum(1 for ln in open(p, "rb") if ln.strip())
-                for p in _glob.glob(f"{landing}/*")
-            )
-            if landed >= n_sent:
-                break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(f"broker landed {landed} of {n_sent}")
+        broker.landing.wait(n_sent)
     finally:
         broker.stop()
     back = spark.read.text(landing).select(
@@ -653,9 +629,7 @@ def put_slack_webhook_post_q(spark, sf_dir):
     body durably; the landed JSON parses back and must aggregate
     value-exact — the render+transport hop is lossless.  All 200s are
     asserted (operators/http.post_http)."""
-    import glob as _glob
     import tempfile
-    import time as _time
 
     from apache_nifi_spark.operators.http import post_http
     from apache_nifi_spark.sinks import wire
@@ -678,11 +652,7 @@ def put_slack_webhook_post_q(spark, sf_dir):
         sent = post_http(bodies, lst.url + "services/hook", "payload")
         n_ok = sent.filter(F.col("status") == 200).count()
         assert n_ok == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            if len(_glob.glob(f"{landing}/*")) >= n_ok:
-                break
-            _time.sleep(0.05)
+        lst.landing.wait(n_ok)
     # explicit schema: inference would re-read every landed one-body
     # file a second time
     back = spark.read.schema("channel string, text string").json(landing)
@@ -1386,8 +1356,8 @@ def _staged_delta_vacuumed(spark, sf_dir):
     """VACUUM over the maintenance fixture with the retention cutoff at
     the OPTIMIZE version: the four compacted small files become
     unreferenced by every retained snapshot and are physically deleted;
-    the compacted file survives; time travel below the cutoff now fails
-    loudly (the documented trade-off)."""
+    the compacted file survives; the reader now refuses time travel
+    below the cutoff (the documented trade-off)."""
     if sf_dir in _DELTA_VACUUM_STAGE:
         return _DELTA_VACUUM_STAGE[sf_dir]
     from apache_nifi_spark.sources.deltalog import (
@@ -1398,10 +1368,11 @@ def _staged_delta_vacuumed(spark, sf_dir):
     root = _staged_delta_maint(spark, sf_dir)
     doomed = delta_vacuum(spark, root, retain_from_version=3)
     assert len(doomed) == 4 and all(d.startswith("f") for d in doomed), doomed
+    assert not any(os.path.exists(os.path.join(root, d)) for d in doomed), doomed
     try:
-        read_delta_snapshot(spark, root, 1).count()
+        read_delta_snapshot(spark, root, 1)
         raise AssertionError("time travel below the VACUUM cutoff succeeded")
-    except Exception:  # noqa: BLE001 — Spark wraps the missing-file error
+    except FileNotFoundError:
         pass
     _DELTA_VACUUM_STAGE[sf_dir] = root
     return root
@@ -2079,12 +2050,11 @@ def _staged_hudi_cow(spark, sf_dir):
     # every retained snapshot (g0/g2 stay — c2/c3 still read them)
     doomed = hudi_clean(spark, root, retain_from=c2)
     assert doomed == [f"part=1/g1_0-1-0_{c1}.parquet"], doomed
+    assert not os.path.exists(os.path.join(root, doomed[0])), doomed
     try:
-        read_hudi_snapshot(spark, root, as_of=c1).count()
+        read_hudi_snapshot(spark, root, as_of=c1)
         raise AssertionError("hudi time travel below the clean succeeded")
-    except AssertionError:
-        raise
-    except Exception:  # noqa: BLE001 — Spark wraps the missing file
+    except FileNotFoundError:
         pass
     # retained replays stay exact: 500 docs minus the 15 upsert-dropped
     # ids (101, 108, ..., 199 — the %7==3 members of [100, 200))

@@ -3109,9 +3109,7 @@ def put_syslog_udp_q(spark, sf_dir):
     (syslog's native transport — sinks/socket.put_udp), land via
     UdpLandingListener, and parse back.  Oracle equality proves
     render → datagram → land → parse is lossless."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_udp
@@ -3132,17 +3130,7 @@ def put_syslog_udp_q(spark, sf_dir):
     landing = tempfile.mkdtemp(prefix="anspark_putsyslog_")
     listener = UdpLandingListener(landing, batch_size=1)
     n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} datagrams")
+    listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3166,9 +3154,7 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
     connection per partition (sinks/socket.put_tcp_octet_counted), land
     through the frame parser (TcpLandingListener framing='octet'), and
     parse back.  Oracle equality proves the framed hop is lossless."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_tcp_octet_counted
@@ -3194,17 +3180,7 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
         .count()
     )
     assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+    listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3228,9 +3204,7 @@ def put_relp_roundtrip_q(spark, sf_dir):
     connection per partition, each ACK awaited), land batched, and parse
     back.  Oracle equality proves the ACKed hop is lossless
     (streaming/relp.py)."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.streaming.relp import RelpLandingListener, put_relp
@@ -3255,17 +3229,7 @@ def put_relp_roundtrip_q(spark, sf_dir):
         .count()
     )
     assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+    listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3447,22 +3411,9 @@ def put_tcp_roundtrip_q(spark, sf_dir):
     n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
     assert n_sent == ev.count()
     # sendall returning doesn't mean the handler thread has landed the
-    # file yet — poll the landing zone until every line is durable (the
-    # at-least-once handoff a real landing tier gives the drain).
-    import glob
-    import time
-
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} lines")
+    # file yet — wait until every line is durable (the at-least-once
+    # handoff a real landing tier gives the drain).
+    listener.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3492,9 +3443,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
     verified (streaming/tls.py) — before any byte ships; plaintext
     clients are rejected at the handshake (tests/test_tls.py).  Oracle
     equality proves the encrypted hop is lossless."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
@@ -3520,17 +3469,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
     sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
     n_sent = sent.filter("sent").count()
     assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} lines")
+    listener.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3644,16 +3583,16 @@ def _shared_smtp(landing: str):
     per run (round-14 verdict item 4): constructing the server is
     cheap, but the pre-r15 query also LEAKED its accept thread + bound
     socket every invocation (srv.stop() was never called).  One
-    listener per process, landing_dir swapped between runs — safe
-    because deliveries are synchronous (put_smtp counts before the
-    query returns), so no write is in flight across a retarget."""
+    listener per process, landing_dir swapped between runs (which also
+    restarts its record count) — safe because deliveries are
+    synchronous (put_smtp counts before the query returns), so no write
+    is in flight across a retarget."""
     global _SMTP_SHARED
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer
 
     if _SMTP_SHARED is None:
         _SMTP_SHARED = MiniSmtpServer(landing)
     else:
-        os.makedirs(landing, exist_ok=True)
         _SMTP_SHARED.landing_dir = landing
     return _SMTP_SHARED
 
@@ -3682,9 +3621,7 @@ def listen_smtp_q(spark, sf_dir):
     headers alongside the MIME fields) — the prior envelope-regex
     projection + self-join on subject double-scanned the content and
     paid a join exchange for columns the parser already had in hand."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.sources.email_codec import parse_email_headers
@@ -3731,13 +3668,7 @@ def listen_smtp_q(spark, sf_dir):
     srv = _shared_smtp(landing)
     n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
     assert n == n_msgs
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        if len(glob.glob(f"{landing}/*.eml")) >= n:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError("landing zone incomplete")
+    srv.landing.wait(n)
     from apache_nifi_spark.sources import read_binary_files
 
     landed = (
@@ -4281,9 +4212,7 @@ def put_websocket_roundtrip_q(spark, sf_dir):
     durably; the landing zone reads back and aggregates.  Oracle
     equality proves handshake → mask → frame → land is lossless
     (streaming/websocket.py)."""
-    import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.streaming.websocket import (
         WebSocketLandingServer,
@@ -4307,17 +4236,7 @@ def put_websocket_roundtrip_q(spark, sf_dir):
         .count()
     )
     assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+    server.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(

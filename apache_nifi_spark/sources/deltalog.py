@@ -422,12 +422,22 @@ def read_delta_snapshot(
     inline roaring bitmap decodes executor-side next to its file and
     the marked row ordinals are dropped before the union with the plain
     scan — so a snapshot after :func:`delta_delete_rows` never shows
-    deleted rows, with zero data-file rewrites."""
+    deleted rows, with zero data-file rewrites.
+
+    A snapshot whose files are gone (time travel below a
+    :func:`delta_vacuum` cutoff) raises ``FileNotFoundError`` before
+    Spark sees a path."""
     rows = _delta_active_rows(
         spark, table_path, version
     )  # control-plane: O(active files) manifest rows
     if not rows:
         raise ValueError("empty delta snapshot")
+    missing = [
+        r["path"] for r in rows
+        if not os.path.exists(os.path.join(table_path, r["path"]))
+    ]
+    if missing:
+        raise FileNotFoundError(f"delta version {version} needs deleted files {missing}")
     plain = [
         os.path.join(table_path, r["path"]) for r in rows if not r["dv"]
     ]
@@ -626,8 +636,8 @@ def delta_vacuum(
     from every retained snapshot's active set — computed by replaying
     each retained version (O(retained × files) manifest-scale work,
     no data reads).  Time travel at or above the cutoff is untouched;
-    below it, reads fail loudly on the missing files (the documented
-    VACUUM trade-off).  Returns the deleted paths (relative)."""
+    below it, :func:`read_delta_snapshot` refuses the version (the
+    documented VACUUM trade-off).  Returns the deleted paths (relative)."""
     log_dir = os.path.join(table_path, "_delta_log")
     versions = sorted(
         int(f[:-5]) for f in _list_commits(log_dir)

@@ -292,11 +292,16 @@ def read_hudi_snapshot(
     """Snapshot read at ``as_of`` (default latest): resolve active
     slices, then one plain parquet scan over them — pruning and
     pushdown apply as for any parquet read.  Meta columns
-    (``_hoodie_*``) are stripped unless ``with_meta``."""
+    (``_hoodie_*``) are stripped unless ``with_meta``.  A snapshot
+    whose slices are gone (time travel below a :func:`hudi_clean`)
+    raises ``FileNotFoundError`` before Spark sees a path."""
     rows = _hudi_active_rows(  # control-plane: O(file groups)
         spark, table_path, as_of
     )
     paths = [os.path.join(table_path, r["path"]) for r in rows]
+    missing = [p for p in paths if not os.path.exists(p)]
+    if missing:
+        raise FileNotFoundError(f"hudi instant {as_of} needs deleted slices {missing}")
     df = spark.read.parquet(*paths)
     if not with_meta:
         df = df.drop("_hoodie_commit_time", "_hoodie_record_key")
@@ -311,8 +316,8 @@ def hudi_clean(
     active slice of its file group in ANY retained snapshot (every
     completed commit instant ≥ ``retain_from``).  Replays each
     retained instant's active set before deleting — time travel below
-    ``retain_from`` then fails loudly on the missing file, the
-    documented trade-off.  Returns deleted relative paths and appends
+    ``retain_from`` then makes :func:`read_hudi_snapshot` refuse the
+    instant, the documented trade-off.  Returns deleted relative paths and appends
     the ``<instant>.clean`` record."""
     timeline = hudi_timeline(table_path)
     commit_instants = [

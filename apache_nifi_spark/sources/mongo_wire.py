@@ -15,9 +15,9 @@ What is real:
   with the standard reply shapes (``{ok: 1, n}``,
   ``{cursor: {firstBatch: [...], id: 0}}``).
 - **MiniMongoServer**: threaded TCP server speaking the above; inserts
-  LAND each document as one durable JSON file (the landing-zone
-  contract — the read-back is a distributed scan, never a driver-side
-  dump), with an in-memory index for ``find``/``count``.
+  LAND each document as one JSON file (the landing contract in
+  ``streaming/listen.py`` — the read-back is a distributed scan, never
+  a driver-side dump), with an in-memory index for ``find``/``count``.
 
 Spark-first shape: executor partitions each open one wire connection
 and batch their inserts (PutMongoRecord's batching); ``find`` filters
@@ -31,11 +31,9 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import socket
 import struct
 import threading
-import uuid
 from typing import Any
 
 from apache_nifi_spark import net
@@ -151,17 +149,10 @@ def _op_msg(request_id: int, response_to: int, body: dict) -> bytes:
     return header + payload
 
 
-def _read_exact(sock_file, n: int) -> bytes:
-    data = sock_file.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _read_op_msg(sock_file) -> tuple[int, dict]:
-    header = _read_exact(sock_file, 16)
+    header = net.read_exact(sock_file.read, 16)
     length, request_id, _resp_to, opcode = struct.unpack("<iiii", header)
-    rest = _read_exact(sock_file, length - 16)
+    rest = net.read_exact(sock_file.read, length - 16)
     if opcode != _OP_MSG:
         raise ValueError(f"unsupported opcode {opcode}")
     # flagBits (4) + section kind byte (1) + body document
@@ -179,8 +170,12 @@ class MiniMongoServer:
     the wire reads."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
+        # imported here: executors unpickling the client never need the
+        # streaming package
+        from apache_nifi_spark.streaming.listen import Landing
+
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".json")
         self._store: dict[str, list[dict]] = {}
         self._lock = threading.Lock()
         self._srv = net.Server(self._serve, host, port).start()
@@ -214,7 +209,14 @@ class MiniMongoServer:
             with self._lock:
                 self._store.setdefault(coll, []).extend(docs)
             for d in docs:
-                self._land(coll, d)
+                rec = {
+                    k: (v.hex() if isinstance(v, bytes) else v)
+                    for k, v in d.items()
+                }
+                self.landing.publish(
+                    json.dumps(rec, separators=(",", ":"), default=str).encode(),
+                    prefix=f"{coll}__",
+                )
             return {"n": len(docs), "ok": 1.0}
         if kind == "find":
             coll = cmd["find"]
@@ -242,17 +244,6 @@ class MiniMongoServer:
         if kind in ("ping", "hello", "isMaster"):
             return {"ok": 1.0}
         return {"ok": 0.0, "errmsg": f"unsupported command {kind!r}"}
-
-    def _land(self, coll: str, doc: dict) -> None:
-        rec = {
-            k: (v.hex() if isinstance(v, bytes) else v)
-            for k, v in doc.items()
-        }
-        name = f"{coll}__{uuid.uuid4().hex}.json"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(rec, separators=(",", ":"), default=str))
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()

@@ -180,29 +180,20 @@ class _Transport:
         self.f.flush()
         self.seq_out += 1
 
-    def _read_exact(self, n: int) -> bytes:
-        buf = b""
-        while len(buf) < n:
-            chunk = self.f.read(n - len(buf))
-            if not chunk:
-                raise ConnectionError("short read in SSH packet")
-            buf += chunk
-        return buf
-
     def recv_packet(self) -> bytes:
         block = 16 if self.enc_in else 8
-        head = self._read_exact(block)
+        head = net.read_exact(self.f.read, block)
         if self.enc_in is not None:
             head = self.enc_in.crypt(head)
         (plen,) = struct.unpack(">I", head[:4])
         if not 1 <= plen <= (1 << 20):
             raise ValueError(f"bad SSH packet length {plen}")
-        rest = self._read_exact(plen - (block - 4))
+        rest = net.read_exact(self.f.read, plen - (block - 4))
         if self.enc_in is not None:
             rest = self.enc_in.crypt(rest)
         packet = head + rest
         if self.enc_in is not None:
-            mac = self._read_exact(32)
+            mac = net.read_exact(self.f.read, 32)
             want = _hmac.new(
                 self.mac_in, struct.pack(">I", self.seq_in) + packet, hashlib.sha256
             ).digest()

@@ -18,8 +18,8 @@ MQTT, …):
   Basic.Ack (delivery-tag echo) — the at-least-once contract
   PublishAMQP relies on, mirroring the MQTT QoS1 tier.
 - **MiniAmqpBroker**: threaded server speaking the above; published
-  messages land durably per connection as
-  ``exchange<TAB>routing_key<TAB>payload`` batches, so ConsumeAMQP's
+  messages land per connection as ``exchange<TAB>routing_key<TAB>payload``
+  batches (the landing contract in ``streaming/listen.py``), so ConsumeAMQP's
   drain is a distributed scan with ``amqp_bus.binding_matches`` applied
   Spark-side — identical routing semantics, real transport.
 
@@ -29,13 +29,11 @@ broker tier is swappable for a real deployment, the frames are not.
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
-import threading
-import uuid
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniAmqpBroker", "publish_amqp"]
 
@@ -66,17 +64,10 @@ def _method(channel: int, cls: int, meth: int, args: bytes = b"") -> bytes:
     return _frame(_FRAME_METHOD, channel, struct.pack(">HH", cls, meth) + args)
 
 
-def _read_exact(f, n: int) -> bytes:
-    data = f.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _read_frame(f) -> tuple[int, int, bytes]:
-    ftype, channel, size = struct.unpack(">BHI", _read_exact(f, 7))
-    payload = _read_exact(f, size)
-    if _read_exact(f, 1)[0] != _FRAME_END:
+    ftype, channel, size = struct.unpack(">BHI", net.read_exact(f.read, 7))
+    payload = net.read_exact(f.read, size)
+    if net.read_exact(f.read, 1)[0] != _FRAME_END:
         raise ValueError("missing frame-end octet")
     return ftype, channel, payload
 
@@ -92,9 +83,7 @@ class MiniAmqpBroker:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".log")
         self._srv = net.Server(self._serve, host, port).start()
 
     @property
@@ -107,7 +96,7 @@ class MiniAmqpBroker:
         pending: dict | None = None  # publish awaiting header/body
         delivery_tag = 0
         try:
-            if _read_exact(f, 8) != _PROTO_HEADER:
+            if net.read_exact(f.read, 8) != _PROTO_HEADER:
                 f.write(_PROTO_HEADER)  # spec: answer with supported version
                 return
             # Connection.Start: ver 0.9, empty server-properties table,
@@ -179,7 +168,7 @@ class MiniAmqpBroker:
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.publish_lines(batch)
             try:
                 f.close()
             except OSError:
@@ -187,12 +176,7 @@ class MiniAmqpBroker:
             conn.close()
 
     def _complete(self, f, channel, pending, batch, delivery_tag) -> int:
-        esc = (
-            pending["body"]
-            .replace(b"\\", b"\\\\")
-            .replace(b"\n", b"\\n")
-            .replace(b"\t", b"\\t")
-        )
+        esc = Landing.escape(pending["body"]).replace(b"\t", b"\\t")
         batch.append(
             pending["exchange"].encode() + b"\t"
             + pending["rkey"].encode() + b"\t" + esc
@@ -202,16 +186,6 @@ class MiniAmqpBroker:
         f.write(_method(channel, 60, 80, struct.pack(">QB", delivery_tag, 0)))
         f.flush()
         return delivery_tag
-
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()

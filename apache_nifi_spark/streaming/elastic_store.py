@@ -7,9 +7,9 @@ over REAL HTTP rather than render-only:
 
 - ``POST /_bulk`` — parses action-and-metadata + source line pairs
   (``index``/``create`` actions), answers the standard ``items`` body,
-  and LANDS each document as one durable JSON file (atomic temp+rename,
-  the same landing-zone contract as every listener here), with
-  ``_index``/``_id`` merged into the document.
+  and LANDS each document as one JSON file (the landing contract in
+  ``streaming/listen.py``), with ``_index``/``_id`` merged into the
+  document.
 - ``GET /<index>/_count`` — ``{"count": N}`` for delivery assertions.
 - ``GET /<index>/_search`` — match-all hits (bounded by ``size``), the
   smoke-read the real API serves.
@@ -30,6 +30,7 @@ import threading
 import uuid
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniElasticServer"]
 
@@ -39,7 +40,7 @@ class MiniElasticServer:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".json")
         self._counts: dict[str, int] = {}
         self._lock = threading.Lock()
         store = self
@@ -108,25 +109,21 @@ class MiniElasticServer:
                 continue
             index = meta.get("_index", "default")
             doc_id = str(meta.get("_id", uuid.uuid4().hex))
-            self._land(index, doc_id, doc)
+            with self._lock:
+                self._counts[index] = self._counts.get(index, 0) + 1
+            rec = dict(doc)
+            rec["_index"] = index
+            rec["_id"] = doc_id
+            self.landing.publish(
+                json.dumps(rec, separators=(",", ":")).encode(),
+                prefix=f"{index}__{doc_id}_",
+            )
             items.append(
                 {kind: {"_index": index, "_id": doc_id, "status": 201,
                         "result": "created"}}
             )
             i += 2
         return {"errors": errors, "items": items}
-
-    def _land(self, index: str, doc_id: str, doc: dict) -> None:
-        with self._lock:
-            self._counts[index] = self._counts.get(index, 0) + 1
-        rec = dict(doc)
-        rec["_index"] = index
-        rec["_id"] = doc_id
-        name = f"{index}__{doc_id}_{uuid.uuid4().hex[:8]}.json"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "w") as f:
-            f.write(json.dumps(rec, separators=(",", ":")))
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def _search(self, path: str) -> dict:
         index = path.strip("/").split("/")[0]

@@ -302,16 +302,6 @@ def _parse_message_set(buf: bytes) -> list[tuple[int, bytes | None, bytes | None
     return out
 
 
-def _read_exact(f, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = f.read(n - len(buf))
-        if not chunk:
-            raise ConnectionError("short read")
-        buf += chunk
-    return buf
-
-
 class MiniKafkaBroker:
     """Single-node broker speaking ApiVersions, Metadata v0,
     Produce v0/v3, and Fetch v0/v4 (v2 RecordBatches + gzip)."""
@@ -345,7 +335,7 @@ class MiniKafkaBroker:
                 if not head or len(head) < 4:
                     break
                 (size,) = struct.unpack(">i", head)
-                frame = _read_exact(f, size)
+                frame = net.read_exact(f.read, size)
                 cur = _Cursor(frame)
                 api_key, api_version = cur.i16(), cur.i16()
                 correlation_id = cur.i32()
@@ -578,8 +568,8 @@ class _KafkaClient:
         frame = header + body
         self._f.write(struct.pack(">i", len(frame)) + frame)
         self._f.flush()
-        (size,) = struct.unpack(">i", _read_exact(self._f, 4))
-        resp = _Cursor(_read_exact(self._f, size))
+        (size,) = struct.unpack(">i", net.read_exact(self._f.read, 4))
+        resp = _Cursor(net.read_exact(self._f.read, size))
         corr = resp.i32()
         if corr != self._corr:
             raise ConnectionError(f"correlation id mismatch {corr} != {self._corr}")

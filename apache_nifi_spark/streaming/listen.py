@@ -20,6 +20,23 @@ landing-zone → engine deployment works at scale:
 The listener here is stdlib ``http.server`` (threaded) — enough to make
 the pattern REAL and e2e-testable in-process; swap the front end
 freely, the landing-dir contract is the interface.
+
+**The landing contract.**  Every listener in the engine (HTTP, TCP, UDP,
+RELP, SMTP, WebSocket, the MQTT/AMQP/STOMP brokers, the Elasticsearch and
+Mongo stores, the site-to-site receiver) publishes through one
+:class:`Landing`:
+
+- each file appears whole: it is written under a hidden temp name
+  (``.tmp_<name>``, which Spark's file sources and ``glob`` skip) and
+  published with one ``rename``;
+- files are named ``<prefix><seq:08d>_<hex8><suffix>``, the sequence
+  taken under a lock, so names are distinct and sort in publish order
+  within a prefix;
+- a payload that may carry newlines or backslashes lands one line per
+  message through the injective :meth:`Landing.escape`, inverted by
+  :func:`unescape_landed`;
+- the landing counts the records it has published, and
+  :meth:`Landing.wait` blocks until a sender's count has landed.
 """
 
 from __future__ import annotations
@@ -34,6 +51,7 @@ from apache_nifi_spark import net
 
 __all__ = [
     "HttpLandingListener",
+    "Landing",
     "TcpLandingListener",
     "UdpLandingListener",
     "stream_json_landing",
@@ -42,54 +60,87 @@ __all__ = [
 
 
 def unescape_landed(line: str) -> str:
-    """Invert the injective landing escape shared by the octet-framing
-    TCP listener and the RELP listener (``\\`` → ``\\\\`` first, then
-    newline → ``\\n``): one landed line = one wire message, with any
-    embedded newlines/backslashes recoverable.  Splitting on the escaped
-    backslash keeps a literal ``\\n`` byte pair distinct from an escaped
-    newline.  Spark-side equivalent of this helper:
-    ``F.replace(F.replace(col, lit('\\\\n'), lit('\\n')), ...)`` is NOT
-    injective — use this in a batch-parse UDF only if payloads may embed
-    newlines; plain syslog lines never do."""
+    """Invert :meth:`Landing.escape`: one landed line = one wire
+    message, with any embedded newlines/backslashes recoverable.
+    Splitting on the escaped backslash keeps a literal ``\\n`` byte
+    pair distinct from an escaped newline.  Spark-side equivalent of
+    this helper: ``F.replace(F.replace(col, lit('\\\\n'), lit('\\n')), ...)``
+    is NOT injective — use this in a batch-parse UDF only if payloads
+    may embed newlines; plain syslog lines never do."""
     return "\\".join(p.replace("\\n", "\n") for p in line.split("\\\\"))
 
 
-class HttpLandingListener:
-    """Threaded HTTP server writing one landing file per POST body.
+class Landing:
+    """One landing directory: publishes whole files into it, counts the
+    records it has published and waits for a count (the contract in the
+    module docstring)."""
 
-    Files are written to ``<landing_dir>/<seq>_<uuid>.json`` via a
-    temp-name + ``os.rename`` so the streaming file source never sees a
-    half-written file (the landing-zone atomicity contract).
-    """
+    def __init__(self, landing_dir: str, suffix: str):
+        os.makedirs(landing_dir, exist_ok=True)
+        self.dir = landing_dir
+        self.suffix = suffix
+        self._seq = 0
+        self._records = 0
+        self._cond = threading.Condition()
+
+    @staticmethod
+    def escape(payload: bytes) -> bytes:
+        """The injective line escape: ``\\`` → ``\\\\`` first, then
+        newline → ``\\n``."""
+        return payload.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
+
+    @property
+    def count(self) -> int:
+        """Records published so far."""
+        with self._cond:
+            return self._records
+
+    def publish(self, body: bytes, records: int = 1, prefix: str = "") -> None:
+        """Land ``body`` as one file holding ``records`` records."""
+        with self._cond:
+            self._seq += 1
+            seq = self._seq
+        name = f"{prefix}{seq:08d}_{uuid.uuid4().hex[:8]}{self.suffix}"
+        tmp = os.path.join(self.dir, f".tmp_{name}")
+        with open(tmp, "wb") as f:
+            f.write(body)
+        os.rename(tmp, os.path.join(self.dir, name))
+        with self._cond:
+            self._records += records
+            self._cond.notify_all()
+
+    def publish_lines(self, lines: list[bytes], prefix: str = "") -> None:
+        """Land ``lines`` newline-terminated as one file, one record each."""
+        self.publish(b"\n".join(lines) + b"\n", len(lines), prefix)
+
+    def wait(self, n: int, timeout: float = 15.0) -> None:
+        """Block until ``n`` records have landed; ``TimeoutError`` after
+        ``timeout`` seconds."""
+        with self._cond:
+            if not self._cond.wait_for(lambda: self._records >= n, timeout):
+                raise TimeoutError(
+                    f"landing zone has {self._records} of {n} records"
+                )
+
+
+class HttpLandingListener:
+    """Threaded HTTP server landing one ``.json`` file per POST body."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        listener = self
+        self.landing = landing = Landing(landing_dir, ".json")
 
         class Handler(net.HttpHandler):
             def do_POST(self):  # noqa: N802 (stdlib API name)
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length)
-                listener._land(body)
+                landing.publish(body)
                 self.send_response(200)
                 self.send_header("Content-Length", "2")
                 self.end_headers()
                 self.wfile.write(b"ok")
 
         self._server = net.Server(Handler, host, port)
-        self._seq = 0
-        self._lock = threading.Lock()
-
-    def _land(self, body: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.json"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     @property
     def url(self) -> str:
@@ -121,9 +172,7 @@ def stream_json_landing(
 
 class TcpLandingListener:
     """ListenTCP / ListenSyslog transport half: a threaded TCP server
-    appending each record batch as one landing file — the same durable
-    landing-zone contract as `HttpLandingListener` (atomic temp-name +
-    rename per connection's payload).
+    landing each connection's payload as one ``.log`` file.
 
     ``framing`` selects the syslog-over-TCP transport mode (RFC 6587):
     ``"newline"`` (non-transparent framing, the default) lands the byte
@@ -142,7 +191,7 @@ class TcpLandingListener:
         if framing not in ("newline", "octet"):
             raise ValueError(f"unknown framing {framing!r}")
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".log")
 
         def handle(conn) -> None:
             with conn.makefile("rb") as f:
@@ -166,30 +215,18 @@ class TcpLandingListener:
                         break
                     msgs.append(data[sp + 1 : sp + 1 + n])
                     pos = sp + 1 + n
-                # Injective landing encoding: escape the escape char
-                # first so payloads containing literal "\n" sequences
-                # remain losslessly recoverable.
-                data = b"\n".join(
-                    m.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
-                    for m in msgs
-                )
+                data = b"\n".join(map(Landing.escape, msgs))
             if data.strip():
-                self._land(data)
+                self.landing.publish(
+                    data if data.endswith(b"\n") else data + b"\n",
+                    sum(1 for ln in data.splitlines() if ln.strip()),
+                )
 
-        self._seq = 0
         self._srv = net.Server(handle, host, port).start()
 
     @property
     def port(self) -> int:
         return self._srv.port
-
-    def _land(self, body: bytes) -> None:
-        self._seq += 1
-        name = f"{self._seq:06d}_{uuid.uuid4().hex}.log"
-        tmp = os.path.join(self.landing_dir, f".{name}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(body if body.endswith(b"\n") else body + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()
@@ -201,8 +238,7 @@ class UdpLandingListener:
 
     NiFi's ListenUDP batches datagrams into FlowFiles via Max Batch Size;
     ``batch_size`` mirrors that — datagrams buffer in arrival order and
-    flush to ONE newline-delimited landing file per batch (atomic
-    temp-name + rename, same contract as the TCP/HTTP listeners).
+    flush to ONE newline-delimited ``.log`` landing file per batch.
     ``flush()`` drains a partial batch (NiFi's batching window close);
     ``stop()`` flushes implicitly so no datagram is ever dropped.
 
@@ -229,10 +265,9 @@ class UdpLandingListener:
         import socket as _socket
 
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
         self._buf: list[bytes] = []
-        self._seq = 0
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._sock = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
@@ -271,16 +306,9 @@ class UdpLandingListener:
                 self._flush_locked()
 
     def _flush_locked(self) -> None:
-        if not self._buf:
-            return
-        self._seq += 1
-        body = b"\n".join(self._buf) + b"\n"
-        self._buf = []
-        name = f"{self._seq:06d}_{uuid.uuid4().hex}.log"
-        tmp = os.path.join(self.landing_dir, f".{name}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
+        if self._buf:
+            self.landing.publish_lines(self._buf)
+            self._buf = []
 
     def flush(self) -> None:
         with self._lock:

@@ -53,24 +53,14 @@ def _write_bytes(sock: socket.socket, b: bytes) -> None:
     sock.sendall(struct.pack(">I", len(b)) + b)
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("peer closed mid-frame")
-        buf += chunk
-    return buf
-
-
 def _read_utf(sock: socket.socket) -> str:
-    (n,) = struct.unpack(">H", _read_exact(sock, 2))
-    return _read_exact(sock, n).decode("utf-8")
+    (n,) = struct.unpack(">H", net.read_exact(sock.recv, 2))
+    return net.read_exact(sock.recv, n).decode("utf-8")
 
 
 def _read_bytes(sock: socket.socket) -> bytes:
-    (n,) = struct.unpack(">I", _read_exact(sock, 4))
-    return _read_exact(sock, n)
+    (n,) = struct.unpack(">I", net.read_exact(sock.recv, 4))
+    return net.read_exact(sock.recv, n)
 
 
 class MapCacheServer:
@@ -92,7 +82,7 @@ class MapCacheServer:
     def _serve(self, conn: socket.socket) -> None:
         try:
             # handshake: client sends its protocol version, server ACKs.
-            (ver,) = struct.unpack(">I", _read_exact(conn, 4))
+            (ver,) = struct.unpack(">I", net.read_exact(conn.recv, 4))
             if ver != _PROTOCOL_VERSION:
                 conn.sendall(struct.pack(">b", 0))
                 return
@@ -148,7 +138,7 @@ class MapCacheClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
         self._sock = net.connect(host, port, timeout)
         self._sock.sendall(struct.pack(">I", _PROTOCOL_VERSION))
-        (ok,) = struct.unpack(">b", _read_exact(self._sock, 1))
+        (ok,) = struct.unpack(">b", net.read_exact(self._sock.recv, 1))
         if ok != 1:
             raise ConnectionError("cache protocol version rejected")
 
@@ -156,27 +146,27 @@ class MapCacheClient:
         _write_utf(self._sock, "put")
         _write_bytes(self._sock, key)
         _write_bytes(self._sock, value)
-        _read_exact(self._sock, 1)
+        net.read_exact(self._sock.recv, 1)
 
     def get(self, key: bytes) -> bytes | None:
         _write_utf(self._sock, "get")
         _write_bytes(self._sock, key)
-        (hit,) = struct.unpack(">b", _read_exact(self._sock, 1))
+        (hit,) = struct.unpack(">b", net.read_exact(self._sock.recv, 1))
         return _read_bytes(self._sock) if hit else None
 
     def contains_key(self, key: bytes) -> bool:
         _write_utf(self._sock, "containsKey")
         _write_bytes(self._sock, key)
-        return _read_exact(self._sock, 1) == b"\x01"
+        return net.read_exact(self._sock.recv, 1) == b"\x01"
 
     def remove(self, key: bytes) -> bool:
         _write_utf(self._sock, "remove")
         _write_bytes(self._sock, key)
-        return _read_exact(self._sock, 1) == b"\x01"
+        return net.read_exact(self._sock.recv, 1) == b"\x01"
 
     def key_set(self) -> list[bytes]:
         _write_utf(self._sock, "keySet")
-        (n,) = struct.unpack(">I", _read_exact(self._sock, 4))
+        (n,) = struct.unpack(">I", net.read_exact(self._sock.recv, 4))
         return [_read_bytes(self._sock) for _ in range(n)]
 
     def close(self) -> None:

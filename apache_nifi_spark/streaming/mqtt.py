@@ -9,8 +9,8 @@ pattern as the FTP/IMAP/SMTP/RELP/Mongo tiers:
   CONNECT→CONNACK (protocol name/level verified), PUBLISH QoS0/QoS1
   (QoS1 answers PUBACK with the packet id — the at-least-once contract
   NiFi's PublishMQTT uses), PINGREQ→PINGRESP, DISCONNECT.  Messages
-  land per connection as durable batch files of
-  ``topic<TAB>payload`` lines (injective escaping, flushed on
+  land per connection as batch files of ``topic<TAB>payload`` lines
+  (the landing contract in ``streaming/listen.py``, flushed on
   DISCONNECT/close), so ConsumeMQTT's drain is a distributed text scan
   with the topic-filter predicate applied Spark-side.
 - **publish_mqtt**: the per-partition client — one CONNECT per
@@ -23,13 +23,12 @@ echo are all real framing, unit-tested against adversarial payloads.
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
-import threading
 import uuid
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniMqttBroker", "publish_mqtt"]
 
@@ -68,13 +67,6 @@ def _mqtt_str(s: str) -> bytes:
     return struct.pack(">H", len(b)) + b
 
 
-def _read_exact(f, n: int) -> bytes:
-    data = f.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _packet(ptype: int, flags: int, body: bytes) -> bytes:
     return bytes([(ptype << 4) | flags]) + _encode_varint(len(body)) + body
 
@@ -84,9 +76,7 @@ class MiniMqttBroker:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".log")
         self._srv = net.Server(self._serve, host, port).start()
 
     @property
@@ -102,7 +92,7 @@ class MiniMqttBroker:
                 if not head:
                     break
                 ptype, flags = head[0] >> 4, head[0] & 0x0F
-                body = _read_exact(f, _read_varint(f))
+                body = net.read_exact(f.read, _read_varint(f))
                 if ptype == _CONNECT:
                     (nlen,) = struct.unpack_from(">H", body, 0)
                     proto = body[2 : 2 + nlen].decode()
@@ -122,11 +112,7 @@ class MiniMqttBroker:
                         (pid,) = struct.unpack_from(">H", body, pos)
                         pos += 2
                     payload = body[pos:]
-                    esc = (
-                        payload.replace(b"\\", b"\\\\")
-                        .replace(b"\n", b"\\n")
-                        .replace(b"\t", b"\\t")
-                    )
+                    esc = Landing.escape(payload).replace(b"\t", b"\\t")
                     batch.append(topic.encode("utf-8") + b"\t" + esc)
                     if qos == 1 and pid is not None:
                         f.write(_packet(_PUBACK, 0, struct.pack(">H", pid)))
@@ -140,22 +126,12 @@ class MiniMqttBroker:
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.publish_lines(batch)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
-
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()
@@ -175,8 +151,8 @@ class _MqttClient:
         )
         self._f.write(_packet(_CONNECT, 0, body))
         self._f.flush()
-        head = _read_exact(self._f, 1)
-        rest = _read_exact(self._f, _read_varint(self._f))
+        head = net.read_exact(self._f.read, 1)
+        rest = net.read_exact(self._f.read, _read_varint(self._f))
         if head[0] >> 4 != _CONNACK or rest[1] != 0:
             raise ConnectionError(f"CONNACK refused: {rest!r}")
 
@@ -185,8 +161,8 @@ class _MqttClient:
         body = _mqtt_str(topic) + struct.pack(">H", self._pid) + payload
         self._f.write(_packet(_PUBLISH, 0x02, body))  # QoS1
         self._f.flush()
-        head = _read_exact(self._f, 1)
-        rest = _read_exact(self._f, _read_varint(self._f))
+        head = net.read_exact(self._f.read, 1)
+        rest = net.read_exact(self._f.read, _read_varint(self._f))
         if head[0] >> 4 != _PUBACK or struct.unpack(">H", rest[:2])[0] != self._pid:
             raise ConnectionError("PUBACK mismatch")
 

@@ -10,8 +10,8 @@ a ``close`` exchange.  Both halves here speak those exact bytes:
 
 - ``RelpLandingListener`` — parses frames off a threaded TCP server,
   ACKs each ``syslog`` txnr with ``rsp ... 200 OK``, and lands messages
-  as newline-joined batch files (embedded newlines escaped), the same
-  durable landing contract as every listener in this package.
+  as newline-joined batch files, one escaped message per line (the
+  landing contract in ``streaming/listen.py``).
 - ``put_relp`` — one connection + handshake per partition, one framed
   ``syslog`` command per record, ACK awaited per transaction (the
   reliability the protocol exists for); ``sent`` reflects the ACK, not
@@ -23,16 +23,15 @@ collectors in front); the landing dir feeds the streaming drain.
 
 from __future__ import annotations
 
-import os
 import socket
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.sinks.socket import _with_sent
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["RelpLandingListener", "put_relp"]
 
@@ -80,10 +79,8 @@ class RelpLandingListener:
         batch_size: int = 64,
     ):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
-        self._seq = 0
-        self._lock = threading.Lock()
         self._srv = net.Server(self._serve, host, port).start()
 
     @property
@@ -101,12 +98,9 @@ class RelpLandingListener:
                     f.write(_frame(txnr, "rsp", b"200 OK\n" + data))
                     f.flush()
                 elif cmd == "syslog":
-                    # Injective landing escape — same contract as the
-                    # octet-framing TCP listener; invert with
-                    # streaming.listen.unescape_landed.
-                    buf.append(data.replace(b"\\", b"\\\\").replace(b"\n", b"\\n"))
+                    buf.append(Landing.escape(data))
                     if len(buf) >= self.batch_size:
-                        self._land(buf)
+                        self.landing.publish_lines(buf)
                         buf = []
                     f.write(_frame(txnr, "rsp", b"200 OK"))
                     f.flush()
@@ -121,22 +115,12 @@ class RelpLandingListener:
             return
         finally:
             if buf:
-                self._land(buf)
+                self.landing.publish_lines(buf)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
-
-    def _land(self, messages: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(messages) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()
@@ -200,7 +184,4 @@ def put_relp(
                 pass
             sock.close()
 
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("sent", BooleanType())
-    return df.mapInPandas(run, schema)
+    return _with_sent(df, run)

@@ -20,8 +20,9 @@ socket protocol modeled on the public NiFi raw site-to-site exchange:
   running CRC and either confirms — the receiver then atomically
   commits the staged batch and answers TRANSACTION_FINISHED — or
   replies BAD_CHECKSUM, which discards the stage (nothing lands) so the
-  sender can redeliver.  Commit is a single ``os.rename``, so a crash
-  anywhere before TRANSACTION_FINISHED leaves no partial batch.
+  sender can redeliver.  Commit publishes one landing file (the landing
+  contract in ``streaming/listen.py``), so a crash anywhere before
+  TRANSACTION_FINISHED leaves no partial batch.
 
 Spark-first shape: the sender is a per-partition ``mapInPandas`` client
 (one TLS connection + ONE transaction per partition — connection and
@@ -38,10 +39,10 @@ import os
 import ssl
 import struct
 import threading
-import uuid
 import zlib
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["SiteToSiteServer", "s2s_peers", "s2s_send", "PROTOCOL_VERSION"]
 
@@ -69,20 +70,10 @@ def _write_utf(f, s: str) -> bytes:
     return data
 
 
-def _read_exact(f, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = f.read(n - len(buf))
-        if not chunk:
-            raise ConnectionError("short read")
-        buf += chunk
-    return buf
-
-
 def _read_utf(f) -> tuple[str, bytes]:
-    raw = _read_exact(f, 2)
+    raw = net.read_exact(f.read, 2)
     (n,) = struct.unpack(">H", raw)
-    body = _read_exact(f, n)
+    body = net.read_exact(f.read, n)
     return body.decode("utf-8"), raw + body
 
 
@@ -135,7 +126,7 @@ class SiteToSiteServer:
         from apache_nifi_spark.streaming.tls import server_context
 
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".jsonl")
         self._extra_peers = list(peers or [])
         self._committed = 0
         self._aborted = 0
@@ -157,9 +148,9 @@ class SiteToSiteServer:
     def _serve(self, conn: ssl.SSLSocket) -> None:
         f = conn.makefile("rwb")
         try:
-            if _read_exact(f, 4) != _MAGIC:
+            if net.read_exact(f.read, 4) != _MAGIC:
                 return
-            (version,) = struct.unpack(">H", _read_exact(f, 2))
+            (version,) = struct.unpack(">H", net.read_exact(f.read, 2))
             if version != PROTOCOL_VERSION:
                 f.write(bytes([_DIFFERENT_VERSION]))
                 f.write(struct.pack(">H", PROTOCOL_VERSION))
@@ -167,7 +158,7 @@ class SiteToSiteServer:
                 return
             f.write(bytes([_RESOLUTION_OK]))
             f.flush()
-            (req,) = _read_exact(f, 1)
+            (req,) = net.read_exact(f.read, 1)
             if req == _REQ_PEER_LIST:
                 self._answer_peer_list(f)
             elif req == _REQ_SEND_FLOWFILES:
@@ -234,7 +225,7 @@ class SiteToSiteServer:
         _write_utf(f, str(crc & 0xFFFFFFFF))
         f.flush()
         # phase 2: sender verdict
-        (verdict,) = _read_exact(f, 1)
+        (verdict,) = net.read_exact(f.read, 1)
         if verdict == _CONFIRM_TRANSACTION:
             self._commit(port_name, records)
             f.write(bytes([_TRANSACTION_FINISHED]))
@@ -248,14 +239,8 @@ class SiteToSiteServer:
     def _commit(self, port_name: str, records: list[bytes]) -> None:
         with self._lock:
             self._committed += 1
-            seq = self._committed
-        if not records:
-            return
-        name = f"{port_name or 'input'}_{seq:08d}_{uuid.uuid4().hex[:8]}.jsonl"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(records) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))  # atomic commit
+        if records:
+            self.landing.publish_lines(records, prefix=f"{port_name or 'input'}_")
 
     def stop(self) -> None:
         self._srv.stop()
@@ -274,9 +259,9 @@ def _open(host: str, port: int, cert_path: str, timeout: float):
     f.write(_MAGIC)
     f.write(struct.pack(">H", PROTOCOL_VERSION))
     f.flush()
-    (resolution,) = _read_exact(f, 1)
+    (resolution,) = net.read_exact(f.read, 1)
     if resolution != _RESOLUTION_OK:
-        (theirs,) = struct.unpack(">H", _read_exact(f, 2))
+        (theirs,) = struct.unpack(">H", net.read_exact(f.read, 2))
         conn.close()
         raise ConnectionError(
             f"peer speaks protocol version {theirs}, not {PROTOCOL_VERSION}"
@@ -292,13 +277,13 @@ def s2s_peers(
     try:
         f.write(bytes([_REQ_PEER_LIST]))
         f.flush()
-        (n,) = struct.unpack(">I", _read_exact(f, 4))
+        (n,) = struct.unpack(">I", net.read_exact(f.read, 4))
         peers = []
         for _ in range(n):
             h, _raw = _read_utf(f)
-            (p,) = struct.unpack(">H", _read_exact(f, 2))
-            (secure,) = _read_exact(f, 1)
-            (count,) = struct.unpack(">I", _read_exact(f, 4))
+            (p,) = struct.unpack(">H", net.read_exact(f.read, 2))
+            (secure,) = net.read_exact(f.read, 1)
+            (count,) = struct.unpack(">I", net.read_exact(f.read, 4))
             peers.append(
                 {"host": h, "port": p, "secure": bool(secure), "flowFileCount": count}
             )
@@ -355,14 +340,14 @@ def _send_transaction(
         buf += b"\x00"  # END_OF_DATA
         flush_buf()
         f.flush()
-        (code,) = _read_exact(f, 1)
+        (code,) = net.read_exact(f.read, 1)
         if code != _CONFIRM_TRANSACTION:
             raise ConnectionError(f"expected CONFIRM_TRANSACTION, got {code:#x}")
         theirs, _ = _read_utf(f)
         ok = (not _corrupt_crc) and theirs == str(crc & 0xFFFFFFFF)
         f.write(bytes([_CONFIRM_TRANSACTION if ok else _BAD_CHECKSUM]))
         f.flush()
-        (final,) = _read_exact(f, 1)
+        (final,) = net.read_exact(f.read, 1)
         if not ok:
             raise _TransactionAborted(
                 f"checksum mismatch (ours {crc & 0xFFFFFFFF}, theirs {theirs})"

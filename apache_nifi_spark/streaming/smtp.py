@@ -7,28 +7,25 @@ environment has no MTA, so ``MiniSmtpServer`` implements the server
 subset a delivery needs: greeting, EHLO/HELO (capability list), MAIL
 FROM / RCPT TO envelope, DATA with dot-stuffing termination and
 transparency decoding, RSET/NOOP/QUIT.  Each completed DATA lands as
-one file (atomic temp + rename) with an ``X-Envelope-From`` /
-``X-Envelope-To`` prefix so the envelope survives alongside the
-headers, as the NiFi processor exposes it.
+one ``.eml`` file (the landing contract in ``streaming/listen.py``)
+with an ``X-Envelope-From`` / ``X-Envelope-To`` prefix so the envelope
+survives alongside the headers, as the NiFi processor exposes it.
 
 Spark shape: ``put_smtp`` delivers each partition's rendered messages
 over one smtplib connection (the PutEmail delivery seam); the landing
-dir is the interface the drain consumes, exactly like the HTTP/TCP
-listeners.
+dir is the interface the drain consumes.
 """
 
 from __future__ import annotations
 
-import os
 import socket
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniSmtpServer", "put_smtp"]
 
@@ -38,10 +35,17 @@ class MiniSmtpServer:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
         self._srv = net.Server(self._serve, host, port).start()
+
+    @property
+    def landing_dir(self) -> str:
+        return self.landing.dir
+
+    @landing_dir.setter
+    def landing_dir(self, path: str) -> None:
+        """Retarget the server: later messages land in ``path`` and the
+        record count restarts at 0."""
+        self.landing = Landing(path, ".eml")
 
     @property
     def port(self) -> int:
@@ -91,7 +95,11 @@ class MiniSmtpServer:
                         if dl.startswith(b".."):
                             dl = dl[1:]  # dot-stuffing transparency
                         body.append(dl)
-                    self._land(mail_from, rcpt_to, b"".join(body))
+                    envelope = (
+                        f"X-Envelope-From: {mail_from}\r\n"
+                        f"X-Envelope-To: {', '.join(rcpt_to)}\r\n"
+                    ).encode()
+                    self.landing.publish(envelope + b"".join(body))
                     mail_from, rcpt_to = None, []
                     send(250, "OK message accepted")
                 elif verb == "RSET":
@@ -112,20 +120,6 @@ class MiniSmtpServer:
             except OSError:
                 pass
             conn.close()
-
-    def _land(self, mail_from: str, rcpt_to: list[str], body: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        envelope = (
-            f"X-Envelope-From: {mail_from}\r\n"
-            f"X-Envelope-To: {', '.join(rcpt_to)}\r\n"
-        ).encode()
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.eml"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(envelope + body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()

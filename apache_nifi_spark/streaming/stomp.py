@@ -12,9 +12,9 @@ real protocol bytes — the same broker pattern as the MQTT/AMQP tiers:
   ``CONNECT``→``CONNECTED`` (accept-version negotiated), ``SEND`` with
   full 1.2 header escaping (``\\n`` ``\\r`` ``\\c`` ``\\\\``) and
   ``content-length`` bodies (NUL-safe), ``RECEIPT`` on request, and
-  receipt-confirmed ``DISCONNECT``.  Landed messages are durable
-  JSON-lines batch files ``{"destination", "headers", "body"}`` flushed
-  per connection — ConsumeJMS's drain is a distributed JSON scan with
+  receipt-confirmed ``DISCONNECT``.  Messages land as JSON-lines batch
+  files ``{"destination", "headers", "body"}`` per connection (the
+  landing contract in ``streaming/listen.py``) — ConsumeJMS's drain is a distributed JSON scan with
   the compiled selector applied Spark-side, exactly where a broker
   evaluates it.
 - **publish_stomp**: the per-partition client — one CONNECT per
@@ -31,12 +31,11 @@ executors; consumption is a splittable scan of the landing files.
 from __future__ import annotations
 
 import json
-import os
 import socket
-import threading
 import uuid
 
 from apache_nifi_spark import net
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniStompBroker", "publish_stomp"]
 
@@ -137,9 +136,7 @@ class MiniStompBroker:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".jsonl")
         self._srv = net.Server(self._serve, host, port).start()
 
     @property
@@ -195,7 +192,7 @@ class MiniStompBroker:
                     # land BEFORE the receipt: once the client sees it,
                     # every prior SEND is durably on disk
                     if batch:
-                        self._land(batch)
+                        self.landing.publish_lines(batch)
                         batch = []
                     if receipt is not None:
                         f.write(_frame("RECEIPT", {"receipt-id": receipt}))
@@ -211,22 +208,12 @@ class MiniStompBroker:
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.publish_lines(batch)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
-
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.jsonl"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()

@@ -12,9 +12,7 @@ exact bytes:
   connections, performs the server handshake, reassembles fragmented
   messages, answers ping with pong, enforces the RFC's client-masking
   rule (unmasked client frame → close 1002), and lands each complete
-  message as one durable landing-zone file (temp-name + rename, the
-  same atomicity contract every listener in this package gives the
-  streaming drain).
+  message as one file (the landing contract in ``streaming/listen.py``).
 - ``put_websocket`` — the PutWebSocket analog: ``mapInPandas`` with ONE
   client connection per PARTITION (handshake amortized across the
   batch, partitions fan out across executors — the PutTCP/InvokeHTTP
@@ -23,8 +21,7 @@ exact bytes:
   failures route like any other relationship.
 
 At scale the landing tier is the deployment seam (swap in a real WS
-gateway); the landing-dir contract is the interface the Spark drain
-consumes, exactly like the HTTP/TCP/UDP listeners.
+gateway); the landing dir is the interface the Spark drain consumes.
 """
 
 from __future__ import annotations
@@ -34,14 +31,14 @@ import hashlib
 import os
 import socket
 import struct
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.sinks.socket import _with_sent
+from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = [
     "ws_accept_key",
@@ -87,28 +84,18 @@ def encode_frame(
     return head + payload
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("socket closed mid-frame")
-        buf += chunk
-    return buf
-
-
 def decode_frame(sock: socket.socket) -> tuple[bool, int, bool, bytes]:
     """Read one frame off a socket → (fin, opcode, was_masked, payload),
     unmasking if needed."""
-    b0, b1 = _read_exact(sock, 2)
+    b0, b1 = net.read_exact(sock.recv, 2)
     fin, opcode = bool(b0 & 0x80), b0 & 0x0F
     masked, n = bool(b1 & 0x80), b1 & 0x7F
     if n == 126:
-        (n,) = struct.unpack(">H", _read_exact(sock, 2))
+        (n,) = struct.unpack(">H", net.read_exact(sock.recv, 2))
     elif n == 127:
-        (n,) = struct.unpack(">Q", _read_exact(sock, 8))
-    key = _read_exact(sock, 4) if masked else b""
-    payload = _read_exact(sock, n)
+        (n,) = struct.unpack(">Q", net.read_exact(sock.recv, 8))
+    key = net.read_exact(sock.recv, 4) if masked else b""
+    payload = net.read_exact(sock.recv, n)
     if masked:
         payload = bytes(b ^ key[i % 4] for i, b in enumerate(payload))
     return fin, opcode, masked, payload
@@ -120,9 +107,7 @@ class WebSocketLandingServer:
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".msg")
         self._srv = net.Server(self._serve, host, port).start()
 
     @property
@@ -143,7 +128,7 @@ class WebSocketLandingServer:
                         return
                     parts.append(payload)
                     if fin:
-                        self._land(b"".join(parts))
+                        self.landing.publish(b"".join(parts) + b"\n")
                         parts = []
                 elif opcode == 0x9:  # ping → pong, same payload
                     conn.sendall(encode_frame(payload, opcode=0xA))
@@ -178,16 +163,6 @@ class WebSocketLandingServer:
             b"Connection: Upgrade\r\n"
             b"Sec-WebSocket-Accept: " + accept.encode("ascii") + b"\r\n\r\n"
         )
-
-    def _land(self, message: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.msg"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as f:
-            f.write(message + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     def stop(self) -> None:
         self._srv.stop()
@@ -262,7 +237,4 @@ def put_websocket(
         finally:
             sock.close()
 
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("sent", BooleanType())
-    return df.mapInPandas(run, schema)
+    return _with_sent(df, run)

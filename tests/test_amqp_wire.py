@@ -4,9 +4,9 @@ content framing (empty body, multi-frame-sized), landing escaping."""
 from __future__ import annotations
 
 import glob
+import pathlib
 import socket
 import tempfile
-import time
 
 import pytest
 
@@ -17,20 +17,14 @@ from apache_nifi_spark.streaming.amqp_wire import (
 )
 
 
-def _landed_lines(landing, n, timeout=10):
-    deadline = time.monotonic() + timeout
-    lines: list[bytes] = []
-    while time.monotonic() < deadline:
-        lines = [
-            ln
-            for p in glob.glob(f"{landing}/*")
-            for ln in open(p, "rb").read().split(b"\n")
-            if ln
-        ]
-        if len(lines) >= n:
-            break
-        time.sleep(0.05)
-    return lines
+def _landed_lines(broker, n):
+    broker.landing.wait(n, timeout=10)
+    return [
+        ln
+        for p in glob.glob(f"{broker.landing_dir}/*")
+        for ln in pathlib.Path(p).read_bytes().split(b"\n")
+        if ln
+    ]
 
 
 def test_handshake_publish_confirm_and_landing():
@@ -43,7 +37,7 @@ def test_handshake_publish_confirm_and_landing():
         c.publish("ex", "empty", b"")
         c.publish("ex", "big", b"z" * 1000)
         c.close()  # Connection.Close/CloseOk flushes the landing batch
-        lines = _landed_lines(landing, 4)
+        lines = _landed_lines(broker, 4)
         by_key = {
             ln.split(b"\t", 2)[1]: ln.split(b"\t", 2)[2] for ln in lines
         }
@@ -79,7 +73,7 @@ def test_publish_amqp_partitioned(spark):
         ).repartition(3)
         out = publish_amqp(df, "127.0.0.1", broker.port, "ex", "rk", "payload")
         assert out.filter("published").count() == 150
-        lines = _landed_lines(landing, 150)
+        lines = _landed_lines(broker, 150)
         assert len(lines) == 150
         assert {ln.split(b"\t", 2)[2] for ln in lines} == {
             f"p{i}".encode() for i in range(150)

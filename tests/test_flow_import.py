@@ -607,8 +607,8 @@ def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
     delivers over the real wire to in-process brokers; failures route
     to 'failure' instead of failing the plan."""
     import glob
+    import pathlib
     import tempfile
-    import time
 
     from apache_nifi_spark.plans.flow_import import run_flow
     from apache_nifi_spark.streaming.amqp_wire import MiniAmqpBroker
@@ -649,16 +649,12 @@ def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
         }
         outs = run_flow(spark, sf_dir, flow)
         assert outs["A.success"].count() == 25  # nation has 25 rows
-        deadline = time.monotonic() + 10
-        while time.monotonic() < deadline:
-            mq_n = sum(len(open(p, "rb").read().splitlines())
-                       for p in glob.glob(f"{mq_land}/*"))
-            am_n = sum(len(open(p, "rb").read().splitlines())
-                       for p in glob.glob(f"{am_land}/*"))
-            if mq_n >= 25 and am_n >= 25:
-                break
-            time.sleep(0.05)
-        assert mq_n == 25 and am_n == 25
+        for broker in (mq, am):
+            broker.landing.wait(25, timeout=10)
+            assert sum(
+                len(pathlib.Path(p).read_bytes().splitlines())
+                for p in glob.glob(f"{broker.landing_dir}/*")
+            ) == 25
     finally:
         mq.stop()
         am.stop()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 import glob
 import json
+import pathlib
 import tempfile
 
 import pytest
@@ -60,7 +61,7 @@ def test_wire_insert_find_count_and_landing():
         bad = client.command({"drop": "orders", "$db": "db"})
         assert bad["ok"] == 0.0 and "unsupported" in bad["errmsg"]
         assert client.count("orders") == 10  # still alive
-        landed = [json.load(open(p)) for p in glob.glob(f"{landing}/*.json")]
+        landed = [json.loads(pathlib.Path(p).read_text()) for p in glob.glob(f"{landing}/*.json")]
         assert {d["k"] for d in landed} == set(range(10))
     finally:
         client.close()

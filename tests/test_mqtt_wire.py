@@ -4,10 +4,10 @@ PUBACK echo, payload escaping, landing batch flush."""
 from __future__ import annotations
 
 import glob
+import pathlib
 import socket
 import struct
 import tempfile
-import time
 
 import pytest
 
@@ -28,19 +28,14 @@ def test_varint_encoding_boundaries():
     assert _encode_varint(16384) == b"\x80\x80\x01"
 
 
-def _wait_landed(landing, n, timeout=10):
-    deadline = time.monotonic() + timeout
-    while time.monotonic() < deadline:
-        lines = [
-            ln
-            for p in glob.glob(f"{landing}/*")
-            for ln in open(p, "rb").read().split(b"\n")
-            if ln
-        ]
-        if len(lines) >= n:
-            return lines
-        time.sleep(0.05)
-    return lines
+def _wait_landed(broker, n):
+    broker.landing.wait(n, timeout=10)
+    return [
+        ln
+        for p in glob.glob(f"{broker.landing_dir}/*")
+        for ln in pathlib.Path(p).read_bytes().split(b"\n")
+        if ln
+    ]
 
 
 def test_publish_qos1_roundtrip_and_escaping():
@@ -53,7 +48,7 @@ def test_publish_qos1_roundtrip_and_escaping():
         # a >127-byte payload exercises the multi-byte remaining length
         c.publish_qos1("big/one", b"x" * 300)
         c.close()  # DISCONNECT flushes the landing batch
-        lines = _wait_landed(landing, 3)
+        lines = _wait_landed(broker, 3)
         by_topic = {ln.split(b"\t", 1)[0]: ln.split(b"\t", 1)[1] for ln in lines}
         assert by_topic[b"a/b"] == b"plain"
         assert by_topic[b"a/c"] == b"tab\\there\\nand newline \\\\ backslash"
@@ -104,7 +99,7 @@ def test_publish_mqtt_partitioned(spark):
         ).repartition(4)
         out = publish_mqtt(df, "127.0.0.1", broker.port, "topic", "payload")
         assert out.filter("published").count() == 200
-        lines = _wait_landed(landing, 200)
+        lines = _wait_landed(broker, 200)
         assert len(lines) == 200
         payloads = {ln.split(b"\t", 1)[1] for ln in lines}
         assert payloads == {f"m{i}".encode() for i in range(200)}

@@ -5,6 +5,7 @@ back-pressure monitor."""
 from __future__ import annotations
 
 import os
+import pathlib
 import tempfile
 import time
 
@@ -128,12 +129,7 @@ def test_listen_tcp_landing_zone_e2e(spark, tmp_path):
         for chunk in (lines[:2], lines[2:]):  # two connections → two files
             with socket.create_connection(("127.0.0.1", listener.port)) as s:
                 s.sendall(("\n".join(chunk) + "\n").encode())
-        import time
-
-        for _ in range(50):  # wait for both landed files
-            if len([f for f in os.listdir(landing) if not f.startswith(".")]) >= 2:
-                break
-            time.sleep(0.1)
+        listener.landing.wait(4)
         sdf = (
             spark.readStream.format("text")
             .schema("value string")
@@ -163,21 +159,17 @@ def test_udp_listener_lands_datagrams_e2e(spark, tmp_path):
     batch_size=3 over 7 datagrams → two full batch files + one flushed
     partial, all drained exactly-once by the file source."""
     import socket
-    import time
 
     from apache_nifi_spark.streaming import UdpLandingListener
 
     landing = str(tmp_path / "udp_landing")
     listener = UdpLandingListener(landing, batch_size=3)
     try:
-        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         msgs = [f"dgram-{i}|value={i * 10}" for i in range(7)]
-        for m in msgs:
-            sock.sendto(m.encode(), ("127.0.0.1", listener.port))
-        for _ in range(50):  # two full batches land async
-            if len([f for f in os.listdir(landing) if not f.startswith(".")]) >= 2:
-                break
-            time.sleep(0.1)
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
+            for m in msgs:
+                sock.sendto(m.encode(), ("127.0.0.1", listener.port))
+        listener.landing.wait(6)  # two full batches land async
     finally:
         listener.stop()  # flushes the partial third batch
     files = [f for f in os.listdir(landing) if not f.startswith(".")]
@@ -202,7 +194,6 @@ def test_put_tcp_udp_socket_delivery(spark, tmp_path):
     byte-identical; a dead endpoint yields sent=false rows, not task
     death; UDP delivers one datagram per record."""
     import glob
-    import time
 
     from apache_nifi_spark.sinks import put_tcp, put_udp
     from apache_nifi_spark.streaming.listen import TcpLandingListener, UdpLandingListener
@@ -211,32 +202,25 @@ def test_put_tcp_udp_socket_delivery(spark, tmp_path):
         [(i, f"rec-{i}") for i in range(20)], "id long, content string"
     ).repartition(3)
 
-    tcp_dir = str(tmp_path / "tcp")
-    tl = TcpLandingListener(tcp_dir)
-    out = put_tcp(df, "127.0.0.1", tl.port, "content").collect()
-    assert all(r["sent"] for r in out)
-
     def landed_lines(d):
         return sorted(
             ln.decode()
             for p in glob.glob(f"{d}/*")
-            for ln in open(p, "rb").read().splitlines()
+            for ln in pathlib.Path(p).read_bytes().splitlines()
             if ln.strip()
         )
 
-    deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(landed_lines(tcp_dir)) < 20:
-        time.sleep(0.05)
-    assert landed_lines(tcp_dir) == sorted(f"rec-{i}" for i in range(20))
-
-    udp_dir = str(tmp_path / "udp")
-    ul = UdpLandingListener(udp_dir, batch_size=1)
-    out = put_udp(df, "127.0.0.1", ul.port, "content").collect()
-    assert all(r["sent"] for r in out)
-    deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(landed_lines(udp_dir)) < 20:
-        time.sleep(0.05)
-    assert landed_lines(udp_dir) == sorted(f"rec-{i}" for i in range(20))
+    for listener, put in (
+        (TcpLandingListener(str(tmp_path / "tcp")), put_tcp),
+        (UdpLandingListener(str(tmp_path / "udp"), batch_size=1), put_udp),
+    ):
+        try:
+            out = put(df, "127.0.0.1", listener.port, "content").collect()
+            assert all(r["sent"] for r in out)
+            listener.landing.wait(20, timeout=10)
+        finally:
+            listener.stop()
+        assert landed_lines(listener.landing_dir) == sorted(f"rec-{i}" for i in range(20))
 
     # dead endpoint: routed, not raised
     dead = put_tcp(df, "127.0.0.1", 1, "content").collect()  # port 1: refused
@@ -303,7 +287,6 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
     framing cannot do."""
     import glob
     import tempfile
-    import time
 
     from apache_nifi_spark.sinks import put_tcp_octet_counted
     from apache_nifi_spark.streaming.listen import TcpLandingListener
@@ -316,15 +299,8 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
         ).coalesce(1)
         sent = put_tcp_octet_counted(df, "127.0.0.1", lst.port, "content")
         assert sent.filter("sent").count() == 3
-        deadline = time.monotonic() + 10
-        body = b""
-        while time.monotonic() < deadline:
-            files = glob.glob(f"{landing}/*")
-            if files:
-                body = b"".join(open(p, "rb").read() for p in sorted(files))
-                if body.count(b"\n") >= 2:
-                    break
-            time.sleep(0.05)
+        lst.landing.wait(2, timeout=10)
+        body = b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
         lines = [ln for ln in body.split(b"\n") if ln != b""]
         assert lines == [b"one line", b"two\\nlines"]
     finally:
@@ -333,22 +309,13 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
 
 def test_octet_truncated_frame_and_unescape_roundtrip():
     """A final frame whose declared length runs past the received bytes
-    must be dropped, not landed partially; and the landing escape must
-    be injective (round-trips payloads with backslashes AND newlines)."""
+    must be dropped, not landed partially (the escape's round trip is in
+    tests/test_landing.py)."""
     import glob
     import socket
     import tempfile
-    import time
 
-    from apache_nifi_spark.streaming.listen import (
-        TcpLandingListener,
-        unescape_landed,
-    )
-
-    # unescape inverts the escape for adversarial payloads
-    for payload in ["a\\nb", "a\nb", "a\\\nb", "\\\\", "\\n\n\\"]:
-        escaped = payload.replace("\\", "\\\\").replace("\n", "\\n")
-        assert unescape_landed(escaped) == payload, payload
+    from apache_nifi_spark.streaming.listen import TcpLandingListener
 
     landing = tempfile.mkdtemp(prefix="octet_trunc_")
     lst = TcpLandingListener(landing, framing="octet")
@@ -356,14 +323,8 @@ def test_octet_truncated_frame_and_unescape_roundtrip():
         with socket.create_connection(("127.0.0.1", lst.port)) as s:
             # one good frame, then a frame declaring 50 bytes but sending 4
             s.sendall(b"4 good" + b"50 oops")
-        deadline = time.monotonic() + 10
-        body = b""
-        while time.monotonic() < deadline:
-            files = glob.glob(f"{landing}/*")
-            if files:
-                body = b"".join(open(p, "rb").read() for p in sorted(files))
-                break
-            time.sleep(0.05)
+        lst.landing.wait(1, timeout=10)
+        body = b"".join(pathlib.Path(p).read_bytes() for p in glob.glob(f"{landing}/*"))
         assert body == b"good\n"  # partial 'oops' frame never landed
     finally:
         lst.stop()
@@ -419,7 +380,6 @@ def test_smtp_dot_transparency_and_envelope(spark):
     import glob
     import smtplib
     import tempfile
-    import time
 
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer
 
@@ -435,12 +395,9 @@ def test_smtp_dot_transparency_and_envelope(spark):
         c = smtplib.SMTP("127.0.0.1", srv.port, timeout=5)
         c.sendmail("env-from@x", ["env-to@y"], msg)
         c.quit()
-        deadline = time.monotonic() + 5
-        files = []
-        while time.monotonic() < deadline and not files:
-            files = glob.glob(f"{landing}/*.eml")
-            time.sleep(0.02)
-        body = open(files[0], "rb").read()
+        srv.landing.wait(1, timeout=5)
+        (path,) = glob.glob(f"{landing}/*.eml")
+        body = pathlib.Path(path).read_bytes()
         assert body.startswith(b"X-Envelope-From: env-from@x\r\n"
                                b"X-Envelope-To: env-to@y\r\n")
         assert b"\r\n.starts with a dot\r\n" in body
@@ -455,7 +412,6 @@ def test_relp_frame_acks_and_newline_escape(spark):
     newlines survive escaped, and the partial batch flushes on close."""
     import glob
     import tempfile
-    import time
 
     from pyspark.sql import functions as F
 
@@ -469,15 +425,8 @@ def test_relp_frame_acks_and_newline_escape(spark):
         ).coalesce(1)
         out = put_relp(df, "127.0.0.1", lst.port, "content")
         assert out.filter("sent").count() == 2  # sent == ACKed, not written
-        deadline = time.monotonic() + 10
-        body = b""
-        while time.monotonic() < deadline:
-            files = glob.glob(f"{landing}/*")
-            if files:
-                body = b"".join(open(p, "rb").read() for p in sorted(files))
-                if body.count(b"\n") >= 2:
-                    break
-            time.sleep(0.05)
+        lst.landing.wait(2, timeout=10)
+        body = b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
         lines = [ln for ln in body.split(b"\n") if ln]
         assert lines == [b"plain msg", b"multi\\nline msg"]
     finally:
@@ -524,7 +473,7 @@ def test_mini_elastic_bulk_protocol():
         assert hits["total"]["value"] == 2
         assert {h["_source"]["k"] for h in hits["hits"]} == {1, 2}
 
-        landed = [json.load(open(p)) for p in glob.glob(f"{landing}/*.json")]
+        landed = [json.loads(pathlib.Path(p).read_text()) for p in glob.glob(f"{landing}/*.json")]
         assert {(d["_index"], d["k"]) for d in landed} == {
             ("t", 1), ("t", 2), ("u", 4)
         }

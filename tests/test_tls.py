@@ -5,6 +5,7 @@ kustomization.yaml:21-26)."""
 from __future__ import annotations
 
 import glob
+import pathlib
 import socket
 import tempfile
 import time
@@ -26,14 +27,8 @@ def certs():
     return generate_self_signed()
 
 
-def _wait_for(pred, timeout=10.0):
-    deadline = time.monotonic() + timeout
-    while time.monotonic() < deadline:
-        got = pred()
-        if got:
-            return got
-        time.sleep(0.05)
-    return pred()
+def _landed(landing: str) -> bytes:
+    return b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
 
 
 def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
@@ -51,26 +46,17 @@ def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
         sent = put_tcp(df, "127.0.0.1", lst.port, "content", tls_cert=cert)
         assert sent.filter("sent").count() == 3
 
-        body = _wait_for(
-            lambda: b"".join(
-                open(p, "rb").read() for p in sorted(glob.glob(f"{landing}/*"))
-            )
-        )
-        assert sorted(body.split()) == [b"alpha", b"beta", b"gamma"]
+        lst.landing.wait(3, timeout=10)
+        assert sorted(_landed(landing).split()) == [b"alpha", b"beta", b"gamma"]
 
         # a plaintext client must fail the handshake and land nothing
-        n_before = len(glob.glob(f"{landing}/*"))
         try:
             with socket.create_connection(("127.0.0.1", lst.port), timeout=5) as s:
                 s.sendall(b"intruder\n")
         except OSError:
             pass
         time.sleep(0.3)
-        leaked = b"".join(
-            open(p, "rb").read()
-            for p in sorted(glob.glob(f"{landing}/*"))[n_before:]
-        )
-        assert b"intruder" not in leaked
+        assert b"intruder" not in _landed(landing)
     finally:
         lst.stop()
 
@@ -102,16 +88,8 @@ def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
         )
         s.sendall(payload)
         s.close()
-        body = _wait_for(
-            lambda: (
-                b"".join(
-                    open(p, "rb").read()
-                    for p in sorted(glob.glob(f"{landing}/*"))
-                )
-                or None
-            )
-        )
-        got = [ln for ln in body.split(b"\n") if ln]
+        lst.landing.wait(1, timeout=10)
+        got = [ln for ln in _landed(landing).split(b"\n") if ln]
         assert len(got) == 20000, f"landed only {len(got)} of 20000 lines"
         assert got[0] == b"line-000000" and got[-1] == b"line-019999"
     finally:
@@ -132,12 +110,7 @@ def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs):
         req = urllib.request.Request(url, data=b'{"k": 1}', method="POST")
         with urllib.request.urlopen(req, context=client_context(cert), timeout=10) as r:
             assert r.status == 200
-        body = _wait_for(
-            lambda: b"".join(
-                open(p, "rb").read() for p in glob.glob(f"{landing}/*")
-            )
-        )
-        assert body == b'{"k": 1}'
+        assert _landed(landing) == b'{"k": 1}'
 
         # a client with an EMPTY truststore must refuse the server cert
         import ssl

@@ -5,6 +5,8 @@ registry roundtrip can't isolate.
 
 from __future__ import annotations
 
+import glob
+import pathlib
 import socket
 import struct
 import tempfile
@@ -44,16 +46,10 @@ def _connect(server):
     return s
 
 
-def _landed(landing, n, deadline_s=10):
-    deadline = time.monotonic() + deadline_s
-    while time.monotonic() < deadline:
-        import glob
-
-        msgs = sorted(glob.glob(f"{landing}/*"))
-        if len(msgs) >= n:
-            return [open(p, "rb").read().rstrip(b"\n") for p in msgs]
-        time.sleep(0.02)
-    raise TimeoutError(f"landing has {len(msgs)} of {n}")
+def _landed(server, n):
+    server.landing.wait(n, timeout=10)
+    msgs = sorted(glob.glob(f"{server.landing_dir}/*"))
+    return [pathlib.Path(p).read_bytes().rstrip(b"\n") for p in msgs]
 
 
 def test_frame_lengths_fragmentation_and_ping():
@@ -73,7 +69,7 @@ def test_frame_lengths_fragmentation_and_ping():
         s.sendall(encode_frame(b"hb", opcode=0x9, mask=b"dddd"))
         fin, opcode, _, payload = decode_frame(s)
         assert (fin, opcode, payload) == (True, 0xA, b"hb")
-        msgs = _landed(landing, 4)
+        msgs = _landed(server, 4)
         assert msgs[0] == b"tiny"
         assert msgs[1] == b"x" * 300
         assert msgs[2] == b"y" * 70000
@@ -96,8 +92,7 @@ def test_unmasked_client_frame_closes_1002():
         fin, opcode, _, payload = decode_frame(s)
         assert opcode == 0x8
         assert struct.unpack(">H", payload[:2])[0] == 1002
-        import glob
-
+        s.close()
         time.sleep(0.1)
         assert glob.glob(f"{landing}/*") == []
     finally:
