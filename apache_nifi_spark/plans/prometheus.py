@@ -83,7 +83,7 @@ def render_exposition(
     return headers.unionByName(samples)
 
 
-class MetricsEndpoint:
+class MetricsEndpoint(net.Server):
     """The scrape half: ``GET /metrics`` serves the last published
     exposition body with the standard content type."""
 
@@ -108,11 +108,11 @@ class MetricsEndpoint:
                 self.end_headers()
                 self.wfile.write(body)
 
-        self._srv = net.Server(Handler, host, port).start()
+        super().__init__(Handler, host, port)
 
     @property
     def url(self) -> str:
-        host, port = self._srv.address
+        host, port = self.address
         return f"http://{host}:{port}/metrics"
 
     def publish(self, exposition: DataFrame) -> None:
@@ -122,6 +122,3 @@ class MetricsEndpoint:
         body = ("\n".join(r["line"] for r in rows) + "\n").encode()
         with self._lock:
             self._body = body
-
-    def stop(self) -> None:
-        self._srv.stop()

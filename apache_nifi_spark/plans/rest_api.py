@@ -182,7 +182,7 @@ def _jwt_verify(secret: bytes, token: str) -> str:
     return str(claims.get("sub") or "")
 
 
-class NiFiApiServer:
+class NiFiApiServer(net.Server):
     """In-process /nifi-api control plane over the flow compiler."""
 
     def __init__(
@@ -308,7 +308,7 @@ class NiFiApiServer:
             def do_DELETE(self):
                 self._route("DELETE")
 
-        self._server = net.Server(Handler, host, port).start()
+        super().__init__(Handler, host, port)
 
     # ------------------------------------------------------------ control --
 
@@ -331,7 +331,7 @@ class NiFiApiServer:
 
     @property
     def url(self) -> str:
-        host, port = self._server.address
+        host, port = self.address
         return f"http://{host}:{port}"
 
     def outputs(self, group_id: str = "root") -> dict[str, DataFrame]:
@@ -340,9 +340,6 @@ class NiFiApiServer:
             if group_id not in self._outputs:
                 raise KeyError(f"group {group_id!r} is not running")
             return dict(self._outputs[group_id])
-
-    def stop(self) -> None:
-        self._server.stop()
 
     # ---------------------------------------------------------- revisions --
 

@@ -110,14 +110,11 @@ def publish_amqp_wire_q(spark, sf_dir):
         ).alias("payload"),
     )
     landing = tempfile.mkdtemp(prefix="anspark_amqp_")
-    broker = MiniAmqpBroker(landing)
-    try:
+    with MiniAmqpBroker(landing) as broker:
         sent = publish_amqp(msgs, "127.0.0.1", broker.port, "events", "rkey", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
         broker.landing.wait(n_sent)
-    finally:
-        broker.stop()
     back = spark.read.text(landing).select(
         F.split("value", "\t", 3).alias("p")
     ).select(F.col("p")[1].alias("rkey"), F.col("p")[2].alias("payload"))
@@ -169,14 +166,11 @@ def publish_mqtt_wire_q(spark, sf_dir):
         ).alias("payload"),
     )
     landing = tempfile.mkdtemp(prefix="anspark_mqtt_")
-    broker = MiniMqttBroker(landing)
-    try:
+    with MiniMqttBroker(landing) as broker:
         sent = publish_mqtt(msgs, "127.0.0.1", broker.port, "topic", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
         broker.landing.wait(n_sent)
-    finally:
-        broker.stop()
     back = spark.read.text(landing).select(
         F.split("value", "\t", 2).alias("p")
     ).select(
@@ -239,8 +233,7 @@ def put_elasticsearch_live_q(spark, sf_dir):
         F.concat_ws("\n", F.collect_list("bulk")).alias("payload")
     )
     landing = tempfile.mkdtemp(prefix="anspark_es_")
-    srv = MiniElasticServer(landing)
-    try:
+    with MiniElasticServer(landing) as srv:
         sent = post_http(bodies, srv.url + "/_bulk", "payload")
         assert sent.filter(F.col("status") != 200).count() == 0
         n_docs = o.count()
@@ -248,8 +241,6 @@ def put_elasticsearch_live_q(spark, sf_dir):
             srv.url + "/orders/_count", timeout=10
         ) as r:
             assert _json.load(r)["count"] == n_docs
-    finally:
-        srv.stop()
     back = spark.read.schema(
         "orderkey bigint, status string, totalprice double"
     ).json(landing)
@@ -289,8 +280,7 @@ def put_mongo_wire_q(spark, sf_dir):
         _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 25 == 0)
     ).select("c_custkey", "c_mktsegment")
     landing = tempfile.mkdtemp(prefix="anspark_mongo_")
-    srv = MiniMongoServer(landing)
-    try:
+    with MiniMongoServer(landing) as srv:
         sent = put_mongo_records(c, "127.0.0.1", srv.port, "customers")
         assert sent.filter(~F.col("inserted")).count() == 0
         probe = MongoWireClient("127.0.0.1", srv.port)  # control-plane
@@ -300,8 +290,6 @@ def put_mongo_wire_q(spark, sf_dir):
             assert len(smoke) == 3 and all("c_custkey" in d for d in smoke)
         finally:
             probe.close()
-    finally:
-        srv.stop()
     back = spark.read.schema("c_custkey bigint, c_mktsegment string").json(landing)
     return back.groupBy(F.col("c_mktsegment").alias("seg")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("c_custkey").alias("sum_key")
@@ -817,8 +805,7 @@ def publish_jms_wire_q(spark, sf_dir):
     from apache_nifi_spark.streaming.stomp import MiniStompBroker, publish_stomp
 
     landing = tempfile.mkdtemp(prefix="anspark_stomp_land_")
-    broker = MiniStompBroker(landing)
-    try:
+    with MiniStompBroker(landing) as broker:
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
         rendered = ev.select(
             F.lit("/queue/events").alias("dest"),
@@ -849,8 +836,6 @@ def publish_jms_wire_q(spark, sf_dir):
             " AND NOT (user_id = 7)"
         )
         return typed.filter(jms_selector(selector))
-    finally:
-        broker.stop()
 
 
 @register(

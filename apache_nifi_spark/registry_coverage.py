@@ -879,9 +879,10 @@ def stream_site_to_site_q(spark, sf_dir):
     certdir = tempfile.mkdtemp(prefix="anspark_s2s_tls_")
     cert, key = generate_self_signed(certdir)
     landing = tempfile.mkdtemp(prefix="anspark_s2s_land_")
-    server = SiteToSiteServer(landing, cert, key)
-    api = NiFiApiServer(spark, sf_dir)
-    try:
+    with (
+        SiteToSiteServer(landing, cert, key) as server,
+        NiFiApiServer(spark, sf_dir) as api,
+    ):
         # discovery: the reference's first S2S step is this REST call
         api.attach_site_to_site("127.0.0.1", server.port, cert)
         u = urllib.parse.urlsplit(api.url)
@@ -944,9 +945,6 @@ def stream_site_to_site_q(spark, sf_dir):
             _dsum(F.col("value"), "total_value"),
         )
         return run_to_memory(agg, output_mode="complete")
-    finally:
-        api.stop()
-        server.stop()
 
 
 @register(
@@ -978,9 +976,10 @@ def flow_remote_s2s_egress_q(spark, sf_dir):
     certdir = tempfile.mkdtemp(prefix="anspark_rpg_tls_")
     cert, key = generate_self_signed(certdir)
     landing = tempfile.mkdtemp(prefix="anspark_rpg_land_")
-    server = SiteToSiteServer(landing, cert, key)
-    api = NiFiApiServer(spark, sf_dir)
-    try:
+    with (
+        SiteToSiteServer(landing, cert, key) as server,
+        NiFiApiServer(spark, sf_dir) as api,
+    ):
         api.attach_site_to_site("127.0.0.1", server.port, cert)
         flow = {
             "flowContents": {
@@ -1011,9 +1010,6 @@ def flow_remote_s2s_egress_q(spark, sf_dir):
         sent = outs["events-in.success"].localCheckpoint()  # executes the push
         assert outs["events-in.failure"].count() == 0
         assert sent.count() > 0
-    finally:
-        api.stop()
-        server.stop()
     landed = spark.read.schema(
         "attributes map<string,string>, content string"
     ).json(landing)
@@ -1113,8 +1109,7 @@ def publish_consume_kafka_wire_q(spark, sf_dir):
         publish_kafka_wire,
     )
 
-    broker = MiniKafkaBroker(num_partitions=4)
-    try:
+    with MiniKafkaBroker(num_partitions=4) as broker:
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 15 == 0)
         rendered = ev.select(
             F.col("user_id").cast("string").alias("k"),
@@ -1148,8 +1143,6 @@ def publish_consume_kafka_wire_q(spark, sf_dir):
         # reads the wire, not files
         out = agg.localCheckpoint()
         return out
-    finally:
-        broker.stop()
 
 
 @register(
@@ -1181,8 +1174,7 @@ def publish_consume_kafka_v2_q(spark, sf_dir):
         publish_kafka_wire,
     )
 
-    broker = MiniKafkaBroker(num_partitions=4)
-    try:
+    with MiniKafkaBroker(num_partitions=4) as broker:
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 21 == 0)
         rendered = ev.select(
             F.col("user_id").cast("string").alias("k"),
@@ -1214,8 +1206,6 @@ def publish_consume_kafka_v2_q(spark, sf_dir):
         # materialize before the broker goes away: the consumer plan
         # reads the wire, not files
         return agg.localCheckpoint()
-    finally:
-        broker.stop()
 
 
 @register(
@@ -1247,8 +1237,7 @@ def confluent_avro_roundtrip_q(spark, sf_dir):
         encode_confluent,
     )
 
-    reg = MiniSchemaRegistry()
-    try:
+    with MiniSchemaRegistry() as reg:
         ev = _t(spark, sf_dir, "events").filter(
             F.col("event_id") % 33 == 0
         ).select("event_id", "event_type", "value")
@@ -1261,8 +1250,6 @@ def confluent_avro_roundtrip_q(spark, sf_dir):
         # materialize before the registry goes away: the decode plan
         # fetches schemas over live HTTP
         return agg.localCheckpoint()
-    finally:
-        reg.stop()
 
 
 @register(
@@ -3457,7 +3444,6 @@ def put_ftp_roundtrip_q(spark, sf_dir):
     )
 
     root = tempfile.mkdtemp(prefix="anspark_putftp_")
-    srv = MiniFtpServer(root)
     nation = _t(spark, sf_dir, "nation").select(
         F.concat(F.lit("n_"), F.col("n_nationkey").cast("string"), F.lit(".csv"))
         .alias("filename"),
@@ -3465,13 +3451,15 @@ def put_ftp_roundtrip_q(spark, sf_dir):
         .cast("binary")
         .alias("content"),
     )
-    n = put_ftp(nation, "127.0.0.1", srv.port).filter("stored").count()
-    assert n == 25
-    listing = list_ftp(spark, "127.0.0.1", srv.port, "/")
-    back = fetch_ftp(listing, "127.0.0.1", srv.port, "/")
-    return back.select(
-        "filename", F.col("content").cast("string").alias("line")
-    )
+    with MiniFtpServer(root) as srv:
+        n = put_ftp(nation, "127.0.0.1", srv.port).filter("stored").count()
+        assert n == 25
+        listing = list_ftp(spark, "127.0.0.1", srv.port, "/")
+        back = fetch_ftp(listing, "127.0.0.1", srv.port, "/")
+        # the fetch reads the server: materialize it before the stop
+        return back.select(
+            "filename", F.col("content").cast("string").alias("line")
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -3607,8 +3595,7 @@ def put_sftp_roundtrip_q(spark, sf_dir):
     )
 
     root = tempfile.mkdtemp(prefix="anspark_putsftp_")
-    srv = MiniSftpServer(root)
-    try:
+    with MiniSftpServer(root) as srv:
         nation = _t(spark, sf_dir, "nation").select(
             F.concat(F.lit("n_"), F.col("n_nationkey").cast("string"), F.lit(".csv"))
             .alias("filename"),
@@ -3627,8 +3614,6 @@ def put_sftp_roundtrip_q(spark, sf_dir):
         return back.select(
             "filename", F.col("content").cast("string").alias("line")
         ).localCheckpoint()
-    finally:
-        srv.stop()
 
 
 @register(

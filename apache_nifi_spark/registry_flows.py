@@ -180,8 +180,7 @@ def rest_flow_author_q(spark, sf_dir):
     cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_author")
     if cache_key in _MEGA_CACHE:
         return _MEGA_CACHE[cache_key]
-    server = NiFiApiServer(spark, sf_dir)
-    try:
+    with NiFiApiServer(spark, sf_dir) as server:
         with open(_MEGA_FLOW_PATH) as f:
             contents = _json.load(f)["flowContents"]
         gid = author_flow_via_api(server.url, contents)
@@ -205,8 +204,6 @@ def rest_flow_author_q(spark, sf_dir):
         # never touches the control plane
         _MEGA_CACHE[cache_key] = server.outputs(gid)["OrdersAgg.byStatus"]
         return _MEGA_CACHE[cache_key]
-    finally:
-        server.stop()
 
 
 @register(
@@ -260,8 +257,7 @@ def rest_ports_service_flow_q(spark, sf_dir):
              "selectedRelationships": ["matched"]},
         ],
     }
-    server = NiFiApiServer(spark, sf_dir)
-    try:
+    with NiFiApiServer(spark, sf_dir) as server:
         gid = author_flow_via_api(server.url, contents)
         start_group_via_api(server.url, gid)
         out = server.outputs(gid)["enriched.success"].select(
@@ -269,8 +265,6 @@ def rest_ports_service_flow_q(spark, sf_dir):
         )
         _MEGA_CACHE[cache_key] = out
         return out
-    finally:
-        server.stop()
 
 
 @register(
@@ -304,10 +298,7 @@ def rest_secured_token_q(spark, sf_dir):
     cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_secured")
     if cache_key in _MEGA_CACHE:
         return _MEGA_CACHE[cache_key]
-    server = NiFiApiServer(
-        spark, sf_dir, credentials=("admin", "admin123456!")
-    )
-    try:
+    with NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!")) as server:
         u = urllib.parse.urlsplit(server.url)
         conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
         try:
@@ -373,8 +364,6 @@ def rest_secured_token_q(spark, sf_dir):
         assert "agg.by_priority" in outs, outs
         _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_priority"]
         return _MEGA_CACHE[cache_key]
-    finally:
-        server.stop()
 
 
 @register(
@@ -403,8 +392,7 @@ def rest_parameter_context_q(spark, sf_dir):
     cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_param_ctx")
     if cache_key in _MEGA_CACHE:
         return _MEGA_CACHE[cache_key]
-    server = NiFiApiServer(spark, sf_dir)
-    try:
+    with NiFiApiServer(spark, sf_dir) as server:
         u = urllib.parse.urlsplit(server.url)
         conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
 
@@ -462,8 +450,6 @@ def rest_parameter_context_q(spark, sf_dir):
             conn.close()
         _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_segment"]
         return _MEGA_CACHE[cache_key]
-    finally:
-        server.stop()
 
 
 @register(

@@ -3128,9 +3128,9 @@ def put_syslog_udp_q(spark, sf_dir):
         ).alias("content")
     )
     landing = tempfile.mkdtemp(prefix="anspark_putsyslog_")
-    listener = UdpLandingListener(landing, batch_size=1)
-    n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
-    listener.landing.wait(n_sent)
+    with UdpLandingListener(landing, batch_size=1) as listener:
+        n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
+        listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3173,14 +3173,14 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
         ).alias("content")
     )
     landing = tempfile.mkdtemp(prefix="anspark_syslogtcp_")
-    listener = TcpLandingListener(landing, framing="octet")
-    n_sent = (
-        put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    listener.landing.wait(n_sent)
+    with TcpLandingListener(landing, framing="octet") as listener:
+        n_sent = (
+            put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
+            .filter("sent")
+            .count()
+        )
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3222,14 +3222,14 @@ def put_relp_roundtrip_q(spark, sf_dir):
         ).alias("content")
     )
     landing = tempfile.mkdtemp(prefix="anspark_relp_")
-    listener = RelpLandingListener(landing)
-    n_sent = (
-        put_relp(lines, "127.0.0.1", listener.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    listener.landing.wait(n_sent)
+    with RelpLandingListener(landing) as listener:
+        n_sent = (
+            put_relp(lines, "127.0.0.1", listener.port, "content")
+            .filter("sent")
+            .count()
+        )
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3406,14 +3406,14 @@ def put_tcp_roundtrip_q(spark, sf_dir):
         ).alias("content")
     )
     landing = tempfile.mkdtemp(prefix="anspark_puttcp_")
-    listener = TcpLandingListener(landing)
-    sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
-    n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
-    assert n_sent == ev.count()
-    # sendall returning doesn't mean the handler thread has landed the
-    # file yet — wait until every line is durable (the at-least-once
-    # handoff a real landing tier gives the drain).
-    listener.landing.wait(n_sent)
+    with TcpLandingListener(landing) as listener:
+        sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
+        n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
+        assert n_sent == ev.count()
+        # sendall returning doesn't mean the handler thread has landed the
+        # file yet — wait until every line is durable (the at-least-once
+        # handoff a real landing tier gives the drain).
+        listener.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3447,11 +3447,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
 
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
-    from apache_nifi_spark.streaming.tls import (
-        generate_self_signed,
-        server_context,
-        wrap_listener,
-    )
+    from apache_nifi_spark.streaming.tls import generate_self_signed, server_context
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 44 == 0)
     lines = ev.select(
@@ -3464,12 +3460,11 @@ def put_tls_roundtrip_q(spark, sf_dir):
     )
     cert, key = generate_self_signed()
     landing = tempfile.mkdtemp(prefix="anspark_puttls_")
-    listener = TcpLandingListener(landing)
-    wrap_listener(listener, server_context(cert, key))
-    sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
-    n_sent = sent.filter("sent").count()
-    assert n_sent == ev.count()
-    listener.landing.wait(n_sent)
+    with TcpLandingListener(landing, tls=server_context(cert, key)) as listener:
+        sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
+        n_sent = sent.filter("sent").count()
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3574,27 +3569,7 @@ def generate_record_q(spark, sf_dir):
     )
 
 
-_SMTP_SHARED = None
 _SMTP_MSG_COUNT: dict[str, int] = {}
-
-
-def _shared_smtp(landing: str):
-    """Session-shared MiniSmtpServer, retargeted to a fresh landing dir
-    per run (round-14 verdict item 4): constructing the server is
-    cheap, but the pre-r15 query also LEAKED its accept thread + bound
-    socket every invocation (srv.stop() was never called).  One
-    listener per process, landing_dir swapped between runs (which also
-    restarts its record count) — safe because deliveries are
-    synchronous (put_smtp counts before the query returns), so no write
-    is in flight across a retarget."""
-    global _SMTP_SHARED
-    from apache_nifi_spark.streaming.smtp import MiniSmtpServer
-
-    if _SMTP_SHARED is None:
-        _SMTP_SHARED = MiniSmtpServer(landing)
-    else:
-        _SMTP_SHARED.landing_dir = landing
-    return _SMTP_SHARED
 
 
 @register(
@@ -3625,7 +3600,7 @@ def listen_smtp_q(spark, sf_dir):
 
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.sources.email_codec import parse_email_headers
-    from apache_nifi_spark.streaming.smtp import put_smtp
+    from apache_nifi_spark.streaming.smtp import MiniSmtpServer, put_smtp
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 110 == 0)
     to = F.concat(
@@ -3665,10 +3640,10 @@ def listen_smtp_q(spark, sf_dir):
         ).cast("binary").alias("message"),
     ).repartition(pool, "to_addr")
     landing = tempfile.mkdtemp(prefix="anspark_smtp_")
-    srv = _shared_smtp(landing)
-    n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
-    assert n == n_msgs
-    srv.landing.wait(n)
+    with MiniSmtpServer(landing) as srv:
+        n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
+        assert n == n_msgs
+        srv.landing.wait(n)
     from apache_nifi_spark.sources import read_binary_files
 
     landed = (
@@ -3713,7 +3688,6 @@ def consume_imap_q(spark, sf_dir):
         list_imap_ids,
     )
 
-    srv = MiniImapServer()
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 90 == 0)
     to = F.concat(
         F.lit("customer"), F.col("o_custkey").cast("string"), F.lit("@example.com")
@@ -3733,11 +3707,13 @@ def consume_imap_q(spark, sf_dir):
             "noreply@engine.local", to, subject, F.col("o_orderdate"), body
         ).cast("binary").alias("message")
     )
-    n = append_imap(rendered, "127.0.0.1", srv.port).filter("delivered").count()
-    assert n == o.count()
-    ids = list_imap_ids(spark, "127.0.0.1", srv.port)
-    fetched = consume_imap(ids, "127.0.0.1", srv.port)
-    return parse_email_headers(fetched, "message")
+    with MiniImapServer() as srv:
+        n = append_imap(rendered, "127.0.0.1", srv.port).filter("delivered").count()
+        assert n == o.count()
+        ids = list_imap_ids(spark, "127.0.0.1", srv.port)
+        fetched = consume_imap(ids, "127.0.0.1", srv.port)
+        # the fetch reads the server: materialize it before the stop
+        return parse_email_headers(fetched, "message").localCheckpoint(eager=True)
 
 
 @register(
@@ -3769,8 +3745,6 @@ def consume_pop3_q(spark, sf_dir):
         consume_pop3,
     )
 
-    imap_srv = MiniImapServer()
-    pop_srv = MiniPop3Server(messages=imap_srv)
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 130 == 0)
     to = F.concat(
         F.lit("customer"), F.col("o_custkey").cast("string"), F.lit("@example.com")
@@ -3790,13 +3764,15 @@ def consume_pop3_q(spark, sf_dir):
             "noreply@engine.local", to, subject, F.col("o_orderdate"), body
         ).cast("binary").alias("message")
     )
-    n = append_imap(rendered, "127.0.0.1", imap_srv.port).filter("delivered").count()
-    assert n == o.count()
-    ids = spark.createDataFrame(
-        [(i + 1,) for i in range(imap_srv.message_count())], "msg_id int"
-    ).repartition(4)
-    fetched = consume_pop3(ids, "127.0.0.1", pop_srv.port)
-    return parse_email_headers(fetched, "message")
+    with MiniImapServer() as imap_srv, MiniPop3Server(messages=imap_srv) as pop_srv:
+        n = append_imap(rendered, "127.0.0.1", imap_srv.port).filter("delivered").count()
+        assert n == o.count()
+        ids = spark.createDataFrame(
+            [(i + 1,) for i in range(imap_srv.message_count())], "msg_id int"
+        ).repartition(4)
+        fetched = consume_pop3(ids, "127.0.0.1", pop_srv.port)
+        # the fetch reads the server: materialize it before the stop
+        return parse_email_headers(fetched, "message").localCheckpoint(eager=True)
 
 
 @register(
@@ -4127,19 +4103,22 @@ def map_cache_put_fetch_q(spark, sf_dir):
         put_map_cache,
     )
 
-    server = MapCacheServer()
     nation = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("string").alias("k"), F.col("n_name").alias("v")
     )
-    n_put = put_map_cache(nation, "127.0.0.1", server.port, "k", "v").filter(
-        "cached"
-    ).count()
-    assert n_put == 25
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 7 == 0).select(
         "c_custkey", F.col("c_nationkey").cast("string").alias("nk"), "c_nationkey"
     )
-    fetched = fetch_map_cache(cust, "127.0.0.1", server.port, "nk")
-    return fetched.select("c_custkey", "c_nationkey", "cache_value")
+    with MapCacheServer() as server:
+        n_put = put_map_cache(nation, "127.0.0.1", server.port, "k", "v").filter(
+            "cached"
+        ).count()
+        assert n_put == 25
+        fetched = fetch_map_cache(cust, "127.0.0.1", server.port, "nk")
+        # the fetch reads the server: materialize it before the stop
+        return fetched.select("c_custkey", "c_nationkey", "cache_value").localCheckpoint(
+            eager=True
+        )
 
 
 @register(
@@ -4165,33 +4144,24 @@ def redis_cache_put_fetch_q(spark, sf_dir):
         put_redis_cache,
     )
 
-    server = MiniRedisServer()
-    try:
-        nation = _t(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").cast("string").alias("k"),
-            F.col("n_name").alias("v"),
-        )
+    nation = _t(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").cast("string").alias("k"),
+        F.col("n_name").alias("v"),
+    )
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 9 == 0).select(
+        "c_custkey", F.col("c_nationkey").cast("string").alias("nk"), "c_nationkey"
+    )
+    with MiniRedisServer() as server:
         n_put = put_redis_cache(
             nation, "127.0.0.1", server.port, "k", "v"
         ).filter("cached").count()
         assert n_put == 25
-        cust = _t(spark, sf_dir, "customer").filter(
-            F.col("c_custkey") % 9 == 0
-        ).select(
-            "c_custkey", F.col("c_nationkey").cast("string").alias("nk"),
-            "c_nationkey",
-        )
         fetched = fetch_redis_cache(cust, "127.0.0.1", server.port, "nk")
         # Materialize the wire hop NOW so the returned frame no longer
-        # depends on the server, then shut it down — the listener socket
-        # and accept thread must not outlive the query (round-10 advice:
-        # every invocation leaked one for the process lifetime).
-        out = fetched.select(
+        # depends on the server, which stops when the block ends.
+        return fetched.select(
             "c_custkey", "c_nationkey", "cache_value"
         ).localCheckpoint(eager=True)
-    finally:
-        server.stop()
-    return out
 
 
 @register(
@@ -4229,14 +4199,14 @@ def put_websocket_roundtrip_q(spark, sf_dir):
         ).alias("content")
     )
     landing = tempfile.mkdtemp(prefix="anspark_putws_")
-    server = WebSocketLandingServer(landing)
-    n_sent = (
-        put_websocket(lines, "127.0.0.1", server.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    server.landing.wait(n_sent)
+    with WebSocketLandingServer(landing) as server:
+        n_sent = (
+            put_websocket(lines, "127.0.0.1", server.port, "content")
+            .filter("sent")
+            .count()
+        )
+        assert n_sent == ev.count()
+        server.landing.wait(n_sent)
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -5077,7 +5047,7 @@ def _staged_echo_server() -> int:
             self.end_headers()
             self.wfile.write(body)
 
-    _ECHO_PORT.append(net.Server(Handler).start().port)
+    _ECHO_PORT.append(net.Server(Handler).port)
     return _ECHO_PORT[0]
 
 

@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import socket
 import struct
-import threading
 
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark import net
 
 __all__ = [
     "dns_encode_query",
@@ -87,7 +88,7 @@ def dns_decode_message(buf: bytes):
     return txn_id, flags & 0xF, qname, answers
 
 
-class MiniDnsServer:
+class MiniDnsServer(net.UdpServer):
     """Loopback authoritative server: A records from ``{name: ipv4}``,
     NXDOMAIN (rcode 3) otherwise.  Answers carry a compression pointer
     to the question name (offset 12) — so the client's decoder proves
@@ -96,45 +97,22 @@ class MiniDnsServer:
     def __init__(self, zone: dict[str, str], ttl: int = 300):
         self.zone = {k.lower(): v for k, v in zone.items()}
         self.ttl = ttl
-        self.sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        self.sock.bind(("127.0.0.1", 0))
-        self.port = self.sock.getsockname()[1]
-        self._stop = False
-        self.thread = threading.Thread(target=self._serve, daemon=True)
-        self.thread.start()
+        super().__init__(self._answer)
 
-    def _serve(self):
-        while not self._stop:
-            try:
-                data, addr = self.sock.recvfrom(4096)
-            except OSError:
-                return
-            try:
-                txn_id, _rc, qname, _ = dns_decode_message(data)
-                question = data[12:]  # echo the question section
-                ip = self.zone.get(qname.lower())
-                if ip is None:
-                    hdr = struct.pack(
-                        ">HHHHHH", txn_id, 0x8183, 1, 0, 0, 0
-                    )  # QR+RD+RA, rcode 3
-                    self.sock.sendto(hdr + question, addr)
-                    continue
-                hdr = struct.pack(">HHHHHH", txn_id, 0x8180, 1, 1, 0, 0)
-                rr = (
-                    b"\xc0\x0c"  # compression pointer to the qname
-                    + struct.pack(">HHIH", _QTYPE_A, _QCLASS_IN, self.ttl, 4)
-                    + bytes(int(o) for o in ip.split("."))
-                )
-                self.sock.sendto(hdr + question + rr, addr)
-            except Exception:
-                pass  # malformed datagram: drop, keep serving
-
-    def close(self):
-        self._stop = True
-        try:
-            self.sock.close()
-        except OSError:
-            pass
+    def _answer(self, data: bytes, _addr) -> bytes:
+        txn_id, _rc, qname, _ = dns_decode_message(data)
+        question = data[12:]  # echo the question section
+        ip = self.zone.get(qname.lower())
+        if ip is None:
+            # QR+RD+RA, rcode 3
+            return struct.pack(">HHHHHH", txn_id, 0x8183, 1, 0, 0, 0) + question
+        hdr = struct.pack(">HHHHHH", txn_id, 0x8180, 1, 1, 0, 0)
+        rr = (
+            b"\xc0\x0c"  # compression pointer to the qname
+            + struct.pack(">HHIH", _QTYPE_A, _QCLASS_IN, self.ttl, 4)
+            + bytes(int(o) for o in ip.split("."))
+        )
+        return hdr + question + rr
 
 
 def dns_lookup(

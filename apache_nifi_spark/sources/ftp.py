@@ -49,7 +49,7 @@ class _FtpHandler(socketserver.StreamRequestHandler):
         self.wfile.write(f"{code} {text}\r\n".encode())
 
     def _open_pasv(self) -> socket.socket:
-        lsock = socket.create_server(("127.0.0.1", 0))
+        lsock = net.listen()
         lsock.settimeout(10)
         p = lsock.getsockname()[1]
         self._reply(227, f"Entering Passive Mode (127,0,0,1,{p >> 8},{p & 255})")
@@ -151,7 +151,7 @@ class _FtpHandler(socketserver.StreamRequestHandler):
                 self._reply(550, "outside root")
 
 
-class MiniFtpServer:
+class MiniFtpServer(net.Server):
     """In-process FTP daemon over a root directory (threaded, PASV)."""
 
     def __init__(self, root: str):
@@ -161,14 +161,7 @@ class MiniFtpServer:
         class Handler(_FtpHandler):
             root = self.root
 
-        self._srv = net.Server(Handler).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
-
-    def close(self) -> None:
-        self._srv.stop()
+        super().__init__(Handler)
 
 
 # ----------------------------------------------------------- operators -----

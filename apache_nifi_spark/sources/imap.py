@@ -38,7 +38,7 @@ __all__ = ["MiniImapServer", "append_imap", "list_imap_ids", "consume_imap",
            "MiniPop3Server", "consume_pop3"]
 
 
-class MiniImapServer:
+class MiniImapServer(net.Server):
     """Threaded RFC 3501 subset server with one shared INBOX."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
@@ -46,11 +46,7 @@ class MiniImapServer:
         self.user, self.password = user, password
         self._mailbox: list[bytes] = []
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def message_count(self) -> int:
         with self._lock:
@@ -138,9 +134,6 @@ class MiniImapServer:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 def _connect(host: str, port: int, user: str, password: str):
@@ -239,7 +232,7 @@ def consume_imap(
     return ids.mapInPandas(run, "msg_id int, message binary")
 
 
-class MiniPop3Server:
+class MiniPop3Server(net.Server):
     """ConsumePOP3's counterpart [2.7.2-surface]: the RFC 1939 subset a
     consume cycle needs — USER/PASS, STAT, LIST, RETR with byte-stuffed
     multiline termination, DELE, QUIT — sharing the IMAP server's
@@ -253,11 +246,7 @@ class MiniPop3Server:
         self._store = messages  # share an IMAP server's mailbox if given
         self._local: list[bytes] = []
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def load(self, message: bytes) -> None:
         with self._lock:
@@ -343,9 +332,6 @@ class MiniPop3Server:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 def consume_pop3(

@@ -164,7 +164,7 @@ def _read_op_msg(sock_file) -> tuple[int, dict]:
 # ---------------------------------------------------------------- server ---
 
 
-class MiniMongoServer:
+class MiniMongoServer(net.Server):
     """Threaded OP_MSG server: insert/find/count/ping.  Inserted
     documents land durably (one JSON file each) AND index in memory for
     the wire reads."""
@@ -178,11 +178,7 @@ class MiniMongoServer:
         self.landing = Landing(landing_dir, ".json")
         self._store: dict[str, list[dict]] = {}
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -244,9 +240,6 @@ class MiniMongoServer:
         if kind in ("ping", "hello", "isMaster"):
             return {"ok": 1.0}
         return {"ok": 0.0, "errmsg": f"unsupported command {kind!r}"}
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 # ---------------------------------------------------------------- client ---

@@ -57,7 +57,7 @@ __all__ = [
 _MAGIC = 0
 
 
-class MiniSchemaRegistry:
+class MiniSchemaRegistry(net.Server):
     """In-process schema registry speaking the public REST subset over
     real HTTP — swap the URL for a real Confluent
     deployment; the protocol seam is this module."""
@@ -123,7 +123,7 @@ class MiniSchemaRegistry:
                         return
                 self._json(404, {"error_code": 40401, "message": "not found"})
 
-        self._httpd = net.Server(Handler, host, port).start()
+        super().__init__(Handler, host, port)
 
     def _register(self, subject: str, schema: Any) -> int:
         canon = canonical_form(schema)
@@ -140,11 +140,8 @@ class MiniSchemaRegistry:
 
     @property
     def url(self) -> str:
-        host, port = self._httpd.address
+        host, port = self.address
         return f"http://{host}:{port}"
-
-    def stop(self) -> None:
-        self._httpd.stop()
 
 
 def _http_json(url: str, path: str, payload: Any | None = None) -> Any:

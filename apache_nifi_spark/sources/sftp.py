@@ -254,7 +254,7 @@ class _SftpServerHandler:
             self._status(rid, _FAILURE, str(e))
 
 
-class MiniSftpServer:
+class MiniSftpServer(SshServer):
     """SSH server with an ``sftp`` subsystem rooted at a directory."""
 
     def __init__(
@@ -267,19 +267,11 @@ class MiniSftpServer:
         self.root = os.path.abspath(root)
         os.makedirs(self.root, exist_ok=True)
         self.user, self.password = user, password
-        self.host_seed, self.host_pub = make_host_key(host_key_seed)
-        self._ssh = SshServer(
-            self.host_seed,
+        super().__init__(
+            make_host_key(host_key_seed)[0],
             {user: password},
             {"sftp": lambda send: _SftpServerHandler(self.root, send)},
         )
-
-    @property
-    def port(self) -> int:
-        return self._ssh.port
-
-    def stop(self) -> None:
-        self._ssh.stop()
 
 
 class SftpClient:

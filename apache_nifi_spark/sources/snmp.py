@@ -16,9 +16,10 @@ from __future__ import annotations
 
 import socket
 import struct
-import threading
 
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark import net
 
 __all__ = [
     "ber_encode_int",
@@ -148,7 +149,7 @@ def snmp_parse_response(datagram: bytes):
     return rid[1], err[1], out
 
 
-class MiniSnmpAgent:
+class MiniSnmpAgent(net.UdpServer):
     """Loopback v2c agent: answers GetRequest from an in-memory MIB
     ``{oid: (tag, value)}``; wrong community → error-status 16
     (authorizationError shape), unknown OID → noSuchObject varbind (the
@@ -158,56 +159,33 @@ class MiniSnmpAgent:
     def __init__(self, mib: dict, community: str = "public"):
         self.mib = dict(mib)
         self.community = community
-        self.sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        self.sock.bind(("127.0.0.1", 0))
-        self.port = self.sock.getsockname()[1]
-        self._stop = False
-        self.thread = threading.Thread(target=self._serve, daemon=True)
-        self.thread.start()
+        super().__init__(self._answer)
 
-    def _serve(self):
-        while not self._stop:
-            try:
-                data, addr = self.sock.recvfrom(65535)
-            except OSError:
-                return
-            try:
-                _t, msg, _ = ber_decode(data)
-                community = msg[1][1].decode()
-                rid, _e, _i, binds = msg[2][1]
-                oid = binds[1][0][1][0][1]
-                if community != self.community:
-                    err, vb = 16, ber_encode_oid(oid) + _tlv(_NULL, b"")
-                elif oid in self.mib:
-                    tag, val = self.mib[oid]
-                    err = 0
-                    vb = ber_encode_oid(oid) + ber_encode_int(val, tag)
-                else:
-                    err = 0
-                    vb = ber_encode_oid(oid) + _tlv(_NO_SUCH_OBJECT, b"")
-                pdu = _tlv(
-                    _RESPONSE,
-                    ber_encode_int(rid[1])
-                    + ber_encode_int(err)
-                    + ber_encode_int(0)
-                    + _tlv(_SEQ, _tlv(_SEQ, vb)),
-                )
-                resp = _tlv(
-                    _SEQ,
-                    ber_encode_int(1)
-                    + _tlv(_OCTET, community.encode())
-                    + pdu,
-                )
-                self.sock.sendto(resp, addr)
-            except Exception:
-                pass  # malformed datagram: drop, keep serving
-
-    def close(self):
-        self._stop = True
-        try:
-            self.sock.close()
-        except OSError:
-            pass
+    def _answer(self, data: bytes, _addr) -> bytes:
+        _t, msg, _ = ber_decode(data)
+        community = msg[1][1].decode()
+        rid, _e, _i, binds = msg[2][1]
+        oid = binds[1][0][1][0][1]
+        if community != self.community:
+            err, vb = 16, ber_encode_oid(oid) + _tlv(_NULL, b"")
+        elif oid in self.mib:
+            tag, val = self.mib[oid]
+            err = 0
+            vb = ber_encode_oid(oid) + ber_encode_int(val, tag)
+        else:
+            err = 0
+            vb = ber_encode_oid(oid) + _tlv(_NO_SUCH_OBJECT, b"")
+        pdu = _tlv(
+            _RESPONSE,
+            ber_encode_int(rid[1])
+            + ber_encode_int(err)
+            + ber_encode_int(0)
+            + _tlv(_SEQ, _tlv(_SEQ, vb)),
+        )
+        return _tlv(
+            _SEQ,
+            ber_encode_int(1) + _tlv(_OCTET, community.encode()) + pdu,
+        )
 
 
 def snmp_get(

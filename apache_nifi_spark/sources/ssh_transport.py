@@ -267,7 +267,7 @@ def _check_names(reader: _Reader) -> None:
     # compression + languages + first_kex_packet_follows ignored
 
 
-class SshServer:
+class SshServer(net.Server):
     """Threaded SSH server hosting named subsystems.
 
     ``subsystems``: name → factory(channel_send: Callable[bytes, None])
@@ -286,14 +286,7 @@ class SshServer:
         self.host_pub = ed25519_publickey(host_key_seed)
         self.users = users
         self.subsystems = subsystems
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
-
-    def stop(self) -> None:
-        self._srv.stop()
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         t = _Transport(conn)

@@ -29,6 +29,7 @@ broker tier is swappable for a real deployment, the frames are not.
 
 from __future__ import annotations
 
+import contextlib
 import socket
 import struct
 
@@ -77,18 +78,14 @@ def _parse_shortstr(buf: bytes, pos: int) -> tuple[str, int]:
     return buf[pos + 1 : pos + 1 + n].decode("utf-8"), pos + 1 + n
 
 
-class MiniAmqpBroker:
+class MiniAmqpBroker(net.Server):
     """0-9-1 server: handshake, channel, publisher confirms, durable
     landing of published content."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".log")
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -187,31 +184,30 @@ class MiniAmqpBroker:
         f.flush()
         return delivery_tag
 
-    def stop(self) -> None:
-        self._srv.stop()
-
 
 class _AmqpClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = net.connect(host, port, timeout)
-        self._f = self._sock.makefile("rwb")
         self._tag = 0
-        self._f.write(_PROTO_HEADER)
-        self._f.flush()
-        self._expect(10, 10)  # Connection.Start
-        self._send(
-            0, 10, 11,
-            struct.pack(">I", 0) + _shortstr("PLAIN")
-            + _longstr(b"\x00guest\x00guest") + _shortstr("en_US"),
-        )
-        self._expect(10, 30)  # Tune
-        self._send(0, 10, 31, struct.pack(">HIH", 0, 131072, 0))
-        self._send(0, 10, 40, _shortstr("/") + _shortstr("") + b"\x00")
-        self._expect(10, 41)  # OpenOk
-        self._send(1, 20, 10, _shortstr(""))
-        self._expect(20, 11)  # Channel.OpenOk
-        self._send(1, 85, 10, b"\x00")  # Confirm.Select (nowait=0)
-        self._expect(85, 11)
+        with contextlib.ExitStack() as on_error:  # close both if refused
+            self._sock = on_error.enter_context(net.connect(host, port, timeout))
+            self._f = on_error.enter_context(self._sock.makefile("rwb"))
+            self._f.write(_PROTO_HEADER)
+            self._f.flush()
+            self._expect(10, 10)  # Connection.Start
+            self._send(
+                0, 10, 11,
+                struct.pack(">I", 0) + _shortstr("PLAIN")
+                + _longstr(b"\x00guest\x00guest") + _shortstr("en_US"),
+            )
+            self._expect(10, 30)  # Tune
+            self._send(0, 10, 31, struct.pack(">HIH", 0, 131072, 0))
+            self._send(0, 10, 40, _shortstr("/") + _shortstr("") + b"\x00")
+            self._expect(10, 41)  # OpenOk
+            self._send(1, 20, 10, _shortstr(""))
+            self._expect(20, 11)  # Channel.OpenOk
+            self._send(1, 85, 10, b"\x00")  # Confirm.Select (nowait=0)
+            self._expect(85, 11)
+            on_error.pop_all()
 
     def _send(self, channel: int, cls: int, meth: int, args: bytes = b"") -> None:
         self._f.write(_method(channel, cls, meth, args))

@@ -35,7 +35,7 @@ from apache_nifi_spark.streaming.listen import Landing
 __all__ = ["MiniElasticServer"]
 
 
-class MiniElasticServer:
+class MiniElasticServer(net.Server):
     """Threaded `_bulk`-compatible landing endpoint."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
@@ -73,7 +73,7 @@ class MiniElasticServer:
                 else:
                     self._reply(404, {"error": "unsupported endpoint"})
 
-        self._server = net.Server(Handler, host, port).start()
+        super().__init__(Handler, host, port)
 
     # ------------------------------------------------------- protocol ---
 
@@ -148,8 +148,5 @@ class MiniElasticServer:
 
     @property
     def url(self) -> str:
-        host, port = self._server.address
+        host, port = self.address
         return f"http://{host}:{port}"
-
-    def stop(self) -> None:
-        self._server.stop()

@@ -302,7 +302,7 @@ def _parse_message_set(buf: bytes) -> list[tuple[int, bytes | None, bytes | None
     return out
 
 
-class MiniKafkaBroker:
+class MiniKafkaBroker(net.Server):
     """Single-node broker speaking ApiVersions, Metadata v0,
     Produce v0/v3, and Fetch v0/v4 (v2 RecordBatches + gzip)."""
 
@@ -317,11 +317,7 @@ class MiniKafkaBroker:
         # produce is re-served as one batch per codec run)
         self._codec_log: dict[tuple[str, int], list[int]] = {}
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def log_end_offset(self, topic: str, partition: int) -> int:
         with self._lock:
@@ -372,7 +368,7 @@ class MiniKafkaBroker:
         if not topics:
             with self._lock:
                 topics = sorted({t for (t, _p) in self._log})
-        host, port = self._srv.address
+        host, port = self.address
         out = bytearray()
         out += struct.pack(">i", 1)  # one broker
         out += struct.pack(">i", 0) + _kstr(host) + struct.pack(">i", port)
@@ -543,9 +539,6 @@ class MiniKafkaBroker:
                 out += struct.pack(">ihqqi", partition, _ERR_NONE, hw, hw, 0)
                 out += struct.pack(">i", len(recs)) + recs
         return bytes(out)
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 # --------------------------------------------------------------- client ---

@@ -42,6 +42,7 @@ Mongo stores, the site-to-site receiver) publishes through one
 from __future__ import annotations
 
 import os
+import ssl
 import threading
 import uuid
 
@@ -123,10 +124,16 @@ class Landing:
                 )
 
 
-class HttpLandingListener:
+class HttpLandingListener(net.Server):
     """Threaded HTTP server landing one ``.json`` file per POST body."""
 
-    def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
+    def __init__(
+        self,
+        landing_dir: str,
+        host: str = "127.0.0.1",
+        port: int = 0,
+        tls: ssl.SSLContext | None = None,
+    ):
         self.landing_dir = landing_dir
         self.landing = landing = Landing(landing_dir, ".json")
 
@@ -140,19 +147,12 @@ class HttpLandingListener:
                 self.end_headers()
                 self.wfile.write(b"ok")
 
-        self._server = net.Server(Handler, host, port)
+        super().__init__(Handler, host, port, tls=tls)
 
     @property
     def url(self) -> str:
-        host, port = self._server.address
+        host, port = self.address
         return f"http://{host}:{port}/"
-
-    def __enter__(self) -> "HttpLandingListener":
-        self._server.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._server.stop()
 
 
 def stream_json_landing(
@@ -170,7 +170,7 @@ def stream_json_landing(
     return reader.load(landing_dir)
 
 
-class TcpLandingListener:
+class TcpLandingListener(net.Server):
     """ListenTCP / ListenSyslog transport half: a threaded TCP server
     landing each connection's payload as one ``.log`` file.
 
@@ -187,6 +187,7 @@ class TcpLandingListener:
         host: str = "127.0.0.1",
         port: int = 0,
         framing: str = "newline",
+        tls: ssl.SSLContext | None = None,
     ):
         if framing not in ("newline", "octet"):
             raise ValueError(f"unknown framing {framing!r}")
@@ -222,17 +223,10 @@ class TcpLandingListener:
                     sum(1 for ln in data.splitlines() if ln.strip()),
                 )
 
-        self._srv = net.Server(handle, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
-
-    def stop(self) -> None:
-        self._srv.stop()
+        super().__init__(handle, host, port, tls=tls)
 
 
-class UdpLandingListener:
+class UdpLandingListener(net.UdpServer):
     """ListenUDP transport half [2.7.2-surface; SURVEY.md §2.1]: a
     threaded UDP server landing datagrams as durable files.
 
@@ -246,13 +240,12 @@ class UdpLandingListener:
     carries an arrival sequence so downstream EnforceOrder-style
     operators can reconstruct order where the payload allows.
 
-    Receive path is a single tight ``recvfrom`` loop on a socket with an
-    8 MB SO_RCVBUF — a thread-per-datagram server (socketserver's
-    ThreadingUDPServer) stalls the drain under a datagram burst and the
-    kernel silently drops once the receive buffer fills; syslog senders
-    burst by nature, so the listener must drain at line rate and defer
-    everything else (batch flushing happens on the same thread between
-    reads, file I/O amortized over ``batch_size`` datagrams).
+    The receive path is :class:`net.UdpServer`'s single ``recvfrom``
+    loop — a thread-per-datagram server stalls under a datagram burst
+    and the kernel silently drops once the receive buffer fills; syslog
+    senders burst by nature, so the listener drains at line rate and
+    flushes batches on the same thread between reads (file I/O
+    amortized over ``batch_size`` datagrams).
     """
 
     def __init__(
@@ -262,44 +255,16 @@ class UdpLandingListener:
         port: int = 0,
         batch_size: int = 1,
     ):
-        import socket as _socket
-
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
         self._buf: list[bytes] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._sock = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
-        try:
-            self._sock.setsockopt(
-                _socket.SOL_SOCKET, _socket.SO_RCVBUF, 8 * 1024 * 1024
-            )
-        except OSError:
-            pass  # platform cap; the drain loop still keeps up
-        self._sock.bind((host, port))
-        self._sock.settimeout(0.2)  # wake periodically to observe _stop
-        self._thread = threading.Thread(target=self._recv_loop, daemon=True)
-        self._thread.start()
+        super().__init__(self._datagram, host, port)
 
-    def _recv_loop(self) -> None:
-        import socket as _socket
-
-        while not self._stop.is_set():
-            try:
-                data, _ = self._sock.recvfrom(65535)
-            except _socket.timeout:
-                continue
-            except OSError:
-                break  # socket closed under us during stop()
-            if data.strip():
-                self._datagram(data)
-
-    @property
-    def port(self) -> int:
-        return self._sock.getsockname()[1]
-
-    def _datagram(self, data: bytes) -> None:
+    def _datagram(self, data: bytes, _addr) -> None:
+        if not data.strip():
+            return
         with self._lock:
             self._buf.append(data.rstrip(b"\n"))
             if len(self._buf) >= self.batch_size:
@@ -315,7 +280,5 @@ class UdpLandingListener:
             self._flush_locked()
 
     def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._sock.close()
+        super().stop()
         self.flush()

@@ -63,17 +63,13 @@ def _read_bytes(sock: socket.socket) -> bytes:
     return net.read_exact(sock.recv, n)
 
 
-class MapCacheServer:
+class MapCacheServer(net.Server):
     """Threaded in-memory map cache speaking the DataStream framing."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self._data: dict[bytes, bytes] = {}
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def snapshot(self) -> dict[bytes, bytes]:
         with self._lock:
@@ -127,9 +123,6 @@ class MapCacheServer:
             return
         finally:
             conn.close()
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 class MapCacheClient:

@@ -23,6 +23,7 @@ echo are all real framing, unit-tested against adversarial payloads.
 
 from __future__ import annotations
 
+import contextlib
 import socket
 import struct
 import uuid
@@ -71,17 +72,13 @@ def _packet(ptype: int, flags: int, body: bytes) -> bytes:
     return bytes([(ptype << 4) | flags]) + _encode_varint(len(body)) + body
 
 
-class MiniMqttBroker:
+class MiniMqttBroker(net.Server):
     """3.1.1 broker: lands published messages durably per connection."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".log")
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -133,14 +130,9 @@ class MiniMqttBroker:
                 pass
             conn.close()
 
-    def stop(self) -> None:
-        self._srv.stop()
-
 
 class _MqttClient:
     def __init__(self, host: str, port: int, client_id: str, timeout: float = 10.0):
-        self._sock = net.connect(host, port, timeout)
-        self._f = self._sock.makefile("rwb")
         self._pid = 0
         body = (
             _mqtt_str("MQTT")
@@ -149,12 +141,16 @@ class _MqttClient:
             + struct.pack(">H", 30)
             + _mqtt_str(client_id)
         )
-        self._f.write(_packet(_CONNECT, 0, body))
-        self._f.flush()
-        head = net.read_exact(self._f.read, 1)
-        rest = net.read_exact(self._f.read, _read_varint(self._f))
-        if head[0] >> 4 != _CONNACK or rest[1] != 0:
-            raise ConnectionError(f"CONNACK refused: {rest!r}")
+        with contextlib.ExitStack() as on_error:  # close both if refused
+            self._sock = on_error.enter_context(net.connect(host, port, timeout))
+            self._f = on_error.enter_context(self._sock.makefile("rwb"))
+            self._f.write(_packet(_CONNECT, 0, body))
+            self._f.flush()
+            head = net.read_exact(self._f.read, 1)
+            rest = net.read_exact(self._f.read, _read_varint(self._f))
+            if head[0] >> 4 != _CONNACK or rest[1] != 0:
+                raise ConnectionError(f"CONNACK refused: {rest!r}")
+            on_error.pop_all()
 
     def publish_qos1(self, topic: str, payload: bytes) -> None:
         self._pid = (self._pid % 65535) + 1

@@ -104,18 +104,14 @@ class _Reader:
         raise ValueError(f"bad RESP type byte {t!r}")
 
 
-class MiniRedisServer:
+class MiniRedisServer(net.Server):
     """Threaded in-memory RESP2 server (cache-client command subset)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self._data: dict[bytes, bytes] = {}
         self._hashes: dict[bytes, dict[bytes, bytes]] = {}
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def snapshot(self) -> dict[bytes, bytes]:
         with self._lock:
@@ -193,9 +189,6 @@ class MiniRedisServer:
                 self._hashes.clear()
                 return b"+OK\r\n"
         return b"-ERR unknown command '%s'\r\n" % verb
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 class RedisClient:

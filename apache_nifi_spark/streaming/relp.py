@@ -67,7 +67,7 @@ def _read_frame(f) -> tuple[int, str, bytes]:
     return int(txnr_b), cmd_b.decode(), data
 
 
-class RelpLandingListener:
+class RelpLandingListener(net.Server):
     """ListenRELP: handshake + framed messages, ACK per txnr, durable
     newline-joined landing batches."""
 
@@ -81,11 +81,7 @@ class RelpLandingListener:
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -121,9 +117,6 @@ class RelpLandingListener:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 def put_relp(

@@ -106,7 +106,7 @@ class _ChunkReader:
         return len(self.buf) - self.pos
 
 
-class SiteToSiteServer:
+class SiteToSiteServer(net.Server):
     """The peer cluster's input-port endpoint (TLS 'port 10000' analog).
 
     Committed transactions land as JSON-lines files (one object per
@@ -131,13 +131,7 @@ class SiteToSiteServer:
         self._committed = 0
         self._aborted = 0
         self._lock = threading.Lock()
-        self._srv = net.Server(self._serve, host, port)
-        self._srv.tls = server_context(cert_path, key_path)
-        self._srv.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port, tls=server_context(cert_path, key_path))
 
     @property
     def stats(self) -> tuple[int, int]:
@@ -175,7 +169,7 @@ class SiteToSiteServer:
     def _answer_peer_list(self, f) -> None:
         """Self + configured peers, each with its queued-FlowFile count
         (clients send to the least-loaded peer — NiFi's S2S balancing)."""
-        host, port = self._srv.address
+        host, port = self.address
         own_count = len(os.listdir(self.landing_dir))
         peers = [(host, port, own_count)] + [
             (h, p, 0) for (h, p) in self._extra_peers
@@ -241,9 +235,6 @@ class SiteToSiteServer:
             self._committed += 1
         if records:
             self.landing.publish_lines(records, prefix=f"{port_name or 'input'}_")
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 # --------------------------------------------------------------- client ---

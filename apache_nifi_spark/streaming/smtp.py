@@ -30,26 +30,13 @@ from apache_nifi_spark.streaming.listen import Landing
 __all__ = ["MiniSmtpServer", "put_smtp"]
 
 
-class MiniSmtpServer:
+class MiniSmtpServer(net.Server):
     """Threaded RFC 5321 subset server landing one file per message."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def landing_dir(self) -> str:
-        return self.landing.dir
-
-    @landing_dir.setter
-    def landing_dir(self, path: str) -> None:
-        """Retarget the server: later messages land in ``path`` and the
-        record count restarts at 0."""
-        self.landing = Landing(path, ".eml")
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        self.landing = Landing(landing_dir, ".eml")
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -120,9 +107,6 @@ class MiniSmtpServer:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 def put_smtp(

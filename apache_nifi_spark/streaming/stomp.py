@@ -30,6 +30,7 @@ executors; consumption is a splittable scan of the landing files.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import socket
 import uuid
@@ -131,17 +132,13 @@ def _read_frame(f) -> tuple[str, dict[str, str], bytes] | None:
     return command, headers, body
 
 
-class MiniStompBroker:
+class MiniStompBroker(net.Server):
     """STOMP 1.2 broker landing SENDs durably per connection."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".jsonl")
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb", buffering=1 << 16)
@@ -215,23 +212,22 @@ class MiniStompBroker:
                 pass
             conn.close()
 
-    def stop(self) -> None:
-        self._srv.stop()
-
 
 class _StompClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = net.connect(host, port, timeout)
-        self._f = self._sock.makefile("rwb", buffering=1 << 16)
-        self._f.write(
-            _frame("CONNECT", {"accept-version": "1.2", "host": host})
-        )
-        self._f.flush()
-        frame = _read_frame(self._f)
-        if frame is None or frame[0] != "CONNECTED":
-            raise ConnectionError(f"STOMP CONNECT refused: {frame!r}")
-        if frame[1].get("version") != "1.2":
-            raise ConnectionError(f"negotiated version {frame[1].get('version')!r}")
+        with contextlib.ExitStack() as on_error:  # close both if refused
+            self._sock = on_error.enter_context(net.connect(host, port, timeout))
+            self._f = on_error.enter_context(self._sock.makefile("rwb", buffering=1 << 16))
+            self._f.write(
+                _frame("CONNECT", {"accept-version": "1.2", "host": host})
+            )
+            self._f.flush()
+            frame = _read_frame(self._f)
+            if frame is None or frame[0] != "CONNECTED":
+                raise ConnectionError(f"STOMP CONNECT refused: {frame!r}")
+            if frame[1].get("version") != "1.2":
+                raise ConnectionError(f"negotiated version {frame[1].get('version')!r}")
+            on_error.pop_all()
 
     def send(self, destination: str, headers: dict[str, str], body: bytes) -> None:
         """Pipelined (no per-frame receipt; DISCONNECT confirms all)."""

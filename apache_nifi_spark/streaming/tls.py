@@ -13,13 +13,11 @@ secured.  This module is the Spark-side analog of that keystore mount:
 - ``server_context(cert, key)`` / ``client_context(cert)`` — stdlib
   ``ssl`` contexts; the client context TRUSTS ONLY the given CA/cert
   (no system-store fallback) and verifies hostname, mirroring the
-  truststore semantics.
-- ``wrap_listener(listener, ctx)`` — retrofit any listener that runs on
-  the transport kernel (``apache_nifi_spark.net``: TCP/RELP/HTTP and
-  the protocol brokers) with TLS; the kernel wraps each accepted
-  connection before its handler runs.  The landing-file contract is
-  unchanged, so every downstream drain works identically over the
-  secured transport.
+  truststore semantics.  A listener takes the server context at
+  construction (``tls=`` on the transport kernel,
+  ``apache_nifi_spark.net``), which wraps each accepted connection
+  before its handler runs.  The landing-file contract is unchanged, so
+  every downstream drain works identically over the secured transport.
 
 Scale note: TLS terminates at the listener tier (exactly as in the
 reference, where the pod's server keystore terminates it) — nothing in
@@ -33,13 +31,10 @@ import ssl
 import subprocess
 import tempfile
 
-from apache_nifi_spark import net
-
 __all__ = [
     "client_context",
     "generate_self_signed",
     "server_context",
-    "wrap_listener",
 ]
 
 
@@ -84,18 +79,3 @@ def client_context(cert_path: str) -> ssl.SSLContext:
     ctx.verify_mode = ssl.CERT_REQUIRED
     return ctx
 
-
-def wrap_listener(listener, ctx: ssl.SSLContext) -> None:
-    """Retrofit a listener with TLS.
-
-    Works for any listener that runs on a ``net.Server``
-    (TcpLandingListener, HttpLandingListener, ...): from the next
-    accepted connection on, the kernel wraps the socket server-side, so
-    every connection completes a real handshake before its handler
-    reads a byte.  Plaintext clients fail the handshake and never land
-    data.
-    """
-    srv = next((v for v in vars(listener).values() if isinstance(v, net.Server)), None)
-    if srv is None:
-        raise ValueError(f"{type(listener).__name__} does not run on net.Server")
-    srv.tls = ctx

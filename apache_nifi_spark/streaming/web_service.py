@@ -92,7 +92,7 @@ class HttpContextMap:
             return len(self._live)
 
 
-class HttpRequestResponseService:
+class HttpRequestResponseService(net.Server):
     """HandleHttpRequest + HandleHttpResponse on one threaded server.
 
     ``pipeline(df) -> DataFrame`` receives the request records (body JSON
@@ -155,7 +155,7 @@ class HttpRequestResponseService:
                 self.end_headers()
                 self.wfile.write(payload)
 
-        self._server = net.Server(Handler, host, port)
+        super().__init__(Handler, host, port)
 
     def _run_pipeline(
         self, body: bytes, method: str, path: str, remote: str, ctx: str
@@ -186,13 +186,9 @@ class HttpRequestResponseService:
 
     @property
     def url(self) -> str:
-        host, port = self._server.address
+        host, port = self.address
         return f"http://{host}:{port}/"
 
-    def __enter__(self) -> "HttpRequestResponseService":
-        self._server.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._server.stop()
+    def stop(self) -> None:
+        super().stop()
         self._pool.shutdown(wait=False, cancel_futures=True)

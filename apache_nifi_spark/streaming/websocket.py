@@ -101,18 +101,14 @@ def decode_frame(sock: socket.socket) -> tuple[bool, int, bool, bytes]:
     return fin, opcode, masked, payload
 
 
-class WebSocketLandingServer:
+class WebSocketLandingServer(net.Server):
     """ListenWebSocket: real handshake + frame reassembly, one durable
     landing file per complete message."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
         self.landing = Landing(landing_dir, ".msg")
-        self._srv = net.Server(self._serve, host, port).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.port
+        super().__init__(self._serve, host, port)
 
     def _serve(self, conn: socket.socket) -> None:
         try:
@@ -163,9 +159,6 @@ class WebSocketLandingServer:
             b"Connection: Upgrade\r\n"
             b"Sec-WebSocket-Accept: " + accept.encode("ascii") + b"\r\n\r\n"
         )
-
-    def stop(self) -> None:
-        self._srv.stop()
 
 
 def _client_handshake(sock: socket.socket, host: str, port: int) -> None:

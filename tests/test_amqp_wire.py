@@ -29,8 +29,7 @@ def _landed_lines(broker, n):
 
 def test_handshake_publish_confirm_and_landing():
     landing = tempfile.mkdtemp(prefix="amqp_proto_")
-    broker = MiniAmqpBroker(landing)
-    try:
+    with MiniAmqpBroker(landing) as broker:
         c = _AmqpClient("127.0.0.1", broker.port)
         c.publish("ex", "a.b.c", b"hello")
         c.publish("ex", "x.y", b"tab\tnl\nslash\\")
@@ -45,28 +44,22 @@ def test_handshake_publish_confirm_and_landing():
         assert by_key[b"x.y"] == b"tab\\tnl\\nslash\\\\"
         assert by_key[b"empty"] == b""
         assert by_key[b"big"] == b"z" * 1000
-    finally:
-        broker.stop()
 
 
 def test_wrong_protocol_header_rejected():
     landing = tempfile.mkdtemp(prefix="amqp_bad_")
-    broker = MiniAmqpBroker(landing)
-    try:
+    with MiniAmqpBroker(landing) as broker:
         with socket.create_connection(("127.0.0.1", broker.port), timeout=5) as s:
             s.sendall(b"HTTP/1.1 GET /\r\n")
             # spec: the server answers with ITS protocol header and closes
             resp = s.recv(16)
             assert resp == b"AMQP\x00\x00\x09\x01"
             assert s.recv(1) == b""  # closed
-    finally:
-        broker.stop()
 
 
 def test_publish_amqp_partitioned(spark):
     landing = tempfile.mkdtemp(prefix="amqp_part_")
-    broker = MiniAmqpBroker(landing)
-    try:
+    with MiniAmqpBroker(landing) as broker:
         df = spark.range(150).selectExpr(
             "concat('k.', cast(id % 5 as string)) as rk",
             "concat('p', cast(id as string)) as payload",
@@ -78,5 +71,3 @@ def test_publish_amqp_partitioned(spark):
         assert {ln.split(b"\t", 2)[2] for ln in lines} == {
             f"p{i}".encode() for i in range(150)
         }
-    finally:
-        broker.stop()

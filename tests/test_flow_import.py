@@ -620,9 +620,10 @@ def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
 
     mq_land = tempfile.mkdtemp(prefix="flow_mqtt_")
     am_land = tempfile.mkdtemp(prefix="flow_amqp_")
-    mq = MiniMqttBroker(mq_land)
-    am = MiniAmqpBroker(am_land)
-    try:
+    with (
+        MiniMqttBroker(mq_land) as mq,
+        MiniAmqpBroker(am_land) as am,
+    ):
         flow = {
             "flowContents": {
                 "processors": [
@@ -655,9 +656,6 @@ def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
                 len(pathlib.Path(p).read_bytes().splitlines())
                 for p in glob.glob(f"{broker.landing_dir}/*")
             ) == 25
-    finally:
-        mq.stop()
-        am.stop()
 
 
 def test_remote_process_group_validation(spark, sf_dir):
@@ -684,12 +682,9 @@ def test_remote_process_group_validation(spark, sf_dir):
 
     with pytest.raises(FlowImportError, match="http"):
         run_flow(spark, sf_dir, flow("ftp://nowhere:21"))
-    api = NiFiApiServer(spark, sf_dir)  # no S2S attached
-    try:
+    with NiFiApiServer(spark, sf_dir) as api:  # no S2S attached
         with pytest.raises(FlowImportError, match="site-to-site is? disabled|disabled"):
             run_flow(spark, sf_dir, flow(api.url))
-    finally:
-        api.stop()
 
 
 def test_remote_process_group_https_discovery(spark, sf_dir):

@@ -19,9 +19,8 @@ from apache_nifi_spark.streaming.kafka_wire import (
 
 @pytest.fixture
 def broker():
-    b = MiniKafkaBroker(num_partitions=3)
-    yield b
-    b.stop()
+    with MiniKafkaBroker(num_partitions=3) as b:
+        yield b
 
 
 def test_metadata_bootstrap(broker):

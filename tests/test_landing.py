@@ -8,7 +8,6 @@ import ast
 import os
 import pathlib
 import re
-import smtplib
 import sys
 import threading
 
@@ -73,31 +72,6 @@ def test_escape_is_inverted_by_unescape_landed(payload):
     escaped = Landing.escape(payload)
     assert b"\n" not in escaped
     assert unescape_landed(escaped.decode()) == payload.decode()
-
-
-def test_shared_smtp_retarget_restarts_the_count(tmp_path, monkeypatch):
-    import apache_nifi_spark.registry  # noqa: F401 (loads the registry satellites)
-    from apache_nifi_spark import registry_llm
-
-    monkeypatch.setattr(registry_llm, "_SMTP_SHARED", None)
-    first, second = str(tmp_path / "a"), str(tmp_path / "b")
-    srv = registry_llm._shared_smtp(first)
-    try:
-
-        def deliver() -> None:
-            with smtplib.SMTP("127.0.0.1", srv.port, timeout=10) as client:
-                client.sendmail("f@x", ["t@x"], b"Subject: s\r\n\r\nbody\r\n")
-
-        deliver()
-        srv.landing.wait(1, timeout=5)
-        assert srv.landing.count == 1
-        assert registry_llm._shared_smtp(second) is srv
-        assert srv.landing_dir == second and srv.landing.count == 0
-        deliver()
-        srv.landing.wait(1, timeout=5)
-        assert len(os.listdir(first)) == 1 and len(os.listdir(second)) == 1
-    finally:
-        srv.stop()
 
 
 def test_one_landing_module_and_one_read_exact():

@@ -47,31 +47,29 @@ def test_bson_rejects_unsupported():
 
 def test_wire_insert_find_count_and_landing():
     landing = tempfile.mkdtemp(prefix="mongo_proto_")
-    srv = MiniMongoServer(landing)
-    client = MongoWireClient("127.0.0.1", srv.port)
-    try:
-        assert client.command({"ping": 1, "$db": "db"})["ok"] == 1.0
-        docs = [{"k": i, "st": "F" if i % 2 else "O"} for i in range(10)]
-        assert client.insert("orders", docs) == 10
-        assert client.count("orders") == 10
-        assert client.count("orders", {"st": "F"}) == 5
-        rows = client.find("orders", {"st": "O"}, limit=3)
-        assert len(rows) == 3 and all(r["st"] == "O" for r in rows)
-        # unsupported command → standard error reply, connection survives
-        bad = client.command({"drop": "orders", "$db": "db"})
-        assert bad["ok"] == 0.0 and "unsupported" in bad["errmsg"]
-        assert client.count("orders") == 10  # still alive
-        landed = [json.loads(pathlib.Path(p).read_text()) for p in glob.glob(f"{landing}/*.json")]
-        assert {d["k"] for d in landed} == set(range(10))
-    finally:
-        client.close()
-        srv.stop()
+    with MiniMongoServer(landing) as srv:
+        client = MongoWireClient("127.0.0.1", srv.port)
+        try:
+            assert client.command({"ping": 1, "$db": "db"})["ok"] == 1.0
+            docs = [{"k": i, "st": "F" if i % 2 else "O"} for i in range(10)]
+            assert client.insert("orders", docs) == 10
+            assert client.count("orders") == 10
+            assert client.count("orders", {"st": "F"}) == 5
+            rows = client.find("orders", {"st": "O"}, limit=3)
+            assert len(rows) == 3 and all(r["st"] == "O" for r in rows)
+            # unsupported command → standard error reply, connection survives
+            bad = client.command({"drop": "orders", "$db": "db"})
+            assert bad["ok"] == 0.0 and "unsupported" in bad["errmsg"]
+            assert client.count("orders") == 10  # still alive
+            landed = [json.loads(pathlib.Path(p).read_text()) for p in glob.glob(f"{landing}/*.json")]
+            assert {d["k"] for d in landed} == set(range(10))
+        finally:
+            client.close()
 
 
 def test_put_mongo_records_partition_batching(spark):
     landing = tempfile.mkdtemp(prefix="mongo_put_")
-    srv = MiniMongoServer(landing)
-    try:
+    with MiniMongoServer(landing) as srv:
         from apache_nifi_spark.sources.mongo_wire import put_mongo_records
 
         df = spark.range(1200).selectExpr(
@@ -84,5 +82,3 @@ def test_put_mongo_records_partition_batching(spark):
             assert probe.count("c") == 1200  # 4 connections, batches of 500
         finally:
             probe.close()
-    finally:
-        srv.stop()

@@ -40,8 +40,7 @@ def _wait_landed(broker, n):
 
 def test_publish_qos1_roundtrip_and_escaping():
     landing = tempfile.mkdtemp(prefix="mqtt_proto_")
-    broker = MiniMqttBroker(landing)
-    try:
+    with MiniMqttBroker(landing) as broker:
         c = _MqttClient("127.0.0.1", broker.port, "t1")
         c.publish_qos1("a/b", b"plain")
         c.publish_qos1("a/c", b"tab\there\nand newline \\ backslash")
@@ -53,14 +52,11 @@ def test_publish_qos1_roundtrip_and_escaping():
         assert by_topic[b"a/b"] == b"plain"
         assert by_topic[b"a/c"] == b"tab\\there\\nand newline \\\\ backslash"
         assert by_topic[b"big/one"] == b"x" * 300
-    finally:
-        broker.stop()
 
 
 def test_connack_refuses_wrong_protocol():
     landing = tempfile.mkdtemp(prefix="mqtt_bad_")
-    broker = MiniMqttBroker(landing)
-    try:
+    with MiniMqttBroker(landing) as broker:
         with socket.create_connection(("127.0.0.1", broker.port), timeout=5) as s:
             body = (
                 _mqtt_str("MQIsdp") + bytes([3]) + bytes([0x02])
@@ -83,16 +79,13 @@ def test_connack_refuses_wrong_protocol():
                 _Bad("127.0.0.1", broker.port, "x")
             finally:
                 m._mqtt_str = orig
-    finally:
-        broker.stop()
 
 
 def test_publish_mqtt_partitioned(spark):
     from apache_nifi_spark.streaming.mqtt import publish_mqtt
 
     landing = tempfile.mkdtemp(prefix="mqtt_part_")
-    broker = MiniMqttBroker(landing)
-    try:
+    with MiniMqttBroker(landing) as broker:
         df = spark.range(200).selectExpr(
             "concat('t/', cast(id % 3 as string)) as topic",
             "concat('m', cast(id as string)) as payload",
@@ -103,5 +96,3 @@ def test_publish_mqtt_partitioned(spark):
         assert len(lines) == 200
         payloads = {ln.split(b"\t", 1)[1] for ln in lines}
         assert payloads == {f"m{i}".encode() for i in range(200)}
-    finally:
-        broker.stop()

@@ -19,9 +19,8 @@ from apache_nifi_spark.streaming.redis_wire import (
 
 @pytest.fixture(scope="module")
 def server():
-    s = MiniRedisServer()
-    yield s
-    s.stop()
+    with MiniRedisServer() as s:
+        yield s
 
 
 def test_basic_command_semantics(server):

@@ -37,9 +37,8 @@ def _call(conn, method, path, body=None):
 
 @pytest.fixture
 def server(spark, sf_dir):
-    s = NiFiApiServer(spark, sf_dir)
-    yield s
-    s.stop()
+    with NiFiApiServer(spark, sf_dir) as s:
+        yield s
 
 
 def test_author_mega_flow_matches_direct_import(spark, sf_dir, server):
@@ -201,8 +200,7 @@ def test_site_to_site_discovery(server, tmp_path):
         assert status == 404
 
         cert, key = generate_self_signed(str(tmp_path))
-        s2s = SiteToSiteServer(str(tmp_path / "landing"), cert, key)
-        try:
+        with SiteToSiteServer(str(tmp_path / "landing"), cert, key) as s2s:
             server.attach_site_to_site("127.0.0.1", s2s.port, cert)
             status, ent = _call(conn, "GET", "/nifi-api/site-to-site")
             assert status == 200
@@ -214,8 +212,6 @@ def test_site_to_site_discovery(server, tmp_path):
             assert [(p["hostname"], p["port"], p["secure"]) for p in peers["peers"]] \
                 == [(p["host"], p["port"], p["secure"]) for p in wire]
             assert peers["peers"][0]["port"] == s2s.port
-        finally:
-            s2s.stop()
     finally:
         conn.close()
 
@@ -305,44 +301,43 @@ def test_s2s_input_port_ingress(spark, sf_dir, server, tmp_path):
     from apache_nifi_spark.streaming.tls import generate_self_signed
 
     cert, key = generate_self_signed(str(tmp_path))
-    s2s = SiteToSiteServer(str(tmp_path / "landing"), cert, key)
-    conn = _conn(server)
-    try:
-        server.attach_site_to_site(
-            "127.0.0.1", s2s.port, cert, landing_dir=str(tmp_path / "landing")
-        )
-        # push 40 flowfiles over the wire into port "ingest"
-        src = spark.createDataFrame(
-            [(f"k{i}", f"payload-{i}") for i in range(40)], "tag string, content string"
-        ).repartition(4)
-        sent = s2s_send(src, "127.0.0.1", s2s.port, cert, "ingest",
-                        ["tag"], "content", summary=True)
-        assert sent.filter("delivered").count() == 4  # one tx per partition
-        # author: input port "ingest" → output port "landed"
-        _, g = _call(conn, "POST", "/nifi-api/process-groups/root/process-groups",
-                     {"revision": {"version": 0}, "component": {"name": "s2sgrp"}})
-        gid = g["id"]
-        _call(conn, "POST", f"/nifi-api/process-groups/{gid}/input-ports",
-              {"revision": {"version": 0},
-               "component": {"id": "in", "name": "ingest",
-                             "allowRemoteAccess": True}})
-        _call(conn, "POST", f"/nifi-api/process-groups/{gid}/output-ports",
-              {"revision": {"version": 0},
-               "component": {"id": "out", "name": "landed"}})
-        _call(conn, "POST", f"/nifi-api/process-groups/{gid}/connections",
-              {"revision": {"version": 0},
-               "component": {"source": {"id": "in"}, "destination": {"id": "out"}}})
-        status, run = _call(conn, "PUT", f"/nifi-api/flow/process-groups/{gid}",
-                            {"state": "RUNNING"})
-        assert status == 200
-        df = server.outputs(gid)["landed.success"]
-        rows = df.collect()
-        assert len(rows) == 40
-        assert {r["attributes"]["tag"] for r in rows} == {f"k{i}" for i in range(40)}
-        assert {r["content"] for r in rows} == {f"payload-{i}" for i in range(40)}
-    finally:
-        conn.close()
-        s2s.stop()
+    with SiteToSiteServer(str(tmp_path / "landing"), cert, key) as s2s:
+        conn = _conn(server)
+        try:
+            server.attach_site_to_site(
+                "127.0.0.1", s2s.port, cert, landing_dir=str(tmp_path / "landing")
+            )
+            # push 40 flowfiles over the wire into port "ingest"
+            src = spark.createDataFrame(
+                [(f"k{i}", f"payload-{i}") for i in range(40)], "tag string, content string"
+            ).repartition(4)
+            sent = s2s_send(src, "127.0.0.1", s2s.port, cert, "ingest",
+                            ["tag"], "content", summary=True)
+            assert sent.filter("delivered").count() == 4  # one tx per partition
+            # author: input port "ingest" → output port "landed"
+            _, g = _call(conn, "POST", "/nifi-api/process-groups/root/process-groups",
+                         {"revision": {"version": 0}, "component": {"name": "s2sgrp"}})
+            gid = g["id"]
+            _call(conn, "POST", f"/nifi-api/process-groups/{gid}/input-ports",
+                  {"revision": {"version": 0},
+                   "component": {"id": "in", "name": "ingest",
+                                 "allowRemoteAccess": True}})
+            _call(conn, "POST", f"/nifi-api/process-groups/{gid}/output-ports",
+                  {"revision": {"version": 0},
+                   "component": {"id": "out", "name": "landed"}})
+            _call(conn, "POST", f"/nifi-api/process-groups/{gid}/connections",
+                  {"revision": {"version": 0},
+                   "component": {"source": {"id": "in"}, "destination": {"id": "out"}}})
+            status, run = _call(conn, "PUT", f"/nifi-api/flow/process-groups/{gid}",
+                                {"state": "RUNNING"})
+            assert status == 200
+            df = server.outputs(gid)["landed.success"]
+            rows = df.collect()
+            assert len(rows) == 40
+            assert {r["attributes"]["tag"] for r in rows} == {f"k{i}" for i in range(40)}
+            assert {r["content"] for r in rows} == {f"payload-{i}" for i in range(40)}
+        finally:
+            conn.close()
 
 
 def test_parameter_contexts_bind_at_start(spark, sf_dir, server):
@@ -545,8 +540,7 @@ def test_single_user_token_auth(spark, sf_dir):
     from apache_nifi_spark.plans.rest_api import fetch_token
     from apache_nifi_spark.plans.flow_import import FlowImportError
 
-    s = NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!"))
-    try:
+    with NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!")) as s:
         # bad credentials -> 401 at login
         with pytest.raises(FlowImportError, match="401"):
             fetch_token(s.url, "admin", "wrong")
@@ -575,10 +569,9 @@ def test_single_user_token_auth(spark, sf_dir):
         outs = start_group_via_api(s.url, gid, token=token)
         assert outs
         # expired token -> 401 (issue with ttl in the past)
-        s2 = NiFiApiServer(
+        with NiFiApiServer(
             spark, sf_dir, credentials=("u", "p"), token_ttl=-5
-        )
-        try:
+        ) as s2:
             expired = fetch_token(s2.url, "u", "p")
             c2 = _conn(s2)
             c2.request("GET", "/nifi-api/flow/about",
@@ -586,10 +579,6 @@ def test_single_user_token_auth(spark, sf_dir):
             r2 = c2.getresponse()
             assert r2.status == 401
             r2.read()
-        finally:
-            s2.stop()
-    finally:
-        s.stop()
 
 
 def test_bulletin_board_records_start_failures(server):
@@ -666,8 +655,7 @@ def test_login_missing_fields_answer_401(spark, sf_dir):
     from apache_nifi_spark.plans.flow_import import FlowImportError
     from apache_nifi_spark.plans.rest_api import fetch_token
 
-    s = NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!"))
-    try:
+    with NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!")) as s:
         conn = _conn(s)
         for form in ("username=admin", "password=admin123456!", ""):
             conn.request(
@@ -679,5 +667,3 @@ def test_login_missing_fields_answer_401(spark, sf_dir):
             resp.read()
         # and the happy path still issues a token afterwards
         assert fetch_token(s.url, "admin", "admin123456!").count(".") == 2
-    finally:
-        s.stop()

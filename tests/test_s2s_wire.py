@@ -31,9 +31,8 @@ def tls_pair():
 def server(tls_pair):
     cert, key = tls_pair
     landing = tempfile.mkdtemp(prefix="anspark_s2s_test_land_")
-    s = SiteToSiteServer(landing, cert, key, peers=[("other-node", 10000)])
-    yield s
-    s.stop()
+    with SiteToSiteServer(landing, cert, key, peers=[("other-node", 10000)]) as s:
+        yield s
 
 
 def _landed(server):

@@ -236,8 +236,7 @@ def test_ftp_store_list_fetch_roundtrip(spark, tmp_path):
 
     from apache_nifi_spark.sources.ftp import MiniFtpServer, fetch_ftp, list_ftp
 
-    srv = MiniFtpServer(str(tmp_path / "ftp"))
-    try:
+    with MiniFtpServer(str(tmp_path / "ftp")) as srv:
         payloads = {f"f{i}.bin": bytes([i]) * (10 + i) for i in range(5)}
         ftp = ftplib.FTP()
         ftp.connect("127.0.0.1", srv.port, timeout=5)
@@ -273,8 +272,6 @@ def test_ftp_store_list_fetch_roundtrip(spark, tmp_path):
         with _pytest.raises(ftplib.error_perm):
             ftp2.size("../../etc/passwd")
         ftp2.quit()
-    finally:
-        srv.close()
 
 
 def test_plan_table_ddl_create_and_evolve():
@@ -323,8 +320,7 @@ def test_imap_wire_protocol_invariants(spark):
 
     from apache_nifi_spark.sources.imap import MiniImapServer
 
-    srv = MiniImapServer()
-    try:
+    with MiniImapServer() as srv:
         bad = imaplib.IMAP4("127.0.0.1", srv.port)
         try:
             bad.login("engine", "wrong")
@@ -357,8 +353,6 @@ def test_imap_wire_protocol_invariants(spark):
         _, fdata = c.fetch("1", "(RFC822)")
         assert fdata[0][1] == payload
         c.logout()
-    finally:
-        srv.stop()
 
 
 def test_pop3_byte_stuffing_and_deletion(spark):
@@ -368,8 +362,7 @@ def test_pop3_byte_stuffing_and_deletion(spark):
 
     from apache_nifi_spark.sources.imap import MiniPop3Server
 
-    srv = MiniPop3Server()
-    try:
+    with MiniPop3Server() as srv:
         srv.load(b"Subject: a\r\n\r\n.leading dot\r\n..double\r\nplain\r\n")
         srv.load(b"Subject: b\r\n\r\nbody\r\n")
         c = poplib.POP3("127.0.0.1", srv.port, timeout=5)
@@ -383,8 +376,6 @@ def test_pop3_byte_stuffing_and_deletion(spark):
         count2, _ = c.stat()
         assert count2 == 1
         c.quit()
-    finally:
-        srv.stop()
 
 
 def test_confluent_registry_wire_and_schema_evolution(spark):
@@ -406,8 +397,7 @@ def test_confluent_registry_wire_and_schema_evolution(spark):
         register_schema,
     )
 
-    reg = MiniSchemaRegistry()
-    try:
+    with MiniSchemaRegistry() as reg:
         df = spark.range(12).select(
             F.col("id").alias("rec_id"),
             F.concat(F.lit("u"), F.col("id").cast("string")).alias("user"),
@@ -444,8 +434,6 @@ def test_confluent_registry_wire_and_schema_evolution(spark):
         )
         with pytest.raises(Exception, match="magic"):
             decode_confluent(bad, reg.url, "s-value", "rec_id").collect()
-    finally:
-        reg.stop()
 
 
 def test_delta_log_time_travel_and_reconciliation(spark, tmp_path):

@@ -112,9 +112,8 @@ def sftp_server():
         f.write(b"hello over ssh")
     with open(os.path.join(root, "big.bin"), "wb") as f:
         f.write(os.urandom(70000))
-    srv = MiniSftpServer(root)
-    yield srv
-    srv.stop()
+    with MiniSftpServer(root) as srv:
+        yield srv
 
 
 def _client(srv):

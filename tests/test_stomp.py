@@ -25,9 +25,8 @@ from apache_nifi_spark.streaming.stomp import (
 @pytest.fixture
 def broker():
     landing = tempfile.mkdtemp(prefix="anspark_stomp_test_")
-    b = MiniStompBroker(landing)
-    yield b
-    b.stop()
+    with MiniStompBroker(landing) as b:
+        yield b
 
 
 def _landed(broker):

@@ -120,8 +120,7 @@ def test_listen_tcp_landing_zone_e2e(spark, tmp_path):
     from apache_nifi_spark.streaming import TcpLandingListener
 
     landing = str(tmp_path / "tcp_landing")
-    listener = TcpLandingListener(landing)
-    try:
+    with TcpLandingListener(landing) as listener:
         lines = [
             f"<{8 + (3 if i % 2 else 6)}>Jan 0{i + 1} 01:02:0{i} host{i} app[{i}]: msg {i}"
             for i in range(4)
@@ -149,8 +148,6 @@ def test_listen_tcp_landing_zone_e2e(spark, tmp_path):
         by_pid = {r["pid"]: r for r in parsed}
         assert by_pid[2]["severity"] == 6 and by_pid[1]["severity"] == 3
         assert by_pid[3]["message"] == "msg 3" and by_pid[0]["host"] == "host0"
-    finally:
-        listener.stop()
 
 
 def test_udp_listener_lands_datagrams_e2e(spark, tmp_path):
@@ -163,15 +160,12 @@ def test_udp_listener_lands_datagrams_e2e(spark, tmp_path):
     from apache_nifi_spark.streaming import UdpLandingListener
 
     landing = str(tmp_path / "udp_landing")
-    listener = UdpLandingListener(landing, batch_size=3)
-    try:
+    with UdpLandingListener(landing, batch_size=3) as listener:
         msgs = [f"dgram-{i}|value={i * 10}" for i in range(7)]
         with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
             for m in msgs:
                 sock.sendto(m.encode(), ("127.0.0.1", listener.port))
         listener.landing.wait(6)  # two full batches land async
-    finally:
-        listener.stop()  # flushes the partial third batch
     files = [f for f in os.listdir(landing) if not f.startswith(".")]
     assert len(files) == 3
 
@@ -210,16 +204,14 @@ def test_put_tcp_udp_socket_delivery(spark, tmp_path):
             if ln.strip()
         )
 
-    for listener, put in (
-        (TcpLandingListener(str(tmp_path / "tcp")), put_tcp),
-        (UdpLandingListener(str(tmp_path / "udp"), batch_size=1), put_udp),
+    for build, put in (
+        (lambda: TcpLandingListener(str(tmp_path / "tcp")), put_tcp),
+        (lambda: UdpLandingListener(str(tmp_path / "udp"), batch_size=1), put_udp),
     ):
-        try:
+        with build() as listener:
             out = put(df, "127.0.0.1", listener.port, "content").collect()
             assert all(r["sent"] for r in out)
             listener.landing.wait(20, timeout=10)
-        finally:
-            listener.stop()
         assert landed_lines(listener.landing_dir) == sorted(f"rec-{i}" for i in range(20))
 
     # dead endpoint: routed, not raised
@@ -253,8 +245,7 @@ def test_map_cache_protocol_ops():
 
     from apache_nifi_spark.streaming.map_cache import MapCacheClient, MapCacheServer
 
-    srv = MapCacheServer()
-    try:
+    with MapCacheServer() as srv:
         c = MapCacheClient("127.0.0.1", srv.port)
         assert c.get(b"missing") is None
         c.put(b"k1", b"v1")
@@ -277,8 +268,6 @@ def test_map_cache_protocol_ops():
         s.sendall(struct.pack(">I", 99))
         assert s.recv(1) == b"\x00"
         s.close()
-    finally:
-        srv.stop()
 
 
 def test_octet_counted_framing_carries_embedded_newlines(spark):
@@ -292,8 +281,7 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
     landing = tempfile.mkdtemp(prefix="octet_test_")
-    lst = TcpLandingListener(landing, framing="octet")
-    try:
+    with TcpLandingListener(landing, framing="octet") as lst:
         df = spark.createDataFrame(
             [("one line",), ("two\nlines",), ("",)], "content string"
         ).coalesce(1)
@@ -303,8 +291,6 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
         body = b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
         lines = [ln for ln in body.split(b"\n") if ln != b""]
         assert lines == [b"one line", b"two\\nlines"]
-    finally:
-        lst.stop()
 
 
 def test_octet_truncated_frame_and_unescape_roundtrip():
@@ -318,16 +304,13 @@ def test_octet_truncated_frame_and_unescape_roundtrip():
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
     landing = tempfile.mkdtemp(prefix="octet_trunc_")
-    lst = TcpLandingListener(landing, framing="octet")
-    try:
+    with TcpLandingListener(landing, framing="octet") as lst:
         with socket.create_connection(("127.0.0.1", lst.port)) as s:
             # one good frame, then a frame declaring 50 bytes but sending 4
             s.sendall(b"4 good" + b"50 oops")
         lst.landing.wait(1, timeout=10)
         body = b"".join(pathlib.Path(p).read_bytes() for p in glob.glob(f"{landing}/*"))
         assert body == b"good\n"  # partial 'oops' frame never landed
-    finally:
-        lst.stop()
 
 
 def test_prometheus_endpoint_scrape(spark):
@@ -350,8 +333,7 @@ def test_prometheus_endpoint_scrape(spark):
         df, "flow_items_total", "counter", "Items per processor",
         labels={"processor": F.col("proc")}, value=F.col("n").cast("string"),
     )
-    ep = MetricsEndpoint()
-    try:
+    with MetricsEndpoint() as ep:
         ep.publish(expo)
         with urllib.request.urlopen(ep.url, timeout=5) as resp:
             assert resp.headers["Content-Type"] == CONTENT_TYPE
@@ -369,8 +351,6 @@ def test_prometheus_endpoint_scrape(spark):
             raise AssertionError("expected 404")
         except urllib.error.HTTPError as e:
             assert e.code == 404
-    finally:
-        ep.stop()
 
 
 def test_smtp_dot_transparency_and_envelope(spark):
@@ -384,8 +364,7 @@ def test_smtp_dot_transparency_and_envelope(spark):
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer
 
     landing = tempfile.mkdtemp(prefix="smtp_test_")
-    srv = MiniSmtpServer(landing)
-    try:
+    with MiniSmtpServer(landing) as srv:
         msg = (
             b"From: header-from@x\r\nSubject: t\r\n\r\n"
             b"line one\r\n"
@@ -403,8 +382,6 @@ def test_smtp_dot_transparency_and_envelope(spark):
         assert b"\r\n.starts with a dot\r\n" in body
         assert b"\r\n..two dots\r\n" in body
         assert b"...two dots" not in body
-    finally:
-        srv.stop()
 
 
 def test_relp_frame_acks_and_newline_escape(spark):
@@ -418,8 +395,8 @@ def test_relp_frame_acks_and_newline_escape(spark):
     from apache_nifi_spark.streaming.relp import RelpLandingListener, put_relp
 
     landing = tempfile.mkdtemp(prefix="relp_test_")
-    lst = RelpLandingListener(landing, batch_size=100)  # > n: close must flush
-    try:
+    # batch_size > n: the connection's close must flush
+    with RelpLandingListener(landing, batch_size=100) as lst:
         df = spark.createDataFrame(
             [("plain msg",), ("multi\nline msg",)], "content string"
         ).coalesce(1)
@@ -429,8 +406,6 @@ def test_relp_frame_acks_and_newline_escape(spark):
         body = b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
         lines = [ln for ln in body.split(b"\n") if ln]
         assert lines == [b"plain msg", b"multi\\nline msg"]
-    finally:
-        lst.stop()
 
 
 def test_mini_elastic_bulk_protocol():
@@ -446,8 +421,7 @@ def test_mini_elastic_bulk_protocol():
     from apache_nifi_spark.streaming.elastic_store import MiniElasticServer
 
     landing = tempfile.mkdtemp(prefix="es_proto_")
-    srv = MiniElasticServer(landing)
-    try:
+    with MiniElasticServer(landing) as srv:
         body = "\n".join([
             '{"index":{"_index":"t","_id":"1"}}', '{"k":1}',
             '{"create":{"_index":"t","_id":"2"}}', '{"k":2}',
@@ -477,8 +451,6 @@ def test_mini_elastic_bulk_protocol():
         assert {(d["_index"], d["k"]) for d in landed} == {
             ("t", 1), ("t", 2), ("u", 4)
         }
-    finally:
-        srv.stop()
 
 
 def test_skip_final_no_data_batch_is_output_neutral(spark, sf_dir):

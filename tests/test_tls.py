@@ -18,7 +18,6 @@ from apache_nifi_spark.streaming.tls import (
     client_context,
     generate_self_signed,
     server_context,
-    wrap_listener,
 )
 
 
@@ -37,9 +36,7 @@ def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
 
     cert, key = certs
     landing = tempfile.mkdtemp(prefix="tls_tcp_")
-    lst = TcpLandingListener(landing)
-    wrap_listener(lst, server_context(cert, key))
-    try:
+    with TcpLandingListener(landing, tls=server_context(cert, key)) as lst:
         df = spark.createDataFrame(
             [("alpha",), ("beta",), ("gamma",)], "content string"
         ).coalesce(1)
@@ -57,8 +54,6 @@ def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
             pass
         time.sleep(0.3)
         assert b"intruder" not in _landed(landing)
-    finally:
-        lst.stop()
 
 
 def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
@@ -74,9 +69,7 @@ def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
 
     cert, key = certs
     landing = tempfile.mkdtemp(prefix="tls_big_")
-    lst = TcpLandingListener(landing)
-    wrap_listener(lst, server_context(cert, key))
-    try:
+    with TcpLandingListener(landing, tls=server_context(cert, key)) as lst:
         lines = [f"line-{i:06d}".encode() for i in range(20000)]
         payload = b"\n".join(lines) + b"\n"
         assert len(payload) > 200_000
@@ -92,8 +85,6 @@ def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
         got = [ln for ln in _landed(landing).split(b"\n") if ln]
         assert len(got) == 20000, f"landed only {len(got)} of 20000 lines"
         assert got[0] == b"line-000000" and got[-1] == b"line-019999"
-    finally:
-        lst.stop()
 
 
 def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs):
@@ -101,8 +92,7 @@ def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs):
 
     cert, key = certs
     landing = tempfile.mkdtemp(prefix="tls_http_")
-    with HttpLandingListener(landing) as lst:
-        wrap_listener(lst, server_context(cert, key))
+    with HttpLandingListener(landing, tls=server_context(cert, key)) as lst:
         port = urllib.parse.urlsplit(lst.url).port
         url = f"https://localhost:{port}/ingest"
 

@@ -54,8 +54,7 @@ def _landed(server, n):
 
 def test_frame_lengths_fragmentation_and_ping():
     landing = tempfile.mkdtemp(prefix="ws_test_")
-    server = WebSocketLandingServer(landing)
-    try:
+    with WebSocketLandingServer(landing) as server:
         s = _connect(server)
         # 7-bit, 16-bit, 64-bit payload length classes
         s.sendall(encode_frame(b"tiny", mask=b"abcd"))
@@ -79,14 +78,11 @@ def test_frame_lengths_fragmentation_and_ping():
         fin, opcode, _, _ = decode_frame(s)
         assert opcode == 0x8
         s.close()
-    finally:
-        server.stop()
 
 
 def test_unmasked_client_frame_closes_1002():
     landing = tempfile.mkdtemp(prefix="ws_test_")
-    server = WebSocketLandingServer(landing)
-    try:
+    with WebSocketLandingServer(landing) as server:
         s = _connect(server)
         s.sendall(encode_frame(b"naked"))  # no mask: protocol error
         fin, opcode, _, payload = decode_frame(s)
@@ -95,5 +91,3 @@ def test_unmasked_client_frame_closes_1002():
         s.close()
         time.sleep(0.1)
         assert glob.glob(f"{landing}/*") == []
-    finally:
-        server.stop()

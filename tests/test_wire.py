@@ -288,8 +288,7 @@ def test_snmp_ber_and_agent_roundtrip():
         "1.3.6.1.4.1.9999.1.200"
     for v in (0, 1, 127, 128, 255, 65535, -1, -128, 2**31 - 1):
         assert ber_decode(ber_encode_int(v))[1] == v
-    agent = MiniSnmpAgent({"1.3.6.1.2.1.1.3.0": (0x43, 99)})
-    try:
+    with MiniSnmpAgent({"1.3.6.1.2.1.1.3.0": (0x43, 99)}) as agent:
         s = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         s.settimeout(5)
         s.sendto(snmp_get_request(7, "public", "1.3.6.1.2.1.1.3.0"),
@@ -304,8 +303,6 @@ def test_snmp_ber_and_agent_roundtrip():
                  ("127.0.0.1", agent.port))
         assert snmp_parse_response(s.recvfrom(65535)[0])[1] == 16
         s.close()
-    finally:
-        agent.close()
 
 
 def test_dns_wire_compression_and_nxdomain():
@@ -322,8 +319,7 @@ def test_dns_wire_compression_and_nxdomain():
         dns_encode_query,
     )
 
-    srv = MiniDnsServer({"a.example.com": "10.1.2.3"}, ttl=60)
-    try:
+    with MiniDnsServer({"a.example.com": "10.1.2.3"}, ttl=60) as srv:
         s = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         s.settimeout(5)
         s.sendto(dns_encode_query(1, "a.example.com"),
@@ -335,8 +331,6 @@ def test_dns_wire_compression_and_nxdomain():
                  ("127.0.0.1", srv.port))
         assert dns_decode_message(s.recvfrom(4096)[0])[1] == 3
         s.close()
-    finally:
-        srv.close()
     # self-referential pointer must raise, not spin
     with pytest.raises(ValueError, match="pointer loop"):
         _decode_name(b"\xc0\x00", 0)
