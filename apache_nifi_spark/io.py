@@ -1,9 +1,7 @@
-"""Fixture loading and the ConvertRecord-style format bridge.
+"""Fixture loading: the tables every query reads.
 
-NiFi reads content through RecordReaders and writes through RecordSetWriters
-(Avro/JSON/CSV/XML/Parquet) [2.7.2-surface, SURVEY.md §1.1/§2.2]; in Spark
-the DataFrame *is* the record set, so the whole reader/writer surface is
-``spark.read.format(a)`` → ``df.write.format(b)``.
+Record formats (the RecordReader/RecordSetWriter services and the
+ConvertRecord bridge) live in :mod:`apache_nifi_spark.sources.formats`.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``load_table`` never caches or collects, so the 100 TB
@@ -22,7 +20,6 @@ __all__ = [
     "load_table",
     "load_all",
     "register_views",
-    "convert_record",
     "widen_if_narrow",
     "normalize_events_ts",
 ]
@@ -247,27 +244,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     (QueryRecord / JoinEnrichment-SQL analogs run against these)."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def convert_record(
-    spark: SparkSession,
-    in_path: str,
-    in_format: str,
-    out_path: str,
-    out_format: str,
-    mode: str = "overwrite",
-    read_options: dict[str, str] | None = None,
-    write_options: dict[str, str] | None = None,
-) -> None:
-    """ConvertRecord analog: reader→writer format bridge (SURVEY.md §2.4).
-
-    NiFi pairs a RecordReader with a RecordSetWriter per processor; here the
-    bridge is a scan + write with no per-record code, so Catalyst can prune
-    and push down, and the write is partition-parallel.
-
-    ``mode`` mirrors PutFile's conflict-resolution strategy
-    (replace/ignore/fail → overwrite/ignore/error, SURVEY.md §2.2).
-    """
-    reader = spark.read.format(in_format).options(**(read_options or {}))
-    df = reader.load(in_path)
-    df.write.mode(mode).options(**(write_options or {})).format(out_format).save(out_path)

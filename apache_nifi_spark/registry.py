@@ -1795,15 +1795,11 @@ def convert_record_json_q(spark, sf_dir):
 )
 def convert_record_avro_q(spark, sf_dir):
     """ConvertRecord parquet→Avro→records — NiFi's DEFAULT wire format
-    (SURVEY.md §2.2), served by the dependency-free Object Container File
-    codec in sources/avro_codec.py (spark-avro jar absent from this env).
-
-    Write is one container per partition (mapInPandas, executor-side);
-    read is a binaryFile scan fanned out per file.  The round-trip must be
-    value-exact through zigzag longs, IEEE doubles, UTF-8 strings, and
-    timestamp-micros logicals.  A deterministic 1-in-10 key subset keeps
-    the pure-Python encode cost proportionate in the suite bench while
-    exercising every codec path."""
+    (SURVEY.md §2.2), served by Spark's Avro file format through
+    sources/formats (one deflate container per partition, read back under
+    the source schema).  The round-trip must be value-exact through longs,
+    doubles, UTF-8 strings and dates.  The oracle pins a deterministic
+    1-in-10 key subset."""
     import tempfile
 
     from apache_nifi_spark.sources import convert_record
@@ -1829,8 +1825,8 @@ def convert_record_avro_q(spark, sf_dir):
 def convert_record_avro_nested_q(spark, sf_dir):
     """Avro round-trip of a NESTED schema (array<float> embeddings) —
     exercises the block-encoded Avro array path and float32 bit-exactness
-    (struct '<f' both ways, so no precision drift).  The output joins
-    ``floor(v · 2²⁶)`` per element to a STRING (driver canonicalizer
+    (Avro floats are IEEE single precision, so no precision drift).  The
+    output joins ``floor(v · 2²⁶)`` per element to a STRING (driver canonicalizer
     can't hash list cells — tests/test_plans.py gate): the power-of-two
     multiply and floor are EXACT IEEE ops, so the rendering is a pure
     function of the round-tripped float bits, engine-identical with no
@@ -1872,18 +1868,17 @@ def split_avro_datum_q(spark, sf_dir):
     (sources/avro_codec.split_avro_column)."""
     import tempfile
 
-    from apache_nifi_spark.sources import read_binary_files
+    from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import (
         decode_container,
         split_avro_column,
-        write_avro,
     )
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     out = tempfile.mkdtemp(prefix="anspark_splitavro_")
-    write_avro(o, out)
+    write_records(o, out, "avro")
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     split = split_avro_column(containers)
 
@@ -1941,22 +1936,19 @@ def avro_schema_evolution_q(spark, sf_dir):
     that (a) matches a renamed field through ``aliases``
     (total ← o_totalprice), (b) promotes long → double (o_custkey),
     (c) fills a reader-only field from its default (region), and
-    (d) skips a writer-only field (o_orderstatus).  Decode fans out per
-    file via binaryFile + mapInPandas
+    (d) skips a writer-only field (o_orderstatus).  Spark writes the v1
+    containers; decode fans out per file via binaryFile + mapInPandas
     (sources/avro_codec.decode_container_resolved)."""
     import tempfile
 
-    from apache_nifi_spark.sources import read_binary_files
-    from apache_nifi_spark.sources.avro_codec import (
-        decode_container_resolved,
-        write_avro,
-    )
+    from apache_nifi_spark.sources import read_binary_files, write_records
+    from apache_nifi_spark.sources.avro_codec import decode_container_resolved
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     out = tempfile.mkdtemp(prefix="anspark_avroevo_")
-    write_avro(o, out)
+    write_records(o, out, "avro")
     reader_schema = {
         "type": "record",
         "name": "orders_v2",
@@ -2021,13 +2013,17 @@ def extract_avro_metadata_q(spark, sf_dir):
     spec's CRC-64-AVRO fingerprint over the Parsing Canonical Form, the
     codec, and the datum count read from block headers alone (no datum
     decode) — sources/avro_codec.extract_avro_metadata; the fingerprint
-    implementation is pinned to the spec's published '"int"' vector."""
+    implementation is pinned to the spec's published '"int"' vector.
+    Spark writes the container under the engine's Avro schema, since its
+    default schema orders unions ``["long", "null"]`` and so fingerprints
+    differently."""
+    import json
     import tempfile
 
-    from apache_nifi_spark.sources import read_binary_files
+    from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import (
         extract_avro_metadata,
-        write_avro,
+        spark_to_avro_schema,
     )
 
     o = (
@@ -2037,7 +2033,9 @@ def extract_avro_metadata_q(spark, sf_dir):
         .coalesce(1)
     )
     out = tempfile.mkdtemp(prefix="anspark_avrometa_")
-    write_avro(o, out)
+    write_records(
+        o, out, "avro", options={"avroSchema": json.dumps(spark_to_avro_schema(o.schema))}
+    )
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     return extract_avro_metadata(containers)
 
@@ -2053,19 +2051,19 @@ def extract_avro_metadata_q(spark, sf_dir):
 )
 def convert_avro_to_json_q(spark, sf_dir):
     """ConvertAvroToJSON (§2.4 [2.7.2-surface]): container decode
-    (sources/avro_codec.read_avro) straight into JSON text per datum —
-    the processor's FlowFile content transform — via to_json over the
-    decoded record struct."""
+    (Spark's Avro reader via sources/formats.read_records) straight into
+    JSON text per datum — the processor's FlowFile content transform —
+    via to_json over the decoded record struct."""
     import tempfile
 
-    from apache_nifi_spark.sources.avro_codec import read_avro, write_avro
+    from apache_nifi_spark.sources import read_records, write_records
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderpriority"
     )
     out = tempfile.mkdtemp(prefix="anspark_avrojson_")
-    write_avro(o, out)
-    back = read_avro(spark, out)
+    write_records(o, out, "avro")
+    back = read_records(spark, out, "avro")
     return back.select(
         "o_orderkey",
         F.to_json(F.struct("o_orderkey", "o_orderpriority")).alias("json"),
@@ -2163,10 +2161,9 @@ def fork_record_q(spark, sf_dir):
 )
 def convert_record_xml_q(spark, sf_dir):
     """ConvertRecord parquet→XML→records: the XMLReader /
-    XMLRecordSetWriter pairing (§2.2), dependency-free stdlib codec
-    (`sources/xml_codec.py` — spark-xml jar absent).  Round-trip must be
-    value-exact through element escaping and typed re-parse under the
-    source schema."""
+    XMLRecordSetWriter pairing (§2.2) on Spark's XML file format through
+    sources/formats.  Round-trip must be value-exact through element
+    escaping and typed re-parse under the source schema."""
     import tempfile
 
     from apache_nifi_spark.sources import convert_record

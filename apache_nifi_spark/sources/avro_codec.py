@@ -1,12 +1,14 @@
-"""Pure-Python Avro Object Container File codec + distributed read/write.
+"""Pure-Python Avro Object Container File codec, block level.
 
 NiFi's default wire format is Avro — every RecordReader/RecordSetWriter
-pairing defaults to it (SURVEY.md §2.2; reference exercises record flows
-throughout).  This environment ships neither the ``spark-avro`` jar nor a
-Python avro package, so the format was previously gated off.  This module
-closes the gap from the public Avro 1.11 specification
-(https://avro.apache.org/docs/1.11.1/specification/) with zero third-party
-dependencies:
+pairing defaults to it (SURVEY.md §2.2).  Reading and writing Avro
+record sets is Spark's own ``AvroFileFormat``, reached through
+``sources/formats.read_records``/``write_records``.  This module serves
+the processors that need container *bytes*: SplitAvro, ExtractAvroMetadata,
+schema-registry framing, reader-vs-writer schema resolution, and the Hudi
+and Iceberg metadata files.  It follows the public Avro 1.11
+specification (https://avro.apache.org/docs/1.11.1/specification/) with
+no third-party dependencies:
 
 - binary encoding: zigzag-varint ints/longs, LE IEEE floats, length-
   prefixed bytes/strings, block-encoded arrays/maps, index-prefixed
@@ -19,31 +21,15 @@ dependencies:
   int, timestamps → ``timestamp-micros``/``local-timestamp-micros``
   longs, DecimalType → ``decimal`` logical bytes).
 
-Distributed integration (how this stays a 100 TB path):
-
-- **read**: ``binaryFile`` scan (one row per ``.avro`` file, content read
-  lazily per task) → ``mapInPandas`` decode, so N files decode on N cores
-  and the driver only peeks one file header for schema inference.  Avro
-  container files are NOT internally splittable without the jar's block
-  index, so parallelism is per-file — the NiFi-shaped layout (many
-  FlowFile-sized files) is exactly that.
-- **write**: one container file per partition via ``mapInPandas`` (the
-  iterator form sees every Arrow batch of a partition, so each partition
-  streams into a single file without materializing).  Task-retry safety
-  comes from unique file names + a final manifest, mirroring Spark's own
-  ``_temporary`` rename discipline in spirit.
-
 The per-value encode/decode is compiled once per schema into a closure
 tree (no per-value dispatch on schema dicts), which keeps the pure-Python
-path at ~1M values/sec/core — the honest cost of not having the jar, paid
-only on this format.
+path at ~1M values/sec/core.
 """
 
 from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import uuid
 import zlib
@@ -52,8 +38,7 @@ from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 __all__ = [
@@ -62,8 +47,6 @@ __all__ = [
     "avro_to_spark_schema",
     "encode_container",
     "decode_container",
-    "write_avro",
-    "read_avro",
     "split_avro_column",
     "resolve_decoder",
     "decode_container_resolved",
@@ -280,18 +263,21 @@ def _compile_encoder(schema: Any) -> Callable[[io.BytesIO, Any], None]:
             return enc_bytes
         raise TypeError(f"unknown Avro type {schema!r}")
     if isinstance(schema, list):  # union — runtime branch on None
-        if schema and schema[0] == "null" and len(schema) == 2:
-            inner = _compile_encoder(schema[1])
+        if len(schema) == 2 and "null" in schema:
+            # branch index as a zigzag long: 0 → 0x00, 1 → 0x02
+            null_ix = schema.index("null")
+            null_tag, value_tag = (b"\x00", b"\x02") if null_ix == 0 else (b"\x02", b"\x00")
+            inner = _compile_encoder(schema[1 - null_ix])
 
             def enc_union(buf: io.BytesIO, v: Any) -> None:
                 if v is None:
-                    buf.write(b"\x00")  # zigzag(0)
+                    buf.write(null_tag)
                 else:
-                    buf.write(b"\x02")  # zigzag(1)
+                    buf.write(value_tag)
                     inner(buf, v)
 
             return enc_union
-        raise TypeError("only [null, T] unions are supported")
+        raise TypeError("only [null, T] and [T, null] unions are supported")
     t = schema["type"]
     logical = schema.get("logicalType")
     if logical == "date":
@@ -630,7 +616,7 @@ def decode_container(data: bytes) -> tuple[Any, list[tuple]]:
 
 
 # ---------------------------------------------------------------------------
-# Distributed read / write
+# Arrow batches → encoder rows
 # ---------------------------------------------------------------------------
 
 
@@ -653,108 +639,6 @@ def _pdf_rows(pdf: Any, spark_schema: T.StructType) -> Iterator[tuple]:
             vals = list(s.astype(object).where(s.notna(), None))
         cols.append(vals)
     return zip(*cols) if cols else iter(())
-
-
-def write_avro(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    codec: str = "deflate",
-) -> None:
-    """PutFile + Avro RecordSetWriter: one ``.avro`` container per partition.
-
-    Runs entirely on executors (mapInPandas iterator form = one call per
-    partition, streaming Arrow batches into one open file); the driver only
-    triggers the job and never sees row data.
-    """
-    if os.path.isdir(path):
-        if mode == "ignore":
-            return
-        if mode in ("error", "errorifexists"):
-            raise FileExistsError(path)
-        if mode == "overwrite":
-            for name in os.listdir(path):
-                if name.endswith(".avro"):
-                    os.unlink(os.path.join(path, name))
-    os.makedirs(path, exist_ok=True)
-
-    spark_schema = df.schema
-    avro_schema = spark_to_avro_schema(T.StructType(spark_schema.fields))
-
-    def write_partition(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        fname = os.path.join(path, f"part-{uuid.uuid4().hex}.avro")
-        tmp = fname + ".inprogress"
-        n = 0
-
-        def rows() -> Iterator[tuple]:
-            nonlocal n
-            for pdf in batches:
-                for row in _pdf_rows(pdf, spark_schema):
-                    n += 1
-                    yield row
-
-        with open(tmp, "wb") as fh:
-            for chunk in encode_container(rows(), avro_schema, codec=codec):
-                fh.write(chunk)
-        if n:
-            os.replace(tmp, fname)  # atomic publish — retries never expose partials
-        else:
-            os.unlink(tmp)
-        yield pd.DataFrame({"file": [fname], "rows": [n]})
-
-    manifest = df.mapInPandas(write_partition, schema="file string, rows long")
-    manifest.collect()  # control-plane: one manifest row per partition
-
-
-def read_avro(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Avro RecordReader: distributed decode of a directory of containers.
-
-    Schema comes from one file header (driver peeks ≤64 KiB of the first
-    file) unless given; per-file decode fans out over executors via
-    ``binaryFile`` + ``mapInPandas``.
-    """
-    if schema is None:
-        first = None
-        if os.path.isdir(path):
-            for name in sorted(os.listdir(path)):
-                if name.endswith(".avro"):
-                    first = os.path.join(path, name)
-                    break
-        elif os.path.isfile(path):
-            first = path
-        if first is None:
-            raise FileNotFoundError(f"no .avro files under {path}")
-        with open(first, "rb") as fh:
-            header = fh.read(65536)
-        avro_schema, _, _, _ = read_header(header)
-        dt, _ = avro_to_spark_schema(avro_schema)
-        if not isinstance(dt, T.StructType):
-            raise TypeError("top-level Avro schema must be a record")
-        schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in dt.fields])
-
-    names = [f.name for f in schema.fields]
-
-    def decode_files(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                _, rows = decode_container(bytes(content))
-                yield pd.DataFrame(rows, columns=names)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(path)
-        .select("content")
-    )
-    return files.mapInPandas(decode_files, schema=schema)
 
 
 def infer_avro_schema(

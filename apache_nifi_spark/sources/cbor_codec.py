@@ -1,5 +1,5 @@
-"""CBOR record codec (RFC 8949), dependency-free — the binary
-self-describing sibling of the Avro container codec (reference parity:
+"""CBOR record codec (RFC 8949), dependency-free — a binary
+self-describing record format (reference parity:
 NiFi ships a CBOR-capable Jackson reader/writer among its record
 serdes; here it's implemented from the public spec, no jar, no pip).
 
@@ -9,7 +9,7 @@ column names.  No file header; the format is self-delimiting, so
 readers stream records without an index (the property that makes CBOR
 sequences a log-shipping format).
 
-Executor topology mirrors ``avro_codec``: write = ``mapInPandas``
+Executor topology: write = ``mapInPandas``
 (one open file per partition, driver sees only a manifest row per
 partition); read = ``binaryFile`` scan + ``mapInPandas`` decode (N
 files decode on N cores).

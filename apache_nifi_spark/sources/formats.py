@@ -28,18 +28,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
-# Formats with a native DataFrame reader/writer in this build, plus
-# "avro"/"xml" via the dependency-free codecs in avro_codec.py /
-# xml_codec.py (the spark-avro / spark-xml jars are absent in this env).
+# Formats with a DataFrame reader/writer in this build, plus "cbor" via
+# the codec in cbor_codec.py.
 _FORMATS = {"parquet", "csv", "json", "text", "orc", "avro", "xml", "cbor"}
+
+# Spark ships the Avro file format but registers no short name for it.
+_SPARK_SOURCES = {"avro": "org.apache.spark.sql.avro.AvroFileFormat"}
 
 _DEFAULT_READ_OPTIONS: dict[str, dict[str, str]] = {
     # header carries names; types come from the explicit schema, never
     # from sampling (inference breaks schema discipline and costs a scan)
     "csv": {"header": "true"},
+    # one row per <record>; text reads back as written (Spark trims it
+    # unless told not to)
+    "xml": {"rowTag": "record", "ignoreSurroundingSpaces": "false"},
 }
 _DEFAULT_WRITE_OPTIONS: dict[str, dict[str, str]] = {
     "csv": {"header": "true"},
+    "xml": {"rowTag": "record", "rootTag": "records"},
+    # the engine's own container readers (avro_codec.decode_container)
+    # refuse Spark's default snappy
+    "avro": {"compression": "deflate"},
 }
 
 
@@ -64,18 +73,6 @@ def read_records(
     malformed rows routable via validate_record, §2.3).
     """
     fmt = _check_format(fmt)
-    if fmt == "avro":
-        from .avro_codec import read_avro
-
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
-        return read_avro(spark, path, schema=schema)
-    if fmt == "xml":
-        from .xml_codec import read_xml
-
-        if schema is None:
-            raise ValueError("xml reader requires an explicit schema")
-        return read_xml(spark, path, schema)
     if fmt == "cbor":
         from .cbor_codec import read_cbor
 
@@ -84,7 +81,7 @@ def read_records(
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
         return read_cbor(spark, path, schema)
-    reader = spark.read.format(fmt)
+    reader = spark.read.format(_SPARK_SOURCES.get(fmt, fmt))
     for k, v in {**_DEFAULT_READ_OPTIONS.get(fmt, {}), **dict(options or {})}.items():
         reader = reader.option(k, v)
     if schema is not None:
@@ -107,20 +104,6 @@ def write_records(
     layout (one subdir per key value → partition pruning on read-back).
     """
     fmt = _check_format(fmt)
-    if fmt == "avro":
-        from .avro_codec import write_avro
-
-        if partition_by:
-            raise ValueError("partition_by is not supported for the avro codec path")
-        write_avro(df, path, mode=mode, codec=dict(options or {}).get("codec", "deflate"))
-        return
-    if fmt == "xml":
-        from .xml_codec import write_xml
-
-        if partition_by:
-            raise ValueError("partition_by is not supported for the xml codec path")
-        write_xml(df, path, mode=mode)
-        return
     if fmt == "cbor":
         from .cbor_codec import write_cbor
 
@@ -128,7 +111,7 @@ def write_records(
             raise ValueError("partition_by is not supported for the cbor codec path")
         write_cbor(df, path, mode=mode)
         return
-    writer = df.write.format(fmt).mode(mode)
+    writer = df.write.format(_SPARK_SOURCES.get(fmt, fmt)).mode(mode)
     for k, v in {**_DEFAULT_WRITE_OPTIONS.get(fmt, {}), **dict(options or {})}.items():
         writer = writer.option(k, v)
     if partition_by:

@@ -1,196 +1,15 @@
-"""Dependency-free XML RecordReader / RecordSetWriter (NiFi §2.2).
+"""ValidateXml (NiFi §2.3): route XML documents by well-formedness and a
+structural contract.
 
-NiFi ships XMLReader/XMLRecordSetWriter controller services; Spark's
-equivalent (`spark-xml`, built into Spark 4 as ``format("xml")``) needs a
-jar this environment doesn't have, so — like the Avro codec next door —
-the format is served from the stdlib against the public XML 1.0 spec:
-
-- **writer**: one ``<root><record>…</record>…</root>`` document per
-  partition via ``mapInPandas`` (iterator form: a partition streams its
-  Arrow batches into a single open file, executor-side, atomic rename
-  publish).  Fields serialize as child elements; None → element omitted
-  (NiFi's XMLRecordSetWriter "suppress nulls" default); arrays repeat
-  the element; structs nest.
-- **reader**: ``binaryFile`` scan → ``xml.etree`` pull parse per file →
-  typed rows under an explicit schema (schema-on-read discipline — the
-  XMLReader service resolves a schema before parsing, and so do we).
-
-Scale notes: parallelism is per-file both ways (XML has no splittable
-container format — true for spark-xml at file granularity too unless
-records are line-delimited); the FlowFile-shaped layout (many
-record-set-sized documents) is exactly that.  All parsing runs in
-executors; the driver never sees content.
+Reading and writing XML records is Spark's own ``format("xml")``, reached
+through ``sources/formats.read_records``/``write_records``.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-from collections.abc import Iterator
-from typing import Any
 from xml.etree import ElementTree as ET
-from xml.sax.saxutils import escape
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-__all__ = ["write_xml", "read_xml", "validate_xml"]
-
-
-def _serialize_value(name: str, value: Any, dt: T.DataType, out: list[str]) -> None:
-    if value is None:
-        return
-    if isinstance(dt, T.ArrayType):
-        for item in value:
-            _serialize_value(name, item, dt.elementType, out)
-        return
-    if isinstance(dt, T.StructType):
-        out.append(f"<{name}>")
-        record_fields(value, dt, out)
-        out.append(f"</{name}>")
-        return
-    if isinstance(dt, T.BinaryType):
-        text = bytes(value).hex()
-    elif isinstance(dt, T.BooleanType):
-        text = "true" if value else "false"
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        text = value.isoformat(sep=" ")
-    else:
-        text = str(value)
-    out.append(f"<{name}>{escape(text)}</{name}>")
-
-
-def record_fields(row: Any, schema: T.StructType, out: list[str]) -> None:
-    get = row.get if isinstance(row, dict) else None
-    for i, f in enumerate(schema.fields):
-        v = get(f.name) if get is not None else row[i]
-        _serialize_value(f.name, v, f.dataType, out)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    root_tag: str = "records",
-    record_tag: str = "record",
-) -> None:
-    """XMLRecordSetWriter: one XML document per partition under ``path``."""
-    if os.path.isdir(path):
-        if mode == "ignore":
-            return
-        if mode in ("error", "errorifexists"):
-            raise FileExistsError(path)
-        if mode == "overwrite":
-            for name in os.listdir(path):
-                if name.endswith(".xml"):
-                    os.unlink(os.path.join(path, name))
-    os.makedirs(path, exist_ok=True)
-    schema = df.schema
-
-    def write_partition(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        from apache_nifi_spark.sources.avro_codec import _pdf_rows
-
-        fname = os.path.join(path, f"part-{uuid.uuid4().hex}.xml")
-        tmp = fname + ".inprogress"
-        n = 0
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}>\n')
-            for pdf in batches:
-                for row in _pdf_rows(pdf, schema):
-                    parts: list[str] = [f"<{record_tag}>"]
-                    record_fields(row, schema, parts)
-                    parts.append(f"</{record_tag}>")
-                    fh.write("".join(parts) + "\n")
-                    n += 1
-            fh.write(f"</{root_tag}>\n")
-        if n:
-            os.replace(tmp, fname)
-        else:
-            os.unlink(tmp)
-        yield pd.DataFrame({"file": [fname], "rows": [n]})
-
-    df.mapInPandas(write_partition, schema="file string, rows long").collect()  # control-plane: one manifest row per partition
-
-
-def _parse_value(el_list: list, dt: T.DataType) -> Any:
-    """Typed parse of the element(s) matching one field."""
-    import datetime as _dt
-    from decimal import Decimal
-
-    if isinstance(dt, T.ArrayType):
-        return [_parse_value([e], dt.elementType) for e in el_list]
-    if not el_list:
-        return None
-    el = el_list[0]
-    if isinstance(dt, T.StructType):
-        return _parse_record(el, dt)
-    text = el.text or ""
-    if isinstance(dt, T.StringType):
-        return text
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return int(text)
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float(text)
-    if isinstance(dt, T.BooleanType):
-        return text.strip().lower() == "true"
-    if isinstance(dt, T.BinaryType):
-        return bytes.fromhex(text)
-    if isinstance(dt, T.DecimalType):
-        return Decimal(text)
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return _dt.datetime.fromisoformat(text)
-    if isinstance(dt, T.DateType):
-        return _dt.date.fromisoformat(text)
-    raise TypeError(f"no XML parse for {dt}")
-
-
-def _parse_record(el: ET.Element, schema: T.StructType) -> dict:
-    by_tag: dict[str, list] = {}
-    for child in el:
-        by_tag.setdefault(child.tag, []).append(child)
-    return {
-        f.name: _parse_value(by_tag.get(f.name, []), f.dataType) for f in schema.fields
-    }
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    record_tag: str = "record",
-) -> DataFrame:
-    """XMLReader: distributed typed parse of a directory of XML documents.
-
-    Explicit schema required (the controller-service contract); every
-    ``<record_tag>`` element anywhere in each document becomes one row.
-    """
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    names = [f.name for f in schema.fields]
-    fields = schema.fields
-
-    def decode_files(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                root = ET.fromstring(bytes(content).decode("utf-8"))
-                rows = []
-                iters = [root] if root.tag == record_tag else root.iter(record_tag)
-                for rec in iters:
-                    d = _parse_record(rec, T.StructType(fields))
-                    rows.append(tuple(d[n] for n in names))
-                yield pd.DataFrame(rows, columns=names)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
-        .select("content")
-    )
-    return files.mapInPandas(decode_files, schema=schema)
+__all__ = ["validate_xml"]
 
 
 def validate_xml(

@@ -219,6 +219,10 @@ if __name__ == "__main__":
         "put_slack_webhook_post", "invoke_http_enrich",
         "stats_correlation_matrix", "stats_spearman_rank",
         "graph_pagerank_links", "events_attribution_models",
+        "convert_record_avro", "convert_record_avro_nested",
+        "convert_record_xml", "convert_avro_to_json",
+        "split_avro_datum", "avro_schema_evolution_read",
+        "extract_avro_metadata_info",
     )
     for must in panel:
         if must in result["queries"]:

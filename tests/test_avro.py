@@ -1,10 +1,13 @@
-"""Avro Object Container File codec: spec-level bytes + distributed paths.
+"""Avro: the block-level codec's spec bytes + the record-set path.
 
-The codec (sources/avro_codec.py) is a dependency-free implementation of
-the public Avro 1.11 spec — NiFi's default record wire format (SURVEY.md
-§2.2).  These tests pin (a) the binary encoding against hand-computed
-spec bytes, (b) lossless Spark round-trips incl. nulls / nested types /
-both block codecs, and (c) schema inference from a container header.
+The block codec (sources/avro_codec.py) is a dependency-free
+implementation of the public Avro 1.11 spec — NiFi's default record wire
+format (SURVEY.md §2.2); record sets go through Spark's Avro file format
+behind sources/formats.  These tests pin (a) the binary encoding against
+hand-computed spec bytes, (b) lossless round-trips through
+write_records/read_records incl. nulls / nested types / both block
+codecs, (c) schema inference from a container header, and (d) that the
+block codec reads every container the engine writes.
 """
 
 from datetime import date, datetime
@@ -14,13 +17,13 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
+from apache_nifi_spark.sources import read_records, write_records
 from apache_nifi_spark.sources.avro_codec import (
     avro_to_spark_schema,
     decode_container,
     encode_container,
-    read_avro,
+    read_header,
     spark_to_avro_schema,
-    write_avro,
 )
 
 
@@ -55,6 +58,20 @@ def test_union_null_branch_indexes():
         "fields": [{"name": "v", "type": ["null", "long"], "default": None}],
     }
     data = b"".join(encode_container(iter([(None,), (5,)]), schema, codec="null"))
+    _, rows = decode_container(data)
+    assert rows == [(None,), (5,)]
+
+
+def test_union_null_second_branch_indexes():
+    """Spark writes nullable fields as ``[T, "null"]``: null is branch 1
+    (zigzag 0x02) and the value branch 0 (0x00)."""
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "v", "type": ["long", "null"]}],
+    }
+    data = b"".join(encode_container(iter([(None,), (5,)]), schema, codec="null"))
+    assert b"\x02\x00\x0a" in data  # null → 02; 5 → branch 00 + zigzag(5)
     _, rows = decode_container(data)
     assert rows == [(None,), (5,)]
 
@@ -125,14 +142,27 @@ def test_pure_python_roundtrip_logicals_and_nulls():
     assert out == rows
 
 
+def _part_files(path):
+    import glob
+
+    return sorted(glob.glob(f"{path}/part-*.avro"))
+
+
+#: Avro block codec → Spark's ``compression`` option naming it
+_SPARK_COMPRESSION = {"null": "uncompressed", "deflate": "deflate"}
+
+
 @pytest.mark.parametrize("codec", ["null", "deflate"])
 def test_spark_roundtrip_orders(spark, tmp_path, codec):
     from apache_nifi_spark.io import load_table
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     out = str(tmp_path / f"orders_{codec}")
-    write_avro(orders, out, codec=codec)
-    back = read_avro(spark, out)
+    write_records(orders, out, "avro", options={"compression": _SPARK_COMPRESSION[codec]})
+    for part in _part_files(out):
+        with open(part, "rb") as fh:
+            assert read_header(fh.read(65536))[1] == codec
+    back = read_records(spark, out, "avro")
     assert back.schema.fieldNames() == orders.schema.fieldNames()
     a = orders.orderBy("o_orderkey").collect()
     b = back.orderBy("o_orderkey").collect()
@@ -144,8 +174,8 @@ def test_spark_roundtrip_nested_array(spark, tmp_path):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     out = str(tmp_path / "emb")
-    write_avro(emb, out)
-    back = read_avro(spark, out)
+    write_records(emb, out, "avro")
+    back = read_records(spark, out, "avro")
     assert emb.orderBy("vec_id").collect() == back.orderBy("vec_id").collect()
 
 
@@ -176,8 +206,8 @@ def test_spark_roundtrip_nulls_structs_maps(spark, tmp_path):
         schema,
     )
     out = str(tmp_path / "mixed")
-    write_avro(df, out)
-    back = read_avro(spark, out)
+    write_records(df, out, "avro")
+    back = read_records(spark, out, "avro")
     assert sorted(df.collect(), key=lambda r: r.id) == sorted(back.collect(), key=lambda r: r.id)
 
 
@@ -186,25 +216,33 @@ def test_read_avro_infers_schema_from_header(spark, tmp_path):
 
     sup = load_table(spark, "/root/testdata/sf0.001", "supplier")
     out = str(tmp_path / "sup")
-    write_avro(sup, out)
-    back = read_avro(spark, out)  # no schema given — header inference
+    write_records(sup, out, "avro")
+    back = read_records(spark, out, "avro")  # no schema given — header inference
     assert set(back.columns) == set(sup.columns)
     assert back.count() == sup.count()
 
 
-def test_write_modes(spark, tmp_path):
+def test_default_write_is_deflate_readable_by_block_codec(spark, tmp_path):
+    """write_records' Avro default is the deflate codec, which the
+    engine's own container readers decode (they refuse Spark's default
+    snappy): every part file decodes with decode_container and together
+    they give back the written rows."""
     from apache_nifi_spark.io import load_table
 
-    sup = load_table(spark, "/root/testdata/sf0.001", "supplier")
-    out = str(tmp_path / "modes")
-    write_avro(sup, out)
-    n = read_avro(spark, out).count()
-    with pytest.raises(FileExistsError):
-        write_avro(sup, out, mode="error")
-    write_avro(sup.limit(1), out, mode="ignore")
-    assert read_avro(spark, out).count() == n  # untouched
-    write_avro(sup, out, mode="overwrite")
-    assert read_avro(spark, out).count() == n
+    orders = load_table(spark, "/root/testdata/sf0.001", "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    out = str(tmp_path / "deflate")
+    write_records(orders.repartition(3), out, "avro")
+    parts = _part_files(out)
+    assert len(parts) == 3
+    rows = []
+    for part in parts:
+        with open(part, "rb") as fh:
+            data = fh.read()
+        assert read_header(data)[1] == "deflate"
+        rows.extend(decode_container(data)[1])
+    assert sorted(rows) == sorted(tuple(r) for r in orders.collect())
 
 
 def test_schema_resolution_paths():

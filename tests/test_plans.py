@@ -305,6 +305,11 @@ def test_jvm_queries_keep_wholestage_codegen(spark, sf_dir):
         # file-bus consumer: plan is a bare landed-file scan whose work
         # happened at publish time — nothing left to codegen
         "publish_consume_kafka_bus",
+        # reader→writer bridges over row-based scans, like the csv/json
+        # ones above: a bare Avro/XML scan, and (nested) a projection
+        # whose `transform` lambda is a CodegenFallback expression
+        "convert_record_avro", "convert_record_avro_nested",
+        "convert_record_xml",
     }
     py_nodes = (
         "MapInPandas", "ArrowEvalPython", "BatchEvalPython",

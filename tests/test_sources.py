@@ -28,31 +28,36 @@ def test_convert_record_csv_roundtrip_preserves_types(spark, sf_dir):
     assert sorted(back.collect()) == sorted(sup.collect())
 
 
-def test_put_file_conflict_strategies(spark, sf_dir):
+@pytest.mark.parametrize("fmt", ["parquet", "avro", "xml"])
+def test_put_file_conflict_strategies(spark, sf_dir, fmt):
     nation = io.load_table(spark, sf_dir, "nation")
     out = tempfile.mkdtemp(prefix="t_modes_")
-    write_records(nation, out, "parquet")  # initial write
+    write_records(nation, out, fmt)  # initial write
     n = nation.count()
 
+    def count() -> int:
+        return read_records(spark, out, fmt, schema=nation.schema).count()
+
     # replace: overwrites in full
-    write_records(nation.limit(5), out, "parquet", mode="overwrite")
-    assert read_records(spark, out, "parquet").count() == 5
+    write_records(nation.limit(5), out, fmt, mode="overwrite")
+    assert count() == 5
     # ignore: silently keeps existing content
-    write_records(nation, out, "parquet", mode="ignore")
-    assert read_records(spark, out, "parquet").count() == 5
+    write_records(nation, out, fmt, mode="ignore")
+    assert count() == 5
     # fail: raises on existing target
     with pytest.raises(AnalysisException):
-        write_records(nation, out, "parquet", mode="error")
+        write_records(nation, out, fmt, mode="error")
     # append: adds
-    write_records(nation, out, "parquet", mode="append")
-    assert read_records(spark, out, "parquet").count() == 5 + n
+    write_records(nation, out, fmt, mode="append")
+    assert count() == 5 + n
 
 
-def test_partitioned_write_prunes_directories(spark, sf_dir):
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_partitioned_write_prunes_directories(spark, sf_dir, fmt):
     orders = io.load_table(spark, sf_dir, "orders")
     out = tempfile.mkdtemp(prefix="t_part_")
-    write_records(orders, out, "parquet", partition_by=["o_orderstatus"])
-    back = read_records(spark, out, "parquet").filter(F.col("o_orderstatus") == "F")
+    write_records(orders, out, fmt, partition_by=["o_orderstatus"])
+    back = read_records(spark, out, fmt).filter(F.col("o_orderstatus") == "F")
     assert back.count() == orders.filter(F.col("o_orderstatus") == "F").count()
     # partition pruning: the filter lands in PartitionFilters, not Filter
     plan = back._jdf.queryExecution().executedPlan().toString()
@@ -211,9 +216,9 @@ def test_jdbc_derby_roundtrip_partitioned(spark, sf_dir):
 
 
 def test_read_write_records_dispatch_codec_formats(spark, sf_dir, tmp_path):
-    """The RecordReader/Writer surface routes avro and xml through the
-    dependency-free codecs (formats._FORMATS gate) with the same
-    read_records/write_records API as native formats."""
+    """The RecordReader/Writer surface routes avro and xml through
+    Spark's own file formats (formats._FORMATS gate) with the same
+    read_records/write_records API as the other formats."""
     from apache_nifi_spark.io import load_table
     from apache_nifi_spark.sources import read_records, write_records
 

@@ -1,15 +1,14 @@
-"""XML RecordReader/RecordSetWriter codec (sources/xml_codec.py).
+"""XML records through Spark's XML file format (sources/formats).
 
 Round-trip fidelity under an explicit schema (the XMLReader controller-
-service contract), escaping, null suppression, arrays-as-repeated-
-elements, nested structs, and write modes.
+service contract), escaping, surrounding spaces, null suppression,
+arrays-as-repeated-elements, nested structs, and binary content.
 """
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from apache_nifi_spark.sources.xml_codec import read_xml, write_xml
+from apache_nifi_spark.sources import read_records, write_records
 
 
 def test_roundtrip_fixture_table(spark, tmp_path):
@@ -17,8 +16,8 @@ def test_roundtrip_fixture_table(spark, tmp_path):
 
     sup = load_table(spark, "/root/testdata/sf0.001", "supplier")
     out = str(tmp_path / "sup")
-    write_xml(sup, out)
-    back = read_xml(spark, out, sup.schema)
+    write_records(sup, out, "xml")
+    back = read_records(spark, out, "xml", schema=sup.schema)
     assert sorted(sup.collect()) == sorted(back.collect())
 
 
@@ -27,8 +26,8 @@ def test_roundtrip_timestamps_and_doubles(spark, tmp_path):
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     out = str(tmp_path / "orders")
-    write_xml(orders, out)
-    back = read_xml(spark, out, orders.schema)
+    write_records(orders, out, "xml")
+    back = read_records(spark, out, "xml", schema=orders.schema)
     a = orders.orderBy("o_orderkey").collect()
     b = back.orderBy("o_orderkey").collect()
     assert a == b
@@ -36,16 +35,18 @@ def test_roundtrip_timestamps_and_doubles(spark, tmp_path):
 
 def test_escaping_special_chars(spark, tmp_path):
     df = spark.createDataFrame(
-        [(1, "a<b&c>d"), (2, 'quote"apos\''), (3, "tag</record>injection")],
+        [(1, "a<b&c>d"), (2, 'quote"apos\''), (3, "tag</record>injection"), (4, "  pad  ")],
         "id bigint, s string",
     )
     out = str(tmp_path / "esc")
-    write_xml(df, out)
-    back = read_xml(spark, out, df.schema)
+    write_records(df, out, "xml")
+    back = read_records(spark, out, "xml", schema=df.schema)
     assert sorted(df.collect()) == sorted(back.collect())
 
 
 def test_null_suppression_and_arrays_and_structs(spark, tmp_path):
+    import glob
+
     schema = T.StructType(
         [
             T.StructField("id", T.LongType(), False),
@@ -71,33 +72,30 @@ def test_null_suppression_and_arrays_and_structs(spark, tmp_path):
         schema,
     )
     out = str(tmp_path / "nested")
-    write_xml(df, out)
-    back = read_xml(spark, out, schema)
+    write_records(df.coalesce(1), out, "xml")
+    (doc,) = [open(p, encoding="utf-8").read() for p in glob.glob(f"{out}/part-*.xml")]
+    assert doc.count("<records") == 1 and doc.count("<record>") == 2
+    assert "<name>" not in doc.split("<id>2</id>")[1]  # null element omitted
+    back = read_records(spark, out, "xml", schema=schema)
     rows = {r.id: r for r in back.collect()}
     assert rows[1].tags == ["a", "b", "c"]
     assert rows[1].addr.city == "Springfield" and rows[1].addr.zip == 12345
     assert rows[2].name is None and rows[2].addr is None
     # empty array is indistinguishable from absent (repeated-element
-    # encoding) — reads back as [] because containsNull list yields no hits
-    assert rows[2].tags == []
-
-
-def test_write_modes(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a")], "id bigint, s string")
-    out = str(tmp_path / "modes")
-    write_xml(df, out)
-    with pytest.raises(FileExistsError):
-        write_xml(df, out, mode="error")
-    write_xml(df, out, mode="ignore")
-    write_xml(df, out, mode="overwrite")
-    assert read_xml(spark, out, df.schema).count() == 1
+    # encoding) — an absent element reads back as null, as it does in
+    # NiFi's XMLReader
+    assert rows[2].tags is None
 
 
 def test_binary_hex_roundtrip(spark, tmp_path):
+    import glob
+
     df = spark.createDataFrame([(1, bytearray(b"\x00\xff<&>"))], "id bigint, raw binary")
     out = str(tmp_path / "bin")
-    write_xml(df, out)
-    back = read_xml(spark, out, df.schema)
+    write_records(df.coalesce(1), out, "xml")
+    (doc,) = [open(p, encoding="utf-8").read() for p in glob.glob(f"{out}/part-*.xml")]
+    assert "<raw>[00 FF 3C 26 3E]</raw>" in doc  # Spark's binary text form
+    back = read_records(spark, out, "xml", schema=df.schema)
     assert bytes(back.first().raw) == b"\x00\xff<&>"
 
 
