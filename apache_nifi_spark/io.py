@@ -6,11 +6,19 @@ ConvertRecord bridge) live in :mod:`apache_nifi_spark.sources.formats`.
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``load_table`` never caches or collects, so the 100 TB
 path streams through executors untouched by the driver.
+
+Scratch space (staged fixtures, landing zones, stream checkpoints, query
+outputs) comes from :func:`scratch`, the engine's one owner of temporary
+directories.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +30,7 @@ __all__ = [
     "register_views",
     "widen_if_narrow",
     "normalize_events_ts",
+    "scratch",
 ]
 
 #: Fixture tables the driver materializes (TESTDATA.md).
@@ -37,6 +46,26 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def scratch(prefix: str) -> str:
+    """Make a fresh directory named ``<prefix>…`` under the process's
+    scratch root and return its path.
+
+    The root is one ``anspark_*`` directory made on first use under
+    ``tempfile.gettempdir()`` as it is then, so a ``TMPDIR`` or
+    ``tempfile.tempdir`` set before the first query still applies.  One
+    ``atexit`` hook removes the root and everything under it when the
+    interpreter exits; nothing is removed earlier unless its owner does
+    it (``streaming.sources.drain`` removes its private checkpoint)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="anspark_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 #: (applicationId, sf_dir, table) → lazy scan DataFrame; see load_table.

@@ -20,6 +20,7 @@ Determinism rules (so order-insensitive value hashes match bit-for-bit):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -1762,12 +1763,10 @@ def convert_record_csv_q(spark, sf_dir):
     RecordSetWriter, read back with the CSV RecordReader under the SOURCE
     schema — the round-trip must be lossless (header names, typed parse,
     round-trippable float serialization)."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="anspark_convert_csv_")
+    out = io.scratch("anspark_convert_csv_")
     return convert_record(spark, sup, "csv", out)
 
 
@@ -1779,12 +1778,10 @@ def convert_record_csv_q(spark, sf_dir):
 def convert_record_json_q(spark, sf_dir):
     """ConvertRecord parquet→JSON-lines→records, including timestamp
     fidelity through ISO-8601 text."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="anspark_convert_json_")
+    out = io.scratch("anspark_convert_json_")
     return convert_record(spark, orders, "json", out)
 
 
@@ -1800,12 +1797,10 @@ def convert_record_avro_q(spark, sf_dir):
     the source schema).  The round-trip must be value-exact through longs,
     doubles, UTF-8 strings and dates.  The oracle pins a deterministic
     1-in-10 key subset."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    out = tempfile.mkdtemp(prefix="anspark_convert_avro_")
+    out = io.scratch("anspark_convert_avro_")
     return convert_record(spark, orders, "avro", out)
 
 
@@ -1831,12 +1826,10 @@ def convert_record_avro_nested_q(spark, sf_dir):
     multiply and floor are EXACT IEEE ops, so the rendering is a pure
     function of the round-tripped float bits, engine-identical with no
     decimal-rounding edge anywhere."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="anspark_convert_avro_emb_")
+    out = io.scratch("anspark_convert_avro_emb_")
     rt = convert_record(spark, emb, "avro", out)
     return rt.select(
         "vec_id",
@@ -1866,8 +1859,6 @@ def split_avro_datum_q(spark, sf_dir):
     per-datum FlowFile fan-out — then every little container decodes
     standalone and the union must equal the source rows
     (sources/avro_codec.split_avro_column)."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import (
         decode_container,
@@ -1877,7 +1868,7 @@ def split_avro_datum_q(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out = tempfile.mkdtemp(prefix="anspark_splitavro_")
+    out = io.scratch("anspark_splitavro_")
     write_records(o, out, "avro")
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     split = split_avro_column(containers)
@@ -1908,14 +1899,12 @@ def convert_record_orc_q(spark, sf_dir):
     """ConvertRecord parquet→ORC→records (§2.2): the ORC record
     reader/writer pairing on Spark's native columnar ORC path —
     round-trip must be value-exact under the source schema."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out = tempfile.mkdtemp(prefix="anspark_convert_orc_")
+    out = io.scratch("anspark_convert_orc_")
     return convert_record(spark, sup, "orc", out)
 
 
@@ -1939,15 +1928,13 @@ def avro_schema_evolution_q(spark, sf_dir):
     (d) skips a writer-only field (o_orderstatus).  Spark writes the v1
     containers; decode fans out per file via binaryFile + mapInPandas
     (sources/avro_codec.decode_container_resolved)."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import decode_container_resolved
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    out = tempfile.mkdtemp(prefix="anspark_avroevo_")
+    out = io.scratch("anspark_avroevo_")
     write_records(o, out, "avro")
     reader_schema = {
         "type": "record",
@@ -2018,7 +2005,6 @@ def extract_avro_metadata_q(spark, sf_dir):
     default schema orders unions ``["long", "null"]`` and so fingerprints
     differently."""
     import json
-    import tempfile
 
     from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import (
@@ -2032,7 +2018,7 @@ def extract_avro_metadata_q(spark, sf_dir):
         .select("o_orderkey", "o_orderstatus")
         .coalesce(1)
     )
-    out = tempfile.mkdtemp(prefix="anspark_avrometa_")
+    out = io.scratch("anspark_avrometa_")
     write_records(
         o, out, "avro", options={"avroSchema": json.dumps(spark_to_avro_schema(o.schema))}
     )
@@ -2054,14 +2040,12 @@ def convert_avro_to_json_q(spark, sf_dir):
     (Spark's Avro reader via sources/formats.read_records) straight into
     JSON text per datum — the processor's FlowFile content transform —
     via to_json over the decoded record struct."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_records, write_records
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderpriority"
     )
-    out = tempfile.mkdtemp(prefix="anspark_avrojson_")
+    out = io.scratch("anspark_avrojson_")
     write_records(o, out, "avro")
     back = read_records(spark, out, "avro")
     return back.select(
@@ -2164,12 +2148,10 @@ def convert_record_xml_q(spark, sf_dir):
     XMLRecordSetWriter pairing (§2.2) on Spark's XML file format through
     sources/formats.  Round-trip must be value-exact through element
     escaping and typed re-parse under the source schema."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="anspark_convert_xml_")
+    out = io.scratch("anspark_convert_xml_")
     return convert_record(spark, sup, "xml", out)
 
 
@@ -2213,12 +2195,10 @@ def put_file_partitioned_q(spark, sf_dir):
     """PartitionRecord + PutFile (§2.2/§2.5): write orders partitioned by
     status (one directory per key), then aggregate per partition on
     read-back — the scan prunes to partition directories."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_records, write_records
 
     orders = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="anspark_putfile_")
+    out = io.scratch("anspark_putfile_")
     write_records(orders.repartition("o_orderstatus"), out, "parquet", partition_by=["o_orderstatus"])
     back = read_records(spark, out, "parquet")
     return back.groupBy("o_orderstatus").agg(
@@ -2775,11 +2755,9 @@ def stream_multi_route_q(spark, sf_dir):
     micro-batch once and appends every route's rows to its own directory;
     read-back counts per route are the oracle check.  (Routes here are
     disjoint so 'all matching' equals 'first matching'.)"""
-    import tempfile
-
     from apache_nifi_spark.streaming import route_stream_to_files, stream_events
 
-    base = tempfile.mkdtemp(prefix="anspark_routes_")
+    base = io.scratch("anspark_routes_")
     sdf = stream_events(spark, sf_dir)
     route_stream_to_files(
         sdf,
@@ -3508,7 +3486,6 @@ def _staged_bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
     li_name, o_name = _bucketed_names(sf_dir)
     if spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name):
         return li_name, o_name
-    import tempfile
 
     from apache_nifi_spark.sources import write_bucketed
 
@@ -3516,7 +3493,7 @@ def _staged_bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    base = tempfile.mkdtemp(prefix="anspark_bucketed_")
+    base = io.scratch("anspark_bucketed_")
     write_bucketed(li, li_name, ["l_orderkey"], 8, path=f"{base}/li")
     write_bucketed(o, o_name, ["l_orderkey"], 8, path=f"{base}/o")
     return li_name, o_name
@@ -3997,36 +3974,28 @@ from apache_nifi_spark import registry_stats  # noqa: E402,F401
 from apache_nifi_spark import registry_analytics  # noqa: E402,F401
 
 
-_ICEBERG_POSDEL_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_posdel(spark, sf_dir):
     """Iceberg v2 table with POSITION DELETES: documents [0,400) in two
     position-sorted data files, one data commit, then TWO delete
     commits marking every ``doc_id % 7 == 3`` ordinal (split by parity
     so the reader proves multi-delete-file union) — data parquet never
     rewritten."""
-    if sf_dir in _ICEBERG_POSDEL_STAGE:
-        return _ICEBERG_POSDEL_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceposdel_")
+    root = io.scratch("anspark_iceposdel_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     added, paths = [], {}
     for k in range(2):
-        (
+        p = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 200) & (F.col("doc_id") < k * 200 + 200)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*200
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - k*200
+            f"{root}/f{k}",
         )
-        p = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         paths[k] = p
         added.append({"file_path": p, "partition": f"p{k}",
                       "record_count": 200,
@@ -4039,7 +4008,6 @@ def _staged_iceberg_posdel(spark, sf_dir):
     iceberg_commit(root, 603, added=[], position_deletes={
         paths[0]: [d for d in range(3, 200, 7) if d % 2 == 0],
     })
-    _ICEBERG_POSDEL_STAGE[sf_dir] = root
     return root
 
 

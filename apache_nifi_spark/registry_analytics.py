@@ -9,6 +9,8 @@ Determinism rules per the registry module docstring.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -584,7 +586,11 @@ def stats_ab_test_ztest_q(spark, sf_dir):
 
 
 _SEG_SORT_THRESHOLD = 20_000_000  # rows one task can sort without spill
-_CUST_COUNT_CACHE: dict[str, int] = {}
+
+
+@functools.cache
+def _customer_count(spark, sf_dir):
+    return _t(spark, sf_dir, "customer").count()
 
 
 def _segment_sort_is_safe(spark, sf_dir, threshold=None):
@@ -596,12 +602,10 @@ def _segment_sort_is_safe(spark, sf_dir, threshold=None):
     task's sort memory.  Customer count upper-bounds any segment's
     cardinality; above the threshold the queries route to the
     segment×64-bucket two-level prefix sum instead.  The count is a
-    parquet-metadata job, cached per sf_dir."""
+    parquet-metadata job, cached per (session, sf_dir)."""
     if threshold is None:
         threshold = _SEG_SORT_THRESHOLD
-    if sf_dir not in _CUST_COUNT_CACHE:
-        _CUST_COUNT_CACHE[sf_dir] = _t(spark, sf_dir, "customer").count()
-    return _CUST_COUNT_CACHE[sf_dir] <= threshold
+    return _customer_count(spark, sf_dir) <= threshold
 
 
 def _segment_ranked_two_level(r, desc=False, want_cum=False, buckets=64):

@@ -9,6 +9,7 @@ Split out of ``registry.py`` (round-12 verdict item 8).  Same
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -90,8 +91,6 @@ def publish_amqp_wire_q(spark, sf_dir):
     drains the landing dir and applies the ``region.*.u1`` TOPIC BINDING
     exactly as the exchange routes (streaming/amqp_bus.binding_matches),
     aggregating value-exact."""
-    import tempfile
-
     from apache_nifi_spark.streaming.amqp_bus import binding_matches
     from apache_nifi_spark.streaming.amqp_wire import MiniAmqpBroker, publish_amqp
 
@@ -109,7 +108,7 @@ def publish_amqp_wire_q(spark, sf_dir):
             F.col("event_id").cast("string"), F.lit(","), F.col("event_type")
         ).alias("payload"),
     )
-    landing = tempfile.mkdtemp(prefix="anspark_amqp_")
+    landing = io.scratch("anspark_amqp_")
     with MiniAmqpBroker(landing) as broker:
         sent = publish_amqp(msgs, "127.0.0.1", broker.port, "events", "rkey", "payload")
         n_sent = sent.filter("published").count()
@@ -146,8 +145,6 @@ def publish_mqtt_wire_q(spark, sf_dir):
     landing dir and applies the ``sensors/+/u1`` topic FILTER exactly as
     ConsumeMQTT's subscription does (functions/selectors), aggregating
     value-exact — frame encode → wire → land → filter is lossless."""
-    import tempfile
-
     from apache_nifi_spark.functions.selectors import mqtt_topic_matches
     from apache_nifi_spark.streaming.mqtt import MiniMqttBroker, publish_mqtt
 
@@ -165,7 +162,7 @@ def publish_mqtt_wire_q(spark, sf_dir):
             F.col("event_id").cast("string"), F.lit(","), F.col("event_type")
         ).alias("payload"),
     )
-    landing = tempfile.mkdtemp(prefix="anspark_mqtt_")
+    landing = io.scratch("anspark_mqtt_")
     with MiniMqttBroker(landing) as broker:
         sent = publish_mqtt(msgs, "127.0.0.1", broker.port, "topic", "payload")
         n_sent = sent.filter("published").count()
@@ -207,7 +204,6 @@ def put_elasticsearch_live_q(spark, sf_dir):
     landed documents must aggregate value-exact — render + bulk-POST +
     index is lossless end-to-end."""
     import json as _json
-    import tempfile
     import urllib.request
 
     from apache_nifi_spark.operators.http import post_http
@@ -232,7 +228,7 @@ def put_elasticsearch_live_q(spark, sf_dir):
     bodies = rendered.groupBy(F.spark_partition_id().alias("p")).agg(
         F.concat_ws("\n", F.collect_list("bulk")).alias("payload")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_es_")
+    landing = io.scratch("anspark_es_")
     with MiniElasticServer(landing) as srv:
         sent = post_http(bodies, srv.url + "/_bulk", "payload")
         assert sent.filter(F.col("status") != 200).count() == 0
@@ -268,8 +264,6 @@ def put_mongo_wire_q(spark, sf_dir):
     ``count`` must equal the sent total, a wire ``find`` smoke-reads,
     and the landed documents aggregate value-exact — the BSON encode →
     wire → decode → land loop is lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.mongo_wire import (
         MiniMongoServer,
         MongoWireClient,
@@ -279,7 +273,7 @@ def put_mongo_wire_q(spark, sf_dir):
     c = io.widen_if_narrow(
         _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 25 == 0)
     ).select("c_custkey", "c_mktsegment")
-    landing = tempfile.mkdtemp(prefix="anspark_mongo_")
+    landing = io.scratch("anspark_mongo_")
     with MiniMongoServer(landing) as srv:
         sent = put_mongo_records(c, "127.0.0.1", srv.port, "customers")
         assert sent.filter(~F.col("inserted")).count() == 0
@@ -617,8 +611,6 @@ def put_slack_webhook_post_q(spark, sf_dir):
     body durably; the landed JSON parses back and must aggregate
     value-exact — the render+transport hop is lossless.  All 200s are
     asserted (operators/http.post_http)."""
-    import tempfile
-
     from apache_nifi_spark.operators.http import post_http
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.streaming.listen import HttpLandingListener
@@ -635,7 +627,7 @@ def put_slack_webhook_post_q(spark, sf_dir):
     bodies = io.widen_if_narrow(ev).select(
         wire.slack_post_payload("#ops", text).alias("payload")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_slack_")
+    landing = io.scratch("anspark_slack_")
     with HttpLandingListener(landing) as lst:
         sent = post_http(bodies, lst.url + "services/hook", "payload")
         n_ok = sent.filter(F.col("status") == 200).count()
@@ -799,12 +791,10 @@ def publish_jms_wire_q(spark, sf_dir):
     published-subset + selector directly on the fixture: equality
     proves the wire hop is lossless, duplicate-free, and type-exact
     (double properties round-trip via shortest-repr strings)."""
-    import tempfile
-
     from apache_nifi_spark.functions import jms_selector
     from apache_nifi_spark.streaming.stomp import MiniStompBroker, publish_stomp
 
-    landing = tempfile.mkdtemp(prefix="anspark_stomp_land_")
+    landing = io.scratch("anspark_stomp_land_")
     with MiniStompBroker(landing) as broker:
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
         rendered = ev.select(
@@ -868,15 +858,11 @@ def jms_selector_consume_q(spark, sf_dir):
     )
 
 
-_SNMP_STAGE: dict[str, tuple] = {}
-
-
+@functools.cache
 def _staged_snmp(spark, sf_dir):
-    """Process-lifetime SNMP v2c agent whose MIB is the per-user
+    """Per-session SNMP v2c agent whose MIB is the per-user
     purchase-cents counters (users < 150 — a bounded enterprise-MIB
     slice, the GetSNMP device-poll shape)."""
-    if sf_dir in _SNMP_STAGE:
-        return _SNMP_STAGE[sf_dir]
     from apache_nifi_spark.sources.snmp import MiniSnmpAgent
 
     totals = (
@@ -894,8 +880,7 @@ def _staged_snmp(spark, sf_dir):
         for r in totals
     }
     agent = MiniSnmpAgent(mib)
-    _SNMP_STAGE[sf_dir] = (agent, sorted(int(r["user_id"]) for r in totals))
-    return _SNMP_STAGE[sf_dir]
+    return (agent, sorted(int(r["user_id"]) for r in totals))
 
 
 @register(
@@ -933,19 +918,14 @@ def get_snmp_poll_q(spark, sf_dir):
     )
 
 
-_DNS_STAGE: dict[str, object] = {}
-
-
+@functools.cache
 def _staged_dns(spark, sf_dir):
-    """Process-lifetime authoritative DNS server for the synthetic
+    """Per-session authoritative DNS server for the synthetic
     ``n<nationkey>.example.com`` zone (25 A records)."""
-    if sf_dir in _DNS_STAGE:
-        return _DNS_STAGE[sf_dir]
     from apache_nifi_spark.sources.dns_wire import MiniDnsServer
 
     zone = {f"n{k}.example.com": f"10.0.{k}.1" for k in range(25)}
-    _DNS_STAGE[sf_dir] = MiniDnsServer(zone)
-    return _DNS_STAGE[sf_dir]
+    return MiniDnsServer(zone)
 
 
 @register(
@@ -1076,37 +1056,30 @@ def convert_record_cbor_q(spark, sf_dir):
     1-in-10 key subset keeps the pure-Python encode cost proportionate
     in the suite bench (the avro twin uses % 10 = 0; this uses = 5 so
     the two codecs never share a cached scan).  sources/cbor_codec.py."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 10 == 5
     )
-    out = tempfile.mkdtemp(prefix="anspark_convert_cbor_")
+    out = io.scratch("anspark_convert_cbor_")
     return convert_record(spark, orders, "cbor", out)
 
-_PART_EVOLVE_STAGE: dict = {}
 
-
-def _staged_iceberg_evolved(spark, sf_dir):
-    """Process-lifetime partition-evolution fixture: commit 1 writes
+@functools.cache
+def _staged_iceberg_spec_evolved(spark, sf_dir):
+    """Per-session partition-evolution fixture: commit 1 writes
     quarters 0+1 UNPARTITIONED (spec 0); the default spec then evolves
     to identity(l_returnflag); commit 2 adds quarters 2+3 as one file
     per return flag under spec 1.  A partition-pruned read must keep
     scanning the spec-0 files (no metadata for the new column) while
     pruning spec-1 manifests by flag."""
-    if sf_dir in _PART_EVOLVE_STAGE:
-        return _PART_EVOLVE_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_evolve_partition_spec,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceberg_pe_")
+    root = io.scratch("anspark_iceberg_pe_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -1121,13 +1094,10 @@ def _staged_iceberg_evolved(spark, sf_dir):
 
     old = []
     for q in (0, 1):
-        (
-            li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/q{q}")
+        part = write_single_part(
+            li.filter(F.col("l_orderkey") % 4 == q).coalesce(1), f"{root}/q{q}"
         )
-        old.append(finfo(glob.glob(f"{root}/q{q}/part-*.parquet")[0]))
+        old.append(finfo(part))
     iceberg_commit(root, 1, added=old)
     iceberg_evolve_partition_spec(
         root,
@@ -1144,16 +1114,13 @@ def _staged_iceberg_evolved(spark, sf_dir):
         # identity-partitioned data files keep the source column (the
         # spec stores partition VALUES in metadata, not by dropping
         # the column from the file)
-        (
+        part = write_single_part(
             late.filter(F.col("l_returnflag") == flag)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/flag_{flag}")
+            .coalesce(1),
+            f"{root}/flag_{flag}",
         )
-        part = glob.glob(f"{root}/flag_{flag}/part-*.parquet")[0]
         added.append(finfo(part, partition=flag))
     iceberg_commit(root, 2, added=added)
-    _PART_EVOLVE_STAGE[sf_dir] = root
     return root
 
 
@@ -1181,7 +1148,7 @@ def iceberg_partition_evolution_q(spark, sf_dir):
     corrupted-manifest probe catches it.  sources/iceberg.py."""
     from apache_nifi_spark.sources.iceberg import read_iceberg_snapshot
 
-    root = _staged_iceberg_evolved(spark, sf_dir)
+    root = _staged_iceberg_spec_evolved(spark, sf_dir)
     snap = read_iceberg_snapshot(spark, root, partition="R")
     return snap.filter(F.col("l_returnflag") == "R").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1189,9 +1156,7 @@ def iceberg_partition_evolution_q(spark, sf_dir):
     )
 
 
-_ICEBERG_EQDEL_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_eqdel(spark, sf_dir):
     """Iceberg v2 table with EQUALITY DELETES (what a Flink CDC writer
     emits): commit 1 (seq 1) lands documents [0,300), commit 2 (seq 2)
@@ -1201,25 +1166,19 @@ def _staged_iceberg_eqdel(spark, sf_dir):
     lands [400,500) — which the seq-3 equality delete must NOT touch
     (strictly-lower applicability), even though those rows include the
     deleted languages."""
-    if sf_dir in _ICEBERG_EQDEL_STAGE:
-        return _ICEBERG_EQDEL_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceeqdel_")
+    root = io.scratch("anspark_iceeqdel_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k, (lo, hi) in enumerate([(0, 300), (300, 400), (400, 500)]):
-        (
+        paths[k] = write_single_part(
             docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - lo
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - lo
+            f"{root}/f{k}",
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k, n):
         return [{
@@ -1236,7 +1195,6 @@ def _staged_iceberg_eqdel(spark, sf_dir):
         equality_deletes=(["lang"], [("de",), ("fr",)]),
     )
     iceberg_commit(root, 704, added=add(2, 100))
-    _ICEBERG_EQDEL_STAGE[sf_dir] = root
     return root
 
 
@@ -1279,10 +1237,7 @@ def iceberg_equality_delete_q(spark, sf_dir):
     )
 
 
-_DELTA_MAINT_STAGE: dict[str, str] = {}
-_DELTA_VACUUM_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta_maint(spark, sf_dir):
     """Delta table needing maintenance: four SMALL files of documents
     [0,400) across two commits, a DV delete marking doc_id % 9 == 4
@@ -1291,11 +1246,7 @@ def _staged_delta_maint(spark, sf_dir):
     the rewrite.  The four small files stay on disk (time travel to
     v0–v2 must still work) until :func:`_staged_delta_vacuumed` runs
     retention over them."""
-    if sf_dir in _DELTA_MAINT_STAGE:
-        return _DELTA_MAINT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
         delta_optimize,
@@ -1303,20 +1254,18 @@ def _staged_delta_maint(spark, sf_dir):
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltamaint_")
+    root = io.scratch("anspark_deltamaint_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     rel = {}
     for k in range(4):
-        (
+        part = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - k*100
+            f"{root}/f{k}",
         )
-        part = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
 
     def add(k):
@@ -1333,18 +1282,16 @@ def _staged_delta_maint(spark, sf_dir):
     assert v == 3
     # pre-OPTIMIZE time travel still resolves the small files
     assert read_delta_snapshot(spark, root, 1).count() == 400
-    _DELTA_MAINT_STAGE[sf_dir] = root
     return root
 
 
+@functools.cache
 def _staged_delta_vacuumed(spark, sf_dir):
     """VACUUM over the maintenance fixture with the retention cutoff at
     the OPTIMIZE version: the four compacted small files become
     unreferenced by every retained snapshot and are physically deleted;
     the compacted file survives; the reader now refuses time travel
     below the cutoff (the documented trade-off)."""
-    if sf_dir in _DELTA_VACUUM_STAGE:
-        return _DELTA_VACUUM_STAGE[sf_dir]
     from apache_nifi_spark.sources.deltalog import (
         delta_vacuum,
         read_delta_snapshot,
@@ -1359,7 +1306,6 @@ def _staged_delta_vacuumed(spark, sf_dir):
         raise AssertionError("time travel below the VACUUM cutoff succeeded")
     except FileNotFoundError:
         pass
-    _DELTA_VACUUM_STAGE[sf_dir] = root
     return root
 
 
@@ -1427,9 +1373,7 @@ def delta_vacuum_survivor_q(spark, sf_dir):
     )
 
 
-_ICEBERG_COMPACT_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_compacted(spark, sf_dir):
     """Iceberg maintenance fixture (the Delta OPTIMIZE/VACUUM twin):
     four small files of documents [0,400) over two commits, a commit
@@ -1439,11 +1383,7 @@ def _staged_iceberg_compacted(spark, sf_dir):
     finally snapshot expiry of everything below the compaction, which
     must physically reclaim the replaced inputs while the compacted
     read stays byte-identical."""
-    if sf_dir in _ICEBERG_COMPACT_STAGE:
-        return _ICEBERG_COMPACT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_expire_snapshots,
@@ -1451,20 +1391,18 @@ def _staged_iceberg_compacted(spark, sf_dir):
         read_iceberg_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icecompact_")
+    root = io.scratch("anspark_icecompact_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k in range(4):
-        (
+        paths[k] = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - k*100
+            f"{root}/f{k}",
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(ks):
         return [{
@@ -1487,7 +1425,6 @@ def _staged_iceberg_compacted(spark, sf_dir):
     # expiry below the compaction reclaims the replaced inputs
     res = iceberg_expire_snapshots(root, keep_ids=[904])
     assert all(not os.path.exists(p) for p in paths.values()), res
-    _ICEBERG_COMPACT_STAGE[sf_dir] = root
     return root
 
 
@@ -1527,30 +1464,23 @@ def iceberg_rewrite_compacted_q(spark, sf_dir):
     )
 
 
-_DELTA_CDF_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta_cdf(spark, sf_dir):
     """Delta table with Change Data Feed: v0 adds documents [0,300)
     (plain add — the reader's DERIVED-insert path), v1 is a COW MERGE
     with cdc files (the EXPLICIT path): doc_id % 10 == 0 rows update
     lang to 'xx' (pre+postimage), % 10 == 5 rows delete, [300,350)
     insert."""
-    if sf_dir in _DELTA_CDF_STAGE:
-        return _DELTA_CDF_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         delta_commit_cdf,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltacdf_")
+    root = io.scratch("anspark_deltacdf_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     base = docs.filter(F.col("doc_id") < 300)
-    base.coalesce(1).write.parquet(f"{root}/base")
-    p0 = glob.glob(f"{root}/base/part-*.parquet")[0]
+    p0 = write_single_part(base.coalesce(1), f"{root}/base")
     rel0 = os.path.relpath(p0, root)
     write_commit(root, 0, [
         {"metaData": {"id": "anspark-cdf"}},
@@ -1576,7 +1506,6 @@ def _staged_delta_cdf(spark, sf_dir):
         .unionByName(ct(ins, "insert"))
     )
     delta_commit_cdf(spark, root, 1, [rel0], new_snap, cdc)
-    _DELTA_CDF_STAGE[sf_dir] = root
     return root
 
 
@@ -1631,9 +1560,7 @@ def delta_change_feed_q(spark, sf_dir):
     )
 
 
-_ICEBERG_MANIFEST_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_manifests(spark, sf_dir):
     """Fragmented-metadata fixture for rewrite_manifests: documents
     [0,400) in four files across two partitions, committed with
@@ -1641,30 +1568,24 @@ def _staged_iceberg_manifests(spark, sf_dir):
     writer produces), plus a position-delete commit (doc_id % 13 == 2
     ordinals of file 0), then the metadata compaction — which must
     shrink the manifest list while changing nothing a reader sees."""
-    if sf_dir in _ICEBERG_MANIFEST_STAGE:
-        return _ICEBERG_MANIFEST_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_rewrite_manifests,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icemanifests_")
+    root = io.scratch("anspark_icemanifests_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     added = []
     for k in range(4):
-        (
+        p = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - k*100
+            f"{root}/f{k}",
         )
-        p = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         added.append({"file_path": p, "partition": f"p{k % 2}",
                       "record_count": 100,
                       "file_size_in_bytes": os.path.getsize(p)})
@@ -1677,7 +1598,6 @@ def _staged_iceberg_manifests(spark, sf_dir):
     )
     _v, before, after = iceberg_rewrite_manifests(root, 953)
     assert before == 5 and after == 3, (before, after)
-    _ICEBERG_MANIFEST_STAGE[sf_dir] = root
     return root
 
 
@@ -1716,9 +1636,7 @@ def iceberg_rewrite_manifests_q(spark, sf_dir):
     )
 
 
-_DELTA_COLMAP_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta_colmap(spark, sf_dir):
     """Column-mapped Delta table (``delta.columnMapping.mode=name``)
     exercising the three operations the mode exists for, all WITHOUT
@@ -1737,18 +1655,15 @@ def _staged_delta_colmap(spark, sf_dir):
 
     Staging asserts the time-travel contract: at v0 the column reads as
     ``score``, at v1–v2 as ``quality``, at HEAD it is gone."""
-    if sf_dir in _DELTA_COLMAP_STAGE:
-        return _DELTA_COLMAP_STAGE[sf_dir]
-    import glob
     import json as _json
-    import tempfile
 
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         read_delta_snapshot_mapped,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltacolmap_")
+    root = io.scratch("anspark_deltacolmap_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
 
     def field(name, phys, typ="long"):
@@ -1785,10 +1700,7 @@ def _staged_delta_colmap(spark, sf_dir):
                 else [(F.col("doc_id") % 7).alias("col-3")]
             ),
         )
-        d.coalesce(1).write.mode("overwrite").parquet(f"{root}/f{k}")
-        rel[k] = os.path.relpath(
-            glob.glob(f"{root}/f{k}/part-*.parquet")[0], root
-        )
+        rel[k] = os.path.relpath(write_single_part(d.coalesce(1), f"{root}/f{k}"), root)
 
     def add(k):
         return {"add": {"path": rel[k], "size": os.path.getsize(
@@ -1811,7 +1723,6 @@ def _staged_delta_colmap(spark, sf_dir):
         "doc_id", "lang", "quality"]
     assert read_delta_snapshot_mapped(spark, root).columns == [
         "doc_id", "lang", "bucket"]
-    _DELTA_COLMAP_STAGE[sf_dir] = root
     return root
 
 
@@ -1863,9 +1774,7 @@ def delta_column_mapping_q(spark, sf_dir):
     )
 
 
-_ICEBERG_DV_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_dv(spark, sf_dir):
     """Spec-v3 deletion-vector fixture: documents [0,400) in two files,
     then (1) a DV commit marking doc_id % 11 == 5 ordinals of file 0,
@@ -1877,29 +1786,23 @@ def _staged_iceberg_dv(spark, sf_dir):
     untouched by them under the sequence rule.  Staging asserts exactly
     one active puffin remains and that time travel to the first DV
     commit applies only it."""
-    if sf_dir in _ICEBERG_DV_STAGE:
-        return _ICEBERG_DV_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_active_files,
         iceberg_commit,
         read_iceberg_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icedv_")
+    root = io.scratch("anspark_icedv_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k, (lo, hi) in enumerate([(0, 200), (200, 400), (400, 500)]):
-        (
+        paths[k] = write_single_part(
             docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - lo
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - lo
+            f"{root}/f{k}",
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k, n):
         return [{"file_path": paths[k], "partition": f"p{k}",
@@ -1920,7 +1823,6 @@ def _staged_iceberg_dv(spark, sf_dir):
     # time travel to 802 applies ONLY the first DV
     n802 = read_iceberg_snapshot(spark, root, 802).count()
     assert n802 == 400 - len([d for d in range(200) if d % 11 == 5])
-    _ICEBERG_DV_STAGE[sf_dir] = root
     return root
 
 
@@ -1961,9 +1863,7 @@ def iceberg_dv_q(spark, sf_dir):
     )
 
 
-_HUDI_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_hudi_cow(spark, sf_dir):
     """Hudi COW table exercising the full timeline protocol: c1 INSERT
     of four file groups (documents [0,400) in two partitions), c2 COW
@@ -1974,10 +1874,6 @@ def _staged_hudi_cow(spark, sf_dir):
     on disk), then a retention-checked CLEAN at c2 deleting exactly
     g1's superseded first slice; staging asserts time travel to c1
     fails loudly afterwards while c2/c3 replays stay byte-identical."""
-    if sf_dir in _HUDI_STAGE:
-        return _HUDI_STAGE[sf_dir]
-    import tempfile
-
     from apache_nifi_spark.sources.hudi import (
         hudi_clean,
         hudi_commit,
@@ -1986,7 +1882,7 @@ def _staged_hudi_cow(spark, sf_dir):
         read_hudi_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_hudi_")
+    root = io.scratch("anspark_hudi_")
     hudi_init(root, "anspark_docs")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     c1, c2, c3, c4 = (
@@ -2044,7 +1940,6 @@ def _staged_hudi_cow(spark, sf_dir):
     # retained replays stay exact: 500 docs minus the 15 upsert-dropped
     # ids (101, 108, ..., 199 — the %7==3 members of [100, 200))
     assert read_hudi_snapshot(spark, root, as_of=c3).count() == 485
-    _HUDI_STAGE[sf_dir] = root
     return root
 
 
@@ -2149,40 +2044,32 @@ def hudi_clustering_q(spark, sf_dir):
     )
 
 
-_ICEBERG_REF_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_iceberg_refs(spark, sf_dir):
     """Iceberg table with named refs: snapshot 901 (docs [0,200)),
     snapshot 902 (+[200,400)); a ``tag`` 'audit-q1' PINNED at 901 and
     a ``branch`` 'dev' at 902, each written as its own metadata
     version (the spec's atomic swap).  Staging asserts an unknown ref
     fails loudly and 'main' resolves to the current snapshot."""
-    if sf_dir in _ICEBERG_REF_STAGE:
-        return _ICEBERG_REF_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_resolve_ref,
         iceberg_set_ref,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icerefs_")
+    root = io.scratch("anspark_icerefs_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k in range(2):
-        (
+        paths[k] = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 200)
                 & (F.col("doc_id") < k * 200 + 200)
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .coalesce(1),
+            f"{root}/f{k}",
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k):
         return [{
@@ -2201,7 +2088,6 @@ def _staged_iceberg_refs(spark, sf_dir):
         raise AssertionError("unknown iceberg ref resolved")
     except KeyError:
         pass
-    _ICEBERG_REF_STAGE[sf_dir] = root
     return root
 
 
@@ -2247,9 +2133,7 @@ def iceberg_ref_read_q(spark, sf_dir):
     return via("audit-q1").unionByName(via("dev"))
 
 
-_HUDI_MOR_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_hudi_mor(spark, sf_dir):
     """Hudi MERGE-ON-READ table: base commit c1 (two file groups,
     documents [0,400)), then three deltacommits APPENDING log blocks
@@ -2258,8 +2142,6 @@ def _staged_hudi_mor(spark, sf_dir):
     doc_id %% 9 == 4 keys, dc4 re-upserts key 301 (deleted by dc3)
     with lang='yy', proving the per-key instant-ordered merge: a
     delete then a later upsert must resurrect the key."""
-    if sf_dir in _HUDI_MOR_STAGE:
-        return _HUDI_MOR_STAGE[sf_dir]
     from apache_nifi_spark.sources.hudi import (
         hudi_append_log_block,
         hudi_commit,
@@ -2267,9 +2149,8 @@ def _staged_hudi_mor(spark, sf_dir):
         hudi_write_base_file,
         read_hudi_mor_snapshot,
     )
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="anspark_hudimor_")
+    root = io.scratch("anspark_hudimor_")
     hudi_init(root, "anspark_docs_mor")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     c1, dc2, dc3, dc4 = (
@@ -2317,7 +2198,6 @@ def _staged_hudi_mor(spark, sf_dir):
     n_del = len(dels)
     assert read_hudi_mor_snapshot(spark, root, as_of=dc3).count() == \
         400 - n_del
-    _HUDI_MOR_STAGE[sf_dir] = root
     return root
 
 
@@ -2383,9 +2263,7 @@ def hudi_mor_read_optimized_q(spark, sf_dir):
     )
 
 
-_DELTA_V2CKPT_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta_v2ckpt(spark, sf_dir):
     """Delta table proving the V2 (sidecar) checkpoint path: commits
     v0/v1 add four files of documents [0,400), v2 DV-deletes
@@ -2395,11 +2273,9 @@ def _staged_delta_v2ckpt(spark, sf_dir):
     AT OR BELOW the checkpoint is DELETED, so the snapshot read can
     only succeed through checkpointMetadata → sidecar actions →
     sidecar scan → tail replay."""
-    if sf_dir in _DELTA_V2CKPT_STAGE:
-        return _DELTA_V2CKPT_STAGE[sf_dir]
     import glob
-    import tempfile
 
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
         read_delta_snapshot,
@@ -2407,21 +2283,19 @@ def _staged_delta_v2ckpt(spark, sf_dir):
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltav2_")
+    root = io.scratch("anspark_deltav2_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     rel = {}
     for k in range(5):
-        (
+        part = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 100)
                 & (F.col("doc_id") < k * 100 + 100)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            .sortWithinPartitions("doc_id"),
+            f"{root}/f{k}",
         )
-        part = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
 
     def add(k):
@@ -2444,7 +2318,6 @@ def _staged_delta_v2ckpt(spark, sf_dir):
     assert read_delta_snapshot(spark, root).count() == 500 - len(
         [d for d in range(100, 200) if d % 11 == 5]
     )
-    _DELTA_V2CKPT_STAGE[sf_dir] = root
     return root
 
 
@@ -2481,17 +2354,13 @@ def delta_checkpoint_v2_q(spark, sf_dir):
     )
 
 
-_HUDI_COMPACT_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_hudi_compacted(spark, sf_dir):
     """The MOR fixture compacted: every log-bearing file group folds
     its deltas into a new base slice at c5; staging asserts the
     read-optimized view now equals the real-time view (the point of
     compaction), while time travel to the pre-compaction instant still
     reads the stale base."""
-    if sf_dir in _HUDI_COMPACT_STAGE:
-        return _HUDI_COMPACT_STAGE[sf_dir]
     from apache_nifi_spark.sources.hudi import (
         hudi_compact,
         read_hudi_mor_snapshot,
@@ -2499,13 +2368,12 @@ def _staged_hudi_compacted(spark, sf_dir):
     )
 
     import shutil
-    import tempfile
 
     # compact a COPY: the MOR fixture is shared with the real-time /
     # read-optimized queries whose oracles pin the PRE-compaction
     # state — mutating it would make results depend on query order
     src = _staged_hudi_mor(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="anspark_hudicmp_")
+    root = io.scratch("anspark_hudicmp_")
     shutil.rmtree(root)
     shutil.copytree(src, root)
     if True:
@@ -2520,7 +2388,6 @@ def _staged_hudi_compacted(spark, sf_dir):
         assert read_hudi_snapshot(
             spark, root, as_of="20240204080000000"
         ).count() == 400
-    _HUDI_COMPACT_STAGE[sf_dir] = root
     return root
 
 

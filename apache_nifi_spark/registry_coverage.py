@@ -16,6 +16,7 @@ module docstring.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, Window
@@ -246,12 +247,10 @@ def compress_content_q(spark, sf_dir):
     an operator — write json.gz, read it back through the same record
     bridge.  Splittable formats + zstd would be the 100 TB choice; gzip
     here matches NiFi's default codec."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_records, write_records
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    out = tempfile.mkdtemp(prefix="anspark_gzip_")
+    out = io.scratch("anspark_gzip_")
     write_records(d, out, "json", options={"compression": "gzip"})
     back = read_records(
         spark, out, "json", schema="doc_id bigint, lang string, text string"
@@ -864,7 +863,6 @@ def stream_site_to_site_q(spark, sf_dir):
     SQL — the protocol hop must be lossless and duplicate-free."""
     import http.client
     import json as _json
-    import tempfile
     import urllib.parse
 
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
@@ -876,9 +874,9 @@ def stream_site_to_site_q(spark, sf_dir):
     )
     from apache_nifi_spark.streaming.tls import generate_self_signed
 
-    certdir = tempfile.mkdtemp(prefix="anspark_s2s_tls_")
+    certdir = io.scratch("anspark_s2s_tls_")
     cert, key = generate_self_signed(certdir)
-    landing = tempfile.mkdtemp(prefix="anspark_s2s_land_")
+    landing = io.scratch("anspark_s2s_land_")
     with (
         SiteToSiteServer(landing, cert, key) as server,
         NiFiApiServer(spark, sf_dir) as api,
@@ -966,16 +964,14 @@ def flow_remote_s2s_egress_q(spark, sf_dir):
     reads the PEER'S landed transactions back and aggregates; the oracle
     recomputes from the fixture — equality proves the egress hop is
     lossless and duplicate-free end-to-end."""
-    import tempfile
-
     from apache_nifi_spark.plans.flow_import import run_flow
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
     from apache_nifi_spark.streaming.s2s_wire import SiteToSiteServer
     from apache_nifi_spark.streaming.tls import generate_self_signed
 
-    certdir = tempfile.mkdtemp(prefix="anspark_rpg_tls_")
+    certdir = io.scratch("anspark_rpg_tls_")
     cert, key = generate_self_signed(certdir)
-    landing = tempfile.mkdtemp(prefix="anspark_rpg_land_")
+    landing = io.scratch("anspark_rpg_land_")
     with (
         SiteToSiteServer(landing, cert, key) as server,
         NiFiApiServer(spark, sf_dir) as api,
@@ -1045,13 +1041,11 @@ def publish_consume_kafka_bus_q(spark, sf_dir):
     lossless and duplicate-free; broker invariants (offset monotonicity,
     sticky keys, checkpointed resume) are pinned in
     tests/test_kafka_bus.py."""
-    import tempfile
-
     from apache_nifi_spark.streaming import run_to_memory
     from apache_nifi_spark.streaming.kafka_bus import FileKafkaBus
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0)
-    bus = FileKafkaBus(tempfile.mkdtemp(prefix="anspark_kbus_"), num_partitions=4)
+    bus = FileKafkaBus(io.scratch("anspark_kbus_"), num_partitions=4)
     bus.publish(
         ev.select(
             F.col("user_id").alias("k"),
@@ -2799,41 +2793,28 @@ def text_pmi_q(spark, sf_dir):
     )
 
 
-_DELTA_STAGE: dict[str, str] = {}
-_DELTA_CKPT_STAGE: dict[str, str] = {}
-_ICEBERG_STAGE: dict[str, str] = {}
-_ICEBERG_PART_STAGE: dict[str, str] = {}
-_ICEBERG_EVOLVED_STAGE: dict[str, str] = {}
-_ICEBERG_EXPIRED_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta(spark, sf_dir):
-    """Process-lifetime delta-protocol table over lineitem quarters
+    """Per-session delta-protocol table over lineitem quarters
     (same staging pattern as the FTP/JDBC fixtures): three JSON commits
     whose replay must yield quarters 1,2,3 — quarter 0 is added in
     commit 0 and REMOVED in commit 1, so a reader that ignores remove
     actions (or replays out of order) double-counts."""
-    if sf_dir in _DELTA_STAGE:
-        return _DELTA_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import write_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_delta_")
+    root = io.scratch("anspark_delta_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     rel = {}
     for q in range(4):
         sub = f"q{q}"
-        (
+        part = write_single_part(
             li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .coalesce(1),
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         rel[q] = os.path.relpath(part, root)
 
     def add(q):
@@ -2847,7 +2828,6 @@ def _staged_delta(spark, sf_dir):
         {"remove": {"path": rel[0], "dataChange": True}}, add(2),
     ])
     write_commit(root, 2, [add(3)])
-    _DELTA_STAGE[sf_dir] = root
     return root
 
 
@@ -2882,32 +2862,27 @@ def delta_log_snapshot_q(spark, sf_dir):
     )
 
 
+@functools.cache
 def _staged_iceberg(spark, sf_dir):
-    """Process-lifetime Iceberg table over lineitem quarters (the delta
+    """Per-session Iceberg table over lineitem quarters (the delta
     fixture's sibling): snapshot 1 adds q0+q1, snapshot 2 deletes q0
     and adds q2+q3 — current active set is quarters 1,2,3, and time
     travel to snapshot 1 sees 0,1 (tested in tests/test_sources.py)."""
-    if sf_dir in _ICEBERG_STAGE:
-        return _ICEBERG_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceberg_")
+    root = io.scratch("anspark_iceberg_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     info = {}
     for q in range(4):
         sub = f"q{q}"
-        (
+        part = write_single_part(
             li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .coalesce(1),
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         info[q] = {
             "file_path": part,
             "record_count": 0,
@@ -2918,8 +2893,7 @@ def _staged_iceberg(spark, sf_dir):
         root, 2, added=[info[2], info[3]],
         deleted=[info[0]["file_path"]],
     )
-    _ICEBERG_STAGE[sf_dir] = root
-    return _ICEBERG_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -2954,18 +2928,15 @@ def iceberg_snapshot_q(spark, sf_dir):
     )
 
 
+@functools.cache
 def _staged_iceberg_part(spark, sf_dir):
     """Iceberg table PARTITIONED by l_returnflag (one manifest per
     partition value — the layout that makes the manifest-list partition
     summaries prune whole manifests on read)."""
-    if sf_dir in _ICEBERG_PART_STAGE:
-        return _ICEBERG_PART_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_icepart_")
+    root = io.scratch("anspark_icepart_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -2973,13 +2944,11 @@ def _staged_iceberg_part(spark, sf_dir):
     added = []
     for fl in flags:
         sub = f"rf_{fl}"
-        (
+        part = write_single_part(
             li.filter(F.col("l_returnflag") == fl)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .coalesce(1),
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         added.append({
             "file_path": part,
             "partition": fl,
@@ -2987,8 +2956,7 @@ def _staged_iceberg_part(spark, sf_dir):
             "file_size_in_bytes": os.path.getsize(part),
         })
     iceberg_commit(root, 1, added=added)
-    _ICEBERG_PART_STAGE[sf_dir] = root
-    return _ICEBERG_PART_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -3021,6 +2989,7 @@ def iceberg_partition_pruned_q(spark, sf_dir):
     )
 
 
+@functools.cache
 def _staged_iceberg_evolved(spark, sf_dir):
     """Iceberg table with SCHEMA EVOLUTION (r12 verdict item 6):
     snapshot 1 writes even orders under schema (o_orderkey long,
@@ -3028,22 +2997,17 @@ def _staged_iceberg_evolved(spark, sf_dir):
     o_orderstatus (field-id 3, metadata-only — no data rewrite);
     snapshot 2 adds the odd orders WITH the new column.  A current-
     schema read must null-fill the pre-evolution files."""
-    if sf_dir in _ICEBERG_EVOLVED_STAGE:
-        return _ICEBERG_EVOLVED_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_add_column,
         iceberg_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceevo_")
+    root = io.scratch("anspark_iceevo_")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
 
     def land(sub, df):
-        df.coalesce(1).write.mode("overwrite").parquet(f"{root}/{sub}")
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = write_single_part(df.coalesce(1), f"{root}/{sub}")
         return {
             "file_path": part,
             "record_count": 0,
@@ -3066,7 +3030,6 @@ def _staged_iceberg_evolved(spark, sf_dir):
         .select("o_orderkey", "o_totalprice", "o_orderstatus"),
     )
     iceberg_commit(root, 2, added=[f1])
-    _ICEBERG_EVOLVED_STAGE[sf_dir] = root
     return root
 
 
@@ -3106,6 +3069,7 @@ def iceberg_schema_evolved_q(spark, sf_dir):
     )
 
 
+@functools.cache
 def _staged_iceberg_expired(spark, sf_dir):
     """Iceberg table after SNAPSHOT EXPIRY (r12 verdict item 6): the
     same two-commit history as _staged_iceberg (snap 1: q0+q1; snap 2:
@@ -3113,30 +3077,24 @@ def _staged_iceberg_expired(spark, sf_dir):
     only the current snapshot — snap 1 becomes unreadable, its
     manifest list and the q0 data file (live only there) are deleted
     from disk (asserted in tests/test_sources.py)."""
-    if sf_dir in _ICEBERG_EXPIRED_STAGE:
-        return _ICEBERG_EXPIRED_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_expire_snapshots,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceexp_")
+    root = io.scratch("anspark_iceexp_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     info = {}
     for q in range(4):
         sub = f"q{q}"
-        (
+        part = write_single_part(
             li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .coalesce(1),
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         info[q] = {
             "file_path": part,
             "record_count": 0,
@@ -3148,7 +3106,6 @@ def _staged_iceberg_expired(spark, sf_dir):
         deleted=[info[0]["file_path"]],
     )
     iceberg_expire_snapshots(root)  # keep current (snap 2) only
-    _ICEBERG_EXPIRED_STAGE[sf_dir] = root
     return root
 
 
@@ -3183,6 +3140,7 @@ def iceberg_snapshot_expiry_q(spark, sf_dir):
     )
 
 
+@functools.cache
 def _staged_delta_ckpt(spark, sf_dir):
     """Delta table WITH a parquet checkpoint (verdict r11 item 5): the
     same three commits as _staged_delta (active q1,q2,q3), a classic
@@ -3190,30 +3148,24 @@ def _staged_delta_ckpt(spark, sf_dir):
     removes q2 and re-adds q0 — so a correct reader needs the
     checkpoint base AND the JSON tail, and a reader that replays the
     full log gets the same answer (asserted in tests)."""
-    if sf_dir in _DELTA_CKPT_STAGE:
-        return _DELTA_CKPT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         write_checkpoint,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltac_")
+    root = io.scratch("anspark_deltac_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     rel = {}
     for q in range(4):
         sub = f"q{q}"
-        (
+        part = write_single_part(
             li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .coalesce(1),
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         rel[q] = os.path.relpath(part, root)
 
     def add(q):
@@ -3231,8 +3183,7 @@ def _staged_delta_ckpt(spark, sf_dir):
     write_commit(root, 3, [
         {"remove": {"path": rel[2], "dataChange": True}}, add(0),
     ])
-    _DELTA_CKPT_STAGE[sf_dir] = root
-    return _DELTA_CKPT_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -3266,9 +3217,7 @@ def delta_checkpoint_snapshot_q(spark, sf_dir):
     )
 
 
-_DELTA_DV_STAGE: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_delta_dv(spark, sf_dir):
     """Delta table with inline DELETION VECTORS (merge-on-read DML):
     two position-sorted data files of documents [0,200) and [200,400),
@@ -3276,31 +3225,25 @@ def _staged_delta_dv(spark, sf_dir):
     ordinals of every ``doc_id % 7 == 3`` row — in TWO delete commits
     (file 0 twice, so the reader also proves DV merge) — without ever
     rewriting the parquet."""
-    if sf_dir in _DELTA_DV_STAGE:
-        return _DELTA_DV_STAGE[sf_dir]
-    import glob
-    import tempfile
-
+    from apache_nifi_spark.sources import write_single_part
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltadv_")
+    root = io.scratch("anspark_deltadv_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     actions, rel = [], {}
     for k in range(2):
         sub = f"f{k}"
-        (
+        part = write_single_part(
             docs.filter(
                 (F.col("doc_id") >= k * 200) & (F.col("doc_id") < k * 200 + 200)
             )
             .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*200
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            .sortWithinPartitions("doc_id"),  # ordinal = doc_id - k*200
+            f"{root}/{sub}",
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
         actions.append({"add": {"path": rel[k], "size": os.path.getsize(part)}})
     write_commit(root, 0, actions)
@@ -3316,7 +3259,6 @@ def _staged_delta_dv(spark, sf_dir):
             rel[1]: [d - 200 for d in range(206, 400, 7)],
         },
     )
-    _DELTA_DV_STAGE[sf_dir] = root
     return root
 
 
@@ -3353,20 +3295,14 @@ def delta_deletion_vector_q(spark, sf_dir):
     )
 
 
-_FTP_STAGE: dict[str, tuple] = {}
-
-
+@functools.cache
 def _staged_ftp(spark, sf_dir):
-    """Process-lifetime FTP server over a CSV export of the events subset
+    """Per-session FTP server over a CSV export of the events subset
     (same staging pattern as the echo/JDBC fixtures): Spark writes the
     CSVs, MiniFtpServer serves them, the query re-ingests over the wire."""
-    if sf_dir in _FTP_STAGE:
-        return _FTP_STAGE[sf_dir]
-    import tempfile
-
     from apache_nifi_spark.sources.ftp import MiniFtpServer
 
-    root = tempfile.mkdtemp(prefix="anspark_ftp_")
+    root = io.scratch("anspark_ftp_")
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 50 == 0)
     (
         ev.select("event_id", "event_type", "value")
@@ -3375,8 +3311,7 @@ def _staged_ftp(spark, sf_dir):
         .csv(f"{root}/data")
     )
     srv = MiniFtpServer(root)
-    _FTP_STAGE[sf_dir] = (srv, "127.0.0.1", srv.port)
-    return _FTP_STAGE[sf_dir]
+    return (srv, "127.0.0.1", srv.port)
 
 
 @register(
@@ -3434,8 +3369,6 @@ def put_ftp_roundtrip_q(spark, sf_dir):
     per partition), then the uploaded tree lists and fetches back —
     write and read directions closing over the same protocol server.
     Oracle identity proves the STOR hop is byte-lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.ftp import (
         MiniFtpServer,
         fetch_ftp,
@@ -3443,7 +3376,7 @@ def put_ftp_roundtrip_q(spark, sf_dir):
         put_ftp,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_putftp_")
+    root = io.scratch("anspark_putftp_")
     nation = _t(spark, sf_dir, "nation").select(
         F.concat(F.lit("n_"), F.col("n_nationkey").cast("string"), F.lit(".csv"))
         .alias("filename"),
@@ -3500,19 +3433,13 @@ def ftp_list_fetch_q(spark, sf_dir):
     )
 
 
-_SFTP_STAGE: dict[str, tuple] = {}
-
-
+@functools.cache
 def _staged_sftp(spark, sf_dir):
-    """Process-lifetime SFTP server over a CSV export of the events
+    """Per-session SFTP server over a CSV export of the events
     subset (the _staged_ftp pattern on the SSH wire)."""
-    if sf_dir in _SFTP_STAGE:
-        return _SFTP_STAGE[sf_dir]
-    import tempfile
-
     from apache_nifi_spark.sources.sftp import MiniSftpServer
 
-    root = tempfile.mkdtemp(prefix="anspark_sftp_")
+    root = io.scratch("anspark_sftp_")
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 50 == 0)
     (
         ev.select("event_id", "event_type", "value")
@@ -3521,8 +3448,7 @@ def _staged_sftp(spark, sf_dir):
         .csv(f"{root}/data")
     )
     srv = MiniSftpServer(root)
-    _SFTP_STAGE[sf_dir] = (srv, "127.0.0.1", srv.port)
-    return _SFTP_STAGE[sf_dir]
+    return (srv, "127.0.0.1", srv.port)
 
 
 @register(
@@ -3585,8 +3511,6 @@ def put_sftp_roundtrip_q(spark, sf_dir):
     WRITEs), then the uploaded tree lists and fetches back — both
     directions closing over the same SSH server.  Oracle identity
     proves the encrypt → MAC → decrypt hop is byte-lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.sftp import (
         MiniSftpServer,
         fetch_sftp,
@@ -3594,7 +3518,7 @@ def put_sftp_roundtrip_q(spark, sf_dir):
         put_sftp,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_putsftp_")
+    root = io.scratch("anspark_putsftp_")
     with MiniSftpServer(root) as srv:
         nation = _t(spark, sf_dir, "nation").select(
             F.concat(F.lit("n_"), F.col("n_nationkey").cast("string"), F.lit(".csv"))
@@ -3646,8 +3570,6 @@ def amqp_exchange_route_q(spark, sf_dir):
     AMQP's deliver-once-per-queue rule (OR-combined predicate, not a
     union of copies); routing itself is a codegen'd Catalyst filter —
     see streaming/amqp_bus.py."""
-    import tempfile
-
     from apache_nifi_spark.streaming.amqp_bus import AmqpExchange
     from apache_nifi_spark.streaming.kafka_bus import FileKafkaBus
 
@@ -3660,7 +3582,7 @@ def amqp_exchange_route_q(spark, sf_dir):
         ).alias("rk"),
         F.to_json(F.struct("event_id", "value")).alias("v"),
     )
-    bus = FileKafkaBus(tempfile.mkdtemp(prefix="anspark_amqp_"), num_partitions=4)
+    bus = FileKafkaBus(io.scratch("anspark_amqp_"), num_partitions=4)
     ex = AmqpExchange(bus, "ev", kind="topic")
     ex.bind("q_click", "click.#").bind("q_click", "purchase.even")
     ex.bind("q_even", "*.even")
@@ -3756,19 +3678,13 @@ def python_udtf_q(spark, sf_dir):
     )
 
 
-_ROLLING_DIRS: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_rolling_dir(spark, sf_dir: str) -> str:
     """Stage the events fixture as a 4-file 'rolling log' directory once
-    per process (fixture prep, not part of the measured operator)."""
-    if sf_dir not in _ROLLING_DIRS:
-        import tempfile
-
-        rolling = tempfile.mkdtemp(prefix="anspark_tail_")
-        _t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(rolling)
-        _ROLLING_DIRS[sf_dir] = rolling
-    return _ROLLING_DIRS[sf_dir]
+    per session (fixture prep, not part of the measured operator)."""
+    rolling = io.scratch("anspark_tail_")
+    _t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(rolling)
+    return rolling
 
 
 @register(

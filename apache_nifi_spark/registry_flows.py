@@ -10,6 +10,7 @@ Split out of ``registry.py`` (round-12 verdict item 8).  Same
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -36,22 +37,21 @@ from apache_nifi_spark.registry import (
 # =====================================================================
 
 _MEGA_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/mega_flow.json"
-_MEGA_CACHE: dict = {}
+
+
+@functools.cache
+def _mega_outputs(spark, sf_dir):
+    """Compile the mega flow once per (session, sf_dir) — compilation is
+    driver-side plan building only (lazy DataFrames), so the cache just
+    avoids re-running the importer's eager SQL analysis 13×."""
+    from apache_nifi_spark.plans.flow_import import run_flow_json
+
+    with open(_MEGA_FLOW_PATH) as f:
+        return run_flow_json(spark, sf_dir, f.read())
 
 
 def _mega(spark, sf_dir, output):
-    """Compile the mega flow once per (session, sf_dir) — compilation is
-    driver-side plan building only (lazy DataFrames), so the cache just
-    avoids re-running the importer's eager SQL analysis 13×.  Keyed on
-    applicationId, not ``id(spark)`` — a GC'd session's id can be reused
-    by a new session, which would serve stale plans."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MEGA_CACHE:
-        from apache_nifi_spark.plans.flow_import import run_flow_json
-
-        with open(_MEGA_FLOW_PATH) as f:
-            _MEGA_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _MEGA_CACHE[key][output]
+    return _mega_outputs(spark, sf_dir)[output]
 
 
 @register(
@@ -154,6 +154,7 @@ def mega_flow_grok_q(spark, sf_dir):
     FROM ded GROUP BY o_orderstatus
     """,
 )
+@functools.cache
 def rest_flow_author_q(spark, sf_dir):
     """REST flow-authoring control plane (§3.1 [2.7.2-surface]; the
     reference's primary entry point — its deploy scripts drive flows
@@ -174,12 +175,6 @@ def rest_flow_author_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    # Author once per (session, sf_dir) — same policy as _MEGA_CACHE for
-    # the direct import: authoring + compile-on-start is control-plane
-    # setup; the returned plan stays lazy either way.
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_author")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     with NiFiApiServer(spark, sf_dir) as server:
         with open(_MEGA_FLOW_PATH) as f:
             contents = _json.load(f)["flowContents"]
@@ -202,8 +197,7 @@ def rest_flow_author_q(spark, sf_dir):
             conn.close()
         # lazy plan; safe to serve after server.stop() — the data path
         # never touches the control plane
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["OrdersAgg.byStatus"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["OrdersAgg.byStatus"]
 
 
 @register(
@@ -213,6 +207,7 @@ def rest_flow_author_q(spark, sf_dir):
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
     """,
 )
+@functools.cache
 def rest_ports_service_flow_q(spark, sf_dir):
     """Ports + controller services over the REST control plane
     (§3.1 [2.7.2-surface]; S2S input ports implied by reference
@@ -230,9 +225,6 @@ def rest_ports_service_flow_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_ports_svc")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     contents = {
         "name": "ports-svc",
         "controllerServices": [{
@@ -263,7 +255,6 @@ def rest_ports_service_flow_q(spark, sf_dir):
         out = server.outputs(gid)["enriched.success"].select(
             "c_custkey", "c_name", "c_nationkey", "n_name"
         )
-        _MEGA_CACHE[cache_key] = out
         return out
 
 
@@ -276,6 +267,7 @@ def rest_ports_service_flow_q(spark, sf_dir):
     FROM orders WHERE o_orderstatus = 'F' GROUP BY o_orderpriority
     """,
 )
+@functools.cache
 def rest_secured_token_q(spark, sf_dir):
     """Single-user token auth on the REST control plane (§3.1
     [2.7.2-surface]; the reference deploys the stock image SECURED —
@@ -295,9 +287,6 @@ def rest_secured_token_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_secured")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     with NiFiApiServer(spark, sf_dir, credentials=("admin", "admin123456!")) as server:
         u = urllib.parse.urlsplit(server.url)
         conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
@@ -362,8 +351,7 @@ def rest_secured_token_q(spark, sf_dir):
             conn.close()
         outs = start_group_via_api(server.url, gid, token=token)
         assert "agg.by_priority" in outs, outs
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_priority"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["agg.by_priority"]
 
 
 @register(
@@ -375,6 +363,7 @@ def rest_secured_token_q(spark, sf_dir):
     FROM customer WHERE c_acctbal > 5000 GROUP BY c_mktsegment
     """,
 )
+@functools.cache
 def rest_parameter_context_q(spark, sf_dir):
     """Parameter contexts over the REST control plane (§2.13/§3.1
     [2.7.2-surface]): the flow's table name and filter threshold live in
@@ -389,9 +378,6 @@ def rest_parameter_context_q(spark, sf_dir):
 
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_param_ctx")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     with NiFiApiServer(spark, sf_dir) as server:
         u = urllib.parse.urlsplit(server.url)
         conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
@@ -448,8 +434,7 @@ def rest_parameter_context_q(spark, sf_dir):
                  {"state": "RUNNING"})
         finally:
             conn.close()
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_segment"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["agg.by_segment"]
 
 
 @register(
@@ -673,35 +658,39 @@ def mega_flow_route_distribute_q(spark, sf_dir):
 # =====================================================================
 
 _MEGA2_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/mega_flow2.json"
+#: the ListenSyslog landing directory named in mega_flow2.json; each
+#: compile rebinds it to a fresh scratch directory
 _MEGA2_SYSLOG_DIR = "/tmp/anspark_mega2_syslog"
-_MEGA2_CACHE: dict = {}
 
 
-def _mega2(spark, sf_dir, output):
+@functools.cache
+def _mega2_outputs(spark, sf_dir):
     """Compile mega flow 2 once per (session, sf_dir).  The ListenSyslog
     segment starts from a landing directory, so deterministic RFC 3164
     lines are landed first (the listener tier's output contract) — the
     flow then drains them like any landed stream."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MEGA2_CACHE:
-        from apache_nifi_spark.operators import render_syslog_3164
-        from apache_nifi_spark.plans.flow_import import run_flow_json
+    from apache_nifi_spark.operators import render_syslog_3164
+    from apache_nifi_spark.plans.flow_import import run_flow_json
 
-        ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 33 == 0)
-        lines = ev.select(
-            render_syslog_3164(
-                F.lit(134),
-                F.col("ts"),
-                F.concat(F.lit("h"), (F.col("user_id") % 5).cast("string")),
-                F.lit("engine"),
-                F.col("event_id"),
-                F.col("event_type"),
-            ).alias("value")
-        )
-        lines.coalesce(1).write.mode("overwrite").text(_MEGA2_SYSLOG_DIR)
-        with open(_MEGA2_FLOW_PATH) as f:
-            _MEGA2_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _MEGA2_CACHE[key][output]
+    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 33 == 0)
+    lines = ev.select(
+        render_syslog_3164(
+            F.lit(134),
+            F.col("ts"),
+            F.concat(F.lit("h"), (F.col("user_id") % 5).cast("string")),
+            F.lit("engine"),
+            F.col("event_id"),
+            F.col("event_type"),
+        ).alias("value")
+    )
+    landing = io.scratch("anspark_mega2_syslog_")
+    lines.coalesce(1).write.mode("overwrite").text(landing)
+    with open(_MEGA2_FLOW_PATH) as f:
+        return run_flow_json(spark, sf_dir, f.read().replace(_MEGA2_SYSLOG_DIR, landing))
+
+
+def _mega2(spark, sf_dir, output):
+    return _mega2_outputs(spark, sf_dir)[output]
 
 
 @register(
@@ -868,17 +857,18 @@ def mega2_syslog_q(spark, sf_dir):
 # =====================================================================
 
 _RETRY_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/retry_flow.json"
-_RETRY_CACHE: dict = {}
+
+
+@functools.cache
+def _retry_flow_outputs(spark, sf_dir):
+    from apache_nifi_spark.plans.flow_import import run_flow_json
+
+    with open(_RETRY_FLOW_PATH) as f:
+        return run_flow_json(spark, sf_dir, f.read())
 
 
 def _retry_flow(spark, sf_dir, output):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RETRY_CACHE:
-        from apache_nifi_spark.plans.flow_import import run_flow_json
-
-        with open(_RETRY_FLOW_PATH) as f:
-            _RETRY_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _RETRY_CACHE[key][output]
+    return _retry_flow_outputs(spark, sf_dir)[output]
 
 
 @register(

@@ -12,6 +12,7 @@ rules are documented in the registry module docstring.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -172,34 +173,25 @@ def dedup_ngram_jaccard_q(spark, sf_dir):
     return ngram_jaccard_pairs(d, "doc_id", "text", "lang", n=3, threshold=0.5)
 
 
-#: (applicationId, sf_dir) → pinned component fixpoint over the
-#: doc_id<60 slice.  dedup_cluster_components and
-#: dedup_canonical_longest consume the SAME connected-components
-#: result; without the memo each paid the full min-label-propagation
-#: iteration floor (r12 verdict item 3 — 1.54 s + 1.65 s at sf0.1 for
-#: one identical computation).  The pinned frame is ≤60 rows.
-_NEAR_DUP_COMP_CACHE: dict = {}
-
-
+@functools.cache
 def _near_dup_components_60(spark, sf_dir):
     """Shared connected-components fixpoint (doc_id < 60 slice,
     3-gram Jaccard ≥ 0.5, lang-blocked): memoized per (session,
     sf_dir) and eagerly localCheckpoint-pinned — the second consumer
     reads ~60 materialized rows instead of re-running the propagation
-    loop.  At production scale this is the "materialize the component
-    mapping once, join it everywhere" pattern every dedup pipeline
-    uses (the mapping is many orders smaller than the corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _NEAR_DUP_COMP_CACHE.get(key)
-    if df is None:
-        from apache_nifi_spark.llm import near_dup_clusters
+    loop.  dedup_cluster_components and dedup_canonical_longest
+    consume the SAME result; without the memo each paid the full
+    min-label-propagation iteration floor (r12 verdict item 3 — 1.54 s
+    + 1.65 s at sf0.1 for one identical computation).  At production
+    scale this is the "materialize the component mapping once, join it
+    everywhere" pattern every dedup pipeline uses (the mapping is many
+    orders smaller than the corpus)."""
+    from apache_nifi_spark.llm import near_dup_clusters
 
-        d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-        df = near_dup_clusters(
-            d, "doc_id", "text", "lang", n=3, threshold=0.5
-        ).localCheckpoint()  # eager: ≤60 rows, pinned once for both
-        _NEAR_DUP_COMP_CACHE[key] = df
-    return df
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    return near_dup_clusters(
+        d, "doc_id", "text", "lang", n=3, threshold=0.5
+    ).localCheckpoint()  # eager: ≤60 rows, pinned once for both
 
 
 @register(
@@ -3109,8 +3101,6 @@ def put_syslog_udp_q(spark, sf_dir):
     (syslog's native transport — sinks/socket.put_udp), land via
     UdpLandingListener, and parse back.  Oracle equality proves
     render → datagram → land → parse is lossless."""
-    import tempfile
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_udp
     from apache_nifi_spark.streaming.listen import UdpLandingListener
@@ -3127,7 +3117,7 @@ def put_syslog_udp_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_putsyslog_")
+    landing = io.scratch("anspark_putsyslog_")
     with UdpLandingListener(landing, batch_size=1) as listener:
         n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
         listener.landing.wait(n_sent)
@@ -3154,8 +3144,6 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
     connection per partition (sinks/socket.put_tcp_octet_counted), land
     through the frame parser (TcpLandingListener framing='octet'), and
     parse back.  Oracle equality proves the framed hop is lossless."""
-    import tempfile
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_tcp_octet_counted
     from apache_nifi_spark.streaming.listen import TcpLandingListener
@@ -3172,7 +3160,7 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_syslogtcp_")
+    landing = io.scratch("anspark_syslogtcp_")
     with TcpLandingListener(landing, framing="octet") as listener:
         n_sent = (
             put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
@@ -3204,8 +3192,6 @@ def put_relp_roundtrip_q(spark, sf_dir):
     connection per partition, each ACK awaited), land batched, and parse
     back.  Oracle equality proves the ACKed hop is lossless
     (streaming/relp.py)."""
-    import tempfile
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.streaming.relp import RelpLandingListener, put_relp
 
@@ -3221,7 +3207,7 @@ def put_relp_roundtrip_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_relp_")
+    landing = io.scratch("anspark_relp_")
     with RelpLandingListener(landing) as listener:
         n_sent = (
             put_relp(lines, "127.0.0.1", listener.port, "content")
@@ -3267,15 +3253,13 @@ def stream_quality_gate_q(spark, sf_dir):
     math, so the same operator body runs unchanged under Structured
     Streaming — with a per-language keep summary.  Batch-parity oracle:
     the drain must equal DuckDB computing the gate over the table."""
-    import glob
     import os
-    import tempfile
 
     from apache_nifi_spark.llm import quality_logit
     from apache_nifi_spark.streaming import run_to_memory
 
     src = f"{sf_dir}/documents.parquet"
-    landing = tempfile.mkdtemp(prefix="anspark_qgate_")
+    landing = io.scratch("anspark_qgate_")
     os.symlink(os.path.abspath(src), os.path.join(landing, "documents.parquet"))
     schema = spark.read.parquet(landing).schema
     sdf = spark.readStream.schema(schema).parquet(landing)
@@ -3391,8 +3375,6 @@ def put_tcp_roundtrip_q(spark, sf_dir):
     aggregated.  Oracle equality proves the socket hop is lossless.
     The send is forced eagerly (a sink is an action by nature) before
     the read half scans the landing dir."""
-    import tempfile
-
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
@@ -3405,7 +3387,7 @@ def put_tcp_roundtrip_q(spark, sf_dir):
             F.col("value").cast("string"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_puttcp_")
+    landing = io.scratch("anspark_puttcp_")
     with TcpLandingListener(landing) as listener:
         sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
         n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
@@ -3443,8 +3425,6 @@ def put_tls_roundtrip_q(spark, sf_dir):
     verified (streaming/tls.py) — before any byte ships; plaintext
     clients are rejected at the handshake (tests/test_tls.py).  Oracle
     equality proves the encrypted hop is lossless."""
-    import tempfile
-
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
     from apache_nifi_spark.streaming.tls import generate_self_signed, server_context
@@ -3459,7 +3439,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
         ).alias("content")
     )
     cert, key = generate_self_signed()
-    landing = tempfile.mkdtemp(prefix="anspark_puttls_")
+    landing = io.scratch("anspark_puttls_")
     with TcpLandingListener(landing, tls=server_context(cert, key)) as listener:
         sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
         n_sent = sent.filter("sent").count()
@@ -3569,7 +3549,12 @@ def generate_record_q(spark, sf_dir):
     )
 
 
-_SMTP_MSG_COUNT: dict[str, int] = {}
+@functools.cache
+def _smtp_orders(spark, sf_dir):
+    """The orders listen_smtp_deliver mails, and their count (a
+    control-plane scalar), once per (session, sf_dir)."""
+    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 110 == 0)
+    return o, o.count()
 
 
 @register(
@@ -3596,13 +3581,11 @@ def listen_smtp_q(spark, sf_dir):
     headers alongside the MIME fields) — the prior envelope-regex
     projection + self-join on subject double-scanned the content and
     paid a join exchange for columns the parser already had in hand."""
-    import tempfile
-
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.sources.email_codec import parse_email_headers
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer, put_smtp
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 110 == 0)
+    o, n_msgs = _smtp_orders(spark, sf_dir)
     to = F.concat(
         F.lit("customer"), F.col("o_custkey").cast("string"), F.lit("@example.com")
     )
@@ -3628,9 +3611,6 @@ def listen_smtp_q(spark, sf_dir):
     # ~1 connection per 400 recipients between 8 and the 32-connection
     # budget.  Deterministic hash repartition on the recipient (keyed,
     # not round-robin — task retries re-send the same partition).
-    if sf_dir not in _SMTP_MSG_COUNT:
-        _SMTP_MSG_COUNT[sf_dir] = o.count()  # control-plane scalar
-    n_msgs = _SMTP_MSG_COUNT[sf_dir]
     pool = max(8, min(32, n_msgs // 400))
     rendered = o.select(
         F.lit("noreply@engine.local").alias("from_addr"),
@@ -3639,7 +3619,7 @@ def listen_smtp_q(spark, sf_dir):
             "noreply@engine.local", to, subject, F.col("o_orderdate"), body
         ).cast("binary").alias("message"),
     ).repartition(pool, "to_addr")
-    landing = tempfile.mkdtemp(prefix="anspark_smtp_")
+    landing = io.scratch("anspark_smtp_")
     with MiniSmtpServer(landing) as srv:
         n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
         assert n == n_msgs
@@ -4182,8 +4162,6 @@ def put_websocket_roundtrip_q(spark, sf_dir):
     durably; the landing zone reads back and aggregates.  Oracle
     equality proves handshake → mask → frame → land is lossless
     (streaming/websocket.py)."""
-    import tempfile
-
     from apache_nifi_spark.streaming.websocket import (
         WebSocketLandingServer,
         put_websocket,
@@ -4198,7 +4176,7 @@ def put_websocket_roundtrip_q(spark, sf_dir):
             F.col("value").cast("string"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_putws_")
+    landing = io.scratch("anspark_putws_")
     with WebSocketLandingServer(landing) as server:
         n_sent = (
             put_websocket(lines, "127.0.0.1", server.port, "content")
@@ -4736,28 +4714,19 @@ def text_char_entropy_q(spark, sf_dir):
     )
 
 
-_PRUNED_DIR: dict[str, str] = {}
-
-
+@functools.cache
 def _staged_partitioned_orders(spark, sf_dir: str) -> str:
     """One-time partitioned layout (hive-style dirs by o_orderstatus) for
     the partition-pruning read demo — the write is the amortized layout
     build, mirroring `_staged_bucketed_tables`."""
-    path = _PRUNED_DIR.get(sf_dir)
-    import os as _os
-    if path and _os.path.isdir(path):
-        return path
-    import tempfile
-
     from apache_nifi_spark.sources import write_records
 
     orders = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="anspark_pruned_")
+    path = io.scratch("anspark_pruned_")
     write_records(
         orders.repartition("o_orderstatus"), path, "parquet",
         partition_by=["o_orderstatus"],
     )
-    _PRUNED_DIR[sf_dir] = path
     return path
 
 
@@ -5023,16 +4992,12 @@ def retry_flowfile_q(spark, sf_dir):
     )
 
 
-_ECHO_PORT: list[int] = []
-
-
+@functools.cache
 def _staged_echo_server() -> int:
     """Process-lifetime deterministic echo endpoint for the InvokeHTTP
     demo: GET /rev?x=<s> → reverse(<s>).  Stands in for the enrichment
     service a real flow would call; daemon-threaded stdlib server, same
     staging pattern as the rolling-log/bucketed fixtures."""
-    if _ECHO_PORT:
-        return _ECHO_PORT[0]
     import urllib.parse
 
     from apache_nifi_spark import net
@@ -5047,8 +5012,7 @@ def _staged_echo_server() -> int:
             self.end_headers()
             self.wfile.write(body)
 
-    _ECHO_PORT.append(net.Server(Handler).port)
-    return _ECHO_PORT[0]
+    return net.Server(Handler).port
 
 
 @register(
@@ -5263,8 +5227,6 @@ def url_normalize_q(spark, sf_dir):
     return out.select("doc_id", "url_norm")
 
 
-_DERBY_URL: dict[str, str] = {}
-
 #: Spark bundles embedded Derby (its Hive-metastore store); it doubles as
 #: a REAL JDBC endpoint for the ExecuteSQL/PutDatabaseRecord path in this
 #: single-JVM environment.  On a cluster the url swaps to any networked
@@ -5272,23 +5234,18 @@ _DERBY_URL: dict[str, str] = {}
 _DERBY_DRIVER = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
 
+@functools.cache
 def _staged_derby_supplier(spark, sf_dir: str) -> str:
     """One-time PutDatabaseRecord staging: supplier → embedded Derby
     (same amortized-fixture pattern as the bucketed/rolling stagers)."""
-    url = _DERBY_URL.get(sf_dir)
-    if url:
-        return url
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_write
 
-    db = tempfile.mkdtemp(prefix="anspark_derby_") + "/db"
+    db = io.scratch("anspark_derby_") + "/db"
     url = f"jdbc:derby:{db};create=true"
     sup = _t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
     jdbc_write(sup, url, "supplier_db", options=_DERBY_DRIVER)
-    _DERBY_URL[sf_dir] = url
     return url
 
 
@@ -5347,11 +5304,9 @@ def update_database_table_q(spark, sf_dir):
     column, v2 rows carry values — value-exact vs the fixture.  DDL is
     O(new columns) driver-side control-plane, like the NiFi processor;
     data writes stay parallel (sources/jdbc.update_database_table)."""
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_read, jdbc_write, update_database_table
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='anspark_ddl_')}/evolve;create=true"
+    url = f"jdbc:derby:{io.scratch('anspark_ddl_')}/evolve;create=true"
     p = _t(spark, sf_dir, "part")
     v1 = p.filter(F.col("p_partkey") < 100).select("p_partkey")
     v2 = p.filter((F.col("p_partkey") >= 100) & (F.col("p_partkey") < 200)).select(
@@ -5388,11 +5343,9 @@ def list_database_tables_q(spark, sf_dir):
     catalog — here a fresh Derby with two staged tables — into the
     listing DataFrame that downstream per-table fetch plans fan out
     over (sources/jdbc.list_database_tables)."""
-    import tempfile
-
     from apache_nifi_spark.sources import list_database_tables, update_database_table
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='anspark_lst_')}/cat;create=true"
+    url = f"jdbc:derby:{io.scratch('anspark_lst_')}/cat;create=true"
     ev = _t(spark, sf_dir, "events").select("event_id").limit(1)
     update_database_table(spark, url, "t_alpha", ev.schema)
     update_database_table(spark, url, "t_beta", ev.schema)
@@ -5414,12 +5367,10 @@ def query_db_incremental_q(spark, sf_dir):
     the delta (predicate pushed into the database).  The union of both
     polls must equal the full slice, value-exact.  State here is the
     returned max; NiFi keeps the same value in its state manager."""
-    import tempfile
-
     from apache_nifi_spark.sources import incremental_fetch, jdbc_write
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderstatus")
-    db = tempfile.mkdtemp(prefix="anspark_derby_inc_") + "/db"
+    db = io.scratch("anspark_derby_inc_") + "/db"
     url = f"jdbc:derby:{db};create=true"
     jdbc_write(o.filter(F.col("o_orderkey") < 1000), url, "orders_inc", options=_DERBY_DRIVER)
     # Each poll MATERIALIZES when it runs (in NiFi the processor executes,
@@ -5452,12 +5403,10 @@ def stream_put_database_q(spark, sf_dir):
     delete-then-insert idempotency (checkpoint + idempotent sink =
     exactly-once; see streaming/jdbc_sink).  The read-back over JDBC
     must match the batch slice value-exactly."""
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_read
     from apache_nifi_spark.streaming import stream_events, stream_to_jdbc
 
-    db = tempfile.mkdtemp(prefix="anspark_derby_sink_") + "/db"
+    db = io.scratch("anspark_derby_sink_") + "/db"
     url = f"jdbc:derby:{db};create=true"
     sdf = stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"

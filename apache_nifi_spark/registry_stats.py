@@ -599,7 +599,6 @@ def stream_delta_append_commits_q(spark, sf_dir):
     exactly what the stream wrote."""
     import glob
     import os as _os
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         read_delta_snapshot,
@@ -607,7 +606,7 @@ def stream_delta_append_commits_q(spark, sf_dir):
     )
     from apache_nifi_spark.streaming import drain, stream_events
 
-    root = tempfile.mkdtemp(prefix="anspark_stream_delta_")
+    root = io.scratch("anspark_stream_delta_")
     sdf = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -1100,7 +1099,6 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
     to exactly the batch answer."""
     import glob
     import os as _os
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         _delta_active_rows,
@@ -1111,7 +1109,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
 
     # stage the purchase stream as 3 files so the drain is genuinely
     # multi-batch (one file per trigger)
-    staged = tempfile.mkdtemp(prefix="anspark_updelta_src_")
+    staged = io.scratch("anspark_updelta_src_")
     (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -1119,7 +1117,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         .repartition(3, "user_id")
         .write.mode("overwrite").parquet(staged)
     )
-    root = tempfile.mkdtemp(prefix="anspark_updelta_tbl_")
+    root = io.scratch("anspark_updelta_tbl_")
 
     def write_batch(bdf, bid):
         version = int(bid) + 1

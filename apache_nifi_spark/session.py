@@ -59,7 +59,9 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     extra_conf = extra_conf or {}
-    memory = extra_conf.get("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+    memory = extra_conf.get(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -101,8 +103,10 @@ def get_spark(
         # Driver heap: Spark's 1g default is sized for a thin cluster
         # driver; in local mode the driver JVM *is* every executor, so
         # broadcast builds + 32 concurrent tasks need real heap (1g OOMs
-        # broadcast construction at sf≥1).  Honored only at JVM launch —
-        # a getOrCreate against a live session keeps its existing heap.
+        # broadcast construction at sf≥1).  Default: half the host's
+        # memory, at most 24g ($SPARK_GRAFT_DRIVER_MEM overrides it).
+        # Honored only at JVM launch — a getOrCreate against a live
+        # session keeps its existing heap.
         .config("spark.driver.memory", memory)
         # Keep driver result transfers bounded — no huge collects by design.
         .config("spark.driver.maxResultSize", "2g")
@@ -139,6 +143,18 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
         return builder.getOrCreate()
+
+
+def _default_driver_memory() -> str:
+    """Half the host's memory, at most 24g: in local mode the driver JVM
+    is every executor too, and a heap the size of the host lets it grow
+    until the kernel's OOM killer takes it."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, total_kb // 2048)}m"
 
 
 def stop_spark() -> None:

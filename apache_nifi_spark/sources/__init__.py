@@ -13,6 +13,7 @@ from apache_nifi_spark.sources.formats import (
     read_binary_files,
     read_records,
     write_records,
+    write_single_part,
 )
 from apache_nifi_spark.sources.jdbc import (
     generate_table_fetch,
@@ -34,4 +35,5 @@ __all__ = [
     "read_binary_files",
     "read_records",
     "write_records",
+    "write_single_part",
 ]

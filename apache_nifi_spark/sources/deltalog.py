@@ -32,6 +32,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.sources.formats import write_single_part
+
 __all__ = [
     "write_commit",
     "write_checkpoint",
@@ -689,37 +691,18 @@ def delta_commit_cdf(
     actions: list[dict] = []
     for p in remove_paths:
         actions.append({"remove": {"path": p, "dataChange": True}})
-    if add_df is not None:
-        import glob
-
-        sub = f"data-{version:020d}"
-        add_df.coalesce(1).write.parquet(os.path.join(table_path, sub))
-        for fp in sorted(
-            glob.glob(os.path.join(table_path, sub, "part-*.parquet"))
-        ):
+    for kind, df, sub in (
+        ("add", add_df, f"data-{version:020d}"),
+        ("cdc", cdc_df, os.path.join("_change_data", f"cdc-{version:020d}")),
+    ):
+        if df is not None:
+            fp = write_single_part(df.coalesce(1), os.path.join(table_path, sub))
             actions.append(
                 {
-                    "add": {
+                    kind: {
                         "path": os.path.relpath(fp, table_path),
                         "size": os.path.getsize(fp),
-                        "dataChange": True,
-                    }
-                }
-            )
-    if cdc_df is not None:
-        import glob
-
-        sub = os.path.join("_change_data", f"cdc-{version:020d}")
-        cdc_df.coalesce(1).write.parquet(os.path.join(table_path, sub))
-        for fp in sorted(
-            glob.glob(os.path.join(table_path, sub, "part-*.parquet"))
-        ):
-            actions.append(
-                {
-                    "cdc": {
-                        "path": os.path.relpath(fp, table_path),
-                        "size": os.path.getsize(fp),
-                        "dataChange": False,
+                        "dataChange": kind == "add",
                     }
                 }
             )

@@ -5,6 +5,7 @@ NiFi mappings (SURVEY.md §2.1/§2.2/§2.4):
 - ``read_records`` / ``write_records`` — the RecordReader / RecordSetWriter
   controller services behind every record-aware processor: one call per
   format, schema explicit (schema-on-read discipline, SURVEY.md §1.3).
+- ``write_single_part`` — one parquet data file for a lakehouse commit.
 - ``convert_record`` — the ConvertRecord processor: a pure reader→writer
   format bridge with no row-level logic.
 - ``read_binary_files`` — GetFile for opaque payloads: one row per file,
@@ -22,6 +23,8 @@ read-back.
 
 from __future__ import annotations
 
+import glob
+import os
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,6 +120,23 @@ def write_records(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
+
+
+def write_single_part(df: DataFrame, path: str) -> str:
+    """Write a single-partition frame as parquet under ``path`` and
+    return its one part file: the data file that a lakehouse commit (a
+    Delta ``add`` or ``cdc`` action, an Iceberg manifest entry, a Hudi
+    file slice) names.
+
+    The caller shapes the partition: ``coalesce(1)``, plus any
+    ``sortWithinPartitions`` that deletion-vector or position-delete
+    ordinals depend on.  Raises ``ValueError`` unless exactly one part
+    file was written."""
+    df.write.mode("overwrite").parquet(path)
+    parts = glob.glob(os.path.join(path, "part-*.parquet"))
+    if len(parts) != 1:
+        raise ValueError(f"{path}: expected one part file, found {len(parts)}")
+    return parts[0]
 
 
 def convert_record(

@@ -39,6 +39,8 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.sources.formats import write_single_part
+
 __all__ = [
     "hudi_init",
     "hudi_write_base_file",
@@ -97,13 +99,10 @@ def hudi_write_base_file(
         .coalesce(1)
         .sortWithinPartitions(key_col)
     )
-    n.write.mode("overwrite").parquet(out_dir)
-    part = [
-        p for p in os.listdir(out_dir) if p.startswith("part-")
-    ][0]
+    part = write_single_part(n, out_dir)
     dst = os.path.join(table_path, rel)
     os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(os.path.join(out_dir, part), dst)
+    os.replace(part, dst)
     shutil.rmtree(out_dir)
     return {
         "fileId": file_id,

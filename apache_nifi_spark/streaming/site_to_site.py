@@ -15,10 +15,9 @@ parallel.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.io import scratch
 from apache_nifi_spark.streaming.sources import drain
 
 __all__ = ["s2s_push", "s2s_pull"]
@@ -28,7 +27,7 @@ def s2s_push(sdf: DataFrame) -> str:
     """Producer half (remote process group → peer input port): drain the
     stream to a fresh bus directory, exactly-once via the drain's
     checkpoint.  Returns the bus path for the consumer."""
-    bus = tempfile.mkdtemp(prefix="anspark_s2s_bus_")
+    bus = scratch("anspark_s2s_bus_")
     drain(sdf.writeStream.format("parquet").option("path", bus))
     return bus
 

@@ -17,15 +17,19 @@ memory-sink caller the registry and the tests use.
 
 from __future__ import annotations
 
+import functools
 import os
 import pathlib
-import tempfile
+import shutil
 import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
+
+from apache_nifi_spark.io import normalize_events_ts, scratch
 
 #: serializes every drain's scoped session confs — the session conf is
 #: process-global, so the save/set/restore must not interleave across
@@ -47,8 +51,20 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
-#: file path → (landing dir, schema); see stream_events staging note.
-_LANDING_CACHE: dict[str, tuple[str, "object"]] = {}
+@functools.cache
+def _landing(spark: SparkSession, src: str) -> tuple[str, StructType]:
+    """Stage the single parquet file ``src`` as a landing directory and
+    read its schema, once per session and file: queries that open the
+    same stream twice (self-union dedup, stream-stream joins) and
+    repeated bench runs reuse the directory and the footer read.
+
+    FileStreamSource wants a directory (the landing zone, §3.2), so the
+    file is linked into one: zero data copy."""
+    landing = scratch("anspark_landing_")
+    # abspath: a relative sf_dir would otherwise create a symlink
+    # resolved relative to the LANDING dir — silently broken
+    os.symlink(os.path.abspath(src), os.path.join(landing, os.path.basename(src)))
+    return landing, spark.read.parquet(landing).schema
 
 
 def stream_events(
@@ -66,20 +82,7 @@ def stream_events(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = path or f"{sf_dir}/events.parquet"
     if os.path.isfile(src):
-        # FileStreamSource wants a directory (the landing zone, §3.2); a
-        # single-file fixture is staged via symlink — zero data copy.
-        # Staged once per source file: queries that open the same stream
-        # twice (self-union dedup, stream-stream joins) and repeated bench
-        # runs reuse the landing dir and the footer-read schema.
-        cached = _LANDING_CACHE.get(src)
-        if cached is None or not os.path.isdir(cached[0]):
-            landing = tempfile.mkdtemp(prefix="anspark_landing_")
-            # abspath: a relative sf_dir would otherwise create a symlink
-            # resolved relative to the LANDING dir — silently broken
-            os.symlink(os.path.abspath(src), os.path.join(landing, os.path.basename(src)))
-            cached = (landing, spark.read.parquet(landing).schema)
-            _LANDING_CACHE[src] = cached
-        src, schema = cached
+        src, schema = _landing(spark, src)
     else:
         schema = spark.read.parquet(src).schema  # footer read only
     reader = spark.readStream.schema(schema).format("parquet")
@@ -90,10 +93,7 @@ def stream_events(
     # instant is identical — run_to_memory casts back to NTZ for the
     # oracle-parity comparison.  Dtype-adaptive: handles both the nanos
     # (bigint) and µs (timestamp_ntz) fixture shapes.
-    from apache_nifi_spark.io import normalize_events_ts
-
-    sdf = normalize_events_ts(sdf, "timestamp")
-    return sdf
+    return normalize_events_ts(sdf, "timestamp")
 
 
 def drain(
@@ -114,9 +114,13 @@ def drain(
 
     The checkpoint directory plays the FlowFile-repository role
     (SURVEY.md §1.1).  With ``checkpoint=None`` the drain gets a fresh
-    private ``mkdtemp`` directory, so invocations stay independent.  A
-    caller that replays batches against a checkpoint it keeps passes it
-    in.
+    private ``io.scratch`` directory, so invocations stay independent,
+    and removes it once ``awaitTermination()`` returns cleanly: the
+    checkpoint is the query's restart log, and a drained availableNow
+    query that nobody else can name has no restart.  A failed drain's
+    checkpoint stays (until process exit) for inspection.  A caller
+    that replays batches against a checkpoint it keeps passes it in;
+    the drain never touches it.
 
     Every drain scopes its session confs to the drain: they are set
     under ``_DRAIN_CONF_LOCK``, read at query START, and restored (or
@@ -165,10 +169,12 @@ def drain(
     drain-and-stop run, never what is emitted.
     """
     confs = {}
+    private = None
     if checkpoint is None:
+        private = scratch("anspark_cp_")
         # an explicit file: URI keeps the checkpoint local whatever
         # fs.defaultFS says; the manager's guarantees above are those of file:
-        checkpoint = pathlib.Path(tempfile.mkdtemp(prefix="anspark_cp_")).as_uri()
+        checkpoint = pathlib.Path(private).as_uri()
         confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
@@ -200,6 +206,10 @@ def drain(
                     sess.conf.unset(k)
                 else:
                     sess.conf.set(k, v)
+    if private is not None:
+        # a state-store maintenance thread may still touch the directory;
+        # whatever it leaves goes with the scratch root at exit
+        shutil.rmtree(private, ignore_errors=True)
     return q
 
 

@@ -29,7 +29,8 @@ from __future__ import annotations
 import os
 import ssl
 import subprocess
-import tempfile
+
+from apache_nifi_spark.io import scratch
 
 __all__ = [
     "client_context",
@@ -40,7 +41,7 @@ __all__ = [
 
 def generate_self_signed(directory: str | None = None) -> tuple[str, str]:
     """(cert_path, key_path) for CN=localhost with 127.0.0.1 SAN."""
-    directory = directory or tempfile.mkdtemp(prefix="anspark_tls_")
+    directory = directory or scratch("anspark_tls_")
     os.makedirs(directory, exist_ok=True)
     cert = os.path.join(directory, "server.crt")
     key = os.path.join(directory, "server.key")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -49,9 +50,8 @@ def run_bench(sf_dir: str) -> dict:
     # sub-second queries); AQE re-splits at real scale, so this is config,
     # not a code-path difference.
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4"))
-    spark = get_spark(
-        app_name="bench", shuffle_partitions=shuffle, extra_conf=_use_tmpfs()
-    )
+    tmpfs = _use_tmpfs()
+    spark = get_spark(app_name="bench", shuffle_partitions=shuffle, extra_conf=tmpfs)
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
@@ -90,7 +90,7 @@ def run_bench(sf_dir: str) -> dict:
 
     # Flow-compile warm-up, billed to its own row (round-14 verdict
     # item 1): the mega-flow query families share ONE flow
-    # compile+landing per (session, sf_dir) (_MEGA_CACHE/_MEGA2_CACHE)
+    # compile+landing per (session, sf_dir) (_mega_outputs/_mega2_outputs)
     # — without this, whichever family member runs FIRST absorbs that
     # one-time cost inside its timed runs (mega2_lookup_xpath_xquery
     # read 8.8-15.1 s in the r14 receipt vs 1.3 s warm).  The helpers
@@ -154,6 +154,8 @@ def run_bench(sf_dir: str) -> dict:
     total = round(sum(timings.values()), 4)
 
     spark.stop()
+    if tmpfs:  # RAM-backed: nothing of the run may outlive it there
+        shutil.rmtree(tmpfs["spark.local.dir"], ignore_errors=True)
     out = {
         "metric": "suite_wall_sec",
         "value": total,

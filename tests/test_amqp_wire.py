@@ -6,7 +6,6 @@ from __future__ import annotations
 import glob
 import pathlib
 import socket
-import tempfile
 
 import pytest
 
@@ -27,8 +26,8 @@ def _landed_lines(broker, n):
     ]
 
 
-def test_handshake_publish_confirm_and_landing():
-    landing = tempfile.mkdtemp(prefix="amqp_proto_")
+def test_handshake_publish_confirm_and_landing(tmp_path):
+    landing = str(tmp_path)
     with MiniAmqpBroker(landing) as broker:
         c = _AmqpClient("127.0.0.1", broker.port)
         c.publish("ex", "a.b.c", b"hello")
@@ -46,8 +45,8 @@ def test_handshake_publish_confirm_and_landing():
         assert by_key[b"big"] == b"z" * 1000
 
 
-def test_wrong_protocol_header_rejected():
-    landing = tempfile.mkdtemp(prefix="amqp_bad_")
+def test_wrong_protocol_header_rejected(tmp_path):
+    landing = str(tmp_path)
     with MiniAmqpBroker(landing) as broker:
         with socket.create_connection(("127.0.0.1", broker.port), timeout=5) as s:
             s.sendall(b"HTTP/1.1 GET /\r\n")
@@ -57,8 +56,8 @@ def test_wrong_protocol_header_rejected():
             assert s.recv(1) == b""  # closed
 
 
-def test_publish_amqp_partitioned(spark):
-    landing = tempfile.mkdtemp(prefix="amqp_part_")
+def test_publish_amqp_partitioned(spark, tmp_path):
+    landing = str(tmp_path)
     with MiniAmqpBroker(landing) as broker:
         df = spark.range(150).selectExpr(
             "concat('k.', cast(id % 5 as string)) as rk",

@@ -554,17 +554,15 @@ def test_xquery_compile_forms():
         compile_xquery("x", "for $i in /a/b return $i")
 
 
-def test_execute_sql_source_imports(spark, sf_dir):
+def test_execute_sql_source_imports(spark, sf_dir, tmp_path):
     """ExecuteSQL as a flow SOURCE: the imported flow reads from a real
     JDBC database (embedded Derby) and chains a QueryRecord aggregate —
     closing the 'flow starts from a database' migration path."""
-    import tempfile
-
     from apache_nifi_spark import io
     from apache_nifi_spark.plans.flow_import import run_flow
     from apache_nifi_spark.sources import jdbc_write
 
-    db = tempfile.mkdtemp(prefix="flow_derby_") + "/db"
+    db = str(tmp_path / "db")
     url = f"jdbc:derby:{db};create=true"
     sup = io.load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
@@ -602,13 +600,12 @@ def test_execute_sql_source_imports(spark, sf_dir):
     assert (got["n"], got["s"]) == (exp[0], exp[1])
 
 
-def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
+def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir, tmp_path_factory):
     """PublishMQTT / PublishAMQP as flow sinks: the imported flow
     delivers over the real wire to in-process brokers; failures route
     to 'failure' instead of failing the plan."""
     import glob
     import pathlib
-    import tempfile
 
     from apache_nifi_spark.plans.flow_import import run_flow
     from apache_nifi_spark.streaming.amqp_wire import MiniAmqpBroker
@@ -618,8 +615,8 @@ def test_publish_mqtt_amqp_flow_sinks(spark, sf_dir):
         return {"source": {"id": src}, "destination": {"id": dst},
                 "selectedRelationships": rels}
 
-    mq_land = tempfile.mkdtemp(prefix="flow_mqtt_")
-    am_land = tempfile.mkdtemp(prefix="flow_amqp_")
+    mq_land = str(tmp_path_factory.mktemp("flow_mqtt"))
+    am_land = str(tmp_path_factory.mktemp("flow_amqp"))
     with (
         MiniMqttBroker(mq_land) as mq,
         MiniAmqpBroker(am_land) as am,
@@ -687,7 +684,7 @@ def test_remote_process_group_validation(spark, sf_dir):
             run_flow(spark, sf_dir, flow(api.url))
 
 
-def test_remote_process_group_https_discovery(spark, sf_dir):
+def test_remote_process_group_https_discovery(spark, sf_dir, tmp_path):
     """An https targetUri must perform S2S discovery over TLS (ADVICE
     round-9: HTTPConnection was used for both schemes, so a secured
     deployment's discovery died on a plaintext request).  A minimal TLS
@@ -695,7 +692,6 @@ def test_remote_process_group_https_discovery(spark, sf_dir):
     request completes over the wire: the compile must fail with the
     protocol-level 'disabled' error, not a TLS/connection error."""
     import http.server
-    import tempfile
     import threading
 
     import pytest
@@ -706,7 +702,7 @@ def test_remote_process_group_https_discovery(spark, sf_dir):
         server_context,
     )
 
-    cert, key = generate_self_signed(tempfile.mkdtemp(prefix="anspark_rpg_tls_"))
+    cert, key = generate_self_signed(str(tmp_path))
 
     class Disco(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
@@ -747,14 +743,13 @@ def test_remote_process_group_https_discovery(spark, sf_dir):
         httpd.server_close()
 
 
-def test_remote_process_group_https_unpinned_verifies_system_ca(spark, sf_dir):
+def test_remote_process_group_https_unpinned_verifies_system_ca(spark, sf_dir, tmp_path):
     """An https targetUri WITHOUT a pinned caFile must verify against the
     system CA bundle (round-10 advice: verification was silently disabled,
     trusting any MITM-supplied controller response).  A self-signed
     discovery endpoint must therefore fail the TLS handshake — surfaced
     as the discovery FlowImportError — never return a parsed controller."""
     import http.server
-    import tempfile
     import threading
 
     import pytest
@@ -765,7 +760,7 @@ def test_remote_process_group_https_unpinned_verifies_system_ca(spark, sf_dir):
         server_context,
     )
 
-    cert, key = generate_self_signed(tempfile.mkdtemp(prefix="anspark_rpg_ca_"))
+    cert, key = generate_self_signed(str(tmp_path))
 
     class Disco(http.server.BaseHTTPRequestHandler):
         def do_GET(self):

@@ -6,7 +6,6 @@ build on, pinned at unit scale."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,8 +52,8 @@ def test_log_block_roundtrip_and_truncation(tmp_path):
         hudi_parse_log_blocks(b"#NOPE#" + blob[6:])
 
 
-def test_cow_upsert_timetravel_and_clean(spark):
-    tmp = tempfile.mkdtemp(prefix="anspark_hudi_t_")
+def test_cow_upsert_timetravel_and_clean(spark, tmp_path):
+    tmp = str(tmp_path)
     c1 = _mk_table(
         spark, tmp, [(i, "en") for i in range(10)]
     )
@@ -75,15 +74,15 @@ def test_cow_upsert_timetravel_and_clean(spark):
         read_hudi_snapshot(spark, tmp, as_of=c1).count()
 
 
-def test_clean_refuses_empty_retention(spark):
-    tmp = tempfile.mkdtemp(prefix="anspark_hudi_t_")
+def test_clean_refuses_empty_retention(spark, tmp_path):
+    tmp = str(tmp_path)
     _mk_table(spark, tmp, [(1, "en")])
     with pytest.raises(ValueError):
         hudi_clean(spark, tmp, retain_from="99999999999999999")
 
 
-def test_mor_delete_then_upsert_resurrects(spark):
-    tmp = tempfile.mkdtemp(prefix="anspark_hudi_t_")
+def test_mor_delete_then_upsert_resurrects(spark, tmp_path):
+    tmp = str(tmp_path)
     c1 = _mk_table(spark, tmp, [(1, "en"), (2, "en"), (3, "en")])
     dc2, dc3 = "20240102000000000", "20240103000000000"
     hudi_commit(
@@ -114,10 +113,10 @@ def test_mor_delete_then_upsert_resurrects(spark):
     assert read_hudi_snapshot(spark, tmp).count() == 3
 
 
-def test_mor_base_slices_ignore_log_stats(spark):
+def test_mor_base_slices_ignore_log_stats(spark, tmp_path):
     """A deltacommit's write stats name LOG files; base-slice
     resolution must never pick one as a base file."""
-    tmp = tempfile.mkdtemp(prefix="anspark_hudi_t_")
+    tmp = str(tmp_path)
     c1 = _mk_table(spark, tmp, [(1, "en")])
     hudi_commit(
         tmp, "20240105000000000",

@@ -391,7 +391,7 @@ def test_pack_greedy_bins_and_oversize(spark):
     assert got == {1: 0, 2: 0, 3: 1, 4: 1, 5: 2, 6: 3, 7: 0}
 
 
-def test_flow_registry_versions_and_pinning(spark):
+def test_flow_registry_versions_and_pinning(spark, tmp_path):
     from apache_nifi_spark.plans import FlowRegistry
 
     reg = FlowRegistry()
@@ -404,8 +404,7 @@ def test_flow_registry_versions_and_pinning(spark):
     assert [r["version"] for r in snap] == [1, 2]
     assert snap[0]["digest"] != snap[1]["digest"]
     # round-trip through the parquet catalog (the PVC analog)
-    import tempfile
-    path = tempfile.mkdtemp(prefix="anspark_flowreg_") + "/cat"
+    path = str(tmp_path / "cat")
     reg.save(spark, path)
     reg2 = FlowRegistry.load(spark, path)
     assert reg2.get("b", "f", 1) == "SELECT 1 AS x"

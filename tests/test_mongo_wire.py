@@ -7,7 +7,6 @@ import datetime
 import glob
 import json
 import pathlib
-import tempfile
 
 import pytest
 
@@ -45,8 +44,8 @@ def test_bson_rejects_unsupported():
         bson_encode({"nul\x00key": 1})
 
 
-def test_wire_insert_find_count_and_landing():
-    landing = tempfile.mkdtemp(prefix="mongo_proto_")
+def test_wire_insert_find_count_and_landing(tmp_path):
+    landing = str(tmp_path)
     with MiniMongoServer(landing) as srv:
         client = MongoWireClient("127.0.0.1", srv.port)
         try:
@@ -67,8 +66,8 @@ def test_wire_insert_find_count_and_landing():
             client.close()
 
 
-def test_put_mongo_records_partition_batching(spark):
-    landing = tempfile.mkdtemp(prefix="mongo_put_")
+def test_put_mongo_records_partition_batching(spark, tmp_path):
+    landing = str(tmp_path)
     with MiniMongoServer(landing) as srv:
         from apache_nifi_spark.sources.mongo_wire import put_mongo_records
 

@@ -7,7 +7,6 @@ import glob
 import pathlib
 import socket
 import struct
-import tempfile
 
 import pytest
 
@@ -38,8 +37,8 @@ def _wait_landed(broker, n):
     ]
 
 
-def test_publish_qos1_roundtrip_and_escaping():
-    landing = tempfile.mkdtemp(prefix="mqtt_proto_")
+def test_publish_qos1_roundtrip_and_escaping(tmp_path):
+    landing = str(tmp_path)
     with MiniMqttBroker(landing) as broker:
         c = _MqttClient("127.0.0.1", broker.port, "t1")
         c.publish_qos1("a/b", b"plain")
@@ -54,8 +53,8 @@ def test_publish_qos1_roundtrip_and_escaping():
         assert by_topic[b"big/one"] == b"x" * 300
 
 
-def test_connack_refuses_wrong_protocol():
-    landing = tempfile.mkdtemp(prefix="mqtt_bad_")
+def test_connack_refuses_wrong_protocol(tmp_path):
+    landing = str(tmp_path)
     with MiniMqttBroker(landing) as broker:
         with socket.create_connection(("127.0.0.1", broker.port), timeout=5) as s:
             body = (
@@ -81,10 +80,10 @@ def test_connack_refuses_wrong_protocol():
                 m._mqtt_str = orig
 
 
-def test_publish_mqtt_partitioned(spark):
+def test_publish_mqtt_partitioned(spark, tmp_path):
     from apache_nifi_spark.streaming.mqtt import publish_mqtt
 
-    landing = tempfile.mkdtemp(prefix="mqtt_part_")
+    landing = str(tmp_path)
     with MiniMqttBroker(landing) as broker:
         df = spark.range(200).selectExpr(
             "concat('t/', cast(id % 3 as string)) as topic",

@@ -765,7 +765,7 @@ def test_flowfile_v3_nifi_wire_framing_and_truncation(spark):
         unpack_flowfile_v3(bad_df, "group_id", "stream").collect()
 
 
-def test_pgp_rfc4880_gpg_interop_and_mdc(spark):
+def test_pgp_rfc4880_gpg_interop_and_mdc(spark, tmp_path):
     """OpenPGP content protection (RFC 4880): our SKESK+SEIPD messages
     decrypt with the REAL gpg binary and vice versa (when gpg is
     installed); the S2K count encoding matches the spec example; any
@@ -773,7 +773,6 @@ def test_pgp_rfc4880_gpg_interop_and_mdc(spark):
     fails the prefix quick check."""
     import shutil
     import subprocess
-    import tempfile
 
     import pytest
 
@@ -800,7 +799,7 @@ def test_pgp_rfc4880_gpg_interop_and_mdc(spark):
 
     gpg = shutil.which("gpg")
     if gpg:
-        d = tempfile.mkdtemp(prefix="anspark_pgp_")
+        d = str(tmp_path)
         with open(f"{d}/ours.pgp", "wb") as f:
             f.write(msg)
         out = subprocess.run(
@@ -974,13 +973,12 @@ def test_snappy_lz4_block_codecs():
         lz4_decompress(bytes([(1 << 4) | 0]) + b"a" + (9).to_bytes(2, "little"))
 
 
-def test_lz4_frame_real_binary_interop_and_xxhash_vectors():
+def test_lz4_frame_real_binary_interop_and_xxhash_vectors(tmp_path):
     """LZ4 FRAME format + from-scratch xxHash32: public xxh32 test
     vectors hold; our frames decode with the REAL lz4 binary and vice
     versa (when installed); header/content checksum tampers raise."""
     import shutil
     import subprocess
-    import tempfile
 
     import pytest
 
@@ -1007,7 +1005,7 @@ def test_lz4_frame_real_binary_interop_and_xxhash_vectors():
 
     lz4 = shutil.which("lz4")
     if lz4:
-        d = tempfile.mkdtemp(prefix="anspark_lz4_")
+        d = str(tmp_path)
         with open(f"{d}/ours.lz4", "wb") as f:
             f.write(frame)
         out = subprocess.run([lz4, "-d", "-c", f"{d}/ours.lz4"],

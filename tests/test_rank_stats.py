@@ -428,7 +428,7 @@ def test_gini_pareto_two_level_matches_window_path(spark):
 
     # switch routing: big threshold -> window path; tiny -> two-level
     sf = "/root/testdata/sf0.001"
-    ra._CUST_COUNT_CACHE.clear()
+    ra._customer_count.cache_clear()
     assert ra._segment_sort_is_safe(spark, sf) is True
     assert ra._segment_sort_is_safe(spark, sf, threshold=10) is False
     # both queries stay value-identical when forced onto the scale path
@@ -437,12 +437,12 @@ def test_gini_pareto_two_level_matches_window_path(spark):
         small_g = ra.QUERIES["stats_gini_concentration"](spark, sf).collect()
         small_p = ra.QUERIES["stats_pareto_8020"](spark, sf).collect()
         ra._SEG_SORT_THRESHOLD = 10
-        ra._CUST_COUNT_CACHE.clear()
+        ra._customer_count.cache_clear()
         # re-point the module-level safety check at the tiny threshold
         big_g = ra.QUERIES["stats_gini_concentration"](spark, sf).collect()
         big_p = ra.QUERIES["stats_pareto_8020"](spark, sf).collect()
     finally:
         ra._SEG_SORT_THRESHOLD = orig
-        ra._CUST_COUNT_CACHE.clear()
+        ra._customer_count.cache_clear()
     assert sorted(map(tuple, small_g)) == sorted(map(tuple, big_g))
     assert sorted(map(tuple, small_p)) == sorted(map(tuple, big_p))

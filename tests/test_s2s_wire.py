@@ -7,7 +7,6 @@ import json
 import os
 import socket
 import struct
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,15 +21,15 @@ from apache_nifi_spark.streaming.tls import client_context, generate_self_signed
 
 
 @pytest.fixture(scope="module")
-def tls_pair():
-    d = tempfile.mkdtemp(prefix="anspark_s2s_test_tls_")
+def tls_pair(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("anspark_s2s_test_tls"))
     return generate_self_signed(d)
 
 
 @pytest.fixture
-def server(tls_pair):
+def server(tls_pair, tmp_path):
     cert, key = tls_pair
-    landing = tempfile.mkdtemp(prefix="anspark_s2s_test_land_")
+    landing = str(tmp_path)
     with SiteToSiteServer(landing, cert, key, peers=[("other-node", 10000)]) as s:
         yield s
 

@@ -3,8 +3,6 @@ strategies, format round-trips, binary source, JDBC option validation."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -20,18 +18,18 @@ from apache_nifi_spark.sources import (
 )
 
 
-def test_convert_record_csv_roundtrip_preserves_types(spark, sf_dir):
+def test_convert_record_csv_roundtrip_preserves_types(spark, sf_dir, tmp_path):
     sup = io.load_table(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="t_csv_")
+    out = str(tmp_path)
     back = convert_record(spark, sup, "csv", out)
     assert back.schema == sup.schema
     assert sorted(back.collect()) == sorted(sup.collect())
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "avro", "xml"])
-def test_put_file_conflict_strategies(spark, sf_dir, fmt):
+def test_put_file_conflict_strategies(spark, sf_dir, fmt, tmp_path):
     nation = io.load_table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="t_modes_")
+    out = str(tmp_path)
     write_records(nation, out, fmt)  # initial write
     n = nation.count()
 
@@ -53,9 +51,9 @@ def test_put_file_conflict_strategies(spark, sf_dir, fmt):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "avro"])
-def test_partitioned_write_prunes_directories(spark, sf_dir, fmt):
+def test_partitioned_write_prunes_directories(spark, sf_dir, fmt, tmp_path):
     orders = io.load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="t_part_")
+    out = str(tmp_path)
     write_records(orders, out, fmt, partition_by=["o_orderstatus"])
     back = read_records(spark, out, fmt).filter(F.col("o_orderstatus") == "F")
     assert back.count() == orders.filter(F.col("o_orderstatus") == "F").count()
@@ -87,16 +85,14 @@ def test_jdbc_partition_options_validated(spark):
         )
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    import tempfile
-
+def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     from apache_nifi_spark import io
     from apache_nifi_spark.plans import count_exchanges
     from apache_nifi_spark.sources import bucketed_table, write_bucketed
 
     li = io.load_table(spark, sf_dir, "lineitem")
     orders = io.load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="t_bucketed_")
+    base = str(tmp_path)
     write_bucketed(li, "t_li_bucketed", ["l_orderkey"], 8, path=f"{base}/li")
     write_bucketed(
         orders.withColumnRenamed("o_orderkey", "l_orderkey"),
@@ -184,16 +180,14 @@ def test_generate_table_fetch_covers_range_exactly(spark):
     assert "WHERE k >= 100" in plan[0].fetch_sql
 
 
-def test_jdbc_derby_roundtrip_partitioned(spark, sf_dir):
+def test_jdbc_derby_roundtrip_partitioned(spark, sf_dir, tmp_path):
     """PutDatabaseRecord → partitioned QueryDatabaseTable against the
     embedded Derby engine: values round-trip exactly and the range fetch
     really produces numPartitions JDBC partitions."""
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_read, jdbc_write
 
     drv = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='anspark_derbyt_')}/db;create=true"
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
     nat = io.load_table(spark, sf_dir, "nation")
     jdbc_write(nat, url, "nation_db", options=drv)
     back = jdbc_read(

@@ -5,7 +5,6 @@ list/fetch/put operators."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,8 +105,8 @@ def test_aes128_fips197_and_ctr_sp80038a():
 
 
 @pytest.fixture(scope="module")
-def sftp_server():
-    root = tempfile.mkdtemp(prefix="anspark_sftp_test_")
+def sftp_server(tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("anspark_sftp_test"))
     with open(os.path.join(root, "hello.txt"), "wb") as f:
         f.write(b"hello over ssh")
     with open(os.path.join(root, "big.bin"), "wb") as f:

@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 import os
 import socket
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,8 +22,8 @@ from apache_nifi_spark.streaming.stomp import (
 
 
 @pytest.fixture
-def broker():
-    landing = tempfile.mkdtemp(prefix="anspark_stomp_test_")
+def broker(tmp_path):
+    landing = str(tmp_path)
     with MiniStompBroker(landing) as b:
         yield b
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import pathlib
-import tempfile
 import time
 
 import pytest
@@ -39,10 +38,10 @@ def test_correlate_streams_batch_parity(spark, sf_dir):
     )
 
 
-def test_max_files_per_trigger_multi_batch_and_backpressure(spark, sf_dir):
+def test_max_files_per_trigger_multi_batch_and_backpressure(spark, sf_dir, tmp_path):
     # stage the same fixture as three files → three micro-batches at cap 1
     src = f"{sf_dir}/events.parquet"
-    landing = tempfile.mkdtemp(prefix="t_landing_")
+    landing = str(tmp_path)
     for i in range(3):
         os.symlink(src, os.path.join(landing, f"events_{i}.parquet"))
 
@@ -64,7 +63,7 @@ def test_max_files_per_trigger_multi_batch_and_backpressure(spark, sf_dir):
         spark.streams.removeListener(monitor)
 
 
-def test_listen_http_landing_zone(spark, sf_dir):
+def test_listen_http_landing_zone(spark, sf_dir, tmp_path):
     """E2E ListenHTTP analog (the reference's curl-POST entry point):
     POST JSON events to a live local HTTP listener → landing files →
     streaming drain → aggregate matches what was sent."""
@@ -73,7 +72,7 @@ def test_listen_http_landing_zone(spark, sf_dir):
 
     from apache_nifi_spark.streaming import HttpLandingListener, stream_json_landing
 
-    landing = tempfile.mkdtemp(prefix="t_http_landing_")
+    landing = str(tmp_path)
     events = [
         {"event_id": i, "event_type": "purchase" if i % 2 else "error", "value": float(i)}
         for i in range(10)
@@ -270,17 +269,16 @@ def test_map_cache_protocol_ops():
         s.close()
 
 
-def test_octet_counted_framing_carries_embedded_newlines(spark):
+def test_octet_counted_framing_carries_embedded_newlines(spark, tmp_path):
     """RFC 6587 octet-counting must deliver messages containing raw
     newlines intact (escaped in the landing file), which the newline
     framing cannot do."""
     import glob
-    import tempfile
 
     from apache_nifi_spark.sinks import put_tcp_octet_counted
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
-    landing = tempfile.mkdtemp(prefix="octet_test_")
+    landing = str(tmp_path)
     with TcpLandingListener(landing, framing="octet") as lst:
         df = spark.createDataFrame(
             [("one line",), ("two\nlines",), ("",)], "content string"
@@ -293,17 +291,16 @@ def test_octet_counted_framing_carries_embedded_newlines(spark):
         assert lines == [b"one line", b"two\\nlines"]
 
 
-def test_octet_truncated_frame_and_unescape_roundtrip():
+def test_octet_truncated_frame_and_unescape_roundtrip(tmp_path):
     """A final frame whose declared length runs past the received bytes
     must be dropped, not landed partially (the escape's round trip is in
     tests/test_landing.py)."""
     import glob
     import socket
-    import tempfile
 
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
-    landing = tempfile.mkdtemp(prefix="octet_trunc_")
+    landing = str(tmp_path)
     with TcpLandingListener(landing, framing="octet") as lst:
         with socket.create_connection(("127.0.0.1", lst.port)) as s:
             # one good frame, then a frame declaring 50 bytes but sending 4
@@ -353,17 +350,16 @@ def test_prometheus_endpoint_scrape(spark):
             assert e.code == 404
 
 
-def test_smtp_dot_transparency_and_envelope(spark):
+def test_smtp_dot_transparency_and_envelope(spark, tmp_path):
     """A body line starting with '.' must survive dot-stuffing (smtplib
     stuffs, the server unstuffs) and the envelope must land as
     X-Envelope headers distinct from the message headers."""
     import glob
     import smtplib
-    import tempfile
 
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer
 
-    landing = tempfile.mkdtemp(prefix="smtp_test_")
+    landing = str(tmp_path)
     with MiniSmtpServer(landing) as srv:
         msg = (
             b"From: header-from@x\r\nSubject: t\r\n\r\n"
@@ -384,17 +380,16 @@ def test_smtp_dot_transparency_and_envelope(spark):
         assert b"...two dots" not in body
 
 
-def test_relp_frame_acks_and_newline_escape(spark):
+def test_relp_frame_acks_and_newline_escape(spark, tmp_path):
     """Every syslog txnr must be individually ACKed (200), embedded
     newlines survive escaped, and the partial batch flushes on close."""
     import glob
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from apache_nifi_spark.streaming.relp import RelpLandingListener, put_relp
 
-    landing = tempfile.mkdtemp(prefix="relp_test_")
+    landing = str(tmp_path)
     # batch_size > n: the connection's close must flush
     with RelpLandingListener(landing, batch_size=100) as lst:
         df = spark.createDataFrame(
@@ -408,19 +403,18 @@ def test_relp_frame_acks_and_newline_escape(spark):
         assert lines == [b"plain msg", b"multi\\nline msg"]
 
 
-def test_mini_elastic_bulk_protocol():
+def test_mini_elastic_bulk_protocol(tmp_path):
     """MiniElasticServer speaks the _bulk contract: per-item results,
     malformed pairs flagged without poisoning the batch, _count and
     _search answer the standard shapes, and every accepted document
     lands durably."""
     import glob
     import json
-    import tempfile
     import urllib.request
 
     from apache_nifi_spark.streaming.elastic_store import MiniElasticServer
 
-    landing = tempfile.mkdtemp(prefix="es_proto_")
+    landing = str(tmp_path)
     with MiniElasticServer(landing) as srv:
         body = "\n".join([
             '{"index":{"_index":"t","_id":"1"}}', '{"k":1}',
@@ -522,31 +516,34 @@ def _record_start_managers(spark, monkeypatch):
     return managers
 
 
-def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch):
+def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch, tmp_path):
     """run_to_memory starts its query with the FileSystem-based checkpoint
     manager, and its private checkpoint holds the same files as the same
-    stream started by hand with Spark's default (FileContext) manager."""
+    stream started by hand with Spark's default (FileContext) manager.
+    The drain removes its checkpoint once the query terminates, so the
+    listing is taken as the removal starts."""
     from apache_nifi_spark.streaming import running_totals_per_key, sources
 
-    made, mkdtemp = [], sources.tempfile.mkdtemp
+    listed, rmtree = {}, sources.shutil.rmtree
 
-    def recording_mkdtemp(*a, **kw):
-        made.append(mkdtemp(*a, **kw))
-        return made[-1]
+    def listing_rmtree(path, *a, **kw):
+        listed[path] = _files_under(path)
+        rmtree(path, *a, **kw)
 
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     managers = _record_start_managers(spark, monkeypatch)
     with monkeypatch.context() as m:
-        m.setattr(sources.tempfile, "mkdtemp", recording_mkdtemp)
+        m.setattr(sources.shutil, "rmtree", listing_rmtree)
         run_to_memory(
             running_totals_per_key(stream_events(spark, sf_dir)),
             shuffle_partitions=parts,
         )
     assert managers == [sources._FS_CHECKPOINT_MANAGER]
-    (drained,) = [d for d in made if os.path.basename(d).startswith("anspark_cp_")]
+    ((drained, files),) = listed.items()
+    assert os.path.basename(drained).startswith("anspark_cp_")
 
     assert spark.conf.get(_MANAGER_KEY, None) is None  # Spark's default
-    by_hand = tempfile.mkdtemp(prefix="t_cp_default_")
+    by_hand = str(tmp_path)
     q = (
         running_totals_per_key(stream_events(spark, sf_dir))
         .writeStream.format("memory")
@@ -558,7 +555,6 @@ def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch):
     )
     q.awaitTermination()
 
-    files = _files_under(drained)
     assert files == _files_under(by_hand)
     for f in ("offsets/0", "commits/0", "metadata", "sources/0/0"):
         assert f in files

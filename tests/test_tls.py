@@ -7,7 +7,6 @@ from __future__ import annotations
 import glob
 import pathlib
 import socket
-import tempfile
 import time
 import urllib.parse
 import urllib.request
@@ -30,12 +29,12 @@ def _landed(landing: str) -> bytes:
     return b"".join(pathlib.Path(p).read_bytes() for p in sorted(glob.glob(f"{landing}/*")))
 
 
-def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
+def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs, tmp_path):
     from apache_nifi_spark.sinks.socket import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
     cert, key = certs
-    landing = tempfile.mkdtemp(prefix="tls_tcp_")
+    landing = str(tmp_path)
     with TcpLandingListener(landing, tls=server_context(cert, key)) as lst:
         df = spark.createDataFrame(
             [("alpha",), ("beta",), ("gamma",)], "content string"
@@ -56,7 +55,7 @@ def test_tls_tcp_listener_roundtrip_and_plaintext_rejected(spark, certs):
         assert b"intruder" not in _landed(landing)
 
 
-def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
+def test_tls_large_payload_not_truncated_by_ticket_rst(certs, tmp_path):
     """Regression: TLS 1.3 session tickets left unread by a send-only
     client turn its close() into an RST, which discards the in-flight
     payload tail server-side (observed as a silent ~64 KB truncation).
@@ -68,7 +67,7 @@ def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
     cert, key = certs
-    landing = tempfile.mkdtemp(prefix="tls_big_")
+    landing = str(tmp_path)
     with TcpLandingListener(landing, tls=server_context(cert, key)) as lst:
         lines = [f"line-{i:06d}".encode() for i in range(20000)]
         payload = b"\n".join(lines) + b"\n"
@@ -87,11 +86,11 @@ def test_tls_large_payload_not_truncated_by_ticket_rst(certs):
         assert got[0] == b"line-000000" and got[-1] == b"line-019999"
 
 
-def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs):
+def test_tls_http_listener_roundtrip_and_untrusted_rejected(certs, tmp_path):
     from apache_nifi_spark.streaming.listen import HttpLandingListener
 
     cert, key = certs
-    landing = tempfile.mkdtemp(prefix="tls_http_")
+    landing = str(tmp_path)
     with HttpLandingListener(landing, tls=server_context(cert, key)) as lst:
         port = urllib.parse.urlsplit(lst.url).port
         url = f"https://localhost:{port}/ingest"

@@ -9,7 +9,6 @@ import glob
 import pathlib
 import socket
 import struct
-import tempfile
 import time
 
 from apache_nifi_spark.streaming.websocket import (
@@ -52,8 +51,8 @@ def _landed(server, n):
     return [pathlib.Path(p).read_bytes().rstrip(b"\n") for p in msgs]
 
 
-def test_frame_lengths_fragmentation_and_ping():
-    landing = tempfile.mkdtemp(prefix="ws_test_")
+def test_frame_lengths_fragmentation_and_ping(tmp_path):
+    landing = str(tmp_path)
     with WebSocketLandingServer(landing) as server:
         s = _connect(server)
         # 7-bit, 16-bit, 64-bit payload length classes
@@ -80,8 +79,8 @@ def test_frame_lengths_fragmentation_and_ping():
         s.close()
 
 
-def test_unmasked_client_frame_closes_1002():
-    landing = tempfile.mkdtemp(prefix="ws_test_")
+def test_unmasked_client_frame_closes_1002(tmp_path):
+    landing = str(tmp_path)
     with WebSocketLandingServer(landing) as server:
         s = _connect(server)
         s.sendall(encode_frame(b"naked"))  # no mask: protocol error
