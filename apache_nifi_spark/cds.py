@@ -32,6 +32,11 @@ at the empty ``conf/`` instead.  A conf directory with real files, a
 ``-Xshare:off`` among the JVM's options, a caller's own
 ``spark.driver.extraJavaOptions``, or a ``<key>.failed`` marker left by a
 writer that failed each mean a launch without the archive.
+
+The engine's own jar (``localfs.py``) joins the class path after Spark's
+jars, through ``SPARK_DIST_CLASSPATH`` scoped to the launch: the JVM maps
+an archive whose class path is a prefix of its own, so the archive, its
+key and the writer's class path leave the jar out.
 """
 
 from __future__ import annotations
@@ -49,7 +54,7 @@ import sys
 import uuid
 from collections.abc import Iterator, Mapping
 
-__all__ = ["launch"]
+__all__ = ["cache_dir", "java_home", "launch"]
 
 _LOG = logging.getLogger(__name__)
 
@@ -88,29 +93,48 @@ sys.exit(jvm.wait())
 _WRITER_TIMEOUT_S = 300
 
 
-def _cache_root() -> str:
+def cache_dir(name: str) -> str:
+    """The per-user cache directory ``name``:
+    ``$XDG_CACHE_HOME/spark-graft/<name>`` (``~/.cache/...`` when unset)."""
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
-    return os.path.realpath(os.path.join(base, "spark-graft", "cds"))
+    return os.path.realpath(os.path.join(base, "spark-graft", name))
+
+
+def _cache_root() -> str:
+    return cache_dir("cds")
 
 
 @contextlib.contextmanager
-def launch(java_options: str, memory: str, extra_conf: Mapping[str, str]) -> Iterator[str]:
+def launch(
+    java_options: str, memory: str, extra_conf: Mapping[str, str], class_path: str | None = None
+) -> Iterator[str]:
     """Wrap the ``getOrCreate`` that may launch the JVM with ``memory`` of
     heap: yields the ``spark.driver.extraJavaOptions`` to launch with
     (``java_options`` plus the archive's options), sets ``SPARK_CONF_DIR``
-    for the launch, and afterwards deletes an archive the JVM did not
-    map."""
+    and appends ``class_path`` to ``SPARK_DIST_CLASSPATH`` for the launch,
+    and afterwards deletes an archive the JVM did not map."""
     plan = _plan(java_options, memory, extra_conf)
-    if plan is None:
-        yield java_options
-        return
-    conf_dir, archive = plan
-    os.environ["SPARK_CONF_DIR"] = conf_dir  # unset, or _plan returns None
+    env = {}
+    if class_path:
+        env["SPARK_DIST_CLASSPATH"] = os.pathsep.join(
+            filter(None, [os.environ.get("SPARK_DIST_CLASSPATH"), class_path])
+        )
+    if plan is not None:
+        conf_dir, archive = plan
+        env["SPARK_CONF_DIR"] = conf_dir  # unset, or _plan returns None
+        java_options = f"{java_options} -XX:SharedArchiveFile={archive} {_QUIET}".strip()
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
     try:
-        yield f"{java_options} -XX:SharedArchiveFile={archive} {_QUIET}".strip()
+        yield java_options
     finally:
-        del os.environ["SPARK_CONF_DIR"]
-    _drop_unmapped(archive)
+        for k, v in saved.items():
+            if v is None:
+                del os.environ[k]
+            else:
+                os.environ[k] = v
+    if plan is not None:
+        _drop_unmapped(archive)
 
 
 def _plan(java_options: str, memory: str, extra_conf: Mapping[str, str]) -> tuple[str, str] | None:
@@ -126,9 +150,9 @@ def _plan(java_options: str, memory: str, extra_conf: Mapping[str, str]) -> tupl
     jvm_options = " ".join([java_options, *(os.environ.get(v, "") for v in _ENV_OPTIONS)])
     if _CALLER_SHARING.search(jvm_options):
         return None
-    java_home = _java_home()
-    if java_home is None or not os.path.isfile(os.path.join(java_home, "lib/server/classes.jsa")):
-        return _skip(f"no base archive lib/server/classes.jsa in the Java home {java_home}")
+    home = java_home()
+    if home is None or not os.path.isfile(os.path.join(home, "lib/server/classes.jsa")):
+        return _skip(f"no base archive lib/server/classes.jsa in the Java home {home}")
     for var in _CLASS_PATH_DIRS:
         if os.environ.get(var):
             return _skip(f"{var} is set")
@@ -144,7 +168,7 @@ def _plan(java_options: str, memory: str, extra_conf: Mapping[str, str]) -> tupl
         os.makedirs(conf_dir, exist_ok=True)
         if not os.access(root, os.W_OK | os.X_OK):
             raise PermissionError(f"{root} is not writable")
-        key = _key(java_home, spark_home)
+        key = _key(home, spark_home)
         archive = _publish(root, key)
         failed = os.path.join(root, f"{key}.failed")
         if not os.path.exists(archive):
@@ -170,7 +194,7 @@ def _skip(reason: str) -> None:
     return None
 
 
-def _java_home() -> str | None:
+def java_home() -> str | None:
     """The Java home ``spark-class`` runs, found as it does, without
     forking ``java``."""
     if os.environ.get("JAVA_HOME"):

@@ -19,6 +19,16 @@ a host pays once: before its own launch, ``get_spark`` runs a one-query
 session in a child process whose JVM writes the archive as it exits
 (35-45 s).  Delete the directory to reset it; put ``-Xshare:off`` in
 ``$SPARK_GRAFT_JAVA_OPTS`` to turn it off.
+
+A JVM launched with a local master writes ``file:`` paths through the
+engine's FileSystem (``localfs.py``), which sets permissions in-process
+where Hadoop's stock one forks a ``chmod`` per file it creates.  Its jar
+is compiled once with the Java home's ``javac`` into
+``$XDG_CACHE_HOME/spark-graft/jvm/<key>.jar``, keyed by the source's hash
+and the Java home (1-5 s on a cold cache, inside the first
+``get_spark``), and appended to the class path after Spark's jars, so
+the class-data archive still maps and its key is unchanged.  A non-local
+master or a host without ``javac`` keeps the stock FS and logs why.
 """
 
 from __future__ import annotations
@@ -27,7 +37,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from apache_nifi_spark import cds
+from apache_nifi_spark import cds, localfs
 
 __all__ = ["get_spark", "stop_spark"]
 
@@ -138,7 +148,11 @@ def get_spark(
     java_options = (
         "-XX:ReservedCodeCacheSize=512m " + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
     ).strip()
-    with cds.launch(java_options, memory, extra_conf) as java_options:
+    jar = localfs.plan(master)
+    if jar is not None:
+        for k, v in localfs.CONFS.items():
+            builder = builder.config(k, v)
+    with cds.launch(java_options, memory, extra_conf, class_path=jar) as java_options:
         builder = builder.config("spark.driver.extraJavaOptions", java_options)
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

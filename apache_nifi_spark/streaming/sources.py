@@ -36,21 +36,6 @@ from apache_nifi_spark.io import normalize_events_ts, scratch
 #: threads (round-10 advice)
 _DRAIN_CONF_LOCK = threading.Lock()
 
-#: The drain's checkpoint manager.  Spark's default,
-#: FileContextBasedCheckpointFileManager, publishes every checkpoint file
-#: (offsets, commits, metadata, source log, each state-store .delta and
-#: each .crc) with FileContext.rename, which on file: runs Hadoop's
-#: AbstractFileSystem.renameInternal: getFileLinkStatus twice per side,
-#: and without libhadoop each call forks a ``readlink``.  Counted with
-#: logging ``chmod``/``readlink`` wrappers on the JVM's PATH, per
-#: stream_stateful_running_totals drain at sf0.01: 176 readlink + 60
-#: chmod forks with the default, 0 readlink + 60 chmod with this one.
-_FS_CHECKPOINT_MANAGER = (
-    "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
-)
-
-
 @functools.cache
 def _landing(spark: SparkSession, src: str) -> tuple[str, StructType]:
     """Stage the single parquet file ``src`` as a landing directory and
@@ -130,19 +115,14 @@ def drain(
     whole drain, so a ``foreachBatch`` callback must never start another
     drain: it would wait forever on the lock this drain holds.
 
-    A private checkpoint is written through Spark's
-    ``FileSystemBasedCheckpointFileManager`` instead of the default
-    FileContext one, whose renames fork ``readlink`` processes on a
-    host without libhadoop (see ``_FS_CHECKPOINT_MANAGER``).  On a
-    ``file:`` checkpoint it keeps the default's guarantees: each file is
-    written to a temp file and published with ``rename(2)``, Hadoop's
-    ``.crc`` sidecars and Spark's state-file checksums are still
-    written, and a no-overwrite rename checks that the destination does
-    not exist first.  What FileContext adds elsewhere, an atomic
-    no-overwrite rename on HDFS, guards against a second writer; the
-    private checkpoint is passed as a ``file:`` URI and has one writer
-    by construction.  Caller-owned checkpoints keep the session's
-    manager.
+    Every checkpoint is written through the session's checkpoint
+    manager (Spark's default is the FileContext one).  On a ``file:``
+    checkpoint the engine's FileSystem (``localfs.py``) sets the mode of
+    each file and reads the link status of each rename in-process, where
+    Hadoop's stock one forks a ``chmod`` and a ``readlink`` without
+    libhadoop (per stream_stateful_running_totals drain at sf0.01: 60
+    ``chmod`` + 176 ``readlink`` with the stock FS, none with the
+    engine's; ``tools/fork_count.py`` counts them).
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
     the drain; ``None`` keeps the session setting.
@@ -173,9 +153,8 @@ def drain(
     if checkpoint is None:
         private = scratch("anspark_cp_")
         # an explicit file: URI keeps the checkpoint local whatever
-        # fs.defaultFS says; the manager's guarantees above are those of file:
+        # fs.defaultFS says
         checkpoint = pathlib.Path(private).as_uri()
-        confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if not final_no_data_batch:

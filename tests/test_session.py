@@ -90,6 +90,21 @@ def test_first_launch_writes_archive_and_later_ones_map_it(dumped):
     assert "[cds" not in console and "[cds" not in first_console
 
 
+def test_engine_jar_is_appended_and_the_archive_still_maps(dumped):
+    """The engine's FileSystem jar (``localfs.py``) ends the JVM's class
+    path, after Spark's jars: the archive, written by a JVM without it,
+    still maps, and its key leaves the jar out."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    xdg, root, first, _ = dumped
+    class_path = first["cmdline"][first["cmdline"].index("-cp") + 1].split(os.pathsep)
+    assert os.path.dirname(class_path[-1]) == os.path.join(xdg, "spark-graft", "jvm")
+    assert class_path[-1].endswith(".jar")
+    assert os.path.join(_find_spark_home(), "jars", "*") in class_path[:-1]
+    archive = os.path.join(root, cds._key(cds.java_home(), _find_spark_home()) + ".jsa")
+    assert archive in first["maps"]
+
+
 def test_incomplete_candidate_is_never_mapped(tmp_path):
     key = "0123456789abcdef"
     root = str(tmp_path)
@@ -155,3 +170,31 @@ def test_failed_writer_is_not_retried(tmp_path, monkeypatch):
     assert cds._plan("", "1g", {}) is None
     assert len(calls) == 1
     [marker] = [n for n in os.listdir(cds._cache_root()) if n.endswith(".failed")]
+
+
+def test_launch_appends_the_engine_jar_for_the_launch_only(tmp_path, monkeypatch):
+    """``SPARK_DIST_CLASSPATH`` holds the engine's jar only while the JVM
+    launches; a user's class path still means a launch without the
+    archive, with the jar after the user's entries."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)  # as before a first launch
+    for var in cds._CLASS_PATH_DIRS:
+        monkeypatch.delenv(var, raising=False)
+    archive = str(tmp_path / "0123456789abcdef.jsa")
+    plan = cds._plan
+    monkeypatch.setattr(cds, "_plan", lambda *a: (str(tmp_path), archive))
+    monkeypatch.setattr(cds, "_drop_unmapped", lambda archive: None)
+    with cds.launch("", "1g", {}, class_path="/engine/fs.jar") as options:
+        assert os.environ["SPARK_DIST_CLASSPATH"] == "/engine/fs.jar"
+        assert os.environ["SPARK_CONF_DIR"] == str(tmp_path)
+        assert f"-XX:SharedArchiveFile={archive}" in options
+    assert "SPARK_DIST_CLASSPATH" not in os.environ and "SPARK_CONF_DIR" not in os.environ
+
+    monkeypatch.setattr(cds, "_plan", plan)
+    monkeypatch.setenv("SPARK_DIST_CLASSPATH", "/user/classes")
+    with cds.launch("", "1g", {}, class_path="/engine/fs.jar") as options:
+        expected = os.pathsep.join(["/user/classes", "/engine/fs.jar"])
+        assert os.environ["SPARK_DIST_CLASSPATH"] == expected
+        assert "SharedArchiveFile" not in options
+    assert os.environ["SPARK_DIST_CLASSPATH"] == "/user/classes"

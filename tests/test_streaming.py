@@ -517,9 +517,10 @@ def _record_start_managers(spark, monkeypatch):
 
 
 def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch, tmp_path):
-    """run_to_memory starts its query with the FileSystem-based checkpoint
-    manager, and its private checkpoint holds the same files as the same
-    stream started by hand with Spark's default (FileContext) manager.
+    """run_to_memory starts its query with the session's checkpoint manager
+    left untouched (unset: Spark's default FileContext one), and its
+    private checkpoint holds the same files as the same stream started by
+    hand.
     The drain removes its checkpoint once the query terminates, so the
     listing is taken as the removal starts."""
     from apache_nifi_spark.streaming import running_totals_per_key, sources
@@ -538,7 +539,7 @@ def test_drain_checkpoint_matches_default_manager(spark, sf_dir, monkeypatch, tm
             running_totals_per_key(stream_events(spark, sf_dir)),
             shuffle_partitions=parts,
         )
-    assert managers == [sources._FS_CHECKPOINT_MANAGER]
+    assert managers == [None]
     ((drained, files),) = listed.items()
     assert os.path.basename(drained).startswith("anspark_cp_")
 
@@ -610,14 +611,14 @@ def test_drain_restores_session_confs(spark, sf_dir):
 def test_sink_drains_run_on_the_drain_kernel(spark, sf_dir, monkeypatch, name):
     """The foreachBatch / file-sink registry queries start every query
     through ``sources.drain``: on its private checkpoint with the
-    FileSystem-based manager, and with the drain confs restored after."""
+    session's manager left untouched, and with the drain confs restored
+    after."""
     from apache_nifi_spark.registry import QUERIES
-    from apache_nifi_spark.streaming import sources
 
     before = {k: spark.conf.get(k, None) for k in _DRAIN_KEYS}
     managers = _record_start_managers(spark, monkeypatch)
     QUERIES[name](spark, sf_dir)
-    assert managers and set(managers) == {sources._FS_CHECKPOINT_MANAGER}
+    assert managers and set(managers) == {None}
     assert {k: spark.conf.get(k, None) for k in _DRAIN_KEYS} == before
 
 
