@@ -89,31 +89,41 @@ def unpack_content_zip(df: DataFrame, id_col: str, archive_col: str) -> DataFram
 
 #: codec name → (compress, decompress) over bytes — NiFi
 #: CompressContent's full codec menu: stdlib gzip/bzip2/xz/deflate plus
-#: the from-scratch Snappy and LZ4 block codecs (operators/lz.py — no
-#: snappy/lz4 library ships here, both implemented from the public
-#: format descriptions).
+#: Snappy and LZ4 through pyarrow's bundled codec libraries.
 def _codecs():
     import bz2
     import gzip as _gzip
     import lzma
     import zlib
 
-    from apache_nifi_spark.operators.lz import (
-        lz4_frame_compress,
-        lz4_frame_decompress,
-        snappy_compress,
-        snappy_decompress,
-    )
+    import pyarrow as pa
+
+    def snappy_decompress(b: bytes) -> bytes:
+        # a raw snappy stream opens with its uncompressed length as a
+        # little-endian base-128 varint
+        n = shift = 0
+        for c in b[:5]:
+            n |= (c & 0x7F) << shift
+            shift += 7
+            if c < 0x80:
+                break
+        return pa.decompress(b, decompressed_size=n, codec="snappy").to_pybytes()
 
     return {
         "gzip": (lambda b: _gzip.compress(b, mtime=0), _gzip.decompress),
         "bzip2": (bz2.compress, bz2.decompress),
         "xz": (lzma.compress, lzma.decompress),
         "deflate": (zlib.compress, zlib.decompress),
-        "snappy": (snappy_compress, snappy_decompress),
+        "snappy": (
+            lambda b: pa.compress(b, codec="snappy", asbytes=True),
+            snappy_decompress,
+        ),
         # NiFi's LZ4 mode speaks the FRAME format (what the lz4 tool
-        # reads/writes — interop-tested against the real binary)
-        "lz4": (lz4_frame_compress, lz4_frame_decompress),
+        # reads and writes)
+        "lz4": (
+            lambda b: pa.compress(b, codec="lz4", asbytes=True),
+            lambda b: pa.CompressedInputStream(pa.BufferReader(b), "lz4").read(),
+        ),
     }
 
 

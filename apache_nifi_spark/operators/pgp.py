@@ -19,12 +19,11 @@ NiFi's OpenPGP processor pair; reference ships stock NiFi 2.7.2
   side stays uncompressed (compression is an option, not a
   requirement, and the deterministic oracle replays bytes).
 
-The block cipher is the repo's FIPS-197 AES from ``sources/ssh_crypto``
-(S-box generated from its GF(2^8) definition, validated against the
-FIPS vectors).  Output is a well-formed passphrase-encrypted OpenPGP
-message: tests decrypt it with the REAL ``gpg`` binary when present
-(interop anchor), and tampering any ciphertext byte fails the MDC
-check loudly.
+AES-128 CFB comes from the ``cryptography`` package (OpenSSL); the
+packets, S2K and MDC are built here.  Output is a well-formed
+passphrase-encrypted OpenPGP message: tests decrypt it with the REAL
+``gpg`` binary when present (interop anchor), and tampering any
+ciphertext byte fails the MDC check loudly.
 
 Determinism note: real deployments draw the 16-byte CFB prefix from a
 CSPRNG; here it derives per record from SHA-1(salt ‖ record id) so the
@@ -41,9 +40,9 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
+from cryptography.hazmat.decrepit.ciphers.modes import CFB
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms
 from pyspark.sql import DataFrame
-
-from apache_nifi_spark.sources.ssh_crypto import _Aes128
 
 __all__ = [
     "s2k_iterated_salted",
@@ -162,27 +161,10 @@ def _read_packet(buf: bytes, off: int) -> tuple[int, bytes, int]:
     return tag, buf[off : off + n], off + n
 
 
-def _cfb_encrypt(aes: _Aes128, plaintext: bytes) -> bytes:
-    out = bytearray()
-    fr = b"\x00" * 16
-    for i in range(0, len(plaintext), 16):
-        chunk = plaintext[i : i + 16]
-        fre = aes.encrypt_block(fr)
-        cblock = bytes(a ^ b for a, b in zip(chunk, fre))
-        out += cblock
-        fr = cblock if len(cblock) == 16 else fr
-    return bytes(out)
-
-
-def _cfb_decrypt(aes: _Aes128, ciphertext: bytes) -> bytes:
-    out = bytearray()
-    fr = b"\x00" * 16
-    for i in range(0, len(ciphertext), 16):
-        chunk = ciphertext[i : i + 16]
-        fre = aes.encrypt_block(fr)
-        out += bytes(a ^ b for a, b in zip(chunk, fre))
-        fr = chunk if len(chunk) == 16 else fr
-    return bytes(out)
+def _cfb(key: bytes) -> Cipher:
+    # RFC 4880 §13.9: SEIPD v1 is plain CFB128 with an all-zero IV
+    # (``cryptography`` files CFB under its legacy "decrepit" modes)
+    return Cipher(algorithms.AES(key), CFB(b"\x00" * 16))
 
 
 def pgp_encrypt_message(
@@ -210,7 +192,7 @@ def pgp_encrypt_message(
     )
     body = prefix + prefix[14:16] + literal + b"\xd3\x14"
     mdc = hashlib.sha1(body).digest()
-    ciphertext = _cfb_encrypt(_Aes128(key), body + mdc)
+    ciphertext = _cfb(key).encryptor().update(body + mdc)
     seipd = _packet(_TAG_SEIPD, b"\x01" + ciphertext)
     return skesk + seipd
 
@@ -236,7 +218,7 @@ def pgp_decrypt_message(message: bytes, passphrase: bytes) -> bytes:
     if seipd[0] != 1:
         raise ValueError(f"unsupported SEIPD version {seipd[0]}")
     key = s2k_iterated_salted(passphrase, s2k[0], s2k[1])
-    plain = _cfb_decrypt(_Aes128(key), seipd[1:])
+    plain = _cfb(key).decryptor().update(seipd[1:])
     if len(plain) < 40:
         raise ValueError("SEIPD body too short")
     if plain[14:16] != plain[16:18]:

@@ -626,10 +626,9 @@ def compress_content_per_record_q(spark, sf_dir):
 )
 def compress_content_snappy_lz4_q(spark, sf_dir):
     """CompressContent's snappy + lz4 codecs (§2.4 — the two menu
-    entries no stdlib covers, implemented from the public format
-    descriptions in operators/lz.py; lz4 speaks the FRAME format with
-    from-scratch xxHash32 checksums, interop-tested against the real
-    ``lz4`` binary): each document's content snappy-compresses and
+    entries no stdlib covers, both through pyarrow's bundled codec
+    libraries; lz4 speaks the FRAME format, interop-tested against the
+    real ``lz4`` binary): each document's content snappy-compresses and
     round-trips back, then lz4-frame-compresses ON TOP of the snappy
     bytes and round-trips (binary input exercises the copy elements),
     with the snappy varint length preamble verified columnar against
@@ -3466,10 +3465,9 @@ def sftp_list_fetch_q(spark, sf_dir):
     the inventory's last partial): sources/ssh_transport speaks
     curve25519-sha256 kex (RFC 8731), an ssh-ed25519 host key the
     client verifies against its PINNED public key (known_hosts
-    semantics), aes128-ctr + hmac-sha2-256 packets — all three
-    primitives implemented from their public specs (RFC 7748/8032,
-    FIPS 197; validated against the RFCs' own vectors in
-    tests/test_ssh.py) because the environment ships no crypto library.
+    semantics), aes128-ctr + hmac-sha2-256 packets — X25519, Ed25519
+    and AES from the ``cryptography`` package (interop-tested against
+    OpenSSH's ``sftp`` client in tests/test_ssh.py).
     The SFTP v3 subsystem lists the staged CSVs (control-plane
     manifest), fetch_sftp reads them with one SSH connection per
     partition (distributed data plane), and the records parse and

@@ -207,9 +207,7 @@ def _tail_actions(
 #: reference implementation replays it on the driver too; above the
 #: threshold (or for v2 checkpoints / non-local paths) the distributed
 #: replay below takes over unchanged.
-_LOCAL_LOG_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DELTA_LOCAL_LOG_BYTES", 8 << 20)
-)
+_LOCAL_LOG_BYTES = 8 << 20
 
 
 #: the deletionVector fields the distributed path's read schema declares,

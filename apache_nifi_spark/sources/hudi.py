@@ -164,9 +164,7 @@ def hudi_timeline(table_path: str) -> list[tuple[str, str]]:
 #: timeline server resolves file slices on the driver).  Above the
 #: threshold or on any I/O surprise the distributed parse below runs
 #: unchanged.
-_LOCAL_TIMELINE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_HUDI_LOCAL_TIMELINE_BYTES", 8 << 20)
-)
+_LOCAL_TIMELINE_BYTES = 8 << 20
 
 
 def _hudi_active_rows(

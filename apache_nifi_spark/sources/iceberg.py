@@ -714,9 +714,7 @@ def _manifest_rows_local(
 #: manifest set is large).  8 MiB ≈ 160 ms of driver decode — below one
 #: Spark job's scheduling floor; at 100 TB a snapshot's manifests
 #: exceed this and the distributed binaryFile path takes over.
-_LOCAL_MANIFEST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ICEBERG_LOCAL_MANIFEST_BYTES", 8 << 20)
-)
+_LOCAL_MANIFEST_BYTES = 8 << 20
 
 
 def _entry_row(

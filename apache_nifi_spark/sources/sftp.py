@@ -291,10 +291,14 @@ class SftpClient:
         )
         self._buf = b""
         self._rid = 0
-        self.conn.send(_string(bytes([_INIT]) + struct.pack(">I", 3)))
-        ptype, body = self._next_packet()
-        if ptype != _VERSION or _R(body).u32() != 3:
-            raise ConnectionError("SFTP version negotiation failed")
+        try:
+            self.conn.send(_string(bytes([_INIT]) + struct.pack(">I", 3)))
+            ptype, body = self._next_packet()
+            if ptype != _VERSION or _R(body).u32() != 3:
+                raise ConnectionError("SFTP version negotiation failed")
+        except BaseException:
+            self.conn.close()
+            raise
 
     def _next_packet(self) -> tuple[int, bytes]:
         while True:

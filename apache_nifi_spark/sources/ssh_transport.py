@@ -1,8 +1,8 @@
 """SSH-2 transport + userauth + connection protocol (RFC 4253/4252/4254).
 
 The missing half of ListSFTP/FetchSFTP/PutSFTP (§2.1 row 2 — the last
-partial in the operator inventory): a real SSH-2 stack over the
-dependency-free primitives in ``ssh_crypto``:
+partial in the operator inventory): a real SSH-2 stack whose X25519,
+Ed25519 and AES come from the ``cryptography`` package (OpenSSL):
 
 - **algorithm suite** (one of each — both ends are in this repo, and a
   single modern suite is what the reference's hardened deployments pin
@@ -36,16 +36,18 @@ import os
 import socket
 import struct
 
-from apache_nifi_spark import net
-from apache_nifi_spark.sources.ssh_crypto import (
-    AesCtr,
-    X25519_BASE,
-    ed25519_publickey,
-    ed25519_sign,
-    ed25519_verify,
-    x25519,
-    x25519_keypair,
+from cryptography.exceptions import InvalidSignature
+from cryptography.hazmat.primitives.asymmetric.ed25519 import (
+    Ed25519PrivateKey,
+    Ed25519PublicKey,
 )
+from cryptography.hazmat.primitives.asymmetric.x25519 import (
+    X25519PrivateKey,
+    X25519PublicKey,
+)
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+from apache_nifi_spark import net
 
 __all__ = ["SshServer", "SshClientConnection", "make_host_key"]
 
@@ -134,7 +136,36 @@ def host_key_blob(pub: bytes) -> bytes:
 def make_host_key(seed: bytes | None = None) -> tuple[bytes, bytes]:
     """(seed, public) ssh-ed25519 host key pair."""
     seed = seed or os.urandom(32)
-    return seed, ed25519_publickey(seed)
+    key = Ed25519PrivateKey.from_private_bytes(seed)
+    return seed, key.public_key().public_bytes_raw()
+
+
+def _shared_secret(priv: X25519PrivateKey, peer_q: bytes) -> int:
+    """The exchange's K: the X25519 shared secret read as an mpint."""
+    try:
+        shared = priv.exchange(X25519PublicKey.from_public_bytes(peer_q))
+    except ValueError:
+        # a key that is not 32 bytes, or a low-order one whose all-zero
+        # shared secret RFC 8731 §3.1 says MUST abort the exchange
+        raise ConnectionError(
+            "invalid X25519 public key or all-zero shared secret"
+        ) from None
+    return int.from_bytes(shared, "big")
+
+
+def _aes128_ctr(key: bytes, iv: bytes):
+    """One direction's aes128-ctr keystream, applied across packets."""
+    return Cipher(algorithms.AES(key), modes.CTR(iv)).encryptor().update
+
+
+def _require_suite(kexinit: bytes) -> None:
+    """Parse the peer's KEXINIT and require our single suite present."""
+    r = _Reader(kexinit[17:])  # skip msg byte + 16-byte cookie
+    for want in [_KEX_ALGS, _HOSTKEY_ALGS, _CIPHERS, _CIPHERS, _MACS, _MACS]:
+        offered = r.string().decode("ascii").split(",")
+        if want not in offered:
+            raise ConnectionError(f"no common algorithm for {want}")
+    # compression + languages + first_kex_packet_follows ignored
 
 
 class _Transport:
@@ -145,8 +176,8 @@ class _Transport:
         self.f = sock.makefile("rwb", buffering=1 << 16)
         self.seq_out = 0
         self.seq_in = 0
-        self.enc_out: AesCtr | None = None
-        self.enc_in: AesCtr | None = None
+        self.enc_out = None  # aes128-ctr update functions once keyed
+        self.enc_in = None
         self.mac_out: bytes | None = None
         self.mac_in: bytes | None = None
 
@@ -175,7 +206,7 @@ class _Transport:
             mac = _hmac.new(
                 self.mac_out, struct.pack(">I", self.seq_out) + packet, hashlib.sha256
             ).digest()
-            packet = self.enc_out.crypt(packet)
+            packet = self.enc_out(packet)
         self.f.write(packet + mac)
         self.f.flush()
         self.seq_out += 1
@@ -184,13 +215,13 @@ class _Transport:
         block = 16 if self.enc_in else 8
         head = net.read_exact(self.f.read, block)
         if self.enc_in is not None:
-            head = self.enc_in.crypt(head)
+            head = self.enc_in(head)
         (plen,) = struct.unpack(">I", head[:4])
         if not 1 <= plen <= (1 << 20):
             raise ValueError(f"bad SSH packet length {plen}")
         rest = net.read_exact(self.f.read, plen - (block - 4))
         if self.enc_in is not None:
-            rest = self.enc_in.crypt(rest)
+            rest = self.enc_in(rest)
         packet = head + rest
         if self.enc_in is not None:
             mac = net.read_exact(self.f.read, 32)
@@ -240,12 +271,12 @@ class _Transport:
         mac_c2s = derive(b"E", 32)
         mac_s2c = derive(b"F", 32)
         if client_side:
-            self.enc_out = AesCtr(key_c2s, iv_c2s)
-            self.enc_in = AesCtr(key_s2c, iv_s2c)
+            self.enc_out = _aes128_ctr(key_c2s, iv_c2s)
+            self.enc_in = _aes128_ctr(key_s2c, iv_s2c)
             self.mac_out, self.mac_in = mac_c2s, mac_s2c
         else:
-            self.enc_out = AesCtr(key_s2c, iv_s2c)
-            self.enc_in = AesCtr(key_c2s, iv_c2s)
+            self.enc_out = _aes128_ctr(key_s2c, iv_s2c)
+            self.enc_in = _aes128_ctr(key_c2s, iv_c2s)
             self.mac_out, self.mac_in = mac_s2c, mac_c2s
 
     def close(self) -> None:
@@ -254,17 +285,6 @@ class _Transport:
         except OSError:
             pass
         self.sock.close()
-
-
-def _check_names(reader: _Reader) -> None:
-    """Parse the peer's KEXINIT and require our single suite present."""
-    reader.string()  # skipped: cookie handled by caller slicing
-    wanted = [_KEX_ALGS, _HOSTKEY_ALGS, _CIPHERS, _CIPHERS, _MACS, _MACS]
-    for want in wanted:
-        offered = reader.string().decode("ascii").split(",")
-        if want not in offered:
-            raise ConnectionError(f"no common algorithm: need {want}, got {offered}")
-    # compression + languages + first_kex_packet_follows ignored
 
 
 class SshServer(net.Server):
@@ -282,8 +302,8 @@ class SshServer(net.Server):
         host: str = "127.0.0.1",
         port: int = 0,
     ):
-        self.host_seed = host_key_seed
-        self.host_pub = ed25519_publickey(host_key_seed)
+        self.host_key = Ed25519PrivateKey.from_private_bytes(host_key_seed)
+        self.host_pub = self.host_key.public_key().public_bytes_raw()
         self.users = users
         self.subsystems = subsystems
         super().__init__(self._serve, host, port)
@@ -297,24 +317,15 @@ class SshServer(net.Server):
             i_c = t.recv_packet()
             if i_c[0] != _MSG_KEXINIT:
                 raise ValueError("expected KEXINIT")
-            r = _Reader(i_c[17:])  # skip msg byte + 16-byte cookie
-            wanted = [_KEX_ALGS, _HOSTKEY_ALGS, _CIPHERS, _CIPHERS, _MACS, _MACS]
-            for want in wanted:
-                offered = r.string().decode("ascii").split(",")
-                if want not in offered:
-                    raise ConnectionError(f"no common algorithm for {want}")
+            _require_suite(i_c)
             # ECDH
             pkt = t.recv_packet()
             if pkt[0] != _MSG_KEX_ECDH_INIT:
                 raise ValueError("expected KEX_ECDH_INIT")
             q_c = _Reader(pkt[1:]).string()
-            eph_priv, q_s = x25519_keypair()
-            shared = x25519(eph_priv, q_c)
-            if shared == b"\x00" * 32:
-                # RFC 8731 §3.1: MUST abort on an all-zero shared secret
-                # (peer sent a low-order public key)
-                raise ConnectionError("all-zero X25519 shared secret")
-            k = int.from_bytes(shared, "big")
+            eph_priv = X25519PrivateKey.generate()
+            q_s = eph_priv.public_key().public_bytes_raw()
+            k = _shared_secret(eph_priv, q_c)
             k_s = host_key_blob(self.host_pub)
             h = hashlib.sha256(
                 _string(v_c)
@@ -326,7 +337,7 @@ class SshServer(net.Server):
                 + _string(q_s)
                 + _mpint(k)
             ).digest()
-            sig = _string(b"ssh-ed25519") + _string(ed25519_sign(self.host_seed, h))
+            sig = _string(b"ssh-ed25519") + _string(self.host_key.sign(h))
             t.send_packet(
                 bytes([_MSG_KEX_ECDH_REPLY]) + _string(k_s) + _string(q_s) + _string(sig)
             )
@@ -477,8 +488,16 @@ class SshClientConnection:
         subsystem: str,
         timeout: float = 30.0,
     ):
-        sock = net.connect(host, port, timeout)
-        self.t = _Transport(sock)
+        self.t = _Transport(net.connect(host, port, timeout))
+        try:
+            self._handshake(user, password, pinned_host_pub, subsystem)
+        except BaseException:
+            self.t.close()
+            raise
+
+    def _handshake(
+        self, user: str, password: str, pinned_host_pub: bytes, subsystem: str
+    ) -> None:
         t = self.t
         v_s = t.exchange_versions()
         i_c = t.kexinit_payload()
@@ -486,12 +505,9 @@ class SshClientConnection:
         i_s = t.recv_packet()
         if i_s[0] != _MSG_KEXINIT:
             raise ConnectionError("expected KEXINIT")
-        r = _Reader(i_s[17:])
-        for want in [_KEX_ALGS, _HOSTKEY_ALGS, _CIPHERS, _CIPHERS, _MACS, _MACS]:
-            offered = r.string().decode("ascii").split(",")
-            if want not in offered:
-                raise ConnectionError(f"no common algorithm for {want}")
-        eph_priv, q_c = x25519_keypair()
+        _require_suite(i_s)
+        eph_priv = X25519PrivateKey.generate()
+        q_c = eph_priv.public_key().public_bytes_raw()
         t.send_packet(bytes([_MSG_KEX_ECDH_INIT]) + _string(q_c))
         pkt = t.recv_packet()
         if pkt[0] != _MSG_KEX_ECDH_REPLY:
@@ -506,11 +522,7 @@ class SshClientConnection:
         host_pub = kr.string()
         if host_pub != pinned_host_pub:
             raise ConnectionError("host key does not match the pinned key")
-        shared = x25519(eph_priv, q_s)
-        if shared == b"\x00" * 32:
-            # RFC 8731 §3.1: MUST abort on an all-zero shared secret
-            raise ConnectionError("all-zero X25519 shared secret")
-        k = int.from_bytes(shared, "big")
+        k = _shared_secret(eph_priv, q_s)
         h = hashlib.sha256(
             _string(_VERSION.encode())
             + _string(v_s)
@@ -524,15 +536,19 @@ class SshClientConnection:
         sr = _Reader(sig_blob)
         if sr.string() != b"ssh-ed25519":
             raise ConnectionError("unexpected signature type")
-        if not ed25519_verify(host_pub, h, sr.string()):
-            raise ConnectionError("host key signature verification failed")
+        try:
+            Ed25519PublicKey.from_public_bytes(host_pub).verify(sr.string(), h)
+        except InvalidSignature:
+            raise ConnectionError(
+                "host key signature verification failed"
+            ) from None
         t.send_packet(bytes([_MSG_NEWKEYS]))
         if t.recv_packet()[0] != _MSG_NEWKEYS:
             raise ConnectionError("expected NEWKEYS")
         t.activate_keys(k, h, h, client_side=True)
         # auth
         t.send_packet(bytes([_MSG_SERVICE_REQUEST]) + _string(b"ssh-userauth"))
-        if self.t.recv_packet()[0] != _MSG_SERVICE_ACCEPT:
+        if t.recv_packet()[0] != _MSG_SERVICE_ACCEPT:
             raise ConnectionError("service request refused")
         t.send_packet(
             bytes([_MSG_USERAUTH_REQUEST])
@@ -572,7 +588,6 @@ class SshClientConnection:
             if resp[0] == _MSG_CHANNEL_WINDOW_ADJUST:
                 continue
             raise ConnectionError(f"unexpected message {resp[0]} awaiting subsystem")
-        self._pending = b""
 
     def send(self, data: bytes) -> None:
         for i in range(0, len(data), _MAX_PACKET - 1024):

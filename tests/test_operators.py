@@ -917,22 +917,20 @@ def test_hypertable_rollup_reaggregation_algebra(spark):
 
 
 def test_snappy_lz4_block_codecs():
-    """From-scratch Snappy/LZ4 block codecs (operators/lz.py): property
-    roundtrips over adversarial inputs (empty, single byte, highly
-    repetitive, binary, incompressible), spec grammar on the decode
-    side (all snappy literal-length encodings + copy tags 01/10/11,
-    LZ4 255-continued length extensions, overlapping copies), and loud
-    failures on corrupt offsets."""
+    """CompressContent's snappy and lz4 codecs (``content._codecs``,
+    pyarrow underneath): property roundtrips over adversarial inputs
+    (empty, single byte, highly repetitive, binary, incompressible),
+    spec grammar on the decode side (copy tags 01/10/11, LZ4
+    255-continued length extensions, overlapping copies), and loud
+    failures on corrupt offsets and length mismatches."""
     import pytest
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from apache_nifi_spark.operators.lz import (
-        lz4_compress,
-        lz4_decompress,
-        snappy_compress,
-        snappy_decompress,
-    )
+    from apache_nifi_spark.operators.content import _codecs
+
+    snappy_compress, snappy_decompress = _codecs()["snappy"]
+    lz4_compress, lz4_decompress = _codecs()["lz4"]
 
     for c in (b"", b"a", b"ab" * 5000, bytes(range(256)) * 8,
               b"x" * 70000, b"the cat sat on the mat " * 300):
@@ -947,7 +945,7 @@ def test_snappy_lz4_block_codecs():
 
     roundtrip()
 
-    # decode-side grammar beyond what our encoder emits:
+    # decode-side grammar beyond what an encoder need emit:
     # snappy copy tag 01 (1-byte offset, 3-bit length) and tag 11
     # (4-byte offset) — hand-assembled per format_description.txt
     lit = bytes([(4 - 1) << 2]) + b"abcd"                       # literal 'abcd'
@@ -959,48 +957,52 @@ def test_snappy_lz4_block_codecs():
     lit1 = bytes([(1 - 1) << 2]) + b"z"
     ovl = bytes([0b01 | ((4 - 4) << 2), 1])
     assert snappy_decompress(bytes([5]) + lit1 + ovl) == b"zzzzz"
+
+    def lz4_frame(block: bytes) -> bytes:
+        # magic, FLG 0x60 (v01, independent blocks, no checksums), BD
+        # 0x40 (64 KB blocks), header checksum 0x82; one block; end mark
+        return (bytes.fromhex("04224d18604082") + len(block).to_bytes(4, "little")
+                + block + bytes(4))
+
     # lz4 overlapping copy + length extension: 'a' then match off=1 len 19
-    # token: lit 1, matchlen nibble 15 → ext byte 0 → 15+4+0 = 19
-    frame = bytes([(1 << 4) | 15]) + b"a" + (1).to_bytes(2, "little") + bytes([0])
-    frame += bytes([0])  # final empty-literal token
-    assert lz4_decompress(frame) == b"a" * 20
+    # token: lit 1, matchlen nibble 15 → ext byte 0 → 15+4+0 = 19; the
+    # spec's end rule keeps the last 5 bytes literals
+    block = bytes([(1 << 4) | 15]) + b"a" + (1).to_bytes(2, "little") + bytes([0])
+    block += bytes([5 << 4]) + b"bcdef"
+    assert lz4_decompress(lz4_frame(block)) == b"a" * 20 + b"bcdef"
 
-    with pytest.raises(ValueError, match="offset out of range"):
+    with pytest.raises(OSError):  # copy offset past the output
         snappy_decompress(bytes([8]) + lit + bytes([0b10 | (3 << 2), 99, 0]))
-    with pytest.raises(ValueError, match="length mismatch"):
+    with pytest.raises(OSError):  # preamble says 9 bytes, elements give 8
         snappy_decompress(bytes([9]) + lit + copy1)
-    with pytest.raises(ValueError, match="offset out of range"):
-        lz4_decompress(bytes([(1 << 4) | 0]) + b"a" + (9).to_bytes(2, "little"))
+    with pytest.raises(OSError):  # match offset 9 with one byte out
+        lz4_decompress(lz4_frame(
+            bytes([(1 << 4) | 0]) + b"a" + (9).to_bytes(2, "little")
+            + bytes([5 << 4]) + b"bcdef"
+        ))
 
 
-def test_lz4_frame_real_binary_interop_and_xxhash_vectors(tmp_path):
-    """LZ4 FRAME format + from-scratch xxHash32: public xxh32 test
-    vectors hold; our frames decode with the REAL lz4 binary and vice
-    versa (when installed); header/content checksum tampers raise."""
+def test_lz4_frame_real_binary_interop(tmp_path):
+    """LZ4 FRAME format: our frames decode with the REAL lz4 binary and
+    vice versa (when installed); a tampered header, and a tampered
+    payload under the binary's content checksum, raise."""
     import shutil
     import subprocess
 
     import pytest
 
-    from apache_nifi_spark.operators.lz import (
-        lz4_frame_compress,
-        lz4_frame_decompress,
-        xxhash32,
-    )
+    from apache_nifi_spark.operators.content import _codecs
 
-    assert xxhash32(b"") == 0x02CC5D05
-    assert xxhash32(b"Hello World") == 0xB1FD16EE
-    assert xxhash32(b"a" * 101, seed=2654435761) != xxhash32(b"a" * 101)
-
+    lz4_frame_compress, lz4_frame_decompress = _codecs()["lz4"]
     data = b"the quick brown fox jumps over the lazy dog. " * 400 + bytes(
         range(256)
     )
     frame = lz4_frame_compress(data)
     assert lz4_frame_decompress(frame) == data
-    # content-checksum tamper fails loudly
+    # a frame descriptor tamper fails the header checksum
     bad = bytearray(frame)
-    bad[12] ^= 0x01
-    with pytest.raises(ValueError, match="checksum|offset|overruns"):
+    bad[4] ^= 0x01
+    with pytest.raises(OSError, match="headerChecksum"):
         lz4_frame_decompress(bytes(bad))
 
     lz4 = shutil.which("lz4")
@@ -1016,4 +1018,11 @@ def test_lz4_frame_real_binary_interop_and_xxhash_vectors(tmp_path):
         subprocess.run([lz4, "-f", f"{d}/plain", f"{d}/theirs.lz4"],
                        capture_output=True, timeout=60, check=True)
         with open(f"{d}/theirs.lz4", "rb") as f:
-            assert lz4_frame_decompress(f.read()) == data
+            theirs = f.read()
+        assert lz4_frame_decompress(theirs) == data
+        # the binary's frames carry a content checksum: a payload tamper
+        # that still decodes fails it
+        bad = bytearray(theirs)
+        bad[20] ^= 0x01
+        with pytest.raises(OSError, match="Checksum|decompress"):
+            lz4_frame_decompress(bytes(bad))

@@ -1,12 +1,17 @@
-"""SSH-2 + SFTP wire: RFC test vectors for the primitives, transport
-handshake/auth/host-key pinning, MAC tamper detection, and the Spark
-list/fetch/put operators."""
+"""SSH-2 + SFTP wire: the transport's use of X25519, Ed25519 and AES
+against the RFCs' vectors, handshake/auth/host-key pinning, interop with
+OpenSSH's ``sftp`` client, and the Spark list/fetch/put operators."""
 
 from __future__ import annotations
 
+import base64
 import os
+import shutil
+import subprocess
 
 import pytest
+from cryptography.hazmat.primitives.asymmetric.ed25519 import Ed25519PrivateKey
+from cryptography.hazmat.primitives.asymmetric.x25519 import X25519PrivateKey
 from pyspark.sql import functions as F
 
 from apache_nifi_spark.sources.sftp import (
@@ -16,14 +21,11 @@ from apache_nifi_spark.sources.sftp import (
     list_sftp,
     put_sftp,
 )
-from apache_nifi_spark.sources.ssh_crypto import (
-    AesCtr,
-    X25519_BASE,
-    _Aes128,
-    ed25519_publickey,
-    ed25519_sign,
-    ed25519_verify,
-    x25519,
+from apache_nifi_spark.sources.ssh_transport import (
+    _aes128_ctr,
+    _shared_secret,
+    host_key_blob,
+    make_host_key,
 )
 
 
@@ -31,74 +33,62 @@ from apache_nifi_spark.sources.ssh_crypto import (
 
 
 def test_x25519_rfc7748_vectors():
-    k = bytes.fromhex(
-        "a546e36bf0527c9d3b16154b82465edd62144c0ac1fc5a18506a2244ba449ac4"
-    )
-    u = bytes.fromhex(
-        "e6db6867583030db3594c1a424b15f7c726624ec26b3353b10a903a6d0ab1c4c"
-    )
-    assert x25519(k, u) == bytes.fromhex(
-        "c3da55379de9c6908e94ea4df28d084f32eccf03491c71f754b4075577a28552"
-    )
-    # Diffie-Hellman agreement (RFC 7748 §6.1)
-    ap = bytes.fromhex(
+    """The exchange's K is RFC 7748 §6.1's Diffie-Hellman agreement read
+    as an mpint, and a low-order peer key aborts (RFC 8731 §3.1)."""
+    a = X25519PrivateKey.from_private_bytes(bytes.fromhex(
         "77076d0a7318a57d3c16c17251b26645df4c2f87ebc0992ab177fba51db92c2a"
-    )
-    bp = bytes.fromhex(
+    ))
+    b = X25519PrivateKey.from_private_bytes(bytes.fromhex(
         "5dab087e624a8a4b79e17f8b83800ee66f3bb1292618b6fd1c2f8b27ff88e0eb"
+    ))
+    a_pub = a.public_key().public_bytes_raw()
+    b_pub = b.public_key().public_bytes_raw()
+    assert a_pub == bytes.fromhex(
+        "8520f0098930a754748b7ddcb43ef75a0dbf3a0d26381af4eba4a98eaa9b4e6a"
     )
-    a_pub, b_pub = x25519(ap, X25519_BASE), x25519(bp, X25519_BASE)
     shared = bytes.fromhex(
         "4a5d9d5ba4ce2de1728e3bf480350f25e07e21c947d19e3376f09b3c1e161742"
     )
-    assert x25519(ap, b_pub) == x25519(bp, a_pub) == shared
+    assert _shared_secret(a, b_pub) == _shared_secret(b, a_pub) == int.from_bytes(
+        shared, "big"
+    )
+    with pytest.raises(ConnectionError, match="all-zero"):
+        _shared_secret(a, bytes(32))
+    with pytest.raises(ConnectionError, match="invalid"):
+        _shared_secret(a, b_pub[:31])
 
 
 def test_ed25519_rfc8032_vectors():
+    """A host key seed is RFC 8032's private key: TEST 1's seed gives
+    its public key and, signed as the server signs H, its signature."""
     seed = bytes.fromhex(
         "9d61b19deffd5a60ba844af492ec2cc44449c5697b326919703bac031cae7f60"
     )
-    pub = ed25519_publickey(seed)
-    assert pub == bytes.fromhex(
+    assert make_host_key(seed) == (seed, bytes.fromhex(
         "d75a980182b10ab7d54bfed3c964073a0ee172f3daa62325af021a68f707511a"
-    )
-    sig = ed25519_sign(seed, b"")
-    assert sig.hex() == (
+    ))
+    assert Ed25519PrivateKey.from_private_bytes(seed).sign(b"").hex() == (
         "e5564300c360ac729086e2cc806e828a84877f1eb8e5d974d873e06522490155"
         "5fb8821590a33bacc61e39701cf9b46bd25bf5f0595bbe24655141438e7a100b"
     )
-    assert ed25519_verify(pub, b"", sig)
-    assert not ed25519_verify(pub, b"tampered", sig)
-    bad = bytearray(sig)
-    bad[0] ^= 1
-    assert not ed25519_verify(pub, b"", bytes(bad))
 
 
 def test_aes128_fips197_and_ctr_sp80038a():
-    aes = _Aes128(bytes.fromhex("000102030405060708090a0b0c0d0e0f"))
-    assert aes.encrypt_block(
-        bytes.fromhex("00112233445566778899aabbccddeeff")
-    ) == bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    ctr = AesCtr(
-        bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
-        bytes.fromhex("f0f1f2f3f4f5f6f7f8f9fafbfcfdfeff"),
-    )
+    """The packet cipher is AES-128 (FIPS 197 C.1: a zero plaintext's
+    CTR keystream is the counter block's encryption) in CTR mode whose
+    counter runs on across calls, as packets split into head and rest
+    (SP 800-38A F.5.1, fed in uneven pieces)."""
+    fips = _aes128_ctr(bytes.fromhex("000102030405060708090a0b0c0d0e0f"),
+                       bytes.fromhex("00112233445566778899aabbccddeeff"))
+    assert fips(bytes(16)) == bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
+    ctr = _aes128_ctr(bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
+                      bytes.fromhex("f0f1f2f3f4f5f6f7f8f9fafbfcfdfeff"))
     pt = bytes.fromhex(
         "6bc1bee22e409f96e93d7e117393172aae2d8a571e03ac9c9eb76fac45af8e51"
     )
-    assert ctr.crypt(pt) == bytes.fromhex(
+    assert ctr(pt[:16]) + ctr(pt[16:21]) + ctr(pt[21:]) == bytes.fromhex(
         "874d6191b620e3261bef6864990db6ce9806f66b7970fdff8617187bb9fffdff"
     )
-    # CTR is an involution under the same start counter
-    ctr2 = AesCtr(
-        bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
-        bytes.fromhex("f0f1f2f3f4f5f6f7f8f9fafbfcfdfeff"),
-    )
-    assert ctr2.crypt(ctr2.crypt(b"round trip across blocks" * 10)) != b""  # smoke
-    ctr3 = AesCtr(b"k" * 16, b"\x00" * 16)
-    ctr4 = AesCtr(b"k" * 16, b"\x00" * 16)
-    msg = b"round trip across blocks" * 10
-    assert ctr4.crypt(ctr3.crypt(msg)) == msg
 
 
 # ---------------------------------------------------- transport + SFTP ---
@@ -138,13 +128,41 @@ def test_sftp_list_read_write_roundtrip(sftp_server):
         c.close()
 
 
+@pytest.mark.filterwarnings("error::ResourceWarning")
+@pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning")
 def test_auth_and_host_key_pinning(sftp_server):
+    """Refused logins raise and close their socket."""
     with pytest.raises(ConnectionError, match="authentication failed"):
         SftpClient("127.0.0.1", sftp_server.port, "spark", "wrong",
                    sftp_server.host_pub)
     with pytest.raises(ConnectionError, match="pinned"):
         SftpClient("127.0.0.1", sftp_server.port, "spark", "graft",
                    os.urandom(32))
+
+
+@pytest.mark.skipif(shutil.which("sftp") is None, reason="no OpenSSH sftp")
+def test_openssh_client_interop(sftp_server, tmp_path):
+    """OpenSSH's ``sftp`` accepts the pinned ed25519 host key and the
+    first encrypted, MAC'd packet (SERVICE_ACCEPT): the X25519 kex, the
+    signature over H, key derivation, aes128-ctr and hmac-sha2-256 all
+    agree with an independent implementation.  Batch mode refuses
+    password auth, so the command itself then fails."""
+    port = sftp_server.port
+    blob = base64.b64encode(host_key_blob(sftp_server.host_pub)).decode()
+    known = tmp_path / "known_hosts"
+    known.write_text(f"[127.0.0.1]:{port} ssh-ed25519 {blob}\n")
+    batch = tmp_path / "batch"
+    batch.write_text("ls\n")
+    out = subprocess.run(
+        ["sftp", "-vv", "-F", "/dev/null", "-b", str(batch), "-P", str(port),
+         "-o", f"UserKnownHostsFile={known}",
+         "-o", "GlobalKnownHostsFile=/dev/null",
+         "-o", "StrictHostKeyChecking=yes",
+         "spark@127.0.0.1"],
+        stdin=subprocess.DEVNULL, capture_output=True, text=True, timeout=60,
+    )
+    assert "is known and matches the ED25519 host key" in out.stderr, out.stderr
+    assert "SSH2_MSG_SERVICE_ACCEPT received" in out.stderr, out.stderr
 
 
 def test_path_escape_refused(sftp_server):
