@@ -6,14 +6,19 @@ longitude and latitude interleaved (lon first), grouped into 5-bit
 base-32 digits.  The textbook loop ("halve the interval, emit a bit")
 is equivalent to one closed form — the lon bits are simply the binary
 expansion of ``floor((lon+180)/360 * 2^n_lon)`` (and lat likewise), so
-encode = two scale-and-floors + a compile-time-unrolled bit interleave
-+ an alphabet lookup per digit.  Zero UDFs, whole-stage codegen, and
-every step (floor, shift, and, concat) is integer-exact, so the same
-arithmetic value-oracles bit-for-bit in any engine.
+encode = two scale-and-floors + a bit interleave + base-32 digits.
+The interleave works on the words' binary strings: a ``0`` goes after
+every lon bit and before every lat bit, and the two spread words add.
+``conv`` to base 32 and one ``translate`` into the geohash alphabet
+give the digits.  Every operand appears once in the expression, so the
+tree stays linear in the precision and ``decode(encode(p))`` builds in
+milliseconds.  Zero UDFs, whole-stage codegen, and every step is
+integer-exact, so the value matches the oracle's shift-and-mask SQL
+(:func:`geohash_oracle_sql`) bit for bit.
 
-Decode inverts it: alphabet positions reassemble the interleaved word,
-the compile-time-unrolled de-interleave splits lon/lat words, and the
-cell CENTER is ``min + (x + 0.5) * span / 2^n`` — matching the
+Decode inverts it: the digits read back to the word's binary string in
+one ``conv``, a pairwise regex split de-interleaves the lon/lat bits,
+and the cell CENTER is ``min + (x + 0.5) * span / 2^n`` — matching the
 reference processor's decoded lat/lon output.
 
 Scale: map-only (no shuffle, no state); at 100 TB this is
@@ -29,6 +34,9 @@ __all__ = ["GEOHASH_ALPHABET", "geohash_encode", "geohash_decode", "geohash_reco
 
 #: The (public, fixed) geohash base-32 alphabet — no a/i/l/o.
 GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
+
+#: The digits ``conv(…, 10, 32)`` writes, position for position.
+_CONV_BASE32 = "0123456789ABCDEFGHIJKLMNOPQRSTUV"
 
 
 def _bit_counts(precision: int) -> tuple[int, int]:
@@ -50,27 +58,20 @@ def geohash_encode(lat: Column, lon: Column, precision: int = 8) -> Column:
     x = F.least(x, F.lit((1 << n_lon) - 1)).cast("long")
     y = F.least(y, F.lit((1 << n_lat) - 1)).cast("long")
     # Interleave into one word: bit k of the word (k=0 ⇒ MSB) comes from
-    # lon for even k, lat for odd k.  Unrolled at plan-build time.
+    # lon for even k, lat for odd k.  Spread "b1b2…" to "b1 0 b2 0 …"
+    # (lon; "$10" is group 1 then a literal 0) and "0 c1 0 c2 …" (lat),
+    # align both to the word's 5p bits and add.
     total = 5 * precision
-    z: Column = F.lit(0).cast("long")
-    for k in range(total):
-        if k % 2 == 0:  # lon bit (n_lon-1 - k//2)
-            src, bit = x, n_lon - 1 - k // 2
-        else:
-            src, bit = y, n_lat - 1 - k // 2
-        z = z + F.shiftleft(
-            F.shiftright(src, bit).bitwiseAND(F.lit(1)), total - 1 - k
-        )
-    digits = [
-        F.substring(
-            F.lit(GEOHASH_ALPHABET),
-            (F.shiftright(z, 5 * (precision - 1 - i)).bitwiseAND(F.lit(31)) + 1)
-            .cast("int"),
-            1,
-        )
-        for i in range(precision)
-    ]
-    return F.concat(*digits)
+    ex = F.regexp_replace(F.lpad(F.bin(x), n_lon, "0"), "(.)", "$10")
+    ey = F.regexp_replace(F.lpad(F.bin(y), n_lat, "0"), "(.)", "0$1")
+    z = F.shiftright(F.conv(ex, 2, 10).cast("long"), 2 * n_lon - total) + F.shiftleft(
+        F.conv(ey, 2, 10).cast("long"), total - 2 * n_lat
+    )
+    return F.translate(
+        F.lpad(F.conv(z.cast("string"), 10, 32), precision, "0"),
+        _CONV_BASE32,
+        GEOHASH_ALPHABET,
+    )
 
 
 def geohash_decode(gh: Column, precision: int = 8) -> tuple[Column, Column]:
@@ -78,20 +79,16 @@ def geohash_decode(gh: Column, precision: int = 8) -> tuple[Column, Column]:
     the string length (fixed-width codegen — the record-pipeline case)."""
     n_lon, n_lat = _bit_counts(precision)
     total = 5 * precision
-    z: Column = F.lit(0).cast("long")
-    for i in range(precision):
-        digit = (F.instr(F.lit(GEOHASH_ALPHABET), F.substring(gh, i + 1, 1)) - 1).cast(
-            "long"
-        )
-        z = z + F.shiftleft(digit, 5 * (precision - 1 - i))
-    x: Column = F.lit(0).cast("long")
-    y: Column = F.lit(0).cast("long")
-    for k in range(total):
-        bit = F.shiftright(z, total - 1 - k).bitwiseAND(F.lit(1))
-        if k % 2 == 0:
-            x = x + F.shiftleft(bit, n_lon - 1 - k // 2)
-        else:
-            y = y + F.shiftleft(bit, n_lat - 1 - k // 2)
+    # The word's 5p bits as a string, right-padded to whole (lon, lat)
+    # pairs; "(.)(.)" then keeps the lon bits ("$1") or the lat bits
+    # ("$2", whose pad bit the shift drops).
+    word = F.lpad(F.conv(F.translate(gh, GEOHASH_ALPHABET, _CONV_BASE32), 32, 2), total, "0")
+    pairs = F.rpad(word, 2 * n_lon, "0")
+    x = F.conv(F.regexp_replace(pairs, "(.)(.)", "$1"), 2, 10).cast("long")
+    y = F.shiftright(
+        F.conv(F.regexp_replace(pairs, "(.)(.)", "$2"), 2, 10).cast("long"),
+        n_lon - n_lat,
+    )
     lon = F.lit(-180.0) + (x.cast("double") + F.lit(0.5)) * F.lit(360.0) / F.lit(
         float(1 << n_lon)
     )

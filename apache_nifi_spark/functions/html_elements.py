@@ -12,8 +12,10 @@ or replace the inner text) and re-renders the document, preserving all
 non-matching markup byte-for-byte (the parser walks offsets, it never
 re-serializes untouched regions).
 
-Spark shape: ``mapInPandas`` over the content column — the sanctioned
-Python seam for a byte-imperative format; per-row state is one parse.
+Spark shape: a per-row generator over the content column
+(:func:`io.flat_map` for the extract, ``mapInPandas`` for the in-place
+rewrite) — the sanctioned Python seam for a byte-imperative format;
+per-row state is one parse.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = ["match_selector", "extract_html_elements", "modify_html_elements"]
 
@@ -123,29 +127,15 @@ def extract_html_elements(
     """GetHTMLElement: one row per matching element —
     (id, element_index, tag, attr_id, attr_class, inner_text)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, doc in zip(pdf[id_col], pdf[content_col]):
-                for i, rec in enumerate(_collect(selector, doc or "")):
-                    rows.append(
-                        (
-                            rid,
-                            i,
-                            rec["tag"],
-                            rec["attrs"].get("id"),
-                            rec["attrs"].get("class"),
-                            "".join(rec["text"]).strip(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "element_index", "tag", "attr_id",
-                         "attr_class", "inner_text"],
-            )
+    def row(rid, doc):
+        for i, rec in enumerate(_collect(selector, doc or "")):
+            yield (rid, i, rec["tag"], rec["attrs"].get("id"),
+                   rec["attrs"].get("class"), "".join(rec["text"]).strip())
 
-    return df.mapInPandas(
-        run,
+    return flat_map(
+        df,
+        [id_col, content_col],
+        row,
         f"{id_col} bigint, element_index int, tag string, attr_id string,"
         " attr_class string, inner_text string",
     )

@@ -16,7 +16,8 @@ specified publicly:
 - unknown fields skip by wire type (forward compatibility, as the spec
   requires); truncated payloads raise.
 
-Spark shape: decode is Arrow-batched ``mapInPandas`` over the binary
+Spark shape: decode is a per-row generator (:func:`io.flat_map`,
+Arrow-batched) over the binary
 column with the field spec broadcast as a plain closure constant —
 map-only, one pass per record.
 """
@@ -24,9 +25,11 @@ map-only, one pass per record.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = ["pb_encode", "pb_decode", "decode_protobuf_records"]
 
@@ -173,25 +176,14 @@ def decode_protobuf_records(
     content_col: str = "content",
 ) -> DataFrame:
     """Decode a binary protobuf column into typed fields
-    (Arrow-batched mapInPandas; ``out_schema`` is the Spark DDL of
-    ``id_col`` + decoded fields in spec-name order)."""
-    import pandas as pd
+    (Arrow-batched; ``out_schema`` is the Spark DDL of ``id_col`` +
+    decoded fields, matched by name)."""
+    schema = StructType.fromDDL(out_schema)
+    names = schema.fieldNames()
 
-    # a spec field sharing the id column's name rides as the id itself
-    names = [
-        name for _fno, (name, _t) in sorted(spec.items()) if name != id_col
-    ]
+    def row(rid, blob):
+        msg = pb_decode(spec, blob)
+        # a spec field sharing the id column's name rides as the id itself
+        yield tuple(rid if n == id_col else msg.get(n) for n in names)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            cols: dict[str, list] = {id_col: []}
-            for n in names:
-                cols[n] = []
-            for rid, blob in zip(pdf[id_col], pdf[content_col]):
-                msg = pb_decode(spec, bytes(blob))
-                cols[id_col].append(rid)
-                for n in names:
-                    cols[n].append(msg.get(n))
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, content_col).mapInPandas(run, out_schema)
+    return flat_map(df, [id_col, content_col], row, schema)

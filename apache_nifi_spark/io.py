@@ -7,6 +7,9 @@ Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``load_table`` never caches or collects, so the 100 TB
 path streams through executors untouched by the driver.
 
+Python row code (byte parsers, codecs, synthetic inputs) runs through
+:func:`flat_map`, the engine's one Arrow row seam.
+
 Scratch space (staged fixtures, landing zones, stream checkpoints, query
 outputs) comes from :func:`scratch`, the engine's one owner of temporary
 directories.
@@ -19,12 +22,15 @@ import functools
 import os
 import shutil
 import tempfile
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "TABLES",
+    "flat_map",
     "load_table",
     "load_all",
     "register_views",
@@ -68,10 +74,6 @@ def _scratch_root() -> str:
     return root
 
 
-#: (applicationId, sf_dir, table) → lazy scan DataFrame; see load_table.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def normalize_events_ts(df: DataFrame, target: str = "timestamp_ntz") -> DataFrame:
     """Dtype-adaptive ``ts`` normalization — never assume the fixture's
     physical parquet type.
@@ -113,22 +115,57 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP(NANOS) events.parquet without PARQUET_TYPE_ILLEGAL; it is
     a no-op for µs fixtures.
 
-    The returned DataFrame is cached per (application, sf_dir, table):
+    The returned DataFrame is cached per (session, sf_dir, table):
     ``spark.read.parquet`` costs a ~120 ms schema-inference round-trip,
     and a DataFrame is an immutable lazy plan, so handing back the same
     scan node to every query is free — Catalyst re-optimizes per query
     regardless.  The fixtures are read-only, so the plan can't go stale.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _scan_table(spark, sf_dir, name)
+
+
+@functools.cache
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df, "timestamp_ntz")
-    _TABLE_CACHE[key] = df
     return df
+
+
+def flat_map(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: str | T.StructType,
+) -> DataFrame:
+    """Run ``fn(*values)`` once per row of ``df.select(*cols)`` on the
+    executors, over Arrow batches (``mapInArrow``).
+
+    ``fn`` receives Python values (``int``, ``bytes``, ``str``,
+    ``datetime``, ``list``, ``None``) and returns an iterable of output
+    tuples in ``schema`` order: none drops the row, one maps it, several
+    explode it.  ``schema`` is a DDL string or a ``StructType``; each
+    output column is built with ``pa.array`` at the schema's Arrow type,
+    so a nullable ``bigint`` keeps values above 2**53 exact (a pandas
+    frame would have stored it as float64)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = [o for r in zip(*(c.to_pylist() for c in b.columns)) for o in fn(*r)]
+            out = zip(*rows) if rows else [[]] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(out, arrow)], schema=arrow
+            )
+
+    return df.select(*cols).mapInArrow(run, schema)
 
 
 def widen_if_narrow(df: DataFrame) -> DataFrame:

@@ -8,7 +8,9 @@ fingerprinting), and multimodal binary-column plumbing.
 
 Everything is built from Spark higher-order array functions (transform /
 aggregate / zip_with — JVM-side, codegen'd); Python appears only in the
-clearly-marked multimodal decode stubs (mapInPandas, Arrow-batched).
+byte-imperative decoders (multimodal containers, WARC, HTML main text),
+each a per-row generator run by :func:`apache_nifi_spark.io.flat_map`
+over Arrow batches.
 """
 
 from apache_nifi_spark.llm.dedup import (  # noqa: F401

@@ -16,17 +16,18 @@ constraint as ``functions/html_elements``):
    any other short block) — kept deliberately rule-minimal and
    DETERMINISTIC so the verdicts replay in the SQL oracle.
 
-Spark shape: Arrow-batched ``mapInPandas`` over the content column —
-the sanctioned Python seam for a byte-imperative format; map-only, one
+Spark shape: a per-row generator over the content column, run by
+:func:`io.flat_map` (Arrow-batched) — the sanctioned Python seam for a byte-imperative format; map-only, one
 parse per document, no shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = ["extract_main_text", "html_main_text"]
 
@@ -120,33 +121,14 @@ def html_main_text(
     document with the surviving text and the block accounting.  The id
     column keeps the caller's name (ADVICE r11: it used to be renamed
     to a hardcoded ``doc_id``)."""
-    import pandas as pd
-
     schema = (
         f"{id_col} long, n_blocks int, n_kept int, main_len bigint, "
         "main_text string"
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                id_col: [], "n_blocks": [], "n_kept": [],
-                "main_len": [], "main_text": [],
-            }
-            for rid, payload in zip(pdf[id_col], pdf[content_col]):
-                html = (
-                    payload
-                    if isinstance(payload, str)
-                    else bytes(payload).decode("utf-8", "replace")
-                )
-                text, n_blocks, n_kept = extract_main_text(
-                    html, min_words, max_link_density
-                )
-                cols[id_col].append(int(rid))
-                cols["n_blocks"].append(n_blocks)
-                cols["n_kept"].append(n_kept)
-                cols["main_len"].append(len(text))
-                cols["main_text"].append(text)
-            yield pd.DataFrame(cols)
+    def row(rid, payload):
+        html = payload if isinstance(payload, str) else payload.decode("utf-8", "replace")
+        text, n_blocks, n_kept = extract_main_text(html, min_words, max_link_density)
+        yield rid, n_blocks, n_kept, len(text), text
 
-    return df.select(id_col, content_col).mapInPandas(run, schema)
+    return flat_map(df, [id_col, content_col], row, schema)

@@ -18,7 +18,7 @@ not a conformance requirement.  Quantization is 8-bit, single table,
 single 8-bit grayscale component (SOF0, 1:1 sampling).
 
 Scale shape: both directions are per-row byte work behind Arrow-batched
-``mapInPandas`` — map-only scans, no shuffle, the multimodal plumbing
+``io.flat_map`` — map-only scans, no shuffle, the multimodal plumbing
 contract of SURVEY.md §2.12.
 """
 

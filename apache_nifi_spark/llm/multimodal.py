@@ -17,8 +17,9 @@ where a vision encoder / ffmpeg would go (those libraries are not in
 this container).
 
 Scale notes: binary payloads ride in parquet/``binaryFile`` columns;
-decode runs in ``mapInPandas`` (Arrow-batched, per-partition iterator) so
-the 100 TB path is executor-parallel with bounded batch memory
+each decoder is a per-row generator run by :func:`io.flat_map`
+(``mapInArrow``, one Arrow batch at a time) so the 100 TB path is
+executor-parallel with bounded batch memory
 (``spark.sql.execution.arrow.maxRecordsPerBatch``).
 """
 
@@ -26,9 +27,6 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "attach_binary_content",
@@ -271,30 +271,19 @@ AUDIO_METADATA_SCHEMA = StructType(
 def decode_audio_metadata(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
-    """Audio metadata extraction over binary payloads (mapInPandas,
+    """Audio metadata extraction over binary payloads (row-mapped,
     Arrow-batched) — REAL RIFF/WAVE chunk-walk; non-WAV rows yield nulls.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                parse_wav_metadata(bytes(p) if p is not None else b"")
-                for p in pdf[content_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "channels": [m[0] if m else None for m in metas],
-                    "sample_rate_hz": [m[1] if m else None for m in metas],
-                    "bits_per_sample": [m[2] if m else None for m in metas],
-                    "n_frames": [m[3] if m else None for m in metas],
-                    "duration_ms": [
-                        (m[3] * 1000) // m[1] if m and m[1] else None for m in metas
-                    ],
-                }
-            )
+    def row(doc_id, p):
+        m = parse_wav_metadata(p or b"")
+        if not m:
+            yield doc_id, None, None, None, None, None
+            return
+        ch, rate, bits, n = m
+        yield doc_id, ch, rate, bits, n, (n * 1000) // rate if rate else None
 
-    return df.select(id_col, content_col).mapInPandas(decode, AUDIO_METADATA_SCHEMA)
+    return flat_map(df, [id_col, content_col], row, AUDIO_METADATA_SCHEMA)
 
 
 def _decode_one(payload: bytes, dim: int) -> tuple[int, int, list[float]]:
@@ -349,37 +338,16 @@ def decode_image_features(
 ) -> DataFrame:
     """Decode image bytes → (width, height, feature vector), Arrow-batched.
 
-    ``mapInPandas``: the UDF receives an iterator of pandas batches and
-    yields transformed batches — per-partition streaming, bounded memory,
-    the NiFi-2.x-Python-processor execution shape (SURVEY.md §2.10).
+    :func:`io.flat_map` runs the per-row decoder over Arrow batches —
+    per-partition streaming, bounded memory, the NiFi-2.x-Python-processor
+    execution shape (SURVEY.md §2.10).
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized over the Arrow batch: one comprehension over the
-        # content column (no iterrows — Python touches each payload once,
-        # everything else stays columnar).
-        for pdf in batches:
-            decoded = [
-                _decode_one(bytes(p) if p is not None else b"", dim)
-                for p in pdf[content_col]
-            ]
-            mimes = (
-                pdf[mime_col]
-                if mime_col in pdf.columns
-                else pd.Series(["application/octet-stream"] * len(pdf))
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "mime_type": mimes.to_numpy(),
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "features": [d[2] for d in decoded],
-                }
-            )
+    def row(doc_id, p, mime="application/octet-stream"):
+        yield (doc_id, mime, *_decode_one(p or b"", dim))
 
     cols = [id_col, content_col] + ([mime_col] if mime_col in df.columns else [])
-    return df.select(*cols).mapInPandas(decode, IMAGE_FEATURES_SCHEMA)
+    return flat_map(df, cols, row, IMAGE_FEATURES_SCHEMA)
 
 
 #: output schema of the video frame sampler — one row per frame
@@ -461,7 +429,7 @@ def sample_video_frames(
     max_frames: int = 4,
 ) -> DataFrame:
     """Sample frames from video bytes — one output row per sampled frame
-    (a one-to-many mapInPandas, the UDTF shape of SURVEY.md §2.10).
+    (a one-to-many row map, the UDTF shape of SURVEY.md §2.10).
 
     REAL for animated GIFs: ``parse_gif_frames`` walks the container and
     the sampler keeps the first frame at-or-after each ``every_ms``
@@ -483,38 +451,18 @@ def sample_video_frames(
                     break
         return out
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            idxs: list[int] = []
-            tss: list[int] = []
-            fbs: list[bytes] = []
-            for doc, payload in zip(pdf[id_col], pdf[content_col]):
-                raw = bytes(payload) if payload is not None else b""
-                frames = parse_gif_frames(raw)
-                if frames is not None:
-                    chosen = pick(frames)
-                else:
-                    d = hashlib.sha256(raw).digest()
-                    chosen = [
-                        (i, i * every_ms, d + bytes([i]))
-                        for i in range(max_frames)
-                    ]
-                for idx, ts, fb in chosen:
-                    ids.append(doc)
-                    idxs.append(idx)
-                    tss.append(ts)
-                    fbs.append(fb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(idxs, dtype="int32"),
-                    "frame_ts_ms": pd.Series(tss, dtype="int64"),
-                    "frame_bytes": fbs,
-                }
-            )
+    def row(doc_id, raw):
+        raw = raw or b""
+        frames = parse_gif_frames(raw)
+        if frames is not None:
+            chosen = pick(frames)
+        else:
+            d = hashlib.sha256(raw).digest()
+            chosen = [(i, i * every_ms, d + bytes([i])) for i in range(max_frames)]
+        for idx, ts, fb in chosen:
+            yield doc_id, idx, ts, fb
 
-    return df.select(id_col, content_col).mapInPandas(sample, VIDEO_FRAMES_SCHEMA)
+    return flat_map(df, [id_col, content_col], row, VIDEO_FRAMES_SCHEMA)
 
 
 def gif_animation_bytes(delay_cs, n_frames: int = 4, width: int = 2, height: int = 2):
@@ -748,32 +696,16 @@ def decode_image_pixel_stats(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """Pixel-statistics decode over a binary column, Arrow-batched
-    (mapInPandas — executor-parallel, bounded batch memory).  Rows whose
+    (row-mapped — executor-parallel, bounded batch memory).  Rows whose
     payload is not a decodable in-scope PNG are dropped (the
     undecodable→failure route)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_PIXEL_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                stats = png_pixel_stats(bytes(payload) if payload is not None else b"")
-                if stats is None:
-                    continue
-                w, h, ch, n, sr, sg, sb, sl = stats
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["n_pixels"].append(n)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-                out["sum_luma_milli"].append(sl)
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        stats = png_pixel_stats(p or b"")
+        if stats is not None:
+            yield doc_id, *stats
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, IMAGE_PIXEL_STATS_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, IMAGE_PIXEL_STATS_SCHEMA)
 
 
 # ------------------------------------------------------- audio PCM tier ---
@@ -946,31 +878,17 @@ def decode_audio_pcm_stats(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """Sample-statistics decode over a binary audio column, Arrow-batched
-    (mapInPandas — executor-parallel, bounded batch memory).  Rows whose
+    (row-mapped — executor-parallel, bounded batch memory).  Rows whose
     payload is not decodable in-scope PCM are dropped (the
     undecodable→failure route), mirroring
     :func:`decode_image_pixel_stats`."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_PCM_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                stats = wav_pcm_stats(bytes(payload) if payload is not None else b"")
-                if stats is None:
-                    continue
-                ch, rate, n, s0, ssq, pk = stats
-                out["doc_id"].append(doc_id)
-                out["channels"].append(ch)
-                out["sample_rate_hz"].append(rate)
-                out["n_frames"].append(n)
-                out["sum_ch0"].append(s0)
-                out["sumsq_amp"].append(ssq)
-                out["peak_amp"].append(pk)
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        stats = wav_pcm_stats(p or b"")
+        if stats is not None:
+            yield doc_id, *stats
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, AUDIO_PCM_STATS_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, AUDIO_PCM_STATS_SCHEMA)
 
 
 # ------------------------------------------------- video container tier ---
@@ -1114,29 +1032,18 @@ def decode_video_mp4_meta(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """MP4 container metadata over a binary column, Arrow-batched
-    (mapInPandas).  Non-ISO-BMFF rows are dropped (the
+    (row-mapped).  Non-ISO-BMFF rows are dropped (the
     undecodable→failure route)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_MP4_META_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                meta = parse_mp4_metadata(
-                    bytes(payload) if payload is not None else b""
-                )
-                if meta is None:
-                    continue
-                brand, timescale, duration_ms, handlers = meta
-                out["doc_id"].append(doc_id)
-                out["brand"].append(brand)
-                out["timescale"].append(timescale)
-                out["duration_ms"].append(duration_ms)
-                out["n_tracks"].append(len(handlers))
-                out["n_video"].append(sum(1 for h in handlers if h == "vide"))
-                out["n_audio"].append(sum(1 for h in handlers if h == "soun"))
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        meta = parse_mp4_metadata(p or b"")
+        if meta is None:
+            return
+        brand, timescale, duration_ms, handlers = meta
+        yield (doc_id, brand, timescale, duration_ms, len(handlers),
+               handlers.count("vide"), handlers.count("soun"))
 
-    return df.select(id_col, content_col).mapInPandas(decode, VIDEO_MP4_META_SCHEMA)
+    return flat_map(df, [id_col, content_col], row, VIDEO_MP4_META_SCHEMA)
 
 
 # ------------------------------------------- Matroska / WebM meta tier ---
@@ -1370,40 +1277,23 @@ def decode_video_mkv_meta(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """Matroska/WebM container metadata over a binary column,
-    Arrow-batched (mapInPandas).  Non-EBML rows are dropped (the
+    Arrow-batched (row-mapped).  Non-EBML rows are dropped (the
     undecodable→failure route)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_MKV_META_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    meta = parse_matroska_metadata(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except ValueError:
-                    meta = None  # corrupt EBML framing → failure route
-                if meta is None:
-                    continue
-                doctype, timescale, duration_ms, tracks = meta
-                out["doc_id"].append(doc_id)
-                out["doctype"].append(doctype)
-                out["timescale_ns"].append(timescale)
-                out["duration_ms"].append(duration_ms)
-                out["n_tracks"].append(len(tracks))
-                out["n_video"].append(
-                    sum(1 for t in tracks if t[0] == "video")
-                )
-                out["n_audio"].append(
-                    sum(1 for t in tracks if t[0] == "audio")
-                )
-                out["max_width"].append(max((t[2] for t in tracks), default=0))
-                out["total_channels"].append(sum(t[5] for t in tracks))
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        try:
+            meta = parse_matroska_metadata(p or b"")
+        except ValueError:
+            return  # corrupt EBML framing → failure route
+        if meta is None:
+            return
+        doctype, timescale, duration_ms, tracks = meta
+        kinds = [t[0] for t in tracks]
+        yield (doc_id, doctype, timescale, duration_ms, len(tracks),
+               kinds.count("video"), kinds.count("audio"),
+               max((t[2] for t in tracks), default=0), sum(t[5] for t in tracks))
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, VIDEO_MKV_META_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, VIDEO_MKV_META_SCHEMA)
 
 
 # ----------------------------------------------------- JPEG gray tier ---
@@ -1430,25 +1320,14 @@ def decode_jpeg_gray_stats(
     out-of-scope payloads are dropped (the undecodable→failure route)."""
     from apache_nifi_spark.llm.jpeg import jpeg_gray_stats
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in JPEG_GRAY_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    s = jpeg_gray_stats(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except (ValueError, IndexError, KeyError, struct.error):
-                    continue
-                out["doc_id"].append(doc_id)
-                for k in ("width", "height", "n_pixels",
-                          "sum_gray", "min_gray", "max_gray"):
-                    out[k].append(s[k])
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        try:
+            s = jpeg_gray_stats(p or b"")
+        except (ValueError, IndexError, KeyError, struct.error):
+            return
+        yield doc_id, *(s[f.name] for f in JPEG_GRAY_STATS_SCHEMA.fields[1:])
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, JPEG_GRAY_STATS_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, JPEG_GRAY_STATS_SCHEMA)
 
 
 # =====================================================================
@@ -1602,50 +1481,37 @@ def decode_audio_container_meta(
     MPEG-1 Layer III frame walk (:func:`parse_mpeg_audio`), RIFF/WAVE
     chunk walk (:func:`parse_wav_metadata`).  ``n_units`` is total
     samples (FLAC), frames (MP3) or sample frames (WAV); unknown fields
-    are 0 (MP3 bits, FLAC/WAV bitrate).  mapInPandas, Arrow-batched,
+    are 0 (MP3 bits, FLAC/WAV bitrate).  Row-mapped, Arrow-batched,
     map-only at any scale; unrecognized payloads yield null fields."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in AUDIO_CONTAINER_META_SCHEMA.fields}
-            for rid, blob in zip(pdf[id_col], pdf[content_col]):
-                p = bytes(blob) if blob is not None else b""
-                fmt = rate = ch = bits = kbps = units = dur = None
-                if p[:4] == b"fLaC":
-                    m = parse_flac_streaminfo(p)
-                    if m:
-                        fmt = "flac"
-                        rate, ch, bits, units = m
-                        kbps = 0
-                        dur = units * 1000 // rate
-                elif p[:3] == b"ID3" or (
-                    len(p) > 1 and p[0] == 0xFF and (p[1] & 0xE0) == 0xE0
-                ):
-                    m = parse_mpeg_audio(p)
-                    if m:
-                        fmt = "mp3"
-                        rate, ch, kbps, units, dur = m
-                        bits = 0
-                elif p[:4] == b"RIFF":
-                    m = parse_wav_metadata(p)
-                    if m:
-                        fmt = "wav"
-                        ch, rate, bits, units = m
-                        kbps = 0
-                        dur = units * 1000 // rate
-                rows["doc_id"].append(int(rid))
-                rows["format"].append(fmt)
-                rows["sample_rate_hz"].append(rate)
-                rows["channels"].append(ch)
-                rows["bits_per_sample"].append(bits)
-                rows["bitrate_kbps"].append(kbps)
-                rows["n_units"].append(units)
-                rows["duration_ms"].append(dur)
-            yield pd.DataFrame(rows)
+    def row(doc_id, p):
+        p = p or b""
+        fmt = rate = ch = bits = kbps = units = dur = None
+        if p[:4] == b"fLaC":
+            m = parse_flac_streaminfo(p)
+            if m:
+                fmt = "flac"
+                rate, ch, bits, units = m
+                kbps = 0
+                dur = units * 1000 // rate
+        elif p[:3] == b"ID3" or (
+            len(p) > 1 and p[0] == 0xFF and (p[1] & 0xE0) == 0xE0
+        ):
+            m = parse_mpeg_audio(p)
+            if m:
+                fmt = "mp3"
+                rate, ch, kbps, units, dur = m
+                bits = 0
+        elif p[:4] == b"RIFF":
+            m = parse_wav_metadata(p)
+            if m:
+                fmt = "wav"
+                ch, rate, bits, units = m
+                kbps = 0
+                dur = units * 1000 // rate
+        yield doc_id, fmt, rate, ch, bits, kbps, units, dur
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, AUDIO_CONTAINER_META_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, AUDIO_CONTAINER_META_SCHEMA)
 
 # ----------------------------------------------------- TIFF meta tier ---
 #
@@ -1750,32 +1616,14 @@ def decode_image_tiff_meta(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """TIFF container metadata over a binary column, Arrow-batched
-    (mapInPandas).  Non-TIFF rows are dropped (undecodable→failure)."""
+    (row-mapped).  Non-TIFF rows are dropped (undecodable→failure)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_TIFF_META_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                meta = parse_tiff_metadata(
-                    bytes(payload) if payload is not None else b""
-                )
-                if meta is None:
-                    continue
-                endian, w, h, bits, comp, photo, samples, n = meta
-                out["doc_id"].append(doc_id)
-                out["endian"].append(endian)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bits_per_sample"].append(bits)
-                out["compression"].append(comp)
-                out["photometric"].append(photo)
-                out["samples_per_pixel"].append(samples)
-                out["n_ifd_entries"].append(n)
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        meta = parse_tiff_metadata(p or b"")
+        if meta is not None:
+            yield doc_id, *meta
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, IMAGE_TIFF_META_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, IMAGE_TIFF_META_SCHEMA)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -1871,30 +1719,15 @@ def decode_image_png_meta(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """PNG container metadata over a binary column, Arrow-batched
-    (mapInPandas).  Non-PNG / checksum-broken rows are dropped."""
+    (row-mapped).  Non-PNG / checksum-broken rows are dropped."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_PNG_META_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                meta = parse_png_metadata(
-                    bytes(payload) if payload is not None else b""
-                )
-                if meta is None:
-                    continue
-                w, h, depth, color, _inter, n, rawlen = meta
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(depth)
-                out["color_type"].append(color)
-                out["n_chunks"].append(n)
-                out["idat_raw_bytes"].append(rawlen)
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        meta = parse_png_metadata(p or b"")
+        if meta is not None:
+            w, h, depth, color, _inter, n, rawlen = meta
+            yield doc_id, w, h, depth, color, n, rawlen
 
-    return df.select(id_col, content_col).mapInPandas(
-        decode, IMAGE_PNG_META_SCHEMA
-    )
+    return flat_map(df, [id_col, content_col], row, IMAGE_PNG_META_SCHEMA)
 
 
 _IMA_STEPS = [

@@ -6,11 +6,12 @@ gzip/snappy/zstd transparently via the ``compression`` option — see
 archive level.
 
 Archive packing is genuinely byte-imperative (zip central directory), so
-this is one of the few sanctioned Python seams (SURVEY.md §2.10): Arrow-
-batched ``mapInPandas``, never row-at-a-time UDFs.  Each batch is packed/
-unpacked independently on executors — no driver involvement, no shuffle;
-at 100 TB the archive blobs stream through executor memory one Arrow
-batch at a time.
+this is one of the few sanctioned Python seams (SURVEY.md §2.10): each
+packer/unpacker is a per-row generator run by :func:`io.flat_map` over
+Arrow batches (group packers are ``applyInPandas``), never row-at-a-time
+UDFs.  Each batch is packed/unpacked independently on executors — no
+driver involvement, no shuffle; at 100 TB the archive blobs stream
+through executor memory one Arrow batch at a time.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "merge_content_text",
@@ -45,46 +48,29 @@ def pack_content_zip(
     into a single-entry zip archive (STORED — deterministic bytes, no
     deflate timestamp drift).  Output: (id, archive binary)."""
 
-    def _one(name, payload) -> bytes:
+    def _pack(rid, name, payload):
         buf = _io.BytesIO()
         if isinstance(payload, str):
             payload = payload.encode("utf-8")
         with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
             # fixed date_time keeps archive bytes reproducible
             info = zipfile.ZipInfo(str(name), (1980, 1, 1, 0, 0, 0))
-            zf.writestr(info, bytes(payload))
-        return buf.getvalue()
+            zf.writestr(info, payload)
+        yield rid, buf.getvalue()
 
-    def _pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # columnar zip over the two columns — no iterrows
-            blobs = [
-                _one(n, p) for n, p in zip(pdf[name_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame({"id": pdf[id_col].astype("int64"), "archive": blobs})
-
-    return df.mapInPandas(_pack, _PACKED_SCHEMA)
+    return flat_map(df, [id_col, name_col, payload_col], _pack, _PACKED_SCHEMA)
 
 
 def unpack_content_zip(df: DataFrame, id_col: str, archive_col: str) -> DataFrame:
     """UnpackContent (zip): one output row per archive entry, with the
     entry name as NiFi's ``segment.original.filename`` analog."""
 
-    def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, payloads = [], [], []
-            for rid, blob in zip(pdf[id_col], pdf[archive_col]):
-                with zipfile.ZipFile(_io.BytesIO(bytes(blob))) as zf:
-                    for entry in zf.namelist():
-                        ids.append(int(rid))
-                        names.append(entry)
-                        payloads.append(zf.read(entry))
-            yield pd.DataFrame(
-                {"id": pd.Series(ids, dtype="int64"), "entry_name": names,
-                 "payload": payloads}
-            )
+    def _unpack(rid, blob):
+        with zipfile.ZipFile(_io.BytesIO(blob)) as zf:
+            for entry in zf.namelist():
+                yield rid, entry, zf.read(entry)
 
-    return df.mapInPandas(_unpack, _UNPACKED_SCHEMA)
+    return flat_map(df, [id_col, archive_col], _unpack, _UNPACKED_SCHEMA)
 
 
 #: codec name → (compress, decompress) over bytes — NiFi
@@ -254,23 +240,13 @@ def unpack_content_tar(df: DataFrame, id_col: str, archive_col: str) -> DataFram
     touching the driver."""
     import tarfile
 
-    def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, payloads = [], [], []
-            for rid, blob in zip(pdf[id_col], pdf[archive_col]):
-                with tarfile.open(fileobj=_io.BytesIO(bytes(blob))) as tf:
-                    for member in tf.getmembers():
-                        if not member.isfile():
-                            continue
-                        ids.append(int(rid))
-                        names.append(member.name)
-                        payloads.append(tf.extractfile(member).read())
-            yield pd.DataFrame(
-                {"group_id": pd.Series(ids, dtype="int64"),
-                 "entry_name": names, "payload": payloads}
-            )
+    def _unpack(rid, blob):
+        with tarfile.open(fileobj=_io.BytesIO(blob)) as tf:
+            for member in tf.getmembers():
+                if member.isfile():
+                    yield rid, member.name, tf.extractfile(member).read()
 
-    return df.mapInPandas(_unpack, _TAR_UNPACKED_SCHEMA)
+    return flat_map(df, [id_col, archive_col], _unpack, _TAR_UNPACKED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -376,42 +352,28 @@ def unpack_flowfile_v3(df: DataFrame, id_col: str, stream_col: str) -> DataFrame
     not land truncated records."""
     import struct as _struct
 
-    def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, attrs, contents = [], [], []
-            for rid, blob in zip(pdf[id_col], pdf[stream_col]):
-                buf = bytes(blob)
-                off = 0
-                while off < len(buf):
-                    if buf[off : off + 7] != _FF3_MAGIC:
-                        raise ValueError(
-                            f"bad FlowFile v3 magic at offset {off}"
-                        )
-                    off += 7
-                    n_attrs, off = _ff3_read_len(buf, off)
-                    a = {}
-                    for _ in range(n_attrs):
-                        k, off = _ff3_read_field(buf, off)
-                        v, off = _ff3_read_field(buf, off)
-                        a[k.decode("utf-8")] = v.decode("utf-8")
-                    if off + 8 > len(buf):
-                        raise ValueError(
-                            f"truncated FlowFile v3 content length at {off}"
-                        )
-                    clen = _struct.unpack(">Q", buf[off : off + 8])[0]
-                    off += 8
-                    if off + clen > len(buf):
-                        raise ValueError(
-                            f"truncated FlowFile v3 content at offset {off}:"
-                            f" need {clen} bytes, have {len(buf) - off}"
-                        )
-                    ids.append(int(rid))
-                    attrs.append(a)
-                    contents.append(buf[off : off + clen])
-                    off += clen
-            yield pd.DataFrame(
-                {"group_id": pd.Series(ids, dtype="int64"),
-                 "attributes": attrs, "content": contents}
-            )
+    def _unpack(rid, buf):
+        off = 0
+        while off < len(buf):
+            if buf[off : off + 7] != _FF3_MAGIC:
+                raise ValueError(f"bad FlowFile v3 magic at offset {off}")
+            off += 7
+            n_attrs, off = _ff3_read_len(buf, off)
+            a = {}
+            for _ in range(n_attrs):
+                k, off = _ff3_read_field(buf, off)
+                v, off = _ff3_read_field(buf, off)
+                a[k.decode("utf-8")] = v.decode("utf-8")
+            if off + 8 > len(buf):
+                raise ValueError(f"truncated FlowFile v3 content length at {off}")
+            clen = _struct.unpack(">Q", buf[off : off + 8])[0]
+            off += 8
+            if off + clen > len(buf):
+                raise ValueError(
+                    f"truncated FlowFile v3 content at offset {off}:"
+                    f" need {clen} bytes, have {len(buf) - off}"
+                )
+            yield rid, a, buf[off : off + clen]
+            off += clen
 
-    return df.mapInPandas(_unpack, _FF3_UNPACKED_SCHEMA)
+    return flat_map(df, [id_col, stream_col], _unpack, _FF3_UNPACKED_SCHEMA)

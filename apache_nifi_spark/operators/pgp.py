@@ -29,8 +29,8 @@ Determinism note: real deployments draw the 16-byte CFB prefix from a
 CSPRNG; here it derives per record from SHA-1(salt ‖ record id) so the
 round-trip queries are value-oracle-able — the seam is one line.
 
-Spark-first shape: both directions are Arrow-batched ``mapInPandas``
-(map-only, no shuffle); the S2K key derivation runs once per task, not
+Spark-first shape: both directions are per-row generators run by
+:func:`io.flat_map` (Arrow-batched, map-only, no shuffle); the S2K key derivation runs once per task, not
 per row.
 """
 
@@ -38,11 +38,12 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 from cryptography.hazmat.decrepit.ciphers.modes import CFB
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "s2k_iterated_salted",
@@ -270,28 +271,14 @@ def encrypt_content_pgp(
     """Per-record OpenPGP passphrase encryption (NiFi EncryptContentPGP):
     returns (id_col, content binary) of well-formed SKESK+SEIPD
     messages.  Map-only, Arrow-batched."""
-    import pandas as pd
-
     pw = passphrase.encode("utf-8")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for rid, payload in zip(pdf[id_col], pdf[content_col]):
-                raw = (
-                    payload.encode("utf-8")
-                    if isinstance(payload, str)
-                    else bytes(payload)
-                )
-                prefix = hashlib.sha1(
-                    b"pgp-prefix" + salt + str(int(rid)).encode()
-                ).digest()[:16]
-                out.append(pgp_encrypt_message(raw, pw, salt, prefix=prefix))
-            yield pd.DataFrame({id_col: pdf[id_col], "content": out})
+    def row(rid, payload):
+        raw = payload.encode("utf-8") if isinstance(payload, str) else payload
+        prefix = hashlib.sha1(b"pgp-prefix" + salt + str(int(rid)).encode()).digest()[:16]
+        yield rid, pgp_encrypt_message(raw, pw, salt, prefix=prefix)
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, f"{id_col} long, content binary"
-    )
+    return flat_map(df, [id_col, content_col], row, f"{id_col} long, content binary")
 
 
 def decrypt_content_pgp(
@@ -303,18 +290,9 @@ def decrypt_content_pgp(
     """Per-record OpenPGP decryption with MDC verification (NiFi
     DecryptContentPGP); integrity failures raise rather than landing
     corrupt records."""
-    import pandas as pd
-
     pw = passphrase.encode("utf-8")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = [
-                pgp_decrypt_message(bytes(blob), pw)
-                for blob in pdf[content_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "content": out})
+    def row(rid, blob):
+        yield rid, pgp_decrypt_message(blob, pw)
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, f"{id_col} long, content binary"
-    )
+    return flat_map(df, [id_col, content_col], row, f"{id_col} long, content binary")

@@ -1873,21 +1873,14 @@ def split_avro_datum_q(spark, sf_dir):
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     split = split_avro_column(containers)
 
-    def decode_each(batches):
-        import pandas as pd
+    def decode_each(blob):
+        _, rs = decode_container(blob)
+        assert len(rs) == 1  # datum split contract
+        return rs
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf["datum_container"]:
-                _, rs = decode_container(bytes(blob))
-                assert len(rs) == 1  # datum split contract
-                rows.extend(rs)
-            yield pd.DataFrame(
-                rows, columns=["o_orderkey", "o_orderstatus", "o_totalprice"]
-            )
-
-    return split.mapInPandas(
-        decode_each, "o_orderkey bigint, o_orderstatus string, o_totalprice double"
+    return io.flat_map(
+        split, ["datum_container"], decode_each,
+        "o_orderkey bigint, o_orderstatus string, o_totalprice double",
     )
 
 
@@ -1926,7 +1919,7 @@ def avro_schema_evolution_q(spark, sf_dir):
     (total ← o_totalprice), (b) promotes long → double (o_custkey),
     (c) fills a reader-only field from its default (region), and
     (d) skips a writer-only field (o_orderstatus).  Spark writes the v1
-    containers; decode fans out per file via binaryFile + mapInPandas
+    containers; decode fans out per file via binaryFile + io.flat_map
     (sources/avro_codec.decode_container_resolved)."""
     from apache_nifi_spark.sources import read_binary_files, write_records
     from apache_nifi_spark.sources.avro_codec import decode_container_resolved
@@ -1949,19 +1942,10 @@ def avro_schema_evolution_q(spark, sf_dir):
     }
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
 
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(decode_container_resolved(bytes(blob), reader_schema))
-            yield pd.DataFrame(
-                rows, columns=["o_orderkey", "o_custkey", "total", "region"]
-            )
-
-    return containers.mapInPandas(
-        decode,
+    return io.flat_map(
+        containers,
+        ["content"],
+        lambda blob: decode_container_resolved(blob, reader_schema),
         "o_orderkey bigint, o_custkey double, total double, region string",
     )
 

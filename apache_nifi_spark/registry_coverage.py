@@ -499,38 +499,27 @@ def parquet_footer_stats_audit_q(spark, sf_dir):
     FROM THE DATA — equality proves the footers' statistics are
     faithful, which is exactly what row-group pruning correctness rests
     on."""
-    import pandas as pd  # noqa: F811
-
     cols = ("l_orderkey", "l_quantity")
     files = spark.read.format("binaryFile").load(
         f"{sf_dir}/lineitem.parquet"
     ).select("content")
 
-    def footer(batches):
+    def footer(blob):
         import io as _io
 
-        import pandas as pd
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            out = {"column_name": [], "n_values": [], "min_v": [],
-                   "max_v": []}
-            for blob in pdf["content"]:
-                meta = pq.ParquetFile(_io.BytesIO(bytes(blob))).metadata
-                for rg in range(meta.num_row_groups):
-                    g = meta.row_group(rg)
-                    for i in range(meta.num_columns):
-                        c = g.column(i)
-                        if c.path_in_schema not in cols:
-                            continue
-                        out["column_name"].append(c.path_in_schema)
-                        out["n_values"].append(int(c.num_values))
-                        out["min_v"].append(float(c.statistics.min))
-                        out["max_v"].append(float(c.statistics.max))
-            yield pd.DataFrame(out)
+        meta = pq.ParquetFile(_io.BytesIO(blob)).metadata
+        for rg in range(meta.num_row_groups):
+            g = meta.row_group(rg)
+            for i in range(meta.num_columns):
+                c = g.column(i)
+                if c.path_in_schema in cols:
+                    yield (c.path_in_schema, c.num_values,
+                           float(c.statistics.min), float(c.statistics.max))
 
-    per_chunk = files.mapInPandas(
-        footer,
+    per_chunk = io.flat_map(
+        files, ["content"], footer,
         "column_name string, n_values bigint, min_v double, max_v double",
     )
     return per_chunk.groupBy("column_name").agg(
@@ -1271,8 +1260,6 @@ def warc_ingest_responses_q(spark, sf_dir):
     Oracle regenerates url/status/content-type/body-length
     arithmetically — equality proves the full container round trip.
     Map-only, one task per shard (llm/warc.py)."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm.warc import encode_warc_gz, warc_responses
 
     base = (
@@ -1281,34 +1268,28 @@ def warc_ingest_responses_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                html = f"<html><body>{'x' * (10 + d % 50)}</body></html>"
-                recs = [
-                    ("warcinfo", {}, b"software: anspark-crawler\r\n"),
-                    ("request",
-                     {"WARC-Target-URI": f"http://example.com/{d}/0"},
-                     b"GET /0 HTTP/1.1\r\nHost: example.com\r\n\r\n"),
-                    ("response",
-                     {"WARC-Target-URI": f"http://example.com/{d}/0"},
-                     b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                     + html.encode()),
-                ]
-                if d % 2 == 0:
-                    recs.append(
-                        ("response",
-                         {"WARC-Target-URI": f"http://example.com/{d}/1"},
-                         b"HTTP/1.1 404 Not Found\r\n"
-                         b"Content-Type: text/plain\r\n\r\nnot found")
-                    )
-                contents.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"shard_id": pdf["doc_id"],
-                                "content": contents})
+    def synth(d):
+        html = f"<html><body>{'x' * (10 + d % 50)}</body></html>"
+        recs = [
+            ("warcinfo", {}, b"software: anspark-crawler\r\n"),
+            ("request",
+             {"WARC-Target-URI": f"http://example.com/{d}/0"},
+             b"GET /0 HTTP/1.1\r\nHost: example.com\r\n\r\n"),
+            ("response",
+             {"WARC-Target-URI": f"http://example.com/{d}/0"},
+             b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+             + html.encode()),
+        ]
+        if d % 2 == 0:
+            recs.append(
+                ("response",
+                 {"WARC-Target-URI": f"http://example.com/{d}/1"},
+                 b"HTTP/1.1 404 Not Found\r\n"
+                 b"Content-Type: text/plain\r\n\r\nnot found")
+            )
+        yield d, encode_warc_gz(recs)
 
-    shards = base.mapInPandas(synth, "shard_id long, content binary")
+    shards = io.flat_map(base, ["doc_id"], synth, "shard_id long, content binary")
     return warc_responses(shards).select(
         "shard_id", "url", "http_status", "content_type", "body_len"
     )
@@ -1342,8 +1323,6 @@ def warc_wet_pipeline_q(spark, sf_dir):
     actual CC linkage, not the URL.  One parse, pinned; doc-grain
     equi-joins; oracle regenerates everything arithmetically so
     equality proves the full container + linkage round trip."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm.warc import encode_warc_gz, warc_records
 
     base = (
@@ -1352,44 +1331,38 @@ def warc_wet_pipeline_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                u = f"http://example.com/{d}"
-                resp_id = f"<urn:uuid:resp-{d:012d}>"
-                html = f"<html><body>{'x' * (10 + d % 50)}</body></html>"
-                wet_text = " ".join(f"w{i}" for i in range(3 + d % 5))
-                warc = encode_warc_gz([
-                    ("warcinfo", {},
-                     b"software: anspark-crawler\r\nformat: WARC/1.0\r\n"),
-                    ("request", {"WARC-Target-URI": u},
-                     f"GET /{d} HTTP/1.1\r\nHost: example.com\r\n\r\n"
-                     .encode()),
-                    ("response",
-                     {"WARC-Target-URI": u, "WARC-Record-ID": resp_id},
-                     b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                     + html.encode()),
-                    ("metadata",
-                     {"WARC-Target-URI": u, "WARC-Refers-To": resp_id,
-                      "Content-Type": "application/warc-fields"},
-                     f"fetchTimeMs: {5 + d % 100}\r\n"
-                     f"charset-detected: utf-8\r\n".encode()),
-                ])
-                wet = encode_warc_gz([
-                    ("warcinfo", {},
-                     b"software: anspark-wet-extractor\r\n"),
-                    ("conversion",
-                     {"WARC-Target-URI": u, "WARC-Refers-To": resp_id,
-                      "Content-Type": "text/plain"},
-                     wet_text.encode()),
-                ])
-                contents.append(warc + wet)
-            yield pd.DataFrame({"shard_id": pdf["doc_id"],
-                                "content": contents})
+    def synth(d):
+        u = f"http://example.com/{d}"
+        resp_id = f"<urn:uuid:resp-{d:012d}>"
+        html = f"<html><body>{'x' * (10 + d % 50)}</body></html>"
+        wet_text = " ".join(f"w{i}" for i in range(3 + d % 5))
+        warc = encode_warc_gz([
+            ("warcinfo", {},
+             b"software: anspark-crawler\r\nformat: WARC/1.0\r\n"),
+            ("request", {"WARC-Target-URI": u},
+             f"GET /{d} HTTP/1.1\r\nHost: example.com\r\n\r\n"
+             .encode()),
+            ("response",
+             {"WARC-Target-URI": u, "WARC-Record-ID": resp_id},
+             b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+             + html.encode()),
+            ("metadata",
+             {"WARC-Target-URI": u, "WARC-Refers-To": resp_id,
+              "Content-Type": "application/warc-fields"},
+             f"fetchTimeMs: {5 + d % 100}\r\n"
+             f"charset-detected: utf-8\r\n".encode()),
+        ])
+        wet = encode_warc_gz([
+            ("warcinfo", {},
+             b"software: anspark-wet-extractor\r\n"),
+            ("conversion",
+             {"WARC-Target-URI": u, "WARC-Refers-To": resp_id,
+              "Content-Type": "text/plain"},
+             wet_text.encode()),
+        ])
+        yield d, warc + wet
 
-    shards = base.mapInPandas(synth, "shard_id long, content binary")
+    shards = io.flat_map(base, ["doc_id"], synth, "shard_id long, content binary")
     # one typed parse, pinned — four branches read it
     recs = warc_records(shards).localCheckpoint(eager=False)
     req = recs.filter(F.col("warc_type") == "request").select(
@@ -1580,9 +1553,7 @@ def html_main_content_q(spark, sf_dir):
     the content paragraphs survive.  Deterministic by construction; the
     oracle regenerates the surviving text arithmetically, proving the
     parse → block → keep pipeline verbatim (llm/extract.py).
-    Arrow-batched mapInPandas, map-only."""
-    import pandas as pd  # noqa: F811
-
+    Arrow-batched row map (io.flat_map), map-only."""
     from apache_nifi_spark.llm.extract import html_main_text
 
     base = (
@@ -1591,31 +1562,25 @@ def html_main_content_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                p1 = (
-                    f"<p>content paragraph one for document {d}"
-                    " extra filler tokens here</p>" if d % 2 == 0 else ""
-                )
-                contents.append(
-                    "<html><head><script>var x=1;</script>"
-                    "<style>.x{color:red}</style></head><body>"
-                    '<nav><a href="/">home link text here</a> '
-                    '<a href="/b">about page link text</a></nav>'
-                    "<h1>short title</h1>"
-                    f"<p>content paragraph zero for document {d}"
-                    f" filler words {d % 7}</p>"
-                    f"{p1}"
-                    "<footer>copyright</footer>"
-                    "</body></html>"
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "content": contents})
+    def synth(d):
+        p1 = (
+            f"<p>content paragraph one for document {d}"
+            " extra filler tokens here</p>" if d % 2 == 0 else ""
+        )
+        yield d, (
+            "<html><head><script>var x=1;</script>"
+            "<style>.x{color:red}</style></head><body>"
+            '<nav><a href="/">home link text here</a> '
+            '<a href="/b">about page link text</a></nav>'
+            "<h1>short title</h1>"
+            f"<p>content paragraph zero for document {d}"
+            f" filler words {d % 7}</p>"
+            f"{p1}"
+            "<footer>copyright</footer>"
+            "</body></html>"
+        )
 
-    pages = base.mapInPandas(synth, "doc_id long, content string")
+    pages = io.flat_map(base, ["doc_id"], synth, "doc_id long, content string")
     return html_main_text(pages)
 
 
@@ -1646,8 +1611,6 @@ def web_pipeline_full_q(spark, sf_dir):
     the surviving article text arithmetically, so one wrong byte in
     container, gate, or extractor breaks equality.  Map-only except the
     final projection; one task per shard."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm.extract import html_main_text
     from apache_nifi_spark.llm.robots import robots_filter
     from apache_nifi_spark.llm.warc import encode_warc_gz, warc_responses
@@ -1658,35 +1621,29 @@ def web_pipeline_full_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                para = (
-                    f"crawled article text for document {d} body words"
-                    f" repeated {'token ' * (3 + d % 5)}end"
-                )
-                path = f"/blocked/{d}/0" if d % 3 == 2 else f"/{d}/0"
-                html = (
-                    "<html><body><nav><a href='/'>home nav link text"
-                    " words</a></nav>"
-                    f"<p>{para}</p><footer>c</footer></body></html>"
-                )
-                recs = [
-                    ("request",
-                     {"WARC-Target-URI": f"http://example.com{path}"},
-                     b"GET / HTTP/1.1\r\n\r\n"),
-                    ("response",
-                     {"WARC-Target-URI": f"http://example.com{path}"},
-                     b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                     + html.encode()),
-                ]
-                contents.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"shard_id": pdf["doc_id"],
-                                "content": contents})
+    def synth(d):
+        para = (
+            f"crawled article text for document {d} body words"
+            f" repeated {'token ' * (3 + d % 5)}end"
+        )
+        path = f"/blocked/{d}/0" if d % 3 == 2 else f"/{d}/0"
+        html = (
+            "<html><body><nav><a href='/'>home nav link text"
+            " words</a></nav>"
+            f"<p>{para}</p><footer>c</footer></body></html>"
+        )
+        recs = [
+            ("request",
+             {"WARC-Target-URI": f"http://example.com{path}"},
+             b"GET / HTTP/1.1\r\n\r\n"),
+            ("response",
+             {"WARC-Target-URI": f"http://example.com{path}"},
+             b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+             + html.encode()),
+        ]
+        yield d, encode_warc_gz(recs)
 
-    shards = base.mapInPandas(synth, "shard_id long, content binary")
+    shards = io.flat_map(base, ["doc_id"], synth, "shard_id long, content binary")
     responses = warc_responses(shards)
     gated = robots_filter(
         responses.withColumn(
@@ -2263,8 +2220,6 @@ def protobuf_decode_q(spark, sf_dir):
     no generated classes) back to typed columns; the oracle regenerates
     every field from the fixture, doubles bit-exact through the fixed64
     hop.  functions/protobuf_wire.py; map-only both directions."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.functions.protobuf_wire import (
         decode_protobuf_records,
         pb_encode,
@@ -2284,30 +2239,22 @@ def protobuf_decode_q(spark, sf_dir):
         F.col("event_id") % 27 == 0
     ).select("event_id", "event_type", "value")
 
-    def synth(batches):
-        for pdf in batches:
-            out = {"rec_id": [], "content": []}
-            for eid, etype, val in zip(
-                pdf["event_id"], pdf["event_type"], pdf["value"]
-            ):
-                e = int(eid)
-                out["rec_id"].append(e)
-                out["content"].append(
-                    pb_encode(
-                        writer_spec,
-                        {
-                            "rec_id": e,
-                            "kind": str(etype),
-                            "score": float(val),
-                            "delta": e % 7 - 3,
-                            "flag": e % 2 == 0,
-                            "extra": e % 13,
-                        },
-                    )
-                )
-            yield pd.DataFrame(out)
+    def synth(e, etype, val):
+        yield e, pb_encode(
+            writer_spec,
+            {
+                "rec_id": e,
+                "kind": str(etype),
+                "score": float(val),
+                "delta": e % 7 - 3,
+                "flag": e % 2 == 0,
+                "extra": e % 13,
+            },
+        )
 
-    frames = ev.mapInPandas(synth, "rec_id long, content binary")
+    frames = io.flat_map(
+        ev, ["event_id", "event_type", "value"], synth, "rec_id long, content binary"
+    )
     return decode_protobuf_records(
         frames, reader_spec,
         "rec_id long, kind string, score double, delta long, flag boolean",

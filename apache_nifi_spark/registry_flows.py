@@ -769,7 +769,7 @@ def mega2_html_q(spark, sf_dir):
 )
 def mega2_email_q(spark, sf_dir):
     """Mega-flow-2 S5: QueryRecord(filter) → UpdateAttribute(EL MIME
-    build) → ExtractEmailHeaders(stdlib parser in mapInPandas) →
+    build) → ExtractEmailHeaders(stdlib parser in io.flat_map) →
     QueryRecord."""
     return _mega2(spark, sf_dir, "MailAgg.agg")
 

@@ -2529,7 +2529,7 @@ def multimodal_image_q(spark, sf_dir):
     """REAL image decode, value-oracled: structurally valid PNGs are
     synthesized executor-side as column expressions (signature + IHDR
     with a correct crc32 + IEND — `llm/multimodal.png_header_bytes`),
-    then the Arrow-batched mapInPandas decoder parses width/height back
+    then the Arrow-batched row decoder parses width/height back
     out of the actual container bytes (stdlib PNG/GIF/BMP/JPEG header
     parser; Pillow takes over when present).  The oracle recomputes the
     dimensions arithmetically — equality proves build→sniff→decode is a
@@ -2593,8 +2593,6 @@ def multimodal_pixel_q(spark, sf_dir):
     inflate→unfilter→reduce is a true pixel-level round trip through
     every filter path.  Arrow-batched both sides; at 100 TB this is a
     map-only scan."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_image_pixel_stats, encode_png
 
     base = (
@@ -2603,25 +2601,20 @@ def multimodal_pixel_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 1 + d % 16, 1 + (d * 7) % 12
-                s1, s2, s3 = d % 100, d % 50, d % 200
-                rows = [
-                    bytes(
-                        b
-                        for x in range(w)
-                        for b in (s1 + y, s2 + 2 * x, s3 + x + y)
-                    )
-                    for y in range(h)
-                ]
-                contents.append(encode_png(rows, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        w, h = 1 + d % 16, 1 + (d * 7) % 12
+        s1, s2, s3 = d % 100, d % 50, d % 200
+        rows = [
+            bytes(
+                b
+                for x in range(w)
+                for b in (s1 + y, s2 + 2 * x, s3 + x + y)
+            )
+            for y in range(h)
+        ]
+        yield d, encode_png(rows, w, h)
 
-    img = base.mapInPandas(synth, "doc_id long, content binary")
+    img = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_image_pixel_stats(img)
 
 
@@ -2660,8 +2653,6 @@ def multimodal_jpeg_q(spark, sf_dir):
     general AC path (run/size RLE, ZRL, EOB) is covered by pytest
     round-trips against an independent IDCT.  Arrow-batched both sides;
     map-only at any scale."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_jpeg_gray_stats
     from apache_nifi_spark.llm.jpeg import encode_jpeg_gray
 
@@ -2671,21 +2662,16 @@ def multimodal_jpeg_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
-                nb = (w // 8) * (h // 8)
-                blocks = [
-                    [((d * 5 + b * 11) % 65) - 32] + [0] * 63
-                    for b in range(nb)
-                ]
-                contents.append(encode_jpeg_gray(blocks, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
+        nb = (w // 8) * (h // 8)
+        blocks = [
+            [((d * 5 + b * 11) % 65) - 32] + [0] * 63
+            for b in range(nb)
+        ]
+        yield d, encode_jpeg_gray(blocks, w, h)
 
-    img = base.mapInPandas(synth, "doc_id long, content binary")
+    img = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_jpeg_gray_stats(img)
 
 
@@ -2707,7 +2693,7 @@ def multimodal_jpeg_q(spark, sf_dir):
 def multimodal_audio_q(spark, sf_dir):
     """REAL audio metadata decode, value-oracled: spec-valid RIFF/WAVE
     headers are built as column expressions (little-endian ints via hex
-    byte-swap — `llm/multimodal.wav_header_bytes`), then the mapInPandas
+    byte-swap — `llm/multimodal.wav_header_bytes`), then the row
     decoder walks the actual chunk list back out (channels, sample rate,
     bit depth, frame count, duration).  Oracle recomputes the fields
     arithmetically — a true byte-level round trip."""
@@ -2770,8 +2756,6 @@ def multimodal_audio_samples_q(spark, sf_dir):
     generate_series — equality proves encode→pack→parse→unpack is a true
     sample-level round trip.  Arrow-batched both sides; map-only at any
     scale."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_audio_pcm_stats, encode_wav
 
     base = (
@@ -2780,22 +2764,17 @@ def multimodal_audio_samples_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nch = 1 + d % 2
-                rate = (8000, 16000, 44100)[d % 3]
-                n = 20 + d % 50
-                chans = [
-                    [((d + 7 * i + 13 * c) % 2048) - 1024 for i in range(n)]
-                    for c in range(nch)
-                ]
-                contents.append(encode_wav(chans, rate))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        nch = 1 + d % 2
+        rate = (8000, 16000, 44100)[d % 3]
+        n = 20 + d % 50
+        chans = [
+            [((d + 7 * i + 13 * c) % 2048) - 1024 for i in range(n)]
+            for c in range(nch)
+        ]
+        yield d, encode_wav(chans, rate)
 
-    wav = base.mapInPandas(synth, "doc_id long, content binary")
+    wav = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_audio_pcm_stats(wav)
 
 
@@ -2855,8 +2834,6 @@ def multimodal_audio_g711_q(spark, sf_dir):
     segment/mantissa/bias algebra straight from the public spec — so
     equality proves the compand round trip sample-exactly.  Map-only,
     Arrow-batched."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_audio_pcm_stats, encode_wav
 
     base = (
@@ -2865,23 +2842,18 @@ def multimodal_audio_g711_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nch = 1 + d % 2
-                rate = 8000 if d % 2 == 0 else 16000
-                n = 16 + d % 40
-                fmt_tag = 7 if d % 2 == 0 else 6
-                chans = [
-                    [(d * 31 + 17 * i + 5 * c) % 256 for i in range(n)]
-                    for c in range(nch)
-                ]
-                contents.append(encode_wav(chans, rate, bits=8, fmt_tag=fmt_tag))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        nch = 1 + d % 2
+        rate = 8000 if d % 2 == 0 else 16000
+        n = 16 + d % 40
+        fmt_tag = 7 if d % 2 == 0 else 6
+        chans = [
+            [(d * 31 + 17 * i + 5 * c) % 256 for i in range(n)]
+            for c in range(nch)
+        ]
+        yield d, encode_wav(chans, rate, bits=8, fmt_tag=fmt_tag)
 
-    wav = base.mapInPandas(synth, "doc_id long, content binary")
+    wav = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_audio_pcm_stats(wav)
 
 
@@ -2913,8 +2885,6 @@ def multimodal_video_mp4_q(spark, sf_dir):
     three.  Oracle recomputes every field arithmetically.  Frame PIXEL
     decode (codec work) remains the documented external seam —
     container metadata is what a 100 TB curation pass actually scans."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_video_mp4_meta, encode_mp4
 
     base = (
@@ -2923,19 +2893,14 @@ def multimodal_video_mp4_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                brand = b"isom" if d % 2 == 0 else b"mp42"
-                timescale = 600 if d % 2 == 0 else 90000
-                duration = 1000 + d % 9000
-                tracks = [b"vide", b"soun", b"text"][: 1 + d % 3]
-                contents.append(encode_mp4(brand, timescale, duration, tracks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        brand = b"isom" if d % 2 == 0 else b"mp42"
+        timescale = 600 if d % 2 == 0 else 90000
+        duration = 1000 + d % 9000
+        tracks = [b"vide", b"soun", b"text"][: 1 + d % 3]
+        yield d, encode_mp4(brand, timescale, duration, tracks)
 
-    mp4 = base.mapInPandas(synth, "doc_id long, content binary")
+    mp4 = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_video_mp4_meta(mp4)
 
 
@@ -2971,8 +2936,6 @@ def multimodal_video_webm_q(spark, sf_dir):
     different timescales so the rescale is exercised on both.  Oracle
     recomputes every field arithmetically.  Frame pixel decode (VP9/AV1
     codec work) remains the documented external seam."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_video_mkv_meta, encode_webm
 
     base = (
@@ -2981,31 +2944,26 @@ def multimodal_video_webm_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                doctype = "webm" if d % 2 == 0 else "matroska"
-                scale = 1_000_000 if d % 2 == 0 else 500_000
-                dur = 2000 + d % 7000
-                tracks = [{
-                    "type": "video",
-                    "codec": "V_VP9" if d % 2 == 0 else "V_MPEG4/ISO/AVC",
-                    "w": 320 + d % 1280, "h": 240 + d % 720,
-                }]
-                if d % 3 >= 1:
-                    tracks.append({
-                        "type": "audio",
-                        "codec": "A_OPUS" if d % 2 == 0 else "A_AAC",
-                        "rate": 48000.0, "ch": 1 + d % 2,
-                    })
-                if d % 3 == 2:
-                    tracks.append({"type": "subtitle", "codec": "S_TEXT/UTF8"})
-                contents.append(encode_webm(doctype, scale, dur, tracks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        doctype = "webm" if d % 2 == 0 else "matroska"
+        scale = 1_000_000 if d % 2 == 0 else 500_000
+        dur = 2000 + d % 7000
+        tracks = [{
+            "type": "video",
+            "codec": "V_VP9" if d % 2 == 0 else "V_MPEG4/ISO/AVC",
+            "w": 320 + d % 1280, "h": 240 + d % 720,
+        }]
+        if d % 3 >= 1:
+            tracks.append({
+                "type": "audio",
+                "codec": "A_OPUS" if d % 2 == 0 else "A_AAC",
+                "rate": 48000.0, "ch": 1 + d % 2,
+            })
+        if d % 3 == 2:
+            tracks.append({"type": "subtitle", "codec": "S_TEXT/UTF8"})
+        yield d, encode_webm(doctype, scale, dur, tracks)
 
-    mkv = base.mapInPandas(synth, "doc_id long, content binary")
+    mkv = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_video_mkv_meta(mkv)
 
 
@@ -3467,7 +3425,7 @@ def convert_excel_roundtrip_q(spark, sf_dir):
     """ExcelReader / ConvertExcelToCSV (§2.2 [nifi-poi surface]) with a
     dependency-free xlsx codec (sources/excel_codec): orders serialize
     to one real SpreadsheetML workbook per priority (applyInPandas),
-    then the workbooks parse back to records (mapInPandas over binary
+    then the workbooks parse back to records (io.flat_map over binary
     content, shared-string table resolved, cell refs aligning columns).
     Oracle identity over the original rows proves the round trip is
     lossless, numbers bit-exact via repr round-tripping."""
@@ -3576,7 +3534,7 @@ def listen_smtp_q(spark, sf_dir):
     preserved as X-Envelope headers, and parse back.  Oracle identity
     against the source rows proves the SMTP hop is lossless.
 
-    Round-15 rework: the read-back is ONE mapInPandas pass
+    Round-15 rework: the read-back is ONE row-parse pass
     (``parse_email_headers(envelope=True)`` surfaces the X-Envelope
     headers alongside the MIME fields) — the prior envelope-regex
     projection + self-join on subject double-scanned the content and

@@ -1250,8 +1250,6 @@ def multimodal_audio_container_meta_q(spark, sf_dir):
     The oracle recomputes every field arithmetically from the
     generating formulas — a true byte-level round trip.  Arrow-batched
     both sides; map-only at any scale."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import (
         decode_audio_container_meta,
         encode_flac_streaminfo,
@@ -1264,36 +1262,27 @@ def multimodal_audio_container_meta_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    rate = [8000, 22050, 44100][d % 3]
-                    contents.append(
-                        encode_flac_streaminfo(
-                            rate,
-                            1 + (d % 4) // 2,
-                            16 if d % 8 < 4 else 24,
-                            1000 + d % 5000,
-                        )
-                    )
-                else:
-                    kbps = [64, 128, 320][d % 3]
-                    rate = [44100, 48000, 32000][(d % 9) // 3]
-                    contents.append(
-                        encode_mp3_frames(
-                            kbps,
-                            rate,
-                            1 + (d % 10) // 5,
-                            50 + d % 200,
-                            id3_size=(d % 100) if d % 4 == 1 else 0,
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        if d % 2 == 0:
+            rate = [8000, 22050, 44100][d % 3]
+            yield d, encode_flac_streaminfo(
+                rate,
+                1 + (d % 4) // 2,
+                16 if d % 8 < 4 else 24,
+                1000 + d % 5000,
+            )
+        else:
+            kbps = [64, 128, 320][d % 3]
+            rate = [44100, 48000, 32000][(d % 9) // 3]
+            yield d, encode_mp3_frames(
+                kbps,
+                rate,
+                1 + (d % 10) // 5,
+                50 + d % 200,
+                id3_size=(d % 100) if d % 4 == 1 else 0,
+            )
 
-    audio = base.mapInPandas(synth, "doc_id long, content binary")
+    audio = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_audio_container_meta(audio)
 
 
@@ -2006,10 +1995,8 @@ def multimodal_image_tiff_q(spark, sf_dir):
     BitsPerSample value — the equal-across-samples writer shorthand).
     The endianness alternation is the test: one wrong byte-order read
     breaks half the oracle rows.  Pixel strips (codec work) remain the
-    documented external seam.  Arrow-batched mapInPandas both ways;
+    documented external seam.  Arrow-batched row maps both ways;
     the oracle recomputes every field arithmetically."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import decode_image_tiff_meta, encode_tiff
 
     base = (
@@ -2018,25 +2005,18 @@ def multimodal_image_tiff_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                contents.append(
-                    encode_tiff(
-                        width=100 + d % 4000,
-                        height=80 + d % 2000,
-                        bits=8 * (1 + d % 2),
-                        compression=[1, 5, 7][d % 3],
-                        photometric=1 + d % 2,
-                        samples=1 if d % 2 == 0 else 3,
-                        big_endian=(d % 2 == 1),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        yield d, encode_tiff(
+            width=100 + d % 4000,
+            height=80 + d % 2000,
+            bits=8 * (1 + d % 2),
+            compression=[1, 5, 7][d % 3],
+            photometric=1 + d % 2,
+            samples=1 if d % 2 == 0 else 3,
+            big_endian=(d % 2 == 1),
+        )
 
-    tiff = base.mapInPandas(synth, "doc_id long, content binary")
+    tiff = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_image_tiff_meta(tiff)
 
 @register(
@@ -3038,10 +3018,8 @@ def multimodal_image_png_q(spark, sf_dir):
     breaks every row, not just a header field.  Grayscale/RGB/RGBA
     cycle per doc (channel arithmetic is the per-row variance);
     checksum-broken payloads drop as undecodable.  Arrow-batched
-    mapInPandas both ways; pixel SEMANTICS (beyond the deterministic
+    row maps both ways; pixel SEMANTICS (beyond the deterministic
     pattern) remain the documented learned-decode seam."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import (
         decode_image_png_meta,
         encode_png_skeleton,
@@ -3053,23 +3031,16 @@ def multimodal_image_png_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            contents = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                contents.append(
-                    encode_png_skeleton(
-                        width=16 + d % 48,
-                        height=8 + d % 24,
-                        color_type=[0, 2, 6][d % 3],
-                        doc_seed=d,
-                        with_text=(d % 2 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def synth(d):
+        yield d, encode_png_skeleton(
+            width=16 + d % 48,
+            height=8 + d % 24,
+            color_type=[0, 2, 6][d % 3],
+            doc_seed=d,
+            with_text=(d % 2 == 0),
+        )
 
-    png = base.mapInPandas(synth, "doc_id long, content binary")
+    png = io.flat_map(base, ["doc_id"], synth, "doc_id long, content binary")
     return decode_image_png_meta(png)
 
 
@@ -3472,8 +3443,6 @@ def multimodal_audio_adpcm_q(spark, sf_dir):
     adaptation steps is the proof the state machine is right.
     Map-only, Arrow-batched; MDCT codecs (MP3/AAC payloads) remain the
     documented external seam."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import ima_adpcm_decode
 
     base = (
@@ -3482,26 +3451,15 @@ def multimodal_audio_adpcm_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "sum_amp": [],
-                   "sumsq_amp": [], "peak_amp": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 12 + d % 28
-                payload = bytes(
-                    (d * 13 + 7 * j) % 256 for j in range((n + 1) // 2)
-                )
-                dec = ima_adpcm_decode(payload, n)
-                out["doc_id"].append(d)
-                out["n_samples"].append(n)
-                out["sum_amp"].append(sum(dec))
-                out["sumsq_amp"].append(sum(x * x for x in dec))
-                out["peak_amp"].append(max(abs(x) for x in dec))
-            yield pd.DataFrame(out)
+    def synth(d):
+        n = 12 + d % 28
+        payload = bytes((d * 13 + 7 * j) % 256 for j in range((n + 1) // 2))
+        dec = ima_adpcm_decode(payload, n)
+        yield (d, n, sum(dec), sum(x * x for x in dec),
+               max(abs(x) for x in dec))
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, n_samples long, sum_amp long, sumsq_amp long,"
         " peak_amp int",
     )
@@ -4151,10 +4109,8 @@ def multimodal_video_avi_q(spark, sf_dir):
     µs-per-frame (30/24/60 fps cycling), frame and stream counts, LIST
     census (3 + streams: hdrl, movi, strl×n).  Frame payloads stay the
     documented codec seam, as in every container row.  Arrow-batched
-    mapInPandas both ways; the oracle recomputes every field
+    row maps both ways; the oracle recomputes every field
     arithmetically."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import encode_avi_skeleton, parse_avi_metadata
 
     base = (
@@ -4163,34 +4119,20 @@ def multimodal_video_avi_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "fps_us": [],
-                   "total_frames": [], "n_streams": [], "n_lists": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blob = encode_avi_skeleton(
-                    width=160 + 16 * (d % 50),
-                    height=120 + 8 * (d % 40),
-                    fps_us=[33333, 41708, 16667][d % 3],
-                    total_frames=100 + d % 900,
-                    n_streams=1 + d % 2,
-                )
-                meta = parse_avi_metadata(blob)
-                if meta is None:
-                    continue
-                w, h, fps, frames, streams, n_lists, _n_strl = meta
-                out["doc_id"].append(d)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["fps_us"].append(fps)
-                out["total_frames"].append(frames)
-                out["n_streams"].append(streams)
-                out["n_lists"].append(n_lists)
-            yield pd.DataFrame(out)
+    def synth(d):
+        blob = encode_avi_skeleton(
+            width=160 + 16 * (d % 50),
+            height=120 + 8 * (d % 40),
+            fps_us=[33333, 41708, 16667][d % 3],
+            total_frames=100 + d % 900,
+            n_streams=1 + d % 2,
+        )
+        meta = parse_avi_metadata(blob)
+        if meta is not None:
+            yield d, *meta[:6]
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, width int, height int, fps_us long,"
         " total_frames long, n_streams int, n_lists int",
     )
@@ -4289,8 +4231,6 @@ def multimodal_audio_mp2_q(spark, sf_dir):
     deterministic stand-in for ISO Table 3-B.3 (llm/mp2.py module
     docstring); everything else is spec algebra.  Arrow-batched,
     map-only at any scale."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm.mp2 import (
         encode_mp2_frame,
         mp2_decode_stats,
@@ -4302,25 +4242,11 @@ def multimodal_audio_mp2_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "bitrate_kbps": [],
-                   "sample_rate_hz": [], "n_samples": [],
-                   "out_sum": [], "out_min": [], "out_max": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                dec = mp2_decode_stats(encode_mp2_frame(d))
-                out["doc_id"].append(d)
-                out["bitrate_kbps"].append(dec[0])
-                out["sample_rate_hz"].append(dec[1])
-                out["n_samples"].append(dec[2])
-                out["out_sum"].append(dec[3])
-                out["out_min"].append(dec[4])
-                out["out_max"].append(dec[5])
-            yield pd.DataFrame(out)
+    def synth(d):
+        yield d, *mp2_decode_stats(encode_mp2_frame(d))[:6]
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, bitrate_kbps int, sample_rate_hz int, "
         "n_samples bigint, out_sum bigint, out_min bigint, "
         "out_max bigint",
@@ -4765,8 +4691,6 @@ def multimodal_pdf_meta_q(spark, sf_dir):
     in closed form from the synthesis parameters.  Arrow-batched,
     map-only at any scale; text/raster payload decode stays the
     documented seam (the TIFF/PNG policy)."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm.multimodal import (
         encode_pdf_skeleton,
         parse_pdf_metadata,
@@ -4778,27 +4702,13 @@ def multimodal_pdf_meta_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_version": [], "n_objects": [],
-                   "n_pages": [], "size_entry": [], "xref_ok": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                meta = parse_pdf_metadata(
-                    encode_pdf_skeleton(
-                        1 + d % 5, version=f"1.{4 + d % 4}"
-                    )
-                )
-                out["doc_id"].append(d)
-                out["pdf_version"].append(meta[0])
-                out["n_objects"].append(meta[1])
-                out["n_pages"].append(meta[2])
-                out["size_entry"].append(meta[3])
-                out["xref_ok"].append(meta[4])
-            yield pd.DataFrame(out)
+    def synth(d):
+        yield d, *parse_pdf_metadata(
+            encode_pdf_skeleton(1 + d % 5, version=f"1.{4 + d % 4}")
+        )
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, pdf_version string, n_objects int, n_pages int, "
         "size_entry int, xref_ok int",
     )
@@ -4834,10 +4744,8 @@ def multimodal_audio_ogg_q(spark, sf_dir):
     header: channels, sample rate, page census, CRC-valid count (==
     n_pages proves the table), final granule → duration by integer
     floor division.  Audio packet payloads stay the documented codec
-    seam, the AVI/TIFF/PNG policy.  Arrow-batched mapInPandas both
+    seam, the AVI/TIFF/PNG policy.  Arrow-batched row maps both
     ways; the oracle recomputes every field arithmetically."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import encode_ogg_vorbis, parse_ogg_metadata
 
     base = (
@@ -4847,38 +4755,21 @@ def multimodal_audio_ogg_q(spark, sf_dir):
     )
     rates = [8000, 16000, 22050, 44100, 48000]
 
-    def synth(batches):
-        for pdf in batches:
-            out = {
-                "doc_id": [], "channels": [], "sample_rate": [],
-                "n_pages": [], "crc_valid_pages": [],
-                "total_samples": [], "duration_ms": [], "eos_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blob = encode_ogg_vorbis(
-                    channels=1 + d % 2,
-                    sample_rate=rates[d % 5],
-                    total_samples=1000 + (d % 100) * 441,
-                    n_data_pages=1 + d % 3,
-                    serial=1000 + d,
-                )
-                meta = parse_ogg_metadata(blob)
-                if meta is None:
-                    continue
-                ch, rate, n_pages, crc_ok, granule, _bos, eos, _ser = meta
-                out["doc_id"].append(d)
-                out["channels"].append(ch)
-                out["sample_rate"].append(rate)
-                out["n_pages"].append(n_pages)
-                out["crc_valid_pages"].append(crc_ok)
-                out["total_samples"].append(granule)
-                out["duration_ms"].append(granule * 1000 // rate)
-                out["eos_ok"].append(eos)
-            yield pd.DataFrame(out)
+    def synth(d):
+        blob = encode_ogg_vorbis(
+            channels=1 + d % 2,
+            sample_rate=rates[d % 5],
+            total_samples=1000 + (d % 100) * 441,
+            n_data_pages=1 + d % 3,
+            serial=1000 + d,
+        )
+        meta = parse_ogg_metadata(blob)
+        if meta is not None:
+            ch, rate, n_pages, crc_ok, granule, _bos, eos, _ser = meta
+            yield d, ch, rate, n_pages, crc_ok, granule, granule * 1000 // rate, eos
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, channels int, sample_rate long, n_pages int,"
         " crc_valid_pages int, total_samples long, duration_ms long,"
         " eos_ok int",
@@ -5015,9 +4906,7 @@ def multimodal_audio_id3_q(spark, sf_dir):
     the tag fields byte-exact, the frame census and duration from the
     frame walk that SKIPS the tag via its syncsafe size.  The oracle
     recomputes the tag size from string lengths and the duration by
-    integer floor division.  Arrow-batched mapInPandas."""
-    import pandas as pd  # noqa: F811
-
+    integer floor division.  Arrow-batched row map (io.flat_map)."""
     from apache_nifi_spark.llm import (
         encode_id3v2,
         encode_mp3_frames,
@@ -5032,45 +4921,28 @@ def multimodal_audio_id3_q(spark, sf_dir):
     )
     rates = [32000, 44100, 48000]
 
-    def synth(batches):
-        for pdf in batches:
-            out = {
-                "doc_id": [], "id3_version": [], "tag_size": [],
-                "n_tag_frames": [], "title": [], "artist": [],
-                "album": [], "track": [], "mp3_frames": [],
-                "duration_ms": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = rates[d % 3]
-                nf = 10 + d % 20
-                tag = encode_id3v2({
-                    "TIT2": f"Track {d}",
-                    "TPE1": f"Artist {d % 20}",
-                    "TALB": f"Album {d % 7}",
-                    "TRCK": str(1 + d % 16),
-                })
-                blob = tag + encode_mp3_frames(128, rate, 1 + d % 2, nf)
-                t = parse_id3v2(blob)
-                a = parse_mpeg_audio(blob)
-                if t is None or a is None:
-                    continue
-                major, size, n_frames, texts = t
-                _rate, _ch, _kbps, frames, dur = a
-                out["doc_id"].append(d)
-                out["id3_version"].append(major)
-                out["tag_size"].append(size)
-                out["n_tag_frames"].append(n_frames)
-                out["title"].append(texts.get("TIT2"))
-                out["artist"].append(texts.get("TPE1"))
-                out["album"].append(texts.get("TALB"))
-                out["track"].append(texts.get("TRCK"))
-                out["mp3_frames"].append(frames)
-                out["duration_ms"].append(dur)
-            yield pd.DataFrame(out)
+    def synth(d):
+        rate = rates[d % 3]
+        nf = 10 + d % 20
+        tag = encode_id3v2({
+            "TIT2": f"Track {d}",
+            "TPE1": f"Artist {d % 20}",
+            "TALB": f"Album {d % 7}",
+            "TRCK": str(1 + d % 16),
+        })
+        blob = tag + encode_mp3_frames(128, rate, 1 + d % 2, nf)
+        t = parse_id3v2(blob)
+        a = parse_mpeg_audio(blob)
+        if t is None or a is None:
+            return
+        major, size, n_frames, texts = t
+        _rate, _ch, _kbps, frames, dur = a
+        yield (d, major, size, n_frames,
+               *(texts.get(k) for k in ("TIT2", "TPE1", "TALB", "TRCK")),
+               frames, dur)
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, id3_version int, tag_size long, n_tag_frames int,"
         " title string, artist string, album string, track string,"
         " mp3_frames int, duration_ms long",
@@ -5584,10 +5456,8 @@ def multimodal_zstd_frame_q(spark, sf_dir):
     headers, checksum slot, optional skippable frames) and the parser
     walks them back out, bounds-checked so a torn frame returns None,
     never a phantom record.  Entropy payloads stay the documented
-    codec seam.  Arrow-batched mapInPandas; every field recomputed
+    codec seam.  Arrow-batched row map; every field recomputed
     arithmetically in the oracle."""
-    import pandas as pd  # noqa: F811
-
     from apache_nifi_spark.llm import (
         encode_zstd_skeleton,
         parse_zstd_metadata,
@@ -5599,41 +5469,23 @@ def multimodal_zstd_frame_q(spark, sf_dir):
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "n_skippable": [],
-                "window_size": [], "dict_id": [], "content_size": [],
-                "n_blocks": [], "checksum_flag": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blob = encode_zstd_skeleton(
-                    content_size=1000 + d % 9000,
-                    window_log=10 + d % 8,
-                    window_mantissa=d % 6,
-                    single_segment=d % 3 == 0,
-                    dict_id=(100 + d % 900) if d % 2 else 0,
-                    checksum=d % 5 == 0,
-                    n_blocks=1 + d % 3,
-                    skippable_size=(8 + d % 16) if d % 4 == 0 else 0,
-                )
-                m = parse_zstd_metadata(blob)
-                if m is None:
-                    continue
-                nf, ns, win, did, cs, nb, ck = m
-                out["doc_id"].append(d)
-                out["n_frames"].append(nf)
-                out["n_skippable"].append(ns)
-                out["window_size"].append(win)
-                out["dict_id"].append(did)
-                out["content_size"].append(cs)
-                out["n_blocks"].append(nb)
-                out["checksum_flag"].append(ck)
-            yield pd.DataFrame(out)
+    def synth(d):
+        blob = encode_zstd_skeleton(
+            content_size=1000 + d % 9000,
+            window_log=10 + d % 8,
+            window_mantissa=d % 6,
+            single_segment=d % 3 == 0,
+            dict_id=(100 + d % 900) if d % 2 else 0,
+            checksum=d % 5 == 0,
+            n_blocks=1 + d % 3,
+            skippable_size=(8 + d % 16) if d % 4 == 0 else 0,
+        )
+        m = parse_zstd_metadata(blob)
+        if m is not None:
+            yield d, *m
 
-    return base.mapInPandas(
-        synth,
+    return io.flat_map(
+        base, ["doc_id"], synth,
         "doc_id long, n_frames int, n_skippable int, window_size long,"
         " dict_id long, content_size long, n_blocks int,"
         " checksum_flag int",

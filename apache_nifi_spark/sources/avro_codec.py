@@ -23,7 +23,9 @@ no third-party dependencies:
 
 The per-value encode/decode is compiled once per schema into a closure
 tree (no per-value dispatch on schema dicts), which keeps the pure-Python
-path at ~1M values/sec/core.
+path at ~1M values/sec/core.  The Spark-facing processors (SplitAvro,
+ExtractAvroMetadata) are per-container generators run by
+:func:`apache_nifi_spark.io.flat_map`.
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "spark_to_avro_schema",
@@ -672,24 +676,16 @@ def split_avro_column(
     per record (same writer schema, null codec — the smallest standalone
     Avro file), exactly NiFi's one-FlowFile-per-datum fan-out.
 
-    mapInPandas over binary content: per-file state is one decode + N
+    Row-mapped over binary content: per-file state is one decode + N
     small re-encodes, fanned out across executors by the binaryFile
     scan's file-per-task split."""
 
-    def split(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
+    def split(blob):
+        schema, rows = decode_container(blob)
+        for r in rows:
+            yield (b"".join(encode_container(iter([r]), schema, codec="null")),)
 
-        for pdf in batches:
-            out: list[bytes] = []
-            for blob in pdf[content_col]:
-                schema, rows = decode_container(bytes(blob))
-                for r in rows:
-                    out.append(
-                        b"".join(encode_container(iter([r]), schema, codec="null"))
-                    )
-            yield pd.DataFrame({out_col: out})
-
-    return df.mapInPandas(split, f"{out_col} binary")
+    return flat_map(df, [content_col], split, f"{out_col} binary")
 
 
 # ---------------------------------------------------------------------------
@@ -932,34 +928,24 @@ def extract_avro_metadata(df: DataFrame, content_col: str = "content") -> DataFr
     codec, and the datum count (decoded block headers, not a full datum
     decode)."""
 
-    def run(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
+    def row(data):
+        schema, codec, sync, pos = read_header(data)
+        fp = rabin_fingerprint(canonical_form(schema).encode())
+        r = _Reader(data)
+        r.pos = pos
+        count = 0
+        while r.pos < len(data):
+            n = r.read_long()
+            size = r.read_long()
+            r.read_fixed(size)
+            r.read_fixed(16)
+            count += n
+        yield schema.get("name", "?"), f"{fp:016x}", codec, count
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf[content_col]:
-                data = bytes(blob)
-                schema, codec, sync, pos = read_header(data)
-                fp = rabin_fingerprint(canonical_form(schema).encode())
-                r = _Reader(data)
-                r.pos = pos
-                count = 0
-                while r.pos < len(data):
-                    n = r.read_long()
-                    size = r.read_long()
-                    r.read_fixed(size)
-                    r.read_fixed(16)
-                    count += n
-                rows.append(
-                    (schema.get("name", "?"), f"{fp:016x}", codec, count)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["schema_name", "schema_fingerprint", "codec", "n_records"],
-            )
-
-    return df.mapInPandas(
-        run,
+    return flat_map(
+        df,
+        [content_col],
+        row,
         "schema_name string, schema_fingerprint string, codec string,"
         " n_records bigint",
     )

@@ -11,7 +11,7 @@ sequences a log-shipping format).
 
 Executor topology: write = ``mapInPandas``
 (one open file per partition, driver sees only a manifest row per
-partition); read = ``binaryFile`` scan + ``mapInPandas`` decode (N
+partition); read = ``binaryFile`` scan + ``io.flat_map`` decode (N
 files decode on N cores).
 
 Supported types: null, bool, int (majors 0/1 with minimal-width
@@ -35,6 +35,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "cbor_encode",
@@ -240,16 +242,9 @@ def read_cbor(
     keys dropped — the reader-service contract)."""
     names = [f.name for f in schema.fields]
 
-    def decode_files(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = [
-                    tuple(rec.get(c) for c in names)
-                    for rec in cbor_decode_sequence(bytes(content))
-                ]
-                yield pd.DataFrame(rows, columns=names)
+    def decode_file(content):
+        for rec in cbor_decode_sequence(content):
+            yield tuple(rec.get(c) for c in names)
 
     files = (
         spark.read.format("binaryFile")
@@ -257,4 +252,4 @@ def read_cbor(
         .load(path)
         .select("content")
     )
-    return files.mapInPandas(decode_files, schema=schema)
+    return flat_map(files, ["content"], decode_file, schema)

@@ -4,8 +4,9 @@
 them back with the stdlib ``email`` package (a real, spec-complete MIME
 parser — no re-implementation to drift).
 
-Spark shape: ``mapInPandas`` over the message bytes (Arrow batches, the
-sanctioned seam for byte-imperative formats); attachments EXPLODE to
+Spark shape: a per-message generator run by :func:`io.flat_map` over
+the message bytes (Arrow batches, the sanctioned seam for
+byte-imperative formats); attachments EXPLODE to
 one row per part, mirroring how the NiFi processor fans one FlowFile
 per attachment.  Both fan out across executors; per-message state is
 bounded by the message itself.
@@ -16,10 +17,10 @@ from __future__ import annotations
 from datetime import timezone
 from email import message_from_bytes
 from email.utils import parsedate_to_datetime
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = ["parse_email_headers", "extract_email_attachments"]
 
@@ -39,63 +40,38 @@ def parse_email_headers(
     the SAME pass so the SMTP read-back needs no second content scan
     or self-join."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "from_addr": [], "to_addr": [], "subject": [],
-                "date_ts": [], "body_text": [], "n_attachments": [],
-            }
-            if envelope:
-                out["env_from"], out["env_to"] = [], []
-            if id_col is not None:
-                out[id_col] = list(pdf[id_col])
-            for raw in pdf[content_col]:
-                msg = message_from_bytes(
-                    raw if isinstance(raw, bytes) else str(raw).encode()
-                )
-                out["from_addr"].append(msg.get("From"))
-                out["to_addr"].append(msg.get("To"))
-                out["subject"].append(msg.get("Subject"))
-                if envelope:
-                    out["env_from"].append(msg.get("X-Envelope-From"))
-                    out["env_to"].append(msg.get("X-Envelope-To"))
-                d = msg.get("Date")
-                ts = None
-                if d:
-                    dt = parsedate_to_datetime(d)
-                    # Pin to UTC explicitly: astimezone(None) would use the
-                    # HOST timezone (Python workers ignore the Spark session
-                    # tz), diverging from the UTC-fixed renderer and oracles.
-                    ts = (
-                        dt.astimezone(timezone.utc).replace(tzinfo=None)
-                        if dt.tzinfo
-                        else dt
-                    )
-                out["date_ts"].append(ts)
-                body, n_att = None, 0
-                if msg.is_multipart():
-                    for part in msg.walk():
-                        if part.get_content_maintype() == "multipart":
-                            continue
-                        if part.get_filename():
-                            n_att += 1
-                        elif body is None and part.get_content_type() == "text/plain":
-                            body = part.get_payload(decode=True)
-                else:
-                    body = msg.get_payload(decode=True)
-                out["body_text"].append(
-                    body.decode("utf-8", "replace") if body is not None else None
-                )
-                out["n_attachments"].append(n_att)
-            cols = ([id_col] if id_col is not None else []) + [
-                "from_addr", "to_addr", "subject", "date_ts", "body_text",
-                "n_attachments",
-            ] + (["env_from", "env_to"] if envelope else [])
-            yield pd.DataFrame({c: out[c] for c in cols})
+    def parse(*vals):
+        *key, raw = vals
+        msg = message_from_bytes(raw if isinstance(raw, bytes) else str(raw).encode())
+        d = msg.get("Date")
+        ts = None
+        if d:
+            dt = parsedate_to_datetime(d)
+            # Pin to UTC explicitly: astimezone(None) would use the
+            # HOST timezone (Python workers ignore the Spark session
+            # tz), diverging from the UTC-fixed renderer and oracles.
+            ts = dt.astimezone(timezone.utc).replace(tzinfo=None) if dt.tzinfo else dt
+        body, n_att = None, 0
+        if msg.is_multipart():
+            for part in msg.walk():
+                if part.get_content_maintype() == "multipart":
+                    continue
+                if part.get_filename():
+                    n_att += 1
+                elif body is None and part.get_content_type() == "text/plain":
+                    body = part.get_payload(decode=True)
+        else:
+            body = msg.get_payload(decode=True)
+        text = body.decode("utf-8", "replace") if body is not None else None
+        env = (msg.get("X-Envelope-From"), msg.get("X-Envelope-To")) if envelope else ()
+        yield (*key, msg.get("From"), msg.get("To"), msg.get("Subject"), ts,
+               text, n_att, *env)
 
     prefix = f"{id_col} bigint, " if id_col is not None else ""
     suffix = ", env_from string, env_to string" if envelope else ""
-    return df.mapInPandas(
+    return flat_map(
+        df,
+        ([id_col] if id_col is not None else []) + [content_col],
         parse,
         prefix
         + "from_addr string, to_addr string, subject string,"
@@ -111,27 +87,16 @@ def extract_email_attachments(
     (id, filename, mime_type, payload) — decoded from its transfer
     encoding, exactly the per-attachment FlowFile fan-out."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, types, payloads = [], [], [], []
-            for mid, raw in zip(pdf[id_col], pdf[content_col]):
-                msg = message_from_bytes(
-                    raw if isinstance(raw, bytes) else str(raw).encode()
-                )
-                for part in msg.walk():
-                    fname = part.get_filename()
-                    if not fname:
-                        continue
-                    ids.append(mid)
-                    names.append(fname)
-                    types.append(part.get_content_type())
-                    payloads.append(part.get_payload(decode=True))
-            yield pd.DataFrame(
-                {id_col: ids, "filename": names, "mime_type": types,
-                 "payload": payloads}
-            )
+    def parse(mid, raw):
+        msg = message_from_bytes(raw if isinstance(raw, bytes) else str(raw).encode())
+        for part in msg.walk():
+            fname = part.get_filename()
+            if fname:
+                yield mid, fname, part.get_content_type(), part.get_payload(decode=True)
 
-    return df.mapInPandas(
+    return flat_map(
+        df,
+        [id_col, content_col],
         parse,
         f"{id_col} bigint, filename string, mime_type string, payload binary",
     )

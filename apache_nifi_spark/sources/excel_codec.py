@@ -15,8 +15,8 @@ and inline strings, and uses the ``r`` cell references so skipped
 
 Spark shape: serialization is per-GROUP ``applyInPandas`` (one workbook
 per group — archives are byte-imperative, the pack_content_zip seam);
-parsing is ``mapInPandas`` over binary content (Arrow batches, one
-Python pass per file).  Both fan out across executors; at scale one
+parsing is a per-file generator run by ``io.flat_map`` over binary
+content (Arrow batches, one Python pass per file).  Both fan out across executors; at scale one
 workbook is one task — the right granularity for a format whose files
 are small by construction.
 
@@ -31,10 +31,11 @@ import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import flat_map
 
 __all__ = [
     "xlsx_bytes",
@@ -225,15 +226,10 @@ def records_to_excel(
 
 
 def excel_to_records(df: DataFrame, content_col: str, schema: str) -> DataFrame:
-    """Parse workbook binaries back to records (mapInPandas over Arrow
+    """Parse workbook binaries back to records (row-mapped over Arrow
     batches).  ``schema`` is the output DDL; header order must match."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[list] = []
-            for blob in pdf[content_col]:
-                headers, rows = parse_xlsx(bytes(blob))
-                out.extend(rows)
-            yield pd.DataFrame(out, columns=headers if out else None)
+    def parse(blob):
+        return parse_xlsx(blob)[1]
 
-    return df.mapInPandas(parse, schema)
+    return flat_map(df, [content_col], parse, schema)

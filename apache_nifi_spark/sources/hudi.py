@@ -39,6 +39,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.io import flat_map
 from apache_nifi_spark.sources.formats import write_single_part
 
 __all__ = [
@@ -511,13 +512,11 @@ def read_hudi_mor_snapshot(
     with the later payload, the spec's ordered-merge semantics).
 
     Spark-first: log files ship as ``binaryFile`` rows and their
-    blocks decode EXECUTOR-side (mapInPandas over Arrow batches — the
+    blocks decode EXECUTOR-side (row-mapped over Arrow batches — the
     delta payloads are data, never driver state); the merge itself is
     one ``max_by(struct, instant)`` per key.  Read-optimized reads
     (base only) are :func:`read_hudi_snapshot` — this function is the
     real-time view."""
-    import pandas as pd
-
     base = read_hudi_snapshot(spark, table_path, as_of, with_meta=True)
     data_cols = [
         c for c in base.columns
@@ -542,43 +541,20 @@ def read_hudi_mor_snapshot(
         + ", ".join(f"{c} string" for c in data_cols)
     )
 
-    def decode(batches):
-        for pdf in batches:
-            rows = {
-                "instant": [], "record_key": [], "is_delete": [],
-                **{c: [] for c in data_cols},
-            }
-            for path in pdf["log_path"]:
-                with open(path, "rb") as fh:
-                    blob = fh.read()
-                for instant, kind, sch, recs in hudi_parse_log_blocks(
-                    blob
-                ):
-                    names = [f["name"] for f in sch["fields"]]
-                    for rec in recs:
-                        d = dict(zip(names, rec))
-                        rows["instant"].append(instant)
-                        if kind == "delete":
-                            rows["record_key"].append(
-                                str(d["record_key"])
-                            )
-                            rows["is_delete"].append(True)
-                            for c in data_cols:
-                                rows[c].append(None)
-                        else:
-                            rows["record_key"].append(
-                                str(d[key_col])
-                                if key_col in d
-                                else str(d[data_cols[0]])
-                            )
-                            rows["is_delete"].append(False)
-                            for c in data_cols:
-                                rows[c].append(
-                                    None if d.get(c) is None
-                                    else str(d[c])
-                                )
-                    del kind
-            yield pd.DataFrame(rows)
+    def decode(path):
+        with open(path, "rb") as fh:
+            blob = fh.read()
+        for instant, kind, sch, recs in hudi_parse_log_blocks(blob):
+            names = [f["name"] for f in sch["fields"]]
+            for rec in recs:
+                d = dict(zip(names, rec))
+                if kind == "delete":
+                    yield (instant, str(d["record_key"]), True,
+                           *[None] * len(data_cols))
+                else:
+                    key = d[key_col] if key_col in d else d[data_cols[0]]
+                    yield (instant, str(key), False,
+                           *[None if d.get(c) is None else str(d[c]) for c in data_cols])
 
     # the spec's dot-prefixed log names are HIDDEN files to Hadoop's
     # path filter (binaryFile silently lists zero of them), so the
@@ -588,12 +564,11 @@ def read_hudi_mor_snapshot(
     base_types = {
         f.name: f.dataType.simpleString() for f in base.schema.fields
     }
+    paths = spark.createDataFrame(
+        [(p,) for p in log_paths], "log_path string"
+    ).repartition(min(len(log_paths), 32))
     logs = (
-        spark.createDataFrame(
-            [(p,) for p in log_paths], "log_path string"
-        )
-        .repartition(min(len(log_paths), 32))
-        .mapInPandas(decode, schema)
+        flat_map(paths, ["log_path"], decode, schema)
         # log records decode as strings; cast to the BASE schema so the
         # merge (and any compaction slice written from it) preserves
         # the table's types

@@ -42,6 +42,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.io import flat_map
+
 from apache_nifi_spark.sources.avro_codec import (
     decode_container,
     encode_container,
@@ -811,7 +813,7 @@ def _active_file_rows(
     """Active-file manifest rows as a driver-side list (r16
     optimization): every internal consumer of
     :func:`iceberg_active_files` immediately ``collect()``s the result
-    — a distributed binaryFile + mapInPandas job per content class per
+    — a distributed binaryFile + row-decode job per content class per
     snapshot read, ~0.3-1 s each, for kilobyte-scale metadata.  Below
     ``_LOCAL_MANIFEST_BYTES`` of local manifest bytes this decodes on
     the driver with ZERO jobs; above it (or for non-local paths) it
@@ -908,29 +910,15 @@ def _active_files_distributed(
     # manifest path regardless of scheme
     cur_spec_names = {os.path.basename(p) for p in current_spec_paths}
 
-    def dec(batches):
-        import pandas as pd
+    def dec(mpath, blob):
+        _schema, rows = decode_container(blob)
+        prunable = os.path.basename(mpath) in cur_spec_names
+        for status, _sid, data_file in rows:
+            row = _entry_row(data_file, status, content, partition, prunable)
+            if row is not None:
+                yield tuple(row.values())  # _ACTIVE_FILES_DDL order
 
-        for pdf in batches:
-            rows_out: list[dict] = []
-            for mpath, blob in zip(pdf["path"], pdf["content"]):
-                _schema, rows = decode_container(bytes(blob))
-                prunable = os.path.basename(str(mpath)) in cur_spec_names
-                for status, _sid, data_file in rows:
-                    row = _entry_row(
-                        data_file, status, content, partition, prunable
-                    )
-                    if row is not None:
-                        rows_out.append(row)
-            yield pd.DataFrame(
-                rows_out,
-                columns=[
-                    "file_path", "partition", "record_count",
-                    "file_size_in_bytes", "sequence_number",
-                ],
-            )
-
-    return blobs.mapInPandas(dec, _ACTIVE_FILES_DDL)
+    return flat_map(blobs, ["path", "content"], dec, _ACTIVE_FILES_DDL)
 
 
 def read_iceberg_snapshot(

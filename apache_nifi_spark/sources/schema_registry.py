@@ -15,11 +15,11 @@ Everything from the PUBLIC formats:
   ``GET /subjects/{subject}/versions/latest`` returns id + schema.
 
 Spark-first shape: registration is one driver-side control-plane HTTP
-call; encoding is Arrow-batched ``mapInPandas`` with the compiled
-encoder closure (zero per-row Python dispatch into the schema walk);
-decoding fetches the WRITER schema by each frame's embedded id over
-HTTP once per executor (cached), resolves it against the reader schema
-with the full Avro schema-resolution rules
+call; encoding is a per-row generator (:func:`io.flat_map`, Arrow
+batches) with the compiled encoder closure (zero per-row Python
+dispatch into the schema walk); decoding fetches the WRITER schema by
+each frame's embedded id over HTTP once per task (cached), resolves it
+against the reader schema with the full Avro schema-resolution rules
 (``avro_codec.resolve_decoder``), so old-schema frames decode under the
 evolved subject exactly as the spec prescribes.
 """
@@ -31,15 +31,14 @@ import io as _io
 import json
 import struct
 import threading
-from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import flat_map
 from apache_nifi_spark.sources.avro_codec import (
     _compile_encoder,
-    _pdf_rows,
     _Reader,
     avro_to_spark_schema,
     canonical_form,
@@ -186,26 +185,25 @@ def encode_confluent(
     schema (minus ``id_col``) registers ONCE driver-side (control-plane
     HTTP), executors write ``0x00 + int32 id + avro binary`` per row.
     Returns (id_col, content binary)."""
-    import pandas as pd
-
     value_schema = df.drop(id_col).schema
     avro_schema = spark_to_avro_schema(value_schema)
     sid = register_schema(registry_url, subject, avro_schema)
     header = struct.pack(">bI", _MAGIC, sid)
-    field_names = [f.name for f in value_schema.fields]
+    # compiled once per task, on the executor: the encoder closes over
+    # struct.Struct objects, which do not pickle
+    encoder: list = []
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        enc = _compile_encoder(avro_schema)
-        for pdf in batches:
-            frames = []
-            for row in _pdf_rows(pdf[field_names], value_schema):
-                buf = _io.BytesIO()
-                buf.write(header)
-                enc(buf, row)
-                frames.append(buf.getvalue())
-            yield pd.DataFrame({id_col: pdf[id_col], "content": frames})
+    def encode(rid, *row):
+        if not encoder:
+            encoder.append(_compile_encoder(avro_schema))
+        buf = _io.BytesIO()
+        buf.write(header)
+        encoder[0](buf, row)
+        yield rid, buf.getvalue()
 
-    return df.mapInPandas(encode, f"{id_col} long, content binary")
+    return flat_map(
+        df, [id_col, *value_schema.fieldNames()], encode, f"{id_col} long, content binary"
+    )
 
 
 def decode_confluent(
@@ -219,10 +217,8 @@ def decode_confluent(
     schema (the reader), resolving each frame's embedded WRITER id
     through the registry with full Avro schema resolution — evolved
     subjects decode old frames exactly as the spec prescribes.  The
-    writer-schema fetch is one HTTP GET per (executor, schema id),
+    writer-schema fetch is one HTTP GET per (task, schema id),
     cached."""
-    import pandas as pd
-
     latest = _http_json(
         registry_url, f"/subjects/{subject}/versions/latest"
     )
@@ -233,34 +229,21 @@ def decode_confluent(
         f"{f.name} {f.dataType.simpleString()}" for f in spark_type.fields
     )
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        decoders: dict[int, Any] = {}
-        for pdf in batches:
-            rows = []
-            ids = []
-            for rid, blob in zip(pdf[id_col], pdf[content_col]):
-                data = bytes(blob)
-                if not data or data[0] != _MAGIC:
-                    raise ValueError("bad Confluent magic byte")
-                (sid,) = struct.unpack(">I", data[1:5])
-                dec = decoders.get(sid)
-                if dec is None:
-                    if sid == reader_sid:
-                        writer = reader_schema
-                    else:
-                        writer = json.loads(
-                            _http_json(
-                                registry_url, f"/schemas/ids/{sid}"
-                            )["schema"]
-                        )
-                    dec = resolve_decoder(writer, reader_schema)
-                    decoders[sid] = dec
-                r = _Reader(data[5:])
-                rows.append(dec(r))
-                ids.append(rid)
-            cols = {id_col: ids}
-            for i, f in enumerate(spark_type.fields):
-                cols[f.name] = [row[i] for row in rows]
-            yield pd.DataFrame(cols)
+    decoders: dict[int, Any] = {}  # writer schema id → resolving decoder
 
-    return df.mapInPandas(decode, f"{id_col} long, {out_fields}")
+    def decode(rid, data):
+        if not data or data[0] != _MAGIC:
+            raise ValueError("bad Confluent magic byte")
+        (sid,) = struct.unpack(">I", data[1:5])
+        dec = decoders.get(sid)
+        if dec is None:
+            if sid == reader_sid:
+                writer = reader_schema
+            else:
+                writer = json.loads(
+                    _http_json(registry_url, f"/schemas/ids/{sid}")["schema"]
+                )
+            dec = decoders[sid] = resolve_decoder(writer, reader_schema)
+        yield rid, *dec(_Reader(data[5:]))
+
+    return flat_map(df, [id_col, content_col], decode, f"{id_col} long, {out_fields}")

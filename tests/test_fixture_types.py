@@ -64,7 +64,7 @@ def test_stream_events_adapts_to_physical_ts_type(spark, tmp_path, unit):
 
 def test_real_fixture_loads_and_ts_is_ntz(spark, sf_dir):
     """The driver's actual fixture must load whatever its physical type is."""
-    anio._TABLE_CACHE.clear()
+    anio._scan_table.cache_clear()
     df = anio.load_table(spark, sf_dir, "events")
     assert dict(df.dtypes)["ts"] == "timestamp_ntz"
     assert df.limit(1).count() == 1

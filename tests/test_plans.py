@@ -5,6 +5,7 @@ cluster."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
@@ -17,6 +18,28 @@ from apache_nifi_spark.plans import (
     pushed_filters,
 )
 from apache_nifi_spark.registry import QUERIES
+
+#: Queries the registry sweeps never build: they execute side effects
+#: (writes/UDF pipelines) at plan-build time.  Streaming drains
+#: (``stream_*``) are excluded by name as well.
+PLAN_BUILD_SKIP = {
+    "bucketed_colocated_join", "put_file_partitioned",
+    "compress_content_gzip", "unpack_content_zip", "convert_record_csv",
+    "convert_record_json", "source_binary_file",
+    "multimodal_image_features", "dedup_minhash_lsh",
+}
+
+
+@pytest.fixture(scope="module")
+def registry_frames(spark, sf_dir):
+    """Every batch query built once, shared by the three registry sweeps
+    (cartesian, codegen, output column types) in place of one
+    construction pass each."""
+    return {
+        name: fn(spark, sf_dir)
+        for name, fn in QUERIES.items()
+        if not name.startswith("stream_") and name not in PLAN_BUILD_SKIP
+    }
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
@@ -126,7 +149,7 @@ def test_no_driver_side_collect_in_library_source():
     assert not offenders, f"driver-side row transfer in library code: {offenders}"
 
 
-def test_no_accidental_cartesian_products(spark, sf_dir):
+def test_no_accidental_cartesian_products(registry_frames):
     """Sweep every batch query's physical plan: no CartesianProduct
     anywhere; BroadcastNestedLoop only for genuinely non-equi joins
     (range/theta/TTL/scoring).  Guards the 100 TB rule that every join is
@@ -135,12 +158,7 @@ def test_no_accidental_cartesian_products(spark, sf_dir):
 
     # excluded: streaming drains and queries that execute side effects
     # (writes/UDF pipelines) at plan-build time
-    skip = {
-        "bucketed_colocated_join", "put_file_partitioned",
-        "compress_content_gzip", "unpack_content_zip", "convert_record_csv",
-        "convert_record_json", "source_binary_file",
-        "multimodal_image_features", "dedup_minhash_lsh",
-    }
+    skip = PLAN_BUILD_SKIP
     bnlj_ok = {
         # Kendall tau-b: non-equi self-join over the <=550-row value
         # GRID (50 quantities x 11 discounts), both sides bounded by
@@ -276,16 +294,16 @@ def test_no_accidental_cartesian_products(spark, sf_dir):
         # keyless by nature, bounded by construction
         "hypertable_lttb_downsample",
     }
-    for name, fn in QUERIES.items():
+    for name, df in registry_frames.items():
         if name.startswith("stream_") or name in skip:
             continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
         if "BroadcastNestedLoop" in plan:
             assert name in bnlj_ok, f"{name} unexpectedly uses BroadcastNestedLoopJoin"
 
 
-def test_jvm_queries_keep_wholestage_codegen(spark, sf_dir):
+def test_jvm_queries_keep_wholestage_codegen(registry_frames):
     """Codegen regression guard (round-6 verdict #8): every batch query
     that executes purely JVM-side must retain at least one
     WholeStageCodegen span after execution.  This is the tripwire for
@@ -297,11 +315,7 @@ def test_jvm_queries_keep_wholestage_codegen(spark, sf_dir):
     queries."""
     from apache_nifi_spark.plans import count_codegen_spans
 
-    skip = {
-        "bucketed_colocated_join", "put_file_partitioned",
-        "compress_content_gzip", "unpack_content_zip", "convert_record_csv",
-        "convert_record_json", "source_binary_file",
-        "multimodal_image_features", "dedup_minhash_lsh",
+    skip = PLAN_BUILD_SKIP | {
         # file-bus consumer: plan is a bare landed-file scan whose work
         # happened at publish time — nothing left to codegen
         "publish_consume_kafka_bus",
@@ -316,10 +330,9 @@ def test_jvm_queries_keep_wholestage_codegen(spark, sf_dir):
         "FlatMapGroupsInPandas", "MapInArrow", "PythonUDTF", "EvalPython",
     )
     offenders = []
-    for name, fn in QUERIES.items():
+    for name, df in registry_frames.items():
         if name.startswith("stream_") or name in skip:
             continue
-        df = fn(spark, sf_dir)
         df.collect()  # finalize the adaptive plan
         plan = df._jdf.queryExecution().executedPlan().toString()
         if any(p in plan for p in py_nodes):
@@ -547,7 +560,7 @@ def test_no_broadcast_hint_on_corpus_cardinality_frames():
     )
 
 
-def test_oracled_outputs_expose_no_array_map_struct_columns(spark, sf_dir):
+def test_oracled_outputs_expose_no_array_map_struct_columns(registry_frames):
     """Driver-contract gate (round-12 verdict item 1): the driver's
     correctness harness canonicalizes results with pandas
     ``sort_values`` over every column, and list/dict cells are
@@ -559,20 +572,15 @@ def test_oracled_outputs_expose_no_array_map_struct_columns(spark, sf_dir):
     pipelines keep the plan-build skip set of the cartesian sweep."""
     from pyspark.sql import types as T
 
-    from apache_nifi_spark.registry import ORACLES, QUERIES
+    from apache_nifi_spark.registry import ORACLES
 
-    skip = {
-        "bucketed_colocated_join", "put_file_partitioned",
-        "compress_content_gzip", "unpack_content_zip", "convert_record_csv",
-        "convert_record_json", "source_binary_file",
-        "multimodal_image_features", "dedup_minhash_lsh",
-    }
+    skip = PLAN_BUILD_SKIP
     bad = (T.ArrayType, T.MapType, T.StructType)
     offenders = []
     for name in ORACLES:
         if name.startswith("stream_") or name in skip:
             continue
-        for f in QUERIES[name](spark, sf_dir).schema.fields:
+        for f in registry_frames[name].schema.fields:
             if isinstance(f.dataType, bad):
                 offenders.append(
                     f"{name}.{f.name}: {f.dataType.simpleString()}"
