@@ -13,21 +13,19 @@ non-matching markup byte-for-byte (the parser walks offsets, it never
 re-serializes untouched regions).
 
 Spark shape: a per-row generator over the content column
-(:func:`io.flat_map` for the extract, ``mapInPandas`` for the in-place
-rewrite) — the sanctioned Python seam for a byte-imperative format;
-per-row state is one parse.
+(:func:`io.flat_map` for the extract, :func:`io.with_columns` for the
+in-place rewrite) — the sanctioned Python seams for a byte-imperative
+format; per-row state is one parse.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.io import flat_map
+from apache_nifi_spark.io import flat_map, with_columns
 
 __all__ = ["match_selector", "extract_html_elements", "modify_html_elements"]
 
@@ -202,9 +200,8 @@ def modify_html_elements(
         out.append(doc[pos:])
         return "".join(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[content_col] = [rewrite(d or "") for d in pdf[content_col]]
-            yield pdf
+    def run(batches):
+        for (docs,) in batches:
+            yield [rewrite(d or "") for d in docs],
 
-    return df.mapInPandas(run, df.schema)
+    return with_columns(df, [content_col], run, f"`{content_col}` string")

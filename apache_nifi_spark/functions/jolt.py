@@ -24,8 +24,8 @@ Two execution tiers, chosen automatically:
    (``to_json`` omits nulls), exactly Jolt's shift semantics.  Map-only,
    JVM-side, one JSON parse per row.
 2. **Interpreter** (fallback): wildcard/back-reference specs run the
-   pure-Python reference interpreter in ``mapInPandas`` (Arrow batches,
-   one ``json.loads``/``dumps`` per row) — the same interpreter the
+   pure-Python reference interpreter under ``io.with_columns`` (Arrow
+   batches, one ``json.loads``/``dumps`` per row) — the same interpreter the
    tests use as the differential reference for tier 1.
 
 Scale: both tiers are map-only over the scan; tier 1 rides whole-stage
@@ -124,7 +124,7 @@ def _remove(data: dict, spec: dict) -> None:
 
 
 def jolt_reference(doc: Any, operations: list[dict]) -> Any:
-    """Pure-Python Jolt-subset interpreter (also the mapInPandas
+    """Pure-Python Jolt-subset interpreter (also the io.with_columns
     fallback body)."""
     _validate_chain(operations)
     for op in operations:
@@ -307,14 +307,12 @@ def jolt_transform_json(
     if col is not None:
         return df.withColumn(content_col, col)
 
-    from collections.abc import Iterator
+    from apache_nifi_spark.io import with_columns
 
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for (raws,) in batches:
             outs = []
-            for raw in pdf[content_col]:
+            for raw in raws:
                 try:
                     doc = json.loads(raw) if raw is not None else None
                 except (TypeError, ValueError):
@@ -327,7 +325,6 @@ def jolt_transform_json(
                         jolt_reference(doc, operations), separators=(",", ":")
                     )
                 )
-            pdf[content_col] = outs
-            yield pdf
+            yield outs,
 
-    return df.mapInPandas(run, df.schema)
+    return with_columns(df, [content_col], run, f"`{content_col}` string")

@@ -16,8 +16,8 @@ facets/restrictions, imports) raise at compile time with a diagnostic
 rather than silently passing documents.
 
 The XSD compiles ONCE (driver-side, stdlib ElementTree) into a spec
-tree; validation runs in ``mapInPandas`` with a REAL XML parser deciding
-well-formedness.  Error labels, in deterministic walk order:
+tree; validation runs in ``io.with_columns`` with a REAL XML parser
+deciding well-formedness.  Error labels, in deterministic walk order:
 ``malformed``, ``root:<tag>``, ``occurs:<elem>``, ``unexpected:<tag>``,
 ``type:<elem>``.
 
@@ -228,8 +228,8 @@ def validate_xml_xsd(df, xsd_text: str, content_col: str = "content"):
     Scale shape: when the schema is a flat sequence of simple types (the
     record-validation norm), one compiled valid-document regex PROVES
     validity in the JVM scan stage (`_valid_plain_rx`, codegen'd rlike)
-    and rides into the mapInPandas pass as a flag — proven rows skip
-    the parse entirely, so Python cost shrinks to the failure fraction
+    and rides into the ``io.with_columns`` pass as a flag — proven rows
+    skip the parse entirely, so Python cost shrinks to the failure fraction
     while the plan keeps ONE scan and ONE Python stage.  Documents the
     regex cannot bless — invalid ones, and valid ones using the wider
     XML surface — are parsed for their exact verdict/label, so the
@@ -239,72 +239,36 @@ def validate_xml_xsd(df, xsd_text: str, content_col: str = "content"):
     evaluate interpreted — no codegen — and lose to C-speed
     ElementTree) and a two-branch union split (double source scan +
     double regex pass cost more than they save)."""
-    from collections.abc import Iterator
+    from pyspark.sql import functions as F
 
-    import pandas as pd
+    from apache_nifi_spark.io import with_columns
 
     spec = xsd_compile(xsd_text)  # compile once, driver-side; fail fast
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            valid, errs = [], []
-            for doc in pdf[content_col]:
-                try:
-                    root = ET.fromstring(doc if doc is not None else "")
-                except ET.ParseError:
-                    err = "malformed"
-                else:
-                    if _local(root.tag) != spec.name:
-                        err = f"root:{_local(root.tag)}"
-                    else:
-                        err = _check(root, spec)
-                valid.append(err is None)
-                errs.append(err)
-            pdf["valid"] = valid
-            pdf["validation_error"] = errs
-            yield pdf
+    def verdict(doc) -> str | None:
+        try:
+            root = ET.fromstring(doc if doc is not None else "")
+        except ET.ParseError:
+            return "malformed"
+        if _local(root.tag) != spec.name:
+            return f"root:{_local(root.tag)}"
+        return _check(root, spec)
 
-    from pyspark.sql.types import BooleanType, StringType, StructType
-
-    schema = (
-        StructType(list(df.schema.fields))
-        .add("valid", BooleanType())
-        .add("validation_error", StringType())
-    )
+    def run(batches):
+        for docs, proven in batches:
+            # JVM-proven valid rows need no parse
+            errs = [None if ok else verdict(doc) for doc, ok in zip(docs, proven)]
+            yield [e is None for e in errs], errs
 
     valid_rx = _valid_plain_rx(spec, _flat_children(spec))
-    if valid_rx is None:  # out of fast-path shape: parser path throughout
-        return df.mapInPandas(run, schema)
-
-    from pyspark.sql import functions as F
-
-    proven = F.coalesce(F.col(content_col).rlike(valid_rx), F.lit(False))
-
-    def run_flagged(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flags = pdf["__xsd_proven"].to_numpy()
-            pdf = pdf.drop(columns=["__xsd_proven"])
-            valid, errs = [], []
-            for doc, ok in zip(pdf[content_col], flags):
-                if ok:  # JVM-proven valid: no parse needed
-                    valid.append(True)
-                    errs.append(None)
-                    continue
-                try:
-                    root = ET.fromstring(doc if doc is not None else "")
-                except ET.ParseError:
-                    err = "malformed"
-                else:
-                    if _local(root.tag) != spec.name:
-                        err = f"root:{_local(root.tag)}"
-                    else:
-                        err = _check(root, spec)
-                valid.append(err is None)
-                errs.append(err)
-            pdf["valid"] = valid
-            pdf["validation_error"] = errs
-            yield pdf
-
-    return df.select("*", proven.alias("__xsd_proven")).mapInPandas(
-        run_flagged, schema
+    proven = (
+        F.lit(False)  # out of fast-path shape: parser path throughout
+        if valid_rx is None
+        else F.coalesce(F.col(content_col).rlike(valid_rx), F.lit(False))
     )
+    return with_columns(
+        df.select("*", proven.alias("__xsd_proven")),
+        [content_col, "__xsd_proven"],
+        run,
+        "valid boolean, validation_error string",
+    ).drop("__xsd_proven")

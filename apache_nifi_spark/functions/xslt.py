@@ -26,7 +26,7 @@ out of scope (documented)
 ``xslt_compile(xsl_source)`` returns an ``Element -> Element`` callable
 — exactly the ``transformer`` that ``operators.transform_xml`` maps over
 Arrow batches, so a NiFi user's stylesheet file drives the same
-``mapInPandas`` stage the callable form did.  Compilation happens once
+``io.with_columns`` stage the callable form did.  Compilation happens once
 on the driver; workers receive the closure.
 """
 

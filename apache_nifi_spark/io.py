@@ -7,8 +7,10 @@ Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``load_table`` never caches or collects, so the 100 TB
 path streams through executors untouched by the driver.
 
-Python row code (byte parsers, codecs, synthetic inputs) runs through
-:func:`flat_map`, the engine's one Arrow row seam.
+Python row code runs over Arrow batches through one of two seams:
+:func:`flat_map` for code that makes new rows (byte parsers, codecs,
+synthetic inputs) and :func:`with_columns` for callbacks that keep their
+input rows and add columns (wire clients, per-row transforms).
 
 Scratch space (staged fixtures, landing zones, stream checkpoints, query
 outputs) comes from :func:`scratch`, the engine's one owner of temporary
@@ -22,7 +24,7 @@ import functools
 import os
 import shutil
 import tempfile
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +33,7 @@ from pyspark.sql import types as T
 __all__ = [
     "TABLES",
     "flat_map",
+    "with_columns",
     "load_table",
     "load_all",
     "register_views",
@@ -133,6 +136,15 @@ def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _arrow_fields(schema: str | T.StructType):
+    """``(StructType, pyarrow schema)`` of a DDL string or ``StructType``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return schema, to_arrow_schema(schema)
+
+
 def flat_map(
     df: DataFrame,
     cols: list[str],
@@ -149,11 +161,7 @@ def flat_map(
     output column is built with ``pa.array`` at the schema's Arrow type,
     so a nullable ``bigint`` keeps values above 2**53 exact (a pandas
     frame would have stored it as float64)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
+    schema, arrow = _arrow_fields(schema)
 
     def run(batches):
         import pyarrow as pa
@@ -166,6 +174,62 @@ def flat_map(
             )
 
     return df.select(*cols).mapInArrow(run, schema)
+
+
+def with_columns(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[[Iterator[list[list]]], Iterable[Iterable[list]]],
+    fields: str | T.StructType,
+) -> DataFrame:
+    """Add (or replace) ``fields`` on every row of ``df``, computed by a
+    per-partition callback over Arrow batches (``mapInArrow``).
+
+    ``fn(batches)`` is called once per partition; ``batches`` yields, for
+    each Arrow batch, one Python list per ``cols`` entry (``to_pylist()``
+    values).  For each batch, in order, ``fn`` yields one list per field,
+    each as long as that batch, so a per-partition client is a ``with``
+    around the loop.  As in ``DataFrame.withColumns``, a field that names
+    an existing column replaces it in place; the others are appended.
+    Every other column is the input batch's own Arrow array, so values
+    pandas cannot hold (bigints above 2**53 next to a null, timestamps
+    outside the nanosecond range) pass through exactly."""
+    fields, arrow = _arrow_fields(fields)
+    new = {f.name: f for f in fields}
+    schema = T.StructType(
+        [new.get(f.name, f) for f in df.schema.fields]
+        + [f for f in fields if f.name not in df.columns]
+    )
+
+    def run(batches):
+        import pyarrow as pa
+
+        pending = []
+
+        def values():
+            for b in batches:
+                pending.append(b)
+                yield [b.column(c).to_pylist() for c in cols]
+
+        for out in fn(values()):
+            if not pending:
+                raise ValueError("with_columns: fn yielded more batches than it was given")
+            b = pending.pop(0)
+            built = {}
+            for v, f in zip(out, arrow, strict=True):
+                if len(v) != b.num_rows:
+                    raise ValueError(
+                        f"with_columns: {f.name} has {len(v)} values for {b.num_rows} rows"
+                    )
+                built[f.name] = pa.array(v, type=f.type)
+            arrays = [built.pop(n, b.column(n)) for n in b.schema.names]
+            yield pa.RecordBatch.from_arrays(
+                arrays + list(built.values()), names=b.schema.names + list(built)
+            )
+        if pending or next(batches, None) is not None:
+            raise ValueError("with_columns: fn yielded fewer batches than it was given")
+
+    return df.mapInArrow(run, schema)
 
 
 def widen_if_narrow(df: DataFrame) -> DataFrame:

@@ -18,12 +18,10 @@ from __future__ import annotations
 
 import io as _io
 import zipfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.io import flat_map
+from apache_nifi_spark.io import flat_map, with_columns
 
 __all__ = [
     "merge_content_text",
@@ -134,23 +132,13 @@ def decompress_content(
 def _recode(df, content_col, codec, out_col, mode):
     if codec not in _codecs():
         raise ValueError(f"unsupported codec {codec!r} (have {sorted(_codecs())})")
-    from pyspark.sql.types import BinaryType, StructType
-
-    out_col = out_col or content_col
-    if out_col == content_col:
-        schema = df.schema
-    else:
-        schema = StructType(list(df.schema.fields)).add(out_col, BinaryType())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         fn = _codecs()[codec][mode]
-        for pdf in batches:
-            pdf[out_col] = [
-                fn(bytes(p)) if p is not None else None for p in pdf[content_col]
-            ]
-            yield pdf
+        for (blobs,) in batches:
+            yield [fn(bytes(p)) if p is not None else None for p in blobs],
 
-    return df.mapInPandas(run, schema)
+    # out_col == content_col replaces the content in place
+    return with_columns(df, [content_col], run, f"`{out_col or content_col}` binary")
 
 
 def merge_content_text(
@@ -207,6 +195,8 @@ def pack_content_tar(
     group — NiFi's bin-by-correlation-attribute shape.  Output:
     (group_id, archive binary)."""
     import tarfile
+
+    import pandas as pd
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         buf = _io.BytesIO()
@@ -315,6 +305,8 @@ def pack_flowfile_v3(
     Records are ordered by the attribute tuple for deterministic bytes.
     Output: (group_id, stream binary, n_records)."""
     import struct as _struct
+
+    import pandas as pd
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         out = _io.BytesIO()

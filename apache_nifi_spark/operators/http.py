@@ -2,11 +2,11 @@
 enrichment.
 
 NiFi's InvokeHTTP calls an endpoint per FlowFile and routes on the
-response.  Spark-first shape: an Arrow-batched ``mapInPandas`` stage
-holding ONE pooled ``http.client`` connection per partition — requests
-amortize TCP/TLS setup across the batch, partitions fan out across
-executors, and the operator stays a plain DataFrame transform (routing
-on ``status`` composes with RouteOnAttribute downstream).
+response.  Spark-first shape: an Arrow-batched :func:`io.with_columns`
+stage holding ONE pooled ``http.client`` connection per partition —
+requests amortize TCP/TLS setup across the batch, partitions fan out
+across executors, and the operator stays a plain DataFrame transform
+(routing on ``status`` composes with RouteOnAttribute downstream).
 
 At 100 TB the same shape holds: concurrency = partitions, per-partition
 keep-alive connections, and rate control via ``ControlRate`` upstream or
@@ -16,9 +16,9 @@ requests.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
+
+from apache_nifi_spark.io import with_columns
 
 __all__ = ["invoke_http", "post_http"]
 
@@ -55,15 +55,8 @@ def invoke_http(
     than failing the task — retry policy belongs to RetryFlowFile
     downstream, not to the transform.
     """
-    import pandas as pd  # noqa: F401 (worker-side)
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out_col, StringType()), StructField(status_col, IntegerType())]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(batches):
         import http.client
         import threading
         import urllib.parse
@@ -96,8 +89,7 @@ def invoke_http(
         pool = None  # engaged lazily, only if the probe says slow
         use_pool: bool | None = None
         try:
-            for pdf in batches:
-                urls = list(pdf[url_col])
+            for (urls,) in batches:
                 results: list[tuple[str, int]] = []
                 if use_pool is None and urls:
                     t0 = time.perf_counter()
@@ -112,14 +104,12 @@ def invoke_http(
                     results += list(pool.map(fetch, urls))  # ordered
                 else:
                     results += [fetch(u) for u in urls]
-                pdf[out_col] = [r[0] for r in results]
-                pdf[status_col] = [r[1] for r in results]
-                yield pdf
+                yield [r[0] for r in results], [r[1] for r in results]
         finally:
             if pool is not None:
                 pool.shutdown(wait=False)
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [url_col], run, f"`{out_col}` string, `{status_col}` int")
 
 
 def post_http(
@@ -141,18 +131,12 @@ def post_http(
     """
     import urllib.parse
 
-    import pandas as pd  # noqa: F401 (worker-side)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     if urllib.parse.urlsplit(url).scheme not in ("http", "https"):
         raise ValueError(
             f"post_http: unsupported URL scheme in {url!r} (http/https only)"
         )
-    schema = StructType(
-        list(df.schema.fields) + [StructField(status_col, IntegerType())]
-    )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(batches):
         import http.client
         import urllib.parse
 
@@ -190,13 +174,10 @@ def post_http(
                 return -1
 
         try:
-            for pdf in batches:
-                pdf[status_col] = [
-                    post(b) if b is not None else -1 for b in pdf[body_col]
-                ]
-                yield pdf
+            for (bodies,) in batches:
+                yield [post(b) if b is not None else -1 for b in bodies],
         finally:
             if conn is not None:
                 conn.close()
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [body_col], run, f"`{status_col}` int")

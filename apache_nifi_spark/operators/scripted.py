@@ -14,10 +14,10 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator, Sequence
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from apache_nifi_spark.io import with_columns
 
 __all__ = [
     "flowfile_transform",
@@ -57,15 +57,19 @@ def record_transform(
     """NiFi 2.x ``RecordTransform`` (scalar form): vectorized column
     derivation — ``fn`` sees the selected columns as a pandas frame and
     returns one Series, appended as ``out_col``."""
+    import pandas as pd
     from pyspark.sql.functions import pandas_udf, struct
 
     use = list(cols or df.columns)
 
-    @pandas_udf(out_type)
-    def udf(s: pd.DataFrame) -> pd.Series:
+    def udf(s):
         return fn(s)
 
-    return df.withColumn(out_col, udf(struct(*use)))
+    # pandas_udf reads the UDF kind from the type hints; they are set as
+    # objects because this module's annotations are strings and pandas
+    # is not a module global
+    udf.__annotations__ = {"s": pd.DataFrame, "return": pd.Series}
+    return df.withColumn(out_col, pandas_udf(udf, out_type)(struct(*use)))
 
 
 def scripted_aggregate(
@@ -96,13 +100,12 @@ def execute_stream_command(
     amortizes via run-duration micro-batching.  Only for line-oriented
     filters (tr/sed/awk-style); anything stateful belongs in a real UDF.
     """
-    other = [c for c in df.columns if c != text_col]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import subprocess
 
-        for batch in batches:
-            lines = batch[text_col].fillna("").str.replace("\n", " ", regex=False)
+        for (texts,) in batches:
+            lines = [(t or "").replace("\n", " ") for t in texts]
             proc = subprocess.run(
                 list(argv),
                 input="\n".join(lines) + "\n",
@@ -110,10 +113,6 @@ def execute_stream_command(
                 text=True,
                 check=True,
             )
-            out_lines = proc.stdout.split("\n")[: len(batch)]
-            out = batch.copy()
-            out[out_col] = out_lines
-            yield out
+            yield proc.stdout.split("\n")[: len(lines)],
 
-    schema_parts = [f"`{c}` {t}" for c, t in df.dtypes] + [f"`{out_col}` string"]
-    return df.mapInPandas(run, ", ".join(schema_parts))
+    return with_columns(df, [text_col], run, f"`{out_col}` string")

@@ -248,25 +248,23 @@ def transform_xml(
     XSLT is used for in NiFi flows, minus the XSLT language itself
     (documented scope reduction).
 
-    Runs as ``mapInPandas`` (Arrow batches, parse+rebuild per row inside
-    the worker) — the NiFi-2.x-Python-processor execution shape; at
-    100 TB it scales with partitions like any scripted transform.
+    Runs through :func:`io.with_columns` (Arrow batches, parse+rebuild
+    per row inside the worker) — the NiFi-2.x-Python-processor execution
+    shape; at 100 TB it scales with partitions like any scripted
+    transform.
     """
-    from pyspark.sql.types import StringType
-
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
+    from apache_nifi_spark.io import with_columns
 
     def _run(batches):
         import xml.etree.ElementTree as ET
 
-        for pdf in batches:
-            pdf[out_col] = [
+        for (docs,) in batches:
+            yield [
                 ET.tostring(transformer(ET.fromstring(x)), encoding="unicode")
-                for x in pdf[xml_col]
-            ]
-            yield pdf
+                for x in docs
+            ],
 
-    return df.mapInPandas(_run, schema)
+    return with_columns(df, [xml_col], _run, f"`{out_col}` string")
 
 
 #: RFC 5424 shape: <PRI>VERSION TS HOST APP PROCID MSGID SD MSG

@@ -916,7 +916,7 @@ def _apply(
         )
         content = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
         # Pinned: success and failure are two lineages of the SAME push;
-        # without the cut each consumer re-executes the mapInPandas and
+        # without the cut each consumer re-executes the wire stage and
         # the peer receives every transaction twice.  eager=False folds
         # the one wire execution into the first consuming action.
         sent = (

@@ -2331,8 +2331,8 @@ def jolt_chain_columnar_q(spark, sf_dir):
 def jolt_wildcard_q(spark, sf_dir):
     """JoltTransformJSON wildcard shift (§2.4): ``*`` key match with
     ``&`` back-reference plus a literal override (literal beats the
-    wildcard, Jolt precedence) — the interpreter tier in mapInPandas
-    (functions/jolt.jolt_reference), value-oracled."""
+    wildcard, Jolt precedence) — the interpreter tier under
+    io.with_columns (functions/jolt.jolt_reference), value-oracled."""
     from apache_nifi_spark.functions.jolt import jolt_transform_json
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 27 == 0)

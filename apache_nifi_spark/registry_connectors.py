@@ -1047,7 +1047,7 @@ def iceberg_time_travel_q(spark, sf_dir):
 def convert_record_cbor_q(spark, sf_dir):
     """ConvertRecord parquet→CBOR→records (RFC 8949/8742, from the
     public spec — reference parity with NiFi's CBOR-capable record
-    serde): one CBOR-sequence file per partition on write (mapInPandas,
+    serde): one CBOR-sequence file per partition on write (mapInArrow,
     executor-side), binaryFile + per-file decode on read.  The round
     trip must be value-exact through minimal-width ints, IEEE float64,
     UTF-8 text, AND tag-1001 extended-time (integer micros) — a

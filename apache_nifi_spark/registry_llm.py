@@ -4795,7 +4795,7 @@ def transform_xml_q(spark, sf_dir):
     """TransformXml (§2.4): driven by an ACTUAL XSLT stylesheet document
     — functions/xslt.py compiles the XSLT-1.0 subset (templates,
     value-of, for-each, if/choose, AVTs; scope in its module doc) to the
-    tree transformer that mapInPandas applies per row.  Round-4 verdict
+    tree transformer that io.with_columns applies per row.  Round-4 verdict
     item #10: a NiFi user's .xsl file now runs as-is.  The oracle
     rebuilds the expected serialization in SQL."""
     from apache_nifi_spark.functions.xslt import xslt_compile
@@ -4985,7 +4985,7 @@ def _staged_echo_server() -> int:
 def invoke_http_enrich_q(spark, sf_dir):
     """InvokeHTTP (§2.1): per-record outbound GET against a deterministic
     echo service (reverse of the query param), pooled keep-alive
-    connection per partition via mapInPandas — see operators/http.py.
+    connection per partition via io.with_columns — see operators/http.py.
     The oracle recomputes the enrichment function in SQL."""
     from apache_nifi_spark.operators import invoke_http
 

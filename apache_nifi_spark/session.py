@@ -84,7 +84,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for every pandas UDF / mapInPandas boundary.
+        # Arrow for toPandas(), which the oracle checks use; mapInArrow
+        # and pandas UDFs move Arrow batches whatever this conf says.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python workers fork from the engine's daemon (pyworker.py), which
         # stops Python < 3.12 from re-parsing pyspark.zip at the start of

@@ -1,11 +1,12 @@
 """PutTCP / PutUDP (SURVEY.md §2.2): per-record socket delivery.
 
 NiFi writes each FlowFile's content to a TCP endpoint (newline-framed)
-or as one UDP datagram.  Spark-first shape: ``mapInPandas`` with ONE
-socket per PARTITION — connection setup amortizes across the batch,
-partitions fan out across executors (the InvokeHTTP/FetchFTP pattern),
-and the transform appends a ``sent`` status column instead of failing
-the task, so delivery failures route like any other relationship.
+or as one UDP datagram.  Spark-first shape: :func:`io.with_columns`
+with ONE socket per PARTITION — connection setup amortizes across the
+batch, partitions fan out across executors (the InvokeHTTP/FetchFTP
+pattern), and the transform appends a ``sent`` status column instead of
+failing the task, so delivery failures route like any other
+relationship.
 
 The receiving half already exists: ``streaming/listen.TcpLandingListener``
 and ``UdpLandingListener`` land payloads durably for the streaming drain
@@ -14,19 +15,11 @@ and ``UdpLandingListener`` land payloads durably for the streaming drain
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.io import with_columns
+
 __all__ = ["put_tcp", "put_udp", "put_tcp_octet_counted"]
-
-
-def _with_sent(df: DataFrame, run) -> DataFrame:
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("sent", BooleanType())
-    return df.mapInPandas(run, schema)
 
 
 def put_tcp(
@@ -47,7 +40,7 @@ def put_tcp(
     reference's secured listeners (streaming/tls.py).  On a multi-node
     cluster distribute the PEM via ``spark.files``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import ssl
 
         from apache_nifi_spark import net
@@ -56,7 +49,7 @@ def put_tcp(
         if tls_cert is not None:
             ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_CLIENT)
             ctx.load_verify_locations(tls_cert)
-        for pdf in batches:
+        for (content,) in batches:
             try:
                 s = net.connect(host, port, timeout)
                 try:
@@ -68,7 +61,7 @@ def put_tcp(
                         s = ctx.wrap_socket(s, server_hostname=host)
                     payload = b"".join(
                         (v if isinstance(v, bytes) else str(v).encode()) + b"\n"
-                        for v in pdf[content_col]
+                        for v in content
                         if v is not None
                     )
                     s.sendall(payload)
@@ -81,10 +74,9 @@ def put_tcp(
                 ok = True
             except (OSError, ssl.SSLError):
                 ok = False
-            pdf["sent"] = [ok and v is not None for v in pdf[content_col]]
-            yield pdf
+            yield [ok and v is not None for v in content],
 
-    return _with_sent(df, run)
+    return with_columns(df, [content_col], run, "sent boolean")
 
 
 def put_udp(
@@ -94,14 +86,14 @@ def put_udp(
     per partition.  Delivery is fire-and-forget — ``sent`` reflects the
     local send() only, exactly UDP's contract."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import socket
 
         sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         try:
-            for pdf in batches:
+            for (content,) in batches:
                 sent = []
-                for v in pdf[content_col]:
+                for v in content:
                     if v is None:
                         sent.append(False)
                         continue
@@ -113,12 +105,11 @@ def put_udp(
                         sent.append(True)
                     except OSError:
                         sent.append(False)
-                pdf["sent"] = sent
-                yield pdf
+                yield sent,
         finally:
             sock.close()
 
-    return _with_sent(df, run)
+    return with_columns(df, [content_col], run, "sent boolean")
 
 
 def put_tcp_octet_counted(
@@ -133,15 +124,15 @@ def put_tcp_octet_counted(
     the framing that lets messages carry embedded newlines, which
     non-transparent (newline) framing cannot."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from apache_nifi_spark import net
 
-        for pdf in batches:
+        for (content,) in batches:
             try:
                 with net.connect(host, port, timeout) as s:
                     frames = []
                     sent = []
-                    for v in pdf[content_col]:
+                    for v in content:
                         if v is None:
                             sent.append(False)
                             continue
@@ -152,8 +143,7 @@ def put_tcp_octet_counted(
                 ok = True
             except OSError:
                 ok = False
-                sent = [False] * len(pdf)
-            pdf["sent"] = [a and ok for a in sent]
-            yield pdf
+                sent = [False] * len(content)
+            yield [a and ok for a in sent],
 
-    return _with_sent(df, run)
+    return with_columns(df, [content_col], run, "sent boolean")

@@ -619,32 +619,6 @@ def decode_container(data: bytes) -> tuple[Any, list[tuple]]:
     return schema, rows
 
 
-# ---------------------------------------------------------------------------
-# Arrow batches → encoder rows
-# ---------------------------------------------------------------------------
-
-
-def _pdf_rows(pdf: Any, spark_schema: T.StructType) -> Iterator[tuple]:
-    """Arrow-batch pandas frame → field-ordered python tuples with the
-    value types the compiled encoder accepts (NaN/NaT → None)."""
-    import pandas as pd
-
-    cols = []
-    for f in spark_schema.fields:
-        s = pdf[f.name]
-        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-            vals = [None if pd.isna(v) else v.to_pydatetime() for v in s]
-        elif isinstance(f.dataType, T.DateType):
-            vals = [
-                v.date() if isinstance(v, pd.Timestamp) else (None if pd.isna(v) else v)
-                for v in s
-            ]
-        else:
-            vals = list(s.astype(object).where(s.notna(), None))
-        cols.append(vals)
-    return zip(*cols) if cols else iter(())
-
-
 def infer_avro_schema(
     spark, df, json_col: str, record_name: str = "inferred", sample: int = 1000
 ) -> str:

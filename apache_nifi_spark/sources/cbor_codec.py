@@ -9,7 +9,7 @@ column names.  No file header; the format is self-delimiting, so
 readers stream records without an index (the property that makes CBOR
 sequences a log-shipping format).
 
-Executor topology: write = ``mapInPandas``
+Executor topology: write = ``mapInArrow``
 (one open file per partition, driver sees only a manifest row per
 partition); read = ``binaryFile`` scan + ``io.flat_map`` decode (N
 files decode on N cores).
@@ -80,6 +80,8 @@ def cbor_encode(v: Any) -> bytes:
         return _head(2, len(v)) + bytes(v)
     if isinstance(v, datetime.datetime):
         # tag 1001 extended-time: {1: epoch seconds, -6: microseconds}
+        if v.tzinfo is not None:  # an instant: its UTC wall time
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
         micros = (v - _EPOCH) // datetime.timedelta(microseconds=1)
         sec, us = divmod(micros, 1_000_000)
         return (
@@ -195,10 +197,8 @@ def cbor_decode_sequence(buf: bytes) -> Iterator[Any]:
 
 def write_cbor(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """RecordSetWriter: one ``.cbors`` CBOR-sequence file per partition
-    (mapInPandas — executors stream records into their own open file;
+    (``mapInArrow`` — executors stream records into their own open file;
     the driver collects only a one-row-per-partition manifest)."""
-    from apache_nifi_spark.sources.avro_codec import _pdf_rows
-
     if os.path.isdir(path):
         if mode == "ignore":
             return
@@ -209,27 +209,34 @@ def write_cbor(df: DataFrame, path: str, mode: str = "overwrite") -> None:
                 if name.endswith(".cbors"):
                     os.unlink(os.path.join(path, name))
     os.makedirs(path, exist_ok=True)
-    spark_schema = df.schema
-    names = [f.name for f in spark_schema.fields]
+    names = df.columns
 
-    def write_partition(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
+    def values(col) -> list:
+        import pyarrow as pa
+
+        vals = col.to_pylist()
+        if pa.types.is_map(col.type):  # Arrow lists a map's (key, value) pairs
+            return [None if v is None else dict(v) for v in vals]
+        return vals
+
+    def write_partition(batches):
+        import pyarrow as pa
 
         fname = os.path.join(path, f"part-{uuid.uuid4().hex}.cbors")
         tmp = fname + ".inprogress"
         n = 0
         with open(tmp, "wb") as fh:
-            for pdf in batches:
-                for row in _pdf_rows(pdf, spark_schema):
+            for b in batches:
+                for row in zip(*map(values, b.columns)):
                     n += 1
                     fh.write(cbor_encode(dict(zip(names, row))))
         if n:
             os.replace(tmp, fname)  # atomic publish
         else:
             os.unlink(tmp)
-        yield pd.DataFrame({"file": [fname], "rows": [n]})
+        yield pa.record_batch({"file": [fname], "rows": pa.array([n], pa.int64())})
 
-    manifest = df.mapInPandas(write_partition, schema="file string, rows long")
+    manifest = df.mapInArrow(write_partition, schema="file string, rows long")
     manifest.collect()  # control-plane: one manifest row per partition
 
 

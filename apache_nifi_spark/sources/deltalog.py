@@ -32,7 +32,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.sources.formats import write_single_part
+from apache_nifi_spark.sources.formats import read_parquet_rows, write_single_part
 
 __all__ = [
     "write_commit",
@@ -410,6 +410,20 @@ def delta_active_files(
     )
 
 
+def _strip_deleted(spark: SparkSession, dvs: dict[str, str]) -> DataFrame:
+    """The rows of each data file in ``dvs`` (path → inline deletion
+    vector JSON) that its deletion vector keeps."""
+
+    def keep(path, t):
+        from apache_nifi_spark.sources.dv import read_inline_dv
+
+        dels = read_inline_dv(json.loads(dvs[path]))
+        return t.take([i for i in range(t.num_rows) if i not in dels])
+
+    schema = spark.read.parquet(next(iter(dvs))).schema  # footer-only
+    return read_parquet_rows(spark, list(dvs), schema, keep)
+
+
 def read_delta_snapshot(
     spark: SparkSession, table_path: str, version: int | None = None
 ) -> DataFrame:
@@ -450,27 +464,7 @@ def read_delta_snapshot(
     if plain:
         parts.append(spark.read.parquet(*plain))
     if dv_rows:
-        schema = spark.read.parquet(dv_rows[0][0]).schema  # footer-only
-        names = schema.fieldNames()
-
-        def strip(batches):
-            import json as _json
-
-            import pyarrow.parquet as _pq
-
-            from apache_nifi_spark.sources.dv import read_inline_dv
-
-            for pdf in batches:
-                for path, dvj in zip(pdf["path"], pdf["dv"]):
-                    dels = read_inline_dv(_json.loads(dvj))
-                    t = _pq.read_table(path)
-                    keep = [i for i in range(t.num_rows) if i not in dels]
-                    yield t.take(keep).to_pandas()[names]
-
-        flist = spark.createDataFrame(
-            dv_rows, "path string, dv string"
-        ).repartition(len(dv_rows))
-        parts.append(flist.mapInPandas(strip, schema))
+        parts.append(_strip_deleted(spark, dict(dv_rows)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -574,27 +568,7 @@ def delta_optimize(
         if r["dv"]
     ]
     if dv_rows:
-        schema = spark.read.parquet(dv_rows[0][0]).schema  # footer-only
-        names = schema.fieldNames()
-
-        def strip(batches):
-            import json as _json
-
-            import pyarrow.parquet as _pq
-
-            from apache_nifi_spark.sources.dv import read_inline_dv
-
-            for pdf in batches:
-                for path, dvj in zip(pdf["path"], pdf["dv"]):
-                    dels = read_inline_dv(_json.loads(dvj))
-                    t = _pq.read_table(path)
-                    keep = [i for i in range(t.num_rows) if i not in dels]
-                    yield t.take(keep).to_pandas()[names]
-
-        flist = spark.createDataFrame(
-            dv_rows, "path string, dv string"
-        ).repartition(len(dv_rows))
-        parts.append(flist.mapInPandas(strip, schema))
+        parts.append(_strip_deleted(spark, dict(dv_rows)))
     rows = parts[0]
     for p in parts[1:]:
         rows = rows.unionByName(p)
@@ -794,45 +768,22 @@ def read_delta_changes(
                 prior = {}
             from apache_nifi_spark.sources.dv import read_inline_dv
 
-            dv_file_rows = []
+            positions: dict[str, list[int]] = {}
             for a in dv_adds:
                 new_positions = sorted(
                     set(read_inline_dv(a["deletionVector"]))
                     - prior.get(a["path"], set())
                 )
                 if new_positions:
-                    dv_file_rows.append(
-                        (
-                            os.path.join(table_path, a["path"]),
-                            json.dumps(new_positions),
-                        )
-                    )
-            if dv_file_rows:
-                schema = spark.read.parquet(
-                    dv_file_rows[0][0]
-                ).schema  # footer-only
-                names = schema.fieldNames()
+                    positions[os.path.join(table_path, a["path"])] = new_positions
+            if positions:
 
-                def take_rows(batches):
-                    import json as _json
+                def take(path, t):
+                    return t.take([p for p in positions[path] if p < t.num_rows])
 
-                    import pyarrow.parquet as _pq
-
-                    for pdf in batches:
-                        for path, posj in zip(pdf["path"], pdf["pos"]):
-                            t = _pq.read_table(path)
-                            pos = [
-                                p
-                                for p in _json.loads(posj)
-                                if p < t.num_rows
-                            ]
-                            yield t.take(pos).to_pandas()[names]
-
-                flist = spark.createDataFrame(
-                    dv_file_rows, "path string, pos string"
-                ).repartition(len(dv_file_rows))
+                schema = spark.read.parquet(next(iter(positions))).schema  # footer-only
                 parts.append(
-                    flist.mapInPandas(take_rows, schema)
+                    read_parquet_rows(spark, list(positions), schema, take)
                     .withColumn("_change_type", F.lit("delete"))
                     .withColumn("_commit_version", F.lit(v))
                 )

@@ -4,8 +4,8 @@ RFC 1035 message encode/decode — header, QNAME label encoding, A-record
 answers with name-compression pointers — over UDP, from the public
 spec, no resolver library (the repo's from-scratch wire policy).
 
-Spark-first shape: lookups run executor-side in ``mapInPandas`` with a
-per-partition LRU so each distinct name resolves once per partition —
+Spark-first shape: lookups run executor-side in ``io.with_columns`` with
+a per-partition LRU so each distinct name resolves once per partition —
 the enrichment join stays map-only and partition-parallel.  The mini
 server exists for loopback tests and value-oracled queries.
 """
@@ -16,8 +16,10 @@ import socket
 import struct
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = [
     "dns_encode_query",
@@ -125,39 +127,31 @@ def dns_lookup(
     on NXDOMAIN."""
 
     def run(batches):
-        import pandas as pd
-
-        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        sock.settimeout(10)
         cache: dict[str, tuple] = {}
         txn = 0
-        for pdf in batches:
-            ips, ttls = [], []
-            for name in pdf[name_col]:
-                key = str(name).lower()
-                if key not in cache:
-                    txn = (txn + 1) & 0xFFFF
-                    sock.sendto(
-                        dns_encode_query(txn, key), (host, port)
-                    )
-                    while True:
-                        data, _ = sock.recvfrom(4096)
-                        got, rcode, _q, answers = dns_decode_message(data)
-                        if got == txn:
-                            break
-                    cache[key] = (
-                        (answers[0][2], answers[0][1])
-                        if rcode == 0 and answers
-                        else (None, None)
-                    )
-                ip, ttl = cache[key]
-                ips.append(ip)
-                ttls.append(ttl)
-            yield pd.DataFrame(
-                {"hostname": pdf[name_col], "ip": ips, "ttl": ttls}
-            )
-        sock.close()
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
+            sock.settimeout(10)
+            for (names,) in batches:
+                ips, ttls = [], []
+                for name in names:
+                    key = str(name).lower()
+                    if key not in cache:
+                        txn = (txn + 1) & 0xFFFF
+                        sock.sendto(dns_encode_query(txn, key), (host, port))
+                        while True:
+                            data, _ = sock.recvfrom(4096)
+                            got, rcode, _q, answers = dns_decode_message(data)
+                            if got == txn:
+                                break
+                        cache[key] = (
+                            (answers[0][2], answers[0][1])
+                            if rcode == 0 and answers
+                            else (None, None)
+                        )
+                    ip, ttl = cache[key]
+                    ips.append(ip)
+                    ttls.append(ttl)
+                yield ips, ttls
 
-    return df.select(name_col).mapInPandas(
-        run, f"hostname string, ip string, ttl long"
-    )
+    hosts = df.select(F.col(name_col).alias("hostname"))
+    return with_columns(hosts, ["hostname"], run, "ip string, ttl long")

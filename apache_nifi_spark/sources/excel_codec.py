@@ -32,7 +32,6 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark.io import flat_map
@@ -206,6 +205,8 @@ def records_to_excel(
 ) -> DataFrame:
     """One workbook per ``group_col`` value → (group, workbook binary).
     applyInPandas: the archive build is byte-imperative by nature."""
+    import pandas as pd
+
     cols = out_cols or [c for c in df.columns if c != group_col]
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:

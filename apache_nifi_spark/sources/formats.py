@@ -5,7 +5,8 @@ NiFi mappings (SURVEY.md §2.1/§2.2/§2.4):
 - ``read_records`` / ``write_records`` — the RecordReader / RecordSetWriter
   controller services behind every record-aware processor: one call per
   format, schema explicit (schema-on-read discipline, SURVEY.md §1.3).
-- ``write_single_part`` — one parquet data file for a lakehouse commit.
+- ``write_single_part`` — one parquet data file for a lakehouse commit;
+  ``read_parquet_rows`` — the per-file, delete-applying read back.
 - ``convert_record`` — the ConvertRecord processor: a pure reader→writer
   format bridge with no row-level logic.
 - ``read_binary_files`` — GetFile for opaque payloads: one row per file,
@@ -137,6 +138,37 @@ def write_single_part(df: DataFrame, path: str) -> str:
     if len(parts) != 1:
         raise ValueError(f"{path}: expected one part file, found {len(parts)}")
     return parts[0]
+
+
+def read_parquet_rows(
+    spark: SparkSession, paths: list[str], schema: StructType, select
+) -> DataFrame:
+    """Read each parquet file in ``paths`` in its own task and keep the
+    rows of the pyarrow Table that ``select(path, table)`` returns, as
+    ``schema``: the delete-applying and change-feed reads of a lakehouse
+    table (Delta deletion vectors, Iceberg position and equality
+    deletes).  A column the file lacks reads as null (schema evolution);
+    the others are cast to the schema's Arrow types, so the file's own
+    values reach Spark without a pandas hop."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for path in b.column(0).to_pylist():
+                # Spark's default INT96 timestamps overflow nanoseconds
+                t = select(path, pq.read_table(path, coerce_int96_timestamp_unit="us"))
+                for f in arrow:
+                    if f.name not in t.column_names:
+                        t = t.append_column(f.name, pa.nulls(t.num_rows, f.type))
+                yield from t.select(arrow.names).cast(arrow).to_batches()
+
+    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    return files.repartition(len(paths)).mapInArrow(run, schema)
 
 
 def convert_record(

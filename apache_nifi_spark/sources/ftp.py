@@ -9,7 +9,7 @@ that split exactly:
   remote directory (O(files) metadata, like a ListFile/ListS3 manifest)
   and becomes a small DataFrame of (path, size);
 - **fetching is data-plane and DISTRIBUTED**: ``fetch_ftp`` maps the
-  listing through ``mapInPandas`` — each PARTITION opens one ftplib
+  listing through ``io.with_columns`` — each PARTITION opens one ftplib
   connection (TCP/login amortized across its files, the InvokeHTTP
   keep-alive pattern) and RETRs its files; partitions fan out across
   executors, so aggregate throughput scales with the cluster, subject to
@@ -34,6 +34,7 @@ import socketserver
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = ["MiniFtpServer", "list_ftp", "fetch_ftp", "put_ftp"]
 
@@ -194,10 +195,6 @@ def fetch_ftp(
     PARTITION (login/TCP amortized; partitions fan out across executors).
     Appends ``content: binary``; transport failures surface as NULL
     content (route-on-null downstream, RetryFlowFile semantics)."""
-    from pyspark.sql.types import BinaryType, StructType
-
-    schema = StructType(list(listing.schema.fields)).add(out_col, BinaryType())
-
     def run(batches):
         import ftplib
 
@@ -206,24 +203,23 @@ def fetch_ftp(
         ftp.login()
         ftp.cwd(path)
         try:
-            for pdf in batches:
+            for (names,) in batches:
                 out = []
-                for name in pdf["filename"]:
+                for name in names:
                     buf = _io.BytesIO()
                     try:
                         ftp.retrbinary(f"RETR {name}", buf.write)
                         out.append(buf.getvalue())
                     except ftplib.all_errors:
                         out.append(None)
-                pdf[out_col] = out
-                yield pdf
+                yield out,
         finally:
             try:
                 ftp.quit()
             except Exception:
                 pass
 
-    return listing.mapInPandas(run, schema)
+    return with_columns(listing, ["filename"], run, f"`{out_col}` binary")
 
 
 def put_ftp(
@@ -238,10 +234,6 @@ def put_ftp(
     file, one ftplib connection per PARTITION (the FetchFTP shape in the
     write direction).  Appends ``stored``; failures route instead of
     failing the task."""
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("stored", BooleanType())
-
     def run(batches):
         import ftplib
 
@@ -250,9 +242,9 @@ def put_ftp(
         ftp.login()
         ftp.cwd(path)
         try:
-            for pdf in batches:
+            for names, blobs in batches:
                 ok = []
-                for name, blob in zip(pdf[name_col], pdf[content_col]):
+                for name, blob in zip(names, blobs):
                     if name is None or blob is None:
                         ok.append(False)
                         continue
@@ -262,12 +254,11 @@ def put_ftp(
                         ok.append(True)
                     except ftplib.all_errors:
                         ok.append(False)
-                pdf["stored"] = ok
-                yield pdf
+                yield ok,
         finally:
             try:
                 ftp.quit()
             except Exception:
                 pass
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [name_col, content_col], run, "stored boolean")

@@ -43,6 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_nifi_spark.io import flat_map
+from apache_nifi_spark.sources.formats import read_parquet_rows
 
 from apache_nifi_spark.sources.avro_codec import (
     decode_container,
@@ -1004,51 +1005,35 @@ def _read_files_with_deletes(
     if not pos_deletes and not eq_deletes and not dv_map:
         return reader.parquet(*files)
     schema = reader.parquet(files[0]).schema  # footer-only
-    names = schema.fieldNames()
 
-    def strip(batches):
+    def strip(path, t):
+        import pyarrow as pa
         import pyarrow.parquet as _pq
 
-        for pdf in batches:
-            for path, seq in zip(pdf["path"], pdf["seq"]):
-                dels = set()
-                for dfp, dseq in pos_deletes:
-                    if dseq < seq:
-                        continue  # delete predates this data file
-                    t = _pq.read_table(
-                        dfp, filters=[("file_path", "==", path)]
-                    )
-                    dels.update(t.column("pos").to_pylist())
-                if path in dv_map:
-                    dseq, poss = dv_map[path]
-                    if dseq >= seq:  # same rule as position deletes
-                        dels.update(poss)
-                t = _pq.read_table(path)
-                keep = [i for i in range(t.num_rows) if i not in dels]
-                out = t.take(keep).to_pandas()
-                for dfp, dseq in eq_deletes:
-                    if dseq <= seq:
-                        continue  # strict: applies to OLDER data only
-                    dt = _pq.read_table(dfp)
-                    eq_cols = dt.column_names
-                    dset = set(
-                        zip(*(dt.column(c).to_pylist() for c in eq_cols))
-                    )
-                    if dset and all(c in out.columns for c in eq_cols):
-                        mask = out[list(eq_cols)].apply(
-                            tuple, axis=1
-                        ).isin(dset)
-                        out = out[~mask]
-                for n in names:
-                    if n not in out.columns:
-                        out[n] = None  # evolution null-fill
-                yield out[names]
+        seq = fseq[path]
+        dels = set()
+        for dfp, dseq in pos_deletes:
+            if dseq < seq:
+                continue  # delete predates this data file
+            d = _pq.read_table(dfp, filters=[("file_path", "==", path)])
+            dels.update(d.column("pos").to_pylist())
+        if path in dv_map:
+            dseq, poss = dv_map[path]
+            if dseq >= seq:  # same rule as position deletes
+                dels.update(poss)
+        t = t.take([i for i in range(t.num_rows) if i not in dels])
+        for dfp, dseq in eq_deletes:
+            if dseq <= seq:
+                continue  # strict: applies to OLDER data only
+            d = _pq.read_table(dfp)
+            eq_cols = d.column_names
+            dset = set(zip(*(d.column(c).to_pylist() for c in eq_cols)))
+            if dset and all(c in t.column_names for c in eq_cols):
+                keys = zip(*(t.column(c).to_pylist() for c in eq_cols))
+                t = t.filter(pa.array([k not in dset for k in keys], pa.bool_()))
+        return t
 
-    flist = spark.createDataFrame(
-        [(f, int(fseq[f])) for f in files], "path string, seq long"
-    ).repartition(len(files))
-    return flist.mapInPandas(strip, schema)
-
+    return read_parquet_rows(spark, files, schema, strip)
 
 
 def iceberg_rewrite_data_files(

@@ -18,8 +18,8 @@ Spark shape (the FetchFTP/ListFTP split):
 - **listing is control-plane**: one driver-side SEARCH returns message
   sequence numbers (O(messages) metadata);
 - **fetching is data-plane and DISTRIBUTED**: ``consume_imap`` maps the
-  id listing through ``mapInPandas`` — each PARTITION opens one imaplib
-  connection and FETCHes its ids, so aggregate throughput scales with
+  id listing through ``io.with_columns`` — each PARTITION opens one
+  imaplib connection and FETCHes its ids, so aggregate throughput scales with
   the cluster, bounded by the server's connection limit.
 """
 
@@ -27,12 +27,11 @@ from __future__ import annotations
 
 import socket
 import threading
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = ["MiniImapServer", "append_imap", "list_imap_ids", "consume_imap",
            "MiniPop3Server", "consume_pop3"]
@@ -159,31 +158,27 @@ def append_imap(
     """Deliver each record's message bytes via IMAP APPEND — one
     authenticated connection per partition; appends ``delivered``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import imaplib
 
         client = imaplib.IMAP4(host, port)
         net.nodelay(client.sock)
         client.login(user, password)
         try:
-            for pdf in batches:
+            for (raws,) in batches:
                 ok = []
-                for raw in pdf[content_col]:
+                for raw in raws:
                     if raw is None:
                         ok.append(False)
                         continue
                     b = raw if isinstance(raw, bytes) else str(raw).encode()
                     typ, _ = client.append("INBOX", None, None, bytes(b))
                     ok.append(typ == "OK")
-                pdf["delivered"] = ok
-                yield pdf
+                yield ok,
         finally:
             client.logout()
 
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("delivered", BooleanType())
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [content_col], run, "delivered boolean")
 
 
 def list_imap_ids(
@@ -217,19 +212,19 @@ def consume_imap(
     """Distributed FETCH: each partition opens one connection and pulls
     its ids → (msg_id, message bytes)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = _connect(host, port, user, password)
         try:
-            for pdf in batches:
+            for (mids,) in batches:
                 msgs = []
-                for mid in pdf["msg_id"]:
-                    _, data = client.fetch(str(int(mid)), "(RFC822)")
+                for mid in mids:
+                    _, data = client.fetch(str(mid), "(RFC822)")
                     msgs.append(data[0][1])
-                yield pd.DataFrame({"msg_id": pdf["msg_id"], "message": msgs})
+                yield msgs,
         finally:
             client.logout()
 
-    return ids.mapInPandas(run, "msg_id int, message binary")
+    return with_columns(ids.select("msg_id"), ["msg_id"], run, "message binary")
 
 
 class MiniPop3Server(net.Server):
@@ -344,7 +339,7 @@ def consume_pop3(
     """ConsumePOP3: distributed RETR — each partition opens one poplib
     connection and pulls its message numbers → (msg_id, message)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import poplib
 
         client = poplib.POP3(host, port, timeout=10)
@@ -352,13 +347,13 @@ def consume_pop3(
         client.user(user)
         client.pass_(password)
         try:
-            for pdf in batches:
+            for (mids,) in batches:
                 msgs = []
-                for mid in pdf["msg_id"]:
-                    _, lines, _ = client.retr(int(mid))
+                for mid in mids:
+                    _, lines, _ = client.retr(mid)
                     msgs.append(b"\r\n".join(lines) + b"\r\n")
-                yield pd.DataFrame({"msg_id": pdf["msg_id"], "message": msgs})
+                yield msgs,
         finally:
             client.quit()
 
-    return ids.mapInPandas(run, "msg_id int, message binary")
+    return with_columns(ids.select("msg_id"), ["msg_id"], run, "message binary")

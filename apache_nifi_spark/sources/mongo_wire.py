@@ -290,40 +290,27 @@ def put_mongo_records(df, host: str, port: int, collection: str, columns=None):
     and inserts its rows in batches of 500 (the driver-style batching);
     appends ``inserted`` per row, transport failures route instead of
     failing the task."""
-    from pyspark.sql.types import BooleanType, StructType
+    from apache_nifi_spark.io import with_columns
 
     cols = columns or list(df.columns)
-    schema = StructType(list(df.schema.fields)).add("inserted", BooleanType())
 
     def run(batches):
-        import pandas as pd
-
-        def native(v):
-            # Arrow hands numpy scalars; BSON wants Python natives
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return None
-            return v.item() if hasattr(v, "item") else v
-
         client = None
         try:
-            for pdf in batches:
+            for values in batches:
+                docs = [dict(zip(cols, rec)) for rec in zip(*values)]
                 try:
                     if client is None:
                         client = MongoWireClient(host, port)
-                    docs = [
-                        {c: native(v) for c, v in rec.items()}
-                        for rec in pdf[cols].to_dict("records")
-                    ]
                     for i in range(0, len(docs), 500):
                         client.insert(collection, docs[i : i + 500])
                     ok = True
                 except (OSError, RuntimeError, ConnectionError):
                     client = None
                     ok = False
-                pdf["inserted"] = ok
-                yield pdf
+                yield [ok] * len(values[0]),
         finally:
             if client is not None:
                 client.close()
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, cols, run, "inserted boolean")

@@ -31,6 +31,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.io import with_columns
 from apache_nifi_spark.sources.ssh_transport import (
     SshClientConnection,
     SshServer,
@@ -439,17 +440,14 @@ def fetch_sftp(
     """FetchSFTP: one SSH connection per PARTITION (handshake amortized;
     partitions fan out across executors); appends ``content: binary``,
     transport failures surface as NULL content."""
-    from pyspark.sql.types import BinaryType, StructType
-
-    schema = StructType(list(listing.schema.fields)).add(out_col, BinaryType())
     prefix = path.rstrip("/")
 
     def run(batches):
         client = None
         try:
-            for pdf in batches:
+            for (names,) in batches:
                 out = []
-                for name in pdf["filename"]:
+                for name in names:
                     try:
                         if client is None:
                             client = SftpClient(
@@ -458,13 +456,12 @@ def fetch_sftp(
                         out.append(client.read_file(f"{prefix}/{name}"))
                     except (ConnectionError, FileNotFoundError, OSError):
                         out.append(None)
-                pdf[out_col] = out
-                yield pdf
+                yield out,
         finally:
             if client is not None:
                 client.close()
 
-    return listing.mapInPandas(run, schema)
+    return with_columns(listing, ["filename"], run, f"`{out_col}` binary")
 
 
 def put_sftp(
@@ -480,17 +477,14 @@ def put_sftp(
 ) -> DataFrame:
     """PutSFTP: WRITE each record's bytes as one remote file, one SSH
     connection per partition; appends ``stored``."""
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("stored", BooleanType())
     prefix = path.rstrip("/")
 
     def run(batches):
         client = None
         try:
-            for pdf in batches:
+            for names, blobs in batches:
                 ok = []
-                for name, blob in zip(pdf[name_col], pdf[content_col]):
+                for name, blob in zip(names, blobs):
                     if name is None or blob is None:
                         ok.append(False)
                         continue
@@ -504,10 +498,9 @@ def put_sftp(
                         ok.append(True)
                     except (ConnectionError, OSError):
                         ok.append(False)
-                pdf["stored"] = ok
-                yield pdf
+                yield ok,
         finally:
             if client is not None:
                 client.close()
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [name_col, content_col], run, "stored boolean")

@@ -5,7 +5,7 @@ implemented from the public specs — no SNMP library, same from-scratch
 wire policy as the SSH/Kafka/AMQP/MQTT stacks.
 
 Spark-first shape: the polled OID list is a DataFrame; requests run
-executor-side in ``mapInPandas`` (one UDP socket per partition, one
+executor-side in ``io.with_columns`` (one UDP socket per partition, one
 request per row — SNMP's native transaction grain), so a 10⁶-device
 poll is partition-parallel.  The mini agent exists for loopback tests
 and value-oracled queries; against real devices only the host/port
@@ -18,8 +18,10 @@ import socket
 import struct
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = [
     "ber_encode_int",
@@ -196,39 +198,34 @@ def snmp_get(
     oid_col: str = "oid",
 ) -> DataFrame:
     """GetSNMP over the wire: one GetRequest per row, executor-side
-    (``mapInPandas``, one socket + monotonically increasing request-ids
-    per partition, response matched by request-id).  Returns (oid,
+    (``io.with_columns``, one socket + monotonically increasing
+    request-ids per partition, response matched by request-id).  Returns (oid,
     value_tag, value) — Counter32/Gauge32/TimeTicks/INTEGER values as
     longs, missing OIDs as null."""
 
     def run(batches):
-        import pandas as pd
-
-        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        sock.settimeout(10)
         rid = 0
-        for pdf in batches:
-            oids, tags, vals = [], [], []
-            for oid in pdf[oid_col]:
-                rid += 1
-                sock.sendto(
-                    snmp_get_request(rid, community, str(oid)),
-                    (host, port),
-                )
-                while True:
-                    data, _ = sock.recvfrom(65535)
-                    got_rid, _err, binds = snmp_parse_response(data)
-                    if got_rid == rid:
-                        break
-                o, t, v = binds[0]
-                oids.append(o)
-                tags.append(int(t))
-                vals.append(None if v is None else int(v))
-            yield pd.DataFrame(
-                {"oid": oids, "value_tag": tags, "value": vals}
-            )
-        sock.close()
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
+            sock.settimeout(10)
+            for (requested,) in batches:
+                oids, tags, vals = [], [], []
+                for oid in requested:
+                    rid += 1
+                    sock.sendto(
+                        snmp_get_request(rid, community, str(oid)),
+                        (host, port),
+                    )
+                    while True:
+                        data, _ = sock.recvfrom(65535)
+                        got_rid, _err, binds = snmp_parse_response(data)
+                        if got_rid == rid:
+                            break
+                    o, t, v = binds[0]
+                    oids.append(o)
+                    tags.append(int(t))
+                    vals.append(None if v is None else int(v))
+                yield oids, tags, vals
 
-    return df.select(oid_col).mapInPandas(
-        run, "oid string, value_tag int, value long"
-    )
+    # the response's oid replaces the requested one in place
+    oids = df.select(F.col(oid_col).alias("oid"))
+    return with_columns(oids, ["oid"], run, "oid string, value_tag int, value long")

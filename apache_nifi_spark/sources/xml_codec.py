@@ -24,18 +24,16 @@ def validate_xml(
     non-XSD mode performs; full XSD needs a schema engine this
     environment doesn't carry, documented).
 
-    mapInPandas over the content column with the stdlib parser (a REAL
+    ``io.with_columns`` over the content column with the stdlib parser (a REAL
     XML parser decides well-formedness, not a regex); emits ``valid``
     and the first ``validation_error`` label ('malformed', 'root:<tag>',
     or 'missing:<element>')."""
-    from collections.abc import Iterator
+    from apache_nifi_spark.io import with_columns
 
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for (docs,) in batches:
             valid, errs = [], []
-            for doc in pdf[content_col]:
+            for doc in docs:
                 err = None
                 try:
                     root = ET.fromstring(doc if doc is not None else "")
@@ -51,15 +49,8 @@ def validate_xml(
                                 break
                 valid.append(err is None)
                 errs.append(err)
-            pdf["valid"] = valid
-            pdf["validation_error"] = errs
-            yield pdf
+            yield valid, errs
 
-    from pyspark.sql.types import BooleanType, StringType, StructType
-
-    schema = (
-        StructType(list(df.schema.fields))
-        .add("valid", BooleanType())
-        .add("validation_error", StringType())
+    return with_columns(
+        df, [content_col], run, "valid boolean, validation_error string"
     )
-    return df.mapInPandas(run, schema)

@@ -256,16 +256,14 @@ def publish_amqp(df, host: str, port: int, exchange: str,
                  routing_key_col: str, payload_col: str):
     """One 0-9-1 connection per partition; every publish waits for its
     Basic.Ack confirm (at-least-once); appends ``published``."""
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("published", BooleanType())
+    from apache_nifi_spark.io import with_columns
 
     def run(batches):
         client = None
         try:
-            for pdf in batches:
+            for keys, payloads in batches:
                 oks = []
-                for rk, payload in zip(pdf[routing_key_col], pdf[payload_col]):
+                for rk, payload in zip(keys, payloads):
                     try:
                         if client is None:
                             client = _AmqpClient(host, port)
@@ -278,10 +276,9 @@ def publish_amqp(df, host: str, port: int, exchange: str,
                     except (OSError, ConnectionError, ValueError):
                         client = None
                         oks.append(False)
-                pdf["published"] = oks
-                yield pdf
+                yield oks,
         finally:
             if client is not None:
                 client.close()
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [routing_key_col, payload_col], run, "published boolean")

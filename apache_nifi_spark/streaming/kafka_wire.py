@@ -37,7 +37,7 @@ offset.
 
 Spark-first shape: producers run one wire connection per DataFrame
 partition (``publish_kafka_wire``); consumption is DISTRIBUTED — one
-Fetch per Kafka partition fanned out with ``mapInPandas`` over the
+Fetch per Kafka partition fanned out with ``io.with_columns`` over the
 partition list (``consume_kafka_wire``), exactly how Spark's real Kafka
 source assigns TopicPartitions to executors.
 """
@@ -721,22 +721,15 @@ def publish_kafka_wire(
     ``published``.  ``compression='gzip'`` ships v2 RecordBatches with
     the gzip attribute (negotiated via ApiVersions; requires a v3-capable
     broker)."""
-    from collections.abc import Iterator
+    from apache_nifi_spark.io import with_columns
 
-    import pandas as pd
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField("published", BooleanType())]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pdfs = [p for p in batches if len(p)]
+    def run(batches):
+        batches = list(batches)
         ok = False
-        if pdfs:
+        if any(keys for keys, _ in batches):
             routed: dict[int, list] = {}
-            for pdf in pdfs:
-                for k, v in zip(pdf[key_col], pdf[value_col]):
+            for keys, values in batches:
+                for k, v in zip(keys, values):
                     kb = None if k is None else str(k).encode("utf-8")
                     vb = None if v is None else str(v).encode("utf-8")
                     p = (zlib.crc32(kb) & 0xFFFFFFFF) % num_partitions if kb else 0
@@ -752,11 +745,10 @@ def publish_kafka_wire(
             finally:
                 if client is not None:
                     client.close()
-        for pdf in pdfs:
-            pdf["published"] = ok
-            yield pdf
+        for keys, _ in batches:
+            yield [ok] * len(keys),
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [key_col, value_col], run, "published boolean")
 
 
 def consume_kafka_wire(
@@ -773,40 +765,34 @@ def consume_kafka_wire(
     from offset 0 — the executor-per-partition assignment Spark's real
     Kafka source uses.  Returns the Kafka-shaped columns
     (key, value, topic, partition, offset)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
+
+    from apache_nifi_spark.io import with_columns
 
     parts = spark.range(num_partitions).select(
         F.col("id").cast("int").alias("partition")
     ).repartition(num_partitions)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(batches):
         client = None
         try:
-            for pdf in batches:
-                for p in pdf["partition"]:
+            for (partitions,) in batches:
+                fetched = []
+                for p in partitions:
                     if client is None:
                         client = _KafkaClient(
                             host, port, "anspark-consumer", timeout
                         )
-                    _hw, records = client.fetch(topic, int(p), 0,
-                                                force_v0=legacy_v0)
-                    yield pd.DataFrame(
-                        {
-                            "key": [k for (_o, k, _v) in records],
-                            "value": [v for (_o, _k, v) in records],
-                            "topic": [topic] * len(records),
-                            "partition": [int(p)] * len(records),
-                            "offset": [o for (o, _k, _v) in records],
-                        }
-                    )
+                    _hw, records = client.fetch(topic, p, 0, force_v0=legacy_v0)
+                    fetched.append(records)
+                yield fetched,
         finally:
             if client is not None:
                 client.close()
 
-    return parts.mapInPandas(
-        run,
-        "key binary, value binary, topic string, partition int, offset long",
+    return with_columns(
+        parts, ["partition"], run,
+        "records array<struct<offset: bigint, key: binary, value: binary>>",
+    ).select("partition", F.inline("records")).select(
+        "key", "value", F.lit(topic).alias("topic"), "partition", "offset"
     )

@@ -32,12 +32,11 @@ from __future__ import annotations
 import socket
 import struct
 import threading
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = ["MapCacheServer", "MapCacheClient", "put_map_cache", "fetch_map_cache"]
 
@@ -176,26 +175,22 @@ def put_map_cache(
     """PutDistributedMapCache: one connection per partition, one ``put``
     per record; appends ``cached`` (local ack)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = MapCacheClient(host, port)
         try:
-            for pdf in batches:
+            for keys, values in batches:
                 ok = []
-                for k, v in zip(pdf[key_col], pdf[value_col]):
+                for k, v in zip(keys, values):
                     if k is None:
                         ok.append(False)
                         continue
                     client.put(str(k).encode(), (b"" if v is None else str(v).encode()))
                     ok.append(True)
-                pdf["cached"] = ok
-                yield pdf
+                yield ok,
         finally:
             client.close()
 
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("cached", BooleanType())
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [key_col, value_col], run, "cached boolean")
 
 
 def fetch_map_cache(
@@ -204,20 +199,16 @@ def fetch_map_cache(
     """FetchDistributedMapCache: per-partition connection, ``get`` per
     record, fetched value (or NULL on miss) appended as ``out_col``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = MapCacheClient(host, port)
         try:
-            for pdf in batches:
+            for (keys,) in batches:
                 vals = []
-                for k in pdf[key_col]:
+                for k in keys:
                     v = None if k is None else client.get(str(k).encode())
                     vals.append(None if v is None else v.decode())
-                pdf[out_col] = vals
-                yield pdf
+                yield vals,
         finally:
             client.close()
 
-    from pyspark.sql.types import StringType, StructType
-
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [key_col], run, f"`{out_col}` string")

@@ -179,16 +179,14 @@ def publish_mqtt(df, host: str, port: int, topic_col: str, payload_col: str):
     """One wire connection per partition; one QoS1 PUBLISH per row with
     the PUBACK awaited (at-least-once, NiFi's PublishMQTT contract);
     appends ``published``."""
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("published", BooleanType())
+    from apache_nifi_spark.io import with_columns
 
     def run(batches):
         client = None
         try:
-            for pdf in batches:
+            for topics, payloads in batches:
                 oks = []
-                for topic, payload in zip(pdf[topic_col], pdf[payload_col]):
+                for topic, payload in zip(topics, payloads):
                     try:
                         if client is None:
                             client = _MqttClient(
@@ -204,10 +202,9 @@ def publish_mqtt(df, host: str, port: int, topic_col: str, payload_col: str):
                     except (OSError, ConnectionError):
                         client = None
                         oks.append(False)
-                pdf["published"] = oks
-                yield pdf
+                yield oks,
         finally:
             if client is not None:
                 client.close()
 
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [topic_col, payload_col], run, "published boolean")

@@ -28,12 +28,11 @@ from __future__ import annotations
 
 import socket
 import threading
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 
 __all__ = [
     "MiniRedisServer",
@@ -222,33 +221,25 @@ def put_redis_cache(
     df: DataFrame, host: str, port: int, key_col: str, value_col: str
 ) -> DataFrame:
     """PutDistributedMapCache (Redis service): one connection per
-    partition, one pipelined SET per record.  Returns the input plus
-    ``cached`` (reply was +OK)."""
-    fields = ", ".join(f"{c} string" for c in (key_col, value_col))
+    partition, one pipelined SET per record.  Returns the key and value
+    columns plus ``cached`` (reply was +OK)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = None
         try:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
+            for keys, values in batches:
                 if client is None:
                     client = RedisClient(host, port)
-                cmds = [
-                    [b"SET", str(k).encode(), str(v).encode()]
-                    for k, v in zip(pdf[key_col], pdf[value_col])
-                ]
-                replies = client.pipeline(cmds)
-                out = pdf[[key_col, value_col]].copy()
-                out["cached"] = [r == b"OK" for r in replies]
-                yield out
+                replies = client.pipeline(
+                    [[b"SET", str(k).encode(), str(v).encode()] for k, v in zip(keys, values)]
+                )
+                yield [r == b"OK" for r in replies],
         finally:
             if client is not None:
                 client.close()
 
-    return df.select(key_col, value_col).mapInPandas(
-        run, f"{fields}, cached boolean"
-    )
+    pairs = df.select(key_col, value_col)
+    return with_columns(pairs, [key_col, value_col], run, "cached boolean")
 
 
 def fetch_redis_cache(
@@ -258,27 +249,16 @@ def fetch_redis_cache(
     connection, pipelined GET per record; misses yield NULL.  Input
     columns pass through with their types."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = None
         try:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
+            for (keys,) in batches:
                 if client is None:
                     client = RedisClient(host, port)
-                replies = client.pipeline(
-                    [[b"GET", str(k).encode()] for k in pdf[key_col]]
-                )
-                pdf[out_col] = [
-                    None if r is None else bytes(r).decode("utf-8")
-                    for r in replies
-                ]
-                yield pdf
+                replies = client.pipeline([[b"GET", str(k).encode()] for k in keys])
+                yield [None if r is None else bytes(r).decode("utf-8") for r in replies],
         finally:
             if client is not None:
                 client.close()
 
-    from pyspark.sql.types import StringType, StructType
-
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [key_col], run, f"`{out_col}` string")

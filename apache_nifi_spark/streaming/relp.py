@@ -24,13 +24,11 @@ collectors in front); the landing dir feeds the streaming drain.
 from __future__ import annotations
 
 import socket
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
-from apache_nifi_spark.sinks.socket import _with_sent
+from apache_nifi_spark.io import with_columns
 from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["RelpLandingListener", "put_relp"]
@@ -130,7 +128,7 @@ def put_relp(
     with the ACK awaited (at-least-once); one connection per partition;
     ``sent`` reflects the server's 200 response."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         sock = net.connect(host, port, timeout)
         f = sock.makefile("rwb")
         txnr = 1
@@ -141,9 +139,9 @@ def put_relp(
             f.flush()
             rtx, rcmd, rdata = _read_frame(f)
             ok = rcmd == "rsp" and rdata.startswith(b"200")
-            for pdf in batches:
+            for (content,) in batches:
                 sent = []
-                for v in pdf[content_col]:
+                for v in content:
                     if v is None or not ok:
                         sent.append(False)
                         continue
@@ -160,8 +158,7 @@ def put_relp(
                     except (OSError, ConnectionError):
                         ok = False
                         sent.append(False)
-                pdf["sent"] = sent
-                yield pdf
+                yield sent,
             if ok:
                 try:
                     txnr += 1
@@ -177,4 +174,4 @@ def put_relp(
                 pass
             sock.close()
 
-    return _with_sent(df, run)
+    return with_columns(df, [content_col], run, "sent boolean")

@@ -24,8 +24,8 @@ socket protocol modeled on the public NiFi raw site-to-site exchange:
   contract in ``streaming/listen.py``), so a crash anywhere before
   TRANSACTION_FINISHED leaves no partial batch.
 
-Spark-first shape: the sender is a per-partition ``mapInPandas`` client
-(one TLS connection + ONE transaction per partition — connection and
+Spark-first shape: the sender is a per-partition ``io.with_columns``
+client (one TLS connection + ONE transaction per partition — connection and
 confirmation cost amortize across the batch; partitions fan out across
 executors, exactly how a 1000-executor cluster would feed a peer
 cluster's input ports in parallel).  Landed transactions are JSON-lines
@@ -373,46 +373,43 @@ def s2s_send(
     when the caller only audits delivery (the data never needs to come
     back from the executors).
     """
-    from collections.abc import Iterator
+    from apache_nifi_spark.io import with_columns
 
-    import pandas as pd
-    from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+    cols = [content_col, *attr_cols]
 
-    schema = (
-        StructType(
-            [StructField("n_rows", LongType()), StructField("delivered", BooleanType())]
-        )
-        if summary
-        else StructType(
-            list(df.schema.fields) + [StructField("delivered", BooleanType())]
-        )
-    )
+    def deliver(batches) -> tuple[int, bool]:
+        """Send a partition's ``cols`` value lists as ONE transaction:
+        ``(flowfiles, delivered)``."""
+        flowfiles = [
+            (dict(zip(attr_cols, attrs)), str(content).encode("utf-8"))
+            for contents, *attr_lists in batches
+            for content, *attrs in zip(contents, *attr_lists)
+        ]
+        if not flowfiles:
+            return 0, False
+        try:
+            _send_transaction(
+                host, port, cert_path, port_name, flowfiles, timeout,
+                _corrupt_crc=_corrupt_crc,
+            )
+            return len(flowfiles), True
+        except (ConnectionError, OSError):
+            return len(flowfiles), False
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pdfs = [p for p in batches if len(p)]
-        flowfiles: list[tuple[dict, bytes]] = []
-        for pdf in pdfs:
-            content_list = pdf[content_col].tolist()
-            attr_lists = [pdf[c].tolist() for c in attr_cols]
-            for i, content in enumerate(content_list):
-                attrs = {c: vals[i] for c, vals in zip(attr_cols, attr_lists)}
-                flowfiles.append((attrs, str(content).encode("utf-8")))
-        ok = False
-        if flowfiles:
-            try:
-                _send_transaction(
-                    host, port, cert_path, port_name, flowfiles, timeout,
-                    _corrupt_crc=_corrupt_crc,
-                )
-                ok = True
-            except (ConnectionError, OSError):
-                ok = False
-        if summary:
-            if flowfiles:
-                yield pd.DataFrame({"n_rows": [len(flowfiles)], "delivered": [ok]})
-            return
-        for pdf in pdfs:
-            pdf["delivered"] = ok
-            yield pdf
+    if summary:
+        def audit(batches):
+            import pyarrow as pa
 
-    return df.mapInPandas(run, schema)
+            n, ok = deliver([b.column(c).to_pylist() for c in cols] for b in batches)
+            if n:
+                yield pa.record_batch({"n_rows": pa.array([n], pa.int64()), "delivered": [ok]})
+
+        return df.mapInArrow(audit, "n_rows long, delivered boolean")
+
+    def run(batches):
+        batches = list(batches)
+        _, ok = deliver(batches)
+        for contents, *_ in batches:
+            yield [ok] * len(contents),
+
+    return with_columns(df, cols, run, "delivered boolean")

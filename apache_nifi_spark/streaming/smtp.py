@@ -19,12 +19,11 @@ dir is the interface the drain consumes.
 from __future__ import annotations
 
 import socket
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
+from apache_nifi_spark.io import with_columns
 from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = ["MiniSmtpServer", "put_smtp"]
@@ -120,17 +119,15 @@ def put_smtp(
     """PutEmail's delivery half over real SMTP: one smtplib connection
     per partition, one transaction per record; appends ``delivered``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import smtplib
 
         client = smtplib.SMTP(host, port, timeout=10)
         net.nodelay(client.sock)
         try:
-            for pdf in batches:
+            for frms, tos, raws in batches:
                 ok = []
-                for frm, to, raw in zip(
-                    pdf[from_col], pdf[to_col], pdf[content_col]
-                ):
+                for frm, to, raw in zip(frms, tos, raws):
                     if raw is None:
                         ok.append(False)
                         continue
@@ -140,15 +137,11 @@ def put_smtp(
                         ok.append(True)
                     except smtplib.SMTPException:
                         ok.append(False)
-                pdf["delivered"] = ok
-                yield pdf
+                yield ok,
         finally:
             try:
                 client.quit()
             except smtplib.SMTPException:
                 pass
 
-    from pyspark.sql.types import BooleanType, StructType
-
-    schema = StructType(list(df.schema.fields)).add("delivered", BooleanType())
-    return df.mapInPandas(run, schema)
+    return with_columns(df, [from_col, to_col, content_col], run, "delivered boolean")

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -48,6 +46,7 @@ def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd
     integer cents keep the fold exact (and oracle-comparable).
     """
     import numpy as np
+    import pandas as pd
 
     (n, cents) = state.get if state.exists else (0, 0)
     # A group's rows may arrive as several Arrow chunks with no global

@@ -264,27 +264,18 @@ def publish_stomp(
     """One STOMP connection per partition; pipelined SENDs (JMS
     properties from ``header_cols`` become STOMP headers) with ONE
     receipt-confirmed DISCONNECT; appends ``published``."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import BooleanType, StructField, StructType
+    from apache_nifi_spark.io import with_columns
 
     header_cols = list(header_cols or [])
-    schema = StructType(
-        list(df.schema.fields) + [StructField("published", BooleanType())]
-    )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pdfs = [p for p in batches if len(p)]
+    def run(batches):
+        batches = list(batches)
         ok = False
-        if pdfs:
+        if any(dests for dests, *_ in batches):
             client = None
             try:
                 client = _StompClient(host, port, timeout=timeout)
-                for pdf in pdfs:
-                    dests = pdf[destination_col].tolist()
-                    bodies = pdf[body_col].tolist()
-                    hdr_lists = [pdf[c].tolist() for c in header_cols]
+                for dests, bodies, *hdr_lists in batches:
                     for i, (dest, body) in enumerate(zip(dests, bodies)):
                         headers = {
                             c: str(vals[i])
@@ -298,8 +289,9 @@ def publish_stomp(
             finally:
                 if client is not None:
                     client.close()
-        for pdf in pdfs:
-            pdf["published"] = ok
-            yield pdf
+        for dests, *_ in batches:
+            yield [ok] * len(dests),
 
-    return df.mapInPandas(run, schema)
+    return with_columns(
+        df, [destination_col, body_col, *header_cols], run, "published boolean"
+    )

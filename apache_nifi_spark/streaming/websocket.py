@@ -13,7 +13,7 @@ exact bytes:
   messages, answers ping with pong, enforces the RFC's client-masking
   rule (unmasked client frame → close 1002), and lands each complete
   message as one file (the landing contract in ``streaming/listen.py``).
-- ``put_websocket`` — the PutWebSocket analog: ``mapInPandas`` with ONE
+- ``put_websocket`` — the PutWebSocket analog: ``io.with_columns`` with ONE
   client connection per PARTITION (handshake amortized across the
   batch, partitions fan out across executors — the PutTCP/InvokeHTTP
   shape), each row shipped as one masked text frame, a proper close
@@ -31,13 +31,10 @@ import hashlib
 import os
 import socket
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from apache_nifi_spark import net
-from apache_nifi_spark.sinks.socket import _with_sent
+from apache_nifi_spark.io import with_columns
 from apache_nifi_spark.streaming.listen import Landing
 
 __all__ = [
@@ -194,7 +191,7 @@ def put_websocket(
     """One masked text frame per record, one connection + handshake per
     partition, close handshake on drain; appends ``sent``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         sock = net.connect(host, port, timeout)
         ok = True
         try:
@@ -202,9 +199,9 @@ def put_websocket(
         except (OSError, ConnectionError):
             ok = False
         try:
-            for pdf in batches:
+            for (content,) in batches:
                 sent = []
-                for v in pdf[content_col]:
+                for v in content:
                     if v is None or not ok:
                         sent.append(False)
                         continue
@@ -217,8 +214,7 @@ def put_websocket(
                     except OSError:
                         ok = False
                         sent.append(False)
-                pdf["sent"] = sent
-                yield pdf
+                yield sent,
             if ok:
                 try:
                     sock.sendall(
@@ -230,4 +226,4 @@ def put_websocket(
         finally:
             sock.close()
 
-    return _with_sent(df, run)
+    return with_columns(df, [content_col], run, "sent boolean")

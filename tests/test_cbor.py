@@ -98,3 +98,17 @@ def test_minimal_width_integers_at_boundaries():
                      (65536, 5), (4294967295, 5), (4294967296, 9)]:
         assert len(cbor_encode(n)) == width
         assert cbor_decode(cbor_encode(n))[0] == n
+
+
+def test_write_cbor_keeps_bigint_above_2_53_next_to_null(spark, tmp_path):
+    """The writer reads Arrow batches: a nullable bigint is never a
+    float64 on its way to the encoder."""
+    from pyspark.sql import types as T
+
+    from apache_nifi_spark.sources.cbor_codec import read_cbor, write_cbor
+
+    schema = T.StructType([T.StructField("v", T.LongType())])
+    df = spark.createDataFrame([(2**60 + 1,), (None,)], schema).coalesce(1)
+    write_cbor(df, str(tmp_path / "out"))
+    got = [r.v for r in read_cbor(spark, str(tmp_path / "out"), schema).collect()]
+    assert sorted(got, key=lambda v: v is None) == [2**60 + 1, None]

@@ -1,8 +1,10 @@
-"""``io.flat_map``: the engine's one Arrow row seam."""
+"""``io.flat_map``, the Arrow seam for Python code that makes new rows, and
+the audits that keep engine code on the Arrow seams."""
 
 from __future__ import annotations
 
 import datetime as dt
+import pathlib
 
 from pyspark.sql import types as T
 
@@ -79,71 +81,43 @@ def test_ddl_string_and_struct_type_schemas_agree(spark):
     assert sorted(tuple(r) for r in a.collect()) == [(0, 0.0, "a"), (1, 0.5, None), (2, 1.0, "c")]
 
 
-#: ``mapInPandas`` callbacks that may still build their output frame by
-#: hand: each opens a connection (or a file) once per partition and keeps
-#: it across the partition's rows, which a per-row ``flat_map`` cannot.
-#: Keyed by (module, the public function that owns the callback).
-PER_PARTITION_CALLBACKS = {
-    ("sources/dns_wire.py", "dns_lookup"),
-    ("sources/snmp.py", "snmp_get"),
-    ("sources/imap.py", "consume_imap"),  # IMAP FETCH
-    ("sources/imap.py", "consume_pop3"),  # POP3 RETR
-    ("streaming/kafka_wire.py", "consume_kafka_wire"),  # Kafka Fetch
-    ("streaming/s2s_wire.py", "s2s_send"),  # one S2S transaction
-    ("sources/cbor_codec.py", "write_cbor"),  # one output file
-}
-
-
-def test_no_hand_built_row_frames_in_library_source():
-    """Static audit: a ``mapInPandas`` callback that assembles a
-    ``pd.DataFrame`` row by row is a row map, and row maps go through
-    ``io.flat_map`` (AST walk: the callback is the named def the call
-    passes, resolved in the calling function first)."""
+def test_map_in_pandas_only_in_flowfile_transform():
+    """Static audit: engine code reaches Python over Arrow (``io.flat_map``
+    for new rows, ``io.with_columns`` for kept rows, or ``mapInArrow``);
+    the one ``mapInPandas`` left is ``flowfile_transform``, whose public
+    contract is a user-supplied pandas function (AST walk; keyed by
+    module and the top-level function that makes the call)."""
     import ast
-    import pathlib
 
     from apache_nifi_spark import io
 
-    def calls(node, scopes):
-        """(mapInPandas call, enclosing scopes innermost last) pairs."""
-        if isinstance(node, ast.FunctionDef):
-            scopes = [*scopes, node]
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "mapInPandas"
-            and node.args
-            and isinstance(node.args[0], ast.Name)
-        ):
-            yield node, scopes
-        for child in ast.iter_child_nodes(node):
-            yield from calls(child, scopes)
-
-    def callback(scopes, name):
-        for scope in reversed(scopes):
-            for node in ast.walk(scope):
-                if isinstance(node, ast.FunctionDef) and node.name == name and node is not scope:
-                    return node
-        return None
-
     root = pathlib.Path(io.__file__).parent
-    offenders, exempt_seen = [], set()
+    sites = []
     for path in sorted(root.rglob("*.py")):
-        rel = str(path.relative_to(root))
         tree = ast.parse(path.read_text())
-        for node, scopes in calls(tree, [tree]):
-            cb = callback(scopes, node.args[0].id)
-            if cb is None or not any(
-                isinstance(c, ast.Call) and ast.unparse(c.func) == "pd.DataFrame"
-                for c in ast.walk(cb)
-            ):
-                continue
-            key = (rel, scopes[1].name if len(scopes) > 1 else "<module>")
-            if key in PER_PARTITION_CALLBACKS:
-                exempt_seen.add(key)
-            else:
-                offenders.append(f"{rel}:{node.lineno}")
-    assert not offenders, f"hand-built mapInPandas row frames (use io.flat_map): {offenders}"
-    assert exempt_seen == PER_PARTITION_CALLBACKS, (
-        f"stale exemptions: {sorted(PER_PARTITION_CALLBACKS - exempt_seen)}"
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"
+                ):
+                    owner = getattr(top, "name", "<module>")
+                    sites.append((str(path.relative_to(root)), owner, node.lineno))
+    assert [s[:2] for s in sites] == [("operators/scripted.py", "flowfile_transform")], sites
+
+
+def test_registry_import_loads_neither_pandas_nor_pyarrow():
+    """Building the query registry needs no Python data library: pandas
+    and pyarrow load in the workers that run a seam, not in the driver's
+    import."""
+    import subprocess
+    import sys
+
+    code = (
+        "import apache_nifi_spark.registry, sys; "
+        "loaded = {'pandas', 'pyarrow'} & set(sys.modules); "
+        "assert not loaded, loaded"
     )
+    root = pathlib.Path(__file__).resolve().parent.parent
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=root)

@@ -591,6 +591,25 @@ def test_oracled_outputs_expose_no_array_map_struct_columns(registry_frames):
     )
 
 
+#: Characters in a registry query's analyzed plan (``treeString``): twice
+#: the largest at sf0.001 (``stats_cohens_kappa``, 37975).  An expression
+#: that repeats an operand per nesting level grows past it fast: the
+#: geohash ``decode(encode(p))`` that named each operand per bit measured
+#: 312410 at precision 3.
+MAX_ANALYZED_PLAN_CHARS = 2 * 37975
+
+
+def test_analyzed_plan_size_is_bounded(registry_frames):
+    """Construction budget: a plan whose expression tree blows up costs
+    analysis time on the driver before a task runs."""
+    sizes = {
+        name: len(df._jdf.queryExecution().analyzed().treeString())
+        for name, df in registry_frames.items()
+    }
+    over = {n: s for n, s in sizes.items() if s > MAX_ANALYZED_PLAN_CHARS}
+    assert not over, f"analyzed plans over {MAX_ANALYZED_PLAN_CHARS} chars: {over}"
+
+
 def test_countmin_production_never_builds_full_vocab_table(spark, sf_dir):
     """Round-11 verdict item 2: the production two-pass count-min must
     never materialize a full-vocabulary exact-count table — the ONLY
