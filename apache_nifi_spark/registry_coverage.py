@@ -2857,8 +2857,8 @@ def iceberg_snapshot_q(spark, sf_dir):
     """Iceberg snapshot read (the open table spec, iceberg.apache.org —
     implemented over the repo's from-scratch Avro codec, no Iceberg
     jar): version-hint → metadata JSON → the current snapshot's Avro
-    manifest LIST (control-plane) → MANIFESTS decoded distributedly
-    (one binaryFile task each) → active entries (status ≠ DELETED) →
+    manifest LIST → MANIFESTS, all decoded on the driver
+    (control-plane) → active entries (status ≠ DELETED) →
     plain parquet scan.  Snapshot 2 deleted quarter 0 via a manifest
     rewrite, so equality with the oracle proves the status field and
     the self-contained-snapshot semantics (no cross-commit replay —

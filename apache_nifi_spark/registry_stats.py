@@ -1138,7 +1138,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         if version > 1:
             cur_files = [
                 r["path"]
-                for r in _delta_active_rows(sp, root)
+                for r in _delta_active_rows(root)
                 # control-plane: O(active files) manifest rows, local replay
                 if int(r["path"].split("bucket=")[1].split("/")[0])
                 in affected

@@ -15,13 +15,13 @@ protocol defines for 10⁶-commit logs.  Time travel to a version below
 the checkpoint falls back to full JSON replay (the JSON commits are
 retained, as the spec's VACUUM-less default does).
 
-Spark-first shape: the commit list is a control-plane directory listing
-(O(commits)); the ACTIONS parse distributedly — ``spark.read.json``
-over the commit files with the version lifted from the file name — and
-the latest-action-per-path resolution is one ``max_by`` aggregation at
-file grain (O(files), the table's manifest scale, not its data scale).
-The resolved file list then feeds a plain parquet scan, so pruning /
-pushdown work exactly as for any parquet read."""
+Driver-side shape: the commit list is one directory listing
+(O(commits)) and the log replays on the driver — one JSON parse per
+commit in the tail plus one pyarrow read of the checkpoint's add rows,
+latest action per path wins (O(files), the table's manifest scale, not
+its data scale; the reference implementation replays on the driver
+too).  The resolved file list then feeds a plain parquet scan, so
+pruning / pushdown work exactly as for any parquet read."""
 
 from __future__ import annotations
 
@@ -70,11 +70,6 @@ def _last_checkpoint_pointer(log_dir: str) -> dict | None:
         return json.loads(f.read())
 
 
-def _last_checkpoint_version(log_dir: str) -> int | None:
-    ptr = _last_checkpoint_pointer(log_dir)
-    return None if ptr is None else int(ptr["version"])
-
-
 def write_checkpoint(
     spark: SparkSession, table_path: str, version: int
 ) -> str:
@@ -97,9 +92,8 @@ def write_checkpoint(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    active = _delta_active_rows(
-        spark, table_path, version, use_checkpoint=False
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    active = _delta_active_rows(table_path, version, use_checkpoint=False)
     log_dir = os.path.join(table_path, "_delta_log")
     add_t = pa.struct(
         [
@@ -171,58 +165,17 @@ def write_checkpoint(
     return ckpt
 
 
-def _tail_actions(
-    spark: SparkSession, log_dir: str, commits: list[str]
-) -> DataFrame:
-    """(path, size, _is_add, _version) action rows from JSON commits."""
-    paths = [os.path.join(log_dir, c) for c in commits]
-    raw = spark.read.json(
-        paths,
-        schema=(
-            "add struct<path: string, size: bigint, deletionVector: "
-            "struct<storageType: string, pathOrInlineDv: string, "
-            "sizeInBytes: int, cardinality: bigint>>, "
-            "remove struct<path: string>"
-        ),
-    ).withColumn(
-        "_version",
-        F.regexp_extract(F.input_file_name(), r"(\d{20})\.json", 1)
-        .cast("long"),
-    )
-    return raw.select(
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add.size").alias("size"),
-        F.col("add.path").isNotNull().alias("_is_add"),
-        F.when(
-            F.col("add.deletionVector.storageType").isNotNull(),
-            F.to_json(F.col("add.deletionVector")),
-        ).alias("dv"),
-        "_version",
-    ).filter(F.col("path").isNotNull())
-
-
-#: Σ log bytes (JSON tail + classic checkpoint) at or below which the
-#: log replay happens DRIVER-SIDE with zero Spark jobs (r16
-#: optimization).  The Delta log is control-plane metadata — the
-#: reference implementation replays it on the driver too; above the
-#: threshold (or for v2 checkpoints / non-local paths) the distributed
-#: replay below takes over unchanged.
-_LOCAL_LOG_BYTES = 8 << 20
-
-
-#: the deletionVector fields the distributed path's read schema declares,
-#: in schema order — _dv_json must match to_json over exactly this struct
+#: the deletionVector fields of the checkpoint's add struct, in schema
+#: order — the field order of every ``dv`` JSON string this module emits
 _DV_FIELDS = ("storageType", "pathOrInlineDv", "sizeInBytes", "cardinality")
 
 
 def _dv_json(dv: dict | None) -> str | None:
-    """Serialize an add's deletionVector struct BYTE-identically to the
-    distributed path's ``to_json`` over the declared 4-field struct:
-    compact separators, schema field order, null fields dropped, extra
-    keys (offset, maxRowIndex — legal per PROTOCOL.md) never read.
-    None when absent (storageType null).  Keeping the two serializations
-    byte-equal is what lets tests/test_metadata_local.py assert
-    local ≡ distributed row sets on DV-bearing tables."""
+    """Serialize an add's deletionVector as compact JSON over
+    ``_DV_FIELDS`` in that order, null fields dropped, extra keys
+    (offset, maxRowIndex — legal per PROTOCOL.md) never read.  None
+    when absent (storageType null).  One canonical string per vector,
+    whichever key order the writer used."""
     if not dv or dv.get("storageType") is None:
         return None
     return json.dumps(
@@ -231,96 +184,67 @@ def _dv_json(dv: dict | None) -> str | None:
     )
 
 
-def _delta_active_rows(
-    spark: SparkSession,
-    table_path: str,
-    version: int | None = None,
-    use_checkpoint: bool = True,
-) -> list[dict]:
-    """Active-file rows as a driver-side list: every internal consumer
-    of :func:`delta_active_files` immediately ``collect()``s — a
-    distributed JSON-read + groupBy job per snapshot read for
-    kilobyte-scale log metadata.  Below ``_LOCAL_LOG_BYTES`` this
-    replays the log on the driver (same latest-action-wins
-    reconciliation, same checkpoint-base + JSON-tail structure); above
-    it, for v2 checkpoints, or on any I/O surprise it falls back to
-    the distributed replay, unchanged."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    try:
-        commits = _list_commits(log_dir)
-        if version is not None:
-            commits = [c for c in commits if int(c[:-5]) <= version]
-        ptr = _last_checkpoint_pointer(log_dir) if use_checkpoint else None
-        ckpt_v = None if ptr is None else int(ptr["version"])
-        state: dict[str, dict] = {}
-        use_ckpt = ckpt_v is not None and (version is None or version >= ckpt_v)
-        if use_ckpt and "v2Checkpoint" in (ptr or {}):
-            raise _FallBack()
-        tail = (
-            [c for c in commits if int(c[:-5]) > ckpt_v] if use_ckpt else commits
-        )
-        if not use_ckpt and not commits:
-            raise ValueError(f"no delta commits at or below {version}")
-        total = sum(
-            os.stat(os.path.join(log_dir, c)).st_size for c in tail
-        )
-        ckpt_path = None
-        if use_ckpt:
-            ckpt_path = os.path.join(
-                log_dir, f"{ckpt_v:020d}.checkpoint.parquet"
-            )
-            total += os.stat(ckpt_path).st_size
-        if total > _LOCAL_LOG_BYTES:
-            raise _FallBack()
-        if ckpt_path is not None:
-            import pyarrow.parquet as pq
+def _commit_actions(log_dir: str, version: int) -> list[dict]:
+    """The actions of commit ``version``, one JSON document per line in
+    file order (the spec's framing)."""
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as f:
+        return [json.loads(ln) for ln in f if ln.strip()]
 
-            t = pq.read_table(ckpt_path, columns=["add", "added_version"])
+
+def _add_row(add: dict, version: int) -> dict:
+    return {
+        "path": add["path"],
+        "size": add.get("size"),
+        "dv": _dv_json(add.get("deletionVector")),
+        "added_version": version,
+    }
+
+
+def _delta_active_rows(
+    table_path: str, version: int | None = None, use_checkpoint: bool = True
+) -> list[dict]:
+    """Replay the log up to ``version`` (default: latest) on the driver
+    → the active files as (path, size, dv, added_version) dicts.  Latest
+    action per path wins, exactly the protocol's reconciliation rule; a
+    remove as the latest action drops the file.
+
+    With a ``_last_checkpoint`` present (and ``use_checkpoint``), the
+    base state loads from the checkpoint's add rows — the classic
+    parquet file, or a v2 checkpoint's sidecars — and ONLY the JSON
+    tail (> checkpoint version) replays: commits at or below the
+    checkpoint are never opened.  Checkpoint rows carry their original
+    add version, so provenance matches a full replay."""
+    import pyarrow.parquet as pq
+
+    log_dir = os.path.join(table_path, "_delta_log")
+    versions = [int(c[:-5]) for c in _list_commits(log_dir)]
+    if version is not None:
+        versions = [v for v in versions if v <= version]
+    ptr = _last_checkpoint_pointer(log_dir) if use_checkpoint else None
+    ckpt_v = None if ptr is None else int(ptr["version"])
+    state: dict[str, dict | None] = {}  # path → row; None once removed
+    if ckpt_v is not None and (version is None or version >= ckpt_v):
+        if "v2Checkpoint" in ptr:
+            bases = _v2_checkpoint_base(log_dir, ptr)
+        else:
+            bases = [os.path.join(log_dir, f"{ckpt_v:020d}.checkpoint.parquet")]
+        for p in bases:
+            t = pq.read_table(p, columns=["add", "added_version"])
             for add, av in zip(
                 t.column("add").to_pylist(), t.column("added_version").to_pylist()
             ):
-                if add is None:
-                    continue  # protocol/metaData rows
-                state[add["path"]] = {
-                    "path": add["path"],
-                    "size": add["size"],
-                    "dv": _dv_json(add.get("deletionVector")),
-                    "added_version": av,
-                    "_is_add": True,
-                }
-        for c in tail:
-            v = int(c[:-5])
-            with open(os.path.join(log_dir, c)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    a = json.loads(line)
-                    if "add" in a:
-                        add = a["add"]
-                        state[add["path"]] = {
-                            "path": add["path"],
-                            "size": add.get("size"),
-                            "dv": _dv_json(add.get("deletionVector")),
-                            "added_version": v,
-                            "_is_add": True,
-                        }
-                    elif "remove" in a and a["remove"].get("path"):
-                        state[a["remove"]["path"]] = {"_is_add": False}
-        return [
-            {k: r[k] for k in ("path", "size", "dv", "added_version")}
-            for r in state.values()
-            if r["_is_add"]
-        ]
-    except ValueError:
-        raise
-    except (_FallBack, OSError, KeyError):
-        return delta_active_files(
-            spark, table_path, version, use_checkpoint
-        ).collect()  # control-plane: O(active files) manifest rows
-
-
-class _FallBack(Exception):
-    """Internal: route to the distributed log replay."""
+                if add is not None:  # skip protocol/metaData rows
+                    state[add["path"]] = _add_row(add, av)
+        versions = [v for v in versions if v > ckpt_v]
+    elif not versions:
+        raise ValueError(f"no delta commits at or below {version}")
+    for v in versions:
+        for a in _commit_actions(log_dir, v):
+            if "add" in a:
+                state[a["add"]["path"]] = _add_row(a["add"], v)
+            elif "remove" in a and a["remove"].get("path"):
+                state[a["remove"]["path"]] = None
+    return [r for r in state.values() if r is not None]
 
 
 #: commit files are EXACTLY 20 digits + .json (PROTOCOL.md framing);
@@ -340,73 +264,15 @@ def delta_active_files(
     version: int | None = None,
     use_checkpoint: bool = True,
 ) -> DataFrame:
-    """Replay the log up to ``version`` (default: latest) → (path, size,
-    added_version): the files active in that snapshot.  Latest action
-    per path wins, exactly the protocol's reconciliation rule; a remove
-    as the latest action drops the file.
-
-    With a ``_last_checkpoint`` present (and ``use_checkpoint``), the
-    base state loads from the parquet checkpoint and ONLY the JSON tail
-    (> checkpoint version) replays — commits at or below the checkpoint
-    are never opened.  Checkpoint rows carry their original add version,
-    and every tail action's version exceeds the checkpoint's, so the
-    same ``max_by`` reconciliation applies to the union unchanged."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    commits = _list_commits(
-        log_dir
-    )  # control-plane: O(commits) directory listing
-    if version is not None:
-        commits = [c for c in commits if int(c[:-5]) <= version]
-    ptr = _last_checkpoint_pointer(log_dir) if use_checkpoint else None
-    ckpt_v = None if ptr is None else int(ptr["version"])
-    if ckpt_v is not None and (version is None or version >= ckpt_v):
-        if "v2Checkpoint" in (ptr or {}):
-            base = _v2_checkpoint_base(spark, log_dir, ptr)
-            tail = [c for c in commits if int(c[:-5]) > ckpt_v]
-            acts = base.unionByName(
-                _tail_actions(spark, log_dir, tail)
-            ) if tail else base
-            latest = acts.groupBy("path").agg(
-                F.max_by("_is_add", "_version").alias("_is_add"),
-                F.max_by("size", "_version").alias("size"),
-                F.max_by("dv", "_version").alias("dv"),
-                F.max("_version").alias("added_version"),
-            )
-            return latest.filter(F.col("_is_add")).select(
-                "path", "size", "dv", "added_version"
-            )
-        base = (
-            spark.read.parquet(
-                os.path.join(log_dir, f"{ckpt_v:020d}.checkpoint.parquet")
-            )
-            .filter(F.col("add").isNotNull())  # skip protocol/metaData rows
-            .select(
-                F.col("add.path").alias("path"),
-                F.col("add.size").alias("size"),
-                F.lit(True).alias("_is_add"),
-                F.when(
-                    F.col("add.deletionVector.storageType").isNotNull(),
-                    F.to_json(F.col("add.deletionVector")),
-                ).alias("dv"),
-                F.col("added_version").alias("_version"),
-            )
-        )
-        tail = [c for c in commits if int(c[:-5]) > ckpt_v]
-        acts = base.unionByName(
-            _tail_actions(spark, log_dir, tail)
-        ) if tail else base
-    else:
-        if not commits:
-            raise ValueError(f"no delta commits at or below {version}")
-        acts = _tail_actions(spark, log_dir, commits)
-    latest = acts.groupBy("path").agg(
-        F.max_by("_is_add", "_version").alias("_is_add"),
-        F.max_by("size", "_version").alias("size"),
-        F.max_by("dv", "_version").alias("dv"),
-        F.max("_version").alias("added_version"),
-    )
-    return latest.filter(F.col("_is_add")).select(
-        "path", "size", "dv", "added_version"
+    """The files active in the snapshot at ``version`` (default:
+    latest) as a (path, size, dv, added_version) frame over the driver
+    replay of :func:`_delta_active_rows`."""
+    return spark.createDataFrame(
+        [
+            (r["path"], r["size"], r["dv"], r["added_version"])
+            for r in _delta_active_rows(table_path, version, use_checkpoint)
+        ],
+        "path string, size long, dv string, added_version long",
     )
 
 
@@ -441,9 +307,8 @@ def read_delta_snapshot(
     A snapshot whose files are gone (time travel below a
     :func:`delta_vacuum` cutoff) raises ``FileNotFoundError`` before
     Spark sees a path."""
-    rows = _delta_active_rows(
-        spark, table_path, version
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    rows = _delta_active_rows(table_path, version)
     if not rows:
         raise ValueError("empty delta snapshot")
     missing = [
@@ -492,9 +357,7 @@ def delta_delete_rows(
 
     current = {
         r["path"]: r
-        for r in _delta_active_rows(
-            spark, table_path
-        )  # control-plane: O(active files) manifest rows
+        for r in _delta_active_rows(table_path)  # control-plane: O(files)
     }
     log_dir = os.path.join(table_path, "_delta_log")
     next_v = 1 + max(
@@ -546,9 +409,8 @@ def delta_optimize(
     the selected files (the snapshot reader's own machinery applies
     the DVs); only the O(selected files) action list touches the
     driver.  Returns the OPTIMIZE commit's version."""
-    active = _delta_active_rows(
-        spark, table_path
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    active = _delta_active_rows(table_path)
     inputs = [r for r in active if r["size"] < small_file_threshold]
     if len(inputs) <= target_files:
         raise ValueError("nothing to compact below the threshold")
@@ -622,18 +484,14 @@ def delta_vacuum(
     for v in [v for v in versions if v >= retain_from_version]:
         referenced |= {
             r["path"]
-            for r in _delta_active_rows(
-                spark, table_path, v
-            )  # control-plane: O(active files) manifest rows
+            for r in _delta_active_rows(table_path, v)  # control-plane: O(files)
         }
     # every path the log EVER added (any version) is a candidate
     ever = {
-        r["path"]
-        for r in _tail_actions(
-            spark, log_dir, [f"{v:020d}.json" for v in versions]
-        )
-        .filter("_is_add")
-        .collect()  # control-plane: O(log actions) manifest rows
+        a["add"]["path"]
+        for v in versions
+        for a in _commit_actions(log_dir, v)
+        if "add" in a
     }
     doomed = sorted(ever - referenced)
     for rel in doomed:
@@ -715,8 +573,7 @@ def read_delta_changes(
     for v in versions:
         if not (from_version <= v <= hi):
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as f:
-            acts = [json.loads(ln) for ln in f if ln.strip()]
+        acts = _commit_actions(log_dir, v)
         cdc = [a["cdc"]["path"] for a in acts if "cdc" in a]
         if cdc:
             df = spark.read.parquet(
@@ -753,9 +610,8 @@ def read_delta_changes(
             removes = [p for p in removes if p not in dv_paths]
             prior: dict[str, set[int]] = {}
             try:
-                for r in _delta_active_rows(
-                    spark, table_path, v - 1
-                ):  # control-plane: O(active files) manifest
+                # control-plane: O(active files) manifest
+                for r in _delta_active_rows(table_path, v - 1):
                     if r["dv"]:
                         from apache_nifi_spark.sources.dv import (
                             read_inline_dv,
@@ -826,9 +682,7 @@ def delta_latest_metadata(
     for v in versions:
         if version is not None and v > version:
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as f:
-            acts = [json.loads(ln) for ln in f if ln.strip()]
-        for a in reversed(acts):
+        for a in reversed(_commit_actions(log_dir, v)):
             if "metaData" in a:
                 return a["metaData"]
     return None
@@ -882,9 +736,8 @@ def read_delta_snapshot_mapped(
     mapping = _column_mapping(meta) if meta else None
     if mapping is None:
         return read_delta_snapshot(spark, table_path, version)
-    rows = _delta_active_rows(
-        spark, table_path, version
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    rows = _delta_active_rows(table_path, version)
     if not rows:
         raise ValueError("empty delta snapshot")
     if any(r["dv"] for r in rows):
@@ -924,9 +777,8 @@ def write_checkpoint_v2(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    active = _delta_active_rows(
-        spark, table_path, version, use_checkpoint=False
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    active = _delta_active_rows(table_path, version, use_checkpoint=False)
     log_dir = os.path.join(table_path, "_delta_log")
     side_dir = os.path.join(log_dir, "_sidecars")
     os.makedirs(side_dir, exist_ok=True)
@@ -1010,31 +862,17 @@ def write_checkpoint_v2(
     return os.path.join(log_dir, name)
 
 
-def _v2_checkpoint_base(
-    spark: SparkSession, log_dir: str, pointer: dict
-) -> DataFrame:
-    """Base action state from a v2 checkpoint: top file → sidecar
-    list (manifest grain) → one parquet scan over the sidecars."""
-    top = os.path.join(log_dir, pointer["v2Checkpoint"])
+def _v2_checkpoint_base(log_dir: str, pointer: dict) -> list[str]:
+    """The sidecar files of a v2 checkpoint, listed by its top file's
+    ``sidecar`` actions.  Each carries the classic checkpoint's
+    ``add``/``added_version`` columns (:func:`write_checkpoint_v2`)."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(top, columns=["sidecar"]).to_pylist()
-    # control-plane: O(sidecars) rows from the kilobyte top file
-    side_paths = [
-        os.path.join(log_dir, "_sidecars", r["sidecar"]["path"])
-        for r in t
-        if r["sidecar"] is not None
-    ]
-    return (
-        spark.read.parquet(*side_paths)
-        .select(
-            F.col("add.path").alias("path"),
-            F.col("add.size").alias("size"),
-            F.lit(True).alias("_is_add"),
-            F.when(
-                F.col("add.deletionVector.storageType").isNotNull(),
-                F.to_json(F.col("add.deletionVector")),
-            ).alias("dv"),
-            F.col("added_version").alias("_version"),
-        )
+    top = pq.read_table(
+        os.path.join(log_dir, pointer["v2Checkpoint"]), columns=["sidecar"]
     )
+    return [
+        os.path.join(log_dir, "_sidecars", s["path"])
+        for s in top.column("sidecar").to_pylist()
+        if s is not None
+    ]

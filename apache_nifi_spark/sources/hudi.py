@@ -17,12 +17,12 @@ superseded slices).  Snapshot at instant T = for each file group, the
 latest completed slice ≤ T, minus groups replaced by a completed
 replacecommit ≤ T.
 
-Spark-first shape: the instant list is a control-plane directory
-listing (O(instants)); commit METADATA parses distributedly —
-``spark.read`` wholetext over the completed instant files with
-``from_json`` on the spec's write-stats map — and latest-slice
-resolution is one ``max_by`` at file-group grain (O(file groups), the
-table's manifest scale, not its data scale).  The resolved slice list
+Driver-side shape: the instant list is a control-plane directory
+listing (O(instants)); commit METADATA parses on the driver — one JSON
+document per completed instant — and latest-slice resolution keeps one
+entry per file group (O(file groups), the table's manifest scale, not
+its data scale; the reference engine's timeline server resolves file
+slices on the driver too).  The resolved slice list
 feeds a plain parquet scan, so pruning / pushdown work exactly as for
 any parquet read.  Base files carry the spec's ``_hoodie_commit_time``
 / ``_hoodie_record_key`` meta columns; the reader strips them unless
@@ -54,15 +54,6 @@ __all__ = [
 
 #: completed-instant actions the reader understands
 _ACTIONS = ("commit", "replacecommit", "deltacommit", "clean")
-
-_STATS_SCHEMA = (
-    "struct<partitionToWriteStats: map<string, array<struct<"
-    "fileId: string, path: string, numWrites: bigint,"
-    "fileSizeInBytes: bigint, prevCommit: string>>>,"
-    "partitionToReplaceFileIds: map<string, array<string>>,"
-    "operationType: string>"
-)
-
 
 def hudi_init(table_path: str, name: str) -> None:
     """Write ``.hoodie/hoodie.properties`` (spec: java-properties file
@@ -159,26 +150,20 @@ def hudi_timeline(table_path: str) -> list[tuple[str, str]]:
     return sorted(out)
 
 
-#: Σ commit-metadata bytes at or below which active-slice resolution
-#: happens DRIVER-SIDE with zero Spark jobs (r16 optimization —
-#: timeline metadata is control-plane; the reference engine's own
-#: timeline server resolves file slices on the driver).  Above the
-#: threshold or on any I/O surprise the distributed parse below runs
-#: unchanged.
-_LOCAL_TIMELINE_BYTES = 8 << 20
+def _instant_metadata(table_path: str, instant: str, action: str) -> dict:
+    """The metadata JSON of one completed instant."""
+    with open(os.path.join(table_path, ".hoodie", f"{instant}.{action}")) as f:
+        return json.load(f)
 
 
-def _hudi_active_rows(
-    spark: SparkSession, table_path: str, as_of: str | None = None
-) -> list[dict]:
-    """Driver-side twin of :func:`hudi_active_slices` (same latest-
-    slice-per-file-group + replacecommit anti-set semantics), used by
-    the internal consumers that immediately ``collect()`` — below
-    ``_LOCAL_TIMELINE_BYTES`` it replays the timeline JSON on the
-    driver; otherwise it falls back to the distributed parse."""
-    timeline = hudi_timeline(table_path)
+def _hudi_active_rows(table_path: str, as_of: str | None = None) -> list[dict]:
+    """The ACTIVE file slice per file group at ``as_of`` (default:
+    latest instant), resolved on the driver: the completed commits ≤
+    as_of replay in instant order, the latest slice per (partition,
+    fileId) wins, and groups named by a completed replacecommit ≤ as_of
+    drop out.  Rows: (partition, file_id, path, instant)."""
     commits = [
-        (t, a) for t, a in timeline
+        (t, a) for t, a in hudi_timeline(table_path)
         if a in ("commit", "replacecommit")
         and (as_of is None or t <= as_of)
     ]
@@ -187,97 +172,31 @@ def _hudi_active_rows(
             f"hudi: no completed commit at or before {as_of!r} "
             f"in {table_path}"
         )
-    meta = os.path.join(table_path, ".hoodie")
-    paths = [os.path.join(meta, f"{t}.{a}") for t, a in commits]
-    try:
-        if sum(os.stat(p).st_size for p in paths) > _LOCAL_TIMELINE_BYTES:
-            raise OSError("timeline above local threshold")
-        state: dict[tuple[str, str], tuple[str, str]] = {}
-        replaced: set[tuple[str, str]] = set()
-        for (t, _a), p in zip(commits, paths):
-            with open(p) as f:
-                body = json.load(f)
-            for part, stats in (body.get("partitionToWriteStats") or {}).items():
-                for s in stats:
-                    key = (part, s["fileId"])
-                    if key not in state or t >= state[key][1]:
-                        state[key] = (s["path"], t)
-            for part, ids in (
-                body.get("partitionToReplaceFileIds") or {}
-            ).items():
-                replaced.update((part, i) for i in ids)
-        return [
-            {"partition": k[0], "file_id": k[1], "path": v[0], "instant": v[1]}
-            for k, v in state.items()
-            if k not in replaced
-        ]
-    except (OSError, KeyError, json.JSONDecodeError):
-        return hudi_active_slices(
-            spark, table_path, as_of
-        ).collect()  # control-plane: O(file groups)
+    state: dict[tuple[str, str], tuple[str, str]] = {}
+    replaced: set[tuple[str, str]] = set()
+    for t, a in commits:
+        body = _instant_metadata(table_path, t, a)
+        for part, stats in (body.get("partitionToWriteStats") or {}).items():
+            for s in stats:
+                state[(part, s["fileId"])] = (s["path"], t)
+        for part, ids in (body.get("partitionToReplaceFileIds") or {}).items():
+            replaced.update((part, i) for i in ids)
+    return [
+        {"partition": k[0], "file_id": k[1], "path": v[0], "instant": v[1]}
+        for k, v in state.items()
+        if k not in replaced
+    ]
 
 
 def hudi_active_slices(
     spark: SparkSession, table_path: str, as_of: str | None = None
 ) -> DataFrame:
-    """Resolve the ACTIVE file slice per file group at ``as_of``
-    (default: latest instant): distributed wholetext+``from_json``
-    parse of the completed commit metadata, one explode to slice
-    grain, one ``max_by(path, instant)`` per (partition, fileId),
-    then an anti-join against the replace sets of completed
-    replacecommits ≤ as_of.  Output: (partition, file_id, path,
-    instant) at file-group grain."""
-    timeline = hudi_timeline(table_path)
-    commits = [
-        (t, a) for t, a in timeline
-        if a in ("commit", "replacecommit")
-        and (as_of is None or t <= as_of)
-    ]
-    if not commits:
-        raise ValueError(
-            f"hudi: no completed commit at or before {as_of!r} "
-            f"in {table_path}"
-        )
-    meta = os.path.join(table_path, ".hoodie")
-    paths = [os.path.join(meta, f"{t}.{a}") for t, a in commits]
-    raw = (
-        spark.read.text(paths, wholetext=True)
-        .select(
-            F.element_at(
-                F.split(
-                    F.element_at(
-                        F.split(F.input_file_name(), "/"), -1
-                    ),
-                    r"\.",
-                ),
-                1,
-            ).alias("instant"),
-            F.from_json("value", _STATS_SCHEMA).alias("m"),
-        )
-    )
-    slices = (
-        raw.select(
-            "instant",
-            F.explode("m.partitionToWriteStats").alias("partition", "ws"),
-        )
-        .select("instant", "partition", F.explode("ws").alias("s"))
-        .groupBy("partition", F.col("s.fileId").alias("file_id"))
-        .agg(
-            F.max_by("s.path", "instant").alias("path"),
-            F.max("instant").alias("instant"),
-        )
-    )
-    replaced = (
-        raw.filter(F.col("m.partitionToReplaceFileIds").isNotNull())
-        .select(
-            F.explode("m.partitionToReplaceFileIds")
-            .alias("partition", "ids")
-        )
-        .select("partition", F.explode("ids").alias("file_id"))
-        .distinct()
-    )
-    return slices.join(
-        F.broadcast(replaced), ["partition", "file_id"], "left_anti"
+    """The ACTIVE file slice per file group at ``as_of`` (default:
+    latest instant) as a (partition, file_id, path, instant) frame over
+    the driver replay of :func:`_hudi_active_rows`."""
+    return spark.createDataFrame(
+        [tuple(r.values()) for r in _hudi_active_rows(table_path, as_of)],
+        "partition string, file_id string, path string, instant string",
     )
 
 
@@ -293,9 +212,7 @@ def read_hudi_snapshot(
     (``_hoodie_*``) are stripped unless ``with_meta``.  A snapshot
     whose slices are gone (time travel below a :func:`hudi_clean`)
     raises ``FileNotFoundError`` before Spark sees a path."""
-    rows = _hudi_active_rows(  # control-plane: O(file groups)
-        spark, table_path, as_of
-    )
+    rows = _hudi_active_rows(table_path, as_of)  # control-plane: O(groups)
     paths = [os.path.join(table_path, r["path"]) for r in rows]
     missing = [p for p in paths if not os.path.exists(p)]
     if missing:
@@ -326,18 +243,13 @@ def hudi_clean(
         raise ValueError(f"hudi clean: nothing retained at {retain_from}")
     keep: set[str] = set()
     for t in retained:
-        for r in _hudi_active_rows(  # control-plane: O(groups)
-            spark, table_path, t
-        ):
+        for r in _hudi_active_rows(table_path, t):  # control-plane: O(groups)
             keep.add(r["path"])
     all_slices: set[str] = set()
     for t, a in timeline:
         if a not in ("commit", "replacecommit"):
             continue
-        with open(
-            os.path.join(table_path, ".hoodie", f"{t}.{a}")
-        ) as f:
-            body = json.load(f)
+        body = _instant_metadata(table_path, t, a)
         for stats in body.get("partitionToWriteStats", {}).values():
             for s in stats:
                 all_slices.add(s["path"])
@@ -528,8 +440,7 @@ def read_hudi_mor_snapshot(
     for t, a in timeline:
         if a != "deltacommit" or (as_of is not None and t > as_of):
             continue
-        with open(os.path.join(table_path, ".hoodie", f"{t}.{a}")) as f:
-            body = json.load(f)
+        body = _instant_metadata(table_path, t, a)
         for stats in body.get("partitionToWriteStats", {}).values():
             for s in stats:
                 if ".log." in s["path"]:
@@ -621,8 +532,7 @@ def hudi_compact(
     for t, a in timeline:
         if a != "deltacommit":
             continue
-        with open(os.path.join(table_path, ".hoodie", f"{t}.{a}")) as f:
-            body = json.load(f)
+        body = _instant_metadata(table_path, t, a)
         for part, stats in body.get("partitionToWriteStats", {}).items():
             for s in stats:
                 if ".log." in s["path"]:

@@ -24,13 +24,11 @@ simply the entries with status ≠ DELETED — no reconciliation across
 commits, which is why time travel is "read a different metadata
 pointer".
 
-Spark-first shape: version-hint + metadata JSON + manifest LIST are
-control-plane reads (O(1) + O(manifests) — the same class as a
-directory listing); the MANIFESTS decode DISTRIBUTEDLY — a
-``binaryFile`` scan over the manifest paths fans one Avro container per
-task through the from-scratch decoder (at 100 TB a table carries
-thousands of manifests; per-file tasks are exactly Iceberg's planned
-parallelism).  The resolved file list feeds a plain parquet scan, so
+Driver-side shape: version-hint + metadata JSON + manifest list +
+manifests are all control-plane reads (O(1) + O(manifests) + O(active
+files) — the same class as a directory listing), decoded on the driver
+through the from-scratch Avro codec, as the reference engine plans
+locally.  The resolved file list feeds a plain parquet scan, so
 pruning / pushdown work as on any parquet read.
 """
 
@@ -42,7 +40,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from apache_nifi_spark.io import flat_map
 from apache_nifi_spark.sources.formats import read_parquet_rows
 
 from apache_nifi_spark.sources.avro_codec import (
@@ -657,15 +654,6 @@ def _load_metadata(table_path: str) -> dict:
         return json.load(f)
 
 
-def _manifest_list_paths(
-    table_path: str, snapshot_id: int | None
-) -> list[str]:
-    """Control-plane: version hint → metadata JSON → the snapshot's
-    manifest-list Avro → manifest paths (O(manifests) rows)."""
-    meta = _load_metadata(table_path)
-    return _manifest_list_paths_from(meta, snapshot_id)
-
-
 def _manifest_list_paths_from(
     meta: dict, snapshot_id: int | None
 ) -> list[str]:
@@ -710,23 +698,12 @@ def _manifest_rows_local(
     return out
 
 
-#: Σ manifest bytes at or below which the manifest decode happens
-#: DRIVER-SIDE (one open+decode per manifest, no Spark job) instead of
-#: distributedly.  Manifests are control-plane metadata; the reference
-#: engine's own planning does exactly this (local planning unless the
-#: manifest set is large).  8 MiB ≈ 160 ms of driver decode — below one
-#: Spark job's scheduling floor; at 100 TB a snapshot's manifests
-#: exceed this and the distributed binaryFile path takes over.
-_LOCAL_MANIFEST_BYTES = 8 << 20
-
-
 def _entry_row(
     data_file: dict, status: int, content: int,
     partition: str | None, prunable: bool,
 ) -> dict | None:
-    """Shared manifest-entry filter/projection — ONE implementation for
-    the driver-side and distributed decode paths so their semantics
-    cannot drift."""
+    """One manifest entry's active-file row, or None when the entry is
+    DELETED, of another content class, or pruned by ``partition``."""
     if status == _STATUS_DELETED:
         return None
     if data_file.get("content", _CONTENT_DATA) != content:
@@ -747,90 +724,37 @@ def _entry_row(
     }
 
 
-def _plan_manifests(
-    table_path: str,
-    snapshot_id: int | None,
-    partition: str | None,
-    content: int,
-) -> tuple[list[str], set[str], bool]:
-    """Resolve the snapshot's manifest paths (after manifest-list
-    partition pruning) and decide the decode venue: (paths,
-    current_spec_paths, local_ok).  ``local_ok`` is True when every
-    manifest is a local file and their total size is at or below
-    ``_LOCAL_MANIFEST_BYTES`` — the driver-side decode gate."""
-    meta = _load_metadata(table_path)
-    default_spec_id = meta.get("default-spec-id", 0)
-    entries = _manifest_list_paths_from(meta, snapshot_id)
-    entries = [e for e in entries if e[3] == content]
-    current_spec_paths = {
-        p for (p, _lo, _hi, _c, sp) in entries if sp == default_spec_id
-    }
-    if partition is not None and content == _CONTENT_DATA:
-        entries = [
-            (p, lo, hi, c, sp)
-            for (p, lo, hi, c, sp) in entries
-            if sp != default_spec_id or lo <= partition <= hi
-        ]
-    paths = [p for (p, _lo, _hi, _c, _sp) in entries]
-    total: int | None = 0
-    for p in paths:
-        try:
-            total += os.stat(p).st_size
-        except OSError:
-            total = None  # non-local manifest → distributed decode
-            break
-    local_ok = total is not None and total <= _LOCAL_MANIFEST_BYTES
-    return paths, current_spec_paths, local_ok
-
-
-def _decode_manifests_local(
-    paths: list[str],
-    current_spec_paths: set[str],
-    partition: str | None,
-    content: int,
-) -> list[dict]:
-    """Driver-side manifest decode (zero Spark jobs) — the local half
-    of the venue gate; semantics pinned to the distributed decode via
-    the shared :func:`_entry_row`."""
-    out: list[dict] = []
-    for p in paths:
-        with open(p, "rb") as f:
-            _schema, rows = decode_container(f.read())
-        prunable = p in current_spec_paths
-        for status, _sid, data_file in rows:
-            row = _entry_row(data_file, status, content, partition, prunable)
-            if row is not None:
-                out.append(row)
-    return out
-
-
 def _active_file_rows(
-    spark: SparkSession,
     table_path: str,
     snapshot_id: int | None = None,
     partition: str | None = None,
     content: int = _CONTENT_DATA,
 ) -> list[dict]:
-    """Active-file manifest rows as a driver-side list (r16
-    optimization): every internal consumer of
-    :func:`iceberg_active_files` immediately ``collect()``s the result
-    — a distributed binaryFile + row-decode job per content class per
-    snapshot read, ~0.3-1 s each, for kilobyte-scale metadata.  Below
-    ``_LOCAL_MANIFEST_BYTES`` of local manifest bytes this decodes on
-    the driver with ZERO jobs; above it (or for non-local paths) it
-    falls back to the distributed scan + collect, unchanged."""
-    paths, current_spec_paths, local_ok = _plan_manifests(
-        table_path, snapshot_id, partition, content
-    )
-    if not paths:
-        return []
-    if local_ok:
-        return _decode_manifests_local(
-            paths, current_spec_paths, partition, content
-        )
-    return _active_files_distributed(
-        spark, paths, current_spec_paths, partition, content
-    ).collect()  # control-plane: O(active files) manifest rows
+    """The snapshot's active manifest entries of one ``content`` class,
+    decoded on the driver with zero Spark jobs: manifests whose
+    manifest-list summary excludes ``partition`` are never opened, and
+    the survivors' entries go through :func:`_entry_row`.  Pruning
+    applies only to manifests written under the table's current default
+    spec (see :func:`iceberg_active_files`)."""
+    meta = _load_metadata(table_path)
+    default_spec_id = meta.get("default-spec-id", 0)
+    out: list[dict] = []
+    for p, lo, hi, c, spec_id in _manifest_list_paths_from(meta, snapshot_id):
+        prunable = spec_id == default_spec_id
+        if c != content or (
+            partition is not None
+            and content == _CONTENT_DATA
+            and prunable
+            and not lo <= partition <= hi
+        ):
+            continue
+        with open(p, "rb") as f:
+            _schema, rows = decode_container(f.read())
+        for status, _sid, data_file in rows:
+            row = _entry_row(data_file, status, content, partition, prunable)
+            if row is not None:
+                out.append(row)
+    return out
 
 
 def iceberg_active_files(
@@ -840,13 +764,11 @@ def iceberg_active_files(
     partition: str | None = None,
     content: int = _CONTENT_DATA,
 ) -> DataFrame:
-    """(file_path, partition, record_count, file_size_in_bytes) active
-    in the snapshot: manifest entries with status ≠ DELETED.  The
-    manifest list is control-plane; MANIFESTS decode driver-side below
-    ``_LOCAL_MANIFEST_BYTES`` (planning metadata, the reference
-    engine's local-planning behavior) and distributedly above it —
-    one binaryFile task per manifest through the from-scratch Avro
-    decoder.
+    """(file_path, partition, record_count, file_size_in_bytes,
+    sequence_number) active in the snapshot: manifest entries with
+    status ≠ DELETED, decoded on the driver by :func:`_active_file_rows`
+    (planning metadata, the reference engine's local-planning
+    behavior).
 
     ``partition`` prunes at BOTH spec levels: manifests whose
     [partition_min, partition_max] summary excludes the value are never
@@ -859,67 +781,17 @@ def iceberg_active_files(
     CURRENT default spec — files written under an older spec carry no
     value for the new partition column, so their manifests are always
     scanned and their entries always survive (the engine applies the
-    predicate row-level on those files instead).
-
-    Above the local gate the DISTRIBUTED frame is returned directly —
-    lazy, never collected (r16 advice: at 100 TB manifest scale the
-    public API must not round-trip O(active files) rows through the
-    driver twice)."""
-    paths, current_spec_paths, local_ok = _plan_manifests(
-        table_path, snapshot_id, partition, content
-    )
-    if not local_ok and paths:
-        return _active_files_distributed(
-            spark, paths, current_spec_paths, partition, content
-        )
-    rows = _decode_manifests_local(
-        paths, current_spec_paths, partition, content
-    )
+    predicate row-level on those files instead)."""
     return spark.createDataFrame(
         [
-            (
-                r["file_path"], r["partition"], r["record_count"],
-                r["file_size_in_bytes"], r["sequence_number"],
+            tuple(r.values())  # _entry_row order == the DDL's
+            for r in _active_file_rows(
+                table_path, snapshot_id, partition, content
             )
-            for r in rows
         ],
-        _ACTIVE_FILES_DDL,
+        "file_path string, partition string, record_count long,"
+        " file_size_in_bytes long, sequence_number long",
     )
-
-
-_ACTIVE_FILES_DDL = (
-    "file_path string, partition string, record_count long,"
-    " file_size_in_bytes long, sequence_number long"
-)
-
-
-def _active_files_distributed(
-    spark: SparkSession,
-    paths: list[str],
-    current_spec_paths: set[str],
-    partition: str | None,
-    content: int,
-) -> DataFrame:
-    """The distributed manifest decode: one binaryFile task per
-    manifest through the from-scratch Avro decoder (the >threshold /
-    non-local path of :func:`_active_file_rows`)."""
-    blobs = (
-        spark.read.format("binaryFile").load(paths)
-        .select("path", "content")
-    )
-    # basename-keyed so the binaryFile file:// URI matches the stored
-    # manifest path regardless of scheme
-    cur_spec_names = {os.path.basename(p) for p in current_spec_paths}
-
-    def dec(mpath, blob):
-        _schema, rows = decode_container(blob)
-        prunable = os.path.basename(mpath) in cur_spec_names
-        for status, _sid, data_file in rows:
-            row = _entry_row(data_file, status, content, partition, prunable)
-            if row is not None:
-                yield tuple(row.values())  # _ACTIVE_FILES_DDL order
-
-    return flat_map(blobs, ["path", "content"], dec, _ACTIVE_FILES_DDL)
 
 
 def read_iceberg_snapshot(
@@ -952,9 +824,8 @@ def read_iceberg_snapshot(
 
     Equality-delete files are read whole per task (they are
     metadata-scale: a CDC writer emits keys, not data)."""
-    dfiles = _active_file_rows(
-        spark, table_path, snapshot_id, partition
-    )  # control-plane: O(active files) manifest rows, driver-side decode
+    # control-plane: O(active files) manifest rows, driver-side decode
+    dfiles = _active_file_rows(table_path, snapshot_id, partition)
     return _read_files_with_deletes(
         spark, table_path, dfiles, snapshot_id
     )
@@ -975,7 +846,7 @@ def _read_files_with_deletes(
     if not files:
         raise ValueError("empty iceberg snapshot")
     pos_rows = _active_file_rows(
-        spark, table_path, snapshot_id,
+        table_path, snapshot_id,
         content=_CONTENT_POSITION_DELETES,
     )  # control-plane: O(delete files) manifest rows
     pos_deletes = [
@@ -996,7 +867,7 @@ def _read_files_with_deletes(
     eq_deletes = [
         (r["file_path"], r["sequence_number"])
         for r in _active_file_rows(
-            spark, table_path, snapshot_id,
+            table_path, snapshot_id,
             content=_CONTENT_EQUALITY_DELETES,
         )  # control-plane: O(delete files) manifest rows
     ]
@@ -1066,9 +937,8 @@ def iceberg_rewrite_data_files(
     Returns the new metadata version."""
     import glob
 
-    rows = _active_file_rows(
-        spark, table_path
-    )  # control-plane: O(active files) manifest rows
+    # control-plane: O(active files) manifest rows
+    rows = _active_file_rows(table_path)
     inputs = [r for r in rows if r["file_size_in_bytes"] < small_file_threshold]
     if len(inputs) <= target_files:
         raise ValueError("nothing to compact below the threshold")

@@ -1,93 +1,64 @@
-"""Round-16 optimization invariants: the driver-side metadata planners
-(Iceberg manifests, Delta log replay, Hudi timeline) must return the
-SAME rows as the distributed decode paths they short-circuit — the
-local path is an execution-strategy switch, never a semantics change.
-
-Each test stages a small table, resolves the active-file metadata both
-ways (local via the default threshold; distributed by forcing the
-module threshold to 0), and compares the row sets exactly.
+"""Lakehouse metadata resolves on the driver: the Delta log replay
+(JSON commits, classic and v2 checkpoints), the Iceberg manifest decode
+and the Hudi timeline replay run zero Spark jobs, and corrupt metadata
+raises instead of resolving to an older snapshot.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 
-
-def _rowset(rows, keys):
-    return sorted(tuple(r[k] for k in keys) for r in rows)
+import pytest
 
 
-def test_iceberg_local_manifest_rows_match_distributed(spark, tmp_path):
+def _stage(spark, root, name, lo, n=10):
+    """Write ids [lo, lo + n) as one parquet file under ``root/name``;
+    returns its path."""
+    spark.range(lo, lo + n).coalesce(1).write.parquet(f"{root}/{name}")
+    return glob.glob(f"{root}/{name}/part-*.parquet")[0]
+
+
+@contextlib.contextmanager
+def _no_spark_jobs(spark, group):
+    """Run the block under job group ``group`` and assert it started no
+    Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_metadata_resolution_runs_no_spark_jobs(spark, tmp_path):
+    from apache_nifi_spark.sources import deltalog as dl
+    from apache_nifi_spark.sources import hudi as hu
     from apache_nifi_spark.sources import iceberg as ice
 
-    root = str(tmp_path / "tbl")
-    info = {}
-    for name, lo in (("a", 0), ("b", 100)):
-        spark.range(lo, lo + 10).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/{name}")
-        p = glob.glob(f"{root}/{name}/part-*.parquet")[0]
-        info[name] = {"file_path": p, "record_count": 10,
-                      "file_size_in_bytes": os.path.getsize(p)}
-    ice.iceberg_commit(root, 101, added=[info["a"], info["b"]])
-    ice.iceberg_commit(root, 102, added=[], deleted=[info["a"]["file_path"]])
-
-    keys = ("file_path", "partition", "record_count",
-            "file_size_in_bytes", "sequence_number")
-    local = ice._active_file_rows(spark, root)
-    old = ice._LOCAL_MANIFEST_BYTES
-    ice._LOCAL_MANIFEST_BYTES = 0  # force the distributed decode
-    try:
-        dist = ice._active_file_rows(spark, root)
-    finally:
-        ice._LOCAL_MANIFEST_BYTES = old
-    assert _rowset(local, keys) == _rowset(dist, keys)
-    assert len(local) == 1  # file a deleted, b active
-
-
-def test_delta_local_log_replay_matches_distributed(spark, tmp_path):
-    from apache_nifi_spark.sources import deltalog as dl
-
-    root = str(tmp_path / "dtbl")
+    # Delta, classic checkpoint at v1, one tail add, then a remove of a
+    classic = str(tmp_path / "delta_classic")
+    rel = {}
     for v, (name, lo) in enumerate((("a", 0), ("b", 100), ("c", 200))):
-        spark.range(lo, lo + 10).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/{name}")
-        rel = os.path.relpath(
-            glob.glob(f"{root}/{name}/part-*.parquet")[0], root
-        )
+        rel[name] = os.path.relpath(_stage(spark, classic, name, lo), classic)
         dl.write_commit(
-            root, v, [{"add": {"path": rel, "size": 1, "dataChange": True}}]
+            classic, v,
+            [{"add": {"path": rel[name], "size": 1, "dataChange": True}}],
         )
-    # checkpoint at v1, one tail commit after, plus a remove
-    dl.write_checkpoint(spark, root, 1)
-    rel_a = os.path.relpath(glob.glob(f"{root}/a/part-*.parquet")[0], root)
-    dl.write_commit(root, 3, [{"remove": {"path": rel_a}}])
+    dl.write_checkpoint(spark, classic, 1)
+    dl.write_commit(classic, 3, [{"remove": {"path": rel["a"]}}])
 
-    keys = ("path", "size", "dv", "added_version")
-    local = dl._delta_active_rows(spark, root)
-    old = dl._LOCAL_LOG_BYTES
-    dl._LOCAL_LOG_BYTES = 0  # force the distributed replay
-    try:
-        dist = dl._delta_active_rows(spark, root)
-    finally:
-        dl._LOCAL_LOG_BYTES = old
-    assert _rowset(local, keys) == _rowset(dist, keys)
-    assert len(local) == 2  # a removed at v3
-
-
-def test_delta_local_dv_serialization_matches_distributed(spark, tmp_path):
-    """r17 (r16 advice): a deletion-vector-bearing add must serialize
-    IDENTICALLY on the local and distributed paths — compact JSON,
-    schema field order, extra action keys dropped — whatever key order
-    or extra fields the writer used."""
-    from apache_nifi_spark.sources import deltalog as dl
-
-    root = str(tmp_path / "dvtbl")
-    spark.range(0, 10).coalesce(1).write.parquet(f"{root}/a")
-    rel = os.path.relpath(glob.glob(f"{root}/a/part-*.parquet")[0], root)
-    # scrambled key order + extra spec-legal keys (offset, maxRowIndex)
+    # Delta, v2 checkpoint at v1 over a deletion-vector add written with
+    # scrambled key order and extra spec-legal keys; every JSON commit at
+    # or below the checkpoint is deleted, so only the sidecars hold a, b
+    v2 = str(tmp_path / "delta_v2")
+    rel2 = {
+        name: os.path.relpath(_stage(spark, v2, name, lo), v2)
+        for name, lo in (("a", 0), ("b", 100), ("c", 200))
+    }
     dv = {
         "cardinality": 3,
         "offset": 1,
@@ -96,35 +67,85 @@ def test_delta_local_dv_serialization_matches_distributed(spark, tmp_path):
         "sizeInBytes": 40,
         "storageType": "i",
     }
-    dl.write_commit(
-        root, 0,
-        [{"add": {"path": rel, "size": 1, "dataChange": True,
-                  "deletionVector": dv}}],
-    )
-    keys = ("path", "size", "dv", "added_version")
-    local = dl._delta_active_rows(spark, root)
-    old = dl._LOCAL_LOG_BYTES
-    dl._LOCAL_LOG_BYTES = 0
-    try:
-        dist = dl._delta_active_rows(spark, root)
-    finally:
-        dl._LOCAL_LOG_BYTES = old
-    assert _rowset(local, keys) == _rowset(dist, keys)
-    assert local[0]["dv"] == (
+    dv_json = (
         '{"storageType":"i","pathOrInlineDv":"vBASE85DATA",'
         '"sizeInBytes":40,"cardinality":3}'
     )
+    dl.write_commit(v2, 0, [
+        {"add": {"path": rel2[n], "size": 1, "dataChange": True}}
+        for n in ("a", "b")
+    ])
+    dl.write_commit(v2, 1, [{"add": {
+        "path": rel2["a"], "size": 1, "dataChange": True,
+        "deletionVector": dv,
+    }}])
+    dl.write_checkpoint_v2(spark, v2, 1)
+    for v in (0, 1):
+        os.remove(os.path.join(v2, "_delta_log", f"{v:020d}.json"))
+    dl.write_commit(
+        v2, 2, [{"add": {"path": rel2["c"], "size": 1, "dataChange": True}}]
+    )
+
+    # Iceberg: a and b added, then a deleted
+    ice_root = str(tmp_path / "ice")
+    info = {}
+    for name, lo in (("a", 0), ("b", 100)):
+        p = _stage(spark, ice_root, name, lo)
+        info[name] = {"file_path": p, "record_count": 10,
+                      "file_size_in_bytes": os.path.getsize(p)}
+    ice.iceberg_commit(ice_root, 101, added=[info["a"], info["b"]])
+    ice.iceberg_commit(
+        ice_root, 102, added=[], deleted=[info["a"]["file_path"]]
+    )
+
+    # Hudi: one file group rewritten by a second commit
+    hudi_root = str(tmp_path / "hudi")
+    hu.hudi_init(hudi_root, "t")
+    for instant, n in (("20240101000000000", 10), ("20240102000000000", 20)):
+        stat = hu.hudi_write_base_file(
+            spark.range(0, n), hudi_root, "p0", "g0", instant, "id"
+        )
+        hu.hudi_commit(hudi_root, instant, {"p0": [stat]})
+
+    with _no_spark_jobs(spark, "delta_classic_checkpoint"):
+        rows = dl._delta_active_rows(classic)
+        dl.delta_active_files(spark, classic)
+    assert sorted((r["path"], r["added_version"]) for r in rows) == [
+        (rel["b"], 1), (rel["c"], 2)
+    ]  # a removed at v3; b keeps its add version through the checkpoint
+
+    with _no_spark_jobs(spark, "delta_v2_checkpoint"):
+        rows = dl._delta_active_rows(v2)
+        dl.delta_active_files(spark, v2)
+    assert sorted((r["path"], r["dv"], r["added_version"]) for r in rows) == [
+        (rel2["a"], dv_json, 1), (rel2["b"], None, 0), (rel2["c"], None, 2)
+    ]
+
+    with _no_spark_jobs(spark, "iceberg"):
+        rows = ice._active_file_rows(ice_root)
+        ice.iceberg_active_files(spark, ice_root)
+    assert [r["file_path"] for r in rows] == [info["b"]["file_path"]]
+
+    with _no_spark_jobs(spark, "hudi"):
+        rows = hu._hudi_active_rows(hudi_root)
+        hu.hudi_active_slices(spark, hudi_root)
+    assert len(rows) == 1  # one file group, latest slice wins
+    assert rows[0]["instant"] == "20240102000000000"
+
+    with _no_spark_jobs(spark, "delta_vacuum"):
+        doomed = dl.delta_vacuum(spark, classic, 3)
+    assert doomed == [rel["a"]]
+    assert not os.path.exists(os.path.join(classic, rel["a"]))
 
 
 def test_delta_log_listing_ignores_non_commit_json(spark, tmp_path):
-    """r17 (r16 advice): real Delta writers leave non-commit JSON in
-    _delta_log (log compaction *.compacted.json, CRC sidecars); the
-    commit listing must skip them instead of crashing on int()."""
+    """Real Delta writers leave non-commit JSON in _delta_log (log
+    compaction *.compacted.json, CRC sidecars); the commit listing must
+    skip them instead of crashing on int()."""
     from apache_nifi_spark.sources import deltalog as dl
 
     root = str(tmp_path / "straytbl")
-    spark.range(0, 10).coalesce(1).write.parquet(f"{root}/a")
-    rel = os.path.relpath(glob.glob(f"{root}/a/part-*.parquet")[0], root)
+    rel = os.path.relpath(_stage(spark, root, "a", 0), root)
     dl.write_commit(
         root, 0, [{"add": {"path": rel, "size": 1, "dataChange": True}}]
     )
@@ -133,65 +154,31 @@ def test_delta_log_listing_ignores_non_commit_json(spark, tmp_path):
                   "extra_metadata.json"):
         with open(os.path.join(log_dir, stray), "w") as f:
             f.write("{}\n")
-    for forced_dist in (False, True):
-        old = dl._LOCAL_LOG_BYTES
-        dl._LOCAL_LOG_BYTES = 0 if forced_dist else old
-        try:
-            rows = dl._delta_active_rows(spark, root)
-        finally:
-            dl._LOCAL_LOG_BYTES = old
-        assert [r["path"] for r in rows] == [rel]
+    assert [r["path"] for r in dl._delta_active_rows(root)] == [rel]
 
 
-def test_iceberg_active_files_stays_distributed_above_gate(spark, tmp_path):
-    """r17 (r16 advice): above the local-manifest gate the PUBLIC
-    iceberg_active_files must return the lazy distributed frame, never
-    collect + re-wrap O(active files) rows through the driver."""
-    from apache_nifi_spark.sources import iceberg as ice
+def test_corrupt_metadata_raises(spark, tmp_path):
+    """A truncated Hudi commit and a Delta add without a path raise;
+    neither resolves to an older snapshot."""
+    import json
 
-    root = str(tmp_path / "lazytbl")
-    spark.range(0, 10).coalesce(1).write.parquet(f"{root}/a")
-    p = glob.glob(f"{root}/a/part-*.parquet")[0]
-    ice.iceberg_commit(root, 101, added=[{
-        "file_path": p, "record_count": 10,
-        "file_size_in_bytes": os.path.getsize(p),
-    }])
-    old = ice._LOCAL_MANIFEST_BYTES
-    ice._LOCAL_MANIFEST_BYTES = 0  # force the distributed venue
-    try:
-        df = ice.iceberg_active_files(spark, root)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert "LocalRelation" not in plan  # lazy scan, not a collect
-        assert df.count() == 1
-    finally:
-        ice._LOCAL_MANIFEST_BYTES = old
-    # below the gate: local decode, same rows
-    rows = ice.iceberg_active_files(spark, root).collect()
-    assert len(rows) == 1 and rows[0]["file_path"] == p
-
-
-def test_hudi_local_timeline_matches_distributed(spark, tmp_path):
+    from apache_nifi_spark.sources import deltalog as dl
     from apache_nifi_spark.sources import hudi as hu
 
-    root = str(tmp_path / "htbl")
+    root = str(tmp_path / "hudi")
     hu.hudi_init(root, "t")
-    s1 = hu.hudi_write_base_file(
-        spark.range(0, 10), root, "p0", "g0", "20240101000000000", "id"
-    )
-    hu.hudi_commit(root, "20240101000000000", {"p0": [s1]})
-    s2 = hu.hudi_write_base_file(
-        spark.range(0, 20), root, "p0", "g0", "20240102000000000", "id"
-    )
-    hu.hudi_commit(root, "20240102000000000", {"p0": [s2]})
+    for instant, n in (("20240101000000000", 10), ("20240102000000000", 20)):
+        stat = hu.hudi_write_base_file(
+            spark.range(0, n), root, "p0", "g0", instant, "id"
+        )
+        latest = hu.hudi_commit(root, instant, {"p0": [stat]})
+    assert hu.read_hudi_snapshot(spark, root).count() == 20
+    with open(latest, "rb+") as f:
+        f.truncate(len(f.read()) // 2)
+    with pytest.raises(json.JSONDecodeError):
+        hu.read_hudi_snapshot(spark, root)
 
-    keys = ("partition", "file_id", "path", "instant")
-    local = hu._hudi_active_rows(spark, root)
-    old = hu._LOCAL_TIMELINE_BYTES
-    hu._LOCAL_TIMELINE_BYTES = 0  # force the distributed parse
-    try:
-        dist = hu._hudi_active_rows(spark, root)
-    finally:
-        hu._LOCAL_TIMELINE_BYTES = old
-    assert _rowset(local, keys) == _rowset(dist, keys)
-    assert len(local) == 1  # one file group, latest slice wins
-    assert local[0]["instant"] == "20240102000000000"
+    droot = str(tmp_path / "delta")
+    dl.write_commit(droot, 0, [{"add": {"size": 1, "dataChange": True}}])
+    with pytest.raises(KeyError, match="path"):
+        dl.delta_active_files(spark, droot)
