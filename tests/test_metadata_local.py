@@ -1,7 +1,8 @@
 """Lakehouse metadata resolves on the driver: the Delta log replay
 (JSON commits, classic and v2 checkpoints), the Iceberg manifest decode
 and the Hudi timeline replay run zero Spark jobs, and corrupt metadata
-raises instead of resolving to an older snapshot.
+raises instead of resolving to an older snapshot. The public
+``*_active_files`` Spark frames carry exactly the driver replay's rows.
 """
 
 from __future__ import annotations
@@ -18,6 +19,10 @@ def _stage(spark, root, name, lo, n=10):
     returns its path."""
     spark.range(lo, lo + n).coalesce(1).write.parquet(f"{root}/{name}")
     return glob.glob(f"{root}/{name}/part-*.parquet")[0]
+
+
+def _rowset(rows, keys):
+    return sorted(tuple(r[k] for k in keys) for r in rows)
 
 
 @contextlib.contextmanager
@@ -136,6 +141,106 @@ def test_metadata_resolution_runs_no_spark_jobs(spark, tmp_path):
         doomed = dl.delta_vacuum(spark, classic, 3)
     assert doomed == [rel["a"]]
     assert not os.path.exists(os.path.join(classic, rel["a"]))
+
+
+def test_iceberg_local_manifest_rows_match_distributed(spark, tmp_path):
+    from apache_nifi_spark.sources import iceberg as ice
+
+    root = str(tmp_path / "tbl")
+    info = {}
+    for name, lo in (("a", 0), ("b", 100)):
+        p = _stage(spark, root, name, lo)
+        info[name] = {"file_path": p, "record_count": 10,
+                      "file_size_in_bytes": os.path.getsize(p)}
+    ice.iceberg_commit(root, 101, added=[info["a"], info["b"]])
+    ice.iceberg_commit(root, 102, added=[], deleted=[info["a"]["file_path"]])
+
+    keys = ("file_path", "partition", "record_count",
+            "file_size_in_bytes", "sequence_number")
+    local = ice._active_file_rows(root)
+    dist = ice.iceberg_active_files(spark, root).collect()
+    assert _rowset(local, keys) == _rowset(dist, keys)
+    assert len(local) == 1  # file a deleted, b active
+    assert local[0]["file_path"] == info["b"]["file_path"]
+    assert local[0]["record_count"] == 10
+
+
+def test_delta_local_log_replay_matches_distributed(spark, tmp_path):
+    from apache_nifi_spark.sources import deltalog as dl
+
+    root = str(tmp_path / "dtbl")
+    rel = {}
+    for v, (name, lo) in enumerate((("a", 0), ("b", 100), ("c", 200))):
+        rel[name] = os.path.relpath(_stage(spark, root, name, lo), root)
+        dl.write_commit(
+            root, v,
+            [{"add": {"path": rel[name], "size": 1, "dataChange": True}}],
+        )
+    # checkpoint at v1, one tail commit after, plus a remove
+    dl.write_checkpoint(spark, root, 1)
+    dl.write_commit(root, 3, [{"remove": {"path": rel["a"]}}])
+
+    keys = ("path", "size", "dv", "added_version")
+    local = dl._delta_active_rows(root)
+    dist = dl.delta_active_files(spark, root).collect()
+    assert _rowset(local, keys) == _rowset(dist, keys)
+    assert len(local) == 2  # a removed at v3
+    # replaying every JSON commit instead of the checkpoint agrees
+    no_ckpt = dl._delta_active_rows(root, use_checkpoint=False)
+    assert _rowset(no_ckpt, keys) == _rowset(local, keys)
+
+
+def test_delta_local_dv_serialization_matches_distributed(spark, tmp_path):
+    """A deletion-vector-bearing add serializes as compact JSON in
+    schema field order with extra action keys dropped, whatever key
+    order or extra fields the writer used, and the public frame carries
+    that string unchanged."""
+    from apache_nifi_spark.sources import deltalog as dl
+
+    root = str(tmp_path / "dvtbl")
+    rel = os.path.relpath(_stage(spark, root, "a", 0), root)
+    # scrambled key order + extra spec-legal keys (offset, maxRowIndex)
+    dv = {
+        "cardinality": 3,
+        "offset": 1,
+        "pathOrInlineDv": "vBASE85DATA",
+        "maxRowIndex": 9,
+        "sizeInBytes": 40,
+        "storageType": "i",
+    }
+    dl.write_commit(
+        root, 0,
+        [{"add": {"path": rel, "size": 1, "dataChange": True,
+                  "deletionVector": dv}}],
+    )
+    keys = ("path", "size", "dv", "added_version")
+    local = dl._delta_active_rows(root)
+    dist = dl.delta_active_files(spark, root).collect()
+    assert _rowset(local, keys) == _rowset(dist, keys)
+    assert local[0]["dv"] == (
+        '{"storageType":"i","pathOrInlineDv":"vBASE85DATA",'
+        '"sizeInBytes":40,"cardinality":3}'
+    )
+
+
+def test_hudi_local_timeline_matches_distributed(spark, tmp_path):
+    from apache_nifi_spark.sources import hudi as hu
+
+    root = str(tmp_path / "htbl")
+    hu.hudi_init(root, "t")
+    for instant, n in (("20240101000000000", 10), ("20240102000000000", 20)):
+        stat = hu.hudi_write_base_file(
+            spark.range(0, n), root, "p0", "g0", instant, "id"
+        )
+        hu.hudi_commit(root, instant, {"p0": [stat]})
+
+    keys = ("partition", "file_id", "path", "instant")
+    local = hu._hudi_active_rows(root)
+    dist = hu.hudi_active_slices(spark, root).collect()
+    assert _rowset(local, keys) == _rowset(dist, keys)
+    assert len(local) == 1  # one file group, latest slice wins
+    assert local[0]["instant"] == "20240102000000000"
+    assert hu.read_hudi_snapshot(spark, root).count() == 20
 
 
 def test_delta_log_listing_ignores_non_commit_json(spark, tmp_path):
