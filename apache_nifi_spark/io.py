@@ -145,6 +145,26 @@ def _arrow_fields(schema: str | T.StructType):
     return schema, to_arrow_schema(schema)
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-side frame of ``rows`` (tuples in ``schema`` order) as a
+    ``LocalRelation``, built from a ``pyarrow.Table`` typed from
+    ``schema``: collecting it runs no Spark job, where a Python list
+    handed to ``createDataFrame`` becomes an RDD scan that runs one."""
+    import pyarrow as pa
+
+    schema, arrow = _arrow_fields(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        ),
+        schema,
+    )
+
+
 def flat_map(
     df: DataFrame,
     cols: list[str],

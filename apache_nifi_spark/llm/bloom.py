@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.llm.pca import _packed_probe
+from apache_nifi_spark.llm.pca import _packed
 
 __all__ = ["bloom_decontaminate"]
 
@@ -94,8 +94,8 @@ def bloom_decontaminate(
             (F.col("bit") / 32).cast("int").alias("w"),
             # 1 << (bit % 32) via a 32-entry power-of-two literal lookup
             # (pyspark's shiftleft only takes a Python-int shift amount)
-            _packed_probe(
-                [1 << b for b in range(32)],
+            F.element_at(
+                F.expr(_packed([1 << b for b in range(32)])),
                 (F.col("bit") % 32).cast("int") + 1,
             ).alias("mask"),
         )
@@ -105,14 +105,13 @@ def bloom_decontaminate(
     )
     got = {r["w"]: r["bits"] for r in bbits}
     filt = [int(got.get(i, 0)) for i in range(words)]
-    pow2 = [1 << b for b in range(32)]
+    filt_arr = F.expr(_packed(filt))
+    pow2_arr = F.expr(_packed([1 << b for b in range(32)]))
 
     # ---- score: map-only probe of the literal filter.  md5 is hoisted
     # ONCE per gram (a transform to hex digests), each probe then reads
-    # two hex slices — not k fresh digests per gram.  Probes go through
-    # _packed_probe so the word/mask lookups stay constant-folded (a
-    # transform(cast) array re-casts every element per probe — the
-    # round-12 lesson) ----
+    # two hex slices — not k fresh digests per gram.  The word/mask
+    # lookups probe constant-folded packed literals (``_packed``) ----
 
     def gram_hit(mh: Column) -> Column:
         g1 = F.conv(F.substring(mh, 1, 8), 16, 10).cast("bigint")
@@ -120,8 +119,8 @@ def bloom_decontaminate(
         checks = []
         for j in range(k):
             bit = (g1 + F.lit(j) * g2) % m_bits
-            word = _packed_probe(filt, (bit / 32).cast("int") + 1)
-            mask = _packed_probe(pow2, (bit % 32).cast("int") + 1)
+            word = F.element_at(filt_arr, (bit / 32).cast("int") + 1)
+            mask = F.element_at(pow2_arr, (bit % 32).cast("int") + 1)
             checks.append(word.bitwiseAND(mask) != 0)
         out = checks[0]
         for c in checks[1:]:

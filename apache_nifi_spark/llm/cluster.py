@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.llm.pca import _packed
+
 __all__ = [
     "kmeans_with_centroids",
     "connected_components",
@@ -278,24 +280,21 @@ def _kmeans_impl(
         first-match semantics = lower-cluster tie-break, matching the
         oracle's ``ORDER BY dist, cluster``).
 
-        The K×dim centroid table is encoded as ONE delimited string
-        literal and split/cast back — Catalyst then carries a single
-        Literal AST node instead of K·dim of them, and ConstantFolding
-        materializes the array-of-arrays exactly once.  With inline
+        The K×dim centroid table is ONE packed literal (``_packed``):
+        Catalyst carries a single Literal AST node instead of K·dim of
+        them, and ConstantFolding parses it into the typed
+        array-of-arrays once per plan, not per row.  With inline
         ``array(array(...))`` literals every analyzer/optimizer rule
         walks 512+ nodes per plan, which measured ~1 s of driver-side
         plan time PER ITERATION at K=8·dim=64 (the dominant cost of the
         whole operator — the 2 000-row execution itself is ~50 ms).
         The parsed integers are bit-identical to the direct literals."""
-        packed = "|".join(
-            ",".join(str(v) for v in cv) for _, cv in cent_pairs
-        )
+        table = _packed([cv for _, cv in cent_pairs])
         ids = ", ".join(str(c) + "L" for c, _ in cent_pairs)
         scored = q.withColumn(
             "dists",
             F.expr(
-                f"transform(transform(split('{packed}', '\\\\|'),"
-                " p -> transform(split(p, ','), x -> cast(x as bigint))),"
+                f"transform({table},"
                 " cv -> aggregate(zip_with(qv, cv,"
                 " (a, b) -> (a - b) * (a - b)), cast(0 as bigint),"
                 " (acc, x) -> acc + x))"

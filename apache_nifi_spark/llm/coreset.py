@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.llm.pca import _packed_arr
+from apache_nifi_spark.llm.pca import _packed
 
 __all__ = ["kcenter_coreset"]
 
@@ -38,7 +38,7 @@ def _d2(center: list[int]) -> Column:
     """Exact integer squared L2 from the quantized row vector ``qv`` to a
     literal center (packed-string literal: one AST node, folded once)."""
     return F.expr(
-        f"aggregate(zip_with(qv, {_packed_arr(center)},"
+        f"aggregate(zip_with(qv, {_packed(center)},"
         " (a, b) -> (a - b) * (a - b)),"
         " cast(0 as bigint), (acc, x) -> acc + x)"
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.functions import exact
+
 __all__ = ["pagerank_fixed_point", "hits_fixed_point", "triangle_counts", "kcore_membership", "link_prediction_scores"]
 
 #: fixed-point rank scale (ranks are ints at 1e-6 units)
@@ -250,9 +252,7 @@ def link_prediction_scores(
         wedges.groupBy("u", "v")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("common_neighbors"),
-            F.sum(
-                (F.lit(1.0) / F.log(F.col("zdg"))).cast("decimal(28,9)")
-            ).alias("aa"),
+            exact.sum_scaled("1.0D / ln(zdg)", 9).alias("aa"),
         )
         .filter(F.col("common_neighbors") >= min_common)
     )

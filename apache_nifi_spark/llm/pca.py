@@ -43,40 +43,29 @@ surface the build brief mandates.
 
 from __future__ import annotations
 
+import json
 import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from apache_nifi_spark.functions import exact
+
 __all__ = ["dominant_direction"]
 
 
-def _packed_arr(vals: list[int]) -> str:
-    """SQL fragment: a comma-packed string literal split/cast back to
-    ``array<bigint>`` — one Literal node instead of len(vals) Literal
-    AST nodes (the kmeans analyzer-tax lesson).
-
-    CAVEAT (measured, round 12): ``split('…', ',')`` constant-folds to
-    an array literal, but the ``transform(…, cast)`` wrapper does NOT
-    (HigherOrderFunction is non-foldable) — the executed plan re-casts
-    all len(vals) elements PER ROW.  Fine inside a fold that consumes
-    the whole array once per row anyway; pathological under a per-row
-    ``element_at`` probe (count-min at sf1: 4×1024 casts × 2.7 M rows
-    ≈ 12 s).  For single-element probes use :func:`_packed_probe`."""
-    packed = ",".join(str(v) for v in vals)
-    return f"transform(split('{packed}', ','), x -> cast(x as bigint))"
-
-
-def _packed_probe(vals: list[int], idx) -> "Column":
-    """``element_at`` probe into a packed int array that stays FULLY
-    constant-folded: extract the string element first (split literal →
-    array<string> literal, folded once), cast only the ONE extracted
-    element per row."""
-    from pyspark.sql import functions as F
-
-    packed = ",".join(str(v) for v in vals)
-    return F.element_at(
-        F.expr(f"split('{packed}', ',')"), idx
-    ).cast("bigint")
+def _packed(vals: list[int] | list[list[int]]) -> str:
+    """SQL for a control-plane ``array<bigint>`` (or, given a list of
+    lists, ``array<array<bigint>>``) literal: one JSON string literal
+    that ConstantFolding parses ONCE into a single typed array Literal.
+    The plan carries one node instead of one per integer (the kmeans
+    analyzer-tax lesson), and no per-row code re-parses or re-casts
+    elements — a ``transform(split(…), cast)`` wrapper is a
+    non-foldable higher-order function that re-casts every element per
+    row (count-min at sf1: 4×1024 casts × 2.7 M rows ≈ 12 s).  Probe one
+    element with ``F.element_at(F.expr(_packed(vals)), idx)``."""
+    nested = bool(vals) and isinstance(vals[0], list)
+    typ = "array<array<bigint>>" if nested else "array<bigint>"
+    return f"from_json('{json.dumps(vals, separators=(',', ':'))}', '{typ}')"
 
 
 def _fold_norm2(xs: list[float]) -> float:
@@ -131,7 +120,7 @@ def dominant_direction(
         q.select(F.posexplode("qv").alias("pos", "v"))
         .groupBy("pos")
         .agg(
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("s"),
+            exact.sum_long("v").alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .orderBy("pos")
@@ -145,14 +134,13 @@ def dominant_direction(
         iters = 0
     else:
         m = [int(math.floor(float(r["s"]) / r["n"])) for r in mean_rows]
-    # One string literal, split/cast back (the kmeans _score encoding):
-    # a single Literal AST node instead of ``dim`` of them keeps Catalyst
-    # plan analysis O(1) in the vector width; ConstantFolding re-inlines
-    # the parsed array exactly once, bit-identical to direct literals.
+    # One packed literal (``_packed``): a single Literal AST node instead
+    # of ``dim`` of them keeps Catalyst plan analysis O(1) in the vector
+    # width, bit-identical to direct literals.
     cq = q.select(
         "_id",
         F.expr(
-            f"zip_with(qv, {_packed_arr(m)}, (a, b) -> a - b)"
+            f"zip_with(qv, {_packed(m)}, (a, b) -> a - b)"
         ).alias("cv"),
     )
 
@@ -164,7 +152,7 @@ def dominant_direction(
             cq.select(
                 "cv",
                 F.expr(
-                    f"aggregate(zip_with(cv, {_packed_arr(u)},"
+                    f"aggregate(zip_with(cv, {_packed(u)},"
                     " (a, b) -> a * b), cast(0 as bigint),"
                     " (acc, x) -> acc + x)"
                 ).alias("s"),
@@ -172,9 +160,7 @@ def dominant_direction(
             .select(F.posexplode("cv").alias("pos", "cj"), "s")
             .groupBy("pos")
             .agg(
-                F.sum(
-                    (F.col("cj") * F.col("s")).cast("decimal(38,0)")
-                ).alias("w")
+                exact.sum_long("cj * s").alias("w")
             )
             .orderBy("pos")
             .collect()  # control-plane: dim matrix-vector sums
@@ -192,7 +178,7 @@ def dominant_direction(
 
     un2 = sum(v * v for v in u)  # exact int — ‖u‖², literal below
     proj = F.expr(
-        f"aggregate(zip_with(cv, {_packed_arr(u)}, (a, b) -> a * b),"
+        f"aggregate(zip_with(cv, {_packed(u)}, (a, b) -> a * b),"
         " cast(0 as bigint), (acc, x) -> acc + x)"
     )
     cnorm2 = F.expr(

@@ -23,7 +23,7 @@ sum exchange per Lloyd round); ENCODING is the final map-only
 assignment per subspace, joined back to (id, code_0..code_{m-1}) on
 doc-grain equi-joins; the ADC table is m·k control-plane integers
 riding as packed literals, so SCORING is one map-only projection
-(``_packed_probe`` lookups — constant-folded, one cast per probe) plus
+(``element_at`` lookups into constant-folded packed literals) plus
 a TakeOrdered top-k.  Nothing corpus-sized reaches the driver.
 """
 
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.llm.pca import _packed_probe
+from apache_nifi_spark.llm.pca import _packed
 
 __all__ = ["pq_train_encode", "pq_adc_topk"]
 
@@ -47,11 +47,10 @@ def _sub_cluster(
     only the input is ``slice(qv, off+1, sub)`` instead of a
     pre-sliced column.  Same packed-literal discipline (ONE string
     literal per codebook, not k·sub AST nodes)."""
-    packed = "|".join(",".join(str(v) for v in cv) for _, cv in cent_pairs)
+    table = _packed([cv for _, cv in cent_pairs])
     ids = ", ".join(str(c) + "L" for c, _ in cent_pairs)
     dists = (
-        f"transform(transform(split('{packed}', '\\\\|'),"
-        " p -> transform(split(p, ','), x -> cast(x as bigint))),"
+        f"transform({table},"
         f" cv -> aggregate(zip_with(slice(qv, {off + 1}, {sub}), cv,"
         " (a, b) -> (a - b) * (a - b)), cast(0 as bigint),"
         " (acc, x) -> acc + x))"
@@ -210,7 +209,9 @@ def pq_adc_topk(
         table = [0] * (max_c + 1)
         for c, cv in cent:
             table[c] = sum((a - b) * (a - b) for a, b in zip(qsub, cv))
-        term = _packed_probe(table, F.col(f"code_{j}").cast("int") + 1)
+        term = F.element_at(
+            F.expr(_packed(table)), F.col(f"code_{j}").cast("int") + 1
+        )
         adc = term if adc is None else adc + term
     return (
         codes.select(

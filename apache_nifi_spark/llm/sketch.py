@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.llm.pca import _packed_probe
+from apache_nifi_spark.llm.pca import _packed
 
 __all__ = [
     "countmin_heavy_hitters",
@@ -168,7 +168,9 @@ def countmin_heavy_hitters(
         rows.append([int(got.get(i, 0)) for i in range(width)])
 
     probes = [
-        _packed_probe(rows[r], (col_for(F.col("tok"), r)).cast("int") + 1)
+        F.element_at(
+            F.expr(_packed(rows[r])), col_for(F.col("tok"), r).cast("int") + 1
+        )
         for r in range(depth)
     ]
     # F.least needs ≥2 columns; a depth-1 sketch is just its one probe
@@ -263,7 +265,9 @@ def countmin_production_hitters(
     threshold = int(math.ceil(n_total / float(frac_denom)))
 
     probes = [
-        _packed_probe(rows[r], (col_for(F.col("tok"), r)).cast("int") + 1)
+        F.element_at(
+            F.expr(_packed(rows[r])), col_for(F.col("tok"), r).cast("int") + 1
+        )
         for r in range(depth)
     ]
     est = F.least(*probes) if depth > 1 else probes[0]

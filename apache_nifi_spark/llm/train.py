@@ -67,8 +67,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.llm.dsir import _bucket, _tokens
-from apache_nifi_spark.llm.pca import _packed_probe
+from apache_nifi_spark.llm.pca import _packed
 
 __all__ = [
     "logreg_train_fixed_point",
@@ -188,7 +189,9 @@ def hashed_linear_score_trained(
 
     buckets = len(weights)
     grams = hashed_gram_buckets(df, text_col, id_col, buckets)
-    wcol = _packed_probe(weights, F.col("bucket").cast("int") + 1)
+    wcol = F.element_at(
+        F.expr(_packed(weights)), F.col("bucket").cast("int") + 1
+    )
     pooled = grams.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum(wcol).alias("_dot"),
@@ -208,10 +211,8 @@ def hashed_linear_score_trained(
 
 def _scored_frame(df: DataFrame, w: list[int], scale: int) -> DataFrame:
     # sparse dot: fold only the occupied buckets of _sc against the
-    # packed weight literal.  The split('..') literal folds to an
-    # array<string> ONCE; only the one extracted element casts per fold
-    # step (a transform(..., cast) wrapper would re-cast all B weights
-    # per step — the round-12 _packed_probe lesson).
+    # packed weight literal (``_packed``: one typed array Literal, so a
+    # fold step reads one element and casts nothing).
     #
     # The O(B) fold is projected ONCE per document into ``_dot`` in its
     # own select (r17): the rational sigmoid references the margin
@@ -222,11 +223,9 @@ def _scored_frame(df: DataFrame, w: list[int], scale: int) -> DataFrame:
     # the materialized column.  Plan-verified: the fold appears ONCE in
     # the optimized final plan (was 5×) and once per descent step
     # (was 2×).
-    packed = ",".join(str(v) for v in w)
     dot = F.expr(
         f"aggregate(_sc, cast(0 as bigint), (acc, s) -> acc"
-        f" + cast(element_at(split('{packed}', ','),"
-        f" cast(s._b as int) + 1) as bigint) * s._c)"
+        f" + element_at({_packed(w)}, cast(s._b as int) + 1) * s._c)"
     )
     return df.select("*", dot.alias("_dot"))
 
@@ -308,11 +307,7 @@ def _grad_frame(feat: DataFrame, w: list[int], q: Column) -> DataFrame:
         .select(q.alias("_q"), "_sc")
         .select("_q", F.explode("_sc").alias("_s"))
         .groupBy(F.col("_s._b").alias("_b"))
-        .agg(
-            F.sum(
-                (F.col("_s._c") * F.col("_q")).cast("decimal(38,0)")
-            ).alias("g")
-        )
+        .agg(exact.sum_long("_s._c * _q").alias("g"))
     )
 
 

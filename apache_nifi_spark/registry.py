@@ -6,11 +6,14 @@ SURVEY.md §5.2's differential gate.  ``__spark_entry__.py`` re-exports
 ``QUERIES`` / ``ORACLES`` to the driver.
 
 Determinism rules (so order-insensitive value hashes match bit-for-bit):
-- Float aggregates go through exact decimal accumulation on BOTH engines:
-  ``SUM(CAST(x AS DECIMAL(30,6)))`` then cast back to double.  Decimal sums
-  are exact, the final double cast is the same IEEE value on both sides,
-  and double→decimal casts only diverge at exact midpoints, which cannot
-  occur for fractional scales (non-dyadic rationals).
+- Float aggregates are exact sums on BOTH engines, cast back to double
+  once: the oracle's ``SUM(CAST(x AS DECIMAL(30,6)))`` and, on Spark, the
+  sum of ``CAST(x AS DECIMAL(18,6))`` accumulated on 64-bit limbs
+  (``functions/exact.py``; ``_dsum``).  Both are the exact decimal sum, so
+  the final double cast is the same IEEE value on both sides.  The two
+  casts agree for |x| < 10^12, and double→decimal casts only diverge at
+  exact midpoints, which cannot occur for fractional scales (non-dyadic
+  rationals).  Integer sums that may pass 2^63 use ``exact.sum_long``.
 - Averages are computed as exact-sum / count (double division of identical
   operands), never the engines' own AVG over doubles.
 - Every LIMIT carries a total order (tie-broken by a key column).
@@ -28,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.operators import (
     asof_join,
     calculate_record_stats,
@@ -68,22 +72,17 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _dsum(c: Column, alias: str, scale: int = 6) -> Column:
-    """Exact decimal-accumulated sum, returned as double (see module doc).
-
-    Per-row cast is decimal(18,s) — precision ≤ 18 stays in Spark's
-    compact-long Decimal representation (measured 2.4× faster than
-    decimal(30,s) on the q1 aggregate).  Identical rounding to the
-    oracle's DECIMAL(30,s) cast for |x| < 10^(18-s), which every fixture
-    measure satisfies; the sum accumulator is decimal(28,s) — headroom to
-    ~10^22, enough for 100 TB-scale row counts.
-    """
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double").alias(alias)
+def _dsum(x: str, alias: str, scale: int = 6) -> Column:
+    """Exact sum of ``CAST(x AS DECIMAL(18,scale))``, returned as double
+    (see module doc); ``x`` is SQL text, usually a column name.  The
+    rounding is the oracle's DECIMAL(30,s) cast's for |x| < 10^(18-s),
+    which every fixture measure satisfies."""
+    return exact.sum_scaled(x, scale).cast("double").alias(alias)
 
 
-def _davg(c: Column, alias: str, scale: int = 6) -> Column:
+def _davg(x: str, alias: str, scale: int = 6) -> Column:
     return (
-        F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(c)
+        exact.sum_scaled(x, scale).cast("double") / F.count(F.expr(x))
     ).alias(alias)
 
 
@@ -143,7 +142,7 @@ def flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.month("o_orderdate").alias("order_month"),
         )
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+            _dsum("l_extendedprice * (1 - l_discount)", "revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy(F.desc("revenue"), "n_name", "order_year", "order_month")
@@ -194,17 +193,16 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(x·100 + 0.5)) and the disc-price/charge products become
     long·long integers — p·(100−d) and p·(100−d)·(100+t) are EXACT
     (the previous form rounded each row's IEEE double product to 6 dp
-    before summing), sums accumulate in DECIMAL(38,0)/HUGEINT
-    (order-free, 38-digit-exact at any row count, per-row charge
-    bounded ≤ ~10¹¹ ≪ 2⁶³), and each output descales by the identical
-    power of 100 in both engines.  The round-robin widen that used to
+    before summing; per-row charge bounded ≤ ~10¹¹ ≪ 2⁶³).  Each sum is
+    exact at any row count (``exact.sum_long``, the oracle's HUGEINT),
+    and each output descales by the identical power of 100 in both
+    engines.  The round-robin widen that used to
     precede the agg is GONE with the decimal CPU cost it amortized:
     re-measured, the widen's own shuffle now costs more than it saves
     (1.19 s with vs 0.79 s without at sf0.1; the 512 MB-split scan
     already yields multiple tasks, and at real scale the scan is
     many-task regardless)."""
     li = _t(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = li.filter(
         F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp_ntz")
     ).select(
@@ -215,18 +213,16 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_discount") * 100 + 0.5).cast("long").alias("d"),
         F.floor(F.col("l_tax") * 100 + 0.5).cast("long").alias("t"),
     )
-    q, p, d, t = F.col("q"), F.col("p"), F.col("d"), F.col("t")
+    s = lambda k: exact.sum_long(k).cast("double")  # noqa: E731
     cnt = F.count(F.lit(1))
     return base.groupBy("l_returnflag", "l_linestatus").agg(
-        (F.sum(dec(q)).cast("double") / 100.0).alias("sum_qty"),
-        (F.sum(dec(p)).cast("double") / 100.0).alias("sum_base_price"),
-        (F.sum(dec(p * (100 - d))).cast("double") / 10000.0)
-        .alias("sum_disc_price"),
-        (F.sum(dec(p * (100 - d) * (100 + t))).cast("double") / 1000000.0)
-        .alias("sum_charge"),
-        (F.sum(dec(q)).cast("double") / 100.0 / cnt).alias("avg_qty"),
-        (F.sum(dec(p)).cast("double") / 100.0 / cnt).alias("avg_price"),
-        (F.sum(dec(d)).cast("double") / 100.0 / cnt).alias("avg_disc"),
+        (s("q") / 100.0).alias("sum_qty"),
+        (s("p") / 100.0).alias("sum_base_price"),
+        (s("p * (100 - d)") / 10000.0).alias("sum_disc_price"),
+        (s("p * (100 - d) * (100 + t)") / 1000000.0).alias("sum_charge"),
+        (s("q") / 100.0 / cnt).alias("avg_qty"),
+        (s("p") / 100.0 / cnt).alias("avg_price"),
+        (s("d") / 100.0 / cnt).alias("avg_disc"),
         cnt.alias("count_order"),
     )
 
@@ -756,7 +752,7 @@ def range_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = range_join(p, bands, F.col("p_retailprice"), F.col("lo"), F.col("hi"))
     return joined.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_parts"),
-        _dsum(F.col("p_retailprice"), "total_price"),
+        _dsum("p_retailprice", "total_price"),
     )
 
 
@@ -1097,7 +1093,7 @@ def rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     return o.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice"), "total"),
+        _dsum("o_totalprice", "total"),
     )
 
 
@@ -1429,7 +1425,7 @@ def cube_q(spark, sf_dir):
     ))
     cells = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("_q"),
+        exact.sum_scaled("l_quantity", 6).alias("_q"),
     )
     return cells.cube("l_returnflag", "l_linestatus").agg(
         F.sum("_n").alias("n"),
@@ -1609,7 +1605,7 @@ def stream_hypertable_q(spark, sf_dir):
         sdf.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("_s"),
+            exact.sum_scaled("value", 6).alias("_s"),
             F.min("value").alias("min_value"),
             F.max("value").alias("max_value"),
         )
@@ -2187,7 +2183,7 @@ def put_file_partitioned_q(spark, sf_dir):
     back = read_records(spark, out, "parquet")
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice"), "total_price"),
+        _dsum("o_totalprice", "total_price"),
     )
 
 
@@ -2239,7 +2235,7 @@ def flatten_event_props_q(spark, sf_dir):
     return (
         ev.withColumn("k", F.get_json_object("props", "$.k").cast("long"))
         .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n_events"), _dsum(F.col("value"), "total_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), _dsum("value", "total_value"))
     )
 
 
@@ -2887,7 +2883,7 @@ def skew_salted_join_q(spark, sf_dir):
     joined = salted_join_auto(li, dim, ["l_orderkey"], salt=8, sample_fraction=0.01)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -3513,7 +3509,7 @@ def bucketed_colocated_join_q(spark, sf_dir):
     )
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
-        _dsum(F.col("l_extendedprice"), "total_price"),
+        _dsum("l_extendedprice", "total_price"),
     )
 
 

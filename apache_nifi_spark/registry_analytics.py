@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.registry import (
     ORACLES,  # noqa: F401  (registration side effects)
     QUERIES,  # noqa: F401
@@ -196,9 +197,7 @@ def orders_rfm_segmentation_q(spark, sf_dir):
     base = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("monetary"),
+        exact.sum_scaled("o_totalprice", 2).cast("double").alias("monetary"),
     )
     scored = _ntile_bucketed_multi(
         base,
@@ -492,7 +491,7 @@ def forecast_seasonal_naive_backtest_q(spark, sf_dir):
                 " AS BIGINT)"
             ).alias("day")
         )
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("rev"))
+        .agg(exact.sum_scaled("value", 6).alias("rev"))
     )
     d = daily.alias("d")
     f = daily.alias("f")
@@ -748,7 +747,7 @@ def stats_gini_concentration_q(spark, sf_dir):
             F.col("o_custkey"),
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("revenue")
         )
@@ -971,7 +970,7 @@ def stats_pareto_8020_q(spark, sf_dir):
             F.col("o_custkey"),
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("revenue")
         )
@@ -1463,9 +1462,7 @@ def stats_kruskal_wallis_q(spark, sf_dir):
         (c_le - c_lt).alias("m"),
     )
     g = ranked.groupBy("grp").agg(
-        F.sum(F.col("r2").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("r2sum"),
+        exact.sum_long("r2").alias("r2sum"),
         F.count(F.lit(1)).cast("bigint").alias("ng"),
         F.sum(
             F.col("m").cast("decimal(12,0)") * F.col("m").cast("decimal(12,0)")
@@ -1650,11 +1647,10 @@ def stats_anova_oneway_q(spark, sf_dir):
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
         .alias("x"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")
     g = li.groupBy("grp").agg(
         F.count(F.lit(1)).alias("ng"),
-        F.sum(dec(F.col("x"))).alias("sgc"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("qgc"),
+        exact.sum_long("x").alias("sgc"),
+        exact.sum_long("x * x").alias("qgc"),
     )
     sgd = F.col("sgc").cast("double") / 100.0
     t = g.select(
@@ -1729,7 +1725,7 @@ def stats_theil_index_q(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"), F.col("o_custkey")
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("revenue")
         )
@@ -1794,7 +1790,7 @@ def stats_hhi_concentration_q(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"), F.col("o_custkey")
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("revenue")
         )
@@ -2109,14 +2105,13 @@ def stats_ols_regression_q(spark, sf_dir):
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
         .alias("y"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("y"))).alias("sy"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).alias("syy"),
-        F.sum(dec(F.col("x") * F.col("y"))).alias("sxy"),
+        exact.sum_long("x").alias("sx"),
+        exact.sum_long("y").alias("sy"),
+        exact.sum_long("x * x").alias("sxx"),
+        exact.sum_long("y * y").alias("syy"),
+        exact.sum_long("x * y").alias("sxy"),
     )
     nd = F.col("n").cast("double")
     sx = F.col("sx").cast("double") / 100.0
@@ -2183,7 +2178,7 @@ def stats_autocorrelation_q(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("rev")
         )
@@ -2285,7 +2280,7 @@ def stats_theil_decomposition_q(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"), F.col("o_custkey")
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            exact.sum_scaled("o_totalprice", 6)
             .cast("decimal(30,6)")
             .alias("revenue")
         )
@@ -2382,7 +2377,7 @@ def orders_abc_classification_q(spark, sf_dir):
     pr = (
         li.join(p, "l_partkey")
         .groupBy("brand", F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(F.col("rc").cast("decimal(38,0)")).alias("rev_c"))
+        .agg(exact.sum_long("rc").alias("rev_c"))
     )
     wc = (
         Window.partitionBy("brand")
@@ -2494,8 +2489,8 @@ def hypertable_lttb_downsample_q(spark, sf_dir):
     )
     agg = b.groupBy("bkt").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("sx"),
-        F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
+        exact.sum_long("x").alias("sx"),
+        exact.sum_long("y").alias("sy"),
     )
     l = agg.select(
         (F.col("bkt") + 1).alias("bkt"), F.col("n").alias("nl"),
@@ -2597,7 +2592,7 @@ def stats_levene_test_q(spark, sf_dir):
     )
     g = li.groupBy("grp").agg(
         F.count(F.lit(1)).alias("ng"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("sgc"),
+        exact.sum_long("x").alias("sgc"),
     )
     zexpr = F.abs(
         F.col("x").cast("double") / 100.0
@@ -3032,7 +3027,7 @@ def events_interval_overlap_q(spark, sf_dir):
     )
     return j.groupBy("s_suppkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_overlaps"),
-        _dsum(F.col("value"), "value_sum"),
+        _dsum("value", "value_sum"),
     )
 
 
@@ -3153,8 +3148,7 @@ def stats_friedman_test_q(spark, sf_dir):
             F.col("ts").cast("date").alias("blk"), "event_type"
         )
         .agg(
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("decimal(38,6)").alias("m")
+            exact.sum_scaled("value", 6).alias("m")
         )
     )
     k_types = cell.select("event_type").distinct().count()
@@ -3236,8 +3230,7 @@ def stats_page_hinkley_q(spark, sf_dir):
         .filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double").alias("x")
+            exact.sum_scaled("value", 6).cast("double").alias("x")
         )
     )
     st = daily.agg(F.avg("x").alias("mu"))
@@ -3545,8 +3538,7 @@ def forecast_mann_kendall_q(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("month", "o_orderdate").alias("mon"))
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
-            .cast("decimal(38,2)").alias("rev")
+            exact.sum_scaled("o_totalprice", 2).alias("rev")
         )
     )
     a, b = m.alias("a"), m.alias("b")
@@ -3929,24 +3921,22 @@ def events_attribution_models_q(spark, sf_dir):
     g = j.select(
         "channel", pos.alias("pos"), n.alias("n")
     )
-    dec = lambda c: c.cast("decimal(18,12)")
-    nd = F.col("n").cast("double")
+    credit = lambda x, alias: (  # noqa: E731
+        F.round(exact.sum_scaled(x, 12), 6).cast("double").alias(alias)
+    )
     return (
         g.groupBy("channel")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("touches"),
-            F.round(F.sum(dec(F.when(F.col("pos") == 1, 1.0)
-                               .otherwise(0.0))), 6).cast("double").alias("first_touch"),
-            F.round(F.sum(dec(F.when(F.col("pos") == F.col("n"), 1.0)
-                               .otherwise(0.0))), 6).cast("double").alias("last_touch"),
-            F.round(F.sum(dec(F.lit(1.0) / nd)), 6).cast("double").alias("linear"),
-            F.round(F.sum(dec(
-                F.when(F.col("n") == 1, 1.0)
-                .when(F.col("n") == 2, 0.5)
-                .when((F.col("pos") == 1) | (F.col("pos") == F.col("n")),
-                      0.4)
-                .otherwise(F.lit(0.2) / (nd - 2))
-            )), 6).cast("double").alias("u_shape"),
+            credit("IF(pos = 1, 1.0D, 0.0D)", "first_touch"),
+            credit("IF(pos = n, 1.0D, 0.0D)", "last_touch"),
+            credit("1.0D / CAST(n AS DOUBLE)", "linear"),
+            credit(
+                "CASE WHEN n = 1 THEN 1.0D WHEN n = 2 THEN 0.5D"
+                " WHEN pos = 1 OR pos = n THEN 0.4D"
+                " ELSE 0.2D / (CAST(n AS DOUBLE) - 2) END",
+                "u_shape",
+            ),
         )
         .orderBy("channel")
     )
@@ -4347,8 +4337,8 @@ def stats_cuped_q(spark, sf_dir):
     d38 = lambda c: F.col(c).cast("decimal(38,0)")
     m = u.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d38("x")).cast("decimal(38,0)").alias("sx"),
-        F.sum(d38("y")).cast("decimal(38,0)").alias("sy"),
+        exact.sum_long("x").alias("sx"),
+        exact.sum_long("y").alias("sy"),
         F.sum(d38("x") * F.col("y")).cast("decimal(38,0)").alias("sxy"),
         F.sum(d38("x") * F.col("x")).cast("decimal(38,0)").alias("sxx"),
         F.sum(d38("y") * F.col("y")).cast("decimal(38,0)").alias("syy"),
@@ -5199,7 +5189,7 @@ def join_bloom_pruned_q(spark, sf_dir):
     contract — pruning must be invisible in results, only in bytes
     shuffled.  At 100 TB the filter is KiB against a fact-shuffle cut
     proportional to dimension selectivity."""
-    from apache_nifi_spark.llm.pca import _packed_probe
+    from apache_nifi_spark.llm.pca import _packed
 
     m_bits, k = 16384, 3
     words = m_bits // 32
@@ -5225,8 +5215,8 @@ def join_bloom_pruned_q(spark, sf_dir):
         )
         .select(
             (F.col("bit") / 32).cast("int").alias("w"),
-            _packed_probe(
-                [1 << b for b in range(32)],
+            F.element_at(
+                F.expr(_packed([1 << b for b in range(32)])),
                 (F.col("bit") % 32).cast("int") + 1,
             ).alias("mask"),
         )
@@ -5243,11 +5233,12 @@ def join_bloom_pruned_q(spark, sf_dir):
     og2 = F.pmod(
         F.xxhash64(F.col("o_custkey"), F.lit(1)), F.lit(2**31)
     ).cast("bigint")
+    filt_arr, pow2_arr = F.expr(_packed(filt)), F.expr(_packed(pow2))
     probe = None
     for j in range(k):
         bit = (og1 + F.lit(j) * og2) % m_bits
-        word = _packed_probe(filt, (bit / 32).cast("int") + 1)
-        mask = _packed_probe(pow2, (bit % 32).cast("int") + 1)
+        word = F.element_at(filt_arr, (bit / 32).cast("int") + 1)
+        mask = F.element_at(pow2_arr, (bit % 32).cast("int") + 1)
         c = word.bitwiseAND(mask) != 0
         probe = c if probe is None else (probe & c)
     orders = (
@@ -5339,17 +5330,14 @@ def forecast_seasonal_decompose_q(spark, sf_dir):
         .groupBy("dw")
         .agg(
             (
-                F.sum(
-                    (F.col("x").cast("double") - F.col("trend"))
-                    .cast("decimal(28,9)")
-                ).cast("double") / F.count("trend")
+                exact.sum_scaled("CAST(x AS DOUBLE) - trend", 9)
+                .cast("double") / F.count("trend")
             ).alias("raw_s"),
             F.count("trend").cast("bigint").alias("n_obs"),
         )
     )
     mean_s = se.agg(
-        (F.sum(F.col("raw_s").cast("decimal(28,9)")).cast("double")
-         / 7.0).alias("ms")
+        (exact.sum_scaled("raw_s", 9).cast("double") / 7.0).alias("ms")
     )
     return (
         se.crossJoin(F.broadcast(mean_s))

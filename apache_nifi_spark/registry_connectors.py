@@ -243,7 +243,7 @@ def put_elasticsearch_live_q(spark, sf_dir):
     return back.groupBy(F.col("status")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("orderkey").alias("sum_key"),
-        _dsum(F.col("totalprice"), "sum_price"),
+        _dsum("totalprice", "sum_price"),
     )
 
 
@@ -1001,7 +1001,7 @@ def delta_time_travel_q(spark, sf_dir):
     snap = read_delta_snapshot(spark, root, version=0)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -1033,7 +1033,7 @@ def iceberg_time_travel_q(spark, sf_dir):
     snap = read_iceberg_snapshot(spark, root, snapshot_id=1)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 @register(
@@ -1152,7 +1152,7 @@ def iceberg_partition_evolution_q(spark, sf_dir):
     snap = read_iceberg_snapshot(spark, root, partition="R")
     return snap.filter(F.col("l_returnflag") == "R").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.registry import (
     ORACLES,  # noqa: F401  (registration side effects)
     QUERIES,  # noqa: F401
@@ -80,7 +81,7 @@ def grouping_sets_q(spark, sf_dir):
         "o_orderstatus",
     ).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice"), "total_price"),
+        _dsum("o_totalprice", "total_price"),
     )
 
 
@@ -928,7 +929,7 @@ def stream_site_to_site_q(spark, sf_dir):
         )
         agg = parsed.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
-            _dsum(F.col("value"), "total_value"),
+            _dsum("value", "total_value"),
         )
         return run_to_memory(agg, output_mode="complete")
 
@@ -1055,7 +1056,7 @@ def publish_consume_kafka_bus_q(spark, sf_dir):
     )
     agg = parsed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("value"), "total_value"),
+        _dsum("value", "total_value"),
     )
     return run_to_memory(agg, output_mode="complete")
 
@@ -1119,7 +1120,7 @@ def publish_consume_kafka_wire_q(spark, sf_dir):
         )
         agg = parsed.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            _dsum(F.col("value"), "total_value"),
+            _dsum("value", "total_value"),
         )
         # materialize before the broker goes away: the consumer plan
         # reads the wire, not files
@@ -1183,7 +1184,7 @@ def publish_consume_kafka_v2_q(spark, sf_dir):
         )
         agg = parsed.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            _dsum(F.col("value"), "total_value"),
+            _dsum("value", "total_value"),
         )
         # materialize before the broker goes away: the consumer plan
         # reads the wire, not files
@@ -1227,7 +1228,7 @@ def confluent_avro_roundtrip_q(spark, sf_dir):
         dec = decode_confluent(enc, reg.url, "events-value", "event_id")
         agg = dec.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            _dsum(F.col("value"), "total_value"),
+            _dsum("value", "total_value"),
         )
         # materialize before the registry goes away: the decode plan
         # fetches schemas over live HTTP
@@ -2383,14 +2384,13 @@ def stats_pearson_q(spark, sf_dir):
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
         .alias("y"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("y"))).alias("sy"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).alias("syy"),
-        F.sum(dec(F.col("x") * F.col("y"))).alias("sxy"),
+        exact.sum_long("x").alias("sx"),
+        exact.sum_long("y").alias("sy"),
+        exact.sum_long("x * x").alias("sxx"),
+        exact.sum_long("y * y").alias("syy"),
+        exact.sum_long("x * y").alias("sxy"),
     )
     nd = F.col("n").cast("double")
     sx = F.col("sx").cast("double") / 100.0
@@ -2804,7 +2804,7 @@ def delta_log_snapshot_q(spark, sf_dir):
     snap = read_delta_snapshot(spark, root)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -2870,7 +2870,7 @@ def iceberg_snapshot_q(spark, sf_dir):
     snap = read_iceberg_snapshot(spark, root)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -2931,7 +2931,7 @@ def iceberg_partition_pruned_q(spark, sf_dir):
     snap = read_iceberg_snapshot(spark, root, partition="R")
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -3011,7 +3011,7 @@ def iceberg_schema_evolved_q(spark, sf_dir):
         )
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("o_totalprice"), "total_price"),
+        _dsum("o_totalprice", "total_price"),
     )
 
 
@@ -3082,7 +3082,7 @@ def iceberg_snapshot_expiry_q(spark, sf_dir):
     snap = read_iceberg_snapshot(spark, root)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -3159,7 +3159,7 @@ def delta_checkpoint_snapshot_q(spark, sf_dir):
     snap = read_delta_snapshot(spark, root)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("l_quantity"), "total_qty"),
+        _dsum("l_quantity", "total_qty"),
     )
 
 
@@ -3375,7 +3375,7 @@ def ftp_list_fetch_q(spark, sf_dir):
         ).alias("r")
     ).select("r.*")
     return rec.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), "total_value")
+        F.count(F.lit(1)).alias("n"), _dsum("value", "total_value")
     )
 
 
@@ -3438,7 +3438,7 @@ def sftp_list_fetch_q(spark, sf_dir):
         ).alias("r")
     ).select("r.*")
     return rec.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), "total_value")
+        F.count(F.lit(1)).alias("n"), _dsum("value", "total_value")
     )
 
 
@@ -3543,7 +3543,7 @@ def amqp_exchange_route_q(spark, sf_dir):
         )
         outs.append(
             parsed.agg(
-                F.count(F.lit(1)).alias("n"), _dsum(F.col("r.value"), "total_value")
+                F.count(F.lit(1)).alias("n"), _dsum("r.value", "total_value")
             ).select(F.lit(q).alias("queue"), "n", "total_value")
         )
     out = outs[0]
@@ -3752,7 +3752,7 @@ def llm_corpus_prep_q(spark, sf_dir):
     return deduped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        _davg(F.col("quality"), "avg_quality"),
+        _davg("quality", "avg_quality"),
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.registry import (
     ORACLES,
     QUERIES,
@@ -3224,7 +3225,7 @@ def stream_quality_gate_q(spark, sf_dir):
     gated = quality_logit(sdf).filter("keep")
     agg = gated.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_kept"),
-        _dsum(F.col("quality_logit"), "sum_logit"),
+        _dsum("quality_logit", "sum_logit"),
     )
     return run_to_memory(agg, output_mode="complete")
 
@@ -3361,7 +3362,7 @@ def put_tcp_roundtrip_q(spark, sf_dir):
         ).alias("r")
     ).select("r.*")
     return rec.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), "total_value")
+        F.count(F.lit(1)).alias("n"), _dsum("value", "total_value")
     )
 
 
@@ -3410,7 +3411,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
         ).alias("r")
     ).select("r.*")
     return rec.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), "total_value")
+        F.count(F.lit(1)).alias("n"), _dsum("value", "total_value")
     )
 
 
@@ -4150,7 +4151,7 @@ def put_websocket_roundtrip_q(spark, sf_dir):
         ).alias("r")
     ).select("r.*")
     return rec.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), "total_value")
+        F.count(F.lit(1)).alias("n"), _dsum("value", "total_value")
     )
 
 
@@ -4708,7 +4709,7 @@ def partition_pruned_read_q(spark, sf_dir):
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice"), "total_price"),
+        _dsum("o_totalprice", "total_price"),
     )
 
 
@@ -5038,7 +5039,7 @@ def handle_http_request_response_q(spark, sf_dir):
     def pipeline(df):
         return df.groupBy("event_type").agg(
             F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double").alias("sum_value"),
+            exact.sum_scaled("value", 6).cast("double").alias("sum_value"),
         )
 
     with HttpRequestResponseService(
@@ -5286,7 +5287,7 @@ def update_database_table_q(spark, sf_dir):
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_if(F.col("p_retailprice").isNull()).alias("n_null_price"),
-        _dsum(F.col("p_retailprice"), "total_price"),
+        _dsum("p_retailprice", "total_price"),
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apache_nifi_spark import io
+from apache_nifi_spark.functions import exact
 from apache_nifi_spark.registry import (
     ORACLES,
     QUERIES,
@@ -1523,19 +1524,17 @@ def stats_correlation_matrix_q(spark, sf_dir):
         .alias("p"),
         F.floor(F.col("l_discount") * 100 + 0.5).cast("long").alias("d"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    q, p, dd = F.col("q"), F.col("p"), F.col("d")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec(q)).alias("s_qc"),
-        F.sum(dec(p)).alias("s_pc"),
-        F.sum(dec(dd)).alias("s_dc"),
-        F.sum(dec(q * q)).alias("p_qqc"),
-        F.sum(dec(p * p)).alias("p_ppc"),
-        F.sum(dec(dd * dd)).alias("p_ddc"),
-        F.sum(dec(q * p)).alias("p_qpc"),
-        F.sum(dec(q * dd)).alias("p_qdc"),
-        F.sum(dec(p * dd)).alias("p_pdc"),
+        exact.sum_long("q").alias("s_qc"),
+        exact.sum_long("p").alias("s_pc"),
+        exact.sum_long("d").alias("s_dc"),
+        exact.sum_long("q * q").alias("p_qqc"),
+        exact.sum_long("p * p").alias("p_ppc"),
+        exact.sum_long("d * d").alias("p_ddc"),
+        exact.sum_long("q * p").alias("p_qpc"),
+        exact.sum_long("q * d").alias("p_qdc"),
+        exact.sum_long("p * d").alias("p_pdc"),
     ).select(
         "n",
         (F.col("s_qc").cast("double") / 100.0).alias("s_q"),
@@ -2138,9 +2137,8 @@ def text_burstiness_q(spark, sf_dir):
         tc.groupBy("term")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("df"),
-            F.sum(F.col("c").cast("decimal(38,0)")).alias("sc"),
-            F.sum((F.col("c") * F.col("c")).cast("decimal(38,0)"))
-            .alias("scc"),
+            exact.sum_long("c").alias("sc"),
+            exact.sum_long("c * c").alias("scc"),
         )
         .filter(F.col("df") >= 50)
     )
@@ -2530,17 +2528,17 @@ def stats_welch_ttest_q(spark, sf_dir):
     and the Welch–Satterthwaite degrees of freedom.  Single
     map-side-combinable agg to 2 rows; everything after is
     control-plane arithmetic."""
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+    cents = "CAST(floor(o_totalprice * 100 + 0.5D) AS BIGINT)"
     g = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O"))
         .groupBy(F.col("o_orderstatus").alias("grp"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            # cast each term BEFORE the sum: a long Σ of cent-squares
-            # overflows past ~4M rows (caught by the sf0.1 probe)
-            F.sum(cents.cast("decimal(38,0)")).alias("s"),
-            F.sum((cents * cents).cast("decimal(38,0)")).alias("ss"),
+            # exact sums: a plain long Σ of cent-squares overflows
+            # past ~4M rows (caught by the sf0.1 probe)
+            exact.sum_long(cents).alias("s"),
+            exact.sum_long(f"{cents} * {cents}").alias("ss"),
         )
     )
     pick = lambda grp, col: F.max(
@@ -3663,9 +3661,7 @@ def orders_cohort_ltv_q(spark, sf_dir):
             ).cast("int").alias("month_offset"),
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
-            .cast("decimal(38,2)")
-            .alias("revenue"),
+            exact.sum_scaled("o_totalprice", 2).alias("revenue"),
             F.max("n").cast("bigint").alias("cohort_size"),
         )
     )

@@ -32,6 +32,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.io import local_frame
 from apache_nifi_spark.sources.formats import read_parquet_rows, write_single_part
 
 __all__ = [
@@ -267,7 +268,8 @@ def delta_active_files(
     """The files active in the snapshot at ``version`` (default:
     latest) as a (path, size, dv, added_version) frame over the driver
     replay of :func:`_delta_active_rows`."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r["path"], r["size"], r["dv"], r["added_version"])
             for r in _delta_active_rows(table_path, version, use_checkpoint)

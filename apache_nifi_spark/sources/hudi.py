@@ -39,7 +39,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.io import flat_map
+from apache_nifi_spark.io import flat_map, local_frame
 from apache_nifi_spark.sources.formats import write_single_part
 
 __all__ = [
@@ -194,7 +194,8 @@ def hudi_active_slices(
     """The ACTIVE file slice per file group at ``as_of`` (default:
     latest instant) as a (partition, file_id, path, instant) frame over
     the driver replay of :func:`_hudi_active_rows`."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(r.values()) for r in _hudi_active_rows(table_path, as_of)],
         "partition string, file_id string, path string, instant string",
     )

@@ -40,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.io import local_frame
 from apache_nifi_spark.sources.formats import read_parquet_rows
 
 from apache_nifi_spark.sources.avro_codec import (
@@ -782,7 +783,8 @@ def iceberg_active_files(
     value for the new partition column, so their manifests are always
     scanned and their entries always survive (the engine applies the
     predicate row-level on those files instead)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             tuple(r.values())  # _entry_row order == the DDL's
             for r in _active_file_rows(

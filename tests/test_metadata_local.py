@@ -114,26 +114,30 @@ def test_metadata_resolution_runs_no_spark_jobs(spark, tmp_path):
 
     with _no_spark_jobs(spark, "delta_classic_checkpoint"):
         rows = dl._delta_active_rows(classic)
-        dl.delta_active_files(spark, classic)
+        frame = dl.delta_active_files(spark, classic).collect()
+    assert [tuple(r) for r in frame] == [tuple(r.values()) for r in rows]
     assert sorted((r["path"], r["added_version"]) for r in rows) == [
         (rel["b"], 1), (rel["c"], 2)
     ]  # a removed at v3; b keeps its add version through the checkpoint
 
     with _no_spark_jobs(spark, "delta_v2_checkpoint"):
         rows = dl._delta_active_rows(v2)
-        dl.delta_active_files(spark, v2)
+        frame = dl.delta_active_files(spark, v2).collect()
+    assert [tuple(r) for r in frame] == [tuple(r.values()) for r in rows]
     assert sorted((r["path"], r["dv"], r["added_version"]) for r in rows) == [
         (rel2["a"], dv_json, 1), (rel2["b"], None, 0), (rel2["c"], None, 2)
     ]
 
     with _no_spark_jobs(spark, "iceberg"):
         rows = ice._active_file_rows(ice_root)
-        ice.iceberg_active_files(spark, ice_root)
+        frame = ice.iceberg_active_files(spark, ice_root).collect()
+    assert [tuple(r) for r in frame] == [tuple(r.values()) for r in rows]
     assert [r["file_path"] for r in rows] == [info["b"]["file_path"]]
 
     with _no_spark_jobs(spark, "hudi"):
         rows = hu._hudi_active_rows(hudi_root)
-        hu.hudi_active_slices(spark, hudi_root)
+        frame = hu.hudi_active_slices(spark, hudi_root).collect()
+    assert [tuple(r) for r in frame] == [tuple(r.values()) for r in rows]
     assert len(rows) == 1  # one file group, latest slice wins
     assert rows[0]["instant"] == "20240102000000000"
 

@@ -357,6 +357,29 @@ def test_partition_pruning_reaches_directory_listing(spark, sf_dir):
     assert "o_orderstatus" in seg, seg
 
 
+#: Queries that carry control-plane integer tables (centroids, weights,
+#: codebooks, sketch rows) as packed literals (``llm/pca._packed``).
+PACKED_LITERAL_QUERIES = (
+    "cluster_kmeans_embeddings", "similarity_pq_adc_topk",
+    "embedding_dominant_direction", "embedding_kcenter_coreset",
+    "dedup_semantic_semdedup", "text_classifier_train_gd",
+    "text_classifier_train_score", "text_countmin_heavy_hitters",
+    "text_countmin_production",
+)
+
+
+def test_packed_literals_fold_to_one_typed_literal(registry_frames):
+    """A packed table folds to ONE typed array Literal in the optimized
+    plan: no row re-parses it (``from_json``) or splits and casts its
+    elements (``split`` over a lambda variable or a digit string)."""
+    import re
+
+    for name in PACKED_LITERAL_QUERIES:
+        plan = registry_frames[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"split\((lambda |\d)", plan), name
+        assert "from_json" not in plan and "jsontostructs" not in plan.lower(), name
+
+
 def test_kmeans_plan_depth_constant_in_iterations(spark):
     """The per-iteration localCheckpoint must pin centroid state so the
     FINAL plan depth does not grow with the iteration count (without it,
