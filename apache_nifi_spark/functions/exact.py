@@ -6,13 +6,13 @@ over a group is a rational with denominator ``10^s``, and a caller casts
 it to double once.  A Spark ``sum`` over a decimal keeps a
 ``java.math.BigDecimal`` in the aggregate buffer as soon as the
 accumulator is wider than 18 digits, and re-encodes it as BigInteger
-bytes on every input row.  This kernel computes the same value with long
-arithmetic only:
+bytes on every input row.  This kernel computes the same value with
+only longs in the aggregate buffer:
 
 1. per row, the unscaled value ``k`` (bigint) of the input: an integral
    input is its own ``k``; a fractional one at scale ``s`` is the
-   unscaled value of ``CAST(x AS DECIMAL(18,s))``, taken from doubles
-   where that is provably the same integer (``_unscaled``);
+   unscaled value of ``CAST(x AS DECIMAL(18,s))``, a compact (long)
+   decimal, so no BigDecimal reaches the aggregate buffer;
 2. ``k = (k>>42)·2^42 + ((k>>21)&M)·2^21 + (k&M)`` with ``M = 2^21-1``:
    each of the three limbs is summed with a plain long ``sum``;
 3. once per group the limb sums recombine as ``DECIMAL(38,s)``.
@@ -37,36 +37,12 @@ from pyspark.sql import functions as F
 
 __all__ = ["sum_long", "sum_scaled"]
 
-# Fast-path bounds for the unscaled value of a fractional x at scale s
-# (derived, not tuned).  Let y = double(x)·10^s, computed in doubles, and
-# D = the decimal Spark's cast rounds, times 10^s.  A double input is
-# first written as a decimal within half an ulp of x, ≤ 2^-53·|x|; a
-# decimal input becomes a double within the same relative distance (one
-# more such rounding when its unscaled value exceeds 2^53); the multiply
-# by 10^s rounds once more.  So |y - D| ≤ 3·2^-53·|y| < 2^-12 when
-# |y| < 2^39 (2^-13 for a double input: a factor-2 margin).  If also y is
-# more than 2^-12 from the nearest half-integer, D is on the same side of
-# it as y, and CAST's HALF_UP rounding of D equals floor(y + 0.5).  That
-# addition is exact or off by at most ulp(y) ≤ 2^-13, which cannot cross
-# an integer either.  Null, NaN and ±Inf fail the guard and take the
-# cast, so they behave exactly as in a decimal sum (Spark casts NaN and
-# ±Inf to null).
-_FAST_LIMIT = 2.0**39
-_GUARD = 2.0**-12
-
 _M = (1 << 21) - 1
 
 
 def _unscaled(x: str, scale: int) -> str:
     """SQL for the unscaled value of ``CAST(x AS DECIMAL(18,scale))``."""
-    y = f"(CAST(({x}) AS DOUBLE) * {10 ** scale}D)"
-    return (
-        f"CASE WHEN abs({y}) < {_FAST_LIMIT!r}D "
-        f"AND abs({y} - floor({y}) - 0.5D) > {_GUARD!r}D "
-        f"THEN floor({y} + 0.5D) "
-        f"ELSE CAST(CAST(({x}) AS DECIMAL(18,{scale})) * {10 ** scale} "
-        f"AS BIGINT) END"
-    )
+    return f"CAST(CAST(({x}) AS DECIMAL(18,{scale})) * {10 ** scale} AS BIGINT)"
 
 
 def _limb_sum(k: str, scale: int) -> Column:

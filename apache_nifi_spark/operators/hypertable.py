@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.functions import exact
-
 __all__ = ["hypertable_rollup", "gapfill_locf"]
 
 #: supported grains, finest first; each derives from its predecessor
@@ -118,7 +116,7 @@ def hypertable_rollup(
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            exact.sum_scaled(value_col, 6).alias("_sum"),
+            F.sum(F.col(value_col).cast("decimal(30,6)")).alias("_sum"),
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
         )

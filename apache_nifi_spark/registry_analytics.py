@@ -1712,8 +1712,8 @@ def stats_theil_index_q(spark, sf_dir):
     is the one that splits into within/between-source terms, which is
     why corpus-balance dashboards prefer it): using the single-pass
     identity T = (Σx·ln x)/Σx − ln Σx + ln n, each row's x·ln x is ONE
-    shared IEEE expression cast to DECIMAL(28,6) once (order-free
-    sum), Σx stays decimal end-to-end, and the closing combination is
+    shared IEEE expression rounded to 6 dp once and summed exactly
+    (order-free), so is Σx, and the closing combination is
     a single float expression rounded 6 dp.  Shape: one keyed join +
     two hash aggs — NO second pass for the mean, no window, no sort;
     linear at any scale."""
@@ -1731,16 +1731,13 @@ def stats_theil_index_q(spark, sf_dir):
         )
     )
     xd = F.col("revenue").cast("double")
-    t = r.select(
-        "segment", "revenue",
-        (xd * F.log(xd)).cast("decimal(28,6)").alias("xlnx"),
-    )
-    tot = F.sum("revenue").cast("decimal(38,6)").cast("double")
+    t = r.select("segment", "revenue", (xd * F.log(xd)).alias("xlnx"))
+    tot = exact.sum_scaled("revenue", 6).cast("double")
     return t.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         tot.alias("total_revenue"),
         F.round(
-            F.sum("xlnx").cast("double") / tot - F.log(tot)
+            exact.sum_scaled("xlnx", 6).cast("double") / tot - F.log(tot)
             + F.log(F.count(F.lit(1))),
             6,
         ).alias("theil_t"),
@@ -2286,14 +2283,11 @@ def stats_theil_decomposition_q(spark, sf_dir):
         )
     )
     xd = F.col("revenue").cast("double")
-    t = r.select(
-        "segment", "revenue",
-        (xd * F.log(xd)).cast("decimal(28,6)").alias("xlnx"),
-    )
+    t = r.select("segment", "revenue", (xd * F.log(xd)).alias("xlnx"))
     g = t.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        F.sum("revenue").cast("decimal(38,6)").alias("tot"),
-        F.sum("xlnx").cast("decimal(38,6)").alias("sx"),
+        exact.sum_scaled("revenue", 6).alias("tot"),
+        exact.sum_scaled("xlnx", 6).alias("sx"),
     )
     # ≤|segments|-row control-plane frame: the global windows are tiny
     wall = Window.partitionBy()
@@ -2580,7 +2574,7 @@ def stats_levene_test_q(spark, sf_dir):
     one-way ANOVA of the absolute deviations z = |x − x̄_g|): group
     means come EXACT from the scaled-integer sums (one hash agg, the
     Q1/Pearson discipline); each row's z and z² are single shared IEEE
-    expressions cast to DECIMAL(28,9) once, so every downstream sum is
+    expressions rounded to 9 dp once, so every downstream sum is
     addition-order free; W reuses the ANOVA closed form on the z
     moments, rounded 6 dp.  Two hash aggs + one keyed join back to
     rows (the k-row group-mean side broadcasts); k-row control-plane
@@ -2600,12 +2594,12 @@ def stats_levene_test_q(spark, sf_dir):
     )
     z = li.join(g, "grp").select(
         "grp",
-        zexpr.cast("decimal(28,9)").alias("tz"),
+        zexpr.alias("z"),
         F.pow(zexpr, F.lit(2)).cast("decimal(28,9)").alias("tz2"),
     )
     zg = z.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("tz").alias("sz"),
+        exact.sum_scaled("z", 9).alias("sz"),
         F.sum("tz2").alias("szz"),
     ).select(
         "*",
@@ -5330,14 +5324,17 @@ def forecast_seasonal_decompose_q(spark, sf_dir):
         .groupBy("dw")
         .agg(
             (
-                exact.sum_scaled("CAST(x AS DOUBLE) - trend", 9)
-                .cast("double") / F.count("trend")
+                F.sum(
+                    (F.col("x").cast("double") - F.col("trend"))
+                    .cast("decimal(28,9)")
+                ).cast("double") / F.count("trend")
             ).alias("raw_s"),
             F.count("trend").cast("bigint").alias("n_obs"),
         )
     )
     mean_s = se.agg(
-        (exact.sum_scaled("raw_s", 9).cast("double") / 7.0).alias("ms")
+        (F.sum(F.col("raw_s").cast("decimal(28,9)")).cast("double")
+         / 7.0).alias("ms")
     )
     return (
         se.crossJoin(F.broadcast(mean_s))

@@ -1603,10 +1603,10 @@ def text_chardist_entropy_q(spark, sf_dir):
     gibberish / encoded-blob / keyboard-mash quality signal next to
     the Gopher and C4 rules): alphabet-restricted char counts, then
     ``H = ln(n) − (Σ kᵢ·ln kᵢ)/n``.  The order-dependent float sum is
-    made engine-exact the decimal way: each ``k·ln k`` term rounds to
-    DECIMAL(28,9) ONCE (deterministic per term — counts are integers,
-    ``ln`` agrees across engines as the LM-scoring tier already
-    relies on), the sum accumulates exactly, and only the final
+    made engine-exact: each ``k·ln k`` term rounds to 9 dp ONCE
+    (deterministic per term — counts are integers, ``ln`` agrees
+    across engines as the LM-scoring tier already relies on), the sum
+    accumulates exactly (``exact.sum_scaled``), and only the final
     subtraction/division is float, rounded 6 dp.  Two hash
     aggregations, both map-side combinable; no windows, no sorts —
     linear at any scale."""
@@ -1621,16 +1621,12 @@ def text_chardist_entropy_q(spark, sf_dir):
         )
     )
     cnt = d.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("k"))
-    terms = cnt.select(
-        "doc_id",
-        "k",
-        (F.col("k") * F.log(F.col("k"))).cast("decimal(28,9)").alias("t"),
-    )
-    return terms.groupBy("doc_id").agg(
+    t = exact.sum_scaled("k * ln(k)", 9)
+    return cnt.groupBy("doc_id").agg(
         F.sum("k").cast("long").alias("n_chars"),
         F.count(F.lit(1)).alias("n_unique"),
         F.round(
-            F.log(F.sum("k")) - F.sum("t").cast("double") / F.sum("k"), 6
+            F.log(F.sum("k")) - t.cast("double") / F.sum("k"), 6
         ).alias("entropy"),
     )
 
@@ -2678,8 +2674,8 @@ def pii_t_closeness_q(spark, sf_dir):
     quasi-identifier class, the total-variation distance
     0.5·Σ_v|p_cv − q_v| with the categorical-EMD identity
     Σ_v = Σ_present|p−q| + (1 − Σ_present q) so absent class-values
-    never materialize.  Per-term doubles pin to DECIMAL(28,9) before
-    summing (order-free — the l-diversity k·ln k pattern); one float
+    never materialize.  Per-term doubles round to 9 dp before an
+    exact sum (order-free — the l-diversity k·ln k pattern); one float
     combination rounded 6 dp.  Shapes: two hash aggs + a 5-row value
     join (AQE-broadcast, unhinted) — O(classes × values) throughout,
     row-count independent."""
@@ -2709,14 +2705,12 @@ def pii_t_closeness_q(spark, sf_dir):
         .join(cls, ["c_nationkey", "c_mktsegment"])
         .select(
             "c_nationkey", "c_mktsegment", "n_c",
-            F.abs(p - q).cast("decimal(28,9)").alias("d"),
-            q.cast("decimal(28,9)").alias("q"),
+            F.abs(p - q).alias("d"), q.alias("q"),
         )
     )
-    tvd = F.round(
-        0.5 * (F.sum("d").cast("double") + 1.0 - F.sum("q").cast("double")),
-        6,
-    )
+    # each term is a share in [0, 1]
+    s = lambda c: exact.sum_scaled(c, 9).cast("double")  # noqa: E731
+    tvd = F.round(0.5 * (s("d") + 1.0 - s("q")), 6)
     return terms.groupBy("c_nationkey", "c_mktsegment").agg(
         F.max("n_c").cast("bigint").alias("class_size"),
         tvd.alias("tvd"),

@@ -15,14 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_nifi_spark.functions import exact
-
 __all__ = ["tumbling_agg", "sliding_agg", "session_agg"]
 
 
 def _dsum_dec(col: str, alias: str) -> Column:
-    # exact sum (registry determinism rules)
-    return exact.sum_scaled(col, 6).cast("double").alias(alias)
+    # exact decimal accumulation (registry determinism rules)
+    return F.sum(F.col(col).cast("decimal(30,6)")).cast("double").alias(alias)
 
 
 def tumbling_agg(

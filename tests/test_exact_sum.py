@@ -1,7 +1,7 @@
 """The exact-sum kernel (``functions/exact.py``) against the decimal sums
 it replaces: equal value and type, equal double, on the inputs where a
-shortcut could slip — rounding near-ties, the fast-path edge, wide ids,
-null-only and empty groups, one hot key, and NaN/±Inf."""
+shortcut could slip — rounding near-ties, values that fill every limb,
+wide ids, null-only and empty groups, one hot key, and NaN/±Inf."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import ast
 import math
 import pathlib
 import random
+from datetime import datetime
 
 import pytest
 from pyspark.errors import PySparkException
@@ -31,20 +32,11 @@ def _near_ties(scale: int, n: int, seed: int) -> list[float]:
     return out
 
 
-def _fast_edge(scale: int) -> list[float]:
-    """Doubles either side of the fast path's 2^39/10^scale limit."""
-    out = []
-    for edge in (exact._FAST_LIMIT / 10**scale, -exact._FAST_LIMIT / 10**scale):
-        for d in (0.0, 0.3, 0.5, 0.7, 1.0):
-            for v in (edge - d / 10**scale, edge + d / 10**scale):
-                out += [math.nextafter(v, -math.inf), v, math.nextafter(v, math.inf)]
-    return out
-
-
-def _is_fast(x: float, scale: int) -> bool:
-    """The kernel's guard, evaluated with the same IEEE operations."""
-    y = x * float(10**scale)
-    return abs(y) < exact._FAST_LIMIT and abs(y - math.floor(y) - 0.5) > exact._GUARD
+def _wide(scale: int) -> list[float]:
+    """Values up to just below the cast's 10^(18-scale) limit, whose
+    unscaled values fill all three limbs."""
+    top = 10.0 ** (18 - scale)
+    return [f * top for f in (0.999, -0.999, 0.5, -0.5, 2.0**-20, -(2.0**-41))]
 
 
 def _assert_same(df, new, old):
@@ -58,11 +50,8 @@ def _assert_same(df, new, old):
 
 @pytest.mark.parametrize("scale", [2, 6])
 def test_sum_scaled_equals_decimal_cast_sum(spark, scale):
-    xs = _near_ties(scale, 3000, seed=scale) + _fast_edge(scale)
+    xs = _near_ties(scale, 3000, seed=scale) + _wide(scale) * 20
     xs += [-x for x in xs[:500]] + [0.0, -0.0, 1e-300, 123.456, None]
-    fast = [x for x in xs if x is not None and _is_fast(x, scale)]
-    assert 0 < len(fast) < len(xs) - 1  # both guard branches are taken
-
     rows = [(i % 7, x) for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "g int, x double")
     got = df.groupBy("g").agg(
@@ -80,8 +69,8 @@ def test_sum_scaled_equals_decimal_cast_sum(spark, scale):
 @pytest.mark.parametrize("scale", [2, 6])
 def test_each_row_rounds_as_the_cast(spark, scale):
     """Per row, one-row groups: the unscaled value the kernel sums is the
-    decimal cast's, for every near-tie and edge input."""
-    xs = _near_ties(scale, 2000, seed=10 + scale) + _fast_edge(scale)
+    decimal cast's, for every near-tie and wide input."""
+    xs = _near_ties(scale, 2000, seed=10 + scale) + _wide(scale)
     df = spark.createDataFrame(list(enumerate(xs)), "i int, x double")
     got = df.groupBy("i").agg(
         exact.sum_scaled("x", scale).alias("new"),
@@ -135,26 +124,73 @@ def _outcome(df, col):
 
 @pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf, 1e17])
 def test_non_finite_input_behaves_as_the_cast(spark, bad):
-    """NaN, ±Inf and values past decimal(18,2) take the cast path, so
-    they do whatever the decimal cast does (this Spark casts NaN and ±Inf
-    to null, which the sum skips, and raises on overflow)."""
+    """NaN, ±Inf and values past decimal(18,2) do whatever the decimal
+    cast does (this Spark casts NaN and ±Inf to null, which the sum
+    skips, and raises on overflow)."""
     df = spark.createDataFrame([(1.25,), (bad,)], "x double")
     new = _outcome(df, exact.sum_scaled("x", 2))
     old = _outcome(df, F.sum(F.col("x").cast("decimal(18,2)")))
     assert new == old
 
 
-#: The decimal sums left outside the kernel, by (module, function):
-#: each per-row value is a product that can pass 2^63 (or a fractional
-#: product), so it needs decimal arithmetic before the sum, or a value
-#: wider than 18 digits at its scale; or the sum is a window aggregate,
-#: which keeps a running value per row.
+def test_public_operators_sum_values_past_the_kernel_range(spark):
+    """``hypertable_rollup`` and the streaming windows sum a caller's
+    column, so they keep a ``DECIMAL(30,6)`` sum: a value of 10^13 sums
+    exactly there, where the kernel's ``DECIMAL(18,6)`` cast raises."""
+    from apache_nifi_spark.operators.hypertable import hypertable_rollup
+    from apache_nifi_spark.streaming.windows import tumbling_agg
+
+    df = spark.createDataFrame(
+        [(datetime(2024, 1, 1, 0, 0, 5), "a", 1e13),
+         (datetime(2024, 1, 1, 0, 0, 9), "a", 0.25)],
+        "ts timestamp, k string, value double",
+    )
+    assert isinstance(_outcome(df, exact.sum_scaled("value", 6)), tuple)
+    want = 1e13 + 0.25
+    assert [r["total_value"] for r in tumbling_agg(df, "ts", "k").collect()] == [want]
+    rolled = hypertable_rollup(df, "ts", "value", ["k"], ["minute", "hour"])
+    assert sorted(r["total_value"] for r in rolled.collect()) == [want, want]
+
+
+#: The decimal sums left outside the kernel, by (module, function).  The
+#: kernel needs each per-row value to be a bigint, or to fit
+#: ``DECIMAL(18,s)`` (``|v| < 10^(18-s)``) at every input size.  These
+#: sums do not: a per-row product can pass 2^63 (or is fractional), a
+#: per-row value can reach 10^(18-s), a per-row value is itself a sum
+#: over a group, or the sum is a window aggregate.
 DECIMAL_SUM_EXCEPTIONS = {
+    ("operators/hypertable.py", "hypertable_rollup"):
+        "user column, per-row value may reach 10^12; re-aggregates tier sums",
+    ("streaming/windows.py", "_dsum_dec"):
+        "user column, per-row value may reach 10^12",
+    ("registry.py", "rolling_q"): "window sum",
+    ("registry.py", "cube_q"): "re-aggregates per-cell sums",
+    ("registry.py", "stream_hypertable_q"): "re-aggregates per-hour sums",
+    ("registry_stats.py", "stats_cusum_drift_q"): "window sum",
+    ("registry_stats.py", "orders_cohort_ltv_q"): "window sum",
+    ("registry_stats.py", "stats_cohens_kappa_q"): "per-row product rn·cn",
+    ("registry_stats.py", "pii_l_diversity_q"):
+        "per-row k·ln k passes 10^9 at scale 9 once a class holds ~5·10^7 rows",
+    ("registry_stats.py", "survival_logrank_test_q"):
+        "scale 12 leaves 10^6 for per-time expected counts, which grow with the input",
     ("registry_analytics.py", "stats_jackknife_ratio_q"):
         "per-row values near 10^7 at scale 12 need more than 18 digits",
-    ("registry.py", "rolling_q"): "window sum",
-    ("registry_stats.py", "stats_cusum_drift_q"): "window sum",
-    ("registry_stats.py", "stats_cohens_kappa_q"): "per-row product rn·cn",
+    ("registry_analytics.py", "forecast_seasonal_decompose_q"):
+        "per-row deviations of daily cents reach 10^9 at scale 9 on large inputs",
+    ("registry_analytics.py", "search_rbo_rankings_q"): "scale 20 needs more than 18 digits",
+    ("registry_analytics.py", "stats_chi_squared_cramers_q"):
+        "per-row term (obs−e)²/e reaches the row count, past 10^9 at scale 9",
+    ("registry_analytics.py", "stats_levene_test_q"):
+        "per-row square z² reaches 10^10, past 10^9 at scale 9; re-aggregates group sums",
+    ("registry_analytics.py", "stats_anova_oneway_q"):
+        "per-row term sgc²/ng and re-aggregated group sums",
+    ("registry_analytics.py", "stats_hhi_concentration_q"): "per-row product revenue²",
+    ("registry_analytics.py", "stats_pareto_8020_q"): "window sums",
+    ("registry_analytics.py", "_segment_ranked_two_level"): "window sums",
+    ("registry_analytics.py", "stats_theil_decomposition_q"):
+        "window sums over the per-segment frame",
+    ("registry_analytics.py", "orders_abc_classification_q"): "window sums",
+    ("registry_analytics.py", "stats_spearman_rank_q"): "per-row rank products rx·ry",
     ("registry_analytics.py", "stats_gini_concentration_q"): "per-row product rank·revenue",
     ("registry_analytics.py", "stats_mann_whitney_u_q"): "per-row products m³ and n1·rank",
     ("registry_analytics.py", "stats_kruskal_wallis_q"): "per-row product m²",
@@ -168,7 +204,10 @@ DECIMAL_SUM_EXCEPTIONS = {
 
 def _decimal_sum_sites() -> set[tuple[str, str]]:
     """(module, enclosing function) of every ``F.sum(...)`` whose argument
-    casts to a decimal, under the engine package."""
+    casts to a decimal, under the engine package.  The argument may also
+    name a column that the same function projects as a decimal: an
+    ``.alias(name)`` over a decimal cast or over one of the kernel's sums
+    (``F.sum("t")`` after ``….cast("decimal(28,9)").alias("t")``)."""
 
     def is_decimal_cast(n: ast.AST) -> bool:
         return (
@@ -179,6 +218,24 @@ def _decimal_sum_sites() -> set[tuple[str, str]]:
             and isinstance(n.args[0], ast.Constant)
             and str(n.args[0].value).startswith("decimal(")
         )
+
+    def is_kernel_sum(n: ast.AST) -> bool:
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in exact.__all__
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "exact"
+        )
+
+    def named(n: ast.AST) -> str | None:
+        """The column a ``"name"`` or ``F.col("name")`` argument names."""
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) \
+                and n.func.attr == "col" and len(n.args) == 1:
+            n = n.args[0]
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            return n.value
+        return None
 
     def is_f_sum(n: ast.AST) -> bool:
         return (
@@ -205,12 +262,23 @@ def _decimal_sum_sites() -> set[tuple[str, str]]:
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
+            decimals = {
+                n.args[0].value
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "alias" and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and (is_decimal_cast(n.func.value) or is_kernel_sum(n.func.value))
+            }
             for n in ast.walk(fn):
-                if is_f_sum(n) and any(
-                    is_decimal_cast(m)
-                    or (isinstance(m, ast.Call) and isinstance(m.func, ast.Name)
-                        and m.func.id in casters)
-                    for m in ast.walk(n)
+                if is_f_sum(n) and (
+                    any(named(a) in decimals for a in n.args)
+                    or any(
+                        is_decimal_cast(m)
+                        or (isinstance(m, ast.Call) and isinstance(m.func, ast.Name)
+                            and m.func.id in casters)
+                        for m in ast.walk(n)
+                    )
                 ):
                     sites.add((str(path.relative_to(root)), fn.name))
     return sites
