@@ -31,6 +31,8 @@ beyond-reference operator mandated by the LLM-data-pipeline surface
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -219,12 +221,13 @@ def kmeans_fixed_point(
     (the bpe.py merge-rule precedent), collected per iteration and
     re-inlined as a literal, so the assignment step is MAP-ONLY (a
     per-row fold over the K literal centroids: no crossJoin, no window,
-    no broadcast exchange) and the update step is one two-stage
-    aggregation whose exchange moves only K×dim partial sums, never the
-    data.  Each Lloyd pass is therefore exactly one corpus scan + one
-    tiny shuffle; the returned assignment is a LAZY map-only plan over
-    the final centroids, with depth constant in ``iters`` (asserted in
-    tests/test_plans.py).  Only centroid state ever reaches the driver.
+    no broadcast exchange) and the update step is ONE aggregation of
+    (Σval, count) per (cluster, pos) whose exchange moves only K×dim
+    partial sums, never the data; the driver collects those ≤ K×dim
+    pairs and divides (``floor_means``).  Each Lloyd pass is therefore
+    exactly one corpus scan + one tiny shuffle; the returned assignment
+    is a LAZY map-only plan over the final centroids, with depth
+    constant in ``iters`` (asserted in tests/test_plans.py).  Only centroid state ever reaches the driver.
 
     Returns (id, cluster, dist) — dist is the final integer squared
     distance, the SemDeDup "keep nearest to centroid" signal.
@@ -245,6 +248,25 @@ def kmeans_with_centroids(
     [(cluster, quantized_vector)] — the control-plane artifact the PQ
     codebooks (llm/pq.py) and any assign-new-data pipeline need."""
     return _kmeans_impl(df, id_col, vec_col, k, iters, scale)
+
+
+def floor_means(dims: DataFrame, keys: list[str]) -> dict[tuple, list[int]]:
+    """One Lloyd centroid update (``_kmeans_impl``, ``pq.pq_train_encode``):
+    ``dims`` rows are (``keys``…, ``pos``, ``val``); returns ``{keys:
+    [floor(CAST(Σval AS DOUBLE) / count) per pos, in pos order]}``.  The
+    driver divides the ≤ K×dim collected (sum, count) pairs: Python's
+    ``float(int)`` and ``/`` are the SQL cast and division's IEEE double
+    ops, so a sum past 2^53 rounds alike.  A centroid no row chose is
+    absent, as in the oracle's GROUP BY."""
+    rows = (
+        dims.groupBy(*keys, "pos")
+        .agg(F.sum("val"), F.count(F.lit(1)))
+        .collect()  # control-plane: ≤ K×dim partial sums
+    )
+    means: dict[tuple, list[int]] = {}
+    for *key, _pos, s, n in sorted(rows, key=lambda r: r[len(keys)]):
+        means.setdefault(tuple(key), []).append(math.floor(float(s) / n))
+    return means
 
 
 def _kmeans_impl(
@@ -311,26 +333,10 @@ def _kmeans_impl(
         )
 
     for _ in range(iters - 1):
-        assigned = _score(cent)
-        dims = assigned.select(
+        dims = _score(cent).select(
             "cluster", F.posexplode("qv").alias("pos", "val")
         )
-        means = dims.groupBy("cluster", "pos").agg(
-            F.floor(
-                F.sum("val").cast("double") / F.count(F.lit(1))
-            ).cast("bigint").alias("m")
-        )
-        new = means.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
-        ).collect()  # control-plane: K×dim centroid update
-        # Empty clusters simply vanish (same as the oracle's GROUP BY).
-        cent = sorted(
-            ((int(r["cluster"]), [int(v) for v in r["cv"]]) for r in new),
-            key=lambda p: p[0],
-        )
+        cent = sorted((c, cv) for (c,), cv in floor_means(dims, ["cluster"]).items())
     return (
         _score(cent).select(F.col("_id").alias(id_col), "cluster", "dist"),
         cent,

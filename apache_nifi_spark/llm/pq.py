@@ -9,22 +9,22 @@ tier between the brute-force/IVF scorers and raw storage: 64 floats →
 4 bytes here (m=4, k=16).
 
 Engine-determinism (what makes a trained quantizer value-oracle-able):
-codebooks come from the repo's fixed-point k-means
-(``llm/cluster.kmeans_with_centroids`` — integer quantize, integer
-squared L2, floor-mean updates, lowest-id ties), the ADC table is
-integer squared L2 between the QUANTIZED query and the integer
-centroids (computed driver-side from control-plane state), and the
-final score is an exact bigint sum of ``m`` table lookups — no float
-anywhere past the initial quantization.
+codebooks come from the repo's fixed-point k-means arithmetic
+(``llm/cluster`` — integer quantize, integer squared L2, floor-mean
+updates through the shared ``floor_means``, lowest-id ties), the ADC
+table is integer squared L2 between the QUANTIZED query and the
+integer centroids (computed driver-side from control-plane state), and
+the final score is an exact bigint sum of ``m`` table lookups — no
+float anywhere past the initial quantization.
 
 Scale shape (100 TB rules): each subspace's training is the kmeans
 shape (map-only assignment over literal centroids + one K×dim partial
-sum exchange per Lloyd round); ENCODING is the final map-only
-assignment per subspace, joined back to (id, code_0..code_{m-1}) on
-doc-grain equi-joins; the ADC table is m·k control-plane integers
-riding as packed literals, so SCORING is one map-only projection
-(``element_at`` lookups into constant-folded packed literals) plus
-a TakeOrdered top-k.  Nothing corpus-sized reaches the driver.
+sum exchange per Lloyd round); ENCODING is one map-only projection of
+every subspace's final assignment to (id, code_0..code_{m-1}); the ADC
+table is m·k control-plane integers riding as packed literals, so
+SCORING is one map-only projection (``element_at`` lookups into
+constant-folded packed literals) plus a TakeOrdered top-k.  Nothing
+corpus-sized reaches the driver.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.llm.cluster import floor_means
 from apache_nifi_spark.llm.pca import _packed
 
 __all__ = ["pq_train_encode", "pq_adc_topk"]
@@ -122,7 +123,7 @@ def pq_train_encode(
             ],
         )
         # one exchange: (subspace, cluster, pos-in-subspace) partial
-        # means for ALL subspaces — ≤ m·k·sub control-plane rows out
+        # sums for ALL subspaces — ≤ m·k·sub control-plane rows out
         dims = assigned.select(
             *[f"_c{j}" for j in range(m)],
             F.posexplode("qv").alias("_pos", "_val"),
@@ -135,32 +136,10 @@ def pq_train_encode(
             (F.col("_pos") % sub).alias("pos"),
             F.col("_val").alias("val"),
         )
-        new = (
-            dims.groupBy("_j", "cluster", "pos")
-            .agg(
-                F.floor(
-                    F.sum("val").cast("double") / F.count(F.lit(1))
-                ).cast("bigint").alias("m")
-            )
-            .groupBy("_j", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .collect()  # control-plane: m·K×sub centroid update
-        )
+        new = floor_means(dims, ["_j", "cluster"])
         # Empty clusters simply vanish, independently per subspace.
         books = [
-            sorted(
-                (
-                    (int(r["cluster"]), [int(v) for v in r["cv"]])
-                    for r in new
-                    if r["_j"] == j
-                ),
-                key=lambda p: p[0],
-            )
+            sorted((c, cv) for (jj, c), cv in new.items() if jj == j)
             for j in range(m)
         ]
 

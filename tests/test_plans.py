@@ -400,6 +400,42 @@ def test_kmeans_plan_depth_constant_in_iterations(spark):
     assert n6 <= n2 + 5, (n2, n6)  # constant depth, not O(iters)
 
 
+#: Spark jobs and stages a query may start while it is BUILT, before its
+#: action, with the reason it needs them.  Stages count each job's stage
+#: ids, skipped ones included.  Under AQE a shuffle runs as its own
+#: map-stage job, so a Lloyd round that is one (sum, count) aggregation
+#: and its collect is two jobs and three stages; the two-aggregation
+#: update it replaced was three jobs and six stages a round.
+CONSTRUCTION_BUDGET = {
+    # the k lowest-id seeds, then two Lloyd rounds (iters=3)
+    "cluster_kmeans_embeddings": (5, 7),
+    # the query row, the k seeds, then one fused Lloyd round (iters=2)
+    # for all m subspaces
+    "similarity_pq_adc_topk": (4, 5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CONSTRUCTION_BUDGET))
+def test_construction_runs_within_its_job_budget(spark, sf_dir, name):
+    """Building the query (not running it) starts at most its budget of
+    Spark jobs and stages, counted by job group.  The first build warms
+    the table caches and is not counted."""
+    sc = spark.sparkContext
+    QUERIES[name](spark, sf_dir)
+    group = f"construct-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    max_jobs, max_stages = CONSTRUCTION_BUDGET[name]
+    assert len(jobs) <= max_jobs and stages <= max_stages, (len(jobs), stages)
+
+
 def test_ccnet_buckets_has_no_single_task_sort(spark):
     """The perplexity split is a corpus-global sort, but it must never
     run as ONE sort task (round-10 verdict scale-killer): the two-pass

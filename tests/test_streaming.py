@@ -665,3 +665,96 @@ def test_drain_is_the_only_query_start():
         if token in path.read_text()
     ]
     assert not offenders, offenders
+
+
+def _running_totals_match_window_oracle(spark, src, max_records=None):
+    """Drain ``running_totals_per_key`` over the events under ``src`` and
+    compare with the registry's DuckDB window oracle over the same file;
+    with ``max_records`` the drain's Arrow batches hold at most that many
+    rows. Returns the largest number of chunks one group arrived in."""
+    import duckdb
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from apache_nifi_spark.registry import ORACLES
+    from apache_nifi_spark.streaming import running_totals_per_key
+
+    def count_chunks(key, pdfs, state):  # nested: the workers cannot import tests
+        import pandas as pd
+
+        yield pd.DataFrame({"user_id": [key[0]], "chunks": [sum(1 for _ in pdfs)]})
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    if max_records is not None:
+        spark.conf.set(key, str(max_records))
+    try:
+        got = run_to_memory(running_totals_per_key(stream_events(spark, None, path=src)))
+        chunks = run_to_memory(
+            stream_events(spark, None, path=src).groupBy("user_id").applyInPandasWithState(
+                count_chunks, "user_id long, chunks long", "n long", "append",
+                GroupStateTimeout.NoTimeout,
+            )
+        )
+        most = max(r["chunks"] for r in chunks.collect())
+    finally:
+        spark.conf.set(key, before)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{src}/*.parquet')")
+    want = con.execute(ORACLES["stream_stateful_running_totals"]).fetchall()
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    return most
+
+
+def test_running_totals_match_window_oracle_on_edges(spark, tmp_path):
+    """The stateful running totals equal the SQL window cumsum when a
+    group arrives as several Arrow chunks, when equal ``ts`` values are
+    ordered by ``event_id``, and on values at half-cent edges (half-up
+    ``floor(v*100 + 0.5)``, not numpy's half-even round). Rows are
+    written out of (ts, event_id) order."""
+    halves = [0.005, 0.015, 0.025, 1.005, 2.675, 0.125, -0.005, -0.015, -2.675, 1e-3]
+    rows = []
+    for u in range(3):
+        for i in range(12):
+            eid = 100 * u + (i * 7) % 12  # arrival order is not event_id order
+            ts = f"2024-01-01 00:00:0{(i * 5) % 3}"  # four events share each ts
+            rows.append((u, eid, ts, halves[(i + u) % len(halves)]))
+    src = str(tmp_path / "events")
+    spark.createDataFrame(
+        rows, "user_id long, event_id long, ts string, value double"
+    ).select(
+        "user_id", "event_id", F.col("ts").cast("timestamp_ntz").alias("ts"), "value"
+    ).coalesce(1).write.parquet(src)
+    assert _running_totals_match_window_oracle(spark, src) == 1
+    assert _running_totals_match_window_oracle(spark, src, max_records=5) >= 3
+
+
+def _state_partitions(spark, sf_dir, monkeypatch, **kw):
+    """The ``state/0/<p>`` directories a running-totals drain wrote,
+    listed as the drain removes its private checkpoint."""
+    from apache_nifi_spark.streaming import running_totals_per_key, sources
+
+    listed, rmtree = [], sources.shutil.rmtree
+
+    def listing_rmtree(path, *a, **kw):
+        listed.extend(_files_under(path))
+        rmtree(path, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(sources.shutil, "rmtree", listing_rmtree)
+        run_to_memory(running_totals_per_key(stream_events(spark, sf_dir)), **kw)
+    return {
+        f.split("/")[2] for f in listed
+        if f.startswith("state/0/") and f.split("/")[2].isdigit()
+    }
+
+
+def test_drain_state_stores_fit_one_task_wave(spark, sf_dir, monkeypatch):
+    """Left out, ``shuffle_partitions`` opens ``min(8, defaultParallelism)``
+    state stores; an explicit count is kept as given."""
+    one_wave = min(8, spark.sparkContext.defaultParallelism)
+    assert _state_partitions(spark, sf_dir, monkeypatch) == {
+        str(p) for p in range(one_wave)
+    }
+    assert _state_partitions(spark, sf_dir, monkeypatch, shuffle_partitions=3) == {
+        "0", "1", "2"
+    }
